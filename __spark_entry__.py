@@ -881,7 +881,7 @@ def q_rate_extrap_1h(spark, sf_dir):
     magnitude puts a large fraction of values within an ulp of a
     .5×10⁻⁶ boundary, and Spark's BigDecimal HALF_UP vs the oracle's
     multiply-round-divide flipped 125/3600 rows at sf0.1 (the exphist
-    r04 class, caught by tools/float_surface_audit.py).  The raw chain
+    r04 class, caught by the strict-bit float audit).  The raw chain
     is fixed-order and bit-identical cross-engine, so the raw doubles
     hash-match exactly."""
     from mq_to_db_spark.operators.counters import rate_extrapolated
@@ -4303,10 +4303,12 @@ def oracle_sql() -> dict[str, str]:
     # Benford fragments: the P literals are the PYTHON-computed doubles
     # (repr = shortest round-trip, parses to identical bits), so libm
     # log10 never runs inside DuckDB; the chi2 chain is the same
-    # left-associative nine-term fold as operators/benford.py
+    # left-associative nine-term fold as operators/benford.py.  The list
+    # is cast to DOUBLE[]: DuckDB reads bare 17-digit literals as
+    # DECIMAL(18,17), which would make benford_share a DECIMAL column
     from mq_to_db_spark.operators.benford import BENFORD_P
 
-    _BENFORD_P_SQL = ", ".join(repr(p) for p in BENFORD_P)
+    _BENFORD_P_SQL = f"CAST([{', '.join(repr(p) for p in BENFORD_P)}] AS DOUBLE[])"
     _BENFORD_COUNT_COLS = ",\n                       ".join(
         f"CAST(count(*) FILTER (digit = {d}) AS BIGINT) AS d{d}"
         for d in range(1, 10)
@@ -4989,9 +4991,9 @@ def oracle_sql() -> dict[str, str]:
                    CAST(tot AS BIGINT) AS n_total,
                    round(CAST(n_obs AS DOUBLE) / CAST(tot AS DOUBLE), 6)
                        AS obs_share,
-                   round(([{_BENFORD_P_SQL}])[digit], 6) AS benford_share,
+                   round(({_BENFORD_P_SQL})[digit], 6) AS benford_share,
                    round(abs(CAST(n_obs AS DOUBLE) / CAST(tot AS DOUBLE)
-                             - ([{_BENFORD_P_SQL}])[digit]), 6) AS abs_dev
+                             - ({_BENFORD_P_SQL})[digit]), 6) AS abs_dev
             FROM t
         """,
         # Benford chi2: the same nine-term left-associative chain
@@ -6085,9 +6087,9 @@ def oracle_sql() -> dict[str, str]:
                 FROM lagged
             )
             SELECT event_type, ts, event_id, value,
-                   value + sum(o) OVER (
+                   CAST(value + sum(o) OVER (
                        PARTITION BY event_type ORDER BY ts, event_id
-                       ROWS UNBOUNDED PRECEDING) AS adjusted
+                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS adjusted
             FROM offs
         """,
         "archive_spikes": """
@@ -6470,7 +6472,8 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE rank <= 3
             UNION ALL
             SELECT day_start, '__others__' AS user_key,
-                   sum(n_events) AS n_events, CAST(4 AS INT) AS rank
+                   CAST(sum(n_events) AS BIGINT) AS n_events,
+                   CAST(4 AS INT) AS rank
             FROM ranked WHERE rank > 3 GROUP BY day_start
         """,
         "staleness_1h": """
@@ -6743,8 +6746,8 @@ def oracle_sql() -> dict[str, str]:
                    CAST(count(*) FILTER (
                        WHERE c_hi > 500000000 OR c_lo > 500000000
                    ) AS BIGINT) AS n_alarms,
-                   max(c_hi) AS max_cusum_hi,
-                   max(c_lo) AS max_cusum_lo
+                   CAST(max(c_hi) AS BIGINT) AS max_cusum_hi,
+                   CAST(max(c_lo) AS BIGINT) AS max_cusum_lo
             FROM c GROUP BY 1, 2
         """,
         "alert_episodes": """

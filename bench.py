@@ -43,13 +43,26 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 #: turns in the synthetic transcript table per unit SF (FIXTURES.md: sf0.1
 #: ≈ 600k turns, matching the driver's sf0.1 sizing)
 TURNS_PER_SF = 6_000_000
 
+#: local-bench analogue of the cluster defaults: a ~10-100 MB input must
+#: still yield >cores splits (TB inputs get that from 128 MB binning for
+#: free), and AQE must not coalesce the few-MB partial-agg shuffle onto
+#: one core.  A/B'd against stock conf under pretouched heaps
+#: (BENCH/ab_conf_r04.json): the two are within noise of each other at
+#: sf0.1.  Shared by the headline session and the scaling workers.
+SMALL_INPUT_CONF = {
+    "spark.sql.files.maxPartitionBytes": "1m",
+    "spark.sql.files.openCostInBytes": "0",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2m",
+}
+
 #: the round-2 headline set — FROZEN (comparability across rounds).
-#: 3 macro pipeline sections + 9 driver-table queries.
+#: 3 macro pipeline sections + 9 driver-table queries.  Every other
+#: registered query is timed the same way under ``extended_queries``.
 HEADLINE_QUERIES = (
     "rollup_1h_value_stats",
     "rollup_1d_cascade",
@@ -61,128 +74,6 @@ HEADLINE_QUERIES = (
     "minhash_pairs",
     "ann_cosine_topk",
 )
-
-#: everything added after round 2 — timed the same way, reported separately
-EXTENDED_QUERIES = (
-    "embedding_neardup",
-    "knn_join_lsh",
-    "counter_increase",
-    "downsample_ohlc",
-    "quantile_sketch_1h",
-    "rolling_stats_1h",
-    "ewma_1h",
-    "contamination",
-    "repetition_features",
-    "time_weighted_1h",
-    "state_durations_1d",
-    "concurrency_10m",
-    "series_corr_1d",
-    "uptime_1h",
-    "twa_interp_1h",
-    "lttb_1h",
-    "cms_counts_1d",
-    "pii_redact",
-    "asof_fwd",
-    "multimodal_features",
-    "funnel_3step",
-    "cohort_retention_wk",
-    "seasonal_hod_1h",
-    "resets_1h",
-    "slo_burn_1h",
-    "bm25_topk",
-    "changes_1h",
-    "idelta_1h",
-    "deriv_predict_1d",
-    "double_ewma_1h",
-    "mad_outliers_1d",
-    "gap_stats_1d",
-    "cusum_alarms_1d",
-    "alert_episodes",
-    "series_churn_1d",
-    "exemplars_1h",
-    "autocorr_1d",
-    "lexical_stats",
-    "quota_violations_1d",
-    "max_drawdown_1d",
-    "staleness_1h",
-    "wow_delta_1h",
-    "topk_others_1d",
-    "openmetrics_1h",
-    "tier_stitch",
-    "tier_audit",
-    "hist_rebin_1d",
-    "compact_late",
-    "vector_ratio_1h",
-    "vector_setops_1h",
-    "counter_adjust",
-    "archive_spikes",
-    "resample_locf_10m",
-    "resample_interp_10m",
-    "label_count_values_1d",
-    "hybrid_read",
-    "range_eval_6h",
-    "subquery_maxrate_1h",
-    "irate_10m",
-    "replica_dedup_1h",
-    "hist_fraction_1d",
-    "delta_1h",
-    "rate_extrap_1h",
-    "over_time_1h10m",
-    "quantile_over_time_1h",
-    "openmetrics_roundtrip",
-    "exphist_1d",
-    "exphist_quantile_1d",
-    "distinct_over_time_1h10m",
-    "epoch_shuffle",
-    "alert_silences",
-    "exphist_fraction_1d",
-    "mixture_sample",
-    "lww_upsert",
-    "apdex_1h",
-    "calendar_day_tz",
-    "holt_linear_1h",
-    "xcorr_lags_1h",
-    "exphist_stats_1d",
-    "recording_rules",
-    "dsir_overlap",
-    "series_limit",
-    "expectations",
-    "strip_boilerplate",
-    "dedup_spans",
-    "semdedup",
-    "m4_1h",
-    "lm_perplexity",
-    "kmv_distinct_1d",
-    "survival_conv",
-    "turn_echo",
-    "zipf_fit",
-    "theil_sen_1d",
-    "benford_digits",
-    "benford_chi2",
-    "readability",
-    "holt_winters_1h",
-    "bloom_decontaminate",
-    "winsorize_1d",
-    "dispersion_1d",
-    "entropy_mix_1h",
-    "oov_rate",
-    "heaps_curve",
-    "cep_browse_buy",
-    "sax_1d",
-    "decay_topk",
-    "zorder_keys",
-    "ab_welch_1d",
-    "editdist_pairs",
-    "psi_1d",
-    "skew_audit",
-    "salt_plan",
-    "asap_1h",
-    "gcra_throttle_1h",
-    "stickiness_1d",
-    "backtest_naive_1d",
-    "hll_distinct_1d",
-)
-
 
 def _sf_of(sf_dir: str) -> float:
     name = os.path.basename(os.path.normpath(sf_dir))
@@ -241,17 +132,7 @@ def run(sf_dir: str = SF_DIR, cpus: int = CPUS, include_scaling_meta: bool = Tru
         app_name=f"bench-local{cpus}",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
-        extra_conf={
-            # local-bench analogue of the cluster defaults: a ~10-100 MB
-            # input must still yield >cores splits (TB inputs get that from
-            # 128 MB binning for free), and AQE must not coalesce the
-            # few-MB partial-agg shuffle onto one core.  A/B'd against
-            # stock conf under pretouched heaps (BENCH/ab_conf_r04.json):
-            # the two are within noise of each other at sf0.1.
-            "spark.sql.files.maxPartitionBytes": "1m",
-            "spark.sql.files.openCostInBytes": "0",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2m",
-        },
+        extra_conf=SMALL_INPUT_CONF,
         pretouch=True,
     )
     import __spark_entry__ as entry
@@ -353,8 +234,6 @@ def run(sf_dir: str = SF_DIR, cpus: int = CPUS, include_scaling_meta: bool = Tru
 
     def run_query_set(names, into):
         for name in names:
-            if name not in qs:
-                continue
             key = f"q_{name}"
             _materialize(qs[name](spark, WARM_DIR))
             _materialize(qs[name](spark, sf_dir))  # absorb per-instance one-time costs
@@ -362,7 +241,7 @@ def run(sf_dir: str = SF_DIR, cpus: int = CPUS, include_scaling_meta: bool = Tru
             timed(key, lambda n=name: _materialize(qs[n](spark, sf_dir)), into)
 
     run_query_set(HEADLINE_QUERIES, timings)
-    run_query_set(EXTENDED_QUERIES, extended)
+    run_query_set([n for n in qs if n not in HEADLINE_QUERIES], extended)
 
     rollup_sec = timings["rollup_cascade_3dim"]
     total = round(sum(timings.values()), 3)
@@ -399,11 +278,9 @@ def run(sf_dir: str = SF_DIR, cpus: int = CPUS, include_scaling_meta: bool = Tru
 #: the ~600k-turn SF=0.1 headline above
 SCALE_TURNS = 32_000_000
 
-#: parallelism levels measured LIVE each bench run; 2→8 is the headline
-#: N→4N pair (both CPU-bound — the regime an executor scale-out stays
-#: in), 8→32 is reported with equal prominence and its limiting factor
-#: (single-box memory-bandwidth ceiling, see BENCH/PROFILE.md §1-2)
-SCALE_LEVELS = (2, 8, 32)
+#: parallelism levels measured LIVE each bench run: the N→4N pair ending
+#: at the host's core count
+SCALE_LEVELS = (max(1, CPUS // 4), CPUS)
 
 
 def _run_scale_level(cpus: int, n_turns: int) -> dict:
@@ -476,14 +353,11 @@ def _scale_meta(cpus: int) -> dict:
         med[c]["spread"] = [round(pts[0], 1), round(pts[-1], 1)]
         med[c]["n_runs"] = len(pts)
 
-    lvl32 = med.get(32, {})
-    out["scale_32m"] = dict(lvl32)
+    out["scale_32m"] = dict(med[SCALE_LEVELS[-1]])
 
-    ok = [c for c in SCALE_LEVELS if "error" not in med[c]]
+    lo, hi = SCALE_LEVELS
     pairs = {}
-    for lo, hi in zip(SCALE_LEVELS, SCALE_LEVELS[1:]):
-        if lo not in ok or hi not in ok:
-            continue
+    if "error" not in med[lo] and "error" not in med[hi]:
         ratio = hi / lo
         speedup = (
             med[hi]["points_per_sec_median"] / med[lo]["points_per_sec_median"]
@@ -493,7 +367,7 @@ def _scale_meta(cpus: int) -> dict:
             "speedup": round(speedup, 3),
             "scaling_efficiency": round(speedup / ratio, 3),
         }
-    head = pairs.get("2->8", {})
+    head = pairs.get(f"{lo}->{hi}", {})
     out["scaling"] = {
         "measured_live": True,
         "statistic": "median-of-3 per level (spread disclosed)",
@@ -501,18 +375,11 @@ def _scale_meta(cpus: int) -> dict:
         "levels": {str(c): med[c] for c in SCALE_LEVELS},
         "level_runs_points_per_sec": {str(c): runs.get(c, []) for c in SCALE_LEVELS},
         "pairs": pairs,
-        "headline_pair": "local[2] -> local[8] (N -> 4N cores)",
+        "headline_pair": f"local[{lo}] -> local[{hi}]",
         "speedup": head.get("speedup"),
         "scaling_efficiency": head.get("scaling_efficiency"),
         "target": 0.8,
         "headline_pass": (head.get("scaling_efficiency") or 0) >= 0.8,
-        "note": (
-            "2->8 is the N->4N stand-in (both levels CPU-bound, the regime "
-            "of a real executor scale-out); 8->32 shares one memory "
-            "subsystem and hits the single-box bandwidth ceiling — "
-            "quantified in BENCH/PROFILE.md §1-2 (bandwidth probe + "
-            "compute-bound control)."
-        ),
     }
     return out
 

@@ -5,15 +5,8 @@ The measured job is the engine's production shape (rollup_multidim): raw
 scanned ONCE for all three series dimensions (grouping-sets agg → one
 shuffle), finest tier persisted, coarser tiers cascaded from it.
 
-Local-mode tuning mirrors what the defaults already do at cluster scale:
-  * ``maxPartitionBytes=1m`` — the ~105 MB input must yield >3× cores
-    input splits (a TB-scale table gets thousands of splits from the
-    default 128 MB binning; a 105 MB bench input gets 1 — which starves
-    every core but one);
-  * ``advisoryPartitionSizeInBytes=2m`` — AQE otherwise coalesces the
-    few-MB partial-agg shuffle into ~1 post-shuffle partition,
-    serializing the final aggregation (at production shuffle volumes the
-    64 MB default yields ample parallelism).
+Local-mode tuning is ``bench.SMALL_INPUT_CONF``, the headline session's
+conf (the reasons are given there).
 
 Usage: python tools/_scale_worker.py <cpus> <n_turns>
 """
@@ -31,7 +24,7 @@ DIMS = {"global": [], "conv": ["conv_id"], "tool": ["tool"]}
 
 
 def main(cpus: int, n_turns: int) -> dict:
-    from bench import _transcripts_path
+    from bench import SMALL_INPUT_CONF, _transcripts_path
     from mq_to_db_spark.operators.rollup import rollup_multidim
     from mq_to_db_spark.session import get_spark
 
@@ -41,18 +34,11 @@ def main(cpus: int, n_turns: int) -> dict:
 
         write_transcripts_parquet(path, n_turns=n_turns, seed=42)
 
-    extra = {
-        "spark.sql.files.maxPartitionBytes": "1m",
-        "spark.sql.files.openCostInBytes": "0",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2m",
-    }
-    # experiment hook: SCALE_EXTRA_CONF='{"spark.io.compression.codec":"zstd"}'
-    extra.update(json.loads(os.environ.get("SCALE_EXTRA_CONF", "{}")))
     spark = get_spark(
         app_name=f"scale-local{cpus}",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(os.environ.get("SCALE_SHUFFLE_PARTITIONS", max(cpus, 32))),
-        extra_conf=extra,
+        shuffle_partitions=max(cpus, 32),
+        extra_conf=SMALL_INPUT_CONF,
         # this host tariffs first-touch page-commit ~50-100× (see
         # BENCH/PROFILE.md §6) — pretouch the whole heap at JVM startup
         # so the timed passes below measure the pipeline, not page faults
