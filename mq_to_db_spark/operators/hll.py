@@ -63,6 +63,10 @@ DEFAULT_P = 9
 #: hash width of the sampling coin (sampling.py HASH_SPACE = 1 << 60)
 HASH_BITS = 60
 
+#: Flajolet et al.'s bias constant for m = 16 / 32 / 64 registers; the
+#: asymptotic ``0.7213 / (1 + 1.079/m)`` holds from m = 128 (p >= 7)
+_ALPHA_SMALL_M = {4: 0.673, 5: 0.697, 6: 0.709}
+
 
 def _rho(w: Column, width: int) -> Column:
     """Leading-zero count of ``w`` as a ``width``-bit word, + 1 —
@@ -152,9 +156,11 @@ def hll_estimate(
     estimate is bit-identical cross-engine and the only ~1-ulp surface
     is the correction's ``ln`` (emitted unrounded by design —
     BENCH/FLOAT_SURFACE_AUDIT.md rule)."""
+    if not 4 <= p <= 16:
+        raise ValueError(f"p must be in [4, 16], got {p}")
     keys = list(keys or [])
     m = 1 << p
-    alpha = 0.7213 / (1.0 + 1.079 / m)
+    alpha = _ALPHA_SMALL_M.get(p) or 0.7213 / (1.0 + 1.079 / m)
     ent = F.array_sort(F.map_entries(hll_col))
     n_set = F.size(ent)
     # Σ 2^-rho over set registers, sorted-j fold; each term is the

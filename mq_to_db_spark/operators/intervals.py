@@ -215,8 +215,8 @@ def gap_stats(
     micro-unit idiom, SURVEY.md §float-sums): ``round(sum/cnt, 6)`` on
     a double can land exactly ON a .5×10⁻⁶ boundary for integer-ratio
     inputs, where Spark's BigDecimal HALF_UP and DuckDB's multiply-
-    round-divide disagree (caught by tools/float_surface_audit.py at
-    sf0.01).  Split ``sum = q·cnt + r`` so the half-up micro rounding
+    round-divide disagree (caught by ``tools/contract.py --mode strict``
+    at sf0.01).  Split ``sum = q·cnt + r`` so the half-up micro rounding
     ``(2·r·10⁶ + cnt) div (2·cnt)`` never overflows (r < cnt; gaps are
     non-negative), then one deterministic int→double conversion and
     division by 1e6.

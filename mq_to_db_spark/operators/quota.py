@@ -35,11 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import window as W
 
 from mq_to_db_spark.operators.rollup import bucket_col
-
-
-def _epoch_us(col):
-    # NTZ-safe epoch (parquet reads back TIMESTAMP_NTZ; session TZ is UTC)
-    return F.unix_micros(col.cast("timestamp_ltz"))
+from mq_to_db_spark.operators.timeweight import _epoch_micros
 
 
 def sliding_quota(
@@ -58,7 +54,7 @@ def sliding_quota(
     share a timestamp share a count (RANGE semantics — deterministic
     without a tiebreak by construction).
     """
-    us = _epoch_us(F.col(ts_col))
+    us = _epoch_micros(F.col(ts_col))
     w = (
         W.Window.partitionBy(*keys)
         .orderBy(us)
@@ -141,7 +137,7 @@ def gcra_throttle(
     # another's argument); both window nodes share the spec -> one sort
     staged = df.withColumn(
         "_u",
-        _epoch_us(F.col(ts_col))
+        _epoch_micros(F.col(ts_col))
         - (F.row_number().over(w_ord) - 1).cast("long") * F.lit(T),
     )
     prev_max = F.max("_u").over(w_prev)

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from mq_to_db_spark.operators.rollup import bucket_col
+
 
 def rolling_stats(
     df: DataFrame,
@@ -87,7 +89,7 @@ def mad_outliers(
     ``(keys, bucket)`` hash — Catalyst plans the two sorts and the final
     aggregation into one exchange.  Returns per-bucket
     ``n_samples, med, mad, n_outliers``."""
-    b_expr = F.date_trunc({"1m": "minute", "1h": "hour", "1d": "day"}[tier], F.col(ts_col))
+    b_expr = bucket_col(tier, ts_col)
     part = [*keys, "bucket_start"]
     base = df.select(*keys, b_expr.alias("bucket_start"), F.col(value_col).alias("_v"))
     w_ord = W.partitionBy(*part).orderBy("_v")

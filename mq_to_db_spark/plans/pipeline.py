@@ -2,8 +2,8 @@
 
 One batch run =
     read input → validate/side-output rejects → per-unit rollup cascade
-    (1m→1h→1d; global / per-conv / per-tool dimensions) → partition-
-    overwrite commit of every tier table → dead-letter append → lineage
+    (1m→1h→1d; global / per-conv / per-tool dimensions) → one partition-
+    overwrite commit per tier table → dead-letter append → lineage
     append → checkpoint markers.
 
 Delivery semantics (the reference's ack/reject loop re-expressed, SURVEY.md
@@ -18,11 +18,15 @@ at-least-once reprocessing + idempotent sink = effectively-once, the same
 contract the reference gets from manual ack + DLX.
 
 Scale notes (10^12 turns):
-  * every tier table is *partitioned by (date, conv_bucket)* and stores
-    **partials within the unit**; dimensions whose grain crosses units
-    (global, per-tool) are finalized by a cheap re-aggregation at read
-    time over tier-sized (not raw-sized) data — the classic partial/final
-    split, so raw data is scanned exactly once per batch;
+  * every tier has ONE table (``rollup_1m`` / ``rollup_1h`` /
+    ``rollup_1d``) holding all dimensions' series, *partitioned by
+    (dim, date, conv_bucket)*, and stores **partials within the unit**;
+    dimensions whose grain crosses units (global, per-tool) are
+    finalized by a cheap re-aggregation at read time over tier-sized
+    (not raw-sized) data — the classic partial/final split, so raw data
+    is scanned exactly once per batch and each tier commits once;
+  * a dimension read filters on the ``dim`` partition, so pruning keeps
+    it on its own dimension's files;
   * the rollup shuffle is preceded by an explicit repartition on
     (conv_bucket, date) so all dimensions of a unit aggregate from a
     co-located partition, and AQE handles residual skew;
@@ -46,10 +50,16 @@ from pyspark.sql import types as T
 
 from mq_to_db_spark.config import EngineConfig
 from mq_to_db_spark.operators.gapfill import gapfill
-from mq_to_db_spark.operators.rollup import AGG_COL_NAMES, _merge_aggs, with_text_stats
+from mq_to_db_spark.operators.rollup import (
+    AGG_COL_NAMES,
+    _merge_aggs,
+    dim_slice,
+    rollup_multidim,
+    with_text_stats,
+)
 from mq_to_db_spark.operators.validate import with_reject_reason
 from mq_to_db_spark.sources.store import LocalAtomicStore
-from mq_to_db_spark.sources.tableio import TableIO
+from mq_to_db_spark.sources.tableio import TableIO, partition_values
 
 #: rollup dimensions materialized by the pipeline: name → series key cols
 DIMENSIONS: dict[str, list[str]] = {
@@ -57,6 +67,12 @@ DIMENSIONS: dict[str, list[str]] = {
     "conv": ["conv_id"],
     "tool": ["tool"],
 }
+
+
+def tier_table(tier: str) -> str:
+    """Name of a tier's table; every dimension's series share it."""
+    return f"rollup_{tier}"
+
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -108,11 +124,16 @@ class BatchReport:
         return json.dumps(self.__dict__, default=str)
 
 
+def conv_bucket_col(conv_buckets: int):
+    """``pmod(xxhash64(conv_id), B)`` — the Iceberg ``bucket(conv_id)``
+    analogue that keys a unit."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets)).cast("int")
+
+
 def unit_cols(df: DataFrame, conv_buckets: int) -> DataFrame:
-    return df.withColumn(
-        "conv_bucket",
-        F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets)).cast("int"),
-    ).withColumn("date", F.to_date("ts"))
+    return df.withColumn("conv_bucket", conv_bucket_col(conv_buckets)).withColumn(
+        "date", F.to_date("ts")
+    )
 
 
 class RollupPipeline:
@@ -138,12 +159,10 @@ class RollupPipeline:
             table_factory = lambda name, part=None: TableIO(  # noqa: E731
                 f"{work_dir}/{name}", part
             )
-        part = ["date", "conv_bucket"]
-        self.tables: dict[str, TableIO] = {}
-        for dim in DIMENSIONS:
-            for tier in self.cfg.tiers:
-                name = f"rollup_{dim}_{tier}"
-                self.tables[name] = table_factory(name, part)
+        part = ["dim", "date", "conv_bucket"]
+        self.tables: dict[str, TableIO] = {
+            tier_table(t): table_factory(tier_table(t), part) for t in self.cfg.tiers
+        }
         self.dead_letter = table_factory("dead_letter", None)
         self.lineage = table_factory("lineage", None)
         self.metrics = table_factory("job_metrics", None)
@@ -296,11 +315,8 @@ class RollupPipeline:
         # (grouping-sets agg, rollup_multidim) — one shuffle of partial
         # aggregates keyed by the full group, so hot (bucket, date) units
         # are already defused by map-side partial aggregation.  Each tier
-        # is persisted (tier-sized, ≪ raw) and the next tier cascades from
-        # it; dimension tables are cheap filters over the persisted frame.
-        from mq_to_db_spark.operators.rollup import rollup_multidim
-
-        all_keys = [k for keys in DIMENSIONS.values() for k in keys]
+        # is persisted (tier-sized, ≪ raw), committed once with every
+        # dimension's rows, and the next tier cascades from it.
         tier_frames = rollup_multidim(
             with_text_stats(valid),
             DIMENSIONS,
@@ -314,42 +330,30 @@ class RollupPipeline:
             for tier in cfg.tiers:
                 cur = tier_frames[tier].persist()
                 persisted.append(cur)
-                for dim, keys in DIMENSIONS.items():
-                    sliced = cur.filter(F.col("dim") == dim)
-                    if dim == "tool":
-                        # the tool dimension tracks tool *usage*: non-tool
-                        # turns (tool IS NULL) are not a series
-                        sliced = sliced.filter(F.col("tool").isNotNull())
-                    drop = ["dim", *[k for k in all_keys if k not in keys]]
-                    out_df = sliced.drop(*dict.fromkeys(drop))
-                    name = f"rollup_{dim}_{tier}"
-                    if mode == "append":
-                        # idempotent per (table, batch): a crash-window
-                        # replay of this batch_id must not re-append a
-                        # tier's partials (the read-side sum would
-                        # double-count) — skip tables whose snapshot
-                        # ledger already carries this batch_id.
-                        if self.tables[name].has_batch(batch_id):
-                            points[name] = 0
-                            continue
-                        snap = self._commit(
-                            spark,
-                            lambda d=out_df, n=name: self.tables[n].append(
-                                d, summary={"batch_id": batch_id}
-                            ),
-                            f"append:{name}",
-                        )
-                    else:
-                        snap = self._commit(
-                            spark,
-                            lambda d=out_df, n=name: self.tables[n].overwrite_partitions(
-                                d, summary={"batch_id": batch_id}
-                            ),
-                            f"overwrite:{name}",
-                        )
-                    points[name] = len(snap.added_files)  # files committed
-                    if fail_after_commit_of == name:
-                        raise RuntimeError(f"injected failure after commit of {name}")
+                # the tool dimension tracks tool *usage*: non-tool turns
+                # (tool IS NULL) are not a series
+                out_df = cur.filter((F.col("dim") != "tool") | F.col("tool").isNotNull())
+                name = tier_table(tier)
+                tbl = self.tables[name]
+                if mode == "append":
+                    # idempotent per (table, batch): a crash-window replay
+                    # of this batch_id must not re-append a tier's partials
+                    # (the read-side sum would double-count) — skip tables
+                    # whose snapshot ledger already carries this batch_id.
+                    if tbl.has_batch(batch_id):
+                        points[name] = 0
+                        continue
+                    write = tbl.append
+                else:
+                    write = tbl.overwrite_partitions
+                snap = self._commit(
+                    spark,
+                    lambda: write(out_df, summary={"batch_id": batch_id}),
+                    f"{mode}:{name}",
+                )
+                points[name] = len(snap.added_files)  # files committed
+                if fail_after_commit_of == name:
+                    raise RuntimeError(f"injected failure after commit of {name}")
         finally:
             for p in persisted:
                 p.unpersist()
@@ -461,8 +465,10 @@ class RollupPipeline:
     ) -> DataFrame:
         """Final (cross-unit merged) rollup for a dimension/tier.
 
-        The stored table holds per-unit partials; the final merge groups
-        by (bucket_start, keys) over tier-sized data.  For dim="conv" the
+        The tier table holds every dimension's per-unit partials; the
+        read keeps only this ``dim`` partition (pruned at file-listing
+        time) and the final merge groups by (bucket_start, keys) over
+        tier-sized data.  For dim="conv" the
         merge is a near-no-op (a conversation lives in one conv_bucket,
         but a 1h/1d bucket can span two dates only at day boundaries —
         still merged here for exactness).
@@ -479,8 +485,8 @@ class RollupPipeline:
         filter lands on the hive partition value, so Catalyst prunes at
         file-listing time)."""
         keys = DIMENSIONS[dim]
-        tbl = self.tables[f"rollup_{dim}_{tier}"]
-        df = tbl.read(spark)
+        tbl = self.tables[tier_table(tier)]
+        df = dim_slice(tbl.read(spark), DIMENSIONS, dim)
         if start_date is not None:
             df = df.filter(F.col("date") >= F.lit(str(start_date)).cast("date"))
         if end_date is not None:
@@ -497,7 +503,6 @@ class RollupPipeline:
     def finalize(
         self,
         spark: SparkSession,
-        dims: list[str] | None = None,
         tiers: list[str] | None = None,
         dates: list | None = None,
         vacuum: bool = False,
@@ -512,7 +517,8 @@ class RollupPipeline:
         resumes, so finalize can run on any cadence (e.g. hourly) while
         the stream keeps flowing.
 
-        Partition columns are re-derived from the merged series: ``date =
+        Rows merge per (bucket_start, dim, series keys); partition columns
+        are re-derived from the merged series: ``date =
         to_date(bucket_start)`` (exact — tier truncation never crosses a
         date) and ``conv_bucket`` from ``conv_id`` for the conv dimension
         (identical to ``unit_cols``); cross-bucket series (global / tool)
@@ -538,48 +544,42 @@ class RollupPipeline:
                 for d in dates
             ]
             dset = {d.isoformat() for d in dvals}
+        series_keys = list(dict.fromkeys(k for ks in DIMENSIONS.values() for k in ks))
+        conv_bucket = conv_bucket_col(self.cfg.conv_buckets)
         out: dict[str, object] = {}
-        for dim in dims or list(DIMENSIONS):
-            keys = DIMENSIONS[dim]
-            for tier in tiers or list(self.cfg.tiers):
-                name = f"rollup_{dim}_{tier}"
-                tbl = self.tables[name]
-                if not tbl.exists():
-                    continue
-                src = tbl.read(spark)
-                if dates is not None:
-                    src = src.filter(F.col("date").isin(dvals))
-                merged = (
-                    src.groupBy("bucket_start", *keys)
-                    .agg(*_merge_aggs())
-                    .withColumn("date", F.to_date("bucket_start"))
-                    .withColumn(
-                        "conv_bucket",
-                        F.pmod(F.xxhash64("conv_id"), F.lit(self.cfg.conv_buckets)).cast("int")
-                        if dim == "conv"
-                        else F.lit(0),
-                    )
+        for tier in tiers or self.cfg.tiers:
+            name = tier_table(tier)
+            tbl = self.tables[name]
+            if not tbl.exists():
+                continue
+            src = tbl.read(spark)
+            if dates is not None:
+                src = src.filter(F.col("date").isin(dvals))
+            merged = (
+                src.groupBy("bucket_start", "dim", *series_keys)
+                .agg(*_merge_aggs())
+                .withColumn("date", F.to_date("bucket_start"))
+                .withColumn(
+                    "conv_bucket",
+                    F.when(F.col("dim") == "conv", conv_bucket).otherwise(F.lit(0)),
                 )
-                if dates is None:
-                    out[name] = tbl.overwrite_all(merged, summary={"finalized": True})
-                else:
-                    out[name] = tbl.overwrite_where(
-                        merged,
-                        lambda pv, ds=dset: pv.get("date", "") in ds,
-                        summary={"finalize_dates": sorted(dset)},
-                    )
-                if vacuum:
-                    # reclaim the superseded partial files (two-phase, like
-                    # Iceberg expire_snapshots: readers pinned to older
-                    # snapshots stay valid until this runs)
-                    tbl.vacuum()
+            )
+            if dates is None:
+                out[name] = tbl.overwrite_all(merged, summary={"finalized": True})
+            else:
+                out[name] = tbl.overwrite_where(
+                    merged,
+                    lambda pv, ds=dset: pv.get("date", "") in ds,
+                    summary={"finalize_dates": sorted(dset)},
+                )
+            if vacuum:
+                # reclaim the superseded partial files (two-phase, like
+                # Iceberg expire_snapshots: readers pinned to older
+                # snapshots stay valid until this runs)
+                tbl.vacuum()
         return out
 
-    def invalidated_dates(
-        self,
-        dims: list[str] | None = None,
-        tiers: list[str] | None = None,
-    ) -> dict[str, list[str]]:
+    def invalidated_dates(self, tiers: list[str] | None = None) -> dict[str, list[str]]:
         """Per tier table: the ``date`` partitions whose logical content
         changed since that table's last finalize — the continuous-aggregate
         *invalidation log*, derived purely from the snapshot history
@@ -600,39 +600,36 @@ class RollupPipeline:
         first refresh materializes everything, which is the TimescaleDB
         semantic too.
         """
-        from mq_to_db_spark.sources.tableio import partition_values
-
         out: dict[str, list[str]] = {}
-        for dim in dims or list(DIMENSIONS):
-            for tier in tiers or list(self.cfg.tiers):
-                name = f"rollup_{dim}_{tier}"
-                tbl = self.tables[name]
-                if not tbl.exists():
+        for tier in tiers or self.cfg.tiers:
+            name = tier_table(tier)
+            tbl = self.tables[name]
+            if not tbl.exists():
+                continue
+            cur = tbl.current_version()
+            watermark = 0
+            for v in range(cur, 0, -1):
+                s = tbl.snapshot(v)
+                if s and "finalized" in (s.summary or {}):
+                    watermark = v
+                    break
+            dirty: set[str] = set()
+            for v in range(watermark + 1, cur + 1):
+                s = tbl.snapshot(v)
+                if s is None:
                     continue
-                cur = tbl.current_version()
-                watermark = 0
-                for v in range(cur, 0, -1):
-                    s = tbl.snapshot(v)
-                    if s and "finalized" in (s.summary or {}):
-                        watermark = v
-                        break
-                dirty: set[str] = set()
-                for v in range(watermark + 1, cur + 1):
-                    s = tbl.snapshot(v)
-                    if s is None:
-                        continue
-                    sm = s.summary or {}
-                    if "finalize_dates" in sm:
-                        dirty.difference_update(sm["finalize_dates"])
-                        continue
-                    if "compaction" in sm or "retention" in sm:
-                        continue
-                    for rel in s.added_files:
-                        d = partition_values(rel).get("date")
-                        if d:
-                            dirty.add(d)
-                if dirty:
-                    out[name] = sorted(dirty)
+                sm = s.summary or {}
+                if "finalize_dates" in sm:
+                    dirty.difference_update(sm["finalize_dates"])
+                    continue
+                if "compaction" in sm or "retention" in sm:
+                    continue
+                for rel in s.added_files:
+                    d = partition_values(rel).get("date")
+                    if d:
+                        dirty.add(d)
+            if dirty:
+                out[name] = sorted(dirty)
         return out
 
     def refresh_invalidated(
@@ -650,11 +647,10 @@ class RollupPipeline:
         the steady-state cost is proportional to the *late* data's date
         spread, never to table size."""
         inv = self.invalidated_dates()
-        for name, dates in inv.items():
-            _, dim, tier = name.split("_", 2)
-            self.finalize(
-                spark, dims=[dim], tiers=[tier], dates=dates, vacuum=vacuum
-            )
+        for tier in self.cfg.tiers:
+            dates = inv.get(tier_table(tier))
+            if dates:
+                self.finalize(spark, tiers=[tier], dates=dates, vacuum=vacuum)
         return inv
 
     def compact(self, spark: SparkSession, min_files: int = 2) -> dict[str, int]:
@@ -701,16 +697,15 @@ class RollupPipeline:
             if tier not in self.cfg.tiers:
                 raise ValueError(f"unknown tier {tier!r}")
             cutoff = (as_of - dt.timedelta(days=days)).isoformat()
-            for dim in DIMENSIONS:
-                name = f"rollup_{dim}_{tier}"
-                tbl = self.tables[name]
-                snap = tbl.delete_partitions(
-                    lambda pv, c=cutoff: pv.get("date", "") < c,
-                    summary={"retention_cutoff": cutoff},
-                )
-                out[name] = len(snap.removed_files)
-                if vacuum:
-                    tbl.vacuum()
+            name = tier_table(tier)
+            tbl = self.tables[name]
+            snap = tbl.delete_partitions(
+                lambda pv: pv.get("date", "") < cutoff,
+                summary={"retention_cutoff": cutoff},
+            )
+            out[name] = len(snap.removed_files)
+            if vacuum:
+                tbl.vacuum()
         return out
 
     def retention_report(
@@ -723,29 +718,23 @@ class RollupPipeline:
         pointing a new retention ladder at a year of tiers; the
         subsequent ``apply_retention`` removes exactly these files
         (asserted by test)."""
-        from mq_to_db_spark.sources.tableio import partition_values
-
         out: dict[str, dict] = {}
         for tier, days in retention_days.items():
             if tier not in self.cfg.tiers:
                 raise ValueError(f"unknown tier {tier!r}")
             cutoff = (as_of - dt.timedelta(days=days)).isoformat()
-            for dim in DIMENSIONS:
-                name = f"rollup_{dim}_{tier}"
-                tbl = self.tables[name]
-                snap = tbl.snapshot()
-                doomed = [
-                    f
-                    for f in (snap.all_files if snap else [])
-                    if partition_values(f).get("date", "") < cutoff
-                ]
-                out[name] = {
-                    "cutoff": cutoff,
-                    "dates": sorted(
-                        {partition_values(f).get("date", "") for f in doomed}
-                    ),
-                    "n_files": len(doomed),
-                }
+            name = tier_table(tier)
+            snap = self.tables[name].snapshot()
+            doomed = [
+                f
+                for f in (snap.all_files if snap else [])
+                if partition_values(f).get("date", "") < cutoff
+            ]
+            out[name] = {
+                "cutoff": cutoff,
+                "dates": sorted({partition_values(f).get("date", "") for f in doomed}),
+                "n_files": len(doomed),
+            }
         return out
 
     def read_dead_letter(self, spark: SparkSession) -> DataFrame:

@@ -27,6 +27,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mq_to_db_spark.config import TIER_SECONDS
 from mq_to_db_spark.operators.compression import decode_chunks_range
 from mq_to_db_spark.operators.rollup import (
     _merge_aggs,
@@ -118,9 +119,6 @@ def hybrid_read(
     )
 
 
-_TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
-
-
 def pick_tier(step_seconds: int, available: tuple[str, ...] = ("1m", "1h", "1d")) -> str:
     """Resolution selection (the Prometheus downsample / M3 resolution
     rule): the COARSEST stored tier whose bucket width divides the query
@@ -136,14 +134,14 @@ def pick_tier(step_seconds: int, available: tuple[str, ...] = ("1m", "1h", "1d")
     """
     fits = [
         t for t in available
-        if step_seconds % _TIER_SECONDS[t] == 0
+        if step_seconds % TIER_SECONDS[t] == 0
     ]
     if not fits:
         raise ValueError(
             f"no stored tier divides step={step_seconds}s; "
             f"available={available} — evaluate via hybrid_read instead"
         )
-    return max(fits, key=lambda t: _TIER_SECONDS[t])
+    return max(fits, key=lambda t: TIER_SECONDS[t])
 
 
 def range_eval(
@@ -176,7 +174,7 @@ def range_eval(
     if step_seconds <= 0:
         raise ValueError(f"step must be positive, got {step_seconds}")
     tier = pick_tier(step_seconds, tuple(tier_dfs))
-    width = _TIER_SECONDS[tier]
+    width = TIER_SECONDS[tier]
     # the session pins spark.sql.session.timeZone=UTC (session.py), so a
     # naive bound is a UTC instant — don't let the HOST timezone leak in
     from datetime import timezone

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from mq_to_db_spark.config import TIER_INTERVAL
 from mq_to_db_spark.fixtures.generator import TRANSCRIPT_SCHEMA
-from mq_to_db_spark.operators.rollup import ROLE_NAMES, with_text_stats
+from mq_to_db_spark.operators.rollup import _partial_aggs, with_text_stats
 
 
 def read_transcript_stream(
@@ -53,19 +53,10 @@ def streaming_rollup(
     the batch tier tables (re-aggregable stats)."""
     keys = list(keys or [])
     prepped = with_text_stats(stream).withWatermark("ts", watermark)
-    aggs = [
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum("text_len").alias("text_len_sum"),
-        F.min("text_len").alias("text_len_min"),
-        F.max("text_len").alias("text_len_max"),
-        F.sum(F.col("text_len") * F.col("text_len")).alias("text_len_sumsq"),
-        F.sum("token_count").alias("token_sum"),
-        *[F.count_if(F.col("role") == r).alias(f"n_{r}") for r in ROLE_NAMES],
-    ]
     win = F.window("ts", TIER_INTERVAL[tier])
     return (
         prepped.groupBy(win.alias("w"), *keys)
-        .agg(*aggs)
+        .agg(*_partial_aggs())
         .withColumn("bucket_start", F.col("w.start"))
         .drop("w")
     )

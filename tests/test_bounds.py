@@ -104,7 +104,7 @@ def test_pipeline_timeout_aborts_before_ack(spark, tmp_path):
             return super().append(slow, summary)
 
     def factory(name, part=None):
-        cls = SlowTableIO if name == "rollup_global_1m" else TableIO
+        cls = SlowTableIO if name == "rollup_1m" else TableIO
         return cls(str(tmp_path / "wh" / name), part)
 
     pdf = generate_transcripts_pdf(n_turns=200, seed=7)
@@ -127,7 +127,7 @@ def test_pipeline_timeout_aborts_before_ack(spark, tmp_path):
     )
     pipe2.cfg = EngineConfig(conv_buckets=2, shuffle_partitions=4)
     pipe2.tables = {  # plain IO: the slow wrapper was the fault injector
-        name: TableIO(str(tmp_path / "wh" / name), ["date", "conv_bucket"])
+        name: TableIO(str(tmp_path / "wh" / name), ["dim", "date", "conv_bucket"])
         for name in pipe2.tables
     }
     report = pipe2.run(spark, df, batch_id="b1", mode="append")

@@ -43,10 +43,10 @@ def test_append_replay_after_crash_window_is_exact(spark, tmp_path):
     with pytest.raises(RuntimeError, match="injected failure"):
         pipe.run(
             spark, b2, batch_id="s-1", mode="append",
-            fail_after_commit_of="rollup_global_1h",
+            fail_after_commit_of="rollup_1h",
         )
     # crash window: some tier tables carry s-1 partials, no markers exist
-    assert pipe.tables["rollup_global_1m"].has_batch("s-1")
+    assert pipe.tables["rollup_1m"].has_batch("s-1")
     assert pipe.committed_units("s-1") == set()
     # recovery replay of the SAME micro-batch
     pipe.run(spark, b2, batch_id="s-1", mode="append")
@@ -90,9 +90,9 @@ def test_finalize_collapses_partials_scan_only_read(spark, tmp_path):
     plan = pipe.read_rollup(spark, "global", "1h")._jdf.queryExecution().executedPlan().toString()
     assert "Aggregate" in plan
     # and finalize is idempotent: run twice, same result
-    pipe.finalize(spark, dims=["global"], tiers=["1h"])
+    pipe.finalize(spark, tiers=["1h"])
     once = _read(pipe, spark, "global", "1h")
-    pipe.finalize(spark, dims=["global"], tiers=["1h"])
+    pipe.finalize(spark, tiers=["1h"])
     pd.testing.assert_frame_equal(_read(pipe, spark, "global", "1h"), once, check_dtype=False)
 
 
@@ -124,21 +124,21 @@ def test_incremental_finalize_single_date(spark, tmp_path):
     pipe.run(spark, b1, batch_id="s-0", mode="append")
     pipe.run(spark, b2, batch_id="s-1", mode="append")
 
-    tbl = pipe.tables["rollup_global_1h"]
+    tbl = pipe.tables["rollup_1h"]
     dates = sorted(
         r.date.isoformat()
-        for r in tbl.read(spark).select("date").distinct().collect()
+        for r in tbl.read(spark).filter("dim = 'global'").select("date").distinct().collect()
     )
     assert len(dates) >= 2
     target, untouched = dates[0], dates[1]
 
-    raw = tbl.read(spark)
+    raw = tbl.read(spark).filter("dim = 'global'")
     partials_untouched_before = raw.filter(F.col("date") == untouched).count()
     want = _read(pipe, spark, "global", "1h")
 
-    pipe.finalize(spark, dims=["global"], tiers=["1h"], dates=[target])
+    pipe.finalize(spark, tiers=["1h"], dates=[target])
 
-    raw2 = tbl.read(spark)
+    raw2 = tbl.read(spark).filter("dim = 'global'")
     # target date: exactly one row per bucket_start now
     per_bucket = (
         raw2.filter(F.col("date") == target)
@@ -163,7 +163,8 @@ def test_read_rollup_date_bounds_prune_partitions(spark, tmp_path):
     pipe.run(spark, b2, batch_id="s-1", mode="append")
     dates = sorted(
         r.date.isoformat()
-        for r in pipe.tables["rollup_global_1h"].read(spark).select("date").distinct().collect()
+        for r in pipe.tables["rollup_1h"].read(spark).filter("dim = 'global'")
+        .select("date").distinct().collect()
     )
     target = dates[0]
     bounded = pipe.read_rollup(spark, "global", "1h", start_date=target, end_date=target)
@@ -174,11 +175,12 @@ def test_read_rollup_date_bounds_prune_partitions(spark, tmp_path):
         return scan.metrics().apply("numFiles").value()
 
     # numFiles is the post-partition-pruning scan metric (plain scan of
-    # the same table + the same date predicate read_rollup applies): the
-    # bounded read lists strictly fewer files
-    tbl = pipe.tables["rollup_global_1h"]
-    n_bounded = files_read(tbl.read(spark).filter(F.col("date") == F.lit(target).cast("date")))
-    n_full = files_read(tbl.read(spark))
+    # the same table + the same dim and date predicates read_rollup
+    # applies): the bounded read lists strictly fewer files
+    tbl = pipe.tables["rollup_1h"]
+    glob = tbl.read(spark).filter("dim = 'global'")
+    n_bounded = files_read(glob.filter(F.col("date") == F.lit(target).cast("date")))
+    n_full = files_read(glob)
     assert 0 < n_bounded < n_full, (n_bounded, n_full)
     got = bounded.toPandas().sort_values("bucket_start", ignore_index=True)
     want = (
@@ -203,8 +205,8 @@ def test_pipeline_compact_and_finalize_vacuum(spark, tmp_path):
     assert any(n > 0 for n in rewritten.values()), rewritten
     pd.testing.assert_frame_equal(_read(pipe, spark, "global", "1h"), want, check_dtype=False)
 
-    pipe.finalize(spark, dims=["global"], tiers=["1h"], vacuum=True)
-    tbl = pipe.tables["rollup_global_1h"]
+    pipe.finalize(spark, tiers=["1h"], vacuum=True)
+    tbl = pipe.tables["rollup_1h"]
     live = set(tbl.snapshot().all_files)
     on_disk = {k[len("data/"):] for k in tbl.store.list("data")}
     assert on_disk == live  # vacuum left exactly the live snapshot

@@ -119,6 +119,24 @@ def test_key_isolation_and_p_validation(spark):
         hll_sketch(df, ["k"], "uid", p=3)
 
 
+def test_small_p_alpha_is_standard_constant(spark):
+    """p = 4 (m = 16) uses Flajolet et al.'s alpha = 0.673, not the
+    asymptotic formula; with every register set the estimate is the raw
+    closed form alpha * m^2 / sum(2^-rho), bit for bit.  p outside
+    [4, 16] is rejected at estimate time as at build time."""
+    n = 1000
+    sk = hll_sketch(_df(spark, n), [], "uid", p=4, tier="1d")
+    regs = _py_registers([f"u{i}" for i in range(n)], p=4)
+    assert len(regs) == 16  # no zero register: the raw-estimate branch
+    s = 0.0
+    for j in sorted(regs):
+        s = s + 1.0 / (1 << regs[j])
+    assert hll_estimate(sk, p=4).first()["estimate"] == (0.673 * 16) * 16.0 / s
+    for bad in (3, 17):
+        with pytest.raises(ValueError, match="p must be"):
+            hll_estimate(sk, p=bad)
+
+
 def test_plan_two_hash_aggs_no_python(spark):
     """Build = exactly the two hash aggregations the docstring claims
     (j-register max, then map assembly), all JVM-side."""

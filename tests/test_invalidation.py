@@ -80,7 +80,7 @@ def test_refresh_idempotent_and_compaction_not_invalidating(spark, tmp_path):
     # materializes everything — the TimescaleDB first-refresh semantic)
     inv = pipe.invalidated_dates()
     all_dates = sorted({str(d) for d in pdf["ts"].dt.date.unique()})
-    assert inv["rollup_global_1h"] == all_dates
+    assert inv["rollup_1h"] == all_dates
 
     assert pipe.refresh_invalidated(spark) == inv
     assert pipe.refresh_invalidated(spark) == {}  # second pass: no-op

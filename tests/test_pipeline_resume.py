@@ -64,7 +64,7 @@ def test_kill_and_resume_no_dupes_no_missing(spark, transcripts, pipe):
     with no duplicates — effectively-once."""
     with pytest.raises(RuntimeError, match="injected failure"):
         pipe.run(spark, transcripts, batch_id="b1",
-                 fail_after_commit_of="rollup_global_1m")
+                 fail_after_commit_of="rollup_1m")
     assert pipe.committed_units() == set()  # nothing acked
 
     r2 = pipe.run(spark, transcripts, batch_id="b2")
@@ -112,7 +112,7 @@ def test_job_metrics_table(spark, dirty, transcripts, pipe):
     row = m.iloc[0]
     assert row.batch_id == "m1"
     assert row.n_in == r1.n_in and row.n_ok == r1.n_ok and row.n_rejected == r1.n_rejected
-    assert row.points_written["rollup_global_1m"] > 0
+    assert row.points_written["rollup_1m"] > 0
     assert row.engine_version
     # fully-skipped rerun writes no metrics row (no counters incremented)
     pipe.run(spark, dirty, batch_id="m2")

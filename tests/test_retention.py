@@ -38,7 +38,7 @@ def test_tiered_retention_expires_fine_keeps_coarse(spark, transcripts, pipe):
     keep_days = (as_of - dates[1]).days  # cut the oldest date only
     before_1m = pipe.read_rollup(spark, "global", "1m").count()
     expired = pipe.apply_retention({"1m": keep_days}, as_of=as_of)
-    assert expired["rollup_global_1m"] > 0
+    assert expired["rollup_1m"] > 0
 
     # 1m tier no longer holds buckets before the cutoff...
     cutoff = as_of - dt.timedelta(days=keep_days)
@@ -51,7 +51,7 @@ def test_tiered_retention_expires_fine_keeps_coarse(spark, transcripts, pipe):
 
 
 def test_retention_is_metadata_only_then_vacuum_reclaims(spark, transcripts, pipe):
-    tbl = pipe.tables["rollup_global_1m"]
+    tbl = pipe.tables["rollup_1m"]
     v_before = tbl.current_version()
     files_before = set(tbl.snapshot().all_files)
     as_of = max(
@@ -63,17 +63,17 @@ def test_retention_is_metadata_only_then_vacuum_reclaims(spark, transcripts, pip
     # a reader pinned to the old snapshot still works (time travel)
     assert tbl.current_version() == v_before + 1
     assert set(tbl.snapshot().all_files) < files_before
-    old = tbl.read(spark, version=v_before)
-    assert old.count() > tbl.read(spark).count()
+    old = tbl.read(spark, version=v_before).filter("dim = 'global'")
+    assert old.count() > tbl.read(spark).filter("dim = 'global'").count()
 
-    n_current_before_vacuum = tbl.read(spark).count()
+    n_current_before_vacuum = tbl.read(spark).filter("dim = 'global'").count()
     deleted = tbl.vacuum(keep_versions=1)
     assert len(deleted) > 0
     import os
 
     assert all(not os.path.exists(os.path.join(tbl.data_dir, f)) for f in deleted)
     # current snapshot unaffected by vacuum
-    assert tbl.read(spark).count() == n_current_before_vacuum
+    assert tbl.read(spark).filter("dim = 'global'").count() == n_current_before_vacuum
 
 
 def test_retention_unknown_tier_raises(pipe):
@@ -85,21 +85,21 @@ def test_retention_report_is_exact_dry_run(spark, transcripts, pipe):
     """The report names exactly the files apply_retention then removes,
     and itself commits nothing (current_version unchanged)."""
     policies = {"1m": 2, "1h": 4}
-    dates = [r[0] for r in pipe.tables["rollup_global_1m"].read(spark)
-             .select(F.to_date("bucket_start")).distinct().collect()]
+    dates = [r[0] for r in pipe.tables["rollup_1m"].read(spark)
+             .filter("dim = 'global'").select(F.to_date("bucket_start")).distinct().collect()]
     as_of = max(dates)
 
-    v_before = pipe.tables["rollup_global_1m"].current_version()
+    v_before = pipe.tables["rollup_1m"].current_version()
     rep = pipe.retention_report(policies, as_of=as_of)
-    assert pipe.tables["rollup_global_1m"].current_version() == v_before
+    assert pipe.tables["rollup_1m"].current_version() == v_before
 
     # same cutoffs, some files doomed at the fine tier
-    assert rep["rollup_global_1m"]["cutoff"] == (
+    assert rep["rollup_1m"]["cutoff"] == (
         as_of - dt.timedelta(days=2)
     ).isoformat()
-    assert rep["rollup_global_1m"]["n_files"] > 0
-    assert all(d < rep["rollup_global_1m"]["cutoff"]
-               for d in rep["rollup_global_1m"]["dates"])
+    assert rep["rollup_1m"]["n_files"] > 0
+    assert all(d < rep["rollup_1m"]["cutoff"]
+               for d in rep["rollup_1m"]["dates"])
 
     removed = pipe.apply_retention(policies, as_of=as_of)
     for name, meta in rep.items():
