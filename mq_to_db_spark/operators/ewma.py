@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructType
 
 from mq_to_db_spark.operators.rangewin import numeric_order_col
+from mq_to_db_spark.session import local_frame
 
 
 def ewma(
@@ -141,7 +142,7 @@ def _ewma_keyless(df, ts_col, value_col, alpha, tiebreak, out_col, n_buckets):
         s_in = row.first_val if s_in is None else s_in
         carries.append((row._rb, float(s_in)))
         s_in = row.B + (1.0 - alpha) ** row.n * s_in
-    carry_df = spark.createDataFrame(carries, "_rb int, _carry double")
+    carry_df = local_frame(spark, carries, "_rb int, _carry double")
     return (
         loc.join(F.broadcast(carry_df), "_rb", "left")
         .withColumn(

@@ -219,7 +219,9 @@ def gap_stats(
     at sf0.01).  Split ``sum = q·cnt + r`` so the half-up micro rounding
     ``(2·r·10⁶ + cnt) div (2·cnt)`` never overflows (r < cnt; gaps are
     non-negative), then one deterministic int→double conversion and
-    division by 1e6.
+    division by 1e6.  Bound: the micro-unit value must fit a BIGINT, so
+    a bucket whose mean gap reaches 2⁶³/10⁶ µs (~106.7 days) gets a
+    NULL ``avg_gap_us`` (``max_gap_us`` stays exact), never an abort.
 
     Plan: one exchange — the lag window hash-partitions on the series
     keys; the (keys, bucket) aggregation reuses that partitioning."""
@@ -242,12 +244,12 @@ def gap_stats(
             "avg_gap_us",
             F.when(
                 F.col("_gcnt") > 0,
-                (
-                    F.expr("_gsum DIV _gcnt") * F.lit(1_000_000)
-                    + F.expr(
+                F.try_add(
+                    F.try_multiply(F.expr("_gsum DIV _gcnt"), F.lit(1_000_000)),
+                    F.expr(
                         "(2 * (_gsum % _gcnt) * 1000000 + _gcnt)"
                         " DIV (2 * _gcnt)"
-                    )
+                    ),
                 ).cast("double")
                 / F.lit(1e6),
             ),

@@ -327,7 +327,8 @@ def exp_hist_stats_exact(
     Validity bounds (outputs NULL when violated, never silently
     wrong): every bucket index must be in ``[0, 29]`` (values ≥ 1 and
     per-term ``9·4^idx < 2^63``); the per-group sum must also fit a
-    BIGINT, i.e. ``n_obs · 9·4^max_idx < 2^63`` — at larger scale
+    BIGINT, i.e. ``n_obs · 9·4^max_idx < 2^63`` (``s2_x16`` of 4
+    observations at idx 29 does not) — at larger scale
     aggregate per finer key/tier first or sum the exploded buckets as
     DECIMAL(38,0).
 
@@ -338,20 +339,30 @@ def exp_hist_stats_exact(
     n_obs = F.aggregate(
         ent, F.lit(0).cast("long"), lambda acc, e: acc + e["value"]
     )
+    # try_ arithmetic: a term or running sum past BIGINT turns the fold
+    # NULL (and NULL stays NULL) instead of aborting the query under ANSI
     s1 = F.aggregate(
         ent,
         F.lit(0).cast("long"),
-        lambda acc, e: acc
-        + e["value"].cast("long")
-        * F.call_function("shiftleft", F.lit(3).cast("long"), e["key"]),
+        lambda acc, e: F.try_add(
+            acc,
+            F.try_multiply(
+                e["value"].cast("long"),
+                F.call_function("shiftleft", F.lit(3).cast("long"), e["key"]),
+            ),
+        ),
     )
     s2 = F.aggregate(
         ent,
         F.lit(0).cast("long"),
-        lambda acc, e: acc
-        + e["value"].cast("long")
-        * F.call_function(
-            "shiftleft", F.lit(9).cast("long"), e["key"] * F.lit(2)
+        lambda acc, e: F.try_add(
+            acc,
+            F.try_multiply(
+                e["value"].cast("long"),
+                F.call_function(
+                    "shiftleft", F.lit(9).cast("long"), e["key"] * F.lit(2)
+                ),
+            ),
         ),
     )
     ok = F.aggregate(

@@ -33,7 +33,20 @@ Scale notes (10^12 turns):
   * filters on committed units are pushed into the scan
     (conv_bucket/date derive from input columns via deterministic
     expressions, so Catalyst prunes at the parquet level when the input
-    is physically partitioned the same way).
+    is physically partitioned the same way); when no unit of the batch
+    is committed yet (every first delivery) there is no join at all,
+    only a filter keeping the rows that have a unit.
+
+Fixed cost per micro-batch (it sets ack latency, not the data):
+  * driver-side rows — the pending-unit list, lineage rows, the
+    job-metrics row — enter Spark through ``session.local_frame`` (one
+    Arrow table → a ``LocalRelation``): building or reading them runs
+    no Spark job and no Python worker, and ``committed_at`` is stored as
+    UTC whatever the driver process's ``TZ``;
+  * table reads hand Spark the manifest's leaf files, and ``get_spark``
+    pins the parallel-listing threshold so that listing them stays a
+    local stat per file on the driver instead of a distributed job per
+    read once a table holds more than 32 files.
 """
 
 from __future__ import annotations
@@ -58,6 +71,7 @@ from mq_to_db_spark.operators.rollup import (
     with_text_stats,
 )
 from mq_to_db_spark.operators.validate import with_reject_reason
+from mq_to_db_spark.session import local_frame
 from mq_to_db_spark.sources.store import LocalAtomicStore
 from mq_to_db_spark.sources.tableio import TableIO, partition_values
 
@@ -297,17 +311,26 @@ class RollupPipeline:
             report.seconds = time.time() - t0
             return report
 
-        todo_df = spark.createDataFrame(
-            [(b, d) for b, d in sorted(todo)], schema="conv_bucket int, date string"
-        ).withColumn("date", F.to_date("date"))
-        # broadcast semi-join prunes committed units before any shuffle
-        pending = tagged.join(F.broadcast(todo_df), ["conv_bucket", "date"], "left_semi")
+        has_unit = F.col("conv_bucket").isNotNull() & F.col("date").isNotNull()
+        if len(todo) == len(units):
+            # nothing committed yet (every first delivery, every fresh
+            # append batch): keep the unit rows, no join needed
+            pending = tagged.filter(has_unit)
+        else:
+            # partial redelivery: a broadcast semi-join prunes committed
+            # units before any shuffle
+            todo_df = local_frame(
+                spark,
+                [(b, dt.date.fromisoformat(d)) for b, d in sorted(todo)],
+                "conv_bucket int, date date",
+            )
+            pending = tagged.join(F.broadcast(todo_df), ["conv_bucket", "date"], "left_semi")
 
-        # Rows whose unit cols are null (null conv_id / null ts) never match
-        # the semi-join; they belong to no unit but must still reach the
-        # dead letter (at-least-once DLX — reruns may re-append them, as
-        # broker redelivery would).
-        unitless = tagged.filter(F.col("conv_bucket").isNull() | F.col("date").isNull())
+        # Rows whose unit cols are null (null conv_id / null ts) are not in
+        # `pending`; they belong to no unit but must still reach the dead
+        # letter (at-least-once DLX — reruns may re-append them, as broker
+        # redelivery would).
+        unitless = tagged.filter(~has_unit)
         rejected = pending.filter(F.col("reason").isNotNull()).unionByName(unitless)
         valid = pending.filter(F.col("reason").isNull()).drop("reason")
 
@@ -397,7 +420,7 @@ class RollupPipeline:
             self._commit(
                 spark,
                 lambda: self.lineage.append(
-                    spark.createDataFrame(lineage_rows, schema=LINEAGE_SCHEMA),
+                    local_frame(spark, lineage_rows, LINEAGE_SCHEMA),
                     summary={"batch_id": batch_id},
                 ),
                 "append:lineage",
@@ -421,7 +444,8 @@ class RollupPipeline:
         from mq_to_db_spark import __version__
 
         if not self.metrics.has_batch(batch_id):
-            metrics_df = spark.createDataFrame(
+            metrics_df = local_frame(
+                spark,
                 [
                     (
                         batch_id,
@@ -436,7 +460,7 @@ class RollupPipeline:
                         committed_ts,
                     )
                 ],
-                schema=METRICS_SCHEMA,
+                METRICS_SCHEMA,
             )
             self._commit(
                 spark,

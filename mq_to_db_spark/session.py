@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -77,6 +78,11 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # TableIO hands Spark leaf files taken from the manifest, so listing
+        # them means one local stat per file; above the default threshold
+        # (32 paths) Spark would instead run a distributed listing job, one
+        # task per file, on every table read.  Never distribute it.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         # InferFiltersFromGenerate injects `size(arr)>0 AND isnotnull(arr)`
         # below every explode; predicate pushdown then inlines the
         # generator expression into that filter, and for computed arrays
@@ -104,3 +110,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over a few driver-side rows (tuples in ``schema``
+    order; ``schema`` a StructType or DDL string).
+
+    The rows cross into the JVM as one Arrow table and become a
+    ``LocalRelation``, so building and reading the frame runs no Spark
+    job.  ``spark.createDataFrame(list, schema)`` instead parallelizes
+    the rows and re-serializes them in a Python worker on every task,
+    one job each time the frame is evaluated.  Arrow also reads naive
+    datetimes as UTC wall time, where the list path converts them with
+    the driver process's local time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)

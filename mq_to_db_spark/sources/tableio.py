@@ -41,6 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
 
+from mq_to_db_spark.session import local_frame
 from mq_to_db_spark.sources.store import LocalAtomicStore
 
 
@@ -300,7 +301,7 @@ class TableIO:
         if not files:
             if schema is None:
                 raise ValueError("empty table and no schema given")
-            return spark.createDataFrame([], schema=schema)
+            return local_frame(spark, [], schema)
         paths = [os.path.join(self.data_dir, f) for f in files]
         reader = spark.read.option("basePath", self.data_dir)
         if schema is not None:

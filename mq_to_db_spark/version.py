@@ -15,6 +15,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 
 from mq_to_db_spark import __version__
+from mq_to_db_spark.session import local_frame
 
 NAME = "mq_to_db_spark"
 
@@ -38,7 +39,8 @@ def get_version_info_extended() -> str:
 def build_info_df(spark: SparkSession) -> DataFrame:
     import pyspark
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 NAME,

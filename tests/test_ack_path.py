@@ -1,0 +1,100 @@
+"""The micro-batch ack path (plans/pipeline.py ``run``): driver-side rows
+(unit list, lineage, job metrics) enter Spark through Arrow, the
+committed-units semi-join runs only when some unit is committed, and
+rows with no unit reach the dead letter exactly once either way."""
+
+import math
+import time
+
+import pytest
+from pyspark.sql import functions as F
+
+from mq_to_db_spark.config import EngineConfig
+from mq_to_db_spark.fixtures.generator import (
+    TRANSCRIPT_SCHEMA,
+    generate_transcripts_pdf,
+    inject_dirty_rows,
+)
+from mq_to_db_spark.plans.pipeline import RollupPipeline, unit_cols
+from mq_to_db_spark.sources.tableio import partition_values
+
+CFG = EngineConfig(conv_buckets=8, shuffle_partitions=4)
+
+
+@pytest.fixture(scope="module")
+def small_pdf():
+    return generate_transcripts_pdf(600, seed=5)
+
+
+@pytest.mark.parametrize("mode", ["overwrite", "append"])
+def test_first_delivery_dead_letters_each_unitless_reject_once(
+    spark, tmp_path, small_pdf, mode
+):
+    pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
+    df = spark.createDataFrame(inject_dirty_rows(small_pdf), schema=TRANSCRIPT_SCHEMA)
+    report = pipe.run(spark, df, batch_id="first", mode=mode)
+    assert report.n_units_skipped == 0 and report.n_rejected == 6
+    dl = pipe.read_dead_letter(spark)
+    assert dl.count() == 6
+    assert dl.filter(F.col("conv_id").isNull()).count() == 1
+    assert dl.filter(F.col("ts").isNull()).count() == 1
+    dupes = dl.groupBy("conv_id", "turn_idx", "ts", "reason").count().filter("count > 1")
+    assert dupes.count() == 0
+
+
+def test_partial_redelivery_writes_only_unmarked_units(spark, tmp_path, small_pdf):
+    """Commit half of the units, then redeliver everything: lineage rows
+    and tier files of the second batch cover exactly the other half."""
+    pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
+    full = spark.createDataFrame(small_pdf, schema=TRANSCRIPT_SCHEMA)
+    with_units = unit_cols(full, CFG.conv_buckets)
+    first = pipe.run(
+        spark, with_units.filter("conv_bucket < 4").drop("conv_bucket", "date"), "b1"
+    )
+    marked = pipe.committed_units()
+    assert first.n_units_total == len(marked) > 0
+
+    report = pipe.run(spark, full, batch_id="b2")
+    all_units = {
+        (r.conv_bucket, str(r.date))
+        for r in with_units.select("conv_bucket", "date").distinct().collect()
+    }
+    unmarked = all_units - marked
+    assert unmarked and report.n_units_skipped == len(marked)
+
+    lin = pipe.read_lineage(spark).filter(F.col("batch_id") == "b2").collect()
+    assert {(r.conv_bucket, str(r.date)) for r in lin} == unmarked
+    for name, tbl in pipe.tables.items():
+        added = tbl.snapshot().added_files
+        assert tbl.snapshot().summary["batch_id"] == "b2"
+        units = {
+            (int(pv["conv_bucket"]), pv["date"])
+            for pv in map(partition_values, added)
+        }
+        assert units == unmarked, name
+
+
+@pytest.fixture()
+def new_york_tz(monkeypatch):
+    """Run the driver process in a non-UTC local time zone."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_committed_at_is_utc_under_local_tz(spark, tmp_path, small_pdf, new_york_tz):
+    """``committed_at`` is the commit's UTC instant whatever the driver
+    process's ``TZ``; the ``points_written`` map round-trips."""
+    assert time.localtime(0).tm_gmtoff != 0
+    pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
+    df = spark.createDataFrame(small_pdf, schema=TRANSCRIPT_SCHEMA)
+    t0 = math.floor(time.time())
+    report = pipe.run(spark, df, batch_id="tz")
+    t1 = math.ceil(time.time())
+    for frame in (pipe.read_lineage(spark), pipe.read_metrics(spark)):
+        secs = {r[0] for r in frame.select(F.unix_timestamp("committed_at")).collect()}
+        assert len(secs) == 1 and t0 <= secs.pop() <= t1
+    (points,) = pipe.read_metrics(spark).select("points_written").first()
+    assert points == report.points_written and points["rollup_1m"] > 0

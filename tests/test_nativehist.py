@@ -307,3 +307,29 @@ def test_exp_hist_stats_exact_zero_shuffle_plan(spark):
     )
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+
+
+def test_exp_hist_stats_exact_sum_past_bigint_is_null(spark):
+    """Under ANSI the BIGINT fold returns NULL past its bound instead of
+    aborting: 4 observations at idx 29 overflow ``s2_x16`` in the term
+    (4·9·4²⁹ > 2⁶³), {29: 3, 28: 3} in the running sum; 3 at idx 29
+    still fits exactly."""
+    import datetime as dt
+
+    from mq_to_db_spark.operators.nativehist import exp_hist_stats_exact
+
+    df = spark.createDataFrame(
+        [
+            (dt.datetime(2024, 1, 1), {29: 3}),
+            (dt.datetime(2024, 1, 2), {29: 4}),
+            (dt.datetime(2024, 1, 3), {29: 3, 28: 3}),
+        ],
+        "bucket_start timestamp, hist map<int,bigint>",
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    rows = {r["bucket_start"].day: r for r in exp_hist_stats_exact(df).collect()}
+    assert rows[1]["s1_x4"] == 3 * 3 * 2**29
+    assert rows[1]["s2_x16"] == 3 * 9 * 4**29
+    assert rows[2]["n_obs"] == 4 and rows[2]["s1_x4"] == 4 * 3 * 2**29
+    assert rows[2]["s2_x16"] is None
+    assert rows[3]["n_obs"] == 6 and rows[3]["s2_x16"] is None

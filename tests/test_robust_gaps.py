@@ -73,3 +73,19 @@ def test_gap_stats_single_exchange_plan(spark):
     df = _df(spark, [("a", 0, 1), ("b", 5, 2)])
     plan = gap_stats(df, ["k"], tier="1d", tiebreak=("rid",))._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_gap_stats_avg_past_bigint_micro_units_is_null(spark):
+    # a 200-day gap is 1.728e13 µs; its micro-unit average (×10⁶) is past
+    # 2⁶³, so under ANSI avg_gap_us is NULL, not an abort; max stays exact
+    df = _df(spark, [("a", 0, 1), ("a", 200 * 86400, 1)])
+    out = {r["bucket_start"].date(): r for r in
+           gap_stats(df, ["k"], tier="1d", tiebreak=("rid",)).collect()}
+    late = out[dt.date(2024, 7, 19)]
+    assert late["n_samples"] == 1
+    assert late["max_gap_us"] == 200 * 86400 * 1_000_000
+    assert late["avg_gap_us"] is None
+    # in-bound buckets keep the exact micro-unit value
+    near = _df(spark, [("a", 0, 1), ("a", 100 * 86400, 1)])
+    row = gap_stats(near, ["k"], tier="1d", tiebreak=("rid",)).orderBy("bucket_start").collect()[-1]
+    assert row["avg_gap_us"] == 100 * 86400 * 1_000_000.0

@@ -1,7 +1,9 @@
 """One table per tier (plans/pipeline.py): every dimension's series share
 ``rollup_{tier}``, partitioned by ``(dim, date, conv_bucket)``, so a
 micro-batch commits each table once, a refresh rewrites each tier table
-once, and a dimension read prunes to its own ``dim`` partition."""
+once, and a dimension read prunes to its own ``dim`` partition.  The
+Spark job counts of a first-delivery micro-batch and of a refresh are
+pinned, so a stray action on the ack path shows up here."""
 
 import pytest
 
@@ -31,21 +33,37 @@ def _versions(pipe):
     return {name: t.current_version() for name, t in _all_tables(pipe).items()}
 
 
+def _job_descriptions(spark, fn) -> list[str]:
+    """Run ``fn`` in its own job group; the descriptions of the Spark
+    jobs it started (Spark's own listing job describes itself as
+    "Listing leaf files and directories for N paths")."""
+    sc = spark.sparkContext
+    group = f"jobs-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(j).description() for j in sc.statusTracker().getJobIdsForGroup(group)]
+    return [d.get() if d.isDefined() else "" for d in descs]
+
+
 def _append(spark, pipe, pdf, batch_id):
     df = spark.createDataFrame(inject_dirty_rows(pdf), schema=TRANSCRIPT_SCHEMA)
-    pipe.run(spark, df, batch_id=batch_id, mode="append")
+    return _job_descriptions(spark, lambda: pipe.run(spark, df, batch_id=batch_id, mode="append"))
 
 
 def _two_batches(spark, root):
-    """A pipeline after two dirty append micro-batches, and the table
-    versions between them."""
+    """A pipeline after two dirty append micro-batches, the table
+    versions between them, and the first batch's Spark jobs."""
     pdf = generate_transcripts_pdf(1200, seed=21)
     half = len(pdf) // 2
     pipe = RollupPipeline(str(root / "wh"), CFG)
-    _append(spark, pipe, pdf.iloc[:half], "s-0")
+    first_jobs = _append(spark, pipe, pdf.iloc[:half], "s-0")
     between = _versions(pipe)
     _append(spark, pipe, pdf.iloc[half:], "s-1")
-    return pipe, between
+    return pipe, between, first_jobs
 
 
 @pytest.fixture(scope="module")
@@ -74,7 +92,7 @@ def _scan_num_files(df) -> int:
 
 
 def test_append_batch_adds_one_snapshot_per_table(appended):
-    pipe, between = appended
+    pipe, between, _ = appended
     assert sorted(pipe.tables) == sorted(TIER_TABLES)
     assert len(_all_tables(pipe)) == 6
     after = _versions(pipe)
@@ -85,10 +103,23 @@ def test_append_batch_adds_one_snapshot_per_table(appended):
         assert dims == {"global", "conv", "tool"}, (name, dims)
 
 
+def test_first_delivery_append_job_count(appended):
+    # the unit-stats collect plus the tier, dead-letter, lineage and
+    # metrics writes; building the driver-side frames adds no job
+    *_, first_jobs = appended
+    assert len(first_jobs) == 17, first_jobs
+
+
 def test_refresh_rewrites_each_tier_table_once(spark, tmp_path):
-    pipe, _ = _two_batches(spark, tmp_path)
+    pipe, _, _ = _two_batches(spark, tmp_path)
+    assert all(len(t.snapshot().all_files) > 32 for t in pipe.tables.values())
     before = _versions(pipe)
-    inv = pipe.refresh_invalidated(spark)
+    inv = {}
+    jobs = _job_descriptions(spark, lambda: inv.update(pipe.refresh_invalidated(spark)))
+    # each tier's read hands Spark more manifest-listed files than the
+    # default parallel-listing threshold (32): still no listing job
+    assert not [d for d in jobs if d.startswith("Listing")], jobs
+    assert len(jobs) == 9, jobs
     assert sorted(inv) == sorted(TIER_TABLES)
     after = _versions(pipe)
     for name, v in after.items():
@@ -100,7 +131,7 @@ def test_refresh_rewrites_each_tier_table_once(spark, tmp_path):
 
 
 def test_dimension_read_prunes_dim_partition(spark, appended):
-    pipe, _ = appended
+    pipe, _, _ = appended
     files = pipe.tables["rollup_1h"].snapshot().all_files
     n_global = sum(partition_values(f)["dim"] == "global" for f in files)
     n_read = _scan_num_files(pipe.read_rollup(spark, "global", "1h"))
