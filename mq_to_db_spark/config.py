@@ -7,7 +7,7 @@ no inference).  Plain dataclass; no dynamic config discovery.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 #: Retention tiers, ordered fine → coarse.  Each tier is (name, spark
@@ -36,24 +36,16 @@ VALID_ROLES = ("user", "assistant", "system", "tool")
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """Tuning knobs for the rollup engine.
+    """Settings of the rollup pipeline.
 
     ``conv_buckets`` is the hash-bucket count for conv_id (the Iceberg
-    ``bucket(conv_id)`` partition-spec analogue); ``salt_buckets`` is the
-    extra salting factor applied before the shuffle-heavy rollup stage to
-    defuse hot-conversation skew (north_rule).  ``shuffle_partitions``
-    should match cluster cores in local mode.
+    ``bucket(conv_id)`` partition-spec analogue); ``tiers`` are the
+    rollup tiers the pipeline materializes (names from :data:`TIERS`).
+    Spark's own settings belong to ``session.get_spark``.
     """
 
     conv_buckets: int = 32
-    salt_buckets: int = 8
-    shuffle_partitions: int = 32
     tiers: tuple[str, ...] = ("1m", "1h", "1d")
-    # Gap-fill policy: "zero" fills count-like columns with 0 and leaves
-    # stats null; "null" leaves everything null on generated grid rows.
-    gapfill_policy: str = "zero"
-    # Codec chunking: one compressed chunk per (series, chunk_interval).
-    chunk_interval: str = "1 day"
     # Per-operation wall-clock bound on every sink commit (reference
     # `maxQueryTimeOut`, config.go / pgsql.go:86-96): None = unbounded.
     # On deadline the commit's Spark job group is cancelled and the
@@ -61,7 +53,6 @@ class EngineConfig:
     # last, so the broker-redelivery replay path takes over, exactly as
     # a statement timeout surfaces in the reference.
     max_query_timeout_sec: float | None = None
-    extra_spark_conf: dict = field(default_factory=dict)
 
 
 def amqp_uri(address: str, port: int, username: str = "", password: str = "") -> str:

@@ -104,31 +104,6 @@ def hashed_shingle_sets(
     )
 
 
-def _md5_hash64(c: Column, seed: int) -> Column:
-    """Deterministic 60-bit integer hash reproducible in DuckDB:
-    first 15 hex chars of md5(seed || value)."""
-    return F.conv(F.substring(F.md5(F.concat(F.lit(f"{seed}#"), c)), 1, 15), 16, 10).cast("long")
-
-
-def minhash_signature(shingle_col: Column, n_hashes: int = 32) -> Column:
-    """array<long> of per-seed min-hashes over the shingle set.
-
-    Seed-mixed ``xxhash64`` (JVM, ~ns/hash) — minhash needs only
-    self-consistency, not cross-engine reproducibility, so the md5 path
-    (kept for oracle-checked operators) is not used here."""
-    name = shingle_col._jc.toString()
-    # single fold expression (not n_hashes separate transforms): one pass
-    # over the shingle array updating a 64-wide min accumulator — keeps
-    # the generated code small (32 separate array_min(transform(...))
-    # trees cost ~25 s of Janino compilation on first use).
-    return F.expr(
-        f"aggregate({name}, "
-        f"array_repeat(9223372036854775807L, {n_hashes}), "
-        f"(acc, s) -> zip_with(acc, transform(sequence(0, {n_hashes - 1}), "
-        f"i -> xxhash64(i, s)), (a, b) -> least(a, b)))"
-    )
-
-
 import functools
 
 
@@ -136,10 +111,10 @@ import functools
 def minhash_signature_vectorized(n_hashes: int = 32):
     """Arrow-vectorized minhash over pre-hashed shingles — the scale path.
 
-    The pure-expression fold (:func:`minhash_signature`) is evaluated
-    interpreted (higher-order functions sit outside whole-stage codegen)
-    and allocates a seq+zip_with array pair *per shingle* — measured ~5×
-    slower than this split: the JVM hashes each shingle string once
+    A pure-expression fold (``aggregate`` of ``zip_with`` over the
+    shingle array) is evaluated interpreted (higher-order functions sit
+    outside whole-stage codegen) and allocates a seq+zip_with array pair
+    *per shingle* — measured ~5× slower than this split: the JVM hashes each shingle string once
     (``transform(shingles, s -> xxhash64(s))``), then this pandas UDF
     derives all ``n_hashes`` minima with 32 affine mixes over the
     concatenated hash array + ``np.minimum.reduceat`` per row segment —

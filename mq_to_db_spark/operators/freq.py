@@ -12,9 +12,8 @@ retention tiers exactly like count/sum (the C8 mergeability invariant),
 where exact per-item counts of high-cardinality keys (user ids, tools)
 would shuffle unboundedly many rows.
 
-Hashing: the 60-bit md5-derived integer hash the oracle-checked dedup
-operators already use (dedup.py:107 `_md5_hash64`) — reproducible
-verbatim in DuckDB (`('0x' || substring(md5(...), 1, 15))::BIGINT`), so
+Hashing: a 60-bit md5-derived integer hash, the first 15 hex digits of
+``md5(seed || value)`` — reproducible verbatim in DuckDB (`('0x' || substring(md5(...), 1, 15))::BIGINT`), so
 the contract oracle replays the FULL sketch construction, not an
 accuracy proxy.
 

@@ -39,8 +39,8 @@ from mq_to_db_spark.operators.timeweight import _epoch_micros
 
 
 def _md5_low_bits(c: Column, bits: int) -> Column:
-    # engine-wide md5 coin (dedup.py:_md5_hash64 convention): top 60
-    # bits of md5 hex are the hash; keep the low `bits` of that
+    # engine-wide md5 coin (the first 15 hex digits of md5, as in
+    # freq.py's sketch hash): keep the low `bits` of that
     h = F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
     return h.bitwiseAND(F.lit((1 << bits) - 1))
 

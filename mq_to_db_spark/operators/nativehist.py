@@ -65,18 +65,6 @@ def exp_bucket_idx(value: Column, schema: int = 0) -> Column:
     return F.when(value > 0, raw)
 
 
-def _entries_map(key_col: str, cnt_col: str) -> Column:
-    """Deterministic map from grouped (idx, count) rows: sort entries by
-    key so replays hash identically (same trick as freq.py)."""
-    return F.map_from_entries(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(key_col).alias("key"), F.col(cnt_col).alias("value"))
-            )
-        )
-    )
-
-
 def exp_histogram(
     df: DataFrame,
     tier: str,

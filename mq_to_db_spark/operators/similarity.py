@@ -8,7 +8,8 @@ only matching buckets, with multi-probe on query-side sign flips to
 recover recall; the corpus can be materialized as a table partitioned by
 ``sig`` so probes become partition-pruned scans
 (:func:`build_lsh_index` / :func:`ann_lsh_topk_indexed`).  An IVF-style
-variant partitions by nearest coarse centroid.
+variant (:func:`ivf_topk`) probes the lists of the nearest coarse
+centroids.
 
 Hyperplane weights and IVF centroid selection are deterministic,
 engine-independent constants (seeded numpy literals / md5-derived
@@ -312,8 +313,7 @@ def ivf_assign(
     """Assign each vector to its nearest (max-cosine) centroid — the
     inverted-list id.  Centroids are literal expressions (broadcast-free,
     identical on every executor); at scale the assigned table is
-    partitioned by ``list_id`` so probes prune partitions
-    (:func:`build_ivf_index`).
+    partitioned by ``list_id`` so probes prune partitions.
 
     Two physical strategies, identical assignments:
 
@@ -455,51 +455,6 @@ def ivf_topk(
     )
 
 
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Materialize the IVF-assigned corpus partitioned by ``list_id`` —
-    probes then read only the matching list directories.  Returns the
-    centroid list (persist it alongside the index in production)."""
-    centroids = ivf_centroids(df, n_centroids, id_col, vec_col)
-    (
-        ivf_assign(df.select(id_col, vec_col), centroids, vec_col)
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(path)
-    )
-    return centroids
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a :func:`build_ivf_index` table with partition pruning on
-    ``list_id``."""
-    probes = ivf_probe_lists(query_vec, centroids, nprobe)
-    cand = spark.read.parquet(path).filter(F.col("list_id").isin(probes))
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.select(
-            F.col(id_col),
-            cosine_sim_cols(F.col(vec_col).cast("array<double>"), qcol).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def knn_join_lsh(
     left: DataFrame,
     right: DataFrame,
@@ -597,53 +552,17 @@ def knn_join_lsh(
     )
 
 
-def band_signatures_vectorized(bands_planes: list[np.ndarray]):
-    """Arrow-vectorized multi-band hyperplane signatures: one UDF call
-    computes every band's signature for the whole batch (``array<float|
-    double>`` vec → ``array<long>``, one element per band).
-
-    BIT-EXACT with :func:`hyperplane_signature`'s fold (and therefore
-    with the DuckDB oracle's literal sums): each dot product is a strict
-    sequential left-associated accumulator sum over ``dim`` (one O(n)
-    running column, ``((0 + t₀) + t₁) + …`` — IEEE-identical to the
-    expression fold's ``0.0`` seed), unlike ``np.dot``/``sum`` whose
-    BLAS/pairwise association could flip a sign at the decision
-    boundary.  Memory per (band, plane) is O(n) — the earlier
-    full-cumsum variant allocated an (n × dim) temporary per plane.
-
-    Callers must pre-filter null / wrong-dimension vectors (``vec
-    IS NOT NULL AND size(vec) == dim``); a ragged batch would otherwise
-    fail the ``np.array`` stack."""
-    from pyspark.sql import types as T
-
-    P = np.stack(bands_planes)  # (B, n_planes, dim)
-    B, n_planes, dim = P.shape
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sigs(vecs: pd.Series) -> pd.Series:
-        n = len(vecs)
-        if not n:
-            return pd.Series([], dtype=object)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        Vt = np.ascontiguousarray(V.T)  # (dim, n): unit-stride per-d rows
-        out = np.zeros((n, B), dtype=np.int64)
-        for b in range(B):
-            sig = np.zeros(n, dtype=np.int64)
-            for p in range(n_planes):
-                w = P[b, p]
-                acc = np.zeros(n, dtype=np.float64)
-                for d in range(dim):
-                    acc += Vt[d] * w[d]
-                sig = sig * 2 + (acc >= 0).astype(np.int64)
-            out[:, b] = sig
-        return pd.Series(list(out))
-
-    return _sigs
-
-
 def band_signatures_with_norm(bands_planes: list[np.ndarray]):
-    """:func:`band_signatures_vectorized` fused with the L2 norm in the
-    SAME Arrow pass: ``vec → struct<sigs: array<long>, norm: double>``.
+    """Arrow-vectorized multi-band hyperplane signatures fused with the
+    L2 norm in the SAME Arrow pass: ``vec → struct<sigs: array<long>,
+    norm: double>``, one signature element per band.
+
+    Each signature is BIT-EXACT with :func:`hyperplane_signature`'s fold
+    (and therefore with the DuckDB oracle's literal sums): each dot
+    product is a strict sequential left-associated accumulator sum over
+    ``dim`` (``((0 + t₀) + t₁) + …``), unlike ``np.dot``/``sum`` whose
+    BLAS/pairwise association could flip a sign at the decision
+    boundary.
 
     One batch read of the vector data replaces two (the signature UDF
     plus a separate interpreted ``l2_norm`` fold over every row — the
@@ -655,9 +574,9 @@ def band_signatures_with_norm(bands_planes: list[np.ndarray]):
     strict sequential left-associated accumulator over ``dim``
     (``((0 + t₀) + t₁) + …``), never ``np.linalg.norm``/``np.sum``
     whose pairwise association differs; ``np.sqrt`` is the same IEEE
-    operation as ``F.sqrt``.  Same ragged-input precondition as the
-    sigs-only variant: callers pre-filter null / wrong-dimension
-    vectors."""
+    operation as ``F.sqrt``.  Callers must pre-filter null /
+    wrong-dimension vectors (``vec IS NOT NULL AND size(vec) == dim``);
+    a ragged batch would otherwise fail the ``np.array`` stack."""
     from pyspark.sql import types as T
 
     P = np.stack(bands_planes)  # (B, n_planes, dim)

@@ -2,34 +2,39 @@
 
 One batch run =
     read input → validate/side-output rejects → per-unit rollup cascade
-    (1m→1h→1d; global / per-conv / per-tool dimensions) → one partition-
-    overwrite commit per tier table → dead-letter append → lineage
+    (1m→1h→1d; global / per-conv / per-tool dimensions) → one commit of
+    every tier to the rollup table → dead-letter append → lineage
     append → checkpoint markers.
 
 Delivery semantics (the reference's ack/reject loop re-expressed, SURVEY.md
 §1.3): the unit of work is a logical partition ``(conv_bucket, date)`` —
 ``conv_bucket = pmod(xxhash64(conv_id), B)`` is the Iceberg
 ``bucket(conv_id)`` analogue, ``date`` the ``days(ts)`` range partition.
-A unit's checkpoint marker is written only **after** all tier commits for
-the batch succeed (ack-after-durable-store, messages.go:131-148).  A rerun
-after a crash reprocesses exactly the unmarked units; because tier writes
+A unit's checkpoint marker is written only **after** every commit of the
+batch succeeds (ack-after-durable-store, messages.go:131-148).  A rerun
+after a crash reprocesses exactly the unmarked units; because rollup writes
 are partition overwrites keyed by the same unit, replays are idempotent —
 at-least-once reprocessing + idempotent sink = effectively-once, the same
-contract the reference gets from manual ack + DLX.
+contract the reference gets from manual ack + DLX.  One delivery is one
+rollup commit, so a crash can never leave it in some tiers and not others.
 
 Scale notes (10^12 turns):
-  * every tier has ONE table (``rollup_1m`` / ``rollup_1h`` /
-    ``rollup_1d``) holding all dimensions' series, *partitioned by
-    (dim, date, conv_bucket)*, and stores **partials within the unit**;
-    dimensions whose grain crosses units (global, per-tool) are
-    finalized by a cheap re-aggregation at read time over tier-sized
-    (not raw-sized) data — the classic partial/final split, so raw data
-    is scanned exactly once per batch and each tier commits once;
-  * a dimension read filters on the ``dim`` partition, so pruning keeps
-    it on its own dimension's files;
-  * the rollup shuffle is preceded by an explicit repartition on
-    (conv_bucket, date) so all dimensions of a unit aggregate from a
-    co-located partition, and AQE handles residual skew;
+  * ONE table, ``rollup_tiers``, holds every tier's and every dimension's
+    series, *partitioned by (tier, dim, date, conv_bucket)*, and stores
+    **partials within the unit**; dimensions whose grain crosses units
+    (global, per-tool) are finalized by a cheap re-aggregation at read
+    time over tier-sized (not raw-sized) data — the classic partial/final
+    split, so raw data is scanned exactly once per batch and the batch
+    commits once;
+  * the partition order follows the selectivity of the table's users:
+    every read, refresh and retention pass selects whole tiers, so
+    ``tier`` is outermost; a read then keeps one ``dim``; refresh,
+    retention and date-bounded reads cut on ``date``; ``conv_bucket``
+    completes the ingest unit that a partition overwrite replaces.
+    Pruning on the hive values keeps each of them on its own files;
+  * the rollup's one shuffle is keyed by the full group, (conv_bucket,
+    date) included, after map-side partial aggregation, and AQE handles
+    residual skew;
   * filters on committed units are pushed into the scan
     (conv_bucket/date derive from input columns via deterministic
     expressions, so Catalyst prunes at the parquet level when the input
@@ -56,6 +61,7 @@ import json
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,10 +88,8 @@ DIMENSIONS: dict[str, list[str]] = {
     "tool": ["tool"],
 }
 
-
-def tier_table(tier: str) -> str:
-    """Name of a tier's table; every dimension's series share it."""
-    return f"rollup_{tier}"
+#: the one rollup table: every tier's and every dimension's series
+ROLLUP_TABLE = "rollup_tiers"
 
 
 LINEAGE_SCHEMA = T.StructType(
@@ -173,13 +177,17 @@ class RollupPipeline:
             table_factory = lambda name, part=None: TableIO(  # noqa: E731
                 f"{work_dir}/{name}", part
             )
-        part = ["dim", "date", "conv_bucket"]
-        self.tables: dict[str, TableIO] = {
-            tier_table(t): table_factory(tier_table(t), part) for t in self.cfg.tiers
-        }
+        self.rollup = table_factory(ROLLUP_TABLE, ["tier", "dim", "date", "conv_bucket"])
         self.dead_letter = table_factory("dead_letter", None)
         self.lineage = table_factory("lineage", None)
         self.metrics = table_factory("job_metrics", None)
+        #: every table the pipeline commits to, by name
+        self.tables: dict[str, TableIO] = {
+            ROLLUP_TABLE: self.rollup,
+            "dead_letter": self.dead_letter,
+            "lineage": self.lineage,
+            "job_metrics": self.metrics,
+        }
 
     # -- checkpoint markers ---------------------------------------------------
     #
@@ -225,23 +233,39 @@ class RollupPipeline:
             json.dumps({"batch_id": batch_id, "committed_at": time.time(), **stats}),
         )
 
-    # -- per-operation bound ---------------------------------------------------
+    # -- one sink commit ------------------------------------------------------
 
-    def _commit(self, spark: SparkSession, fn, what: str):
+    def _commit(self, spark: SparkSession, table: str, fn, fail_after: str | None):
         """Run one sink commit under the configured wall-clock bound
         (``cfg.max_query_timeout_sec`` — the reference's `maxQueryTimeOut`
         around every ExecContext, pgsql.go:86-96).  Unbounded when None
         (the default).  On deadline the commit's job group is cancelled
         and QueryTimeoutError propagates out of ``run`` BEFORE any ack
         marker is written, so redelivery replays the batch — the same
-        at-least-once story as a reference statement timeout."""
-        if self.cfg.max_query_timeout_sec is None:
-            return fn()
-        from .bounds import bounded_action
+        at-least-once story as a reference statement timeout.
 
-        return bounded_action(
-            spark, fn, self.cfg.max_query_timeout_sec, description=what
-        )
+        ``fail_after`` is ``run``'s fault-injection hook: when it names
+        ``table``, raise right after that table's commit (the
+        crash-between-commit-and-ack window)."""
+        if self.cfg.max_query_timeout_sec is None:
+            snap = fn()
+        else:
+            from .bounds import bounded_action
+
+            snap = bounded_action(
+                spark, fn, self.cfg.max_query_timeout_sec, description=f"commit:{table}"
+            )
+        if fail_after == table:
+            raise RuntimeError(f"injected failure after commit of {table}")
+        return snap
+
+    def _batch_snapshot(self, tbl: TableIO, batch_id: str):
+        """The newest snapshot of ``tbl`` that committed ``batch_id``."""
+        for v in range(tbl.current_version(), 0, -1):
+            snap = tbl.snapshot(v)
+            if snap.summary.get("batch_id") == batch_id:
+                return snap
+        raise KeyError(batch_id)
 
     # -- the batch job --------------------------------------------------------
 
@@ -254,17 +278,18 @@ class RollupPipeline:
         mode: str = "overwrite",
     ) -> BatchReport:
         """Process one delivery batch.  ``fail_after_commit_of`` is a test
-        hook: raise after committing the named tier table (simulates the
-        crash-between-commit-and-ack window the resume test needs).
+        hook: raise after committing the named table (one of
+        ``self.tables``; simulates the crash-between-commit-and-ack
+        window the resume tests need).
 
-        ``mode="overwrite"`` (batch): units arrive whole; tier writes are
-        partition overwrites, acks are global per unit.
+        ``mode="overwrite"`` (batch): units arrive whole; the rollup write
+        is a partition overwrite, acks are global per unit.
         ``mode="append"`` (streaming micro-batches): a unit's turns may
-        span batches, so tier writes APPEND per-batch partials (read-side
-        merge keeps results exact) and acks are scoped to this batch_id —
-        a recovery replay of the same micro-batch is a no-op EVEN when
-        the crash landed between tier commits and the markers: every
-        append consults the table's snapshot batch ledger
+        span batches, so the rollup write APPENDS per-batch partials
+        (read-side merge keeps results exact) and acks are scoped to this
+        batch_id — a recovery replay of the same micro-batch is a no-op
+        EVEN when the crash landed between a commit and the markers:
+        every append consults the table's snapshot batch ledger
         (``TableIO.has_batch``) and skips tables this batch already
         reached, so no partial can be double-appended.  Later batches
         for the same unit (new batch_id) append normally."""
@@ -275,6 +300,7 @@ class RollupPipeline:
         scope = batch_id if mode == "append" else None
         cfg = self.cfg
         report = BatchReport(batch_id=batch_id)
+        summary = {"batch_id": batch_id}
 
         tagged = unit_cols(with_reject_reason(input_df), cfg.conv_buckets)
 
@@ -337,49 +363,38 @@ class RollupPipeline:
         # Single-pass rollup: raw is scanned ONCE for every dimension
         # (grouping-sets agg, rollup_multidim) — one shuffle of partial
         # aggregates keyed by the full group, so hot (bucket, date) units
-        # are already defused by map-side partial aggregation.  Each tier
-        # is persisted (tier-sized, ≪ raw), committed once with every
-        # dimension's rows, and the next tier cascades from it.
+        # are already defused by map-side partial aggregation.  Each
+        # coarser tier cascades from the finer one in the same plan, and
+        # all tiers, tagged, go out in one commit.
         tier_frames = rollup_multidim(
             with_text_stats(valid),
             DIMENSIONS,
             tiers=tuple(cfg.tiers),
             extra_group_cols=["conv_bucket", "date"],
         )
-
-        points = {}
-        persisted = []
-        try:
-            for tier in cfg.tiers:
-                cur = tier_frames[tier].persist()
-                persisted.append(cur)
-                # the tool dimension tracks tool *usage*: non-tool turns
-                # (tool IS NULL) are not a series
-                out_df = cur.filter((F.col("dim") != "tool") | F.col("tool").isNotNull())
-                name = tier_table(tier)
-                tbl = self.tables[name]
-                if mode == "append":
-                    # idempotent per (table, batch): a crash-window replay
-                    # of this batch_id must not re-append a tier's partials
-                    # (the read-side sum would double-count) — skip tables
-                    # whose snapshot ledger already carries this batch_id.
-                    if tbl.has_batch(batch_id):
-                        points[name] = 0
-                        continue
-                    write = tbl.append
-                else:
-                    write = tbl.overwrite_partitions
-                snap = self._commit(
-                    spark,
-                    lambda: write(out_df, summary={"batch_id": batch_id}),
-                    f"{mode}:{name}",
-                )
-                points[name] = len(snap.added_files)  # files committed
-                if fail_after_commit_of == name:
-                    raise RuntimeError(f"injected failure after commit of {name}")
-        finally:
-            for p in persisted:
-                p.unpersist()
+        rollup_df = reduce(
+            DataFrame.unionByName,
+            (tier_frames[t].withColumn("tier", F.lit(t)) for t in cfg.tiers),
+        )
+        # the tool dimension tracks tool *usage*: non-tool turns
+        # (tool IS NULL) are not a series
+        rollup_df = rollup_df.filter((F.col("dim") != "tool") | F.col("tool").isNotNull())
+        if mode == "append" and self.rollup.has_batch(batch_id):
+            # a crash-window replay of this batch_id: its partials are
+            # already in (a second append would double-count in the
+            # read-side sum)
+            snap = self._batch_snapshot(self.rollup, batch_id)
+        else:
+            write = self.rollup.append if mode == "append" else self.rollup.overwrite_partitions
+            snap = self._commit(
+                spark,
+                ROLLUP_TABLE,
+                lambda: write(rollup_df, summary=summary),
+                fail_after_commit_of,
+            )
+        points = dict.fromkeys(cfg.tiers, 0)  # files committed per tier
+        for f in snap.added_files:
+            points[partition_values(f)["tier"]] += 1
 
         # dead letter (append — replays may duplicate rejects for units that
         # never reached the marker; dedup at read on (conv_id, turn_idx,
@@ -392,11 +407,11 @@ class RollupPipeline:
         if n_rej and not self.dead_letter.has_batch(batch_id):
             self._commit(
                 spark,
+                "dead_letter",
                 lambda: self.dead_letter.append(
-                    rejected.withColumn("batch_id", F.lit(batch_id)),
-                    summary={"batch_id": batch_id},
+                    rejected.withColumn("batch_id", F.lit(batch_id)), summary=summary
                 ),
-                "append:dead_letter",
+                fail_after_commit_of,
             )
 
         # lineage + markers — ack happens only now, after every commit.
@@ -419,11 +434,11 @@ class RollupPipeline:
         if not self.lineage.has_batch(batch_id):
             self._commit(
                 spark,
+                "lineage",
                 lambda: self.lineage.append(
-                    local_frame(spark, lineage_rows, LINEAGE_SCHEMA),
-                    summary={"batch_id": batch_id},
+                    local_frame(spark, lineage_rows, LINEAGE_SCHEMA), summary=summary
                 ),
-                "append:lineage",
+                fail_after_commit_of,
             )
         # counter semantics mirror the reference's storer totals: every
         # consumed message counts, including unitless rejects (which have
@@ -454,7 +469,7 @@ class RollupPipeline:
                         report.n_in,
                         report.n_ok,
                         report.n_rejected,
-                        {k: int(v) for k, v in points.items()},
+                        points,
                         float(report.seconds),
                         __version__,
                         committed_ts,
@@ -464,10 +479,9 @@ class RollupPipeline:
             )
             self._commit(
                 spark,
-                lambda: self.metrics.append(
-                    metrics_df, summary={"batch_id": batch_id}
-                ),
-                "append:job_metrics",
+                "job_metrics",
+                lambda: self.metrics.append(metrics_df, summary=summary),
+                fail_after_commit_of,
             )
         for b, d in sorted(todo):
             n_in, n_r = units[(b, d)]
@@ -489,19 +503,20 @@ class RollupPipeline:
     ) -> DataFrame:
         """Final (cross-unit merged) rollup for a dimension/tier.
 
-        The tier table holds every dimension's per-unit partials; the
-        read keeps only this ``dim`` partition (pruned at file-listing
-        time) and the final merge groups by (bucket_start, keys) over
-        tier-sized data.  For dim="conv" the
+        The rollup table holds every tier's and dimension's per-unit
+        partials; the read keeps only this ``tier`` and ``dim`` partition
+        (pruned at file-listing time) and the final merge groups by
+        (bucket_start, keys) over tier-sized data.  For dim="conv" the
         merge is a near-no-op (a conversation lives in one conv_bucket,
         but a 1h/1d bucket can span two dates only at day boundaries —
         still merged here for exactness).
 
-        After :meth:`finalize` the current snapshot holds exactly one row
-        per (bucket, series) — the read is then a plain scan+project (no
-        Aggregate node), which is the whole point: without finalization a
-        long-running streaming append accumulates one partial row per
-        micro-batch and every dashboard read re-merges all of them.
+        After :meth:`finalize` of this tier the current snapshot holds
+        exactly one row per (bucket, series) — the read is then a plain
+        scan+project (no Aggregate node), which is the whole point:
+        without finalization a long-running streaming append accumulates
+        one partial row per micro-batch and every dashboard read re-merges
+        all of them.
 
         ``start_date`` / ``end_date`` (inclusive) cut on the ``date``
         partition column BEFORE the merge — a dashboard's "last 7 days"
@@ -509,19 +524,19 @@ class RollupPipeline:
         filter lands on the hive partition value, so Catalyst prunes at
         file-listing time)."""
         keys = DIMENSIONS[dim]
-        tbl = self.tables[tier_table(tier)]
-        df = dim_slice(tbl.read(spark), DIMENSIONS, dim)
+        tbl = self.rollup
+        df = dim_slice(tbl.read(spark).filter(F.col("tier") == tier), DIMENSIONS, dim)
         if start_date is not None:
             df = df.filter(F.col("date") >= F.lit(str(start_date)).cast("date"))
         if end_date is not None:
             df = df.filter(F.col("date") <= F.lit(str(end_date)).cast("date"))
         snap = tbl.snapshot()
-        if snap is not None and (snap.summary or {}).get("finalized"):
+        if snap is not None and tier in (snap.summary or {}).get("finalized", ()):
             final = df.select("bucket_start", *keys, *AGG_COL_NAMES)
         else:
             final = df.groupBy("bucket_start", *keys).agg(*_merge_aggs())
         if gap_filled:
-            final = gapfill(final, tier, keys, policy=self.cfg.gapfill_policy)
+            final = gapfill(final, tier, keys)
         return final
 
     def finalize(
@@ -534,15 +549,16 @@ class RollupPipeline:
         """Collapse accumulated per-batch partials into ONE finalized row
         per (bucket, series) — the MERGE-INTO analogue for append /
         streaming mode (VERDICT r02 next-round #2).  Atomic + idempotent:
-        each table is rewritten in a single ``overwrite_all`` snapshot
-        whose summary carries ``finalized`` — :meth:`read_rollup` then
-        skips the merge aggregate entirely; a later ``append`` snapshot
-        (new micro-batch) clears the flag and the read-side merge
-        resumes, so finalize can run on any cadence (e.g. hourly) while
-        the stream keeps flowing.
+        the listed tiers (default: all) are rewritten in a single
+        ``overwrite_where`` snapshot whose ``finalized`` summary lists
+        them — :meth:`read_rollup` of a listed tier then skips the merge
+        aggregate entirely; a later ``append`` snapshot (new micro-batch)
+        lists nothing and the read-side merge resumes, so finalize can run
+        on any cadence (e.g. hourly) while the stream keeps flowing.
+        Rows of unlisted tiers are left untouched.
 
-        Rows merge per (bucket_start, dim, series keys); partition columns
-        are re-derived from the merged series: ``date =
+        Rows merge per (tier, bucket_start, dim, series keys); partition
+        columns are re-derived from the merged series: ``date =
         to_date(bucket_start)`` (exact — tier truncation never crosses a
         date) and ``conv_bucket`` from ``conv_id`` for the conv dimension
         (identical to ``unit_cols``); cross-bucket series (global / tool)
@@ -554,127 +570,114 @@ class RollupPipeline:
         at 100 TB raw a 1m tier is ~10⁻³ of it — and ``dates`` bounds it
         further: ``finalize(dates=[...])`` is the **incremental** variant
         that merges and atomically replaces ONLY the listed date
-        partitions (``TableIO.overwrite_where`` — one snapshot, delete +
-        add together; date-filtered reads are partition-pruned scans).
+        partitions of the listed tiers (one snapshot, delete + add
+        together; date-filtered reads are partition-pruned scans).
         A steady-state deployment finalizes yesterday's date once the
         stream's watermark passes midnight and never rewrites it again.
-        Incremental runs don't set the ``finalized`` flag (older dates
-        may still hold multiple partials), so reads keep the merging
-        path — just over collapsed row counts.
+        Incremental runs record ``finalize_dates`` instead of
+        ``finalized`` (older dates may still hold multiple partials), so
+        reads keep the merging path — just over collapsed row counts.
+
+        Returns the commit per table (``{}`` when the table is empty).
         """
-        if dates is not None:
-            dvals = [
-                d if isinstance(d, dt.date) else dt.date.fromisoformat(str(d))
-                for d in dates
-            ]
-            dset = {d.isoformat() for d in dvals}
+        tiers = list(tiers or self.cfg.tiers)
+        tbl = self.rollup
+        if not tbl.exists():
+            return {}
+        src = tbl.read(spark).filter(F.col("tier").isin(tiers))
+        if dates is None:
+            summary = {"finalized": tiers}
+        else:
+            dvals = sorted(
+                {d if isinstance(d, dt.date) else dt.date.fromisoformat(str(d)) for d in dates}
+            )
+            dset = [d.isoformat() for d in dvals]
+            src = src.filter(F.col("date").isin(dvals))
+            summary = {"finalize_dates": {t: dset for t in tiers}}
         series_keys = list(dict.fromkeys(k for ks in DIMENSIONS.values() for k in ks))
         conv_bucket = conv_bucket_col(self.cfg.conv_buckets)
-        out: dict[str, object] = {}
-        for tier in tiers or self.cfg.tiers:
-            name = tier_table(tier)
-            tbl = self.tables[name]
-            if not tbl.exists():
-                continue
-            src = tbl.read(spark)
-            if dates is not None:
-                src = src.filter(F.col("date").isin(dvals))
-            merged = (
-                src.groupBy("bucket_start", "dim", *series_keys)
-                .agg(*_merge_aggs())
-                .withColumn("date", F.to_date("bucket_start"))
-                .withColumn(
-                    "conv_bucket",
-                    F.when(F.col("dim") == "conv", conv_bucket).otherwise(F.lit(0)),
-                )
+        merged = (
+            src.groupBy("tier", "bucket_start", "dim", *series_keys)
+            .agg(*_merge_aggs())
+            .withColumn("date", F.to_date("bucket_start"))
+            .withColumn(
+                "conv_bucket",
+                F.when(F.col("dim") == "conv", conv_bucket).otherwise(F.lit(0)),
             )
-            if dates is None:
-                out[name] = tbl.overwrite_all(merged, summary={"finalized": True})
-            else:
-                out[name] = tbl.overwrite_where(
-                    merged,
-                    lambda pv, ds=dset: pv.get("date", "") in ds,
-                    summary={"finalize_dates": sorted(dset)},
-                )
-            if vacuum:
-                # reclaim the superseded partial files (two-phase, like
-                # Iceberg expire_snapshots: readers pinned to older
-                # snapshots stay valid until this runs)
-                tbl.vacuum()
-        return out
+        )
+        snap = tbl.overwrite_where(
+            merged,
+            lambda pv: pv["tier"] in tiers and (dates is None or pv["date"] in dset),
+            summary=summary,
+        )
+        if vacuum:
+            # reclaim the superseded partial files (two-phase, like
+            # Iceberg expire_snapshots: readers pinned to older
+            # snapshots stay valid until this runs)
+            tbl.vacuum()
+        return {ROLLUP_TABLE: snap}
 
     def invalidated_dates(self, tiers: list[str] | None = None) -> dict[str, list[str]]:
-        """Per tier table: the ``date`` partitions whose logical content
-        changed since that table's last finalize — the continuous-aggregate
+        """Per tier: the ``date`` partitions whose logical content changed
+        since that tier's last finalize — the continuous-aggregate
         *invalidation log*, derived purely from the snapshot history
         (Iceberg-style incremental scan) with no side table to maintain.
 
-        Walk the snapshot log forward from the last FULL finalize
-        (``finalized`` summary — the global watermark; v0 if none):
-        data-changing snapshots (appends / partition overwrites) mark
-        every ``date=`` partition they add files under as dirty; a later
-        *incremental* finalize (``finalize_dates`` summary) clears
-        exactly the dates it merged; compaction rewrites
-        (``compaction`` summary) move bytes, not rows, and mark nothing.
-        Linear snapshot history makes this exact: a date is returned iff
-        some row-changing commit touched it after the last finalize that
-        covered it.
+        Each tier's watermark is its last FULL finalize (a snapshot whose
+        ``finalized`` summary lists it; v0 if none).  Walking the log
+        forward from the oldest watermark: data-changing snapshots
+        (appends / partition overwrites) mark every ``date=`` partition
+        they add files under as dirty for the file's ``tier=``; a full
+        finalize clears its tiers; an *incremental* finalize
+        (``finalize_dates`` summary) clears exactly the (tier, date)
+        pairs it merged; compaction rewrites (``compaction`` summary)
+        move bytes, not rows, and mark nothing.  Linear snapshot history
+        makes this exact: a date is returned iff some row-changing commit
+        touched it after the last finalize that covered it.
 
-        A never-finalized table reports every date it holds — a cagg's
+        A never-finalized tier reports every date it holds — a cagg's
         first refresh materializes everything, which is the TimescaleDB
         semantic too.
         """
-        out: dict[str, list[str]] = {}
-        for tier in tiers or self.cfg.tiers:
-            name = tier_table(tier)
-            tbl = self.tables[name]
-            if not tbl.exists():
+        tbl = self.rollup
+        dirty: dict[str, set[str]] = {t: set() for t in tiers or self.cfg.tiers}
+        log, open_tiers = [], set(dirty)
+        for v in range(tbl.current_version(), 0, -1):
+            if not open_tiers:
+                break
+            log.append(s := tbl.snapshot(v))
+            open_tiers.difference_update((s.summary or {}).get("finalized", ()))
+        for s in reversed(log):
+            sm = s.summary or {}
+            for t in sm.get("finalized", ()):
+                dirty.get(t, set()).clear()
+            for t, ds in sm.get("finalize_dates", {}).items():
+                dirty.get(t, set()).difference_update(ds)
+            if sm.keys() & {"finalized", "finalize_dates", "compaction"}:
                 continue
-            cur = tbl.current_version()
-            watermark = 0
-            for v in range(cur, 0, -1):
-                s = tbl.snapshot(v)
-                if s and "finalized" in (s.summary or {}):
-                    watermark = v
-                    break
-            dirty: set[str] = set()
-            for v in range(watermark + 1, cur + 1):
-                s = tbl.snapshot(v)
-                if s is None:
-                    continue
-                sm = s.summary or {}
-                if "finalize_dates" in sm:
-                    dirty.difference_update(sm["finalize_dates"])
-                    continue
-                if "compaction" in sm or "retention" in sm:
-                    continue
-                for rel in s.added_files:
-                    d = partition_values(rel).get("date")
-                    if d:
-                        dirty.add(d)
-            if dirty:
-                out[name] = sorted(dirty)
-        return out
+            for pv in map(partition_values, s.added_files):
+                if pv["tier"] in dirty:
+                    dirty[pv["tier"]].add(pv["date"])
+        return {t: sorted(ds) for t, ds in dirty.items() if ds}
 
     def refresh_invalidated(
         self, spark: SparkSession, vacuum: bool = False
     ) -> dict[str, list[str]]:
         """Refresh the continuous aggregates: incrementally re-finalize
-        ONLY the date partitions invalidated since each table's last
-        finalize (:meth:`invalidated_dates`), one atomic
-        ``overwrite_where`` snapshot per table.  The finalize commit
-        itself advances the invalidation watermark, so the operation is
-        idempotent and crash-safe with no separate log to ack: killed
-        between two tables, a rerun re-merges only the tables that never
-        committed; run twice, the second pass sees no dirty dates and is
-        a no-op.  This is the scheduled-cagg-refresh analogue — at 100 TB
-        the steady-state cost is proportional to the *late* data's date
-        spread, never to table size."""
+        ONLY the date partitions invalidated since each tier's last
+        finalize (:meth:`invalidated_dates`), in one :meth:`finalize` —
+        one atomic ``overwrite_where`` snapshot over the invalidated
+        tiers × dates.  The finalize commit itself advances the
+        invalidation watermark, so the operation is idempotent and
+        crash-safe with no separate log to ack: killed before the commit,
+        a rerun re-merges the same dates; run twice, the second pass sees
+        no dirty dates and is a no-op.  This is the scheduled-cagg-refresh
+        analogue — at 100 TB the steady-state cost is proportional to the
+        *late* data's date spread, never to table size."""
         inv = self.invalidated_dates()
-        for tier in self.cfg.tiers:
-            dates = inv.get(tier_table(tier))
-            if dates:
-                self.finalize(spark, tiers=[tier], dates=dates, vacuum=vacuum)
+        if inv:
+            dates = sorted({d for ds in inv.values() for d in ds})
+            self.finalize(spark, tiers=list(inv), dates=dates, vacuum=vacuum)
         return inv
 
     def compact(self, spark: SparkSession, min_files: int = 2) -> dict[str, int]:
@@ -687,17 +690,21 @@ class RollupPipeline:
         FILES (bytes layout), finalize merges ROWS (partials).  Returns
         files-rewritten per table (0 = nothing needed)."""
         out: dict[str, int] = {}
-        for name, tbl in {
-            **self.tables,
-            "dead_letter": self.dead_letter,
-            "lineage": self.lineage,
-            "job_metrics": self.metrics,
-        }.items():
+        for name, tbl in self.tables.items():
             snap = tbl.compact(spark, min_files=min_files)
             out[name] = int((snap.summary or {}).get("compaction", 0)) if snap else 0
         return out
 
     # -- retention ------------------------------------------------------------
+
+    def _retention(self, retention_days: dict[str, int], as_of: dt.date):
+        """Tier → the first ``date`` partition kept, and the predicate on
+        a file's hive partition values that expires the rest."""
+        for tier in retention_days:
+            if tier not in self.cfg.tiers:
+                raise ValueError(f"unknown tier {tier!r}")
+        cutoffs = {t: (as_of - dt.timedelta(days=d)).isoformat() for t, d in retention_days.items()}
+        return cutoffs, lambda pv: pv["tier"] in cutoffs and pv["date"] < cutoffs[pv["tier"]]
 
     def apply_retention(
         self,
@@ -711,55 +718,41 @@ class RollupPipeline:
         made explicit).  ``retention_days`` maps tier → days kept; a tier
         absent from the map is kept forever.
 
-        Expiry is a *metadata-only* partition drop per table
-        (TableIO.delete_partitions on the ``date`` partition column — no
-        data rewritten, O(partitions) driver work); pass ``vacuum=True``
-        to also reclaim the bytes.  Returns files expired per table.
+        Expiry is ONE *metadata-only* partition drop for every tier
+        (TableIO.delete_partitions on the ``tier`` and ``date`` partition
+        columns — no data rewritten, O(partitions) driver work); pass
+        ``vacuum=True`` to also reclaim the bytes.  Returns files expired
+        per tier.
         """
-        out: dict[str, int] = {}
-        for tier, days in retention_days.items():
-            if tier not in self.cfg.tiers:
-                raise ValueError(f"unknown tier {tier!r}")
-            cutoff = (as_of - dt.timedelta(days=days)).isoformat()
-            name = tier_table(tier)
-            tbl = self.tables[name]
-            snap = tbl.delete_partitions(
-                lambda pv: pv.get("date", "") < cutoff,
-                summary={"retention_cutoff": cutoff},
-            )
-            out[name] = len(snap.removed_files)
-            if vacuum:
-                tbl.vacuum()
+        cutoffs, expired = self._retention(retention_days, as_of)
+        snap = self.rollup.delete_partitions(expired, summary={"retention_cutoff": cutoffs})
+        if vacuum:
+            self.rollup.vacuum()
+        out = dict.fromkeys(cutoffs, 0)
+        for f in snap.removed_files:
+            out[partition_values(f)["tier"]] += 1
         return out
 
     def retention_report(
         self, retention_days: dict[str, int], as_of: dt.date
     ) -> dict[str, dict]:
-        """Dry run of :meth:`apply_retention`: per tier table, the exact
+        """Dry run of :meth:`apply_retention`: per tier, the exact
         cutoff, the ``date`` partitions that would be dropped, and the
         file count — computed from snapshot metadata only (no data read,
         no commit).  The change-review step an operator runs before
         pointing a new retention ladder at a year of tiers; the
         subsequent ``apply_retention`` removes exactly these files
         (asserted by test)."""
-        out: dict[str, dict] = {}
-        for tier, days in retention_days.items():
-            if tier not in self.cfg.tiers:
-                raise ValueError(f"unknown tier {tier!r}")
-            cutoff = (as_of - dt.timedelta(days=days)).isoformat()
-            name = tier_table(tier)
-            snap = self.tables[name].snapshot()
-            doomed = [
-                f
-                for f in (snap.all_files if snap else [])
-                if partition_values(f).get("date", "") < cutoff
-            ]
-            out[name] = {
-                "cutoff": cutoff,
-                "dates": sorted({partition_values(f).get("date", "") for f in doomed}),
-                "n_files": len(doomed),
-            }
-        return out
+        cutoffs, expired = self._retention(retention_days, as_of)
+        snap = self.rollup.snapshot()
+        doomed: dict[str, list[str]] = {t: [] for t in cutoffs}
+        for pv in map(partition_values, snap.all_files if snap else []):
+            if expired(pv):
+                doomed[pv["tier"]].append(pv["date"])
+        return {
+            t: {"cutoff": cutoffs[t], "dates": sorted(set(ds)), "n_files": len(ds)}
+            for t, ds in doomed.items()
+        }
 
     def read_dead_letter(self, spark: SparkSession) -> DataFrame:
         return self.dead_letter.read(spark)

@@ -142,8 +142,8 @@ def run_streaming_pipeline(
     ``finalize_every_n_batches=N`` bounds append-mode read amplification
     while the stream flows: after every Nth micro-batch the pipeline's
     :meth:`finalize` collapses all accumulated per-batch partials to one
-    row per (bucket, series) in a single atomic ``overwrite_all``
-    snapshot per tier table.  Purely an optimization of the read path —
+    row per (bucket, series) in one atomic ``overwrite_where``
+    snapshot of the rollup table.  Purely an optimization of the read path —
     ``read_rollup``'s merge is exact with or without it — so a crash
     between batch-commit and finalize changes nothing (the next Nth
     batch finalizes the backlog), and a replayed batch that skips all

@@ -18,7 +18,7 @@ from mq_to_db_spark.fixtures.generator import (
 from mq_to_db_spark.plans.pipeline import RollupPipeline, unit_cols
 from mq_to_db_spark.sources.tableio import partition_values
 
-CFG = EngineConfig(conv_buckets=8, shuffle_partitions=4)
+CFG = EngineConfig(conv_buckets=8)
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +44,7 @@ def test_first_delivery_dead_letters_each_unitless_reject_once(
 
 def test_partial_redelivery_writes_only_unmarked_units(spark, tmp_path, small_pdf):
     """Commit half of the units, then redeliver everything: lineage rows
-    and tier files of the second batch cover exactly the other half."""
+    and rollup files of the second batch cover exactly the other half."""
     pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
     full = spark.createDataFrame(small_pdf, schema=TRANSCRIPT_SCHEMA)
     with_units = unit_cols(full, CFG.conv_buckets)
@@ -64,14 +64,13 @@ def test_partial_redelivery_writes_only_unmarked_units(spark, tmp_path, small_pd
 
     lin = pipe.read_lineage(spark).filter(F.col("batch_id") == "b2").collect()
     assert {(r.conv_bucket, str(r.date)) for r in lin} == unmarked
-    for name, tbl in pipe.tables.items():
-        added = tbl.snapshot().added_files
-        assert tbl.snapshot().summary["batch_id"] == "b2"
-        units = {
-            (int(pv["conv_bucket"]), pv["date"])
-            for pv in map(partition_values, added)
-        }
-        assert units == unmarked, name
+    snap = pipe.rollup.snapshot()
+    assert snap.summary["batch_id"] == "b2"
+    units = {
+        (int(pv["conv_bucket"]), pv["date"])
+        for pv in map(partition_values, snap.added_files)
+    }
+    assert units == unmarked
 
 
 @pytest.fixture()
@@ -97,4 +96,4 @@ def test_committed_at_is_utc_under_local_tz(spark, tmp_path, small_pdf, new_york
         secs = {r[0] for r in frame.select(F.unix_timestamp("committed_at")).collect()}
         assert len(secs) == 1 and t0 <= secs.pop() <= t1
     (points,) = pipe.read_metrics(spark).select("points_written").first()
-    assert points == report.points_written and points["rollup_1m"] > 0
+    assert points == report.points_written and points["1m"] > 0

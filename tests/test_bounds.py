@@ -79,8 +79,7 @@ def test_pipeline_commits_under_bound(spark, tmp_path):
     df = spark.createDataFrame(pdf)
     pipe = RollupPipeline(
         str(tmp_path / "wh"),
-        EngineConfig(conv_buckets=4, shuffle_partitions=4,
-                     max_query_timeout_sec=300.0),
+        EngineConfig(conv_buckets=4, max_query_timeout_sec=300.0),
     )
     report = pipe.run(spark, df, batch_id="b1")
     assert report.n_in == 400
@@ -104,32 +103,23 @@ def test_pipeline_timeout_aborts_before_ack(spark, tmp_path):
             return super().append(slow, summary)
 
     def factory(name, part=None):
-        cls = SlowTableIO if name == "rollup_1m" else TableIO
+        cls = SlowTableIO if name == "rollup_tiers" else TableIO
         return cls(str(tmp_path / "wh" / name), part)
 
     pdf = generate_transcripts_pdf(n_turns=200, seed=7)
     df = spark.createDataFrame(pdf)
     pipe = RollupPipeline(
         str(tmp_path / "wh"),
-        EngineConfig(conv_buckets=2, shuffle_partitions=4,
-                     max_query_timeout_sec=3.0),
+        EngineConfig(conv_buckets=2, max_query_timeout_sec=3.0),
         table_factory=factory,
     )
     with pytest.raises(QueryTimeoutError):
         pipe.run(spark, df, batch_id="b1", mode="append")
     assert pipe.committed_units("b1") == set()  # no ack escaped
 
-    # redelivery with the bound lifted replays cleanly end-to-end
-    pipe2 = RollupPipeline(
-        str(tmp_path / "wh"),
-        EngineConfig(conv_buckets=2, shuffle_partitions=4),
-        table_factory=factory,
-    )
-    pipe2.cfg = EngineConfig(conv_buckets=2, shuffle_partitions=4)
-    pipe2.tables = {  # plain IO: the slow wrapper was the fault injector
-        name: TableIO(str(tmp_path / "wh" / name), ["dim", "date", "conv_bucket"])
-        for name in pipe2.tables
-    }
+    # redelivery with the bound lifted, on plain IO (the slow wrapper was
+    # the fault injector), replays cleanly end-to-end
+    pipe2 = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=2))
     report = pipe2.run(spark, df, batch_id="b1", mode="append")
     assert report.n_in == 200
     assert len(pipe2.committed_units("b1")) == report.n_units_total

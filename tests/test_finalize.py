@@ -13,7 +13,8 @@ from mq_to_db_spark.config import EngineConfig
 from mq_to_db_spark.fixtures.generator import TRANSCRIPT_SCHEMA, generate_transcripts_pdf
 from mq_to_db_spark.plans.pipeline import RollupPipeline
 
-CFG = EngineConfig(conv_buckets=4, shuffle_partitions=4)
+CFG = EngineConfig(conv_buckets=4)
+GLOBAL_1H = "tier = '1h' AND dim = 'global'"
 
 
 def _halves(spark):
@@ -32,10 +33,10 @@ def _read(pipe, spark, dim="global", tier="1h"):
 
 
 def test_append_replay_after_crash_window_is_exact(spark, tmp_path):
-    """Crash AFTER two tier commits but BEFORE the batch-scoped markers,
-    then replay the same batch_id (what foreachBatch recovery does):
-    the replayed appends must be skipped per-table via the snapshot
-    ledger — the read-side merge must NOT double-count (ADVICE r02
+    """Crash AFTER the rollup and lineage commits but BEFORE the
+    batch-scoped markers, then replay the same batch_id (what
+    foreachBatch recovery does): the replayed appends must be skipped
+    per-table via the snapshot ledger — the read-side merge must NOT double-count (ADVICE r02
     medium: TableIO.append was not idempotent)."""
     b1, b2, full = _halves(spark)
     pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
@@ -43,10 +44,10 @@ def test_append_replay_after_crash_window_is_exact(spark, tmp_path):
     with pytest.raises(RuntimeError, match="injected failure"):
         pipe.run(
             spark, b2, batch_id="s-1", mode="append",
-            fail_after_commit_of="rollup_1h",
+            fail_after_commit_of="lineage",
         )
-    # crash window: some tier tables carry s-1 partials, no markers exist
-    assert pipe.tables["rollup_1m"].has_batch("s-1")
+    # crash window: the rollup table carries s-1 partials, no markers exist
+    assert pipe.rollup.has_batch("s-1")
     assert pipe.committed_units("s-1") == set()
     # recovery replay of the SAME micro-batch
     pipe.run(spark, b2, batch_id="s-1", mode="append")
@@ -124,21 +125,21 @@ def test_incremental_finalize_single_date(spark, tmp_path):
     pipe.run(spark, b1, batch_id="s-0", mode="append")
     pipe.run(spark, b2, batch_id="s-1", mode="append")
 
-    tbl = pipe.tables["rollup_1h"]
+    tbl = pipe.rollup
     dates = sorted(
         r.date.isoformat()
-        for r in tbl.read(spark).filter("dim = 'global'").select("date").distinct().collect()
+        for r in tbl.read(spark).filter(GLOBAL_1H).select("date").distinct().collect()
     )
     assert len(dates) >= 2
     target, untouched = dates[0], dates[1]
 
-    raw = tbl.read(spark).filter("dim = 'global'")
+    raw = tbl.read(spark).filter(GLOBAL_1H)
     partials_untouched_before = raw.filter(F.col("date") == untouched).count()
     want = _read(pipe, spark, "global", "1h")
 
     pipe.finalize(spark, tiers=["1h"], dates=[target])
 
-    raw2 = tbl.read(spark).filter("dim = 'global'")
+    raw2 = tbl.read(spark).filter(GLOBAL_1H)
     # target date: exactly one row per bucket_start now
     per_bucket = (
         raw2.filter(F.col("date") == target)
@@ -163,7 +164,7 @@ def test_read_rollup_date_bounds_prune_partitions(spark, tmp_path):
     pipe.run(spark, b2, batch_id="s-1", mode="append")
     dates = sorted(
         r.date.isoformat()
-        for r in pipe.tables["rollup_1h"].read(spark).filter("dim = 'global'")
+        for r in pipe.rollup.read(spark).filter(GLOBAL_1H)
         .select("date").distinct().collect()
     )
     target = dates[0]
@@ -177,8 +178,7 @@ def test_read_rollup_date_bounds_prune_partitions(spark, tmp_path):
     # numFiles is the post-partition-pruning scan metric (plain scan of
     # the same table + the same dim and date predicates read_rollup
     # applies): the bounded read lists strictly fewer files
-    tbl = pipe.tables["rollup_1h"]
-    glob = tbl.read(spark).filter("dim = 'global'")
+    glob = pipe.rollup.read(spark).filter(GLOBAL_1H)
     n_bounded = files_read(glob.filter(F.col("date") == F.lit(target).cast("date")))
     n_full = files_read(glob)
     assert 0 < n_bounded < n_full, (n_bounded, n_full)
@@ -206,7 +206,7 @@ def test_pipeline_compact_and_finalize_vacuum(spark, tmp_path):
     pd.testing.assert_frame_equal(_read(pipe, spark, "global", "1h"), want, check_dtype=False)
 
     pipe.finalize(spark, tiers=["1h"], vacuum=True)
-    tbl = pipe.tables["rollup_1h"]
+    tbl = pipe.rollup
     live = set(tbl.snapshot().all_files)
     on_disk = {k[len("data/"):] for k in tbl.store.list("data")}
     assert on_disk == live  # vacuum left exactly the live snapshot

@@ -13,7 +13,7 @@ from mq_to_db_spark.fixtures.generator import (
 )
 from mq_to_db_spark.plans.pipeline import RollupPipeline
 
-CFG = EngineConfig(conv_buckets=4, shuffle_partitions=4)
+CFG = EngineConfig(conv_buckets=4)
 
 
 def _read(pipe, spark, dim="global", tier="1h"):
@@ -80,7 +80,7 @@ def test_refresh_idempotent_and_compaction_not_invalidating(spark, tmp_path):
     # materializes everything — the TimescaleDB first-refresh semantic)
     inv = pipe.invalidated_dates()
     all_dates = sorted({str(d) for d in pdf["ts"].dt.date.unique()})
-    assert inv["rollup_1h"] == all_dates
+    assert inv["1h"] == all_dates
 
     assert pipe.refresh_invalidated(spark) == inv
     assert pipe.refresh_invalidated(spark) == {}  # second pass: no-op

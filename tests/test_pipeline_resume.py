@@ -5,16 +5,15 @@ ack'd only after durable store (messages.go:131-148); a crash before ack
 means redelivery, and the store must be idempotent under redelivery."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from mq_to_db_spark.config import EngineConfig
 from mq_to_db_spark.fixtures.generator import TRANSCRIPT_SCHEMA
 from mq_to_db_spark.plans.pipeline import RollupPipeline
-from mq_to_db_spark.operators.rollup import rollup_from_raw, cascade
+from mq_to_db_spark.operators.rollup import rollup_from_raw
 from tests.conftest import assert_pdf_equal
 
 
-CFG = EngineConfig(conv_buckets=8, shuffle_partitions=4)
+CFG = EngineConfig(conv_buckets=8)
 
 
 @pytest.fixture()
@@ -58,24 +57,58 @@ def test_rerun_is_noop(spark, transcripts, pipe):
     assert lin.select("partition_id").distinct().count() == r1.n_units_total
 
 
-def test_kill_and_resume_no_dupes_no_missing(spark, transcripts, pipe):
-    """Crash after the first tier commit but before ack (markers): rerun
-    must reprocess everything, and every rolled-up point must be correct
-    with no duplicates — effectively-once."""
-    with pytest.raises(RuntimeError, match="injected failure"):
-        pipe.run(spark, transcripts, batch_id="b1",
-                 fail_after_commit_of="rollup_1m")
-    assert pipe.committed_units() == set()  # nothing acked
+#: every table commit of a batch, each a crash seam before the ack
+SEAMS = ["rollup_tiers", "dead_letter", "lineage", "job_metrics"]
+MODES = ["overwrite", "append"]
 
-    r2 = pipe.run(spark, transcripts, batch_id="b2")
+
+def _stored(spark, pipe):
+    """What the store holds: three tier reads, the dead-letter counts by
+    reason, and the lineage and metrics rows without their wall-clock
+    columns."""
+    tiers = {
+        (dim, tier): (keys, pipe.read_rollup(spark, dim, tier).toPandas())
+        for dim, keys, tier in (("global", [], "1m"), ("conv", ["conv_id"], "1h"),
+                                ("tool", ["tool"], "1d"))
+    }
+    dead = {r.reason: r["count"]
+            for r in pipe.read_dead_letter(spark).groupBy("reason").count().collect()}
+    lineage = [r.asDict() for r in pipe.read_lineage(spark).drop("committed_at")
+               .orderBy("partition_id").collect()]
+    metrics = [r.asDict() for r in pipe.read_metrics(spark).drop("seconds", "committed_at").collect()]
+    return tiers, (dead, lineage, metrics)
+
+
+@pytest.fixture(scope="module")
+def clean(spark, dirty, tmp_path_factory):
+    """One clean delivery of the dirty batch per mode, as stored."""
+    out = {}
+    for mode in MODES:
+        ref = RollupPipeline(str(tmp_path_factory.mktemp(f"clean-{mode}")), CFG)
+        ref.run(spark, dirty, batch_id="b1", mode=mode)
+        out[mode] = _stored(spark, ref)
+    return out
+
+
+@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("seam", SEAMS)
+def test_kill_and_resume_no_dupes_no_missing(spark, dirty, pipe, clean, seam, mode):
+    """Crash right after one table's commit but before the ack (markers),
+    then replay the same batch_id — broker redelivery, or a streaming
+    recovery replay in append mode: the store must equal one clean
+    delivery, with no rolled-up point, reject, lineage or metrics row
+    missing or duplicated — effectively-once."""
+    with pytest.raises(RuntimeError, match="injected failure"):
+        pipe.run(spark, dirty, batch_id="b1", mode=mode, fail_after_commit_of=seam)
+    assert pipe.committed_units("b1" if mode == "append" else None) == set()  # nothing acked
+
+    r2 = pipe.run(spark, dirty, batch_id="b1", mode=mode)
     assert r2.n_units_skipped == 0  # full redelivery
-    for dim, keys, tier in (("global", [], "1m"), ("conv", ["conv_id"], "1d")):
-        got = pipe.read_rollup(spark, dim, tier).toPandas()
-        want = rollup_from_raw(transcripts, tier, keys).toPandas()
-        assert_pdf_equal(got, want, ["bucket_start", *keys])
-    # total point conservation on the 1m global tier
-    total = pipe.read_rollup(spark, "global", "1m").agg(F.sum("n_turns")).collect()[0][0]
-    assert total == transcripts.count()
+    tiers, rest = _stored(spark, pipe)
+    want_tiers, want_rest = clean[mode]
+    for key, (keys, want) in want_tiers.items():
+        assert_pdf_equal(tiers[key][1], want, ["bucket_start", *keys])
+    assert rest == want_rest
 
 
 def test_partial_commit_then_resume_skips_committed(spark, transcripts, pipe):
@@ -112,7 +145,7 @@ def test_job_metrics_table(spark, dirty, transcripts, pipe):
     row = m.iloc[0]
     assert row.batch_id == "m1"
     assert row.n_in == r1.n_in and row.n_ok == r1.n_ok and row.n_rejected == r1.n_rejected
-    assert row.points_written["rollup_1m"] > 0
+    assert row.points_written["1m"] > 0
     assert row.engine_version
     # fully-skipped rerun writes no metrics row (no counters incremented)
     pipe.run(spark, dirty, batch_id="m2")

@@ -49,7 +49,7 @@ def test_rate_pipeline_effectively_once_vs_batch_oracle(spark, tmp_path):
 
     rows_per_batch, want_batches = 400, 3
     pipe = RollupPipeline(
-        str(tmp_path / "wh"), EngineConfig(conv_buckets=4, shuffle_partitions=4)
+        str(tmp_path / "wh"), EngineConfig(conv_buckets=4)
     )
     q = run_rate_pipeline(
         spark, str(tmp_path / "ckpt"), pipe,
@@ -76,7 +76,7 @@ def test_rate_pipeline_effectively_once_vs_batch_oracle(spark, tmp_path):
 
     # oracle: batch mode over the exact replayed value range
     pipe2 = RollupPipeline(
-        str(tmp_path / "wh2"), EngineConfig(conv_buckets=4, shuffle_partitions=4)
+        str(tmp_path / "wh2"), EngineConfig(conv_buckets=4)
     )
     replay = turns_from_values(
         spark.range(0, done * rows_per_batch).withColumnRenamed("id", "value")

@@ -11,7 +11,7 @@ from mq_to_db_spark.config import EngineConfig
 from mq_to_db_spark.plans.pipeline import RollupPipeline
 from mq_to_db_spark.sources.tableio import TableIO, partition_values
 
-CFG = EngineConfig(conv_buckets=8, shuffle_partitions=4)
+CFG = EngineConfig(conv_buckets=8)
 
 
 def test_partition_values():
@@ -38,7 +38,7 @@ def test_tiered_retention_expires_fine_keeps_coarse(spark, transcripts, pipe):
     keep_days = (as_of - dates[1]).days  # cut the oldest date only
     before_1m = pipe.read_rollup(spark, "global", "1m").count()
     expired = pipe.apply_retention({"1m": keep_days}, as_of=as_of)
-    assert expired["rollup_1m"] > 0
+    assert expired["1m"] > 0
 
     # 1m tier no longer holds buckets before the cutoff...
     cutoff = as_of - dt.timedelta(days=keep_days)
@@ -51,7 +51,7 @@ def test_tiered_retention_expires_fine_keeps_coarse(spark, transcripts, pipe):
 
 
 def test_retention_is_metadata_only_then_vacuum_reclaims(spark, transcripts, pipe):
-    tbl = pipe.tables["rollup_1m"]
+    tbl = pipe.rollup
     v_before = tbl.current_version()
     files_before = set(tbl.snapshot().all_files)
     as_of = max(
@@ -85,21 +85,21 @@ def test_retention_report_is_exact_dry_run(spark, transcripts, pipe):
     """The report names exactly the files apply_retention then removes,
     and itself commits nothing (current_version unchanged)."""
     policies = {"1m": 2, "1h": 4}
-    dates = [r[0] for r in pipe.tables["rollup_1m"].read(spark)
-             .filter("dim = 'global'").select(F.to_date("bucket_start")).distinct().collect()]
+    dates = [r[0] for r in pipe.rollup.read(spark)
+             .filter("tier = '1m' AND dim = 'global'").select(F.to_date("bucket_start")).distinct().collect()]
     as_of = max(dates)
 
-    v_before = pipe.tables["rollup_1m"].current_version()
+    v_before = pipe.rollup.current_version()
     rep = pipe.retention_report(policies, as_of=as_of)
-    assert pipe.tables["rollup_1m"].current_version() == v_before
+    assert pipe.rollup.current_version() == v_before
 
     # same cutoffs, some files doomed at the fine tier
-    assert rep["rollup_1m"]["cutoff"] == (
+    assert rep["1m"]["cutoff"] == (
         as_of - dt.timedelta(days=2)
     ).isoformat()
-    assert rep["rollup_1m"]["n_files"] > 0
-    assert all(d < rep["rollup_1m"]["cutoff"]
-               for d in rep["rollup_1m"]["dates"])
+    assert rep["1m"]["n_files"] > 0
+    assert all(d < rep["1m"]["cutoff"]
+               for d in rep["1m"]["dates"])
 
     removed = pipe.apply_retention(policies, as_of=as_of)
     for name, meta in rep.items():

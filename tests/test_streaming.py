@@ -84,7 +84,7 @@ def test_foreach_batch_runs_batch_pipeline(spark, transcripts_pdf, tmp_path):
     inp = tmp_path / "in"
     inp.mkdir()
     transcripts_pdf.to_parquet(inp / "part-0.parquet", index=False)
-    pipe = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=8, shuffle_partitions=4))
+    pipe = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=8))
     reports = []
 
     def handle(df, batch_id):
@@ -164,7 +164,7 @@ def test_streaming_pipeline_append_mode_effectively_once(spark, tmp_path):
     pdf.iloc[:half].to_parquet(in_dir / "part-0.parquet", index=False)
     pdf.iloc[half:].to_parquet(in_dir / "part-1.parquet", index=False)
 
-    pipe = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=4, shuffle_partitions=4))
+    pipe = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=4))
     q = run_streaming_pipeline(
         spark, str(in_dir), str(tmp_path / "ckpt"), pipe,
         available_now=True, max_files_per_trigger=1,
@@ -185,7 +185,7 @@ def test_streaming_pipeline_append_mode_effectively_once(spark, tmp_path):
         .toPandas()
     )
     # oracle: batch mode over the full input in a fresh warehouse
-    pipe2 = RollupPipeline(str(tmp_path / "wh2"), EngineConfig(conv_buckets=4, shuffle_partitions=4))
+    pipe2 = RollupPipeline(str(tmp_path / "wh2"), EngineConfig(conv_buckets=4))
     full = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
     pipe2.run(spark, full, batch_id="oracle")
     want = (
@@ -230,7 +230,7 @@ def test_streaming_pipeline_periodic_finalize(spark, tmp_path):
     pdf.iloc[half:].to_parquet(in_dir / "part-1.parquet", index=False)
 
     pipe = RollupPipeline(
-        str(tmp_path / "wh"), EngineConfig(conv_buckets=4, shuffle_partitions=4)
+        str(tmp_path / "wh"), EngineConfig(conv_buckets=4)
     )
     q = run_streaming_pipeline(
         spark, str(in_dir), str(tmp_path / "ckpt"), pipe,
@@ -244,7 +244,7 @@ def test_streaming_pipeline_periodic_finalize(spark, tmp_path):
     assert "Aggregate" not in plan, plan  # finalized → scan-only read
 
     pipe2 = RollupPipeline(
-        str(tmp_path / "wh2"), EngineConfig(conv_buckets=4, shuffle_partitions=4)
+        str(tmp_path / "wh2"), EngineConfig(conv_buckets=4)
     )
     pipe2.run(spark, spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA), batch_id="oracle")
     want = pipe2.read_rollup(spark, "global", "1h").orderBy("bucket_start").toPandas()

@@ -1,9 +1,14 @@
-"""One table per tier (plans/pipeline.py): every dimension's series share
-``rollup_{tier}``, partitioned by ``(dim, date, conv_bucket)``, so a
-micro-batch commits each table once, a refresh rewrites each tier table
-once, and a dimension read prunes to its own ``dim`` partition.  The
-Spark job counts of a first-delivery micro-batch and of a refresh are
-pinned, so a stray action on the ack path shows up here."""
+"""One rollup table for every tier (plans/pipeline.py): every tier's and
+dimension's series share ``rollup_tiers``, partitioned by ``(tier, dim,
+date, conv_bucket)``, so a micro-batch commits it once, a refresh
+rewrites it in one ``overwrite_where``, a retention pass drops from it
+in one ``delete_partitions``, and a read prunes to its own ``tier`` and
+``dim`` partitions.  The Spark job counts of a first-delivery
+micro-batch and of a refresh are pinned, so a stray action on the ack
+path shows up here."""
+
+import datetime as dt
+from collections import Counter
 
 import pytest
 
@@ -16,21 +21,11 @@ from mq_to_db_spark.fixtures.generator import (
 from mq_to_db_spark.plans.pipeline import RollupPipeline
 from mq_to_db_spark.sources.tableio import partition_values
 
-CFG = EngineConfig(conv_buckets=4, shuffle_partitions=4)
-TIER_TABLES = ["rollup_1m", "rollup_1h", "rollup_1d"]
-
-
-def _all_tables(pipe):
-    return {
-        **pipe.tables,
-        "dead_letter": pipe.dead_letter,
-        "lineage": pipe.lineage,
-        "job_metrics": pipe.metrics,
-    }
+CFG = EngineConfig(conv_buckets=4)
 
 
 def _versions(pipe):
-    return {name: t.current_version() for name, t in _all_tables(pipe).items()}
+    return {name: t.current_version() for name, t in pipe.tables.items()}
 
 
 def _job_descriptions(spark, fn) -> list[str]:
@@ -71,6 +66,16 @@ def appended(spark, tmp_path_factory):
     return _two_batches(spark, tmp_path_factory.mktemp("tiers"))
 
 
+@pytest.fixture()
+def fresh(spark, tmp_path):
+    """A pipeline of its own, for a test that commits to it."""
+    return _two_batches(spark, tmp_path)[0]
+
+
+def _files(pipe) -> list[dict[str, str]]:
+    return [partition_values(f) for f in pipe.rollup.snapshot().all_files]
+
+
 def _scan_num_files(df) -> int:
     """The file scan's post-pruning ``numFiles`` metric, looking through
     AQE's wrapper and query stages."""
@@ -91,48 +96,82 @@ def _scan_num_files(df) -> int:
     raise AssertionError("no file scan in the plan")
 
 
+def _has_aggregate(df) -> bool:
+    return "Aggregate" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_append_batch_adds_one_snapshot_per_table(appended):
     pipe, between, _ = appended
-    assert sorted(pipe.tables) == sorted(TIER_TABLES)
-    assert len(_all_tables(pipe)) == 6
+    assert sorted(pipe.tables) == ["dead_letter", "job_metrics", "lineage", "rollup_tiers"]
     after = _versions(pipe)
     assert {n: after[n] - between[n] for n in after} == {n: 1 for n in after}
-    # every dimension's rows live in the one tier table
-    for name in TIER_TABLES:
-        dims = {partition_values(f)["dim"] for f in pipe.tables[name].snapshot().all_files}
-        assert dims == {"global", "conv", "tool"}, (name, dims)
+
+
+def test_rollup_table_holds_every_tier_and_dimension(appended):
+    pipe, _, _ = appended
+    held = {(pv["tier"], pv["dim"]) for pv in _files(pipe)}
+    assert held == {(t, d) for t in ("1m", "1h", "1d") for d in ("global", "conv", "tool")}
 
 
 def test_first_delivery_append_job_count(appended):
-    # the unit-stats collect plus the tier, dead-letter, lineage and
+    # the unit-stats collect plus the rollup, dead-letter, lineage and
     # metrics writes; building the driver-side frames adds no job
     *_, first_jobs = appended
-    assert len(first_jobs) == 17, first_jobs
+    assert len(first_jobs) == 13, first_jobs
 
 
-def test_refresh_rewrites_each_tier_table_once(spark, tmp_path):
-    pipe, _, _ = _two_batches(spark, tmp_path)
-    assert all(len(t.snapshot().all_files) > 32 for t in pipe.tables.values())
+def test_refresh_is_one_overwrite_where(spark, fresh):
+    pipe = fresh
+    assert len(pipe.rollup.snapshot().all_files) > 32
     before = _versions(pipe)
     inv = {}
     jobs = _job_descriptions(spark, lambda: inv.update(pipe.refresh_invalidated(spark)))
-    # each tier's read hands Spark more manifest-listed files than the
-    # default parallel-listing threshold (32): still no listing job
+    # the read hands Spark more manifest-listed files than the default
+    # parallel-listing threshold (32): still no listing job
     assert not [d for d in jobs if d.startswith("Listing")], jobs
-    assert len(jobs) == 9, jobs
-    assert sorted(inv) == sorted(TIER_TABLES)
+    assert len(jobs) == 3, jobs
+    assert sorted(inv) == ["1d", "1h", "1m"]
     after = _versions(pipe)
-    for name, v in after.items():
-        if name in TIER_TABLES:
-            assert v - before[name] == 1, name
-            assert pipe.tables[name].snapshot().operation == "overwrite_where"
-        else:
-            assert v == before[name], name
+    assert {n: after[n] - before[n] for n in after} == {
+        "rollup_tiers": 1, "dead_letter": 0, "lineage": 0, "job_metrics": 0
+    }
+    assert pipe.rollup.snapshot().operation == "overwrite_where"
+
+
+def test_retention_per_tier_is_one_drop_of_the_reported_files(fresh):
+    pipe = fresh
+    as_of = max(dt.date.fromisoformat(pv["date"]) for pv in _files(pipe))
+    policies = {"1m": 1, "1h": 2}
+    report = pipe.retention_report(policies, as_of)
+    assert all(report[t]["n_files"] > 0 for t in policies), report
+    v = pipe.rollup.current_version()
+    removed = pipe.apply_retention(policies, as_of)
+    snap = pipe.rollup.snapshot()
+    assert snap.version == v + 1 and snap.operation == "delete_partitions"
+    dropped = [partition_values(f) for f in snap.removed_files]
+    assert removed == {t: r["n_files"] for t, r in report.items()}
+    assert Counter(pv["tier"] for pv in dropped) == removed
+    for t, r in report.items():
+        assert sorted({pv["date"] for pv in dropped if pv["tier"] == t}) == r["dates"]
+        assert all(d < r["cutoff"] for d in r["dates"])
+    # the 1d tier has no policy: it keeps every file
+    assert not [pv for pv in dropped if pv["tier"] == "1d"]
+
+
+def test_finalize_coarse_tiers_leaves_fine_tier_merging(spark, fresh):
+    pipe = fresh
+    fine = sorted(f for f in pipe.rollup.snapshot().all_files if f.startswith("tier=1m"))
+    pipe.finalize(spark, tiers=["1h", "1d"])
+    snap = pipe.rollup.snapshot()
+    assert snap.operation == "overwrite_where"
+    assert sorted(f for f in snap.all_files if f.startswith("tier=1m")) == fine
+    assert not _has_aggregate(pipe.read_rollup(spark, "global", "1h"))
+    assert _has_aggregate(pipe.read_rollup(spark, "global", "1m"))
 
 
 def test_dimension_read_prunes_dim_partition(spark, appended):
     pipe, _, _ = appended
-    files = pipe.tables["rollup_1h"].snapshot().all_files
-    n_global = sum(partition_values(f)["dim"] == "global" for f in files)
+    files = _files(pipe)
+    n_global_1h = sum(pv["tier"] == "1h" and pv["dim"] == "global" for pv in files)
     n_read = _scan_num_files(pipe.read_rollup(spark, "global", "1h"))
-    assert 0 < n_read == n_global < len(files), (n_read, n_global, len(files))
+    assert 0 < n_read == n_global_1h < len(files), (n_read, n_global_1h, len(files))
