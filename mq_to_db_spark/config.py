@@ -49,8 +49,9 @@ class EngineConfig:
     # Per-operation wall-clock bound on every sink commit (reference
     # `maxQueryTimeOut`, config.go / pgsql.go:86-96): None = unbounded.
     # On deadline the commit's Spark job group is cancelled and the
-    # batch fails with QueryTimeoutError — acks (markers) are written
-    # last, so the broker-redelivery replay path takes over, exactly as
+    # batch fails with QueryTimeoutError — acks (the job_metrics commit,
+    # then overwrite mode's unit markers) come last, so the
+    # broker-redelivery replay path takes over, exactly as
     # a statement timeout surfaces in the reference.
     max_query_timeout_sec: float | None = None
 

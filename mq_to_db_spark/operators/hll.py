@@ -155,7 +155,9 @@ def hll_estimate(
     in sorted register order over exact powers of two, so the raw
     estimate is bit-identical cross-engine and the only ~1-ulp surface
     is the correction's ``ln`` (emitted unrounded by design —
-    BENCH/FLOAT_SURFACE_AUDIT.md rule)."""
+    BENCH/FLOAT_SURFACE_AUDIT.md rule).  A sketch holding a register
+    index ≥ 2^p was built at a larger p: its ``n_zero_regs`` and
+    ``estimate`` are NULL."""
     if not 4 <= p <= 16:
         raise ValueError(f"p must be in [4, 16], got {p}")
     keys = list(keys or [])
@@ -176,7 +178,8 @@ def hll_estimate(
             "shiftleft", F.lit(1).cast("long"), e["value"]
         ).cast("double"),
     )
-    n_zero = (F.lit(m) - n_set).cast("long")
+    in_range = ~F.exists(F.map_keys(hll_col), lambda j: j >= m)
+    n_zero = F.when(in_range, F.lit(m) - n_set).cast("long")
     denom = n_zero.cast("double") + s
     raw = F.lit(alpha * m) * F.lit(float(m)) / denom
     corrected = F.when(

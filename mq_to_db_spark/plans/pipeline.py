@@ -4,19 +4,33 @@ One batch run =
     read input → validate/side-output rejects → per-unit rollup cascade
     (1m→1h→1d; global / per-conv / per-tool dimensions) → one commit of
     every tier to the rollup table → dead-letter append → lineage
-    append → checkpoint markers.
+    append → job-metrics append (the ack) [→ unit markers, overwrite
+    mode only].
 
 Delivery semantics (the reference's ack/reject loop re-expressed, SURVEY.md
 §1.3): the unit of work is a logical partition ``(conv_bucket, date)`` —
 ``conv_bucket = pmod(xxhash64(conv_id), B)`` is the Iceberg
 ``bucket(conv_id)`` analogue, ``date`` the ``days(ts)`` range partition.
-A unit's checkpoint marker is written only **after** every commit of the
-batch succeeds (ack-after-durable-store, messages.go:131-148).  A rerun
-after a crash reprocesses exactly the unmarked units; because rollup writes
-are partition overwrites keyed by the same unit, replays are idempotent —
-at-least-once reprocessing + idempotent sink = effectively-once, the same
-contract the reference gets from manual ack + DLX.  One delivery is one
-rollup commit, so a crash can never leave it in some tiers and not others.
+A delivery is acked once, only **after** every commit of the batch
+succeeds (ack-after-durable-store, messages.go:131-148):
+
+  * ``append`` (micro-batches): the ``job_metrics`` commit, the batch's
+    last, is the ack — every commit records its ``batch_id`` in the
+    table's snapshot ledger (``TableIO.has_batch``).  A replay of an
+    acked ``batch_id`` is a full skip; a replay after a crash earlier in
+    the batch skips each table that already holds the batch, so no
+    partial is appended twice;
+  * ``overwrite`` (whole-unit deliveries): after the ``job_metrics``
+    commit each unit gets a marker under ``work_dir/_checkpoints``.  A
+    unit is acked forever, so a redelivery under any ``batch_id``
+    reprocesses exactly the unmarked units; rollup writes are partition
+    overwrites keyed by the unit, so replays are idempotent.
+
+A delivery whose rows all lack a unit (null ``conv_id`` or ``ts``) has no
+marker to write and is acked by the ledger in both modes.  At-least-once
+reprocessing + idempotent sink = effectively-once, the same contract the
+reference gets from manual ack + DLX.  One delivery is one rollup commit,
+so a crash can never leave it in some tiers and not others.
 
 Scale notes (10^12 turns):
   * ONE table, ``rollup_tiers``, holds every tier's and every dimension's
@@ -38,9 +52,9 @@ Scale notes (10^12 turns):
   * filters on committed units are pushed into the scan
     (conv_bucket/date derive from input columns via deterministic
     expressions, so Catalyst prunes at the parquet level when the input
-    is physically partitioned the same way); when no unit of the batch
-    is committed yet (every first delivery) there is no join at all,
-    only a filter keeping the rows that have a unit.
+    is physically partitioned the same way); only a partly acked
+    ``overwrite`` redelivery needs that join — every other delivery
+    keeps the rows that have a unit with a plain filter.
 
 Fixed cost per micro-batch (it sets ack latency, not the data):
   * driver-side rows — the pending-unit list, lineage rows, the
@@ -160,19 +174,16 @@ class RollupPipeline:
         work_dir: str,
         cfg: EngineConfig | None = None,
         table_factory=None,
-        marker_store=None,
     ):
         """``table_factory(name, partition_cols) -> TableIO-like`` selects
         the storage backend: default is the parquet-emulated
         ``sources.tableio.TableIO``; pass a closure over
         ``sources.iceberg.IcebergTableIO`` (jar-gated) for a real Iceberg
-        catalog.  ``marker_store`` is the AtomicStore holding checkpoint
-        markers (default: local under ``work_dir/_checkpoints``) — the
-        S3/HDFS plug point.  The pipeline touches storage ONLY through
-        these two seams."""
+        catalog.  Overwrite mode's unit markers live in an AtomicStore
+        under ``work_dir/_checkpoints``, beside the tables."""
         self.work_dir = work_dir
         self.cfg = cfg or EngineConfig()
-        self.markers = marker_store or LocalAtomicStore(f"{work_dir}/_checkpoints")
+        self.markers = LocalAtomicStore(f"{work_dir}/_checkpoints")
         if table_factory is None:
             table_factory = lambda name, part=None: TableIO(  # noqa: E731
                 f"{work_dir}/{name}", part
@@ -189,47 +200,28 @@ class RollupPipeline:
             "job_metrics": self.metrics,
         }
 
-    # -- checkpoint markers ---------------------------------------------------
+    # -- unit markers (overwrite mode) ---------------------------------------
     #
-    # Two marker scopes:
-    #   * global (batch/overwrite mode): a unit is acked once, forever —
-    #     a redelivered batch skips it (units arrive whole per batch);
-    #   * batch-scoped (streaming/append mode): the ack is per
-    #     (micro-batch, unit) — a *recovery replay* of the same micro-batch
-    #     skips, while a LATER micro-batch carrying more turns for the same
-    #     unit appends fresh partials (read-side merge makes that exact).
+    # Units arrive whole per overwrite batch, so a unit is acked once,
+    # forever: a redelivered batch skips it whatever its batch_id.  Append
+    # mode writes no marker — a later micro-batch carrying more turns for
+    # the same unit appends fresh partials (read-side merge makes that
+    # exact), and the batch's job_metrics commit is its ack.
 
-    def _marker_key(self, conv_bucket: int, date: str, scope: str | None = None) -> str:
-        prefix = f"{scope}__" if scope else ""
-        return f"{prefix}{date}_b{conv_bucket:04d}.json"
+    def _marker_key(self, conv_bucket: int, date: str) -> str:
+        return f"{date}_b{conv_bucket:04d}.json"
 
-    def committed_units(self, scope: str | None = None) -> set[tuple[int, str]]:
+    def committed_units(self) -> set[tuple[int, str]]:
         out = set()
         for key in self.markers.list():
-            if not key.endswith(".json"):
-                continue
-            stem = key[:-5]
-            if scope is None:
-                if "__" in stem:
-                    continue  # batch-scoped markers belong to append mode
-            else:
-                if not stem.startswith(f"{scope}__"):
-                    continue
-                stem = stem.split("__", 1)[1]
-            date, b = stem.rsplit("_b", 1)
-            out.add((int(b), date))
+            if key.endswith(".json"):
+                date, b = key[:-5].rsplit("_b", 1)
+                out.add((int(b), date))
         return out
 
-    def _write_marker(
-        self,
-        conv_bucket: int,
-        date: str,
-        batch_id: str,
-        stats: dict,
-        scope: str | None = None,
-    ):
+    def _write_marker(self, conv_bucket: int, date: str, batch_id: str, stats: dict):
         self.markers.write_text_atomic(
-            self._marker_key(conv_bucket, date, scope),
+            self._marker_key(conv_bucket, date),
             json.dumps({"batch_id": batch_id, "committed_at": time.time(), **stats}),
         )
 
@@ -240,8 +232,9 @@ class RollupPipeline:
         (``cfg.max_query_timeout_sec`` — the reference's `maxQueryTimeOut`
         around every ExecContext, pgsql.go:86-96).  Unbounded when None
         (the default).  On deadline the commit's job group is cancelled
-        and QueryTimeoutError propagates out of ``run`` BEFORE any ack
-        marker is written, so redelivery replays the batch — the same
+        and QueryTimeoutError propagates out of ``run`` BEFORE the ack
+        (the ``job_metrics`` commit and any unit marker), so redelivery
+        replays the batch — the same
         at-least-once story as a reference statement timeout.
 
         ``fail_after`` is ``run``'s fault-injection hook: when it names
@@ -283,21 +276,20 @@ class RollupPipeline:
         window the resume tests need).
 
         ``mode="overwrite"`` (batch): units arrive whole; the rollup write
-        is a partition overwrite, acks are global per unit.
-        ``mode="append"`` (streaming micro-batches): a unit's turns may
-        span batches, so the rollup write APPENDS per-batch partials
-        (read-side merge keeps results exact) and acks are scoped to this
-        batch_id — a recovery replay of the same micro-batch is a no-op
-        EVEN when the crash landed between a commit and the markers:
-        every append consults the table's snapshot batch ledger
-        (``TableIO.has_batch``) and skips tables this batch already
-        reached, so no partial can be double-appended.  Later batches
-        for the same unit (new batch_id) append normally."""
+        is a partition overwrite, and each unit is acked forever by a
+        marker written last.  ``mode="append"`` (streaming micro-batches):
+        a unit's turns may span batches, so the rollup write APPENDS
+        per-batch partials (read-side merge keeps results exact), and the
+        batch is acked all-or-nothing by its ``job_metrics`` commit; a
+        replay before that skips each table whose snapshot ledger
+        (``TableIO.has_batch``) already holds the batch_id.  A delivery
+        none of whose rows has a unit (each has a null ``conv_id`` or
+        ``ts``) is dead-lettered and acked by its ``job_metrics`` commit
+        in both modes."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"unknown mode {mode!r}")
         t0 = time.time()
         batch_id = batch_id or uuid.uuid4().hex[:12]
-        scope = batch_id if mode == "append" else None
         cfg = self.cfg
         report = BatchReport(batch_id=batch_id)
         summary = {"batch_id": batch_id}
@@ -309,42 +301,39 @@ class RollupPipeline:
             F.count(F.lit(1)).alias("n_in"),
             F.count_if(F.col("reason").isNotNull()).alias("n_rejected"),
         )
-        unit_rows = units_df.collect()
-        units = {
-            (r.conv_bucket, str(r.date)): (r.n_in, r.n_rejected)
-            for r in unit_rows
-            if r.conv_bucket is not None and r.date is not None
-        }
-        # rows whose unit cols are null (invalid rows) still go to the
-        # dead letter; they belong to a synthetic unit (always rejected:
-        # a null unit col implies a null conv_id or ts reject reason).
-        n_unitless = sum(
-            int(r.n_in)
-            for r in unit_rows
-            if r.conv_bucket is None or r.date is None
-        )
-        committed = self.committed_units(scope)
-        todo = {u for u in units if u not in committed}
+        # rows whose unit cols are null still go to the dead letter (always
+        # rejected: a null unit col implies a null conv_id or ts reason)
+        units, n_unitless = {}, 0
+        for r in units_df.collect():
+            if r.conv_bucket is None or r.date is None:
+                n_unitless += int(r.n_in)
+            else:
+                units[(r.conv_bucket, str(r.date))] = (r.n_in, r.n_rejected)
+        if mode == "append" or not units:
+            acked = self.metrics.has_batch(batch_id)
+            todo = set() if acked else set(units)
+        else:
+            todo = set(units) - self.committed_units()
+            acked = not todo
         report.n_units_total = len(units)
         report.n_units_skipped = len(units) - len(todo)
 
-        if not todo:
-            # all units already committed: a fully-skipped redelivery.
-            # No data or lineage is written (nothing changed), and no
-            # metrics row either — mirroring the reference, where a
-            # redelivered-and-deduped message increments no storer
-            # counters.  The returned report still records the skip.
+        if acked or not (todo or n_unitless):
+            # an acked (or empty) redelivery: no data, lineage or metrics
+            # row is written (nothing changed) — mirroring the reference,
+            # where a redelivered-and-deduped message increments no
+            # storer counters.  The returned report still records the skip.
             report.seconds = time.time() - t0
             return report
 
         has_unit = F.col("conv_bucket").isNotNull() & F.col("date").isNotNull()
         if len(todo) == len(units):
-            # nothing committed yet (every first delivery, every fresh
-            # append batch): keep the unit rows, no join needed
+            # no unit acked yet (every first delivery, every append
+            # batch): keep the unit rows, no join needed
             pending = tagged.filter(has_unit)
         else:
-            # partial redelivery: a broadcast semi-join prunes committed
-            # units before any shuffle
+            # partly acked overwrite redelivery: a broadcast semi-join
+            # prunes the marked units before any shuffle
             todo_df = local_frame(
                 spark,
                 [(b, dt.date.fromisoformat(d)) for b, d in sorted(todo)],
@@ -360,45 +349,47 @@ class RollupPipeline:
         rejected = pending.filter(F.col("reason").isNotNull()).unionByName(unitless)
         valid = pending.filter(F.col("reason").isNull()).drop("reason")
 
-        # Single-pass rollup: raw is scanned ONCE for every dimension
-        # (grouping-sets agg, rollup_multidim) — one shuffle of partial
-        # aggregates keyed by the full group, so hot (bucket, date) units
-        # are already defused by map-side partial aggregation.  Each
-        # coarser tier cascades from the finer one in the same plan, and
-        # all tiers, tagged, go out in one commit.
-        tier_frames = rollup_multidim(
-            with_text_stats(valid),
-            DIMENSIONS,
-            tiers=tuple(cfg.tiers),
-            extra_group_cols=["conv_bucket", "date"],
-        )
-        rollup_df = reduce(
-            DataFrame.unionByName,
-            (tier_frames[t].withColumn("tier", F.lit(t)) for t in cfg.tiers),
-        )
-        # the tool dimension tracks tool *usage*: non-tool turns
-        # (tool IS NULL) are not a series
-        rollup_df = rollup_df.filter((F.col("dim") != "tool") | F.col("tool").isNotNull())
-        if mode == "append" and self.rollup.has_batch(batch_id):
-            # a crash-window replay of this batch_id: its partials are
-            # already in (a second append would double-count in the
-            # read-side sum)
-            snap = self._batch_snapshot(self.rollup, batch_id)
-        else:
-            write = self.rollup.append if mode == "append" else self.rollup.overwrite_partitions
-            snap = self._commit(
-                spark,
-                ROLLUP_TABLE,
-                lambda: write(rollup_df, summary=summary),
-                fail_after_commit_of,
-            )
         points = dict.fromkeys(cfg.tiers, 0)  # files committed per tier
-        for f in snap.added_files:
-            points[partition_values(f)["tier"]] += 1
+        if todo:
+            # Single-pass rollup: raw is scanned ONCE for every dimension
+            # (grouping-sets agg, rollup_multidim) — one shuffle of partial
+            # aggregates keyed by the full group, so hot (bucket, date)
+            # units are already defused by map-side partial aggregation.
+            # Each coarser tier cascades from the finer one in the same
+            # plan, and all tiers, tagged, go out in one commit.
+            tier_frames = rollup_multidim(
+                with_text_stats(valid),
+                DIMENSIONS,
+                tiers=tuple(cfg.tiers),
+                extra_group_cols=["conv_bucket", "date"],
+            )
+            rollup_df = reduce(
+                DataFrame.unionByName,
+                (tier_frames[t].withColumn("tier", F.lit(t)) for t in cfg.tiers),
+            )
+            # the tool dimension tracks tool *usage*: non-tool turns
+            # (tool IS NULL) are not a series
+            rollup_df = rollup_df.filter((F.col("dim") != "tool") | F.col("tool").isNotNull())
+            if mode == "append" and self.rollup.has_batch(batch_id):
+                # a crash-window replay of this batch_id: its partials are
+                # already in (a second append would double-count in the
+                # read-side sum)
+                snap = self._batch_snapshot(self.rollup, batch_id)
+            else:
+                write = self.rollup.append if mode == "append" else self.rollup.overwrite_partitions
+                snap = self._commit(
+                    spark,
+                    ROLLUP_TABLE,
+                    lambda: write(rollup_df, summary=summary),
+                    fail_after_commit_of,
+                )
+            for f in snap.added_files:
+                points[partition_values(f)["tier"]] += 1
 
-        # dead letter (append — replays may duplicate rejects for units that
-        # never reached the marker; dedup at read on (conv_id, turn_idx,
-        # reason, batch) is the consumer's job, mirroring at-least-once DLX).
+        # dead letter (append — a redelivery under a new batch_id of a
+        # partly acked overwrite batch re-appends its unit-less rejects;
+        # dedup at read on (conv_id, turn_idx, reason, batch) is the
+        # consumer's job, mirroring at-least-once DLX).
         # The reject count is derived from the already-collected unit stats
         # — a `rejected.count()` here would cost an extra full scan of the
         # tagged input on top of the append's own (2 extra raw scans/batch
@@ -414,24 +405,13 @@ class RollupPipeline:
                 fail_after_commit_of,
             )
 
-        # lineage + markers — ack happens only now, after every commit.
-        now = time.time()
-        committed_ts = dt.datetime.fromtimestamp(now, dt.timezone.utc).replace(tzinfo=None)
+        committed_ts = dt.datetime.fromtimestamp(time.time(), dt.timezone.utc).replace(tzinfo=None)
         lineage_rows = [
-            (
-                batch_id,
-                f"{d}_b{b:04d}",
-                b,
-                dt.date.fromisoformat(d),
-                "committed",
-                int(units[(b, d)][0]),
-                int(units[(b, d)][0] - units[(b, d)][1]),
-                int(units[(b, d)][1]),
-                committed_ts,
-            )
-            for b, d in sorted(todo)
+            (batch_id, f"{d}_b{b:04d}", b, dt.date.fromisoformat(d), "committed",
+             int(n_in), int(n_in - n_r), int(n_r), committed_ts)
+            for (b, d), (n_in, n_r) in sorted((u, units[u]) for u in todo)
         ]
-        if not self.lineage.has_batch(batch_id):
+        if lineage_rows and not self.lineage.has_batch(batch_id):
             self._commit(
                 spark,
                 "lineage",
@@ -452,42 +432,26 @@ class RollupPipeline:
 
         # durable job metrics — the reference's Prometheus counter
         # families as a table row per batch (metrics.go:136-183 analogue).
-        # Appended BEFORE the checkpoint markers, like lineage: the ack
-        # (marker) must be last, or a crash in between leaves a committed
-        # batch with no metrics row and the fully-skipped rerun would
-        # never write one.
+        # The last commit of the batch, and so its ack: an append batch
+        # (or a unit-less delivery) is acked once the metrics table's
+        # ledger holds its batch_id; overwrite mode's unit markers follow.
         from mq_to_db_spark import __version__
 
         if not self.metrics.has_batch(batch_id):
-            metrics_df = local_frame(
-                spark,
-                [
-                    (
-                        batch_id,
-                        report.n_units_total,
-                        report.n_units_skipped,
-                        report.n_in,
-                        report.n_ok,
-                        report.n_rejected,
-                        points,
-                        float(report.seconds),
-                        __version__,
-                        committed_ts,
-                    )
-                ],
-                METRICS_SCHEMA,
-            )
+            row = (batch_id, report.n_units_total, report.n_units_skipped, report.n_in,
+                   report.n_ok, report.n_rejected, points, float(report.seconds),
+                   __version__, committed_ts)
+            metrics_df = local_frame(spark, [row], METRICS_SCHEMA)
             self._commit(
                 spark,
                 "job_metrics",
                 lambda: self.metrics.append(metrics_df, summary=summary),
                 fail_after_commit_of,
             )
-        for b, d in sorted(todo):
-            n_in, n_r = units[(b, d)]
-            self._write_marker(
-                b, d, batch_id, {"n_in": int(n_in), "n_rejected": int(n_r)}, scope
-            )
+        if mode == "overwrite":
+            for b, d in sorted(todo):
+                n_in, n_r = units[(b, d)]
+                self._write_marker(b, d, batch_id, {"n_in": int(n_in), "n_rejected": int(n_r)})
         return report
 
     # -- read-side finalization ----------------------------------------------
@@ -722,14 +686,14 @@ class RollupPipeline:
         (TableIO.delete_partitions on the ``tier`` and ``date`` partition
         columns — no data rewritten, O(partitions) driver work); pass
         ``vacuum=True`` to also reclaim the bytes.  Returns files expired
-        per tier.
+        per tier; a pass that expires nothing commits no snapshot.
         """
         cutoffs, expired = self._retention(retention_days, as_of)
         snap = self.rollup.delete_partitions(expired, summary={"retention_cutoff": cutoffs})
         if vacuum:
             self.rollup.vacuum()
         out = dict.fromkeys(cutoffs, 0)
-        for f in snap.removed_files:
+        for f in snap.removed_files if snap else []:
             out[partition_values(f)["tier"]] += 1
         return out
 

@@ -212,11 +212,12 @@ class IcebergTableIO:
         self._writer(df, summary).overwrite(cond)
         return self.snapshot()
 
-    def delete_partitions(self, predicate, summary: dict | None = None) -> IcebergSnapshot:
+    def delete_partitions(self, predicate, summary: dict | None = None) -> IcebergSnapshot | None:
         """Metadata-only partition expiry.  ``predicate`` is the same
         ``dict[str, str] -> bool`` callable the parquet TableIO takes;
         matching partitions are removed via a partition-aligned DELETE
-        (Iceberg executes it as a metadata delete — no data rewritten)."""
+        (Iceberg executes it as a metadata delete — no data rewritten).
+        Returns None, and commits nothing, when no partition matches."""
         if not self.exists():
             return None
         parts = (
@@ -230,6 +231,8 @@ class IcebergTableIO:
             for r in parts
             if predicate({c: str(r[c]) for c in self.partition_cols})
         ]
+        if not doomed:
+            return None
         for r in doomed:
             cond = " AND ".join(
                 f"{c} = '{r[c]}'" for c in self.partition_cols

@@ -230,7 +230,7 @@ class TableIO:
         added = self._publish(stage, rels, uuid.uuid4().hex[:8])
         return self._commit("overwrite_where", added, removed, summary or {})
 
-    def delete_partitions(self, predicate, summary: dict | None = None) -> Snapshot:
+    def delete_partitions(self, predicate, summary: dict | None = None) -> Snapshot | None:
         """Metadata-only partition drop (retention expiry — the Iceberg
         ``DROP PARTITION`` / delete-where-on-partition-cols analogue):
         files whose hive partition values match ``predicate`` (a callable
@@ -238,13 +238,16 @@ class TableIO:
         rewritten or touched.  Physical bytes are reclaimed later by
         :meth:`vacuum` — the same two-phase shape as Iceberg
         ``expire_snapshots`` + orphan-file cleanup, so a reader pinned to
-        an older snapshot keeps working until vacuum."""
+        an older snapshot keeps working until vacuum.  Returns None, and
+        commits nothing, when no file matches."""
         prev = self.snapshot()
         removed = (
             [f for f in prev.all_files if predicate(partition_values(f))]
             if prev
             else []
         )
+        if not removed:
+            return None
         return self._commit("delete_partitions", [], removed, summary or {})
 
     def compact(self, spark: SparkSession, min_files: int = 2) -> Snapshot | None:

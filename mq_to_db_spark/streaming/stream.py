@@ -115,6 +115,26 @@ def run_stream_foreach_batch(
     return writer.start()
 
 
+def _pipeline_batch(pipeline, prefix, finalize_every_n_batches=None, max_batches=None):
+    """The ``foreachBatch`` body both pipeline streams share: micro-batch
+    ``k`` runs ``pipeline.run(mode="append")`` as batch
+    ``f"{prefix}-{k:06d}"`` — Spark's ``batch_id`` is stable across
+    retries, so a recovery replay carries the same id and is a no-op once
+    acked — then, every ``finalize_every_n_batches``-th micro-batch,
+    :meth:`finalize`.  Micro-batches with id ≥ ``max_batches`` are
+    delivered but not processed."""
+
+    def _batch(df, batch_id):
+        k = int(batch_id)
+        if max_batches is not None and k >= max_batches:
+            return
+        pipeline.run(df.sparkSession, df, batch_id=f"{prefix}-{k:06d}", mode="append")
+        if finalize_every_n_batches and (k + 1) % finalize_every_n_batches == 0:
+            pipeline.finalize(df.sparkSession)
+
+    return _batch
+
+
 def run_streaming_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -126,18 +146,18 @@ def run_streaming_pipeline(
 ):
     """The reference's full ingest loop in streaming form: each
     micro-batch of delivered turns runs the COMPLETE RollupPipeline batch
-    — validate → dead-letter → tier cascade → lineage/metrics → ack —
-    in ``mode="append"`` (per-batch partials + batch-scoped acks), so
+    — validate → dead-letter → tier cascade → lineage/metrics (the ack)
+    — in ``mode="append"`` (per-batch partials, one ack per batch), so
 
-      * a micro-batch replayed on recovery is a no-op (its batch-scoped
-        markers exist; Spark's foreachBatch batch_id is stable across
-        retries),
+      * a micro-batch replayed on recovery is a no-op (its ``job_metrics``
+        commit already holds its batch id; Spark's foreachBatch batch_id
+        is stable across retries),
       * a unit whose turns span micro-batches accumulates appended
         partials that the read-side merge (``read_rollup``) finalizes
         exactly — no late-data loss to the batch mode's global unit skip.
 
     Effectively-once end to end: streaming-source checkpoint (which files
-    were delivered) × batch-scoped unit acks (which work was committed).
+    were delivered) × per-batch acks (which work was committed).
 
     ``finalize_every_n_batches=N`` bounds append-mode read amplification
     while the stream flows: after every Nth micro-batch the pipeline's
@@ -151,20 +171,10 @@ def run_streaming_pipeline(
     rewrite cost (tier-sized, never raw) against scan-only reads between
     appends.
     """
-
-    def _batch(df, batch_id):
-        pipeline.run(
-            df.sparkSession, df, batch_id=f"stream-{int(batch_id):06d}", mode="append"
-        )
-        if (
-            finalize_every_n_batches
-            and (int(batch_id) + 1) % finalize_every_n_batches == 0
-        ):
-            pipeline.finalize(df.sparkSession)
-
     return run_stream_foreach_batch(
-        spark, input_path, checkpoint_path, _batch, available_now,
-        max_files_per_trigger,
+        spark, input_path, checkpoint_path,
+        _pipeline_batch(pipeline, "stream", finalize_every_n_batches),
+        available_now, max_files_per_trigger,
     )
 
 
@@ -267,10 +277,11 @@ def run_rate_pipeline(
 ):
     """:func:`run_streaming_pipeline` over the live rate source: every
     micro-batch of delivered turns runs the COMPLETE RollupPipeline in
-    ``mode="append"`` with batch-scoped acks — the same effectively-once
-    contract (source checkpoint × unit acks), now with no files anywhere
-    on the ingest path.  The stream is unbounded (a subscription, not a
-    drain): callers stop it explicitly or via :func:`await_batches`.
+    ``mode="append"`` with one ack per batch — the same effectively-once
+    contract (source checkpoint × per-batch acks), now with no files
+    anywhere on the ingest path.  The stream is unbounded (a
+    subscription, not a drain): callers stop it explicitly or via
+    :func:`await_batches`.
 
     ``max_batches`` (test/drain harness): micro-batches with id ≥ the
     bound are delivered but NOT processed — so however racy the eventual
@@ -278,22 +289,11 @@ def run_rate_pipeline(
     poll and the stop taking effect, and a stop can kill a batch
     mid-commit), nothing past the bound can reach the warehouse and the
     committed prefix stays exactly reconstructable."""
-
-    def _batch(df, batch_id):
-        if max_batches is not None and int(batch_id) >= max_batches:
-            return
-        pipeline.run(
-            df.sparkSession, df, batch_id=f"rate-{int(batch_id):06d}", mode="append"
-        )
-        if (
-            finalize_every_n_batches
-            and (int(batch_id) + 1) % finalize_every_n_batches == 0
-        ):
-            pipeline.finalize(df.sparkSession)
-
     stream = read_rate_turns(spark, rows_per_batch, num_partitions)
     return (
-        stream.writeStream.foreachBatch(_batch)
+        stream.writeStream.foreachBatch(
+            _pipeline_batch(pipeline, "rate", finalize_every_n_batches, max_batches)
+        )
         .option("checkpointLocation", checkpoint_path)
         .trigger(processingTime="0 seconds")
         .start()

@@ -87,8 +87,8 @@ def test_pipeline_commits_under_bound(spark, tmp_path):
 
 
 def test_pipeline_timeout_aborts_before_ack(spark, tmp_path):
-    """A sink commit that blows its bound fails the batch BEFORE any ack
-    marker is written, so a redelivery replays the whole batch — the
+    """A sink commit that blows its bound fails the batch BEFORE its ack
+    (the job_metrics commit), so a redelivery replays the whole batch — the
     at-least-once story a reference statement timeout produces."""
     from mq_to_db_spark.config import EngineConfig
     from mq_to_db_spark.fixtures.generator import generate_transcripts_pdf
@@ -115,11 +115,11 @@ def test_pipeline_timeout_aborts_before_ack(spark, tmp_path):
     )
     with pytest.raises(QueryTimeoutError):
         pipe.run(spark, df, batch_id="b1", mode="append")
-    assert pipe.committed_units("b1") == set()  # no ack escaped
+    assert not pipe.metrics.has_batch("b1")  # no ack escaped
 
     # redelivery with the bound lifted, on plain IO (the slow wrapper was
     # the fault injector), replays cleanly end-to-end
     pipe2 = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=2))
     report = pipe2.run(spark, df, batch_id="b1", mode="append")
     assert report.n_in == 200
-    assert len(pipe2.committed_units("b1")) == report.n_units_total
+    assert pipe2.metrics.has_batch("b1")

@@ -34,7 +34,7 @@ def _read(pipe, spark, dim="global", tier="1h"):
 
 def test_append_replay_after_crash_window_is_exact(spark, tmp_path):
     """Crash AFTER the rollup and lineage commits but BEFORE the
-    batch-scoped markers, then replay the same batch_id (what
+    job_metrics ack, then replay the same batch_id (what
     foreachBatch recovery does): the replayed appends must be skipped
     per-table via the snapshot ledger — the read-side merge must NOT double-count (ADVICE r02
     medium: TableIO.append was not idempotent)."""
@@ -46,9 +46,9 @@ def test_append_replay_after_crash_window_is_exact(spark, tmp_path):
             spark, b2, batch_id="s-1", mode="append",
             fail_after_commit_of="lineage",
         )
-    # crash window: the rollup table carries s-1 partials, no markers exist
+    # crash window: the rollup table carries s-1 partials, no ack exists
     assert pipe.rollup.has_batch("s-1")
-    assert pipe.committed_units("s-1") == set()
+    assert not pipe.metrics.has_batch("s-1")
     # recovery replay of the SAME micro-batch
     pipe.run(spark, b2, batch_id="s-1", mode="append")
 

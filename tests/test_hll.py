@@ -137,6 +137,23 @@ def test_small_p_alpha_is_standard_constant(spark):
             hll_estimate(sk, p=bad)
 
 
+def test_register_index_past_p_gives_null_estimate(spark):
+    """A p = 8 sketch read at p = 4 holds register indices ≥ 16, which
+    would make the zero-register count negative: its ``n_zero_regs`` and
+    ``estimate`` are NULL, while the same sketch read at its own p is
+    estimated as usual."""
+    n = 200
+    sk = hll_sketch(_df(spark, n), [], "uid", p=8, tier="1d")
+    regs = _py_registers([f"u{i}" for i in range(n)], p=8)
+    assert max(regs) >= 16 and len(regs) > 16
+    bad = hll_estimate(sk, p=4).first()
+    assert bad["n_regs_set"] == len(regs)
+    assert bad["n_zero_regs"] is None and bad["estimate"] is None
+    good = hll_estimate(sk, p=8).first()
+    assert good["n_zero_regs"] == 256 - len(regs)
+    assert good["estimate"] == _py_estimate(regs, p=8)
+
+
 def test_plan_two_hash_aggs_no_python(spark):
     """Build = exactly the two hash aggregations the docstring claims
     (j-register max, then map assembly), all JVM-side."""

@@ -93,17 +93,27 @@ def clean(spark, dirty, tmp_path_factory):
 @pytest.mark.parametrize("mode", MODES)
 @pytest.mark.parametrize("seam", SEAMS)
 def test_kill_and_resume_no_dupes_no_missing(spark, dirty, pipe, clean, seam, mode):
-    """Crash right after one table's commit but before the ack (markers),
-    then replay the same batch_id — broker redelivery, or a streaming
-    recovery replay in append mode: the store must equal one clean
-    delivery, with no rolled-up point, reject, lineage or metrics row
-    missing or duplicated — effectively-once."""
+    """Crash right after one table's commit, then replay the same
+    batch_id — broker redelivery, or a streaming recovery replay in
+    append mode: the store must equal one clean delivery, with no
+    rolled-up point, reject, lineage or metrics row missing or
+    duplicated — effectively-once.  The job_metrics commit is an append
+    batch's ack, so a crash right after it leaves an acked batch whose
+    replay is a full skip; every other crash is before the ack (overwrite
+    mode acks with unit markers, written last)."""
+    acked = mode == "append" and seam == "job_metrics"
     with pytest.raises(RuntimeError, match="injected failure"):
         pipe.run(spark, dirty, batch_id="b1", mode=mode, fail_after_commit_of=seam)
-    assert pipe.committed_units("b1" if mode == "append" else None) == set()  # nothing acked
+    assert pipe.committed_units() == set()
+    assert pipe.metrics.has_batch("b1") == (seam == "job_metrics")
+    versions = {name: t.current_version() for name, t in pipe.tables.items()}
 
     r2 = pipe.run(spark, dirty, batch_id="b1", mode=mode)
-    assert r2.n_units_skipped == 0  # full redelivery
+    if acked:  # full skip: no table gains a snapshot
+        assert r2.n_units_skipped == r2.n_units_total > 0
+        assert {name: t.current_version() for name, t in pipe.tables.items()} == versions
+    else:  # full redelivery
+        assert r2.n_units_skipped == 0
     tiers, rest = _stored(spark, pipe)
     want_tiers, want_rest = clean[mode]
     for key, (keys, want) in want_tiers.items():

@@ -42,7 +42,7 @@ def test_turns_from_values_schema_and_key(spark):
 
 def test_rate_pipeline_effectively_once_vs_batch_oracle(spark, tmp_path):
     """Live subscription end-to-end: N micro-batches of the rate stream
-    through the FULL RollupPipeline (append mode, batch-scoped acks)
+    through the FULL RollupPipeline (append mode, one ack per batch)
     equal the batch-mode pipeline over the replayed value range."""
     from mq_to_db_spark.config import EngineConfig
     from mq_to_db_spark.plans.pipeline import RollupPipeline
@@ -64,13 +64,8 @@ def test_rate_pipeline_effectively_once_vs_batch_oracle(spark, tmp_path):
     assert done >= want_batches
     done = want_batches  # batches past the bound were no-ops by construction
 
-    # batch-scoped ack markers for every committed micro-batch
-    scopes = {
-        fn.split("__", 1)[0]
-        for fn in pipe.markers.list()
-        if "__" in fn and fn.endswith(".json")
-    }
-    assert {f"rate-{i:06d}" for i in range(want_batches)} <= scopes
+    # a job_metrics ack for every committed micro-batch
+    assert {f"rate-{i:06d}" for i in range(want_batches)} <= pipe.metrics.batch_ids()
 
     got = pipe.read_rollup(spark, "global", "1h").orderBy("bucket_start").toPandas()
 

@@ -76,6 +76,17 @@ def test_retention_is_metadata_only_then_vacuum_reclaims(spark, transcripts, pip
     assert tbl.read(spark).filter("dim = 'global'").count() == n_current_before_vacuum
 
 
+def test_retention_that_expires_nothing_commits_nothing(spark, transcripts, pipe):
+    """A pass whose cutoff precedes every date drops no file: it returns
+    zeros and leaves the table at its current snapshot."""
+    as_of = max(
+        r.d for r in transcripts.select(F.to_date("ts").alias("d")).distinct().collect()
+    )
+    v = pipe.rollup.current_version()
+    assert pipe.apply_retention({"1m": 3650, "1d": 3650}, as_of=as_of) == {"1m": 0, "1d": 0}
+    assert pipe.rollup.current_version() == v
+
+
 def test_retention_unknown_tier_raises(pipe):
     with pytest.raises(ValueError):
         pipe.apply_retention({"5s": 1}, as_of=dt.date(2025, 1, 1))

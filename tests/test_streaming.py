@@ -171,13 +171,9 @@ def test_streaming_pipeline_append_mode_effectively_once(spark, tmp_path):
     )
     assert q.awaitTermination(360), "availableNow drain did not finish in time"
 
-    # two genuine micro-batches ran (batch-scoped ack markers for both)
-    scopes = {
-        fn.split("__", 1)[0]
-        for fn in pipe.markers.list()
-        if "__" in fn and fn.endswith(".json")
-    }
-    assert scopes == {"stream-000000", "stream-000001"}, scopes
+    # two genuine micro-batches ran (one job_metrics ack for each)
+    acked = pipe.metrics.batch_ids()
+    assert acked == {"stream-000000", "stream-000001"}, acked
 
     got = (
         pipe.read_rollup(spark, "global", "1h")
