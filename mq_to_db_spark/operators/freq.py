@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.rollup import bucket_col
+from mq_to_db_spark.operators.rollup import bucket_col, sorted_count_map
 
 DEPTH = 4
 WIDTH = 1024
@@ -79,13 +79,7 @@ def cms_rollup(
     )
     return per_cell.groupBy(*keys, "bucket_start").agg(
         (F.sum("_cnt") / F.lit(depth)).cast("long").alias("n"),
-        F.map_from_entries(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("_cell").alias("key"), F.col("_cnt").alias("value"))
-                )
-            )
-        ).alias("cms"),
+        sorted_count_map("_cell", "_cnt").alias("cms"),
     )
 
 
@@ -103,17 +97,7 @@ def cascade_cms(
         .groupBy(*keys, "bucket_start", "_cell")
         .agg(F.sum("_cnt").alias("_cnt"))
         .groupBy(*keys, "bucket_start")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("_cell").alias("key"), F.col("_cnt").alias("value")
-                        )
-                    )
-                )
-            ).alias("cms")
-        )
+        .agg(sorted_count_map("_cell", "_cnt").alias("cms"))
     )
     return meta.join(merged, [*keys, "bucket_start"], "inner")
 

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.rollup import bucket_col
+from mq_to_db_spark.operators.rollup import bucket_col, sorted_count_map
 from mq_to_db_spark.operators.sampling import hash_u60
 
 __all__ = ["hll_sketch", "hll_merge", "hll_estimate"]
@@ -106,11 +106,7 @@ def hll_sketch(
         .groupBy(*keys, "bucket_start", "_j")
         .agg(F.max("_rho").alias("_mr"))
     )
-    return regs.groupBy(*keys, "bucket_start").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("_j", "_mr")))
-        ).alias("hll")
-    )
+    return regs.groupBy(*keys, "bucket_start").agg(sorted_count_map("_j", "_mr").alias("hll"))
 
 
 def hll_merge(
@@ -133,11 +129,7 @@ def hll_merge(
         ex.groupBy(*keys, "bucket_start", "_j")
         .agg(F.max("_mr").alias("_mr"))
         .groupBy(*keys, "bucket_start")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("_j", "_mr")))
-            ).alias("hll")
-        )
+        .agg(sorted_count_map("_j", "_mr").alias("hll"))
     )
 
 

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.rollup import bucket_col
+from mq_to_db_spark.operators.rollup import bucket_col, sorted_count_map
 
 __all__ = [
     "exp_bucket_idx",
@@ -101,29 +101,8 @@ def exp_histogram(
             "zero_count"
         ),
         F.sum("_sum").alias("sum"),
-        _filtered_map(F.col("_sign") == 1).alias("hist"),
-        _filtered_map(F.col("_sign") == -1).alias("neg_hist"),
-    )
-
-
-def _filtered_map(cond: Column) -> Column:
-    """Map of (``_idx`` → ``_cnt``) over only the grouped rows matching
-    ``cond`` — NULL placeholders from the non-matching rows are filtered
-    before assembly, entries sorted for deterministic replay."""
-    return F.map_from_entries(
-        F.array_sort(
-            F.filter(
-                F.collect_list(
-                    F.when(
-                        cond,
-                        F.struct(
-                            F.col("_idx").alias("key"), F.col("_cnt").alias("value")
-                        ),
-                    )
-                ),
-                lambda e: e.isNotNull(),
-            )
-        )
+        sorted_count_map("_idx", "_cnt", F.col("_sign") == 1).alias("hist"),
+        sorted_count_map("_idx", "_cnt", F.col("_sign") == -1).alias("neg_hist"),
     )
 
 
@@ -148,24 +127,7 @@ def cascade_exp_histogram(
             .groupBy(*keys, "bucket_start", "_idx")
             .agg(F.sum("_cnt").alias("_cnt"))
             .groupBy(*keys, "bucket_start")
-            .agg(
-                F.map_from_entries(
-                    F.array_sort(
-                        F.filter(
-                            F.collect_list(
-                                F.when(
-                                    F.col("_idx").isNotNull(),
-                                    F.struct(
-                                        F.col("_idx").alias("key"),
-                                        F.col("_cnt").alias("value"),
-                                    ),
-                                )
-                            ),
-                            lambda e: e.isNotNull(),
-                        )
-                    )
-                ).alias(col)
-            )
+            .agg(sorted_count_map("_idx", "_cnt", F.col("_idx").isNotNull()).alias(col))
         )
 
     out = meta.join(_merge("hist"), [*keys, "bucket_start"], "inner").join(

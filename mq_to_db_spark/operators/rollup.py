@@ -110,6 +110,18 @@ def bucket_col(tier: str, ts_col: str = "ts"):
     return F.date_trunc(_TRUNC_UNIT[tier], F.col(ts_col))
 
 
+def sorted_count_map(key: str, value: str, where=None):
+    """Aggregate: the grouped rows' ``key → value`` map, entries sorted
+    by key so a replay assembles the identical map — the one assembly
+    behind every count-map sketch (CMS, DDSketch, exp-histogram, HLL).
+    Only rows satisfying ``where`` (a Column, default all) contribute:
+    ``collect_list`` skips the NULL entries the others become."""
+    entry = F.struct(F.col(key).alias("key"), F.col(value).alias("value"))
+    if where is not None:
+        entry = F.when(where, entry)
+    return F.map_from_entries(F.array_sort(F.collect_list(entry)))
+
+
 def rollup_distinct_sketch(
     df: DataFrame,
     tier: str,

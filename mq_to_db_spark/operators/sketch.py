@@ -50,7 +50,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.rollup import bucket_col
+from mq_to_db_spark.operators.rollup import bucket_col, sorted_count_map
 
 
 def _gamma(alpha: float) -> float:
@@ -95,19 +95,7 @@ def quantile_sketch_rollup(
                 F.sum(F.when(F.col("_idx").isNull(), F.col("_cnt"))), F.lit(0)
             ).alias("zero_count"),
             F.sum("_cnt").alias("n"),
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("_idx").isNotNull(),
-                            F.struct(
-                                F.col("_idx").alias("key"),
-                                F.col("_cnt").alias("value"),
-                            ),
-                        )
-                    )
-                )
-            ).alias("sketch"),
+            sorted_count_map("_idx", "_cnt", F.col("_idx").isNotNull()).alias("sketch"),
         )
     )
 
@@ -133,15 +121,7 @@ def cascade_quantile_sketch(
         .groupBy(*keys, "bucket_start", "_idx")
         .agg(F.sum("_cnt").alias("_cnt"))
         .groupBy(*keys, "bucket_start")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("_idx").alias("key"), F.col("_cnt").alias("value"))
-                    )
-                )
-            ).alias("sketch")
-        )
+        .agg(sorted_count_map("_idx", "_cnt").alias("sketch"))
     )
     join_keys = [*keys, "bucket_start"]
     return meta.join(merged_counts, join_keys, "left").withColumn(

@@ -62,10 +62,12 @@ Fixed cost per micro-batch (it sets ack latency, not the data):
     Arrow table → a ``LocalRelation``): building or reading them runs
     no Spark job and no Python worker, and ``committed_at`` is stored as
     UTC whatever the driver process's ``TZ``;
-  * table reads hand Spark the manifest's leaf files, and ``get_spark``
-    pins the parallel-listing threshold so that listing them stays a
-    local stat per file on the driver instead of a distributed job per
-    read once a table holds more than 32 files.
+  * table reads hand Spark only the manifest's leaf files whose hive
+    partition values match the read's region (``TableIO.read(where=)``;
+    a coarse-tier read never indexes the fine tier's files), and
+    ``get_spark`` pins the parallel-listing threshold so that listing
+    them stays a local stat per file on the driver instead of a
+    distributed job per read once a read covers more than 32 files.
 """
 
 from __future__ import annotations
@@ -154,6 +156,12 @@ class BatchReport:
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, default=str)
+
+
+def _iso_date(d) -> str:
+    """A date bound (``dt.date`` or ISO string) as the ``date=``
+    partition value it is compared with."""
+    return dt.date.fromisoformat(str(d)[:10]).isoformat()
 
 
 def conv_bucket_col(conv_buckets: int):
@@ -468,8 +476,9 @@ class RollupPipeline:
         """Final (cross-unit merged) rollup for a dimension/tier.
 
         The rollup table holds every tier's and dimension's per-unit
-        partials; the read keeps only this ``tier`` and ``dim`` partition
-        (pruned at file-listing time) and the final merge groups by
+        partials; the read hands Spark only the files of this ``tier``
+        and ``dim`` (selected from the snapshot's manifest by
+        ``TableIO.read(where=)``) and the final merge groups by
         (bucket_start, keys) over tier-sized data.  For dim="conv" the
         merge is a near-no-op (a conversation lives in one conv_bucket,
         but a 1h/1d bucket can span two dates only at day boundaries —
@@ -483,17 +492,22 @@ class RollupPipeline:
         all of them.
 
         ``start_date`` / ``end_date`` (inclusive) cut on the ``date``
-        partition column BEFORE the merge — a dashboard's "last 7 days"
-        panel then reads 7 partition directories, not the table (the
-        filter lands on the hive partition value, so Catalyst prunes at
-        file-listing time)."""
+        partition value in the same file selection, BEFORE the merge — a
+        dashboard's "last 7 days" panel then hands Spark 7 dates' files,
+        not the table's."""
         keys = DIMENSIONS[dim]
         tbl = self.rollup
-        df = dim_slice(tbl.read(spark).filter(F.col("tier") == tier), DIMENSIONS, dim)
-        if start_date is not None:
-            df = df.filter(F.col("date") >= F.lit(str(start_date)).cast("date"))
-        if end_date is not None:
-            df = df.filter(F.col("date") <= F.lit(str(end_date)).cast("date"))
+        lo, hi = (None if d is None else _iso_date(d) for d in (start_date, end_date))
+
+        def region(pv: dict[str, str]) -> bool:
+            return (
+                pv["tier"] == tier
+                and pv["dim"] == dim
+                and (lo is None or pv["date"] >= lo)
+                and (hi is None or pv["date"] <= hi)
+            )
+
+        df = dim_slice(tbl.read(spark, where=region), DIMENSIONS, dim)
         snap = tbl.snapshot()
         if snap is not None and tier in (snap.summary or {}).get("finalized", ()):
             final = df.select("bucket_start", *keys, *AGG_COL_NAMES)
@@ -508,7 +522,6 @@ class RollupPipeline:
         spark: SparkSession,
         tiers: list[str] | None = None,
         dates: list | None = None,
-        vacuum: bool = False,
     ) -> dict[str, object]:
         """Collapse accumulated per-batch partials into ONE finalized row
         per (bucket, series) — the MERGE-INTO analogue for append /
@@ -542,22 +555,29 @@ class RollupPipeline:
         ``finalized`` (older dates may still hold multiple partials), so
         reads keep the merging path — just over collapsed row counts.
 
+        The read and the commit cover one region: the files the merge
+        reads are exactly the files the snapshot removes.  Superseded
+        files stay on disk until :meth:`TableIO.vacuum`, so readers
+        pinned to older snapshots keep working (Iceberg's two-phase
+        ``expire_snapshots``).
+
         Returns the commit per table (``{}`` when the table is empty).
         """
         tiers = list(tiers or self.cfg.tiers)
         tbl = self.rollup
         if not tbl.exists():
             return {}
-        src = tbl.read(spark).filter(F.col("tier").isin(tiers))
         if dates is None:
+            dset = None
             summary = {"finalized": tiers}
         else:
-            dvals = sorted(
-                {d if isinstance(d, dt.date) else dt.date.fromisoformat(str(d)) for d in dates}
-            )
-            dset = [d.isoformat() for d in dvals]
-            src = src.filter(F.col("date").isin(dvals))
+            dset = sorted({_iso_date(d) for d in dates})
             summary = {"finalize_dates": {t: dset for t in tiers}}
+
+        def region(pv: dict[str, str]) -> bool:
+            return pv["tier"] in tiers and (dset is None or pv["date"] in dset)
+
+        src = tbl.read(spark, where=region)
         series_keys = list(dict.fromkeys(k for ks in DIMENSIONS.values() for k in ks))
         conv_bucket = conv_bucket_col(self.cfg.conv_buckets)
         merged = (
@@ -569,17 +589,7 @@ class RollupPipeline:
                 F.when(F.col("dim") == "conv", conv_bucket).otherwise(F.lit(0)),
             )
         )
-        snap = tbl.overwrite_where(
-            merged,
-            lambda pv: pv["tier"] in tiers and (dates is None or pv["date"] in dset),
-            summary=summary,
-        )
-        if vacuum:
-            # reclaim the superseded partial files (two-phase, like
-            # Iceberg expire_snapshots: readers pinned to older
-            # snapshots stay valid until this runs)
-            tbl.vacuum()
-        return {ROLLUP_TABLE: snap}
+        return {ROLLUP_TABLE: tbl.overwrite_where(merged, region, summary=summary)}
 
     def invalidated_dates(self, tiers: list[str] | None = None) -> dict[str, list[str]]:
         """Per tier: the ``date`` partitions whose logical content changed
@@ -624,9 +634,7 @@ class RollupPipeline:
                     dirty[pv["tier"]].add(pv["date"])
         return {t: sorted(ds) for t, ds in dirty.items() if ds}
 
-    def refresh_invalidated(
-        self, spark: SparkSession, vacuum: bool = False
-    ) -> dict[str, list[str]]:
+    def refresh_invalidated(self, spark: SparkSession) -> dict[str, list[str]]:
         """Refresh the continuous aggregates: incrementally re-finalize
         ONLY the date partitions invalidated since each tier's last
         finalize (:meth:`invalidated_dates`), in one :meth:`finalize` —
@@ -641,7 +649,7 @@ class RollupPipeline:
         inv = self.invalidated_dates()
         if inv:
             dates = sorted({d for ds in inv.values() for d in ds})
-            self.finalize(spark, tiers=list(inv), dates=dates, vacuum=vacuum)
+            self.finalize(spark, tiers=list(inv), dates=dates)
         return inv
 
     def compact(self, spark: SparkSession, min_files: int = 2) -> dict[str, int]:
@@ -674,7 +682,6 @@ class RollupPipeline:
         self,
         retention_days: dict[str, int],
         as_of: dt.date,
-        vacuum: bool = False,
     ) -> dict[str, int]:
         """Tiered retention (the downsample-then-expire contract of a
         TSDB: raw/fine tiers age out first, coarse tiers live longest —
@@ -684,14 +691,12 @@ class RollupPipeline:
 
         Expiry is ONE *metadata-only* partition drop for every tier
         (TableIO.delete_partitions on the ``tier`` and ``date`` partition
-        columns — no data rewritten, O(partitions) driver work); pass
-        ``vacuum=True`` to also reclaim the bytes.  Returns files expired
-        per tier; a pass that expires nothing commits no snapshot.
+        columns — no data rewritten, O(partitions) driver work);
+        ``self.rollup.vacuum()`` reclaims the bytes.  Returns files
+        expired per tier; a pass that expires nothing commits no snapshot.
         """
         cutoffs, expired = self._retention(retention_days, as_of)
         snap = self.rollup.delete_partitions(expired, summary={"retention_cutoff": cutoffs})
-        if vacuum:
-            self.rollup.vacuum()
         out = dict.fromkeys(cutoffs, 0)
         for f in snap.removed_files if snap else []:
             out[partition_values(f)["tier"]] += 1
@@ -708,11 +713,9 @@ class RollupPipeline:
         subsequent ``apply_retention`` removes exactly these files
         (asserted by test)."""
         cutoffs, expired = self._retention(retention_days, as_of)
-        snap = self.rollup.snapshot()
         doomed: dict[str, list[str]] = {t: [] for t in cutoffs}
-        for pv in map(partition_values, snap.all_files if snap else []):
-            if expired(pv):
-                doomed[pv["tier"]].append(pv["date"])
+        for pv in map(partition_values, self.rollup.files(expired)):
+            doomed[pv["tier"]].append(pv["date"])
         return {
             t: {"cutoff": cutoffs[t], "dates": sorted(set(ds)), "n_files": len(ds)}
             for t, ds in doomed.items()

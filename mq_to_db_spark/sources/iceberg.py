@@ -25,6 +25,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -117,6 +118,19 @@ class IcebergTableIO:
             summary=dict(row.summary or {}),
         )
 
+    def files(self, where=None, version: int | None = None) -> list[str]:
+        """The data files of a snapshot (default: current) whose partition
+        values satisfy ``where`` — ``TableIO.files`` parity, over the
+        ``.files`` metadata table's partition tuples."""
+        snap = self.snapshot(version)
+        if snap is None or where is None or not self.partition_cols:
+            return snap.all_files if snap and (where is None or where({})) else []
+        rows = self.spark.sql(
+            f"SELECT file_path, partition FROM {self.table}.files VERSION AS OF {snap.snapshot_id}"
+        ).collect()
+        cols = self.partition_cols
+        return [r.file_path for r in rows if where({c: str(r.partition[c]) for c in cols})]
+
     # -- write paths ----------------------------------------------------------
 
     def _ensure_table(self, df: DataFrame) -> None:
@@ -127,8 +141,6 @@ class IcebergTableIO:
         # data lands via the caller's normal append/overwrite path
         writer = df.limit(0).writeTo(self.table).using("iceberg")
         if self.partition_cols:
-            from pyspark.sql import functions as F
-
             writer = writer.partitionedBy(*[F.col(c) for c in self.partition_cols])
         writer.create()
 
@@ -177,67 +189,44 @@ class IcebergTableIO:
 
     def overwrite_all(self, df: DataFrame, summary: dict | None = None) -> IcebergSnapshot:
         self._ensure_table(df)
-        from pyspark.sql import functions as F
-
         self._writer(df, summary).overwrite(F.lit(True))
         return self.snapshot()
+
+    def _partitions_where(self, df: DataFrame, predicate):
+        """``predicate`` (the ``TableIO.files`` callable) compiled over
+        ``df``'s distinct partition tuples into an OR of partition
+        equalities, which Iceberg resolves from manifest partition values;
+        None when no partition matches."""
+        cond = None
+        for r in df.select(*self.partition_cols).distinct().collect():
+            if predicate({c: str(r[c]) for c in self.partition_cols}):
+                part = F.lit(True)
+                for c in self.partition_cols:
+                    part = part & (F.col(c) == F.lit(r[c]))
+                cond = part if cond is None else cond | part
+        return cond
 
     def overwrite_where(self, df, predicate, summary: dict | None = None) -> IcebergSnapshot:
         """Atomic replace-where via Iceberg's native
         ``overwrite(condition)`` — one snapshot, delete + append
-        together.  ``predicate`` is the same ``dict[str, str] -> bool``
-        callable the parquet TableIO takes; it is evaluated against the
-        table's current distinct partition tuples and compiled into the
-        overwrite condition (an OR of partition-equality conjunctions,
-        which Iceberg resolves as a metadata delete)."""
+        together, over the partitions ``predicate`` selects."""
         self._ensure_table(df)
-        from pyspark.sql import functions as F
-
-        parts = (
-            self.spark.table(self.table)
-            .select(*self.partition_cols)
-            .distinct()
-            .collect()
-        )
-        doomed = [
-            r for r in parts
-            if predicate({c: str(r[c]) for c in self.partition_cols})
-        ]
-        cond = F.lit(False)
-        for r in doomed:
-            c_and = F.lit(True)
-            for c in self.partition_cols:
-                c_and = c_and & (F.col(c) == F.lit(r[c]))
-            cond = cond | c_and
-        self._writer(df, summary).overwrite(cond)
+        cond = self._partitions_where(self.spark.table(self.table), predicate)
+        self._writer(df, summary).overwrite(F.lit(False) if cond is None else cond)
         return self.snapshot()
 
     def delete_partitions(self, predicate, summary: dict | None = None) -> IcebergSnapshot | None:
-        """Metadata-only partition expiry.  ``predicate`` is the same
-        ``dict[str, str] -> bool`` callable the parquet TableIO takes;
-        matching partitions are removed via a partition-aligned DELETE
+        """Metadata-only partition expiry: one ``overwrite(condition)``
+        snapshot with no rows drops the partitions ``predicate`` selects
         (Iceberg executes it as a metadata delete — no data rewritten).
         Returns None, and commits nothing, when no partition matches."""
         if not self.exists():
             return None
-        parts = (
-            self.spark.table(self.table)
-            .select(*self.partition_cols)
-            .distinct()
-            .collect()
-        )
-        doomed = [
-            r
-            for r in parts
-            if predicate({c: str(r[c]) for c in self.partition_cols})
-        ]
-        if not doomed:
+        table = self.spark.table(self.table)
+        cond = self._partitions_where(table, predicate)
+        if cond is None:
             return None
-        for r in doomed:
-            cond = " AND ".join(
-                f"{c} = '{r[c]}'" for c in self.partition_cols
-            )
-            self.spark.sql(f"DELETE FROM {self.table} WHERE {cond}")
+        self._writer(table.limit(0), summary).overwrite(cond)
         return self.snapshot()
 
     def compact(self, spark: SparkSession, min_files: int = 2):
@@ -262,11 +251,20 @@ class IcebergTableIO:
 
     # -- read paths -----------------------------------------------------------
 
-    def read(self, spark: SparkSession, version: int | None = None, schema=None) -> DataFrame:
+    def read(
+        self, spark: SparkSession, version: int | None = None, schema=None, *, where=None
+    ) -> DataFrame:
+        """Scan at a snapshot (default: current), keeping only the
+        partitions ``where`` selects (see :meth:`_partitions_where`)."""
         if version is None:
-            return spark.table(self.table)
-        snap = self.snapshot(version)
-        return spark.sql(f"SELECT * FROM {self.table} VERSION AS OF {snap.snapshot_id}")
+            df = spark.table(self.table)
+        else:
+            snap = self.snapshot(version)
+            df = spark.sql(f"SELECT * FROM {self.table} VERSION AS OF {snap.snapshot_id}")
+        if where is None:
+            return df
+        cond = self._partitions_where(df, where)
+        return df.filter(F.lit(False) if cond is None else cond)
 
     def read_incremental(
         self, spark: SparkSession, from_version: int, to_version: int | None = None, schema=None

@@ -36,9 +36,11 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 from pyspark.sql.functions import col as F_col
 
 from mq_to_db_spark.session import local_frame
@@ -68,6 +70,14 @@ class Snapshot:
     removed_files: list[str]
     all_files: list[str]
     summary: dict
+    #: the columns a read returns (``StructType.jsonValue``): a read of a
+    #: file subset keeps the table's types, where Spark would infer them
+    #: from the subset's hive values (``tier=1d`` alone reads as a double)
+    schema: dict | None = None
+
+    def select(self, where=None) -> list[str]:
+        """The files whose hive values satisfy ``where`` (all if None)."""
+        return [f for f in self.all_files if where is None or where(partition_values(f))]
 
 
 class TableIO:
@@ -121,6 +131,14 @@ class TableIO:
             self._batch_ids = ids
         return self._batch_ids
 
+    def files(self, where=None, version: int | None = None) -> list[str]:
+        """The files of a snapshot (default: current) whose hive values
+        satisfy ``where`` (a ``dict[str, str] -> bool`` callable over
+        :func:`partition_values`; None: every file) — the selection behind
+        every read and every commit that removes files."""
+        snap = self.snapshot(version)
+        return snap.select(where) if snap else []
+
     def has_batch(self, batch_id: str) -> bool:
         """True when a committed snapshot already carries ``batch_id`` —
         the guard that makes per-batch appends idempotent under crash
@@ -130,8 +148,8 @@ class TableIO:
 
     # -- write paths ----------------------------------------------------------
 
-    def _stage(self, df: DataFrame) -> tuple[str, list[str]]:
-        """Write df to a staging dir; return (staging_root, relative files)."""
+    def _stage(self, df: DataFrame) -> tuple[str, list[str], dict]:
+        """Write df to a staging dir; return (root, relative files, read schema)."""
         stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
         writer = df.write.mode("overwrite")
         if self.partition_cols:
@@ -142,25 +160,11 @@ class TableIO:
             for fn in files:
                 if fn.endswith(".parquet"):
                     rels.append(os.path.relpath(os.path.join(root, fn), stage))
-        return stage, rels
+        data = [f for f in df.schema if f.name not in self.partition_cols]
+        schema = T.StructType(data + [df.schema[c] for c in self.partition_cols])
+        return stage, rels, schema.jsonValue()
 
-    def _publish(self, stage: str, rels: list[str], prefix: str) -> list[str]:
-        """Publish staged files into data/ under a unique prefix via the
-        AtomicStore; return new relative paths (relative to data/)."""
-        out = []
-        for rel in rels:
-            # keep partition dirs (they encode partition values), uniquify
-            # the leaf name so concurrent/replayed commits never collide.
-            d, leaf = os.path.split(rel)
-            new_rel = os.path.join(d, f"{prefix}-{leaf}")
-            self.store.publish_file(
-                os.path.join(stage, rel), "data/" + new_rel.replace(os.sep, "/")
-            )
-            out.append(new_rel)
-        shutil.rmtree(stage, ignore_errors=True)
-        return out
-
-    def _commit(self, operation: str, added: list[str], removed: list[str], summary: dict) -> Snapshot:
+    def _commit(self, operation: str, added: list, removed: list, summary: dict, schema=None) -> Snapshot:
         parent = self.snapshot()
         prev_files = parent.all_files if parent else []
         removed_set = set(removed)
@@ -176,6 +180,7 @@ class TableIO:
             removed_files=removed,
             all_files=all_files,
             summary=summary,
+            schema=schema or (parent.schema if parent else None),
         )
         self.store.write_text_atomic(f"_manifests/v{v:08d}.json", json.dumps(snap.__dict__))
         # the atomic commit point:
@@ -185,10 +190,27 @@ class TableIO:
             self._batch_ids.add(b)
         return snap
 
+    def _write(self, operation: str, staged: tuple, removed: list[str], summary) -> Snapshot:
+        """Publish staged files into data/ through the AtomicStore and
+        commit them in one snapshot that also drops ``removed`` — the
+        stage-publish-commit step of every commit that adds data."""
+        stage, rels, schema = staged
+        prefix = uuid.uuid4().hex[:8]
+        added = []
+        for rel in rels:
+            # keep partition dirs (they encode partition values), uniquify
+            # the leaf name so concurrent/replayed commits never collide.
+            d, leaf = os.path.split(rel)
+            new_rel = os.path.join(d, f"{prefix}-{leaf}")
+            self.store.publish_file(
+                os.path.join(stage, rel), "data/" + new_rel.replace(os.sep, "/")
+            )
+            added.append(new_rel)
+        shutil.rmtree(stage, ignore_errors=True)
+        return self._commit(operation, added, removed, summary or {}, schema)
+
     def append(self, df: DataFrame, summary: dict | None = None) -> Snapshot:
-        stage, rels = self._stage(df)
-        added = self._publish(stage, rels, uuid.uuid4().hex[:8])
-        return self._commit("append", added, [], summary or {})
+        return self._write("append", self._stage(df), [], summary)
 
     def overwrite_partitions(self, df: DataFrame, summary: dict | None = None) -> Snapshot:
         """Dynamic partition overwrite: atomically replace every logical
@@ -196,56 +218,33 @@ class TableIO:
         Requires ``partition_cols``."""
         if not self.partition_cols:
             raise ValueError("overwrite_partitions requires partition_cols")
-        stage, rels = self._stage(df)
-        touched = {os.path.dirname(r) for r in rels}
-        prev = self.snapshot()
-        removed = (
-            [f for f in prev.all_files if os.path.dirname(f) in touched] if prev else []
-        )
-        added = self._publish(stage, rels, uuid.uuid4().hex[:8])
-        return self._commit("overwrite_partitions", added, removed, summary or {})
+        staged = self._stage(df)
+        touched = {tuple(partition_values(r).values()) for r in staged[1]}
+        removed = self.files(lambda pv: tuple(pv.values()) in touched)
+        return self._write("overwrite_partitions", staged, removed, summary)
 
     def overwrite_all(self, df: DataFrame, summary: dict | None = None) -> Snapshot:
-        stage, rels = self._stage(df)
-        prev = self.snapshot()
-        removed = list(prev.all_files) if prev else []
-        added = self._publish(stage, rels, uuid.uuid4().hex[:8])
-        return self._commit("overwrite_all", added, removed, summary or {})
+        return self._write("overwrite_all", self._stage(df), self.files(), summary)
 
     def overwrite_where(self, df, predicate, summary: dict | None = None) -> Snapshot:
         """Atomic replace-where (Iceberg ``overwrite(condition)``): ONE
-        snapshot removes every file whose hive partition values match
-        ``predicate`` (a ``dict[str, str] -> bool`` callable) AND adds
-        ``df``'s files.  The caller guarantees ``df`` holds the full
-        replacement row-set for the matched region — this is the
-        incremental-finalization primitive (rewrite only the partitions
-        whose partial count grew, not the whole table)."""
-        stage, rels = self._stage(df)
-        prev = self.snapshot()
-        removed = (
-            [f for f in prev.all_files if predicate(partition_values(f))]
-            if prev
-            else []
-        )
-        added = self._publish(stage, rels, uuid.uuid4().hex[:8])
-        return self._commit("overwrite_where", added, removed, summary or {})
+        snapshot removes the files ``predicate`` selects (see
+        :meth:`files`) AND adds ``df``'s files.  The caller guarantees
+        ``df`` holds the full replacement row-set for the matched region
+        — this is the incremental-finalization primitive (rewrite only
+        the partitions whose partial count grew, not the whole table)."""
+        return self._write("overwrite_where", self._stage(df), self.files(predicate), summary)
 
     def delete_partitions(self, predicate, summary: dict | None = None) -> Snapshot | None:
         """Metadata-only partition drop (retention expiry — the Iceberg
         ``DROP PARTITION`` / delete-where-on-partition-cols analogue):
-        files whose hive partition values match ``predicate`` (a callable
-        ``dict[str, str] -> bool``) leave the new snapshot; no data is
-        rewritten or touched.  Physical bytes are reclaimed later by
-        :meth:`vacuum` — the same two-phase shape as Iceberg
-        ``expire_snapshots`` + orphan-file cleanup, so a reader pinned to
-        an older snapshot keeps working until vacuum.  Returns None, and
-        commits nothing, when no file matches."""
-        prev = self.snapshot()
-        removed = (
-            [f for f in prev.all_files if predicate(partition_values(f))]
-            if prev
-            else []
-        )
+        the files ``predicate`` selects (see :meth:`files`) leave the new
+        snapshot; no data is rewritten or touched.  Physical bytes are
+        reclaimed later by :meth:`vacuum` — the same two-phase shape as
+        Iceberg ``expire_snapshots`` + orphan-file cleanup, so a reader
+        pinned to an older snapshot keeps working until vacuum.  Returns
+        None, and commits nothing, when no file matches."""
+        removed = self.files(predicate)
         if not removed:
             return None
         return self._commit("delete_partitions", [], removed, summary or {})
@@ -259,25 +258,19 @@ class TableIO:
         normal atomic snapshot commit: readers pinned to older snapshots
         keep working until :meth:`vacuum` (Iceberg's ``rewrite_data_files``
         contract).  Returns None when nothing needs compacting."""
-        snap = self.snapshot()
-        if snap is None:
-            return None
-        from collections import Counter
-
-        per_part = Counter(os.path.dirname(f) for f in snap.all_files)
-        doomed = {d for d, n in per_part.items() if n >= min_files}
+        per_part = Counter(tuple(partition_values(f).values()) for f in self.files())
+        doomed = {k for k, n in per_part.items() if n >= min_files}
         if not doomed:
             return None
-        files = [f for f in snap.all_files if os.path.dirname(f) in doomed]
-        df = self._read_files(spark, files)
+        df = self.read(spark, where=lambda pv: tuple(pv.values()) in doomed)
+        summary = {"compaction": sum(per_part[k] for k in doomed)}
         if self.partition_cols:
             # hash-partition on the partition cols → all rows of one
             # logical partition land in one task → one output file each
             df = df.repartition(*[F_col(c) for c in self.partition_cols])
-            return self.overwrite_partitions(df, summary={"compaction": len(files)})
+            return self.overwrite_partitions(df, summary=summary)
         # unpartitioned table: single-file rewrite of everything
-        full = self._read_files(spark, snap.all_files).coalesce(1)
-        return self.overwrite_all(full, summary={"compaction": len(snap.all_files)})
+        return self.overwrite_all(df.coalesce(1), summary=summary)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Physically delete data files unreferenced by the newest
@@ -300,7 +293,9 @@ class TableIO:
 
     # -- read paths -----------------------------------------------------------
 
-    def _read_files(self, spark: SparkSession, files: list[str], schema=None) -> DataFrame:
+    def _read_files(self, spark: SparkSession, files: list[str], schema, snap) -> DataFrame:
+        if schema is None and snap and snap.schema:
+            schema = T.StructType.fromJson(snap.schema)
         if not files:
             if schema is None:
                 raise ValueError("empty table and no schema given")
@@ -311,12 +306,16 @@ class TableIO:
             reader = reader.schema(schema)
         return reader.parquet(*paths)
 
-    def read(self, spark: SparkSession, version: int | None = None, schema=None) -> DataFrame:
-        """Scan the table at a snapshot (default: current).  Partition
-        columns come back as real columns (hive-style dirs + basePath) so
-        partition pruning works on them."""
+    def read(
+        self, spark: SparkSession, version: int | None = None, schema=None, *, where=None
+    ) -> DataFrame:
+        """Scan the table at a snapshot (default: current), handing Spark
+        only the files ``where`` selects (see :meth:`files`).  Partition
+        columns come back as real columns (hive-style dirs + basePath).
+        When ``where`` matches nothing the frame is empty but keeps the
+        table's columns."""
         snap = self.snapshot(version)
-        return self._read_files(spark, snap.all_files if snap else [], schema=schema)
+        return self._read_files(spark, snap.select(where) if snap else [], schema, snap)
 
     def read_incremental(
         self, spark: SparkSession, from_version: int, to_version: int | None = None, schema=None
@@ -333,4 +332,4 @@ class TableIO:
                     f"incremental read across non-append snapshot v{v} ({snap.operation})"
                 )
             files.extend(snap.added_files)
-        return self._read_files(spark, files, schema=schema)
+        return self._read_files(spark, files, schema, self.snapshot(to_v))

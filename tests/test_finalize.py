@@ -193,7 +193,7 @@ def test_read_rollup_date_bounds_prune_partitions(spark, tmp_path):
 
 
 def test_pipeline_compact_and_finalize_vacuum(spark, tmp_path):
-    """compact() collapses per-batch files; finalize(vacuum=True)
+    """compact() collapses per-batch files; vacuum() after finalize
     reclaims superseded partials — results unchanged by either."""
     b1, b2, _full = _halves(spark)
     pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
@@ -205,7 +205,8 @@ def test_pipeline_compact_and_finalize_vacuum(spark, tmp_path):
     assert any(n > 0 for n in rewritten.values()), rewritten
     pd.testing.assert_frame_equal(_read(pipe, spark, "global", "1h"), want, check_dtype=False)
 
-    pipe.finalize(spark, tiers=["1h"], vacuum=True)
+    pipe.finalize(spark, tiers=["1h"])
+    pipe.rollup.vacuum()
     tbl = pipe.rollup
     live = set(tbl.snapshot().all_files)
     on_disk = {k[len("data/"):] for k in tbl.store.list("data")}

@@ -4,6 +4,9 @@ set is derived from the snapshot log alone (Iceberg-style incremental
 scan), refresh touches only invalidated dates, equals a from-scratch
 recompute, is idempotent, and is NOT spooked by compaction."""
 
+import os
+from urllib.parse import unquote, urlparse
+
 import pandas as pd
 
 from mq_to_db_spark.config import EngineConfig
@@ -95,3 +98,34 @@ def test_refresh_idempotent_and_compaction_not_invalidating(spark, tmp_path):
     pd.testing.assert_frame_equal(
         _read(pipe, spark), _read(ref, spark), check_dtype=False
     )
+
+
+def test_refresh_reads_exactly_the_files_it_replaces(spark, tmp_path, monkeypatch):
+    """finalize states its region once: the files its read hands Spark
+    are the files its overwrite_where removes, a strict subset of the
+    table when late data dirtied one date."""
+    pdf = generate_transcripts_pdf(1500, seed=7)
+    early, late = _split_by_date(pdf)
+    pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
+    pipe.run(spark, spark.createDataFrame(early, schema=TRANSCRIPT_SCHEMA),
+             batch_id="b-0", mode="append")
+    pipe.refresh_invalidated(spark)
+    pipe.run(spark, spark.createDataFrame(late, schema=TRANSCRIPT_SCHEMA),
+             batch_id="b-late", mode="append")
+    before = pipe.rollup.snapshot()
+
+    tbl, read, handed = pipe.rollup, pipe.rollup.read, []
+
+    def spy(*args, **kwargs):
+        df = read(*args, **kwargs)
+        handed.extend(
+            os.path.relpath(unquote(urlparse(u).path), tbl.data_dir) for u in df.inputFiles()
+        )
+        return df
+
+    monkeypatch.setattr(tbl, "read", spy)
+    pipe.refresh_invalidated(spark)
+    snap = tbl.snapshot()
+    assert snap.operation == "overwrite_where"
+    assert sorted(handed) == sorted(snap.removed_files)
+    assert 0 < len(snap.removed_files) < len(before.all_files)

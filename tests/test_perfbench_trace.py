@@ -69,3 +69,23 @@ def test_traced_mode_hooks_run_on_every_pipeline_path(spark, tmp_path, spans):
     assert "pipeline.committed_units.markers_listed" in tracer.counters
     # uninstall put the engine's own functions back
     assert not hasattr(RollupPipeline.run, "__wrapped__")
+
+
+def test_traced_mode_hooks_run_on_a_date_bounded_rollup_read(spark, tmp_path, spans):
+    """perfbench's ``count_read_files`` post-hook reads ``TableIO.read``'s
+    ``version`` argument positionally; a partition-selected read runs
+    through it."""
+    pdf = generate_transcripts_pdf(300, seed=9)
+    pipe = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=4))
+    pipe.run(spark, spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA), batch_id="mb0", mode="append")
+    day = pdf["ts"].min().date()
+    tracer = spans.Tracer(spark.sparkContext)
+    uninstall = spans.install(tracer)
+    try:
+        n = pipe.read_rollup(spark, "global", "1h", start_date=day, end_date=day).count()
+    finally:
+        uninstall()
+    assert n > 0
+    reads = [s for s in tracer.spans if s["name"] == "tableio.read"]
+    assert reads and all(s["files"] > 0 for s in reads)
+    assert "pipeline.read_rollup" in {s["name"] for s in tracer.spans}

@@ -113,3 +113,36 @@ def test_compact_unpartitioned_table(spark, tmp_path):
     snap = t.compact(spark)
     assert snap is not None and len(snap.all_files) == 1
     assert sorted(r.v for r in t.read(spark).collect()) == [0, 1, 2]
+
+
+def test_read_where_selects_partitions_with_table_types(spark, tmp_path):
+    """read(where=p) hands Spark only the files p selects and equals read()
+    filtered on the same hive values, with the table's column types even
+    where the matched values alone would infer others (``tier=1d`` alone
+    reads as a double); matching nothing gives an empty frame with the
+    table's columns.  An incremental read of a ``tier=1d``-only append
+    keeps the table's types too."""
+    t = TableIO(str(tmp_path / "t"), partition_cols=["tier", "d"])
+    rows = [(i, ("1m", "1h", "1d")[i % 3], f"2025-01-0{1 + i % 2}") for i in range(12)]
+    t.append(
+        spark.createDataFrame(rows, "id long, tier string, d string")
+        .withColumn("d", F.col("d").cast("date"))
+    )
+    full = t.read(spark)
+    for where, cond in (
+        (lambda pv: pv["tier"] == "1d", "tier = '1d'"),
+        (lambda pv: pv["tier"] != "1m" and pv["d"] == "2025-01-02", "tier != '1m' AND d = '2025-01-02'"),
+    ):
+        got = t.read(spark, where=where)
+        assert got.dtypes == full.dtypes
+        assert sorted(got.collect()) == sorted(full.filter(cond).collect())
+        assert len(got.inputFiles()) == len(t.files(where)) < len(full.inputFiles())
+    empty = t.read(spark, where=lambda pv: False)
+    assert empty.dtypes == full.dtypes and empty.count() == 0
+    v1 = t.current_version()
+    t.append(full.filter("tier = '1d'").withColumn("id", F.col("id") + 100))
+    inc = t.read_incremental(spark, from_version=v1)
+    assert inc.dtypes == full.dtypes
+    assert sorted(inc.collect()) == sorted(
+        full.filter("tier = '1d'").withColumn("id", F.col("id") + 100).collect()
+    )

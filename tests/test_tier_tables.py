@@ -8,7 +8,9 @@ micro-batch and of a refresh are pinned, so a stray action on the ack
 path shows up here."""
 
 import datetime as dt
+import os
 from collections import Counter
+from urllib.parse import unquote, urlparse
 
 import pytest
 
@@ -129,7 +131,9 @@ def test_refresh_is_one_overwrite_where(spark, fresh):
     # the read hands Spark more manifest-listed files than the default
     # parallel-listing threshold (32): still no listing job
     assert not [d for d in jobs if d.startswith("Listing")], jobs
-    assert len(jobs) == 3, jobs
+    # the manifest carries the table's schema, so the read runs no
+    # parquet schema-inference job
+    assert len(jobs) == 2, jobs
     assert sorted(inv) == ["1d", "1h", "1m"]
     after = _versions(pipe)
     assert {n: after[n] - before[n] for n in after} == {
@@ -175,3 +179,14 @@ def test_dimension_read_prunes_dim_partition(spark, appended):
     n_global_1h = sum(pv["tier"] == "1h" and pv["dim"] == "global" for pv in files)
     n_read = _scan_num_files(pipe.read_rollup(spark, "global", "1h"))
     assert 0 < n_read == n_global_1h < len(files), (n_read, n_global_1h, len(files))
+
+
+def test_tier_read_hands_spark_only_its_own_files(spark, appended):
+    pipe, _, _ = appended
+    snap = pipe.rollup.snapshot()
+    want = {f for f in snap.all_files if f.startswith("tier=1h/dim=global/")}
+    got = {
+        os.path.relpath(unquote(urlparse(u).path), pipe.rollup.data_dir)
+        for u in pipe.read_rollup(spark, "global", "1h").inputFiles()
+    }
+    assert want and got == want, (len(got), len(want), len(snap.all_files))
