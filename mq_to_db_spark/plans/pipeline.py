@@ -67,7 +67,14 @@ Fixed cost per micro-batch (it sets ack latency, not the data):
     a coarse-tier read never indexes the fine tier's files), and
     ``get_spark`` pins the parallel-listing threshold so that listing
     them stays a local stat per file on the driver instead of a
-    distributed job per read once a read covers more than 32 files.
+    distributed job per read once a read covers more than 32 files;
+  * a micro-batch's and a refresh's commits are small by Spark's own
+    measure (when the input's plan carries a size estimate, as file and
+    driver-side inputs do), so ``TableIO`` stages them through Arrow: one
+    ``toArrow`` job, then pyarrow writes one file per partition directory
+    (one file per side table).  Spark's writer would go through Hadoop's
+    local file system, which starts a ``chmod`` child process of the
+    driver JVM for every file and directory it creates.
 """
 
 from __future__ import annotations

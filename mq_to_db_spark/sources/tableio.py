@@ -19,6 +19,22 @@ emulating the Iceberg semantics the engine's design depends on:
     the same batch yields byte-identical table state (effectively-once on
     top of at-least-once reruns).
 
+How a commit's files are produced: every data-adding commit first writes
+``df`` into a fresh ``_staging/<uuid>`` dir, then publishes those files
+and commits the manifest.  A frame small by Spark's own measure (its
+optimized plan's size estimate within ``spark.sql.autoBroadcastJoinThreshold``,
+the size under which Spark broadcasts a relation) is collected as Arrow
+batches in one Spark job and written by pyarrow, one zstd file per
+partition directory; this is the ack path's case (a micro-batch's rollup
+partials, its side-table rows, a refresh's rewrite).  Hadoop's local file
+system, which Spark's writer goes through, starts a ``chmod`` child process
+of the driver JVM for every file and directory it creates (pip PySpark
+ships no native Hadoop library), and that, not parquet encoding, was most
+of a small commit's time.  Larger frames, which must not be held in driver
+memory, keep Spark's writer.  Both name the partition directories alike
+(:func:`partition_dir`), so predicates and partition overwrites compare
+them across commits.  A failed staging removes its dir.
+
 On a real cluster this class is swapped for
 ``sources.iceberg.IcebergTableIO`` (same interface, jar-gated —
 ``df.writeTo(tbl).overwritePartitions()`` / snapshot-range reads) via
@@ -45,6 +61,30 @@ from pyspark.sql.functions import col as F_col
 
 from mq_to_db_spark.session import local_frame
 from mq_to_db_spark.sources.store import LocalAtomicStore
+
+
+#: partition column types whose directory names :func:`partition_dir`
+#: spells as Spark's writer does (``str`` of the value, ISO dates)
+_ARROW_PARTITION_TYPES = (
+    T.StringType, T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DateType,
+)
+
+#: the characters Spark %-escapes in a partition directory name
+#: (``ExternalCatalogUtils.escapePathName``); it leaves spaces and
+#: non-ASCII characters as they are
+_ESCAPED = frozenset([*map(chr, range(1, 32)), *"\"#%'*/:=?[\\]^{", "\x7f"])
+
+
+def _escape(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in s)
+
+
+def partition_dir(col: str, value) -> str:
+    """The directory Spark's writer names for ``col = value``: escaped
+    name and value, and ``__HIVE_DEFAULT_PARTITION__`` for a null or
+    empty value (which both read back as null)."""
+    v = "" if value is None else str(value)
+    return f"{_escape(col)}={_escape(v) if v else '__HIVE_DEFAULT_PARTITION__'}"
 
 
 def partition_values(rel_path: str) -> dict[str, str]:
@@ -149,20 +189,75 @@ class TableIO:
     # -- write paths ----------------------------------------------------------
 
     def _stage(self, df: DataFrame) -> tuple[str, list[str], dict]:
-        """Write df to a staging dir; return (root, relative files, read schema)."""
+        """Write df to a fresh staging dir; return (root, relative files,
+        read schema).  A frame Spark itself would pull into the driver
+        goes through Arrow (:meth:`_stage_arrow`), any other through
+        Spark's writer; either way a failure removes the dir before it
+        propagates."""
         stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
+        try:
+            if self._driver_sized(df):
+                rels = self._stage_arrow(df, stage)
+            else:
+                rels = self._stage_spark(df, stage)
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
+        data = [f for f in df.schema if f.name not in self.partition_cols]
+        schema = T.StructType(data + [df.schema[c] for c in self.partition_cols])
+        return stage, rels, schema.jsonValue()
+
+    def _driver_sized(self, df: DataFrame) -> bool:
+        """True when Spark's size estimate of ``df``'s optimized plan is
+        within ``spark.sql.autoBroadcastJoinThreshold`` (the test Spark
+        applies before pulling a relation into the driver) and every
+        partition column has a type :func:`partition_dir` spells as
+        Spark does."""
+        types = [df.schema[c].dataType for c in self.partition_cols]
+        if not all(isinstance(t, _ARROW_PARTITION_TYPES) for t in types):
+            return False
+        limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        return 0 <= size <= limit
+
+    def _stage_arrow(self, df: DataFrame, stage: str) -> list[str]:
+        """One Spark job (``toArrow``) brings the rows to the driver;
+        pyarrow writes one zstd file per partition directory."""
+        import pyarrow.parquet as pq
+
+        table = df.toArrow()
+        groups: dict[str, list[int] | None] = {"": None}
+        if self.partition_cols:
+            names = []
+            for c in self.partition_cols:
+                values = table.column(c).to_pylist()
+                name = {v: partition_dir(c, v) for v in set(values)}
+                names.append([name[v] for v in values])
+            groups = {}
+            for i, dirs in enumerate(zip(*names)):
+                groups.setdefault(os.path.join(*dirs), []).append(i)
+            table = table.drop_columns(self.partition_cols)
+        rels = []
+        for d, rows in groups.items():
+            os.makedirs(os.path.join(stage, d), exist_ok=True)
+            rel = os.path.join(d, "part-00000.zstd.parquet")
+            part = table if rows is None else table.take(rows)
+            pq.write_table(part, os.path.join(stage, rel), compression="zstd")
+            rels.append(rel)
+        return rels
+
+    def _stage_spark(self, df: DataFrame, stage: str) -> list[str]:
+        """Spark's parquet writer: one file per task and partition."""
         writer = df.write.mode("overwrite")
         if self.partition_cols:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(stage)
-        rels = []
-        for root, _dirs, files in os.walk(stage):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    rels.append(os.path.relpath(os.path.join(root, fn), stage))
-        data = [f for f in df.schema if f.name not in self.partition_cols]
-        schema = T.StructType(data + [df.schema[c] for c in self.partition_cols])
-        return stage, rels, schema.jsonValue()
+        return [
+            os.path.relpath(os.path.join(root, fn), stage)
+            for root, _dirs, files in os.walk(stage)
+            for fn in files
+            if fn.endswith(".parquet")
+        ]
 
     def _commit(self, operation: str, added: list, removed: list, summary: dict, schema=None) -> Snapshot:
         parent = self.snapshot()
@@ -197,16 +292,18 @@ class TableIO:
         stage, rels, schema = staged
         prefix = uuid.uuid4().hex[:8]
         added = []
-        for rel in rels:
-            # keep partition dirs (they encode partition values), uniquify
-            # the leaf name so concurrent/replayed commits never collide.
-            d, leaf = os.path.split(rel)
-            new_rel = os.path.join(d, f"{prefix}-{leaf}")
-            self.store.publish_file(
-                os.path.join(stage, rel), "data/" + new_rel.replace(os.sep, "/")
-            )
-            added.append(new_rel)
-        shutil.rmtree(stage, ignore_errors=True)
+        try:
+            for rel in rels:
+                # keep partition dirs (they encode partition values), uniquify
+                # the leaf name so concurrent/replayed commits never collide.
+                d, leaf = os.path.split(rel)
+                new_rel = os.path.join(d, f"{prefix}-{leaf}")
+                self.store.publish_file(
+                    os.path.join(stage, rel), "data/" + new_rel.replace(os.sep, "/")
+                )
+                added.append(new_rel)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
         return self._commit(operation, added, removed, summary or {}, schema)
 
     def append(self, df: DataFrame, summary: dict | None = None) -> Snapshot:

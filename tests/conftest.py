@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 
@@ -15,6 +17,28 @@ from mq_to_db_spark.session import get_spark
 def spark():
     s = get_spark(app_name="mq_to_db_spark-tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture()
+def staged_through(spark):
+    """``staged_through(path)``: a context in which ``TableIO`` stages
+    every commit through ``path`` — ``"arrow"`` keeps Spark's broadcast
+    threshold (the tests' frames are all below it), ``"spark"`` sets it
+    to -1 so Spark's writer takes every frame.  The setting is restored
+    on exit."""
+
+    @contextlib.contextmanager
+    def through(path):
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        if path == "spark":
+            spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return through
 
 
 @pytest.fixture(scope="session")

@@ -30,6 +30,18 @@ def spans():
 
 
 def test_traced_mode_hooks_run_on_every_pipeline_path(spark, tmp_path, spans):
+    _check_hooks_on_every_pipeline_path(spark, tmp_path, spans)
+
+
+def test_traced_mode_hooks_run_on_sparks_writer(spark, tmp_path, spans, staged_through):
+    """The same with every commit staged by Spark's writer (frames above
+    the broadcast threshold): ``count_added`` reads the footers of the
+    files either staging path wrote."""
+    with staged_through("spark"):
+        _check_hooks_on_every_pipeline_path(spark, tmp_path, spans)
+
+
+def _check_hooks_on_every_pipeline_path(spark, tmp_path, spans):
     df = spark.createDataFrame(
         inject_dirty_rows(generate_transcripts_pdf(300, seed=9)), schema=TRANSCRIPT_SCHEMA
     )

@@ -109,6 +109,14 @@ def test_append_batch_adds_one_snapshot_per_table(appended):
     assert {n: after[n] - between[n] for n in after} == {n: 1 for n in after}
 
 
+def test_first_delivery_adds_one_file_per_side_table(appended):
+    """A micro-batch's dead-letter, lineage and metrics rows are each
+    staged as one file, not one per task of the frame's plan."""
+    pipe, _, _ = appended
+    for name in ("dead_letter", "lineage", "job_metrics"):
+        assert len(pipe.tables[name].snapshot(1).added_files) == 1, name
+
+
 def test_rollup_table_holds_every_tier_and_dimension(appended):
     pipe, _, _ = appended
     held = {(pv["tier"], pv["dim"]) for pv in _files(pipe)}
