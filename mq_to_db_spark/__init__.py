@@ -48,8 +48,6 @@ _PUBLIC = {
     "ivf_topk": "mq_to_db_spark.operators.similarity",
     "knn_join_brute": "mq_to_db_spark.operators.similarity",
     "knn_join_lsh": "mq_to_db_spark.operators.similarity",
-    "build_lsh_index": "mq_to_db_spark.operators.similarity",
-    "ann_lsh_topk_indexed": "mq_to_db_spark.operators.similarity",
     "range_locf": "mq_to_db_spark.operators.rangewin",
     "IcebergTableIO": "mq_to_db_spark.sources.iceberg",
     "run_streaming_pipeline": "mq_to_db_spark.streaming.stream",
@@ -70,10 +68,8 @@ _PUBLIC = {
     "pack_sequences": "mq_to_db_spark.operators.packing",
     "write_training_shards": "mq_to_db_spark.operators.packing",
     "top_k_per_window": "mq_to_db_spark.operators.topk",
-    "top_tools_hourly": "mq_to_db_spark.operators.topk",
     # counters / downsampling / chunking / decontamination (round 3)
     "counter_increase": "mq_to_db_spark.operators.counters",
-    "counter_rate": "mq_to_db_spark.operators.counters",
     "downsample_ohlc": "mq_to_db_spark.operators.downsample",
     "chunk_spans": "mq_to_db_spark.operators.packing",
     "contamination_hits": "mq_to_db_spark.operators.contamination",

@@ -5,9 +5,9 @@ codegen'd, so they run inside the same whole-stage pipeline as the scan
 (100 TB-safe: these are per-row narrow transforms, no shuffle).
 
 Covers the driver-graded text components: language ID (stopword/script
-n-gram heuristic), quality scoring (length/punct/stopword ratios), token
-counting (whitespace + BPE-ish regex), document fingerprinting
-(normalized hash).
+n-gram heuristic), quality signals (length/punct/stopword ratios), token
+counting (whitespace), document fingerprinting (md5 of normalized text,
+winnowing).
 """
 
 from __future__ import annotations
@@ -30,19 +30,6 @@ def token_count_ws(col) -> Column:
     return F.when(c.isNull() | (t == ""), F.lit(0)).otherwise(
         F.regexp_count(t, F.lit(r"\s+")) + F.lit(1)
     ).cast("long")
-
-
-#: BPE-ish pre-tokenizer pattern (GPT-2 style, simplified to RE2-safe
-#: constructs): contractions | words | digit runs | punct runs.
-_BPE_PATTERN = r"'(?:s|t|re|ve|m|ll|d)|[A-Za-zÀ-ÿĀ-￿]+|[0-9]{1,3}|[^\sA-Za-z0-9À-￿]+"
-
-
-def token_count_bpe(col) -> Column:
-    """BPE-ish token count: counts pre-tokenizer matches (the unit a BPE
-    vocabulary would then split further) — a deterministic, library-free
-    proxy for LLM token counts."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(F.regexp_count(c, F.lit(_BPE_PATTERN)), F.lit(0)).cast("long")
 
 
 # -- language ID --------------------------------------------------------------
@@ -107,21 +94,6 @@ def quality_features(col) -> dict[str, Column]:
         "q_upper_ratio": upper / safe_len,
         "q_stopword_ratio": F.try_divide(stop, F.greatest(n_tokens, F.lit(1.0))),
     }
-
-
-def quality_score(col) -> Column:
-    """Composite quality score in [0, 1]: rewards natural-language length
-    band, stopword presence, moderate punctuation.  Deterministic and
-    monotone in each signal — a filterable training-data heuristic, not a
-    learned model."""
-    f = quality_features(col)
-    len_score = F.least(f["q_len"] / F.lit(500.0), F.lit(1.0))
-    stop_score = F.least(f["q_stopword_ratio"] * 4.0, F.lit(1.0))
-    punct_pen = F.greatest(F.lit(1.0) - f["q_punct_ratio"] * 4.0, F.lit(0.0))
-    digit_pen = F.greatest(F.lit(1.0) - f["q_digit_ratio"] * 4.0, F.lit(0.0))
-    return (
-        (len_score * 0.3 + stop_score * 0.3 + punct_pen * 0.2 + digit_pen * 0.2)
-    ).alias("quality_score")
 
 
 # -- repetition / boilerplate signals (Gopher-style filters) ------------------
@@ -196,36 +168,6 @@ def fingerprint_md5(col) -> Column:
     """Content fingerprint: md5 of normalized text (md5 chosen over
     xxhash64 so a DuckDB oracle computes the identical value)."""
     return F.md5(normalize_text(col))
-
-
-def fingerprint_rolling(col, window: int = 8) -> Column:
-    """Rolling-hash document sketch: min-hash over character n-gram window
-    hashes of the normalized text — a winnowing-style representative
-    fingerprint (same idea as Schleimer et al. MOSS winnowing, reduced to
-    global-min selection so it stays a pure expression).
-
-    Built as a ``zip_with`` chain over the character array, NOT
-    ``transform(sequence, i -> substr(norm, …))``: sub-expressions
-    inside a higher-order-function lambda re-evaluate PER ELEMENT, so
-    the substr form re-ran the whole regex-normalize chain once per
-    gram position — O(len²) regex work per row (the same quadratic
-    fixed in operators/importance.py).  The chain references the char
-    array a constant ``window`` times per row instead."""
-    norm = normalize_text(col)
-    chars = F.filter(F.split(norm, ""), lambda x: x != F.lit(""))
-    grams = chars
-    for j in range(1, window):
-        shifted = F.slice(
-            chars, j + 1, F.greatest(F.size(chars) - j, F.lit(1))
-        )
-        # concat null-propagates, so tail positions (no full window)
-        # become null and are filtered out below
-        grams = F.zip_with(grams, shifted, lambda a, b: F.concat(a, b))
-    grams = F.filter(grams, lambda g: g.isNotNull())
-    # short docs (< window chars): keep the old degenerate behavior of
-    # hashing the whole (padded-by-truncation) text rather than nothing
-    grams = F.when(F.size(grams) > 0, grams).otherwise(F.array(norm))
-    return F.array_min(F.transform(grams, lambda g: F.xxhash64(g)))
 
 
 import functools

@@ -178,19 +178,6 @@ def _keyless_lag(
     )
 
 
-def counter_rate(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tier: str = "1h",
-    tiebreak: tuple[str, ...] = (),
-) -> DataFrame:
-    """``rate()`` convenience view: per-bucket reset-aware rate only."""
-    inc = counter_increase(df, keys, ts_col, value_col, tier, tiebreak)
-    return inc.select(*keys, "bucket_start", "rate_per_sec")
-
-
 def rate_extrapolated(
     df: DataFrame,
     keys: list[str],

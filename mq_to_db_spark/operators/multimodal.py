@@ -1,124 +1,23 @@
-"""Multimodal column handling: image/audio/video as opaque binary columns
-with typed metadata.
+"""Image payloads as binary columns: a real PPM (P6) codec and the
+contract-checkable image plane built on it.
 
-Decode is REAL for the self-describing uncompressed formats that need
-only numpy — WAV/PCM16 audio, PPM (P6) images, and an uncompressed
-frame-sequence video container (concatenated PPM frames) — including
-resize (nearest-neighbor index gather), audio resample (linear interp),
-and frame extraction (header-offset splits).  Compressed codecs
-(png/jpeg/opus/h264) require PIL/ffmpeg, absent in this container, and
-stay stubbed behind a clearly-marked ``NotImplementedError``; swapping
-one in changes a codec-function body, not the plan.  The Spark-side
-plumbing — schemas, Arrow batch shapes, ``mapInPandas`` signatures,
-partition sizing — is identical either way and fully tested.
-
-Scale notes: media rows are large → ``media_repartition`` targets a
-bytes-per-partition budget (row-group-sized tasks, not row-count-sized);
-feature extraction is a ``mapInPandas`` narrow pass so it pipelines with
-the scan and never shuffles the payload bytes.
+:func:`synth_ppm_from_ids` makes one deterministic PPM image per input
+id and :func:`image_byte_stats` decodes each payload back to exact
+integer pixel statistics.  Both are ``mapInPandas`` narrow passes, so
+payload bytes pipeline with the scan and never shuffle.  PPM needs only
+numpy, and every byte is integer arithmetic on the id, so the contract
+query ``multimodal_features`` replays the whole plane — synth → encode
+→ Arrow transfer → decode — against a DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import hashlib
-import io
-import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# Optional compressed-codec backends: used when installed, otherwise the
-# corresponding mimes raise NotImplementedError (this container ships
-# neither).  Import once at module load — a per-row import would sit on
-# the mapInPandas hot path.
-try:  # pragma: no cover - absent in the build container
-    from PIL import Image as _PIL_Image
-except ImportError:
-    _PIL_Image = None
-try:  # pragma: no cover - absent in the build container
-    import soundfile as _soundfile
-except ImportError:
-    _soundfile = None
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("codec", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
-FEATURE_DIM = 64
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-
-# -- real numpy codecs (no external libraries) --------------------------------
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
-    """Mono PCM16 WAV encode (RIFF header + int16 frames) — pure numpy."""
-    pcm = np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
-    data = (pcm * 32767.0).astype("<i2").tobytes()
-    n = len(data)
-    hdr = (
-        b"RIFF"
-        + (36 + n).to_bytes(4, "little")
-        + b"WAVEfmt "
-        + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little")  # PCM
-        + (1).to_bytes(2, "little")  # mono
-        + sample_rate.to_bytes(4, "little")
-        + (sample_rate * 2).to_bytes(4, "little")  # byte rate
-        + (2).to_bytes(2, "little")  # block align
-        + (16).to_bytes(2, "little")  # bits/sample
-        + b"data"
-        + n.to_bytes(4, "little")
-    )
-    return hdr + data
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """Mono PCM16 WAV decode → (float64 samples in [-1, 1], sample_rate)."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    sample_rate = int.from_bytes(payload[24:28], "little")
-    # scan chunks for 'data' (fmt is fixed-position in our writer but not
-    # in the wild)
-    pos = 12
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        clen = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        if cid == b"data":
-            raw = payload[pos + 8 : pos + 8 + clen]
-            return np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32767.0, sample_rate
-        pos += 8 + clen + (clen & 1)
-    raise ValueError("no data chunk")
 
 
 def encode_ppm(pixels: np.ndarray) -> bytes:
@@ -144,353 +43,6 @@ def decode_ppm(payload: bytes) -> np.ndarray:
     raw = payload[i3 + 1 : i3 + 1 + w * h * 3]
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
 
-
-def resize_nearest(pixels: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize — one integer index gather, no loops."""
-    h, w = pixels.shape[:2]
-    yi = (np.arange(height) * h // height).clip(0, h - 1)
-    xi = (np.arange(width) * w // width).clip(0, w - 1)
-    return pixels[yi[:, None], xi[None, :]]
-
-
-def resample_linear(samples: np.ndarray, src_rate: int, dst_rate: int) -> np.ndarray:
-    """Linear-interpolation audio resample (np.interp — vectorized)."""
-    if src_rate == dst_rate:
-        return np.asarray(samples, dtype=np.float64)
-    n_out = max(1, int(round(len(samples) * dst_rate / src_rate)))
-    t_out = np.arange(n_out, dtype=np.float64) * (src_rate / dst_rate)
-    return np.interp(t_out, np.arange(len(samples), dtype=np.float64), samples)
-
-
-#: uncompressed video container: PPM frames laid back-to-back
-PPMSEQ_MIME = "video/x-ppmseq"
-
-
-def split_ppmseq(payload: bytes) -> list[bytes]:
-    """Split a concatenated-PPM video payload into frame payloads by
-    parsing each header's declared pixel length (no search, O(frames))."""
-    frames = []
-    pos = 0
-    while pos < len(payload):
-        if payload[pos : pos + 2] != b"P6":
-            raise ValueError(f"bad frame header at byte {pos}")
-        hdr_end = payload.index(b"\n", payload.index(b"\n", payload.index(b"\n", pos) + 1) + 1) + 1
-        parts = payload[pos:hdr_end].split()
-        w, h = int(parts[1]), int(parts[2])
-        end = hdr_end + w * h * 3
-        frames.append(payload[pos:end])
-        pos = end
-    return frames
-
-
-#: compressed mimes decodable by an optional backend, when present
-_PIL_MIMES = ("image/png", "image/jpeg", "image/webp", "image/gif", "image/bmp")
-_SOUNDFILE_MIMES = ("audio/flac", "audio/ogg", "audio/opus", "audio/mpeg", "audio/mp3")
-
-
-def real_decode(payload: bytes, mime: str) -> np.ndarray:
-    """Decode a payload to a float64 feature-source array.
-
-    Real for the numpy-only formats (WAV/PCM16, PPM, ppmseq video —
-    decoded first frame) always; compressed images/audio decode through
-    PIL / soundfile WHEN INSTALLED (optional imports at module top) —
-    in this container neither is present, so those mimes raise
-    NotImplementedError (the clearly-marked environmental stub; video
-    H264 stays stubbed pending ffmpeg)."""
-    if mime in ("audio/wav", "audio/x-wav"):
-        samples, _rate = decode_wav(payload)
-        return samples
-    if mime in ("image/x-portable-pixmap", "image/ppm"):
-        return decode_ppm(payload).astype(np.float64).ravel() / 255.0
-    if mime == PPMSEQ_MIME:
-        return decode_ppm(split_ppmseq(payload)[0]).astype(np.float64).ravel() / 255.0
-    if mime in _PIL_MIMES and _PIL_Image is not None:
-        rgb = np.asarray(_PIL_Image.open(io.BytesIO(payload)).convert("RGB"))
-        return rgb.astype(np.float64).ravel() / 255.0
-    if mime in _SOUNDFILE_MIMES and _soundfile is not None:
-        data, _rate = _soundfile.read(io.BytesIO(payload), dtype="float64")
-        if getattr(data, "ndim", 1) > 1:
-            data = data.mean(axis=1)  # downmix to mono
-        return np.asarray(data, dtype=np.float64)
-    raise NotImplementedError(
-        f"decoding {mime!r} requires PIL/soundfile/ffmpeg, not available in "
-        "this environment; use deterministic_fake_decode for plumbing tests"
-    )
-
-
-def deterministic_fake_decode(payload: bytes, mime: str) -> np.ndarray:
-    """Deterministic stand-in: sha256-seeded pseudo-pixels.  Same payload →
-    same 'decoded' array, so downstream tests are exact."""
-    digest = hashlib.sha256(payload or b"").digest()
-    seed = int.from_bytes(digest[:8], "little")
-    rng = np.random.default_rng(seed)
-    return rng.random(256, dtype=np.float64)
-
-
-def _pool(arr: np.ndarray) -> np.ndarray:
-    """Mean-pool an arbitrary-length array to FEATURE_DIM (edge-pad to a
-    multiple first)."""
-    pad = (-len(arr)) % FEATURE_DIM
-    if pad:
-        arr = np.pad(arr, (0, pad), mode="edge") if len(arr) else np.zeros(FEATURE_DIM)
-    return arr.reshape(FEATURE_DIM, -1).mean(axis=1).astype(np.float32)
-
-
-def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: decode → pool to FEATURE_DIM.  Batch-vectorized
-    except the per-item decode call (unavoidable for variable-size
-    payloads; the decode itself is C-side in a real library).  Real
-    decode where the codec allows, deterministic fake otherwise."""
-    for pdf in batches:
-        feats = []
-        for payload, mime in zip(pdf["payload"], pdf["mime"]):
-            raw = bytes(payload) if payload is not None else b""
-            try:
-                arr = real_decode(raw, mime)
-            except (NotImplementedError, ValueError):
-                arr = deterministic_fake_decode(raw, mime)
-            feats.append(_pool(arr).tolist())
-        yield pd.DataFrame(
-            {
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": pdf["payload"].map(lambda p: 0 if p is None else len(p)).astype("int64"),
-                "feature": feats,
-            }
-        )
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Media table → feature table (the embed step of a multimodal
-    training-data pipeline)."""
-    return df.mapInPandas(_extract_features, schema=FEATURE_SCHEMA)
-
-
-def media_repartition(df: DataFrame, target_bytes: int = 128 << 20) -> DataFrame:
-    """Repartition a media table so each task carries ~target_bytes of
-    payload (estimate from a sample mean).  Prevents 2-row tasks next to
-    2000-row tasks when payload sizes are skewed."""
-    stats = df.select(F.avg(F.length("payload")).alias("avg"), F.count(F.lit(1)).alias("n")).collect()[0]
-    if not stats.n:
-        return df
-    avg = stats.avg or 1.0
-    n_parts = max(1, int(stats.n * avg / target_bytes))
-    return df.repartition(n_parts)
-
-
-def synth_media(spark, n: int = 100, seed: int = 0) -> DataFrame:
-    """Deterministic fake media table for plumbing tests."""
-    rng = np.random.default_rng(seed)
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        size = int(rng.integers(100, 5000))
-        payload = rng.integers(0, 256, size, dtype=np.uint8).tobytes()
-        meta = {
-            "width": int(rng.integers(32, 1024)) if kind == "image" else None,
-            "height": int(rng.integers(32, 1024)) if kind == "image" else None,
-            "duration_ms": int(rng.integers(1000, 60000)) if kind != "image" else None,
-            "sample_rate": 16000 if kind == "audio" else None,
-            "codec": {"image": "png", "audio": "opus", "video": "h264"}[kind],
-        }
-        rows.append((i, kind, f"{kind}/x-fake", payload, meta))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def resize_images(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Image resize pass (mapInPandas, image rows only).
-
-    PPM payloads get a REAL nearest-neighbor resample (numpy index
-    gather, re-encoded as PPM); compressed formats need PIL (absent
-    here) and fall back to the deterministic stand-in sized to the
-    target grid, so schema/batching/partition behavior are identical
-    and a PIL-backed body is a drop-in."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for payload, mime in zip(pdf["payload"], pdf["mime"]):
-                raw = bytes(payload) if payload is not None else b""
-                if mime in ("image/x-portable-pixmap", "image/ppm"):
-                    outs.append(
-                        encode_ppm(resize_nearest(decode_ppm(raw), width, height))
-                    )
-                    continue
-                arr = deterministic_fake_decode(raw, mime)
-                # deterministic "resampled" bytes sized to the target grid
-                reps = (width * height) // len(arr) + 1
-                outs.append(
-                    (np.tile(arr, reps)[: width * height] * 255).astype(np.uint8).tobytes()
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": np.full(len(pdf), width, dtype="int32"),
-                    "height": np.full(len(pdf), height, dtype="int32"),
-                    "payload": outs,
-                }
-            )
-
-    return df.filter(F.col("kind") == "image").mapInPandas(_resize, schema=RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_ms", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling (one output row per sampled frame).
-
-    REAL for the uncompressed ppmseq container (header-offset frame
-    splits, sampled at the requested cadence against the duration
-    metadata); compressed codecs need ffmpeg (absent) and fall back to
-    deterministic stand-in frames — either way the explode shape
-    (1 video row → N frame rows, payload bytes never shuffled before
-    sampling) is identical."""
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, mss, payloads = [], [], [], []
-            for mid, payload, mime, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["mime"], pdf["meta"]
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                dur = (meta or {}).get("duration_ms") or 0
-                n_frames = max(1, int(dur // every_ms))
-                if mime == PPMSEQ_MIME:
-                    frames = split_ppmseq(raw)
-                    # cadence sampling over the real frame sequence: the
-                    # source frame whose timestamp covers i*every_ms
-                    frame_ms = dur / max(len(frames), 1)
-                    for i in range(n_frames):
-                        src = min(int(i * every_ms / max(frame_ms, 1e-9)), len(frames) - 1)
-                        ids.append(mid)
-                        idxs.append(i)
-                        mss.append(i * every_ms)
-                        payloads.append(frames[src])
-                    continue
-                base = deterministic_fake_decode(raw, "video/*")
-                for i in range(n_frames):
-                    ids.append(mid)
-                    idxs.append(i)
-                    mss.append(i * every_ms)
-                    payloads.append(
-                        (np.roll(base, i)[:64] * 255).astype(np.uint8).tobytes()
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame_ms": pd.array(mss, dtype="int32"),
-                    "payload": payloads,
-                }
-            )
-
-    return df.filter(F.col("kind") == "video").mapInPandas(_sample, schema=FRAME_SCHEMA)
-
-
-RESAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("sample_rate", T.IntegerType(), False),
-        T.StructField("n_samples", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def resample_audio(df: DataFrame, target_rate: int = 16000) -> DataFrame:
-    """Audio resample pass (mapInPandas, audio rows only) — REAL for
-    WAV/PCM16 (linear interpolation, re-encoded as WAV at the target
-    rate); compressed codecs (opus/mp3) would need ffmpeg → such rows
-    raise NotImplementedError by design (filter them out upstream)."""
-
-    def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs, ns = [], []
-            for payload, mime in zip(pdf["payload"], pdf["mime"]):
-                raw = bytes(payload) if payload is not None else b""
-                if mime not in ("audio/wav", "audio/x-wav"):
-                    raise NotImplementedError(
-                        f"resampling {mime!r} requires ffmpeg (absent); "
-                        "filter to WAV rows first"
-                    )
-                samples, rate = decode_wav(raw)
-                out = resample_linear(samples, rate, target_rate)
-                outs.append(encode_wav(out, target_rate))
-                ns.append(len(out))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": np.full(len(pdf), target_rate, dtype="int32"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                    "payload": outs,
-                }
-            )
-
-    return df.filter(F.col("kind") == "audio").mapInPandas(
-        _resample, schema=RESAMPLE_SCHEMA
-    )
-
-
-def synth_media_real(spark, n: int = 30, seed: int = 0) -> DataFrame:
-    """Deterministic media table with REAL payloads in the numpy-only
-    formats: PPM images, WAV/PCM16 audio, ppmseq videos — so the decode /
-    resize / resample / frame-sample paths execute their real branches
-    end-to-end."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        kind = ["image", "audio", "video"][i % 3]
-        if kind == "image":
-            w, h = int(rng.integers(8, 64)), int(rng.integers(8, 64))
-            payload = encode_ppm(rng.integers(0, 256, (h, w, 3), dtype=np.uint8))
-            mime, meta = "image/x-portable-pixmap", {
-                "width": w, "height": h, "duration_ms": None,
-                "sample_rate": None, "codec": "ppm",
-            }
-        elif kind == "audio":
-            rate = int(rng.choice([8000, 22050, 44100]))
-            dur_ms = int(rng.integers(50, 400))
-            t = np.arange(int(rate * dur_ms / 1000)) / rate
-            payload = encode_wav(0.5 * np.sin(2 * np.pi * 440 * t), rate)
-            mime, meta = "audio/wav", {
-                "width": None, "height": None, "duration_ms": dur_ms,
-                "sample_rate": rate, "codec": "pcm16",
-            }
-        else:
-            n_frames = int(rng.integers(2, 8))
-            w = h = 16
-            payload = b"".join(
-                encode_ppm(rng.integers(0, 256, (h, w, 3), dtype=np.uint8))
-                for _ in range(n_frames)
-            )
-            mime, meta = PPMSEQ_MIME, {
-                "width": w, "height": h, "duration_ms": n_frames * 1000,
-                "sample_rate": None, "codec": "ppmseq",
-            }
-        rows.append((i, kind, mime, payload, meta))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-# -- contract-checkable image plane (round 4) ---------------------------------
 
 #: schema of synth_ppm_from_ids output — a media table keyed by the source id
 SYNTH_PPM_SCHEMA = T.StructType(
@@ -524,8 +76,7 @@ def synth_ppm_from_ids(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     A ``mapInPandas`` narrow pass (no shuffle): ids stream in Arrow
     batches, payloads are built with one vectorized numpy expression per
-    image and REAL ``encode_ppm`` headers — the same binary-column
-    plumbing a PIL/ffmpeg-backed synthesizer would use."""
+    image and REAL ``encode_ppm`` headers."""
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -553,9 +104,8 @@ def image_byte_stats(df: DataFrame) -> DataFrame:
     """Decode PPM payloads (REAL codec) → exact integer pixel statistics
     per image: width, height, pixel-byte count / sum / max.
 
-    The integer-domain companion of ``extract_features``: same
-    ``mapInPandas`` narrow-pass shape (payload bytes never shuffle), but
-    its outputs are exact BIGINTs, so it anchors the whole binary-column
+    A ``mapInPandas`` narrow pass (payload bytes never shuffle) whose
+    outputs are exact BIGINTs, so it anchors the whole binary-column
     plumbing — synth → encode → Arrow transfer → decode — to a
     hash-exact external oracle (contract query ``multimodal_features``)."""
 

@@ -178,7 +178,7 @@ def over_time_grid(
     an ``n_distinct`` column — an exact two-phase distinct aggregate
     (partial dedup map-side), per-group state O(distinct values in the
     window); the unbounded-cardinality scale path is the HLL sketch
-    rollup (operators/rollup.py rollup_distinct_sketch).
+    (operators/hll.py).
 
     Scale: explode is narrow (no shuffle), the single agg map-side
     combines, and the instant key spreads hot series across ``range/

@@ -61,7 +61,7 @@ def with_text_stats(df: DataFrame) -> DataFrame:
     """Project per-turn text measures (JVM-side, codegen'd).
 
     ``token_count`` = whitespace-token count (0 for empty/blank text) —
-    the cheap tokenizer; see functions.text for the BPE-ish variant.
+    the same count as ``functions.text.token_count_ws``.
     """
     text_len = F.coalesce(F.length("text"), F.lit(0))
     trimmed = F.trim(F.col("text"))
@@ -120,42 +120,6 @@ def sorted_count_map(key: str, value: str, where=None):
     if where is not None:
         entry = F.when(where, entry)
     return F.map_from_entries(F.array_sort(F.collect_list(entry)))
-
-
-def rollup_distinct_sketch(
-    df: DataFrame,
-    tier: str,
-    keys: list[str] | None = None,
-    sketch_col: str = "conv_id",
-) -> DataFrame:
-    """Mergeable distinct-count rollup (HLL): ``n_distinct_sketch`` is a
-    binary HyperLogLog sketch per window — exactly re-aggregable across
-    the tier cascade via :func:`cascade_distinct_sketch` (unlike
-    count_distinct, which cannot be merged).  The estimate column is
-    derived at read time."""
-    keys = list(keys or [])
-    return (
-        df.withColumn("bucket_start", bucket_col(tier))
-        .groupBy("bucket_start", *keys)
-        .agg(F.hll_sketch_agg(sketch_col).alias("n_distinct_sketch"))
-    )
-
-
-def cascade_distinct_sketch(
-    df_finer: DataFrame, coarser_tier: str, keys: list[str] | None = None
-) -> DataFrame:
-    keys = list(keys or [])
-    return (
-        df_finer.withColumn("bucket_start", bucket_col(coarser_tier, "bucket_start"))
-        .groupBy("bucket_start", *keys)
-        .agg(F.hll_union_agg("n_distinct_sketch").alias("n_distinct_sketch"))
-    )
-
-
-def distinct_estimate(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "n_distinct_est", F.hll_sketch_estimate("n_distinct_sketch")
-    ).drop("n_distinct_sketch")
 
 
 def rollup_from_raw(

@@ -5,17 +5,11 @@ queue (no session concept); for transcript analytics the engine adds the
 standard time-series sessionization: a session is a maximal run of turns
 within one conversation where consecutive gaps are ≤ ``gap``.
 
-Two implementations, both Catalyst-native:
-
-  * :func:`sessionize` — batch: island detection with ``lag`` + running
-    ``sum`` over a ``(conv_id)`` window.  One window shuffle on conv_id
-    (hot conversations are bounded by per-conv turn counts, and the
-    window sort reuses the shuffle's partitioning); exactly reproducible
-    in ANSI SQL → DuckDB oracle in the driver contract.
-  * :func:`sessionize_native` — ``F.session_window`` (Spark's built-in
-    session aggregation, also the streaming-capable form with merging
-    state).  Same session boundaries for the same gap; kept as the
-    Structured-Streaming-ready variant.
+:func:`sessionize` is island detection with ``lag`` + running ``sum``
+over a ``(conv_id)`` window, Catalyst-native.  One window shuffle on
+conv_id (hot conversations are bounded by per-conv turn counts, and the
+window sort reuses the shuffle's partitioning); exactly reproducible in
+ANSI SQL → DuckDB oracle in the driver contract.
 """
 
 from __future__ import annotations
@@ -74,29 +68,4 @@ def sessionize(
             )
             / 1e6
         ).alias("duration_sec"),
-    )
-
-
-def sessionize_native(
-    df: DataFrame,
-    gap: str = "30 minutes",
-    key: str = "conv_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """``F.session_window`` form (streaming-capable merging session state).
-
-    Note the boundary convention difference: ``session_window`` closes a
-    session when the gap is ≥ ``gap`` (window spans [start, last+gap)),
-    while :func:`sessionize` starts a new one only when the gap is
-    strictly > ``gap``; ties at exactly ``gap`` differ.  Real data has
-    microsecond timestamps, so ties are measure-zero — asserted equal on
-    the synthetic fixtures in tests."""
-    return (
-        df.groupBy(key, F.session_window(ts_col, gap).alias("w"))
-        .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
-            F.count(F.lit(1)).alias("n_turns"),
-        )
-        .drop("w")
     )

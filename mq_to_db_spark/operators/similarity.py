@@ -5,11 +5,8 @@ product, JVM-side) + ``ORDER BY LIMIT k`` which Spark executes as a
 per-partition top-k + driver merge (TakeOrderedAndProject), never a full
 sort.  Scale path: random-hyperplane LSH bucketing (Charikar) — probe
 only matching buckets, with multi-probe on query-side sign flips to
-recover recall; the corpus can be materialized as a table partitioned by
-``sig`` so probes become partition-pruned scans
-(:func:`build_lsh_index` / :func:`ann_lsh_topk_indexed`).  An IVF-style
-variant (:func:`ivf_topk`) probes the lists of the nearest coarse
-centroids.
+recover recall (:func:`ann_lsh_topk`).  An IVF-style variant
+(:func:`ivf_topk`) probes the lists of the nearest coarse centroids.
 
 Hyperplane weights and IVF centroid selection are deterministic,
 engine-independent constants (seeded numpy literals / md5-derived
@@ -168,70 +165,12 @@ def ann_lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: hash the corpus into hyperplane buckets, probe
     the query's bucket (± 1/2-bit flips per ``multiprobe``), exact
-    cosine within candidates only.
-
-    For repeated queries over a static corpus use :func:`build_lsh_index`
-    + :func:`ann_lsh_topk_indexed` — the signatures are then computed
-    once and probes prune partitions instead of rescanning."""
+    cosine within candidates only."""
     planes = hyperplane_planes(n_planes, len(query_vec), seed)
     qsig = hyperplane_signature_py(query_vec, planes)
     probes = [qsig ^ m for m in lsh_probe_masks(n_planes, multiprobe)]
     hashed = df.withColumn("sig", hyperplane_signature(F.col(vec_col), planes))
     cand = hashed.filter(F.col("sig").isin(*probes))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.select(
-            F.col(id_col),
-            cosine_sim_cols(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def build_lsh_index(
-    df: DataFrame,
-    path: str,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 13,
-) -> None:
-    """Materialize the LSH-bucketed corpus as a parquet table partitioned
-    by ``sig`` — each bucket is a partition directory, so a probe with a
-    ``sig IN (...)`` predicate is a partition-pruned scan that reads only
-    the matching directories (2^n_planes buckets ⇒ keep n_planes small
-    enough that directories stay chunky; at 100 TB ~10-12 planes →
-    1k-4k partitions)."""
-    planes = hyperplane_planes(n_planes, dim, seed)
-    (
-        df.select(id_col, vec_col)
-        .withColumn("sig", hyperplane_signature(F.col(vec_col), planes))
-        .write.mode("overwrite")
-        .partitionBy("sig")
-        .parquet(path)
-    )
-
-
-def ann_lsh_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    multiprobe: int = 1,
-    seed: int = 13,
-) -> DataFrame:
-    """Probe a :func:`build_lsh_index` table: the ``sig`` filter lands on
-    the partition column, so only matching bucket directories are read
-    (verifiable via ``df.inputFiles()`` — see tests)."""
-    planes = hyperplane_planes(n_planes, len(query_vec), seed)
-    qsig = hyperplane_signature_py(query_vec, planes)
-    probes = [qsig ^ m for m in lsh_probe_masks(n_planes, multiprobe)]
-    cand = spark.read.parquet(path).filter(F.col("sig").isin(*probes))
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         cand.select(

@@ -50,24 +50,6 @@ def top_k_per_window(
     )
 
 
-def top_tools_hourly(turns: DataFrame, k: int = 3) -> DataFrame:
-    """Top-k tools per 1h bucket from raw turns.
-
-    Rolls tool-bearing turns into the (hour, tool) count tier (one
-    partial-agg shuffle), then ranks the tier.  Returns
-    ``(bucket_start, tool, n_calls, rank)``.
-    """
-    tier = (
-        turns.where(F.col("tool").isNotNull())
-        .groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("bucket_start"),
-            F.col("tool"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_calls"))
-    )
-    return top_k_per_window(tier, ["bucket_start"], "tool", "n_calls", k)
-
-
 def top_k_with_others(
     tier: DataFrame,
     window_cols: list[str],

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.counters import counter_increase, counter_rate
+from mq_to_db_spark.operators.counters import counter_increase
 
 
 def _plan(df) -> str:
@@ -69,11 +69,6 @@ def test_counter_increase_keyed(spark):
     for k, (inc, _) in _EXPECT.items():
         assert rates[k] == round(inc / 3600, 6), k
 
-
-def test_counter_rate_view(spark):
-    out = counter_rate(_fixture(spark), ["series"], tier="1h", tiebreak=("sid",))
-    assert set(out.columns) == {"series", "bucket_start", "rate_per_sec"}
-    assert out.count() == len(_EXPECT)
 
 
 def test_keyless_matches_keyed_single_series(spark):

@@ -225,48 +225,6 @@ def test_connected_components_chained_duplicates(spark):
     assert ids == [1, 50]
 
 
-def test_lsh_index_partition_pruned_probe(spark, tmp_path):
-    """The materialized sig-partitioned index must (a) return the same
-    result as the unindexed probe and (b) read only the probed bucket
-    directories (partition pruning visible in inputFiles)."""
-    from mq_to_db_spark.operators.similarity import (
-        ann_lsh_topk,
-        ann_lsh_topk_indexed,
-        build_lsh_index,
-        hyperplane_planes,
-        hyperplane_signature_py,
-        lsh_probe_masks,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    qv = list(emb.filter("vec_id = 0").collect()[0].embedding)
-    path = str(tmp_path / "lsh_index")
-    build_lsh_index(emb, path, dim=len(qv), n_planes=6)
-
-    direct = ann_lsh_topk(emb, qv, k=10, n_planes=6, multiprobe=1).collect()
-    indexed_df = ann_lsh_topk_indexed(spark, path, qv, k=10, n_planes=6, multiprobe=1)
-    indexed = indexed_df.collect()
-    assert [(r.vec_id, round(r.cosine, 9)) for r in direct] == [
-        (r.vec_id, round(r.cosine, 9)) for r in indexed
-    ]
-
-    planes = hyperplane_planes(6, len(qv))
-    qsig = hyperplane_signature_py(qv, planes)
-    probes = {qsig ^ m for m in lsh_probe_masks(6, 1)}
-
-    def files_read(df):
-        df.collect()
-        scan = df._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
-        return scan.metrics().apply("numFiles").value()
-
-    pruned = spark.read.parquet(path).filter(F.col("sig").isin(*probes))
-    n_pruned = files_read(pruned)
-    n_total = files_read(spark.read.parquet(path))
-    # only the probed sig=... directories are scanned (numFiles is the
-    # post-partition-pruning scan metric)
-    assert n_pruned <= len(probes)
-    assert n_pruned < n_total
-
 
 def _clustered_embeddings(spark, n_clusters=20, per_cluster=25, dim=32, seed=7):
     import numpy as np

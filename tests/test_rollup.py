@@ -131,22 +131,6 @@ def test_fixed_bucket_histogram(spark, transcripts, transcripts_pdf):
     assert_pdf_equal(got, want, ["bucket_start", "le"])
 
 
-def test_distinct_sketch_cascade(spark, transcripts, transcripts_pdf):
-    from mq_to_db_spark.operators.rollup import (
-        cascade_distinct_sketch,
-        distinct_estimate,
-        rollup_distinct_sketch,
-    )
-
-    h = rollup_distinct_sketch(transcripts, "1h")
-    d = distinct_estimate(cascade_distinct_sketch(h, "1d")).toPandas()
-    p = transcripts_pdf.copy()
-    p["bucket_start"] = p["ts"].dt.floor("D")
-    want = p.groupby("bucket_start").conv_id.nunique()
-    for _, row in d.iterrows():
-        exact = want[row.bucket_start]
-        assert abs(row.n_distinct_est - exact) <= max(2, 0.05 * exact)  # HLL ~2% err
-
 
 def test_rollup_multidim_equals_per_dim(spark, transcripts):
     """Single-pass grouping-sets cascade ≡ one rollup_tiers per dimension,
@@ -225,40 +209,6 @@ def test_role_transitions_matches_pandas(spark, transcripts, transcripts_pdf):
     )
     assert_pdf_equal(got, want, ["bucket_start", "prev_role", "next_role"])
 
-
-def test_hll_distinct_sketch_cascade_accuracy(spark, transcripts):
-    """The mergeable HLL distinct rollup: per-tier estimates within HLL
-    error (<5% at default lgConfigK) of exact count_distinct, and the
-    1m→1h→1d cascade equals sketching 1d directly from raw (union
-    associativity — the property that makes the sketch re-aggregable)."""
-    from mq_to_db_spark.operators.rollup import (
-        cascade_distinct_sketch,
-        distinct_estimate,
-        rollup_distinct_sketch,
-    )
-
-    m1 = rollup_distinct_sketch(transcripts, "1m")
-    h1 = cascade_distinct_sketch(m1, "1h")
-    d1 = cascade_distinct_sketch(h1, "1d")
-
-    from pyspark.sql import functions as F
-
-    exact = {
-        r.b: r.n
-        for r in transcripts.groupBy(F.date_trunc("hour", "ts").alias("b"))
-        .agg(F.count_distinct("conv_id").alias("n"))
-        .collect()
-    }
-    est = {r.bucket_start: r.n_distinct_est for r in distinct_estimate(h1).collect()}
-    assert est.keys() == exact.keys()
-    for b, n in exact.items():
-        assert abs(est[b] - n) <= max(2, 0.05 * n), (b, est[b], n)
-
-    # cascade == direct (same sketches, same estimates)
-    direct_d = rollup_distinct_sketch(transcripts, "1d")
-    a = {r.bucket_start: r.n_distinct_est for r in distinct_estimate(d1).collect()}
-    b = {r.bucket_start: r.n_distinct_est for r in distinct_estimate(direct_d).collect()}
-    assert a == b
 
 
 def test_histogram_cascade_exact(spark, transcripts):

@@ -19,7 +19,7 @@ from mq_to_db_spark.operators.sampling import (
     sample_bernoulli,
     sample_stratified,
 )
-from mq_to_db_spark.operators.topk import top_k_per_window, top_tools_hourly
+from mq_to_db_spark.operators.topk import top_k_per_window
 
 
 @pytest.fixture(scope="module")
@@ -172,16 +172,6 @@ def test_top_k_per_window_ties_and_rank(spark):
     # tie at 10 breaks by key asc: a before b; c excluded by k=2
     assert got == {("h1", "a"): 1, ("h1", "b"): 2, ("h2", "z"): 1}
 
-
-def test_top_tools_hourly(spark, transcripts):
-    out = top_tools_hourly(transcripts, k=3)
-    pdf = out.toPandas()
-    assert (pdf["rank"] <= 3).all()
-    assert (pdf.groupby("bucket_start")["rank"].min() == 1).all()
-    # per bucket, n_calls non-increasing with rank
-    for _, g in pdf.groupby("bucket_start"):
-        g = g.sort_values("rank")
-        assert (g["n_calls"].diff().dropna() <= 0).all()
 
 
 # ---------------------------------------------------------------------------

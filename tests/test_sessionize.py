@@ -1,15 +1,10 @@
-"""Sessionization: island detection vs pandas oracle, and vs Spark's
-native session_window."""
+"""Sessionization: island detection vs pandas oracle."""
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.sessionize import (
-    sessionize,
-    sessionize_native,
-    with_session_id,
-)
+from mq_to_db_spark.operators.sessionize import sessionize, with_session_id
 from tests.conftest import assert_pdf_equal
 
 GAP_SEC = 300  # "5 minutes"
@@ -50,17 +45,3 @@ def test_session_id_monotone_and_dense(spark, transcripts):
     )
     # dense 0..mx numbering per conversation
     assert per_conv.filter(F.col("nd") != F.col("mx") + 1).count() == 0
-
-
-def test_native_session_window_agrees(spark, transcripts):
-    """session_window (streaming-capable) produces the same sessions as
-    island detection on microsecond-timestamped data (gap ties are
-    measure-zero; see sessionize_native docstring)."""
-    a = sessionize(transcripts, gap="5 minutes").select(
-        "conv_id", "session_start", "session_end", "n_turns"
-    )
-    b = sessionize_native(transcripts, gap="5 minutes").select(
-        "conv_id", "session_start", "session_end", "n_turns"
-    )
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0

@@ -6,11 +6,8 @@ from pyspark.sql import functions as F
 
 from mq_to_db_spark.functions.text import (
     fingerprint_md5,
-    fingerprint_rolling,
     lang_id,
     quality_features,
-    quality_score,
-    token_count_bpe,
     token_count_ws,
 )
 
@@ -30,13 +27,6 @@ def test_token_count_ws_cases(spark):
     assert got == [3, 0, 0, 0, 1]
 
 
-def test_token_count_bpe_reasonable(spark):
-    df = spark.createDataFrame([("Hello, world! It's 2024.",)], "text string")
-    n = df.select(token_count_bpe("text")).collect()[0][0]
-    # Hello , world ! It 's 202 4 . → 9 pieces (digits split in ≤3 runs,
-    # cl100k-style)
-    assert n == 9
-
 
 def test_lang_id(spark):
     rows = [
@@ -53,14 +43,6 @@ def test_lang_id(spark):
     got = [r[0] for r in df.select(lang_id("text")).collect()]
     assert got == [want for _, want in rows]
 
-
-def test_quality_score_ordering(spark):
-    good = "The quick brown fox jumps over the lazy dog and it was a good day for all of them."
-    bad = "$$$ ### !!! 123 456 789 @@@ %%%"
-    df = spark.createDataFrame([(good,), (bad,)], "text string")
-    g, b = [r[0] for r in df.select(quality_score("text")).collect()]
-    assert g > b
-    assert 0.0 <= b <= g <= 1.0
 
 
 def test_quality_features_ranges(docs):
@@ -79,18 +61,6 @@ def test_fingerprint_md5_normalization(spark):
     fps = [r[0] for r in df.select(fingerprint_md5("text")).collect()]
     assert fps[0] == fps[1] != fps[2]
 
-
-def test_fingerprint_rolling_similarity(spark):
-    # winnowing-style min-hash: identical text → identical fingerprint
-    df = spark.createDataFrame(
-        [("the quick brown fox jumps over the lazy dog",),
-         ("The quick brown fox jumps over the lazy dog!",),
-         ("completely unrelated content here",)],
-        "text string",
-    )
-    fps = [r[0] for r in df.select(fingerprint_rolling("text").alias("f")).collect()]
-    assert fps[0] == fps[1]  # normalization-invariant
-    assert fps[0] != fps[2]
 
 
 def test_against_documents_nchars(docs):
