@@ -17,14 +17,12 @@ columns travel in ONE struct, so they always come from the same right
 row even when individual right values are NULL.
 
 The **keyless** form (``by=[]``) cannot use a global window (that would
-serialize |L|+|R| rows through one task).  Instead it range-partitions
-on the time column (``width_bucket`` over the [min, max] extent) and
-runs the same LOCF window *per range*, then patches each range's
-leading rows with a broadcast **boundary carry**: the last right
-observation of every earlier range, computed by a tiny per-range agg +
-prefix-LOCF over the (n_buckets)-row spine.  Two extra cheap jobs
-(min/max extent, per-range last) buy full parallelism on the big
-shuffle.
+serialize |L|+|R| rows through one task).  Instead it runs the LOCF as
+:func:`~mq_to_db_spark.operators.rangewin.range_locf`, the
+range-partitioned prefix scan: the same window *per time range*, each
+range's leading rows patched with a broadcast carry of the last right
+observation of every earlier range.  One cheap extent job buys full
+parallelism on the big shuffle.
 
 ``tolerance`` (e.g. ``"1 hour"``) nulls matches older than the bound,
 matching ``pandas.merge_asof`` / DuckDB ``ASOF JOIN`` + filter

@@ -28,11 +28,10 @@ Scale design:
     ``HashPartitioning(keys)``), so Catalyst plans window + agg back to
     back with a single shuffle (plan-asserted in tests/test_counters.py);
   * keyless path (one global series): the naive plan is a single-partition
-    global window — every sample through one task.  Instead the series is
-    ``width_bucket``-range-partitioned on ts (the rangewin.py pattern used
-    by keyless as-of/gap-fill): lag runs per range bucket at full
-    parallelism, and each bucket's first sample takes its predecessor from
-    a broadcast per-bucket boundary carry (tiny spine agg, never the data);
+    global window — every sample through one task.  Instead the lag is
+    rangewin.range_lag, the range-partitioned prefix scan: lag runs per
+    range bucket on ts at full parallelism, and each bucket's first
+    sample takes its predecessor from a broadcast spine carry;
   * contributions are computed in the value column's own type — pass
     integer-scaled counters for bit-exact cross-engine replay (the
     contract query scales doubles to micro-units first).
@@ -44,6 +43,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.config import TIER_SECONDS
+from mq_to_db_spark.operators.rangewin import range_lag, range_running_sum
 from mq_to_db_spark.operators.rollup import bucket_col
 
 
@@ -54,6 +54,18 @@ def _contrib(value, prev):
         .when(value >= prev, value - prev)
         .otherwise(value)
     )
+
+
+def _series(keys: list[str], ts_col: str, tiebreak: tuple[str, ...]):
+    return W.partitionBy(*keys).orderBy(ts_col, *tiebreak)
+
+
+def _with_prev(df, keys, ts_col, value_col, tiebreak, n_buckets) -> DataFrame:
+    """``df`` + ``_prev``, the previous sample's value in its series: a
+    lag window per key, or rangewin.range_lag for one keyless series."""
+    if not keys:
+        return range_lag(df, ts_col, value_col, "_prev", tiebreak, n_buckets)
+    return df.withColumn("_prev", F.lag(value_col).over(_series(keys, ts_col, tiebreak)))
 
 
 def counter_increase(
@@ -74,13 +86,8 @@ def counter_increase(
     range-partitioned (see module docstring) instead of on a single
     global window partition.
     """
-    order = [F.col(ts_col), *[F.col(t) for t in tiebreak]]
     value = F.col(value_col)
-    if keys:
-        w = W.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-        staged = df.withColumn("_prev", F.lag(value_col).over(w))
-    else:
-        staged = _keyless_lag(df, ts_col, value_col, tiebreak, n_buckets)
+    staged = _with_prev(df, keys, ts_col, value_col, tiebreak, n_buckets)
     contrib = _contrib(value, F.col("_prev"))
     bucket = bucket_col(tier, ts_col)
     out = (
@@ -112,12 +119,7 @@ def counter_resets(
     one series means the producer is crash-looping, not busy).  Same
     single-exchange lag shape as increase; the bucket agg reuses the
     lag window's hash partitioning."""
-    order = [F.col(ts_col), *[F.col(t) for t in tiebreak]]
-    if keys:
-        w = W.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-        staged = df.withColumn("_prev", F.lag(value_col).over(w))
-    else:
-        staged = _keyless_lag(df, ts_col, value_col, tiebreak, n_buckets)
+    staged = _with_prev(df, keys, ts_col, value_col, tiebreak, n_buckets)
     is_reset = (
         F.col("_prev").isNotNull() & (F.col(value_col) < F.col("_prev"))
     ).cast("long")
@@ -129,52 +131,6 @@ def counter_resets(
             F.sum("_r").alias("n_resets"),
             F.count(F.lit(1)).alias("n_samples"),
         )
-    )
-
-
-def _keyless_lag(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    tiebreak: tuple[str, ...],
-    n_buckets: int | None,
-) -> DataFrame:
-    """``lag(value) OVER (ORDER BY ts, *tiebreak)`` for ONE global series,
-    executed range-partitioned: per-bucket lag + a broadcast boundary
-    carry supplying each bucket's first sample with the last value of the
-    nearest non-empty earlier bucket."""
-    from mq_to_db_spark.operators.rangewin import numeric_order_col
-
-    spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = max(spark.sparkContext.defaultParallelism, 1) * 4
-    od = numeric_order_col(df, ts_col)
-    order = [F.col(ts_col), *[F.col(t) for t in tiebreak]]
-    ext = df.agg(F.min(od).alias("mn"), F.max(od).alias("mx")).first()
-    if ext.mn is None or ext.mn == ext.mx or n_buckets <= 1:
-        w = W.partitionBy(F.lit(1)).orderBy(*order)
-        return df.withColumn("_prev", F.lag(value_col).over(w))
-    rb = F.width_bucket(od, F.lit(ext.mn), F.lit(ext.mx), F.lit(n_buckets)).cast("int")
-    tagged = df.withColumn("_rb", rb)
-    w_in = W.partitionBy("_rb").orderBy(*order)
-    lagged = tagged.withColumn("_prev", F.lag(value_col).over(w_in))
-    # last sample per bucket in (ts, *tiebreak) order → LOCF over the
-    # bucket spine (skips empty buckets) shifted one bucket forward
-    order_key = F.struct(od.alias("o"), *[F.col(t) for t in tiebreak])
-    last_per_bucket = tagged.groupBy("_rb").agg(
-        F.max_by(value_col, order_key).alias("_lastv")
-    )
-    spine = spark.range(1, n_buckets + 2).select(F.col("id").cast("int").alias("_rb"))
-    w_carry = W.orderBy("_rb").rowsBetween(W.unboundedPreceding, -1)
-    carry = (
-        spine.join(last_per_bucket, "_rb", "left")
-        .withColumn("_carry", F.last("_lastv", ignorenulls=True).over(w_carry))
-        .select("_rb", "_carry")
-    )
-    return (
-        lagged.join(F.broadcast(carry), "_rb", "left")
-        .withColumn("_prev", F.coalesce(F.col("_prev"), F.col("_carry")))
-        .drop("_rb", "_carry")
     )
 
 
@@ -304,43 +260,21 @@ def adjust_resets(
 
     Plan shape mirrors :func:`counter_increase`: keyed → lag + running
     sum over the SAME window partitioning (one exchange, both windows
-    planned back to back); keyless → range-partitioned lag
-    (:func:`_keyless_lag`) then a range-partitioned global prefix sum
-    (rangewin.range_running_sum) — never a single global window.
+    planned back to back); keyless → rangewin.range_lag then
+    rangewin.range_running_sum — never a single global window.
     Offsets accumulate in the value column's own type (pass
     integer-scaled counters for bit-exact cross-engine replay).
     """
-    order = [F.col(ts_col), *[F.col(t) for t in tiebreak]]
-    value = F.col(value_col)
+    value, prev = F.col(value_col), F.col("_prev")
     zero = F.lit(0).cast("long") * value  # type-preserving 0
+    off = F.when(prev.isNotNull() & (value < prev), prev).otherwise(zero)
+    staged = _with_prev(df, keys, ts_col, value_col, tiebreak, n_buckets)
     if keys:
-        w = W.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-        staged = df.withColumn("_prev", F.lag(value_col).over(w))
-        off = (
-            F.when(
-                F.col("_prev").isNotNull() & (value < F.col("_prev")),
-                F.col("_prev"),
-            )
-            .otherwise(zero)
-        )
-        w_cum = w.rowsBetween(W.unboundedPreceding, 0)
-        return staged.withColumn(
-            out_col, value + F.sum(off).over(w_cum)
-        ).drop("_prev")
-    from mq_to_db_spark.operators.rangewin import range_running_sum
-
-    staged = _keyless_lag(df, ts_col, value_col, tiebreak, n_buckets)
-    off = (
-        F.when(
-            F.col("_prev").isNotNull() & (value < F.col("_prev")),
-            F.col("_prev"),
-        )
-        .otherwise(zero)
-    )
-    staged = staged.withColumn("_off", off).drop("_prev")
+        w_cum = _series(keys, ts_col, tiebreak).rowsBetween(W.unboundedPreceding, 0)
+        return staged.withColumn(out_col, value + F.sum(off).over(w_cum)).drop("_prev")
     summed = range_running_sum(
-        staged, ts_col, "_off", tiebreak=tiebreak, out_col="_cumoff",
-        n_buckets=n_buckets,
+        staged.withColumn("_off", off).drop("_prev"), ts_col, "_off",
+        tiebreak=tiebreak, out_col="_cumoff", n_buckets=n_buckets,
     )
     return summed.withColumn(out_col, value + F.col("_cumoff")).drop(
         "_off", "_cumoff"

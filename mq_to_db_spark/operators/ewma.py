@@ -19,12 +19,13 @@ affine maps compose associatively — the classic parallel-scan structure:
     lives in one task (the compression.py chunk-grain caveat applies —
     EWMA is meant for TIER rows, which the calendar bounds).
   * **keyless path** (one global series, still potentially huge): rows
-    are ``width_bucket``-range-partitioned on ts; each bucket scans
+    take their range buckets on ts and their order key from rangewin.py
+    (``range_buckets``, ``order_key``); each bucket scans
     locally with a virtual zero initial state, a tiny per-bucket spine
     ``(B = local final, n = count, first value)`` is collected, the
     bucket-to-bucket recurrence ``s_out = B + (1-alpha)^n · s_in`` runs
     driver-side over that spine (hundreds of rows — same cost class as
-    rangewin.py's extent probe), and a broadcast join finalizes every
+    the range extent probe), and a broadcast join finalizes every
     row as ``s = local + (1-alpha)^pos · s_in`` in pure codegen.  The
     carry factor ``(1-alpha)^pos`` underflows to 0 for deep rows —
     mathematically true too (influence decays geometrically), so the
@@ -42,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructType
 
-from mq_to_db_spark.operators.rangewin import numeric_order_col
+from mq_to_db_spark.operators.rangewin import order_key, range_buckets
 from mq_to_db_spark.session import local_frame
 
 
@@ -89,20 +90,7 @@ def _ewma_keyed(df, keys, ts_col, value_col, alpha, tiebreak, out_col):
 
 def _ewma_keyless(df, ts_col, value_col, alpha, tiebreak, out_col, n_buckets):
     spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = max(spark.sparkContext.defaultParallelism, 1) * 4
-    od = numeric_order_col(df, ts_col)
-    ext = df.agg(F.min(od).alias("mn"), F.max(od).alias("mx")).first()
-    if ext.mn is None or ext.mn == ext.mx or n_buckets <= 1:
-        # degenerate extent: single scan task is unavoidable and fine
-        tagged = df.withColumn("_rb", F.lit(1))
-    else:
-        tagged = df.withColumn(
-            "_rb",
-            F.width_bucket(od, F.lit(ext.mn), F.lit(ext.mx), F.lit(n_buckets)).cast(
-                "int"
-            ),
-        )
+    tagged, _ = range_buckets(df, ts_col, n_buckets)
     order = [ts_col, *tiebreak]
     schema = _scan_schema(tagged, [("_loc", DoubleType()), ("_pos", IntegerType())])
 
@@ -121,13 +109,14 @@ def _ewma_keyless(df, ts_col, value_col, alpha, tiebreak, out_col, n_buckets):
 
     loc = tagged.groupBy("_rb").applyInPandas(local_scan, schema)
     loc = loc.localCheckpoint(eager=False)  # scan once, reuse for spine + finalize
-    order_key = F.struct(od.alias("o"), *[F.col(t) for t in tiebreak])
+    key = order_key(ts_col, tiebreak)
     spine = (
-        loc.groupBy("_rb")
+        loc.where(F.col("_rb").isNotNull())  # NULL ts: outside the order
+        .groupBy("_rb")
         .agg(
-            F.max_by("_loc", order_key).alias("B"),
+            F.max_by("_loc", key).alias("B"),
             F.count(F.lit(1)).alias("n"),
-            F.min_by(F.col(value_col).cast("double"), order_key).alias("first_val"),
+            F.min_by(F.col(value_col).cast("double"), key).alias("first_val"),
         )
         .orderBy("_rb")
         .collect()

@@ -1,26 +1,37 @@
-"""Range-partitioned global window fill.
+"""Range-partitioned prefix scans: every keyless global window, in parallel.
 
-A keyless ``last(x, ignorenulls) OVER (ORDER BY t)`` forces Spark to a
-single window partition — every row through one task.  This helper keeps
-the same semantics at full parallelism:
+A keyless ``last(x, ignorenulls) OVER (ORDER BY t)`` (or a running sum,
+or a lag) forces Spark to a single window partition — every row through
+one task.  This module keeps the same semantics at full parallelism, as
+a Blelloch-style prefix scan in two pieces:
 
-  1. bucket rows by ``width_bucket`` over the [min, max] extent of the
-     order column (one cheap columnar min/max job);
-  2. run the LOCF window *per bucket* (hash-partitioned shuffle);
-  3. patch each bucket's leading rows with a broadcast **prefix carry**:
-     the last observation of every earlier bucket, computed by a tiny
-     per-bucket agg + a prefix-LOCF over the (n_buckets)-row spine — the
-     one place a single partition is trivially fine.
+  1. :func:`range_buckets` tags every row with its range bucket ``_rb``
+     by ``width_bucket`` over the [min, max] extent of the order column
+     (one cheap columnar min/max job) and hash-partitions on it;
+  2. :func:`range_scan` runs the window *per bucket*, folds each bucket
+     into a one-row summary, scans the summaries over the
+     (n_buckets)-row bucket spine — the one place a single partition is
+     trivially fine — and patches every row with its bucket's broadcast
+     **prefix carry**.
 
-Used by the keyless as-of join (operators/asof.py), keyless gap-fill
-interpolation (operators/gapfill.py), and the concurrency sweep-line's
-global running sum (operators/concurrency.py).
+:func:`range_locf`, :func:`range_running_sums` and :func:`range_lag` are
+scans that differ only in their four expressions (in-bucket window,
+summary, carry, patch).  Users: the keyless as-of join (asof.py), keyless
+gap-fill interpolation (gapfill.py), the keyless counter lag and reset
+adjustment (counters.py), and the running sums of the concurrency sweep
+(concurrency.py), survival curves (survival.py), reservoir sampling
+(sampling.py), skew audit (skewaudit.py) and ranking (ranking.py).  The
+keyless EWMA (ewma.py) takes its buckets and order key from here and
+keeps its own pandas scan and affine carry.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 
 def numeric_order_col(df: DataFrame, order_col: str) -> Column:
@@ -37,6 +48,95 @@ def numeric_order_col(df: DataFrame, order_col: str) -> Column:
     return c.cast("double")
 
 
+def range_buckets(
+    df: DataFrame, order_col: str, n_buckets: int | None = None
+) -> tuple[DataFrame, int]:
+    """``df`` plus an int ``_rb`` range bucket over ``order_col``,
+    hash-partitioned on ``_rb``, and the bucket count (default
+    4 × defaultParallelism).  Buckets run 1..n+1 (``width_bucket`` puts
+    the maximum in n+1); a NULL order value gets a NULL bucket.  A
+    degenerate extent (≤1 distinct instant) is one bucket."""
+    if n_buckets is None:
+        n_buckets = max(df.sparkSession.sparkContext.defaultParallelism, 1) * 4
+    od = numeric_order_col(df, order_col)
+    ext = df.agg(F.min(od).alias("mn"), F.max(od).alias("mx")).first()
+    if ext.mn is None or ext.mn == ext.mx or n_buckets <= 1:
+        n_buckets, rb = 1, F.when(od.isNotNull(), F.lit(1))
+    else:
+        rb = F.width_bucket(od, F.lit(ext.mn), F.lit(ext.mx), F.lit(n_buckets))
+    # explicit: a single-partition input (e.g. a gap-fill grid) would
+    # otherwise satisfy the window's distribution without any exchange
+    return df.withColumn("_rb", rb.cast("int")).repartition("_rb"), n_buckets
+
+
+def order_key(order_col: str, tiebreak: tuple[str, ...] = ()) -> Column:
+    """The scan's total order ``(order_col, *tiebreak)`` as one comparable
+    value for ``max_by``/``min_by``.  The bare column when there is no
+    tiebreak: a struct ordering makes the aggregate a SortAggregate."""
+    if not tiebreak:
+        return F.col(order_col)
+    return F.struct(*[F.col(c) for c in (order_col, *tiebreak)])
+
+
+#: One output of :func:`range_scan`: ``(within, summary, carry, patch)``.
+#: ``within(w)`` scans inside a bucket over ``w`` (its rows in scan order,
+#: no frame); ``summary(last)`` folds a bucket into the value its carry is
+#: built from, where ``last(x, where=None)`` is ``x`` at the bucket's last
+#: row in scan order; ``carry(s, w)`` scans summary ``s`` over the spine,
+#: ``w`` framed to the strictly earlier buckets; ``patch(p, c)`` combines
+#: the in-bucket value ``p`` with the carry ``c``.
+Scan = tuple[Callable, Callable, Callable, Callable]
+
+
+def _upto(w: WindowSpec) -> WindowSpec:
+    return w.rowsBetween(W.unboundedPreceding, W.currentRow)
+
+
+def _carry_last(s: Column, w: WindowSpec) -> Column:
+    # empty buckets have a NULL summary and are skipped
+    return F.last(s, ignorenulls=True).over(w)
+
+
+def range_scan(
+    df: DataFrame,
+    order_col: str,
+    scans: dict[str, Scan],
+    tiebreak: tuple[str, ...] = (),
+    n_buckets: int | None = None,
+    reverse: bool = False,
+) -> DataFrame:
+    """``df`` with each ``scans`` output column, computed over the global
+    ``(order_col, *tiebreak)`` order (descending when ``reverse``) as a
+    range-partitioned prefix scan: one extent job, one bucket shuffle,
+    and one broadcast carry join shared by every output.  Rows with NULL
+    ``order_col`` receive no carry (they sit outside the range order)."""
+    tagged, n = range_buckets(df, order_col, n_buckets)
+    key = order_key(order_col, tiebreak)
+    by = F.min_by if reverse else F.max_by
+
+    def last(x: Column, where: Column | None = None) -> Column:
+        return by(x, key if where is None else F.when(where, key))
+
+    order = [F.col(c) for c in (order_col, *tiebreak)]
+    w = W.partitionBy("_rb").orderBy(*[c.desc() for c in order] if reverse else order)
+    w_spine = W.orderBy(F.col("_rb").desc() if reverse else F.col("_rb")).rowsBetween(
+        W.unboundedPreceding, -1
+    )
+    within, summ, carry, patch = zip(*scans.values())
+    ids = range(len(scans))
+    summary = tagged.groupBy("_rb").agg(*[summ[i](last).alias(f"_s{i}") for i in ids])
+    spine = df.sparkSession.range(1, n + 2).select(F.col("id").cast("int").alias("_rb"))
+    carries = spine.join(summary, "_rb", "left").select(
+        "_rb", *[carry[i](F.col(f"_s{i}"), w_spine).alias(f"_c{i}") for i in ids]
+    )
+    out = tagged.select("*", *[within[i](w).alias(f"_p{i}") for i in ids]).join(
+        F.broadcast(carries), "_rb", "left"
+    )
+    for i, col in enumerate(scans):
+        out = out.withColumn(col, patch[i](F.col(f"_p{i}"), F.col(f"_c{i}")))
+    return out.drop("_rb", *[f"_{x}{i}" for i in ids for x in "pc"])
+
+
 def range_locf(
     df: DataFrame,
     order_col: str,
@@ -51,62 +151,40 @@ def range_locf(
     ``(order_col, *tiebreak)`` order — equivalent to a single global
     LOCF window, executed range-partitioned.  ``reverse=True`` fills
     with the first non-null observation at-or-*after* instead (NOCB —
-    the "next" side of linear interpolation).
+    the "next" side of linear interpolation)."""
+    f = F.col(fill_col)
+    locf = (
+        lambda w: F.last(f, ignorenulls=True).over(_upto(w)),
+        lambda last: last(f, f.isNotNull()),
+        _carry_last,
+        F.coalesce,
+    )
+    return range_scan(
+        df, order_col, {out_col or fill_col: locf}, tiebreak, n_buckets, reverse
+    )
 
-    Rows with NULL ``order_col`` receive no carry (they sit outside the
-    range order)."""
-    out_col = out_col or fill_col
-    spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = max(spark.sparkContext.defaultParallelism, 1) * 4
-    od = numeric_order_col(df, order_col)
-    order_exprs = (
-        [F.col(order_col).desc(), *[F.col(t).desc() for t in tiebreak]]
-        if reverse
-        else [F.col(order_col), *[F.col(t) for t in tiebreak]]
+
+def range_lag(
+    df: DataFrame,
+    order_col: str,
+    value_col: str,
+    out_col: str,
+    tiebreak: tuple[str, ...] = (),
+    n_buckets: int | None = None,
+) -> DataFrame:
+    """``lag(value_col) OVER (ORDER BY order_col, *tiebreak)`` into
+    ``out_col``, executed range-partitioned: a bucket's first row takes
+    the last value of the nearest non-empty earlier bucket, NULL
+    included.  The value travels in a one-field struct so that "no
+    previous row" (NULL struct) and "previous value NULL" stay apart."""
+    v = F.struct(F.col(value_col).alias("v"))
+    lag = (
+        lambda w: F.lag(v).over(w),
+        lambda last: last(v),
+        _carry_last,
+        lambda p, c: F.coalesce(p, c)["v"],
     )
-    locf: Column = F.last(fill_col, ignorenulls=True)
-    ext = df.agg(F.min(od).alias("mn"), F.max(od).alias("mx")).first()
-    if ext.mn is None or ext.mn == ext.mx or n_buckets <= 1:
-        # degenerate extent (≤1 distinct instant): single partition is
-        # both unavoidable and harmless
-        w = (
-            W.partitionBy(F.lit(1))
-            .orderBy(*order_exprs)
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        return df.withColumn(out_col, locf.over(w))
-    rb = F.width_bucket(od, F.lit(ext.mn), F.lit(ext.mx), F.lit(n_buckets)).cast("int")
-    tagged = df.withColumn("_rb", rb)
-    w_in = (
-        W.partitionBy("_rb")
-        .orderBy(*order_exprs)
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    filled = tagged.withColumn(out_col, locf.over(w_in))
-    # boundary observation per bucket (ties on the order value break
-    # arbitrarily, matching the window's tie behavior) → prefix carry
-    boundary = F.min_by(fill_col, od) if reverse else F.max_by(fill_col, od)
-    last_per_bucket = (
-        tagged.filter(F.col(fill_col).isNotNull())
-        .groupBy("_rb")
-        .agg(boundary.alias("_lastv"))
-    )
-    spine = spark.range(1, n_buckets + 2).select(F.col("id").cast("int").alias("_rb"))
-    w_carry = (
-        W.orderBy(F.col("_rb").desc() if reverse else F.col("_rb"))
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    carry = (
-        spine.join(last_per_bucket, "_rb", "left")
-        .withColumn("_carry", F.last("_lastv", ignorenulls=True).over(w_carry))
-        .select("_rb", "_carry")
-    )
-    return (
-        filled.join(F.broadcast(carry), "_rb", "left")
-        .withColumn(out_col, F.coalesce(F.col(out_col), F.col("_carry")))
-        .drop("_rb", "_carry")
-    )
+    return range_scan(df, order_col, {out_col: lag}, tiebreak, n_buckets)
 
 
 def range_running_sum(
@@ -119,21 +197,11 @@ def range_running_sum(
 ) -> DataFrame:
     """Global cumulative ``SUM(value_col) OVER (ORDER BY order_col,
     *tiebreak ROWS UNBOUNDED PRECEDING..CURRENT)`` executed
-    range-partitioned — the prefix-sum sibling of :func:`range_locf`.
-
-    Same three-step shape: width_bucket ranging over the [min, max]
-    extent, a per-bucket running sum (hash shuffle, full parallelism),
-    then a broadcast prefix carry holding the SUM of every earlier
-    bucket's total (computed on the tiny n_buckets-row spine).  NULL
-    ``value_col`` rows contribute 0; NULL ``order_col`` rows receive no
-    carry.  Used by the concurrency sweep-line, where a naive keyless
-    window would drag every boundary event through one task."""
+    range-partitioned — the prefix-sum sibling of :func:`range_locf`:
+    a per-bucket running sum plus the SUM of every earlier bucket's
+    total.  NULL ``value_col`` rows contribute 0."""
     return range_running_sums(
-        df,
-        order_col,
-        {out_col: value_col},
-        tiebreak=tiebreak,
-        n_buckets=n_buckets,
+        df, order_col, {out_col: value_col}, tiebreak=tiebreak, n_buckets=n_buckets
     )
 
 
@@ -145,57 +213,18 @@ def range_running_sums(
     n_buckets: int | None = None,
 ) -> DataFrame:
     """N global cumulative sums over the SAME order in ONE
-    range-partitioned pass — ``sums`` maps ``out_col -> value_col``.
-    One extent job, one per-bucket window shuffle, and one broadcast
-    prefix-carry join amortized across every requested sum (a caller
-    looping :func:`range_running_sum` pays each of those per column)."""
-    spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = max(spark.sparkContext.defaultParallelism, 1) * 4
-    od = numeric_order_col(df, order_col)
-    order_exprs = [F.col(order_col), *[F.col(t) for t in tiebreak]]
-    ext = df.agg(F.min(od).alias("mn"), F.max(od).alias("mx")).first()
-    if ext is None or ext.mn is None or ext.mn == ext.mx or n_buckets <= 1:
-        w = (
-            W.partitionBy(F.lit(1))
-            .orderBy(*order_exprs)
-            .rowsBetween(W.unboundedPreceding, 0)
+    range-partitioned pass — ``sums`` maps ``out_col -> value_col``
+    (a caller looping :func:`range_running_sum` pays the extent job,
+    the bucket shuffle and the carry join per column)."""
+
+    def running(v: str) -> Scan:
+        return (
+            lambda w: F.sum(v).over(_upto(w)),
+            lambda last: F.sum(v),
+            lambda s, w: F.sum(s).over(w),
+            lambda p, c: F.coalesce(p, F.lit(0)) + F.coalesce(c, F.lit(0)),
         )
-        out = df
-        for out_col, value_col in sums.items():
-            out = out.withColumn(out_col, F.sum(value_col).over(w))
-        return out
-    rb = F.width_bucket(od, F.lit(ext.mn), F.lit(ext.mx), F.lit(n_buckets)).cast("int")
-    tagged = df.withColumn("_rb", rb)
-    w_in = (
-        W.partitionBy("_rb")
-        .orderBy(*order_exprs)
-        .rowsBetween(W.unboundedPreceding, 0)
+
+    return range_scan(
+        df, order_col, {o: running(v) for o, v in sums.items()}, tiebreak, n_buckets
     )
-    partial = tagged
-    for out_col, value_col in sums.items():
-        partial = partial.withColumn(out_col, F.sum(value_col).over(w_in))
-    totals = tagged.groupBy("_rb").agg(
-        *[
-            F.sum(value_col).alias(f"_tot_{out_col}")
-            for out_col, value_col in sums.items()
-        ]
-    )
-    spine = spark.range(1, n_buckets + 2).select(F.col("id").cast("int").alias("_rb"))
-    w_carry = W.orderBy("_rb").rowsBetween(W.unboundedPreceding, -1)
-    carry = spine.join(totals, "_rb", "left")
-    for out_col in sums:
-        carry = carry.withColumn(
-            f"_carry_{out_col}", F.sum(f"_tot_{out_col}").over(w_carry)
-        )
-    carry = carry.select(
-        "_rb", *[f"_carry_{out_col}" for out_col in sums]
-    )
-    out = partial.join(F.broadcast(carry), "_rb", "left")
-    for out_col in sums:
-        out = out.withColumn(
-            out_col,
-            F.coalesce(F.col(out_col), F.lit(0))
-            + F.coalesce(F.col(f"_carry_{out_col}"), F.lit(0)),
-        )
-    return out.drop("_rb", *[f"_carry_{out_col}" for out_col in sums])

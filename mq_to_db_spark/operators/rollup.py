@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.config import TIER_SECONDS
+from mq_to_db_spark.functions.text import token_count_ws
 
 #: tier name → date_trunc unit
 _TRUNC_UNIT = {"1m": "minute", "1h": "hour", "1d": "day"}
@@ -60,19 +61,12 @@ AGG_COL_NAMES = [
 def with_text_stats(df: DataFrame) -> DataFrame:
     """Project per-turn text measures (JVM-side, codegen'd).
 
-    ``token_count`` = whitespace-token count (0 for empty/blank text) —
-    the same count as ``functions.text.token_count_ws``.
+    ``token_count`` = ``functions.text.token_count_ws``, the whitespace-token
+    count (0 for empty/blank text).
     """
     text_len = F.coalesce(F.length("text"), F.lit(0))
-    trimmed = F.trim(F.col("text"))
-    # regexp_count(runs)+1 ≡ size(split(...)) for non-empty strings (split
-    # keeps trailing empties, so fields = separator_runs + 1) but allocates
-    # no per-row array — measured 2.8× faster and GC-neutral at 32 threads.
-    token_count = F.when(
-        F.col("text").isNull() | (trimmed == ""), F.lit(0)
-    ).otherwise(F.regexp_count(trimmed, F.lit(r"\s+")) + F.lit(1))
     return df.withColumn("text_len", text_len.cast("long")).withColumn(
-        "token_count", token_count.cast("long")
+        "token_count", token_count_ws("text")
     )
 
 

@@ -32,14 +32,12 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mq_to_db_spark.config import TIERS
 from mq_to_db_spark.operators.rollup import _merge_aggs, cascade
 
-#: coarsest-first probe order for the greedy covering
-_TIERS_DESC = ("1d", "1h", "1m")
+#: tier bucket widths, coarsest first (the greedy covering's probe order)
 _TIER_TD = {
-    "1m": timedelta(minutes=1),
-    "1h": timedelta(hours=1),
-    "1d": timedelta(days=1),
+    name: timedelta(seconds=sec) for name, _, sec in reversed(TIERS)
 }
 
 
@@ -76,7 +74,7 @@ def cover_range(
         raise ValueError(f"empty range: {t0!r} >= {t1!r}")
     if _floor(t0, "1m") != t0 or _floor(t1, "1m") != t1:
         raise ValueError("stitch bounds must be minute-aligned")
-    usable = [t for t in _TIERS_DESC if t in tiers]
+    usable = [t for t in _TIER_TD if t in tiers]
     if "1m" not in usable:
         raise ValueError("the finest tier (1m) is required to cover edges")
 

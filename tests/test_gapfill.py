@@ -88,14 +88,27 @@ def test_gapfill_linear_interpolation(spark):
     assert got["03"] == 30.0
 
 
+def assert_range_locf_matches_ffill_bfill(spark, pdf, n_buckets, tiebreak=()):
+    """``range_locf`` of ``pdf.v`` over ``t`` (forward and reverse) equals
+    pandas ffill/bfill in the global ``(t, *tiebreak)`` order; ``pdf.i``
+    identifies the rows."""
+    from mq_to_db_spark.operators.rangewin import range_locf
+
+    df = spark.createDataFrame(pdf)
+    got = range_locf(df, "t", "v", tiebreak, out_col="locf", n_buckets=n_buckets)
+    got = range_locf(got, "t", "v", tiebreak, "nocb", n_buckets, reverse=True)
+    got = got.toPandas().set_index("i").loc[pdf.i]
+    ordered = pdf.sort_values(["t", *tiebreak]).set_index("i").v
+    want_f, want_b = ordered.ffill().loc[pdf.i], ordered.bfill().loc[pdf.i]
+    pd.testing.assert_series_equal(got.locf, want_f, check_names=False)
+    pd.testing.assert_series_equal(got.nocb, want_b, check_names=False)
+
+
 def test_range_locf_matches_pandas_ffill_bfill(spark):
     """The range-partitioned LOCF (forward + reverse) must equal a plain
     global ffill/bfill — including carries across bucket boundaries
     (n_buckets is forced small so most buckets need the carry)."""
     import numpy as np
-    import pandas as pd
-
-    from mq_to_db_spark.operators.rangewin import range_locf
 
     rng = np.random.default_rng(5)
     n = 500
@@ -107,22 +120,7 @@ def test_range_locf_matches_pandas_ffill_bfill(spark):
     pdf = pd.DataFrame(
         {"t": ts.astype("datetime64[us]"), "v": np.where(mask, np.nan, v), "i": range(n)}
     )
-    df = spark.createDataFrame(pdf)
-
-    fwd = (
-        range_locf(df, "t", "v", out_col="locf", n_buckets=7)
-        .toPandas()
-        .sort_values("i", ignore_index=True)
-    )
-    rev = (
-        range_locf(df, "t", "v", out_col="nocb", n_buckets=7, reverse=True)
-        .toPandas()
-        .sort_values("i", ignore_index=True)
-    )
-    want_f = pdf.sort_values("t").v.ffill().reindex(pdf.index)
-    want_b = pdf.sort_values("t").v.bfill().reindex(pdf.index)
-    pd.testing.assert_series_equal(fwd.locf, want_f, check_names=False)
-    pd.testing.assert_series_equal(rev.nocb, want_b, check_names=False)
+    assert_range_locf_matches_ffill_bfill(spark, pdf, n_buckets=7)
 
 
 def test_keyless_gapfill_locf_plan_is_range_partitioned(spark, transcripts):
@@ -130,11 +128,17 @@ def test_keyless_gapfill_locf_plan_is_range_partitioned(spark, transcripts):
 
     r = rollup_from_raw(transcripts, "1h")
     out = gapfill_interpolate_last(r, "1h", "n_turns")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the LOCF window shuffles and partitions on the range bucket (the
-    # remaining SinglePartition exchanges are 1-row final-agg merges for
-    # the grid extent plus the tiny carry spine — fine at any scale)
-    assert "hashpartitioning(_rb" in plan
-    assert "windowspecdefinition(_rb" in plan
+    plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    # the LOCF window's own input is a shuffle on the range bucket (the
+    # grid it reads is single-partition, which a window on _rb would
+    # otherwise accept as is and run in one task); the remaining
+    # SinglePartition exchanges are 1-row final-agg merges for the grid
+    # extent plus the tiny carry spine — fine at any scale
+    at = next(
+        k for k, line in enumerate(plan)
+        if "windowspecdefinition(_rb" in line and "bucket_start" in line
+    )
+    below = [line for line in plan[at + 1:] if "Sort [" not in line]
+    assert "Exchange hashpartitioning(_rb" in below[0], "\n".join(plan)
     # no data window partitioned by a constant (the old one-task global)
-    assert "windowspecdefinition(1," not in plan
+    assert "windowspecdefinition(1," not in "\n".join(plan)
