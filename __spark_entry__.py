@@ -1636,12 +1636,13 @@ def q_concurrency_10m(spark, sf_dir):
     as-of join onto the grid; every shuffle carries ≤16-byte rows.  The
     oracle is the naive grid×interval join (O(n·m), fine at sf0.01) —
     engine-independent semantics, scalable plan only on the Spark side."""
-    from mq_to_db_spark.operators.concurrency import concurrency_at_grid, instant_grid
+    from mq_to_db_spark.operators.concurrency import concurrency_at_grid
     from mq_to_db_spark.operators.sessionize import sessionize
+    from mq_to_db_spark.operators.timegrid import step_grid
 
     ev = _events(spark, sf_dir).select("user_id", "event_id", "ts")
     sess = sessionize(ev, gap="30 minutes", key="user_id", order_cols=["ts", "event_id"])
-    grid = instant_grid(_events(spark, sf_dir), "ts", "10 minutes", align="day")
+    grid = step_grid(_events(spark, sf_dir), "10 minutes", align="day", out_col="grid_ts")
     return concurrency_at_grid(
         sess, grid, grid_col="grid_ts", start_col="session_start", end_col="session_end"
     )
@@ -2710,23 +2711,18 @@ def _dense_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-filled per-event_type hourly count grid over the events
     extent — the dense-series precondition shared by the row-lag
     operators (asap_1h, backtest_naive_1d)."""
+    from mq_to_db_spark.operators.timegrid import step_grid
+
     ev = _events(spark, sf_dir)
     hourly = ev.groupBy(
         F.date_trunc("hour", "ts").alias("bucket_start"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
-    ext = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
+    grid = step_grid(
+        ev, "1 hour", ["event_type"], align="hour", global_extent=True,
+        out_col="bucket_start",
     )
-    grid = ext.select(
-        F.explode(
-            F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
-        ).alias("bucket_start")
-    )
-    types = ev.select("event_type").distinct()
     return (
-        grid.crossJoin(F.broadcast(types))
-        .join(hourly, ["bucket_start", "event_type"], "left")
+        grid.join(hourly, ["bucket_start", "event_type"], "left")
         .select(
             "bucket_start",
             "event_type",
@@ -3133,8 +3129,8 @@ def q_wow_delta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZERO-FILLED per-key hourly grid — exact integer deltas, one
     double-division ratio; one key-partitioned exchange."""
     from mq_to_db_spark.operators.derivatives import offset_delta
-    from mq_to_db_spark.operators.gapfill import time_grid
     from mq_to_db_spark.operators.rollup import bucket_col
+    from mq_to_db_spark.operators.timegrid import step_grid
 
     bucketed = (
         _events(spark, sf_dir)
@@ -3143,7 +3139,9 @@ def q_wow_delta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("v"))
     )
-    series = time_grid(bucketed, "1h", ["event_type"]).join(
+    series = step_grid(
+        bucketed, "1 hour", ["event_type"], "bucket_start", global_extent=True
+    ).join(
         bucketed, ["event_type", "bucket_start"], "left"
     ).select(
         "event_type", "bucket_start", F.coalesce("v", F.lit(0)).alias("v")
@@ -3293,15 +3291,15 @@ def q_autocorr_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-partitioned window (never keyless), then the exact-moment
     Pearson (six BIGINT sums, one fixed-order double formula)."""
     from mq_to_db_spark.operators.correlate import autocorr
-    from mq_to_db_spark.operators.gapfill import time_grid
     from mq_to_db_spark.operators.rollup import bucket_col
+    from mq_to_db_spark.operators.timegrid import step_grid
 
     bucketed = (
         _events(spark, sf_dir)
         .groupBy(bucket_col("1h", "ts").alias("bucket_start"))
         .agg(F.count(F.lit(1)).alias("v"))
     )
-    series = time_grid(bucketed, "1h", []).join(
+    series = step_grid(bucketed, "1 hour", ts_col="bucket_start").join(
         bucketed, "bucket_start", "left"
     ).select("bucket_start", F.coalesce("v", F.lit(0)).alias("v"))
     out = autocorr(series, lag=1, group_unit="day", v_col="v")

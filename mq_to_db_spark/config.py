@@ -11,16 +11,17 @@ from dataclasses import dataclass
 
 
 #: Retention tiers, ordered fine → coarse.  Each tier is (name, spark
-#: interval literal, seconds).  The cascade materializes 1m from raw,
-#: 1h from 1m, 1d from 1h (SURVEY.md §2 C8).
-TIERS: tuple[tuple[str, str, int], ...] = (
-    ("1m", "1 minute", 60),
-    ("1h", "1 hour", 3600),
-    ("1d", "1 day", 86400),
+#: interval literal, seconds, ``date_trunc`` unit).  The cascade
+#: materializes 1m from raw, 1h from 1m, 1d from 1h (SURVEY.md §2 C8).
+TIERS: tuple[tuple[str, str, int, str], ...] = (
+    ("1m", "1 minute", 60, "minute"),
+    ("1h", "1 hour", 3600, "hour"),
+    ("1d", "1 day", 86400, "day"),
 )
 
-TIER_SECONDS: dict[str, int] = {name: sec for name, _, sec in TIERS}
-TIER_INTERVAL: dict[str, str] = {name: iv for name, iv, _ in TIERS}
+TIER_SECONDS: dict[str, int] = {name: sec for name, _, sec, _ in TIERS}
+TIER_INTERVAL: dict[str, str] = {name: iv for name, iv, _, _ in TIERS}
+TIER_UNIT: dict[str, str] = {name: unit for name, _, _, unit in TIERS}
 
 #: Reject reasons — mirrors the Results.Reason taxonomy of the reference
 #: (/root/reference/internal/repository/messages.go:76,100,126,144): parse

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mq_to_db_spark.operators.timegrid import epoch_us
+
 #: canonical field order of a transcript turn (input_hint order)
 TURN_FIELDS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
@@ -119,9 +121,7 @@ def openmetrics_line(
         if i:
             parts.append(F.lit(","))
         parts += [F.lit(f'{k}="'), esc(v), F.lit('"')]
-    ts_s = (F.unix_micros(c(ts_col).cast("timestamp_ltz")) / F.lit(1_000_000)).cast(
-        "long"
-    )
+    ts_s = (epoch_us(c(ts_col)) / F.lit(1_000_000)).cast("long")
     parts += [
         F.lit("} "),
         c(value).cast("long").cast("string"),

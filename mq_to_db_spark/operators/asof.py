@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from mq_to_db_spark.operators.timegrid import epoch_us
+
 
 def _asof_matched(
     left: DataFrame,
@@ -161,9 +163,8 @@ def asof_join(
             withb, right, on, by, value_cols, tolerance, range_buckets,
             "forward", "_mf",
         )
-        us = lambda c: F.unix_micros(c.cast("timestamp_ltz"))  # noqa: E731
-        d_b = us(F.col(on)) - us(F.col("_mb")["_on"])
-        d_f = us(F.col("_mf")["_on"]) - us(F.col(on))
+        d_b = epoch_us(F.col(on)) - epoch_us(F.col("_mb")["_on"])
+        d_f = epoch_us(F.col("_mf")["_on"]) - epoch_us(F.col(on))
         matched = (
             F.when(F.col("_mb").isNull(), F.col("_mf"))
             .when(F.col("_mf").isNull(), F.col("_mb"))

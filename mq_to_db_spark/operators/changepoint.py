@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import window as W
 
+from mq_to_db_spark.operators.timegrid import epoch_us
+
 
 def cusum(
     df: DataFrame,
@@ -133,12 +135,9 @@ def threshold_episodes(
         F.count(F.lit(1)).alias("n_samples"),
         F.max(v).alias("peak"),
     )
-    # cast through LTZ: parquet reads back NTZ, which unix_micros rejects
-    # (the timeweight.py pattern — the session TZ is UTC so this is exact)
-    dur = (
-        F.unix_micros(F.col("end_ts").cast("timestamp_ltz"))
-        - F.unix_micros(F.col("start_ts").cast("timestamp_ltz"))
-    ).alias("duration_us")
+    dur = (epoch_us(F.col("end_ts")) - epoch_us(F.col("start_ts"))).alias(
+        "duration_us"
+    )
     return (
         eps.select(*keys, "start_ts", "end_ts", "n_samples", "peak", dur)
         .where(F.col("duration_us") >= F.lit(int(min_duration_us)))

@@ -14,7 +14,7 @@ entity's cohort (min period) with a window over that tier (entity-
 partitioned, tier-sized) and counts distinct entities per
 (cohort, offset).  Nothing ever shuffles raw events twice, and the
 retention matrix is |cohorts| × |offsets| rows regardless of input
-size.  Period arithmetic is integer epoch-period indices (µs-exact),
+size.  Period arithmetic is on integer epoch-µs period starts,
 so the DuckDB oracle replays it bit-for-bit.
 """
 
@@ -23,10 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-#: supported period lengths, in seconds (weeks anchor to the epoch
-#: Thursday like ``date_trunc`` does NOT — we use integer division of
-#: epoch seconds, which both engines reproduce exactly)
-_PERIOD_SEC = {"day": 86_400, "week": 7 * 86_400}
+from mq_to_db_spark.operators.timegrid import (
+    duration_us, epoch_us, from_epoch_us, step_grid, step_start,
+)
 
 
 def cohort_retention(
@@ -40,27 +39,23 @@ def cohort_retention(
     cohort_size, retention_rate)``.
 
     ``cohort_start`` is the UTC timestamp of the entity's first active
-    period; ``period_offset`` counts periods since it (0 = the cohort
-    period itself, so ``retention_rate`` at offset 0 is 1.0 by
-    construction).  ``max_offset`` truncates the matrix (reporting
+    period (periods are epoch-aligned: weeks start on Thursdays, not on
+    ``date_trunc``'s Mondays); ``period_offset`` counts periods since it
+    (0 = the cohort period itself, so ``retention_rate`` at offset 0 is
+    1.0 by construction).  ``max_offset`` truncates the matrix (reporting
     window); rates round to 6 for engine-independent hashes.
     """
-    if period not in _PERIOD_SEC:
-        raise ValueError(f"period must be one of {sorted(_PERIOD_SEC)}")
-    plen = _PERIOD_SEC[period]
+    if period not in ("day", "week"):
+        raise ValueError("period must be one of ['day', 'week']")
+    plen = duration_us(f"1 {period}")
 
-    # pass 1: raw events -> (entity, period_idx) activity tier
-    # (µs-integer floor-division: bit-identical in any engine, unlike
-    # fractional epoch seconds)
+    # pass 1: raw events -> (entity, period start µs) activity tier
+    # (µs-integer steps: bit-identical in any engine, unlike fractional
+    # epoch seconds)
     active = (
         events.select(
             entity_col,
-            F.expr(
-                # NTZ-safe (see timeweight._epoch_micros): parquet reads
-                # back TIMESTAMP_NTZ, unix_micros wants LTZ, session tz UTC
-                f"unix_micros(cast({ts_col} as timestamp_ltz))"
-                f" div {plen * 1_000_000}"
-            ).alias("_p"),
+            step_start(epoch_us(F.col(ts_col)), plen).alias("_p"),
         )
         .groupBy(entity_col, "_p")
         .count()
@@ -71,7 +66,7 @@ def cohort_retention(
     w = W.partitionBy(entity_col)
     mat = active.withColumn("_p0", F.min("_p").over(w)).select(
         F.col("_p0"),
-        (F.col("_p") - F.col("_p0")).cast("int").alias("period_offset"),
+        F.expr(f"(_p - _p0) div {plen}").cast("int").alias("period_offset"),
         F.col(entity_col),
     )
     if max_offset is not None:
@@ -90,10 +85,7 @@ def cohort_retention(
             ).over(wc),
         )
         .select(
-            # NTZ output like every other bucket column (UTC wall time)
-            F.timestamp_seconds(F.col("_p0") * plen)
-            .cast("timestamp_ntz")
-            .alias("cohort_start"),
+            from_epoch_us(F.col("_p0")).alias("cohort_start"),
             "period_offset",
             F.col("n_active").cast("long").alias("n_active"),
             F.col("cohort_size").cast("long").alias("cohort_size"),
@@ -127,7 +119,7 @@ def stickiness(
     later days it keeps the entity "monthly active" for (fan-out
     window_days × |activity tier|, NOT × |events|) and counts exact
     distinct per day (two-phase distinct).  The dense day grid is a
-    1-row-extent sequence explode, gapfill's idiom.
+    1-row-extent sequence explode (timegrid.step_grid).
     """
     day = F.date_trunc("day", F.col(ts_col))
     active = df.select(
@@ -149,15 +141,7 @@ def stickiness(
     mau = contrib.groupBy("day_start").agg(
         F.count_distinct("_e").alias("mau")
     )
-    ext = df.agg(
-        F.date_trunc("day", F.min(ts_col)).alias("lo"),
-        F.date_trunc("day", F.max(ts_col)).alias("hi"),
-    )
-    grid = ext.select(
-        F.explode(
-            F.sequence("lo", "hi", F.expr("INTERVAL 1 DAY"))
-        ).alias("day_start")
-    )
+    grid = step_grid(df, "1 day", ts_col=ts_col, align="day", out_col="day_start")
     return (
         grid.join(dau, "day_start", "left")
         .join(mau, "day_start", "left")

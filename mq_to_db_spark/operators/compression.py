@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mq_to_db_spark.functions import codec
+from mq_to_db_spark.operators.timegrid import trunc_unit
 
 CODEC_NAME = "gorilla-byte-v1"
 
@@ -61,8 +62,6 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("enc_bytes", T.LongType()),
     ]
 )
-
-_TRUNC_UNIT = {"1 day": "day", "1 hour": "hour"}
 
 
 def _encode_partition(batches):
@@ -221,7 +220,7 @@ def encode_chunks(
     if partitions is None:
         partitions = df.sparkSession.sparkContext.defaultParallelism
     prepped = df.withColumn(
-        "_chunk_start", F.date_trunc(_TRUNC_UNIT[chunk_interval], F.col("ts"))
+        "_chunk_start", F.date_trunc(trunc_unit(chunk_interval), F.col("ts"))
     ).withColumn("_value", F.col(value_col).cast("double"))
     arranged = prepped.repartition(
         partitions, "conv_id", "_chunk_start"
@@ -309,7 +308,7 @@ def decode_chunks_range(
     optionally restricts the series (pure pushed filter too).  Result is
     identical to ``decode_chunks(chunks).where(lo <= ts < hi)`` — the
     equivalence a test asserts."""
-    unit = _TRUNC_UNIT[chunk_interval]
+    unit = trunc_unit(chunk_interval)
     lo_c, hi_c = F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp")
     pruned = chunks.where(
         (F.col("chunk_start") >= F.date_trunc(unit, lo_c))
@@ -350,7 +349,7 @@ def merge_late_chunks(
     """
     from mq_to_db_spark.operators.rollup import with_text_stats
 
-    unit = _TRUNC_UNIT[chunk_interval]
+    unit = trunc_unit(chunk_interval)
     if value_col not in late_turns.columns:
         late_turns = with_text_stats(late_turns)
     late = late_turns.select(

@@ -95,7 +95,8 @@ def concurrency_at_grid(
 ) -> DataFrame:
     """Sample the sweep-line step function at each ``grid`` instant:
     ``(grid_col, active)`` where ``active`` counts intervals with
-    ``start ≤ g ≤ end`` (0 where nothing is active).
+    ``start ≤ g ≤ end`` (0 where nothing is active).  A dense ``grid``
+    is :func:`~mq_to_db_spark.operators.timegrid.step_grid`'s.
 
     Grid instants ride the sweep itself: each grid row joins the
     boundary table as a zero-delta event tie-broken AFTER real deltas
@@ -125,30 +126,3 @@ def concurrency_at_grid(
         F.coalesce(F.col("active"), F.lit(0)).cast("long").alias("active"),
     )
 
-
-def instant_grid(
-    df: DataFrame,
-    ts_col: str = "ts",
-    step: str = "10 minutes",
-    align: str = "day",
-    out_col: str = "grid_ts",
-) -> DataFrame:
-    """Dense instant grid spanning ``df``'s [min, max] extent of
-    ``ts_col``, left edge floored to ``align``: one two-value agg (the
-    only driver action), then a distributed ``sequence`` explode —
-    the same grid shape the gap-fill operator generates.
-
-    (Named ``instant_grid`` — NOT ``time_grid`` — to avoid colliding
-    with :func:`~mq_to_db_spark.operators.gapfill.time_grid`, whose
-    signature is ``(df_rollup, tier, keys, global_extent)``.)"""
-    ext = df.agg(
-        F.date_trunc(align, F.min(ts_col)).alias("lo"), F.max(ts_col).alias("hi")
-    )
-    # NOTE: no repartition here — the one consumer (the keyless as-of
-    # sample) immediately range-shuffles the grid by width_bucket, so a
-    # hash repartition ahead of it was a pure extra exchange (VERDICT
-    # r03 #6); a grid that needed standalone parallelism would add it
-    # at the call site.
-    return ext.select(
-        F.explode(F.sequence("lo", "hi", F.expr(f"INTERVAL {step}"))).alias(out_col)
-    )

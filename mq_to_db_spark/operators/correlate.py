@@ -21,7 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gapfill import time_grid
+from mq_to_db_spark.config import TIER_INTERVAL
+
+from .timegrid import step_grid
 
 
 def bucketed_pair_series(
@@ -46,7 +48,7 @@ def bucketed_pair_series(
     )
     if not zero_fill:
         return bucketed
-    grid = time_grid(bucketed, tier, [])
+    grid = step_grid(bucketed, TIER_INTERVAL[tier], ts_col="bucket_start")
     return grid.join(bucketed, "bucket_start", "left").select(
         "bucket_start",
         F.coalesce("a", F.lit(0)).alias("a"),

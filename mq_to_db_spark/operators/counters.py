@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from mq_to_db_spark.config import TIER_SECONDS
 from mq_to_db_spark.operators.rangewin import range_lag, range_running_sum
 from mq_to_db_spark.operators.rollup import bucket_col
+from mq_to_db_spark.operators.timegrid import epoch_us
 
 
 def _contrib(value, prev):
@@ -178,7 +179,7 @@ def rate_extrapolated(
     staged = df.withColumn("_bkt", bucket)
     w = W.partitionBy(*[F.col(k) for k in keys], F.col("_bkt")).orderBy(*order)
     staged = staged.withColumn("_prev", F.lag(value_col).over(w))
-    us = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
+    us = epoch_us(F.col(ts_col))
     order_key = F.struct(
         F.col(ts_col).alias("t"), *[F.col(t) for t in tiebreak]
     )
@@ -201,7 +202,7 @@ def rate_extrapolated(
         )
     )
     tier_us = TIER_SECONDS[tier] * 1_000_000
-    rs_us = F.unix_micros(F.col("bucket_start").cast("timestamp_ltz"))
+    rs_us = epoch_us(F.col("bucket_start"))
     re_us = rs_us + F.lit(tier_us)
     n = F.col("n_samples")
     res_d = F.col("_res").cast("double")

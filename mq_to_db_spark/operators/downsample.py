@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.operators.rollup import bucket_col
-from mq_to_db_spark.operators.timeweight import _epoch_micros
+from mq_to_db_spark.operators.timegrid import epoch_us
 
 
 def downsample_ohlc(
@@ -98,7 +98,7 @@ def downsample_lttb(
     point) + ``n_samples`` (bucket population before downsampling).
     """
     w = W.partitionBy(*keys).orderBy(ts_col, *tiebreak)
-    x = _epoch_micros(F.col(ts_col))
+    x = epoch_us(F.col(ts_col))
     y = F.col(value_col)
     xp, yp = F.lag(x).over(w), F.lag(y).over(w)
     xn, yn = F.lead(x).over(w), F.lead(y).over(w)

@@ -22,7 +22,7 @@ affine maps compose associatively — the classic parallel-scan structure:
     take their range buckets on ts and their order key from rangewin.py
     (``range_buckets``, ``order_key``); each bucket scans
     locally with a virtual zero initial state, a tiny per-bucket spine
-    ``(B = local final, n = count, first value)`` is collected, the
+    ``(B = local final, n = values, first value)`` is collected, the
     bucket-to-bucket recurrence ``s_out = B + (1-alpha)^n · s_in`` runs
     driver-side over that spine (hundreds of rows — same cost class as
     the range extent probe), and a broadcast join finalizes every
@@ -59,7 +59,11 @@ def ewma(
 ) -> DataFrame:
     """Append ``out_col``: the EWMA of ``value_col`` in ``(ts_col,
     *tiebreak)`` order per ``keys`` series (or globally if ``keys`` is
-    empty, via the range-partitioned scan)."""
+    empty, via the range-partitioned scan).
+
+    NULL values are skipped (pandas ``ignore_na=True``): a NULL row reads
+    the average so far (NULL before the series' first value), and the
+    next value decays the state by one step, not by the rows between."""
     if not 0 < alpha <= 1:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     if keys:
@@ -74,15 +78,18 @@ def _scan_schema(df: DataFrame, extra: list) -> StructType:
     return schema
 
 
+def _ewm(x: pd.Series, alpha: float) -> pd.Series:
+    """The plain recurrence over ``x``, NULLs skipped (see :func:`ewma`)."""
+    return x.ewm(alpha=alpha, adjust=False, ignore_na=True).mean()
+
+
 def _ewma_keyed(df, keys, ts_col, value_col, alpha, tiebreak, out_col):
     order = [ts_col, *tiebreak]
     schema = _scan_schema(df, [(out_col, DoubleType())])
 
     def scan(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, ignore_index=True)
-        pdf[out_col] = (
-            pdf[value_col].astype("float64").ewm(alpha=alpha, adjust=False).mean().round(6)
-        )
+        pdf[out_col] = _ewm(pdf[value_col].astype("float64"), alpha).round(6)
         return pdf
 
     return df.groupBy(*keys).applyInPandas(scan, schema)
@@ -96,53 +103,51 @@ def _ewma_keyless(df, ts_col, value_col, alpha, tiebreak, out_col, n_buckets):
 
     def local_scan(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, ignore_index=True)
+        x = pdf[value_col].astype("float64")
         # virtual zero initial state: prepend 0, scan, drop the seed row —
-        # exactly s_t = alpha·x_t + (1-alpha)·s_{t-1} with s_0 = 0
-        seeded = pd.concat(
-            [pd.Series([0.0]), pdf[value_col].astype("float64")], ignore_index=True
-        )
-        pdf["_loc"] = (
-            seeded.ewm(alpha=alpha, adjust=False).mean().iloc[1:].to_numpy()
-        )
-        pdf["_pos"] = range(1, len(pdf) + 1)
+        # exactly s_t = alpha·x_t + (1-alpha)·s_{t-1} with s_0 = 0 over
+        # the bucket's values, NULLs skipped; _pos counts the values so far
+        seeded = pd.concat([pd.Series([0.0]), x], ignore_index=True)
+        pdf["_loc"] = _ewm(seeded, alpha).iloc[1:].to_numpy()
+        pdf["_pos"] = x.notna().cumsum().to_numpy()
         return pdf
 
     loc = tagged.groupBy("_rb").applyInPandas(local_scan, schema)
     loc = loc.localCheckpoint(eager=False)  # scan once, reuse for spine + finalize
     key = order_key(ts_col, tiebreak)
+    v = F.col(value_col)
     spine = (
         loc.where(F.col("_rb").isNotNull())  # NULL ts: outside the order
         .groupBy("_rb")
         .agg(
             F.max_by("_loc", key).alias("B"),
-            F.count(F.lit(1)).alias("n"),
-            F.min_by(F.col(value_col).cast("double"), key).alias("first_val"),
+            F.count(v).alias("n"),
+            F.min_by(v.cast("double"), F.when(v.isNotNull(), key)).alias("first_val"),
         )
         .orderBy("_rb")
         .collect()
     )
-    # bucket-to-bucket recurrence over the tiny spine (driver-side):
-    # the FIRST bucket's incoming state is its own first value (that makes
-    # s_1 == x_1, the raw-first-sample convention); afterwards
+    # bucket-to-bucket recurrence over the tiny spine (driver-side): the
+    # state entering the ``_head`` bucket (the series' first value) is
+    # that value (s_1 == x_1), and its rows before it stay NULL; then
     # s_in[k+1] = s_out[k] = B_k + (1-alpha)^n_k · s_in[k]
     carries = []
     s_in = None
     for row in spine:
-        s_in = row.first_val if s_in is None else s_in
-        carries.append((row._rb, float(s_in)))
-        s_in = row.B + (1.0 - alpha) ** row.n * s_in
-    carry_df = local_frame(spark, carries, "_rb int, _carry double")
+        head = s_in is None and row.n > 0
+        if head:
+            s_in = row.first_val
+        carries.append((row._rb, s_in, head))
+        if s_in is not None:
+            s_in = row.B + (1.0 - alpha) ** row.n * s_in
+    carry_df = local_frame(spark, carries, "_rb int, _carry double, _head boolean")
+    s = F.col("_loc") + F.pow(F.lit(1.0 - alpha), F.col("_pos")) * F.col("_carry")
     return (
         loc.join(F.broadcast(carry_df), "_rb", "left")
         .withColumn(
-            out_col,
-            F.round(
-                F.col("_loc")
-                + F.pow(F.lit(1.0 - alpha), F.col("_pos")) * F.col("_carry"),
-                6,
-            ),
+            out_col, F.when(~F.col("_head") | (F.col("_pos") > 0), F.round(s, 6))
         )
-        .drop("_rb", "_loc", "_pos", "_carry")
+        .drop("_rb", "_loc", "_pos", "_carry", "_head")
     )
 
 

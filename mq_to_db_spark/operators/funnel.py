@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.timeweight import _epoch_micros as _us
+from mq_to_db_spark.operators.timegrid import epoch_us
 
 
 def funnel_reach(
@@ -70,10 +70,9 @@ def funnel_reach(
     for k in range(2, len(steps) + 1):
         cur = _first_at_or_after(F.col(f"_ts_{k}"), prev)
         if horizon_sec is not None:
-            # µs-integer bound: bit-identical across engines (NTZ-safe
-            # cast, see timeweight._epoch_micros)
+            # µs-integer bound: bit-identical across engines
             cur = F.when(
-                _us(cur) - _us(F.try_element_at(F.col("_ts_1"), F.lit(1)))
+                epoch_us(cur) - epoch_us(F.try_element_at(F.col("_ts_1"), F.lit(1)))
                 <= int(horizon_sec) * 1_000_000,
                 cur,
             )

@@ -5,8 +5,9 @@ side); the north_rule makes gap handling explicit: every (series, bucket)
 cell of the tier grid must exist, empty buckets filled per policy.
 
 Scale design:
-  * the grid is ``sequence(min_bucket, max_bucket, tier) + explode`` —
-    generated, never materialized as input data;
+  * the grid is ``sequence(min_bucket, max_bucket, tier) + explode``
+    (:func:`~mq_to_db_spark.operators.timegrid.step_grid`) — generated,
+    never materialized as input data;
   * per-series grids: the series→(first,last) extent table is tiny relative
     to raw (one row per series), so the grid build is an agg over the
     rollup (already tiny) followed by explode;
@@ -21,45 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.config import TIER_INTERVAL
+from mq_to_db_spark.operators.timegrid import epoch_us, step_grid
 
 #: columns filled with 0 on generated (empty) buckets under the "zero"
 #: policy; all other stat columns stay NULL (min/max/avg of an empty
 #: bucket is undefined, matching the pandas/DuckDB oracle convention).
 _ZERO_FILL = ("n_turns", "token_sum", "text_len_sum", "n_user", "n_assistant", "n_system", "n_tool")
-
-
-def time_grid(
-    df_rollup: DataFrame,
-    tier: str,
-    keys: list[str] | None = None,
-    global_extent: bool = True,
-) -> DataFrame:
-    """Dense (series, bucket) grid spanning the rollup's time extent.
-
-    ``global_extent=True``: one [min,max] range shared by all series (the
-    dashboard convention — every panel spans the same x-axis).  False:
-    per-series extent (first..last active bucket of that series).
-    """
-    keys = list(keys or [])
-    step = F.expr(f"interval {TIER_INTERVAL[tier]}")
-    if keys and global_extent:
-        extent = df_rollup.agg(
-            F.min("bucket_start").alias("_lo"), F.max("bucket_start").alias("_hi")
-        )
-        series = df_rollup.select(*keys).distinct()
-        grid = series.crossJoin(F.broadcast(extent))
-    elif keys:
-        grid = df_rollup.groupBy(*keys).agg(
-            F.min("bucket_start").alias("_lo"), F.max("bucket_start").alias("_hi")
-        )
-    else:
-        grid = df_rollup.agg(
-            F.min("bucket_start").alias("_lo"), F.max("bucket_start").alias("_hi")
-        )
-    return (
-        grid.withColumn("bucket_start", F.explode(F.sequence("_lo", "_hi", step)))
-        .drop("_lo", "_hi")
-    )
 
 
 def gapfill(
@@ -73,9 +41,14 @@ def gapfill(
 
     policy="zero": count-like columns → 0 on empty buckets; stats null.
     policy="null": all columns null on empty buckets.
+    ``global_extent``: every series spans the rollup's one [min, max]
+    range (the dashboard convention); False: each series spans its own
+    first..last bucket.
     """
     keys = list(keys or [])
-    grid = time_grid(df_rollup, tier, keys, global_extent=global_extent)
+    grid = step_grid(
+        df_rollup, TIER_INTERVAL[tier], keys, "bucket_start", global_extent=global_extent
+    )
     join_cols = ["bucket_start", *keys]
     filled = grid.join(df_rollup, join_cols, "left")
     if policy == "zero":
@@ -103,7 +76,7 @@ def gapfill_interpolate_linear(
 
     filled = gapfill(df_rollup, tier, keys, policy="null")
     part = list(keys or [])
-    t = F.unix_micros(F.col("bucket_start").cast("timestamp")).cast("double")
+    t = epoch_us(F.col("bucket_start")).cast("double")
     obs = F.when(
         F.col(value_col).isNotNull(),
         F.struct(F.col(value_col).cast("double").alias("v"), t.alias("t")),

@@ -3,9 +3,9 @@
 Two TimescaleDB-hyperfunction analogues the round-2 surface still lacked,
 both built on one shared primitive — **clip an interval table to tumbling
 tier buckets** — expressed as a Catalyst ``sequence``+``explode`` over
-exact BIGINT epoch-microsecond arithmetic (the same exactness discipline
-as :mod:`mq_to_db_spark.operators.timeweight`: every per-bucket weight is
-an integer µs, so sums are order-independent and the DuckDB oracles
+exact BIGINT epoch-microsecond arithmetic
+(:mod:`mq_to_db_spark.operators.timegrid`: every per-bucket weight is an
+integer µs, so sums are order-independent and the DuckDB oracles
 hash-match bit-for-bit).
 
   * :func:`heartbeat_agg` — ``heartbeat_agg``/uptime analogue: each
@@ -39,32 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.timeweight import _epoch_micros
-
-_UNIT_US = {
-    "microsecond": 1,
-    "millisecond": 1_000,
-    "second": 1_000_000,
-    "minute": 60_000_000,
-    "hour": 3_600_000_000,
-    "day": 86_400_000_000,
-    "week": 7 * 86_400_000_000,
-}
-
-
-def duration_us(spec: str) -> int:
-    """``"15 minutes"`` → 900000000 µs.  Fixed-width units only (no
-    month/year — tumbling buckets must be arithmetic, the same
-    restriction ``F.window`` has)."""
-    parts = spec.strip().split()
-    if len(parts) != 2:
-        raise ValueError(f"expected '<n> <unit>', got {spec!r}")
-    n, unit = int(parts[0]), parts[1].lower().rstrip("s")
-    if unit not in _UNIT_US:
-        raise ValueError(f"unsupported unit {unit!r} (fixed-width only)")
-    if n <= 0:
-        raise ValueError(f"duration must be positive, got {spec!r}")
-    return n * _UNIT_US[unit]
+from mq_to_db_spark.operators.timegrid import (
+    duration_us, epoch_us, from_epoch_us, span_steps, step_grid, step_start,
+)
 
 
 def explode_bucket_overlaps(
@@ -84,23 +61,18 @@ def explode_bucket_overlaps(
     Σ buckets-spanned, i.e. the dense-series cardinality downstream
     aggregations need anyway."""
     width = duration_us(bucket)
-    s_us = _epoch_micros(F.col(start_col))
-    e_us = _epoch_micros(F.col(end_col))
+    s_us = epoch_us(F.col(start_col))
+    e_us = epoch_us(F.col(end_col))
     live = df.filter(e_us > s_us).withColumn("_s_us", s_us).withColumn("_e_us", e_us)
-    first_b = (F.col("_s_us") - F.pmod("_s_us", F.lit(width))).cast("long")
-    last_b = ((F.col("_e_us") - 1) - F.pmod(F.col("_e_us") - 1, F.lit(width))).cast(
-        "long"
-    )
+    # a bucket [b, b + width) overlaps [s, e) exactly when s - width < b < e
     exploded = live.withColumn(
-        "_b_us", F.explode(F.sequence(first_b, last_b, F.lit(width)))
+        "_b_us", span_steps(F.col("_s_us") - (width - 1), F.col("_e_us"), width)
     )
     overlap = F.least(F.col("_e_us"), F.col("_b_us") + width) - F.greatest(
         F.col("_s_us"), F.col("_b_us")
     )
     return (
-        exploded.withColumn(
-            out_bucket, F.timestamp_micros(F.col("_b_us")).cast("timestamp_ntz")
-        )
+        exploded.withColumn(out_bucket, from_epoch_us(F.col("_b_us")))
         .withColumn(out_us, overlap)
         .drop("_s_us", "_e_us", "_b_us")
     )
@@ -124,9 +96,9 @@ def heartbeat_agg(
     tiebreak = tiebreak or []
     tol = duration_us(tolerance)
     w = W.partitionBy(*keys).orderBy(ts_col, *tiebreak)
-    prev_us = F.lag(_epoch_micros(F.col(ts_col))).over(w)
+    prev_us = F.lag(epoch_us(F.col(ts_col))).over(w)
     new_island = F.when(
-        prev_us.isNull() | (_epoch_micros(F.col(ts_col)) - prev_us > tol), 1
+        prev_us.isNull() | (epoch_us(F.col(ts_col)) - prev_us > tol), 1
     ).otherwise(0)
     tagged = df.withColumn(
         "_iid",
@@ -134,9 +106,7 @@ def heartbeat_agg(
     )
     islands = tagged.groupBy(*keys, "_iid").agg(
         F.min(ts_col).alias("_is"),
-        F.timestamp_micros(_epoch_micros(F.max(ts_col)) + tol)
-        .cast("timestamp_ntz")
-        .alias("_ie"),
+        from_epoch_us(epoch_us(F.max(ts_col)) + tol).alias("_ie"),
     )
     clipped = explode_bucket_overlaps(islands, "_is", "_ie", bucket)
     return clipped.groupBy(*keys, "bucket_start").agg(
@@ -172,14 +142,13 @@ def interpolated_time_weighted_avg(
     tiebreak = tiebreak or []
     width = duration_us(bucket)
     w = W.partitionBy(*keys).orderBy(ts_col, *tiebreak)
-    s_us = _epoch_micros(F.col(ts_col))
-    own_bucket_end = (s_us - F.pmod(s_us, F.lit(width)) + width).cast("long")
-    hold_end_us = F.coalesce(_epoch_micros(F.lead(ts_col).over(w)), own_bucket_end)
+    own_bucket_end = step_start(epoch_us(F.col(ts_col)), width) + width
+    hold_end_us = F.coalesce(epoch_us(F.lead(ts_col).over(w)), own_bucket_end)
     spans = df.select(
         *keys,
         F.col(ts_col),
         F.col(value_col),
-        F.timestamp_micros(hold_end_us).cast("timestamp_ntz").alias("_hold_end"),
+        from_epoch_us(hold_end_us).alias("_hold_end"),
     )
     clipped = explode_bucket_overlaps(spans, ts_col, "_hold_end", bucket)
     v = F.col(value_col)
@@ -228,7 +197,7 @@ def gap_stats(
     from mq_to_db_spark.operators.rollup import bucket_col
 
     w = W.partitionBy(*keys).orderBy(ts_col, *tiebreak)
-    ts_us = _epoch_micros(F.col(ts_col))
+    ts_us = epoch_us(F.col(ts_col))
     gap = ts_us - F.lag(ts_us).over(w)
     gsum, gcnt = F.sum("_gap_us"), F.count("_gap_us")
     return (
@@ -281,8 +250,7 @@ def staleness(
     dense grid join, then an LOCF window per series over TIER rows —
     the window's partition is the series key, so no keyless sort; at
     100 TB the windowed relation is tier-sized, never raw."""
-    from mq_to_db_spark.config import TIER_SECONDS
-    from mq_to_db_spark.operators.gapfill import time_grid
+    from mq_to_db_spark.config import TIER_INTERVAL, TIER_SECONDS
     from mq_to_db_spark.operators.rollup import bucket_col
 
     b = bucket_col(tier, ts_col)
@@ -290,7 +258,9 @@ def staleness(
         F.max(ts_col).alias("_last_ts"),
         F.count(F.lit(1)).alias("n_samples"),
     )
-    grid = time_grid(per_bucket, tier, keys)
+    grid = step_grid(
+        per_bucket, TIER_INTERVAL[tier], keys, "bucket_start", global_extent=True
+    )
     joined = grid.join(per_bucket, [*keys, "bucket_start"], "left")
     w = (
         W.partitionBy(*keys)
@@ -298,7 +268,7 @@ def staleness(
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     locf_ts = F.last("_last_ts", ignorenulls=True).over(w)
-    bucket_end_us = _epoch_micros(F.col("bucket_start")) + F.lit(
+    bucket_end_us = epoch_us(F.col("bucket_start")) + F.lit(
         TIER_SECONDS[tier] * 1_000_000
     )
     return joined.select(
@@ -306,7 +276,7 @@ def staleness(
         "bucket_start",
         F.coalesce("n_samples", F.lit(0)).alias("n_samples"),
         F.col("n_samples").isNull().alias("absent"),
-        (bucket_end_us - _epoch_micros(locf_ts)).alias("staleness_us"),
+        (bucket_end_us - epoch_us(locf_ts)).alias("staleness_us"),
     )
 
 
@@ -325,7 +295,7 @@ def merge_intervals(
     ONE window shuffle on the key; empty/negative inputs are dropped.
     Output: keys + ``start_ts``/``end_ts`` of each island.
     """
-    s_us, e_us = _epoch_micros(F.col(start_col)), _epoch_micros(F.col(end_col))
+    s_us, e_us = epoch_us(F.col(start_col)), epoch_us(F.col(end_col))
     live = df.filter(e_us > s_us).select(
         *keys, s_us.alias("_s"), e_us.alias("_e")
     )
@@ -338,8 +308,8 @@ def merge_intervals(
         "_iid", F.sum(new_island).over(w.rowsBetween(W.unboundedPreceding, 0))
     )
     return tagged.groupBy(*keys, "_iid").agg(
-        F.timestamp_micros(F.min("_s")).cast("timestamp_ntz").alias(start_col),
-        F.timestamp_micros(F.max("_e")).cast("timestamp_ntz").alias(end_col),
+        from_epoch_us(F.min("_s")).alias(start_col),
+        from_epoch_us(F.max("_e")).alias(end_col),
     ).drop("_iid")
 
 
@@ -374,8 +344,8 @@ def subtract_intervals(
     """
     merged = merge_intervals(sub, keys, start_col, end_col).select(
         *keys,
-        _epoch_micros(F.col(start_col)).alias("_ss"),
-        _epoch_micros(F.col(end_col)).alias("_se"),
+        epoch_us(F.col(start_col)).alias("_ss"),
+        epoch_us(F.col(end_col)).alias("_se"),
     )
     if broadcast_sub:
         merged = F.broadcast(merged)
@@ -383,8 +353,8 @@ def subtract_intervals(
         *keys,
         F.col(start_col),
         F.col(end_col),
-        _epoch_micros(F.col(start_col)).alias("_bs"),
-        _epoch_micros(F.col(end_col)).alias("_be"),
+        epoch_us(F.col(start_col)).alias("_bs"),
+        epoch_us(F.col(end_col)).alias("_be"),
     )
     j = b.join(
         merged,
@@ -418,7 +388,7 @@ def subtract_intervals(
         *keys,
         start_col,
         end_col,
-        F.timestamp_micros(F.col("_gs")).cast("timestamp_ntz").alias(out_start),
-        F.timestamp_micros(F.col("_ge")).cast("timestamp_ntz").alias(out_end),
+        from_epoch_us(F.col("_gs")).alias(out_start),
+        from_epoch_us(F.col("_ge")).alias(out_end),
         (F.col("_ge") - F.col("_gs")).alias("sub_us"),
     )

@@ -35,7 +35,7 @@ import operator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.timeweight import _epoch_micros
+from mq_to_db_spark.operators.timegrid import epoch_us
 
 
 def _md5_low_bits(c: Column, bits: int) -> Column:
@@ -73,7 +73,7 @@ def zorder_keys(
     """``df`` + ``zkey`` (Morton key over md5(hash_cols...) lanes and
     the range-scaled ``ts_col`` lane, ts in the highest lane so the
     curve's coarse order is still time-ish)."""
-    us = _epoch_micros(F.col(ts_col))
+    us = epoch_us(F.col(ts_col))
     ext = df.agg(F.min(us).alias("_lo"), F.max(us).alias("_hi"))
     d = df.crossJoin(F.broadcast(ext))
     # exact BIGINT scaling onto [0, 2^bits): products bounded (span_us

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import window as W
 
 from mq_to_db_spark.operators.rollup import bucket_col
-from mq_to_db_spark.operators.timeweight import _epoch_micros
+from mq_to_db_spark.operators.timegrid import epoch_us
 
 
 def sliding_quota(
@@ -54,7 +54,7 @@ def sliding_quota(
     share a timestamp share a count (RANGE semantics — deterministic
     without a tiebreak by construction).
     """
-    us = _epoch_micros(F.col(ts_col))
+    us = epoch_us(F.col(ts_col))
     w = (
         W.Window.partitionBy(*keys)
         .orderBy(us)
@@ -137,7 +137,7 @@ def gcra_throttle(
     # another's argument); both window nodes share the spec -> one sort
     staged = df.withColumn(
         "_u",
-        _epoch_micros(F.col(ts_col))
+        epoch_us(F.col(ts_col))
         - (F.row_number().over(w_ord) - 1).cast("long") * F.lit(T),
     )
     prev_max = F.max("_u").over(w_prev)

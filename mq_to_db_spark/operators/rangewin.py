@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
 
+from mq_to_db_spark.operators.timegrid import epoch_us
+
 
 def numeric_order_col(df: DataFrame, order_col: str) -> Column:
     """``order_col`` as a monotonic DOUBLE suitable for ``width_bucket``
@@ -44,7 +46,7 @@ def numeric_order_col(df: DataFrame, order_col: str) -> Column:
     dt = dict(df.dtypes).get(order_col, "")
     c = F.col(order_col)
     if dt.startswith("timestamp") or dt == "date":
-        return c.cast("timestamp_ltz").cast("double")
+        return epoch_us(c).cast("double")
     return c.cast("double")
 
 

@@ -15,9 +15,10 @@ already-bucketed rollup: resampling evaluates the raw sample stream AT
 instants — no bucketing, values are point evaluations, and a lookback
 bound marks stale series NULL exactly like PromQL staleness.
 
-Scale design: grid instants are generated per series from its [first,
-last] extent (sequence + explode over the tiny per-series extent agg —
-never materialized input); both directional matches are as-of joins
+Scale design: grid instants are ``step``-spaced per series over its
+[first, last] extent, from the first sample's minute
+(:func:`~mq_to_db_spark.operators.timegrid.step_grid`: a tiny per-series
+extent agg + explode, never materialized input); both directional matches are as-of joins
 (operators/asof.py: union + in-window struct carry, ONE exchange per
 direction, no grid×samples product); interpolation itself is pure
 column arithmetic in exact epoch-µs.
@@ -29,29 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.operators.asof import asof_join
-
-
-def instant_series_grid(
-    df: DataFrame,
-    step: str,
-    keys: list[str] | None = None,
-    ts_col: str = "ts",
-    align: str = "minute",
-    out_col: str = "grid_ts",
-) -> DataFrame:
-    """Per-series evaluation instants: ``step``-spaced timestamps spanning
-    each series' [first, last] sample (edges aligned outward/inward to
-    ``align`` so instants are round).  One tiny extent agg + explode."""
-    keys = list(keys or [])
-    lo = F.date_trunc(align, F.min(ts_col))
-    hi = F.date_trunc(align, F.max(ts_col))
-    extent = df.groupBy(*keys).agg(lo.alias("_lo"), hi.alias("_hi"))
-    return extent.select(
-        *keys,
-        F.explode(
-            F.sequence("_lo", "_hi", F.expr(f"interval {step}"))
-        ).alias(out_col),
-    )
+from mq_to_db_spark.operators.timegrid import epoch_us, from_epoch_us, span_steps, step_grid
 
 
 def resample_locf(
@@ -69,7 +48,7 @@ def resample_locf(
     NULL, exactly a vanished Prometheus target.  Output: keys, grid_ts,
     ``value`` (+ ``sample_ts`` of the sample used)."""
     keys = list(keys or [])
-    grid = instant_series_grid(df, step, keys, ts_col, out_col=ts_col)
+    grid = step_grid(df, step, keys, ts_col, align="minute")
     right = df.select(*keys, ts_col, value_col, *tiebreak)
     out = asof_join(
         grid,
@@ -106,7 +85,7 @@ def resample_interpolate(
     Two as-of joins (backward + forward), each one exchange.
     """
     keys = list(keys or [])
-    grid = instant_series_grid(df, step, keys, ts_col, out_col=ts_col)
+    grid = step_grid(df, step, keys, ts_col, align="minute")
     right = df.select(*keys, ts_col, value_col)
     prev = asof_join(
         grid, right, on=ts_col, by=keys, value_cols=[value_col],
@@ -116,9 +95,9 @@ def resample_interpolate(
         prev, right, on=ts_col, by=keys, value_cols=[value_col],
         direction="forward", suffix="_n",
     ).withColumnRenamed(f"{value_col}_n", "_v1")
-    g = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
-    t0 = F.unix_micros(F.col(f"{ts_col}_p").cast("timestamp_ltz"))
-    t1 = F.unix_micros(F.col(f"{ts_col}_n").cast("timestamp_ltz"))
+    g = epoch_us(F.col(ts_col))
+    t0 = epoch_us(F.col(f"{ts_col}_p"))
+    t1 = epoch_us(F.col(f"{ts_col}_n"))
     v0, v1 = F.col("_v0"), F.col("_v1")
     interp = (
         # at-sample instants (t1 == g is possible only when g is a
@@ -194,26 +173,19 @@ def over_time_grid(
     dcols = [F.col(distinct_col).alias("_d")] if distinct_col else []
     staged = df.select(
         *keys,
-        F.unix_micros(F.col(ts_col).cast("timestamp_ltz")).alias("_tus"),
+        epoch_us(F.col(ts_col)).alias("_tus"),
         F.col(value_col).alias("_v"),
         order_key.alias("_ok"),
         *dcols,
-    ).withColumn(
-        "_t0",
-        F.expr(f"((_tus + {step_us - 1}) div {step_us}) * {step_us}"),
     )
+    # a sample at t lies in the windows (g - range, g] with t <= g < t + range
+    tus = F.col("_tus")
     exploded = staged.select(
         *keys,
         "_v",
         "_ok",
         *(["_d"] if distinct_col else []),
-        F.explode(
-            F.sequence(
-                F.col("_t0"),
-                F.col("_tus") + F.lit(range_us - 1),
-                F.lit(step_us),
-            )
-        ).alias("_gus"),
+        span_steps(tus, tus + F.lit(range_us), step_us).alias("_gus"),
     )
     return (
         exploded.groupBy(*keys, "_gus")
@@ -235,9 +207,7 @@ def over_time_grid(
         )
         .select(
             *keys,
-            F.timestamp_micros(F.col("_gus"))
-            .cast("timestamp_ntz")
-            .alias(out_col),
+            from_epoch_us(F.col("_gus")).alias(out_col),
             "n_samples",
             "sum_v",
             (F.col("sum_v").cast("double") / F.col("n_samples").cast("double")).alias("avg_v"),

@@ -38,11 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.config import TIER_SECONDS
+from mq_to_db_spark.config import TIER_SECONDS, TIER_UNIT
 from mq_to_db_spark.functions.text import token_count_ws
-
-#: tier name → date_trunc unit
-_TRUNC_UNIT = {"1m": "minute", "1h": "hour", "1d": "day"}
 
 ROLE_NAMES = ("user", "assistant", "system", "tool")
 
@@ -101,7 +98,7 @@ def _merge_aggs() -> list:
 
 
 def bucket_col(tier: str, ts_col: str = "ts"):
-    return F.date_trunc(_TRUNC_UNIT[tier], F.col(ts_col))
+    return F.date_trunc(TIER_UNIT[tier], F.col(ts_col))
 
 
 def sorted_count_map(key: str, value: str, where=None):

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from mq_to_db_spark.operators.timegrid import epoch_us
+
 
 def with_session_id(
     df: DataFrame,
@@ -58,14 +60,8 @@ def sessionize(
         F.max(ts_col).alias("session_end"),
         F.count(F.lit(1)).alias("n_turns"),
         # exact µs arithmetic — casting timestamps to double first loses
-        # precision at epoch magnitude (~1e9 s ⇒ ~1e-7 relative error);
-        # .cast("timestamp") accepts TIMESTAMP_NTZ inputs too (UTC
-        # session ⇒ value-preserving)
+        # precision at epoch magnitude (~1e9 s ⇒ ~1e-7 relative error)
         (
-            (
-                F.unix_micros(F.max(ts_col).cast("timestamp"))
-                - F.unix_micros(F.min(ts_col).cast("timestamp"))
-            )
-            / 1e6
+            (epoch_us(F.max(ts_col)) - epoch_us(F.min(ts_col))) / 1e6
         ).alias("duration_sec"),
     )

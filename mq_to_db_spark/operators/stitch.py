@@ -37,16 +37,13 @@ from mq_to_db_spark.operators.rollup import _merge_aggs, cascade
 
 #: tier bucket widths, coarsest first (the greedy covering's probe order)
 _TIER_TD = {
-    name: timedelta(seconds=sec) for name, _, sec in reversed(TIERS)
+    name: timedelta(seconds=sec) for name, _, sec, _ in reversed(TIERS)
 }
 
 
 def _floor(ts: datetime, tier: str) -> datetime:
-    if tier == "1m":
-        return ts.replace(second=0, microsecond=0)
-    if tier == "1h":
-        return ts.replace(minute=0, second=0, microsecond=0)
-    return ts.replace(hour=0, minute=0, second=0, microsecond=0)
+    """Start of ``ts``'s ``tier`` bucket, in ``ts``'s own wall time."""
+    return ts - (ts - datetime(1970, 1, 1, tzinfo=ts.tzinfo)) % _TIER_TD[tier]
 
 
 def _as_dt(ts) -> datetime:

@@ -43,23 +43,21 @@ tests/test_subquery.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.operators.counters import _contrib
+from mq_to_db_spark.operators.timegrid import epoch_us, from_epoch_us, step_start
 
 _INNER_FNS = ("count", "sum", "avg", "increase", "rate")
 _OUTER_FNS = {"max": F.max, "min": F.min, "avg": F.avg, "sum": F.sum}
 
 
-def _epoch_bucket(ts_col: str, step: int):
-    """Tumbling absolute-aligned bucket start (timestamp type).
-
-    ``unix_timestamp`` truncates sub-second precision, which is exactly
-    the ``floor(epoch(ts) / step) * step`` rule DuckDB replays for
-    non-negative epochs."""
-    return F.timestamp_seconds(
-        (F.unix_timestamp(F.col(ts_col)) / F.lit(step)).cast("long") * F.lit(step)
+def _step_bucket(ts_col: str, step: int) -> Column:
+    """Start (TIMESTAMP) of the tumbling ``step``-second bucket holding
+    ``ts_col``."""
+    return from_epoch_us(
+        step_start(epoch_us(F.col(ts_col)), step * 1_000_000), ltz=True
     )
 
 
@@ -118,12 +116,12 @@ def subquery_eval(
         }[inner_fn]
 
     inner = (
-        src.groupBy(*keys, _epoch_bucket(ts_col, inner_step).alias("_inner_ts"))
+        src.groupBy(*keys, _step_bucket(ts_col, inner_step).alias("_inner_ts"))
         .agg(inner_expr.alias("_iv"))
     )
     return (
         inner.groupBy(
-            *keys, _epoch_bucket("_inner_ts", outer_range).alias("bucket_start")
+            *keys, _step_bucket("_inner_ts", outer_range).alias("bucket_start")
         )
         .agg(
             _OUTER_FNS[outer_fn]("_iv").alias(out_col),
@@ -157,7 +155,7 @@ def irate(
     if step <= 0:
         raise ValueError("step must be positive")
     keys = list(keys)
-    bucket = _epoch_bucket(ts_col, step).alias("bucket_start")
+    bucket = _step_bucket(ts_col, step).alias("bucket_start")
     src = df.select(*keys, bucket, F.col(ts_col).alias("_ts"), F.col(value_col).alias("_v"), *[F.col(t) for t in tiebreak if t not in keys])
     w = W.partitionBy(*keys, "bucket_start").orderBy(
         F.col("_ts").desc(), *[F.col(t).desc() for t in tiebreak]
@@ -166,10 +164,8 @@ def irate(
     last = F.max(F.when(F.col("_rn") == 1, F.struct("_ts", "_v"))).alias("_last")
     prev = F.max(F.when(F.col("_rn") == 2, F.struct("_ts", "_v"))).alias("_prev")
     agg = ranked.groupBy(*keys, "bucket_start").agg(last, prev)
-    from mq_to_db_spark.operators.timeweight import _epoch_micros
-
     lv, pv = F.col("_last._v"), F.col("_prev._v")
-    gap_us = _epoch_micros(F.col("_last._ts")) - _epoch_micros(F.col("_prev._ts"))
+    gap_us = epoch_us(F.col("_last._ts")) - epoch_us(F.col("_prev._ts"))
     contribution = F.when(lv >= pv, lv - pv).otherwise(lv)
     rate = F.when(
         F.col("_prev").isNotNull() & (gap_us > 0),

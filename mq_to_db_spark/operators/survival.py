@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.operators.rangewin import range_running_sum
+from mq_to_db_spark.operators.timegrid import epoch_us
 
 
 def conv_lifetimes(
@@ -68,8 +69,7 @@ def conv_lifetimes(
     return per.crossJoin(F.broadcast(extent)).select(
         key_col,
         (
-            F.unix_micros(F.col("_last").cast("timestamp_ltz"))
-            - F.unix_micros(F.col("_first").cast("timestamp_ltz"))
+            epoch_us(F.col("_last")) - epoch_us(F.col("_first"))
         ).alias("duration_us"),
         F.when(
             F.col("_last")

@@ -29,17 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-
-def _epoch_micros(col):
-    """Timestamp → exact BIGINT epoch microseconds (NTZ-safe: parquet
-    timestamps read back as TIMESTAMP_NTZ, which ``unix_micros`` rejects;
-    NTZ→LTZ interprets in the session timezone, UTC everywhere here).
-
-    Exactness is the point: durations and time weights accumulated as
-    integer µs make every downstream sum order-independent — a double
-    ``sum()`` differs in its last bits between summation orders (and
-    between engines), which breaks hash-exact oracle comparison."""
-    return F.unix_micros(col.cast("timestamp_ltz"))
+from mq_to_db_spark.operators.timegrid import epoch_us
 
 
 def time_weighted_avg(
@@ -79,7 +69,7 @@ def time_weighted_avg(
     w = W.partitionBy(*keys, "bucket_start").orderBy(ts_col, *tiebreak)
     bucket_end = F.col("bucket_start") + F.expr(f"INTERVAL {bucket}")
     hold_until = F.coalesce(F.lead(ts_col).over(w), bucket_end)
-    weight_us = _epoch_micros(hold_until) - _epoch_micros(F.col(ts_col))
+    weight_us = epoch_us(hold_until) - epoch_us(F.col(ts_col))
     weighted = tagged.withColumn("_w_us", weight_us)
     v = F.col(value_col)
     if exact:
@@ -120,7 +110,7 @@ def state_durations(
     tiebreak = tiebreak or []
     w = W.partitionBy(key).orderBy(ts_col, *tiebreak)
     nxt = F.lead(ts_col).over(w)
-    dur_us = _epoch_micros(nxt) - _epoch_micros(F.col(ts_col))
+    dur_us = epoch_us(nxt) - epoch_us(F.col(ts_col))
     spans = df.withColumn("_dur_us", dur_us).filter(F.col("_dur_us").isNotNull())
     group = [state_col]
     if bucket is not None:

@@ -34,18 +34,13 @@ from mq_to_db_spark.operators.rollup import (
     _partial_aggs,
     with_text_stats,
 )
-from mq_to_db_spark.operators.stitch import _floor, _as_dt, stitch_range
-
-_MINUTE = 60_000_000  # µs
+from mq_to_db_spark.operators.stitch import _TIER_TD, _as_dt, _floor, stitch_range
+from mq_to_db_spark.operators.timegrid import epoch_us, from_epoch_us, step_start
 
 
 def _ceil_minute(ts: datetime) -> datetime:
     f = _floor(ts, "1m")
-    if f == ts:
-        return ts
-    from datetime import timedelta
-
-    return f + timedelta(minutes=1)
+    return ts if f == ts else f + _TIER_TD["1m"]
 
 
 def _sliver_partials(
@@ -188,13 +183,11 @@ def range_eval(
     src = tier_dfs[tier].filter(
         (F.col("bucket_start") >= F.lit(t0)) & (F.col("bucket_start") < F.lit(t1))
     )
-    cell = (
-        F.lit(epoch0)
-        + ((F.unix_timestamp("bucket_start") - F.lit(epoch0)) / F.lit(step_seconds))
-        .cast("long") * F.lit(step_seconds)
+    cell = step_start(
+        epoch_us(F.col("bucket_start")), step_seconds * 1_000_000, epoch0 * 1_000_000
     )
     return (
-        src.withColumn("grid_ts", F.timestamp_seconds(cell))
+        src.withColumn("grid_ts", from_epoch_us(cell, ltz=True))
         .groupBy("grid_ts", *keys)
         .agg(
             *_merge_aggs(),

@@ -115,19 +115,26 @@ def run_stream_foreach_batch(
     return writer.start()
 
 
-def _pipeline_batch(pipeline, prefix, finalize_every_n_batches=None, max_batches=None):
+def _pipeline_batch(
+    pipeline, prefix, finalize_every_n_batches=None, max_batches=None, to_driver=False
+):
     """The ``foreachBatch`` body both pipeline streams share: micro-batch
     ``k`` runs ``pipeline.run(mode="append")`` as batch
     ``f"{prefix}-{k:06d}"`` — Spark's ``batch_id`` is stable across
     retries, so a recovery replay carries the same id and is a no-op once
     acked — then, every ``finalize_every_n_batches``-th micro-batch,
     :meth:`finalize`.  Micro-batches with id ≥ ``max_batches`` are
-    delivered but not processed."""
+    delivered but not processed.  ``to_driver`` first brings the batch's
+    rows to the driver as Arrow (one job): a source whose scan reports no
+    size (the rate source) then reads as a ``LocalRelation`` of known
+    size, so its commits stage through Arrow like a file source's."""
 
     def _batch(df, batch_id):
         k = int(batch_id)
         if max_batches is not None and k >= max_batches:
             return
+        if to_driver:
+            df = df.sparkSession.createDataFrame(df.toArrow(), schema=df.schema)
         pipeline.run(df.sparkSession, df, batch_id=f"{prefix}-{k:06d}", mode="append")
         if finalize_every_n_batches and (k + 1) % finalize_every_n_batches == 0:
             pipeline.finalize(df.sparkSession)
@@ -288,11 +295,14 @@ def run_rate_pipeline(
     ``stop()`` is (micro-batches keep firing between a caller's progress
     poll and the stop taking effect, and a stop can kill a batch
     mid-commit), nothing past the bound can reach the warehouse and the
-    committed prefix stays exactly reconstructable."""
+    committed prefix stays exactly reconstructable.  A micro-batch is
+    ``rows_per_batch`` rows, so it enters the pipeline from the driver."""
     stream = read_rate_turns(spark, rows_per_batch, num_partitions)
     return (
         stream.writeStream.foreachBatch(
-            _pipeline_batch(pipeline, "rate", finalize_every_n_batches, max_batches)
+            _pipeline_batch(
+                pipeline, "rate", finalize_every_n_batches, max_batches, to_driver=True
+            )
         )
         .option("checkpointLocation", checkpoint_path)
         .trigger(processingTime="0 seconds")

@@ -45,11 +45,11 @@ _WHITELIST = {
     # ranking.py:zipf_fit — 1-row fold result × broadcast(1-row
     # vocab/total stats): a 1×1 join
     "zipf_fit": ("BroadcastNestedLoopJoin",),
-    # intervals.py:staleness → gapfill.time_grid(keys): series ×
+    # intervals.py:staleness → timegrid.step_grid(keys, global_extent): series ×
     # broadcast(1-row global extent) — same grid materialization as
     # gapfill_1h, output = |series| · |grid|
     "staleness_1h": ("BroadcastNestedLoopJoin",),
-    # __spark_entry__:q_wow_delta_1h → gapfill.time_grid(keys): the
+    # __spark_entry__:q_wow_delta_1h → timegrid.step_grid(keys, global_extent): the
     # offset comparison requires the ZERO-FILLED per-key grid (a row
     # lag is only a time lag on a dense series), so it inherits the
     # same series × broadcast(1-row extent) grid build
@@ -79,10 +79,10 @@ _WHITELIST = {
     # layout.py:zorder_keys — rows × broadcast(1-row ts min/max
     # extent): the range-scaling anchor; output = |rows|
     "zorder_keys": ("BroadcastNestedLoopJoin",),
-    # __spark_entry__:q_asap_1h — dense-grid build: hour spine (from a
-    # 1-row extent sequence explode) × broadcast(|event_type| distinct
-    # rows): output = |grid| · |types|, the same zero-fill grid
-    # materialization as gapfill_1h
+    # __spark_entry__:q_asap_1h — dense-grid build (timegrid.step_grid,
+    # global_extent): |event_type| distinct rows × broadcast(1-row
+    # extent), exploded to the hour spine: output = |grid| · |types|,
+    # the same zero-fill grid materialization as gapfill_1h
     "asap_1h": ("BroadcastNestedLoopJoin",),
     # same _dense_hourly grid build as asap_1h
     "backtest_naive_1d": ("BroadcastNestedLoopJoin",),

@@ -69,6 +69,46 @@ def test_keyless_matches_keyed(spark):
     assert not bad, (len(bad), bad[:5])
 
 
+def _replay_skipping_nulls(values, alpha=ALPHA):
+    """The NULL rule: a NULL reads the average so far (NULL before the
+    first value); the next value decays the state by one step."""
+    out, s = [], None
+    for x in values:
+        if x is not None:
+            s = x if s is None else alpha * x + (1 - alpha) * s
+        out.append(None if s is None else round(s, 6))
+    return out
+
+
+@pytest.mark.parametrize("n_buckets", [1, 2, 8])
+def test_keyless_matches_keyed_with_nulls(spark, n_buckets):
+    """A NULL first value and every 10th value NULL: the keyless scan
+    equals the keyed one under one constant key, and both equal the
+    NULL-skipping recurrence."""
+    _, pdf = _fixture(spark, n=100)
+    pdf = pdf[pdf.series == "a"].drop(columns="series").sort_values(["ts", "sid"])
+    values = [None if i % 10 == 0 else v for i, v in enumerate(pdf.value)]
+    df = spark.createDataFrame(
+        [(r.ts.to_pydatetime(), r.sid, v) for r, v in zip(pdf.itertuples(), values)],
+        "ts timestamp, sid long, value double",
+    )
+    kw = dict(value_col="value", alpha=ALPHA, tiebreak=("sid",), n_buckets=n_buckets)
+    keyless = {r.sid: r.ewma for r in ewma(df, [], **kw).collect()}
+    keyed = {
+        r.sid: r.ewma
+        for r in ewma(df.withColumn("k", F.lit(1)), ["k"], **kw).collect()
+    }
+    want = dict(zip(pdf.sid, _replay_skipping_nulls(values)))
+    assert keyed == want
+    assert keyless.keys() == want.keys()
+    bad = [
+        k for k in want
+        if (keyless[k] is None) != (want[k] is None)
+        or (want[k] is not None and abs(keyless[k] - want[k]) > 2e-6)
+    ]
+    assert not bad, (len(bad), bad[:5])
+
+
 def test_keyless_single_row_and_degenerate(spark):
     one = spark.createDataFrame(
         [(pd.Timestamp("2024-01-01 00:00:00").to_pydatetime(), 42.5)],

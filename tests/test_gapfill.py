@@ -2,18 +2,9 @@
 
 import pandas as pd
 
-from mq_to_db_spark.operators.gapfill import gapfill, gapfill_interpolate_last, time_grid
+from mq_to_db_spark.operators.gapfill import gapfill, gapfill_interpolate_last
 from mq_to_db_spark.operators.rollup import rollup_from_raw
 from tests.conftest import assert_pdf_equal
-
-
-def test_grid_is_dense_global(spark, transcripts):
-    r = rollup_from_raw(transcripts, "1h")
-    grid = time_grid(r, "1h").toPandas()
-    lo, hi = grid.bucket_start.min(), grid.bucket_start.max()
-    want = pd.date_range(lo, hi, freq="h")
-    assert len(grid) == len(want)
-    assert set(grid.bucket_start) == set(want)
 
 
 def test_gapfill_zero_policy_fills_dead_hours(spark, transcripts, transcripts_pdf):

@@ -16,11 +16,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.operators.concurrency import (
-    concurrency_at_grid,
-    instant_grid,
-    sweepline_counts,
-)
+from mq_to_db_spark.operators.concurrency import concurrency_at_grid, sweepline_counts
 from mq_to_db_spark.operators.correlate import bucketed_pair_series, series_corr
 from mq_to_db_spark.operators.rangewin import range_running_sum
 from mq_to_db_spark.operators.timeweight import state_durations, time_weighted_avg
@@ -188,15 +184,6 @@ def test_sweepline_end_inclusive_and_drops_invalid(spark):
         (_ts(0), 1),
         (_ts(10) + dt.timedelta(microseconds=1), 0),
     ]
-
-
-def test_instant_grid_spans_extent(spark):
-    df = spark.createDataFrame(
-        [(_ts(7),), (_ts(125),)], "ts timestamp"
-    )
-    grid = instant_grid(df, "ts", "30 minutes", align="hour").orderBy("grid_ts").collect()
-    # floor(0:07 → 0:00) .. 2:05, step 30 min → 0:00,0:30,1:00,1:30,2:00
-    assert [r.grid_ts for r in grid] == [_ts(m) for m in (0, 30, 60, 90, 120)]
 
 
 # -------------------------------------------------------------- correlation

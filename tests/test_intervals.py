@@ -12,11 +12,11 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.operators.intervals import (
-    duration_us,
     explode_bucket_overlaps,
     heartbeat_agg,
     interpolated_time_weighted_avg,
 )
+from mq_to_db_spark.operators.timegrid import duration_us
 
 HOUR_US = 3_600_000_000
 

@@ -75,11 +75,8 @@ def test_range_scans_match_single_partition_window(spark, n_buckets):
     want = counter_increase(one, ["k"], tier="1h", **kw).drop("k").toPandas()
     pd.testing.assert_frame_equal(got, want[got.columns])
 
-    # the keyless EWMA's affine carry does not yet re-weight across NULLs
-    # as the keyed pandas scan does, so it gets its NULLs as 0
-    filled = df.withColumn("v", F.coalesce("v", F.lit(0.0)))
-    got = ewma(filled, [], alpha=0.3, **kw)
-    want = ewma(filled.withColumn("k", F.lit(1)), ["k"], alpha=0.3, **kw)
+    got = ewma(df, [], alpha=0.3, **kw)
+    want = ewma(one, ["k"], alpha=0.3, **kw)
     np.testing.assert_allclose(rows(got, "ewma").ewma, rows(want, "ewma").ewma, atol=2e-6)
 
 

@@ -16,6 +16,7 @@ from mq_to_db_spark.streaming.stream import (
     run_rate_pipeline,
     turns_from_values,
 )
+from tests.test_tableio import WRITER, _writers
 
 
 def test_turns_from_values_schema_and_key(spark):
@@ -66,6 +67,9 @@ def test_rate_pipeline_effectively_once_vs_batch_oracle(spark, tmp_path):
 
     # a job_metrics ack for every committed micro-batch
     assert {f"rate-{i:06d}" for i in range(want_batches)} <= pipe.metrics.batch_ids()
+    # a micro-batch enters from the driver, so its rollup commit is
+    # staged through Arrow, not Spark's writer
+    assert _writers(pipe.rollup) == {WRITER["arrow"]}
 
     got = pipe.read_rollup(spark, "global", "1h").orderBy("bucket_start").toPandas()
 

@@ -9,11 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mq_to_db_spark.operators.labels import count_values, label_join, label_replace
-from mq_to_db_spark.operators.resample import (
-    instant_series_grid,
-    resample_interpolate,
-    resample_locf,
-)
+from mq_to_db_spark.operators.resample import resample_interpolate, resample_locf
 from tests.conftest import assert_pdf_equal
 
 T0 = datetime(2025, 1, 1, 0, 0)
@@ -29,16 +25,6 @@ def _series(spark):
         for m, v in pts:
             rows.append((key, T0 + timedelta(minutes=m), v))
     return spark.createDataFrame(rows, "k string, ts timestamp, value double")
-
-
-def test_grid_spans_each_series(spark):
-    df = _series(spark)
-    g = instant_series_grid(df, "1 minute", ["k"]).toPandas()
-    a = g[g["k"] == "a"]["grid_ts"]
-    assert a.min() == T0 and a.max() == T0 + timedelta(minutes=7)
-    b = g[g["k"] == "b"]["grid_ts"]
-    assert b.min() == T0 + timedelta(minutes=1)
-    assert b.max() == T0 + timedelta(minutes=9)
 
 
 def test_locf_matches_pandas_asof(spark):
