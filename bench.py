@@ -189,21 +189,14 @@ def run(sf_dir: str = SF_DIR, cpus: int = CPUS, include_scaling_meta: bool = Tru
     warm_tr = spark.read.parquet(ensure_transcripts(0.001))
 
     def _rollup_all(src):
-        # production shape: raw scanned once for all 3 dimensions
-        # (grouping-sets agg), coarser tiers cascaded from the persisted
-        # finest tier — see rollup.rollup_multidim.
-        from mq_to_db_spark.operators.rollup import rollup_multidim
+        # production shape: every tier of all 3 dimensions from ONE
+        # grouping-sets aggregation, counted in one action — see
+        # rollup.rollup_grouping_sets.
+        from mq_to_db_spark.operators.rollup import rollup_grouping_sets
 
-        tiers = rollup_multidim(
+        return rollup_grouping_sets(
             src, {"global": [], "conv": ["conv_id"], "tool": ["tool"]}
-        )
-        m1 = tiers["1m"].persist()
-        total = m1.count()
-        total += tiers["1h"].persist().count()
-        total += tiers["1d"].count()
-        for t in ("1m", "1h"):
-            tiers[t].unpersist()
-        return total
+        ).count()
 
     _rollup_all(warm_tr)  # codegen compile outside the timed run
     points = timed("rollup_cascade_3dim", lambda: _rollup_all(transcripts), timings)

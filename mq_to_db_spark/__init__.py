@@ -27,6 +27,7 @@ _PUBLIC = {
     "TableIO": "mq_to_db_spark.sources.tableio",
     "rollup_tiers": "mq_to_db_spark.operators.rollup",
     "rollup_multidim": "mq_to_db_spark.operators.rollup",
+    "rollup_grouping_sets": "mq_to_db_spark.operators.rollup",
     "histogram_quantile": "mq_to_db_spark.operators.rollup",
     "gapfill": "mq_to_db_spark.operators.gapfill",
     "sessionize": "mq_to_db_spark.operators.sessionize",

@@ -15,8 +15,10 @@ codegen; no UDFs anywhere on this path).
 Design for 10^12-turn scale:
   * every stat kept in the tier tables is **re-aggregable** (count / sum /
     min / max / sum-of-squares / per-role counts), so the 1h tier is an
-    exact merge of 1m partials and 1d of 1h — the cascade touches raw data
-    exactly once;
+    exact merge of 1m partials and 1d of 1h — the cascade
+    (``rollup_tiers``) touches raw data exactly once, and
+    ``rollup_grouping_sets`` gives the same partials of every tier and
+    dimension from one aggregation, with no cascade stage at all;
   * bucket = ``date_trunc`` (deterministic tumbling alignment, no window
     struct shuffle overhead, and ``date_trunc('hour', bucket_1m)`` makes
     the cascade itself a plain hash agg);
@@ -199,77 +201,87 @@ def rollup_tiers(
     return out
 
 
-def rollup_multidim(
+def rollup_grouping_sets(
     df: DataFrame,
     dims: dict[str, list[str]],
     tiers: tuple[str, ...] = ("1m", "1h", "1d"),
     extra_group_cols: list[str] | None = None,
-) -> dict[str, DataFrame]:
-    """Single-pass multi-dimension tier cascade.
+) -> DataFrame:
+    """Every (tier, dimension) partial of raw turns from ONE aggregation.
 
     The naive plan (one ``rollup_tiers`` per dimension) scans raw once per
-    dimension per tier — 9 scans for 3 dims × 3 tiers.  At 10^12 turns the
-    raw scan *is* the job, so this operator computes the finest tier for
-    **every** dimension from ONE scan and ONE shuffle via ``GROUPING
-    SETS`` (Catalyst expands rows per set after the projection, so text
-    stats are computed once per input row), then cascades coarser tiers
-    from the finer tier's partials — raw is touched exactly once.
+    dimension per tier — 9 scans for 3 dims × 3 tiers — and a cascade
+    (1h from 1m, 1d from 1h) adds one aggregate-and-shuffle stage per
+    coarser tier.  Here each tier gets its own bucket column and every
+    ``(tier, dim)`` pair is one ``GROUPING SETS`` set
+    ``extra + bucket_<tier> + keys``: ONE scan, one Expand (after the
+    projection, so text stats are computed once per input row) and ONE
+    shuffle of map-side partial aggregates.  Every stat is an exact
+    count/sum/min/max, so a 1h or 1d partial is the same value the
+    cascade's merge of finer partials gives.
 
     ``dims`` maps dimension name → series key columns, e.g.
     ``{"global": [], "conv": ["conv_id"], "tool": ["tool"]}``.
 
-    Each returned tier DataFrame carries a ``dim`` label column (derived
-    from ``grouping_id`` — this also disambiguates a *legitimately NULL*
-    key, e.g. ``tool`` on non-tool turns, from a key aggregated away by
-    another grouping set) plus the union of key columns.
+    The frame carries ``tier`` and ``dim`` label columns, both read from
+    ``grouping_id`` (which also tells a *legitimately NULL* key, e.g.
+    ``tool`` on non-tool turns, from a key another set aggregated away),
+    ``bucket_start`` (the coalesce of the bucket columns: a set keeps
+    exactly one) and the union of key columns.
 
     ``extra_group_cols`` are columns present in EVERY grouping set (e.g.
     the pipeline's ``(conv_bucket, date)`` partition-unit columns), so the
     output stays partition-addressable for idempotent overwrites.
     """
     extra = list(extra_group_cols or [])
-    all_keys: list[str] = []
-    for keys in dims.values():
-        for k in keys:
-            if k not in all_keys:
-                all_keys.append(k)
-
-    grouping_cols = [*extra, "bucket_start", *all_keys]
-    sets = [[*extra, "bucket_start", *keys] for keys in dims.values()]
+    all_keys = list(dict.fromkeys(k for keys in dims.values() for k in keys))
+    buckets = {t: f"_bucket_{t}" for t in tiers}
+    grouping_cols = [*extra, *buckets.values(), *all_keys]
 
     # grouping_id bit i (MSB-first over grouping_cols) = 1 when the column
     # is aggregated away in that set.
     n = len(grouping_cols)
-    gid_of_dim = {
-        name: sum(
-            1 << (n - 1 - i)
-            for i, c in enumerate(grouping_cols)
-            if c not in ([*extra, "bucket_start", *keys])
-        )
-        for name, keys in dims.items()
-    }
-    dim_label = F.lit(None).cast("string")
-    for name, gid in gid_of_dim.items():
-        dim_label = F.when(F.grouping_id() == F.lit(gid), F.lit(name)).otherwise(
-            dim_label
-        )
+    sets = []
+    tier_label = dim_label = F.lit(None).cast("string")
+    for t in tiers:
+        for name, keys in dims.items():
+            kept = [*extra, buckets[t], *keys]
+            sets.append(kept)
+            gid = sum(1 << (n - 1 - i) for i, c in enumerate(grouping_cols) if c not in kept)
+            hit = F.grouping_id() == F.lit(gid)
+            tier_label = F.when(hit, F.lit(t)).otherwise(tier_label)
+            dim_label = F.when(hit, F.lit(name)).otherwise(dim_label)
 
-    prepped = with_text_stats(df).withColumn("bucket_start", bucket_col(tiers[0]))
-    finest = prepped.groupingSets(sets, *[F.col(c) for c in grouping_cols]).agg(
-        dim_label.alias("dim"), *_partial_aggs()
+    prepped = with_text_stats(df).select(
+        "*", *[bucket_col(t).alias(b) for t, b in buckets.items()]
+    )
+    out = prepped.groupingSets(sets, *[F.col(c) for c in grouping_cols]).agg(
+        tier_label.alias("tier"), dim_label.alias("dim"), *_partial_aggs()
+    )
+    return out.select(
+        *extra,
+        F.coalesce(*buckets.values()).alias("bucket_start"),
+        *all_keys,
+        "tier",
+        "dim",
+        *AGG_COL_NAMES,
     )
 
-    out: dict[str, DataFrame] = {tiers[0]: finest}
-    finer = tiers[0]
-    for t in tiers[1:]:
-        out[t] = (
-            out[finer]
-            .withColumn("bucket_start", bucket_col(t, "bucket_start"))
-            .groupBy(*extra, "bucket_start", "dim", *all_keys)
-            .agg(*_merge_aggs())
-        )
-        finer = t
-    return out
+
+def rollup_multidim(
+    df: DataFrame,
+    dims: dict[str, list[str]],
+    tiers: tuple[str, ...] = ("1m", "1h", "1d"),
+    extra_group_cols: list[str] | None = None,
+) -> dict[str, DataFrame]:
+    """:func:`rollup_grouping_sets` as ``{tier: frame}``, each frame the
+    one aggregation filtered to its tier (without the ``tier`` column).
+
+    Every view plans the whole aggregation: an action per view reruns
+    it from raw.  Read several tiers in ONE action (a union of the views
+    reuses the one shuffle), or take the one frame instead."""
+    one = rollup_grouping_sets(df, dims, tiers, extra_group_cols)
+    return {t: one.filter(F.col("tier") == t).drop("tier") for t in tiers}
 
 
 def dim_slice(df: DataFrame, dims: dict[str, list[str]], name: str) -> DataFrame:

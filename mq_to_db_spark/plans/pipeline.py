@@ -1,8 +1,9 @@
 """RollupPipeline — the engine's end-to-end job (SURVEY.md §3 EP2 analogue).
 
 One batch run =
-    read input → validate/side-output rejects → per-unit rollup cascade
-    (1m→1h→1d; global / per-conv / per-tool dimensions) → one commit of
+    read input → validate and tag each row with its unit (cached for the
+    batch) → per-unit rollup of every tier (1m / 1h / 1d) and dimension
+    (global / per-conv / per-tool) in one aggregation → one commit of
     every tier to the rollup table → dead-letter append → lineage
     append → job-metrics append (the ack) [→ unit markers, overwrite
     mode only].
@@ -38,17 +39,24 @@ Scale notes (10^12 turns):
     **partials within the unit**; dimensions whose grain crosses units
     (global, per-tool) are finalized by a cheap re-aggregation at read
     time over tier-sized (not raw-sized) data — the classic partial/final
-    split, so raw data is scanned exactly once per batch and the batch
-    commits once;
+    split, so the batch commits every tier once;
+  * raw data is scanned, and the duplicate-key shuffle of validation
+    runs, once per batch: ``run`` caches the tagged delivery, the
+    unit-stats collect fills the cache, and the rollup and dead-letter
+    commits read it (at 10^12 turns the cache spills to local disk:
+    ``persist``'s default level is memory and disk).  The cache is dropped
+    when the batch ends, however it ends;
   * the partition order follows the selectivity of the table's users:
     every read, refresh and retention pass selects whole tiers, so
     ``tier`` is outermost; a read then keeps one ``dim``; refresh,
     retention and date-bounded reads cut on ``date``; ``conv_bucket``
     completes the ingest unit that a partition overwrite replaces.
     Pruning on the hive values keeps each of them on its own files;
-  * the rollup's one shuffle is keyed by the full group, (conv_bucket,
-    date) included, after map-side partial aggregation, and AQE handles
-    residual skew;
+  * every (tier, dim) partial comes from ONE grouping-sets aggregation
+    (``rollup_grouping_sets``: one bucket column per tier, 9 sets), so
+    the rollup's one shuffle is keyed by the full group, (conv_bucket,
+    date) included, after map-side partial aggregation, with no cascade
+    stage on top, and AQE handles residual skew;
   * filters on committed units are pushed into the scan
     (conv_bucket/date derive from input columns via deterministic
     expressions, so Catalyst prunes at the parquet level when the input
@@ -57,24 +65,27 @@ Scale notes (10^12 turns):
     keeps the rows that have a unit with a plain filter.
 
 Fixed cost per micro-batch (it sets ack latency, not the data):
-  * driver-side rows — the pending-unit list, lineage rows, the
-    job-metrics row — enter Spark through ``session.local_frame`` (one
-    Arrow table → a ``LocalRelation``): building or reading them runs
-    no Spark job and no Python worker, and ``committed_at`` is stored as
-    UTC whatever the driver process's ``TZ``;
+  * driver-side rows are built as one Arrow table
+    (``session.arrow_rows``): the lineage rows and the job-metrics row
+    go straight to ``TableIO`` as that table, so pyarrow writes them
+    with no Spark job, and the pending-unit list enters Spark through
+    ``session.local_frame`` (a ``LocalRelation``: no job, no Python
+    worker).  ``committed_at`` is stored as UTC whatever the driver
+    process's ``TZ``;
   * table reads hand Spark only the manifest's leaf files whose hive
     partition values match the read's region (``TableIO.read(where=)``;
     a coarse-tier read never indexes the fine tier's files), and
     ``get_spark`` pins the parallel-listing threshold so that listing
     them stays a local stat per file on the driver instead of a
     distributed job per read once a read covers more than 32 files;
-  * a micro-batch's and a refresh's commits are small by Spark's own
-    measure (when the input's plan carries a size estimate, as file and
-    driver-side inputs do), so ``TableIO`` stages them through Arrow: one
-    ``toArrow`` job, then pyarrow writes one file per partition directory
-    (one file per side table).  Spark's writer would go through Hadoop's
-    local file system, which starts a ``chmod`` child process of the
-    driver JVM for every file and directory it creates.
+  * a micro-batch's rollup and dead-letter commits and a refresh's
+    commit are small by Spark's own measure (when the input's plan
+    carries a size estimate, as file and driver-side inputs and the
+    batch's cache do), so ``TableIO`` stages them through Arrow: one
+    ``toArrow`` job, then pyarrow writes one file per partition
+    directory (one file per side table).  Spark's writer would go
+    through Hadoop's local file system, which starts a ``chmod`` child
+    process of the driver JVM for every file and directory it creates.
 """
 
 from __future__ import annotations
@@ -84,7 +95,6 @@ import json
 import time
 import uuid
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,11 +106,10 @@ from mq_to_db_spark.operators.rollup import (
     AGG_COL_NAMES,
     _merge_aggs,
     dim_slice,
-    rollup_multidim,
-    with_text_stats,
+    rollup_grouping_sets,
 )
 from mq_to_db_spark.operators.validate import with_reject_reason
-from mq_to_db_spark.session import local_frame
+from mq_to_db_spark.session import arrow_rows, local_frame
 from mq_to_db_spark.sources.store import LocalAtomicStore
 from mq_to_db_spark.sources.tableio import TableIO, partition_values
 
@@ -304,12 +313,31 @@ class RollupPipeline:
         if mode not in ("overwrite", "append"):
             raise ValueError(f"unknown mode {mode!r}")
         t0 = time.time()
-        batch_id = batch_id or uuid.uuid4().hex[:12]
-        cfg = self.cfg
-        report = BatchReport(batch_id=batch_id)
-        summary = {"batch_id": batch_id}
+        report = BatchReport(batch_id=batch_id or uuid.uuid4().hex[:12])
+        # The delivery is tagged once and cached: the unit-stats collect
+        # below fills the cache, and the rollup and dead-letter commits
+        # read it back instead of scanning the input and re-running the
+        # duplicate-key shuffle.  No cache outlives the batch, whatever
+        # way it ends.
+        tagged = unit_cols(with_reject_reason(input_df), self.cfg.conv_buckets).persist()
+        try:
+            return self._run_tagged(spark, tagged, report, t0, fail_after_commit_of, mode)
+        finally:
+            tagged.unpersist()
 
-        tagged = unit_cols(with_reject_reason(input_df), cfg.conv_buckets)
+    def _run_tagged(
+        self,
+        spark: SparkSession,
+        tagged: DataFrame,
+        report: BatchReport,
+        t0: float,
+        fail_after_commit_of: str | None,
+        mode: str,
+    ) -> BatchReport:
+        """:meth:`run` over the cached tagged delivery."""
+        cfg = self.cfg
+        batch_id = report.batch_id
+        summary = {"batch_id": batch_id}
 
         # -- which units does this batch carry, and which are already done?
         units_df = tagged.groupBy("conv_bucket", "date").agg(
@@ -366,21 +394,16 @@ class RollupPipeline:
 
         points = dict.fromkeys(cfg.tiers, 0)  # files committed per tier
         if todo:
-            # Single-pass rollup: raw is scanned ONCE for every dimension
-            # (grouping-sets agg, rollup_multidim) — one shuffle of partial
-            # aggregates keyed by the full group, so hot (bucket, date)
-            # units are already defused by map-side partial aggregation.
-            # Each coarser tier cascades from the finer one in the same
-            # plan, and all tiers, tagged, go out in one commit.
-            tier_frames = rollup_multidim(
-                with_text_stats(valid),
+            # One aggregation for every tier and dimension (grouping sets,
+            # rollup_grouping_sets) over the cached valid rows: one shuffle
+            # of partial aggregates keyed by the full group, so hot
+            # (bucket, date) units are already defused by map-side partial
+            # aggregation, and all tiers go out in one commit.
+            rollup_df = rollup_grouping_sets(
+                valid,
                 DIMENSIONS,
                 tiers=tuple(cfg.tiers),
                 extra_group_cols=["conv_bucket", "date"],
-            )
-            rollup_df = reduce(
-                DataFrame.unionByName,
-                (tier_frames[t].withColumn("tier", F.lit(t)) for t in cfg.tiers),
             )
             # the tool dimension tracks tool *usage*: non-tool turns
             # (tool IS NULL) are not a series
@@ -431,7 +454,7 @@ class RollupPipeline:
                 spark,
                 "lineage",
                 lambda: self.lineage.append(
-                    local_frame(spark, lineage_rows, LINEAGE_SCHEMA), summary=summary
+                    arrow_rows(lineage_rows, LINEAGE_SCHEMA), summary=summary
                 ),
                 fail_after_commit_of,
             )
@@ -456,11 +479,10 @@ class RollupPipeline:
             row = (batch_id, report.n_units_total, report.n_units_skipped, report.n_in,
                    report.n_ok, report.n_rejected, points, float(report.seconds),
                    __version__, committed_ts)
-            metrics_df = local_frame(spark, [row], METRICS_SCHEMA)
             self._commit(
                 spark,
                 "job_metrics",
-                lambda: self.metrics.append(metrics_df, summary=summary),
+                lambda: self.metrics.append(arrow_rows([row], METRICS_SCHEMA), summary=summary),
                 fail_after_commit_of,
             )
         if mode == "overwrite":

@@ -112,23 +112,34 @@ def get_spark(
     return spark
 
 
-def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
-    """A DataFrame over a few driver-side rows (tuples in ``schema``
-    order; ``schema`` a StructType or DDL string).
-
-    The rows cross into the JVM as one Arrow table and become a
-    ``LocalRelation``, so building and reading the frame runs no Spark
-    job.  ``spark.createDataFrame(list, schema)`` instead parallelizes
-    the rows and re-serializes them in a Python worker on every task,
-    one job each time the frame is evaluated.  Arrow also reads naive
-    datetimes as UTC wall time, where the list path converts them with
-    the driver process's local time zone."""
+def arrow_rows(rows, schema: T.StructType | str):
+    """A few driver-side rows (tuples in ``schema`` order; ``schema`` a
+    StructType or DDL string) as one ``pyarrow.Table`` in the Arrow types
+    Spark maps ``schema`` to.  Arrow reads naive datetimes as UTC wall
+    time, where Spark's list path converts them with the driver process's
+    local time zone."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    table = pa.Table.from_pylist(
+    return pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
-    return spark.createDataFrame(table, schema=schema)
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str | None = None) -> DataFrame:
+    """A DataFrame over a few driver-side rows: tuples in ``schema`` order
+    (see :func:`arrow_rows`), or a ``pyarrow.Table`` (``schema`` None).
+
+    The rows cross into the JVM as one Arrow table and become a
+    ``LocalRelation``, so building and reading the frame runs no Spark
+    job.  ``spark.createDataFrame(list, schema)`` instead parallelizes
+    the rows and re-serializes them in a Python worker on every task,
+    one job each time the frame is evaluated."""
+    import pyarrow as pa
+
+    if not isinstance(rows, pa.Table):
+        schema = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+        rows = arrow_rows(rows, schema)
+    return spark.createDataFrame(rows, schema=schema)

@@ -27,6 +27,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mq_to_db_spark.session import local_frame
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True when the Iceberg runtime classes are on the session's
@@ -133,9 +135,14 @@ class IcebergTableIO:
 
     # -- write paths ----------------------------------------------------------
 
-    def _ensure_table(self, df: DataFrame) -> None:
+    def _ensure_table(self, df) -> DataFrame:
+        """``df`` as a DataFrame (driver-side rows given as a
+        ``pyarrow.Table`` become a ``session.local_frame``), after creating
+        the table from its schema if it does not exist yet."""
+        if not isinstance(df, DataFrame):
+            df = local_frame(self.spark, df)
         if self.exists():
-            return
+            return df
         # create EMPTY with df's schema (limit(0) — a full-df CTAS would
         # write all the data once just to delete it again; ADVICE r02);
         # data lands via the caller's normal append/overwrite path
@@ -143,6 +150,7 @@ class IcebergTableIO:
         if self.partition_cols:
             writer = writer.partitionedBy(*[F.col(c) for c in self.partition_cols])
         writer.create()
+        return df
 
     def batch_ids(self) -> set[str]:
         """Every ``batch_id`` recorded as a snapshot property — scan of
@@ -173,7 +181,7 @@ class IcebergTableIO:
         return writer
 
     def append(self, df: DataFrame, summary: dict | None = None) -> IcebergSnapshot:
-        self._ensure_table(df)
+        df = self._ensure_table(df)
         self._writer(df, summary).append()
         return self.snapshot()
 
@@ -183,12 +191,12 @@ class IcebergTableIO:
         engine's effectively-once replay primitive)."""
         if not self.partition_cols:
             raise ValueError("overwrite_partitions requires partition_cols")
-        self._ensure_table(df)
+        df = self._ensure_table(df)
         self._writer(df, summary).overwritePartitions()
         return self.snapshot()
 
     def overwrite_all(self, df: DataFrame, summary: dict | None = None) -> IcebergSnapshot:
-        self._ensure_table(df)
+        df = self._ensure_table(df)
         self._writer(df, summary).overwrite(F.lit(True))
         return self.snapshot()
 
@@ -210,7 +218,7 @@ class IcebergTableIO:
         """Atomic replace-where via Iceberg's native
         ``overwrite(condition)`` — one snapshot, delete + append
         together, over the partitions ``predicate`` selects."""
-        self._ensure_table(df)
+        df = self._ensure_table(df)
         cond = self._partitions_where(self.spark.table(self.table), predicate)
         self._writer(df, summary).overwrite(F.lit(False) if cond is None else cond)
         return self.snapshot()

@@ -26,11 +26,13 @@ optimized plan's size estimate within ``spark.sql.autoBroadcastJoinThreshold``,
 the size under which Spark broadcasts a relation) is collected as Arrow
 batches in one Spark job and written by pyarrow, one zstd file per
 partition directory; this is the ack path's case (a micro-batch's rollup
-partials, its side-table rows, a refresh's rewrite).  Hadoop's local file
-system, which Spark's writer goes through, starts a ``chmod`` child process
-of the driver JVM for every file and directory it creates (pip PySpark
-ships no native Hadoop library), and that, not parquet encoding, was most
-of a small commit's time.  Larger frames, which must not be held in driver
+partials and rejects, a refresh's rewrite).  Rows built on the driver (a
+micro-batch's lineage and metrics rows) may be handed over as a
+``pyarrow.Table`` instead of a frame: pyarrow writes it with no Spark job
+at all.  Hadoop's local file system, which Spark's writer goes through,
+starts a ``chmod`` child process of the driver JVM for every file and
+directory it creates (pip PySpark ships no native Hadoop library), and
+that, not parquet encoding, was most of a small commit's time.  Larger frames, which must not be held in driver
 memory, keep Spark's writer.  Both name the partition directories alike
 (:func:`partition_dir`), so predicates and partition overwrites compare
 them across commits.  A failed staging removes its dir.
@@ -188,44 +190,59 @@ class TableIO:
 
     # -- write paths ----------------------------------------------------------
 
-    def _stage(self, df: DataFrame) -> tuple[str, list[str], dict]:
-        """Write df to a fresh staging dir; return (root, relative files,
-        read schema).  A frame Spark itself would pull into the driver
-        goes through Arrow (:meth:`_stage_arrow`), any other through
-        Spark's writer; either way a failure removes the dir before it
-        propagates."""
+    def _stage(self, df) -> tuple[str, list[str], dict]:
+        """Write ``df`` to a fresh staging dir; return (root, relative
+        files, read schema).  ``df`` is a DataFrame, or driver-side rows
+        as a ``pyarrow.Table`` (``session.arrow_rows``), which pyarrow
+        writes with no Spark job at all.  A frame Spark itself would pull
+        into the driver goes through Arrow too (:meth:`_stage_arrow`), any
+        other through Spark's writer; either way a failure removes the dir
+        before it propagates."""
+        import pyarrow as pa
+
         stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
+        if isinstance(df, pa.Table):
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            schema, table = from_arrow_schema(df.schema), df
+            if not self._arrow_partitions(schema):
+                raise ValueError(f"{self.partition_cols}: a partition type Arrow staging cannot name")
+        else:
+            schema, table = df.schema, None
         try:
-            if self._driver_sized(df):
-                rels = self._stage_arrow(df, stage)
-            else:
-                rels = self._stage_spark(df, stage)
+            if table is None and self._driver_sized(df):
+                table = df.toArrow()
+            rels = self._stage_spark(df, stage) if table is None else self._stage_arrow(table, stage)
         except BaseException:
             shutil.rmtree(stage, ignore_errors=True)
             raise
-        data = [f for f in df.schema if f.name not in self.partition_cols]
-        schema = T.StructType(data + [df.schema[c] for c in self.partition_cols])
+        data = [f for f in schema if f.name not in self.partition_cols]
+        schema = T.StructType(data + [schema[c] for c in self.partition_cols])
         return stage, rels, schema.jsonValue()
+
+    def _arrow_partitions(self, schema: T.StructType) -> bool:
+        """True when every partition column has a type
+        :func:`partition_dir` spells as Spark's writer does."""
+        types = [schema[c].dataType for c in self.partition_cols]
+        return all(isinstance(t, _ARROW_PARTITION_TYPES) for t in types)
 
     def _driver_sized(self, df: DataFrame) -> bool:
         """True when Spark's size estimate of ``df``'s optimized plan is
         within ``spark.sql.autoBroadcastJoinThreshold`` (the test Spark
-        applies before pulling a relation into the driver) and every
-        partition column has a type :func:`partition_dir` spells as
-        Spark does."""
-        types = [df.schema[c].dataType for c in self.partition_cols]
-        if not all(isinstance(t, _ARROW_PARTITION_TYPES) for t in types):
+        applies before pulling a relation into the driver) and the
+        partition columns suit :meth:`_stage_arrow`."""
+        if not self._arrow_partitions(df.schema):
             return False
         limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         return 0 <= size <= limit
 
-    def _stage_arrow(self, df: DataFrame, stage: str) -> list[str]:
-        """One Spark job (``toArrow``) brings the rows to the driver;
-        pyarrow writes one zstd file per partition directory."""
+    def _stage_arrow(self, table, stage: str) -> list[str]:
+        """pyarrow writes ``table`` (a ``pyarrow.Table``; a frame's comes
+        from one ``toArrow`` job) as one zstd file per partition
+        directory."""
         import pyarrow.parquet as pq
 
-        table = df.toArrow()
         groups: dict[str, list[int] | None] = {"": None}
         if self.partition_cols:
             names = []

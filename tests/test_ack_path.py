@@ -1,12 +1,16 @@
 """The micro-batch ack path (plans/pipeline.py ``run``): driver-side rows
 (unit list, lineage, job metrics) enter Spark through Arrow, the
 committed-units semi-join runs only when some unit is committed, rows
-with no unit reach the dead letter exactly once either way, and an
-append batch is acked by its job_metrics commit alone."""
+with no unit reach the dead letter exactly once either way, an append
+batch is acked by its job_metrics commit alone, and a batch scans its
+input once through a cache that does not outlive it."""
 
 import math
+import os
+import re
 import time
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -151,3 +155,116 @@ def test_committed_at_is_utc_under_local_tz(spark, tmp_path, small_pdf, new_york
         assert len(secs) == 1 and t0 <= secs.pop() <= t1
     (points,) = pipe.read_metrics(spark).select("points_written").first()
     assert points == report.points_written and points["1m"] > 0
+
+
+# -- one input scan per batch, no cache left behind ----------------------------
+
+
+def _executions(spark) -> list[int]:
+    """The ids of every SQL execution the session has run so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next().executionId())
+    return out
+
+
+def _nodes_that_ran(spark, execution: int) -> list[tuple[str, str]]:
+    """(name, description) of each plan node of ``execution`` that
+    produced rows in it.  A plan over a cached relation also lists the
+    cached plan's nodes, but they only count rows in the execution that
+    filled the cache."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    values = store.executionMetrics(execution)
+    nodes = store.planGraph(execution).allNodes().iterator()
+    out = []
+    while nodes.hasNext():
+        node = nodes.next()
+        metrics = node.metrics().iterator()
+        while metrics.hasNext():
+            m = metrics.next()
+            v = values.get(m.accumulatorId())
+            if m.name() in ("number of output rows", "shuffle records written") and (
+                v.isDefined() and int(v.get().replace(",", "")) > 0
+            ):
+                out.append((node.name(), node.desc()))
+                break
+    return out
+
+
+def test_first_delivery_scans_its_input_once(spark, tmp_path, small_pdf):
+    """The tagged delivery is cached by the unit-stats collect: the input
+    file is scanned, and the duplicate-key shuffle
+    (``hashpartitioning(conv_id, turn_idx, …)``) runs, in one of the
+    batch's executions only — the rollup and dead-letter commits read
+    the cache.  Every commit still takes the Arrow staging path."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "in")
+    spark.createDataFrame(inject_dirty_rows(small_pdf), schema=TRANSCRIPT_SCHEMA).write.parquet(src)
+    pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
+    before = set(_executions(spark))
+    report = pipe.run(spark, spark.read.parquet(src), batch_id="once", mode="append")
+    ran = {e: _nodes_that_ran(spark, e) for e in _executions(spark) if e not in before}
+    assert report.n_rejected == 6 and len(ran) >= 2, ran
+    dedup = re.compile(r"hashpartitioning\(conv_id#\d+, turn_idx#\d+,")
+    scans = [e for e, nodes in ran.items() if any(n.startswith("Scan parquet") for n, _ in nodes)]
+    shuffles = [e for e, nodes in ran.items() if any(dedup.search(d) for n, d in nodes if n == "Exchange")]
+    assert len(scans) == 1 and shuffles == scans, ran
+    for name, t in pipe.tables.items():
+        for f in t.files():
+            writer = pq.read_metadata(os.path.join(t.data_dir, f)).created_by
+            assert writer.startswith("parquet-cpp-arrow"), (name, writer)
+
+
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+CACHE_CASES = ["first", "acked", "unitless", "timeout"] + [
+    f"fail:{t}" for t in ("rollup_tiers", "dead_letter", "lineage", "job_metrics")
+]
+
+
+@pytest.mark.parametrize("case", CACHE_CASES)
+def test_no_cache_outlives_a_batch(spark, tmp_path, small_pdf, case):
+    """``run`` caches the tagged delivery and drops it on every exit: a
+    committed first delivery, an acked redelivery, a unit-less delivery,
+    a crash after each table's commit and a commit timeout.  Each case
+    shifts its input's timestamps, so that a cache another case left
+    behind cannot stand in for its own (Spark caches by plan)."""
+    from mq_to_db_spark.plans.bounds import QueryTimeoutError
+    from mq_to_db_spark.sources.tableio import TableIO
+
+    class SlowTableIO(TableIO):
+        def append(self, df, summary=None):
+            slow = df.mapInPandas(lambda it: (time.sleep(20) or pdf for pdf in it), df.schema)
+            return super().append(slow, summary)
+
+    def factory(name, part=None):
+        cls = SlowTableIO if case == "timeout" and name == "rollup_tiers" else TableIO
+        return cls(str(tmp_path / "wh" / name), part)
+
+    cfg = EngineConfig(conv_buckets=8, max_query_timeout_sec=2.0 if case == "timeout" else None)
+    pipe = RollupPipeline(str(tmp_path / "wh"), cfg, table_factory=factory)
+    pdf = inject_dirty_rows(small_pdf)
+    if case == "unitless":
+        pdf = small_pdf.head(3).copy()
+        pdf["ts"] = None
+    pdf["ts"] = pdf["ts"] + pd.Timedelta(seconds=CACHE_CASES.index(case))
+    df = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
+    before = _cached_entries(spark)
+    if case == "timeout":
+        with pytest.raises(QueryTimeoutError):
+            pipe.run(spark, df, batch_id="b", mode="append")
+    elif case.startswith("fail:"):
+        with pytest.raises(RuntimeError, match="injected failure"):
+            pipe.run(spark, df, batch_id="b", fail_after_commit_of=case[5:])
+    else:
+        pipe.run(spark, df, batch_id="b", mode="append")
+        if case == "acked":
+            assert _cached_entries(spark) == before
+            replay = pipe.run(spark, df, batch_id="b", mode="append")
+            assert replay.n_units_skipped == replay.n_units_total > 0
+    assert _cached_entries(spark) == before

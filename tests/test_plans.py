@@ -109,8 +109,8 @@ def test_pipeline_semi_join_broadcasts_todo_units(spark, transcripts, tmp_path):
 
 def test_multidim_single_expand_single_scan(spark, transcripts):
     """rollup_multidim must plan as ONE input scan + ONE Expand (grouping
-    sets) + partial/final hash agg — not one scan per dimension — and no
-    Python anywhere."""
+    sets) + partial/final hash agg — not one scan per dimension or tier —
+    and no Python anywhere."""
     from mq_to_db_spark.operators.rollup import rollup_multidim
 
     dims = {"global": [], "conv": ["conv_id"], "tool": ["tool"]}
@@ -128,5 +128,9 @@ def test_multidim_single_expand_single_scan(spark, transcripts):
     assert n_scans(plan) == 1
     assert plan.count("HashAggregate") >= 2  # partial + final
     assert "BatchEvalPython" not in plan
-    # the full cascade still scans raw exactly once
-    assert n_scans(_plan(tiers["1d"])) == 1
+    # every tier is a view of the one aggregation: one scan, one Expand
+    # and one aggregation exchange, with no cascade stage on top
+    for tier in ("1m", "1d"):
+        plan = _plan(tiers[tier])
+        assert n_scans(plan) == 1 and plan.count("Expand") == 1
+        assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -132,19 +132,55 @@ def test_fixed_bucket_histogram(spark, transcripts, transcripts_pdf):
 
 
 
-def test_rollup_multidim_equals_per_dim(spark, transcripts):
-    """Single-pass grouping-sets cascade ≡ one rollup_tiers per dimension,
-    every tier — proves the 1-scan production plan computes identical
-    points (and that the grouping_id dim label correctly disambiguates
-    legitimately-NULL keys like tool)."""
+def _edge_input(pdf: pd.DataFrame, case: str) -> pd.DataFrame:
+    """A small input shaped to hit one corner of the tier buckets."""
+    out = pdf.head(6).copy()
+    if case == "one_row":
+        return out.head(1)
+    if case == "all_rejected":
+        # every row fails validation: the valid rows are none
+        out["role"] = "nobody"
+    elif case == "midnight":
+        # one conversation across two dates
+        out["conv_id"] = out["conv_id"].iloc[0]
+        out["ts"] = pd.Timestamp("2025-01-01 23:58:30") + pd.to_timedelta(
+            np.arange(len(out)) * 40, unit="s"
+        )
+    elif case == "null_tool":
+        out["tool"] = None
+    elif case == "last_microsecond":
+        out["ts"] = [pd.Timestamp("2025-01-01 23:59:59.999999")] * 3 + [
+            pd.Timestamp("2025-01-02 00:00:00")
+        ] * 3
+    return out
+
+
+@pytest.mark.parametrize(
+    "case", ["transcripts", "all_rejected", "one_row", "midnight", "null_tool", "last_microsecond"]
+)
+def test_rollup_multidim_equals_per_dim(spark, transcripts, transcripts_pdf, case):
+    """The one grouping-sets aggregation ≡ one rollup_tiers cascade per
+    dimension, every tier — proves the 1-scan production plan computes
+    identical points (and that the grouping_id labels correctly
+    disambiguate legitimately-NULL keys like tool).  The edge inputs go
+    through the pipeline's validation and unit columns first."""
+    from mq_to_db_spark.fixtures.generator import TRANSCRIPT_SCHEMA
     from mq_to_db_spark.operators.rollup import dim_slice, rollup_multidim
+    from mq_to_db_spark.operators.validate import split_valid_rejected
+    from mq_to_db_spark.plans.pipeline import unit_cols
 
     dims = {"global": [], "conv": ["conv_id"], "tool": ["tool"]}
-    multi = rollup_multidim(transcripts, dims)
+    if case == "transcripts":
+        df, extra = transcripts, []
+    else:
+        raw = spark.createDataFrame(_edge_input(transcripts_pdf, case), schema=TRANSCRIPT_SCHEMA)
+        df, extra = unit_cols(split_valid_rejected(raw)[0], 4), ["conv_bucket", "date"]
+        assert (df.count() == 0) == (case == "all_rejected")
+    multi = rollup_multidim(df, dims, extra_group_cols=extra)
     for tier in ("1m", "1h", "1d"):
         for name, keys in dims.items():
             a = dim_slice(multi[tier], dims, name)
-            b = rollup_tiers(transcripts, keys=keys)[tier]
+            b = rollup_tiers(df, keys=[*extra, *keys])[tier].select(*a.columns)
             assert a.exceptAll(b).count() == 0
             assert b.exceptAll(a).count() == 0
             assert a.count() == b.count()

@@ -4,7 +4,10 @@ rows enter Spark through one primitive, ``local_frame``."""
 
 import datetime as dt
 
-from mq_to_db_spark.session import local_frame
+import pytest
+from pyspark.sql import types as T
+
+from mq_to_db_spark.session import arrow_rows, local_frame
 
 
 def test_ansi_mode_pinned(spark):
@@ -19,15 +22,23 @@ def test_listing_threshold_pinned(spark):
     assert spark.conf.get(key) == str(2**31 - 1)
 
 
-def test_local_frame_runs_no_job(spark):
+@pytest.mark.parametrize("given", ["rows", "arrow_rows"])
+def test_local_frame_runs_no_job(spark, given):
+    """Over tuples and a schema, or over the ``arrow_rows`` table of the
+    same (the form ``TableIO`` writes without Spark)."""
     sc = spark.sparkContext
     rows = [
         (1, {"a": 2}, dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5)),
         (2, None, None, None),
     ]
+    schema = "k int, m map<string,bigint>, d date, t timestamp"
     sc.setJobGroup("local_frame", "local_frame")
     try:
-        df = local_frame(spark, rows, "k int, m map<string,bigint>, d date, t timestamp")
+        if given == "rows":
+            df = local_frame(spark, rows, schema)
+        else:
+            df = local_frame(spark, arrow_rows(rows, schema))
+        assert df.schema == T.StructType.fromDDL(schema)
         got = df.selectExpr("k", "m", "d", "cast(t as string) as t").collect()
     finally:
         sc.setJobGroup("tests", "tests")

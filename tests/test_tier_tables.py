@@ -124,10 +124,11 @@ def test_rollup_table_holds_every_tier_and_dimension(appended):
 
 
 def test_first_delivery_append_job_count(appended):
-    # the unit-stats collect plus the rollup, dead-letter, lineage and
-    # metrics writes; building the driver-side frames adds no job
+    # the unit-stats collect (which fills the tagged delivery's cache)
+    # plus the rollup and dead-letter writes, each over the cache; the
+    # lineage and metrics rows are written from the driver with no job
     *_, first_jobs = appended
-    assert len(first_jobs) == 13, first_jobs
+    assert len(first_jobs) == 7, first_jobs
 
 
 def test_refresh_is_one_overwrite_where(spark, fresh):

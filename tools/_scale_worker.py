@@ -1,9 +1,9 @@
 """Subprocess worker for the scaling benchmark: one JVM per parallelism
 level (Spark master is fixed at session creation).  Prints one JSON line.
 
-The measured job is the engine's production shape (rollup_multidim): raw
-scanned ONCE for all three series dimensions (grouping-sets agg → one
-shuffle), finest tier persisted, coarser tiers cascaded from it.
+The measured job is the engine's production shape (rollup_grouping_sets):
+every tier of all three series dimensions from ONE grouping-sets
+aggregation (one scan, one shuffle), forced in one action.
 
 Local-mode tuning is ``bench.SMALL_INPUT_CONF``, the headline session's
 conf (the reasons are given there).
@@ -25,7 +25,7 @@ DIMS = {"global": [], "conv": ["conv_id"], "tool": ["tool"]}
 
 def main(cpus: int, n_turns: int) -> dict:
     from bench import SMALL_INPUT_CONF, _transcripts_path
-    from mq_to_db_spark.operators.rollup import rollup_multidim
+    from mq_to_db_spark.operators.rollup import rollup_grouping_sets
     from mq_to_db_spark.session import get_spark
 
     path = _transcripts_path(f"scale{n_turns}")
@@ -46,27 +46,13 @@ def main(cpus: int, n_turns: int) -> dict:
     )
     df = spark.read.parquet(path)
 
-    def _noop(d):
-        d.write.format("noop").mode("overwrite").save()
-
     def run_pipeline() -> float:
-        # cascade tiers reuse the persisted finest tier (plan-keyed cache)
-        # → raw read exactly once per pass.
         t0 = time.perf_counter()
-        tiers = rollup_multidim(df, DIMS)
-        m1 = tiers["1m"].persist()
-        _noop(m1)
-        h1 = tiers["1h"].persist()
-        _noop(h1)
-        _noop(tiers["1d"])
-        secs = time.perf_counter() - t0
-        m1.unpersist()
-        h1.unpersist()
-        return secs
+        rollup_grouping_sets(df, DIMS).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
     # points produced by one pipeline pass (counted once, outside timing)
-    tiers = rollup_multidim(df, DIMS)
-    points = sum(t.count() for t in tiers.values())
+    points = rollup_grouping_sets(df, DIMS).count()
 
     run_pipeline()  # warmup: codegen compile + JIT
     secs = min(run_pipeline(), run_pipeline())  # steady state, best of 2
