@@ -155,27 +155,10 @@ def _edge_input(pdf: pd.DataFrame, case: str) -> pd.DataFrame:
     return out
 
 
-@pytest.mark.parametrize(
-    "case", ["transcripts", "all_rejected", "one_row", "midnight", "null_tool", "last_microsecond"]
-)
-def test_rollup_multidim_equals_per_dim(spark, transcripts, transcripts_pdf, case):
-    """The one grouping-sets aggregation ≡ one rollup_tiers cascade per
-    dimension, every tier — proves the 1-scan production plan computes
-    identical points (and that the grouping_id labels correctly
-    disambiguate legitimately-NULL keys like tool).  The edge inputs go
-    through the pipeline's validation and unit columns first."""
-    from mq_to_db_spark.fixtures.generator import TRANSCRIPT_SCHEMA
+def _assert_multidim_equals_per_dim(df, extra):
     from mq_to_db_spark.operators.rollup import dim_slice, rollup_multidim
-    from mq_to_db_spark.operators.validate import split_valid_rejected
-    from mq_to_db_spark.plans.pipeline import unit_cols
 
     dims = {"global": [], "conv": ["conv_id"], "tool": ["tool"]}
-    if case == "transcripts":
-        df, extra = transcripts, []
-    else:
-        raw = spark.createDataFrame(_edge_input(transcripts_pdf, case), schema=TRANSCRIPT_SCHEMA)
-        df, extra = unit_cols(split_valid_rejected(raw)[0], 4), ["conv_bucket", "date"]
-        assert (df.count() == 0) == (case == "all_rejected")
     multi = rollup_multidim(df, dims, extra_group_cols=extra)
     for tier in ("1m", "1h", "1d"):
         for name, keys in dims.items():
@@ -184,6 +167,31 @@ def test_rollup_multidim_equals_per_dim(spark, transcripts, transcripts_pdf, cas
             assert a.exceptAll(b).count() == 0
             assert b.exceptAll(a).count() == 0
             assert a.count() == b.count()
+
+
+def test_rollup_multidim_equals_per_dim(spark, transcripts):
+    """The one grouping-sets aggregation ≡ one rollup_tiers cascade per
+    dimension, every tier — proves the 1-scan production plan computes
+    identical points (and that the grouping_id labels correctly
+    disambiguate legitimately-NULL keys like tool)."""
+    _assert_multidim_equals_per_dim(transcripts, [])
+
+
+@pytest.mark.parametrize(
+    "case", ["all_rejected", "one_row", "midnight", "null_tool", "last_microsecond"]
+)
+def test_rollup_multidim_edge_inputs_equal_per_dim(spark, transcripts_pdf, case):
+    """As above, over small inputs shaped to hit one corner of the tier
+    buckets each; they go through the pipeline's validation and unit
+    columns first."""
+    from mq_to_db_spark.fixtures.generator import TRANSCRIPT_SCHEMA
+    from mq_to_db_spark.operators.validate import split_valid_rejected
+    from mq_to_db_spark.plans.pipeline import unit_cols
+
+    raw = spark.createDataFrame(_edge_input(transcripts_pdf, case), schema=TRANSCRIPT_SCHEMA)
+    df = unit_cols(split_valid_rejected(raw)[0], 4)
+    assert (df.count() == 0) == (case == "all_rejected")
+    _assert_multidim_equals_per_dim(df, ["conv_bucket", "date"])
 
 
 def test_histogram_quantile_matches_numpy_oracle(spark, transcripts):

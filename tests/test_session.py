@@ -4,7 +4,6 @@ rows enter Spark through one primitive, ``local_frame``."""
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import types as T
 
 from mq_to_db_spark.session import arrow_rows, local_frame
@@ -22,23 +21,19 @@ def test_listing_threshold_pinned(spark):
     assert spark.conf.get(key) == str(2**31 - 1)
 
 
-@pytest.mark.parametrize("given", ["rows", "arrow_rows"])
-def test_local_frame_runs_no_job(spark, given):
-    """Over tuples and a schema, or over the ``arrow_rows`` table of the
-    same (the form ``TableIO`` writes without Spark)."""
+_ROWS = [
+    (1, {"a": 2}, dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5)),
+    (2, None, None, None),
+]
+_SCHEMA = "k int, m map<string,bigint>, d date, t timestamp"
+
+
+def _assert_local_frame_runs_no_job(spark, make):
     sc = spark.sparkContext
-    rows = [
-        (1, {"a": 2}, dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5)),
-        (2, None, None, None),
-    ]
-    schema = "k int, m map<string,bigint>, d date, t timestamp"
     sc.setJobGroup("local_frame", "local_frame")
     try:
-        if given == "rows":
-            df = local_frame(spark, rows, schema)
-        else:
-            df = local_frame(spark, arrow_rows(rows, schema))
-        assert df.schema == T.StructType.fromDDL(schema)
+        df = make()
+        assert df.schema == T.StructType.fromDDL(_SCHEMA)
         got = df.selectExpr("k", "m", "d", "cast(t as string) as t").collect()
     finally:
         sc.setJobGroup("tests", "tests")
@@ -48,4 +43,16 @@ def test_local_frame_runs_no_job(spark, given):
         (1, {"a": 2}, dt.date(2024, 1, 2), "2024-01-02 03:04:05"),
         (2, None, None, None),
     ]
+
+
+def test_local_frame_runs_no_job(spark):
+    _assert_local_frame_runs_no_job(spark, lambda: local_frame(spark, _ROWS, _SCHEMA))
     assert local_frame(spark, [], "k int").count() == 0
+
+
+def test_local_frame_from_arrow_rows_runs_no_job(spark):
+    """Over the ``arrow_rows`` table of the same rows (the form ``TableIO``
+    writes without Spark)."""
+    _assert_local_frame_runs_no_job(
+        spark, lambda: local_frame(spark, arrow_rows(_ROWS, _SCHEMA))
+    )
