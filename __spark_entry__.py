@@ -1,23 +1,31 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target): the contract queries and their oracles.
 
-Each ``queries()`` entry exercises an implemented operator from
-SURVEY.md §2 (rollup tiers C1-C8, gap-fill C9, codec C10, validate/reject
-A6/A10, plus the training-data operators: dedup, text analysis,
-similarity search) against the driver's parquet tables, with a DuckDB
-oracle in ``oracle_sql()`` wherever the semantics are ANSI-SQL
-expressible.  Column names/aliases match pairwise (the driver hashes
-values under sorted column names).
+Each contract query is one ``q_<name>`` body with an ``@contract``
+registration directly above it that holds everything else known about
+the query: its DuckDB oracle, whether it is in ``bench.py``'s frozen
+headline set, and which otherwise-forbidden plan operators the plan test
+allows it.  ``queries()`` and ``oracle_sql()``, the driver's interface,
+are derived from that one registry, in file order.  Each body exercises
+an engine operator against the driver's parquet tables; column
+names/aliases match the oracle's pairwise (the driver hashes values under
+sorted column names).
+
+The approximate operators (LSH, IVF, minhash, simhash) are built on
+engine-independent deterministic constants (seeded-numpy hyperplane
+literals, md5-derived hashes), so their oracles replay the entire
+approximate algorithm (signatures, probe sets, candidate filters, exact
+re-rank), not just a rows-only sanity check.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-# documents normalization shared by dedup/text queries (must match the
-# DuckDB expression textually embedded in the oracles below)
+#: the events table's event types
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
@@ -55,173 +63,683 @@ def _events_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# rollup tier family (SURVEY §2 C1-C8) over events
+# the contract registry: one ``@contract`` registration above each body
 # --------------------------------------------------------------------------
 
 
-def q_rollup_1m_counts(spark, sf_dir):
-    return (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.date_trunc("minute", "ts").alias("bucket_start"),
-            "event_type",
+@dataclass(frozen=True)
+class ContractQuery:
+    """One registered contract query.
+
+    ``oracle`` is the DuckDB SQL the body's result must match, or a
+    zero-argument builder of it, called by :func:`oracle_sql` (so imports
+    and generated SQL stay off the module's import path).  ``headline``
+    puts the query in ``bench.py``'s frozen headline set.  ``plan_allows``
+    names the otherwise-forbidden physical operators the plan test
+    (tests/test_contract_plans.py) lets the query's plan contain; the
+    comment beside each allowance says why it is not a quadratic blowup.
+    """
+
+    body: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[], str]
+    headline: bool = False
+    plan_allows: tuple[str, ...] = ()
+
+
+#: every contract query by name, in registration (= file) order
+CONTRACT: dict[str, ContractQuery] = {}
+
+
+def contract(oracle, *, headline=False, plan_allows=()):
+    """Register the decorated ``q_<name>`` body as contract query
+    ``<name>`` with its oracle and tags; the body is returned unchanged."""
+
+    def register(body):
+        name = body.__name__.removeprefix("q_")
+        if name == body.__name__ or name in CONTRACT:
+            raise ValueError(f"{body.__name__}: not a q_<name> body, or registered twice")
+        CONTRACT[name] = ContractQuery(body, oracle, headline, tuple(plan_allows))
+        return body
+
+    return register
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every contract query's body, in registration order."""
+    return {name: q.body for name, q in CONTRACT.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    """Every contract query's DuckDB oracle, in registration order."""
+    return {
+        name: q.oracle if isinstance(q.oracle, str) else q.oracle()
+        for name, q in CONTRACT.items()
+    }
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship query on /root/testdata/sf0.001: the full rollup cascade +
+    gap-fill over the events table in transcript shape."""
+    return q_transcript_pipeline(spark, "/root/testdata/sf0.001")
+
+
+def _events_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events with value as exact integer cents — the integer-scaled
+    input the exponential-histogram cross-engine exactness argument
+    needs (operators/nativehist.py module docstring)."""
+    return _events(spark, sf_dir).select(
+        "event_type", "ts", F.round(F.col("value") * 100, 0).cast("long").alias("v")
+    )
+
+
+# exphist stats: same bucket-count CTE as the fraction oracle,
+# then INTEGER moment sums (4·mid_i = 3·2^i, 16·mid_i² = 9·4^i
+# exact at schema 0) — no float rounding anywhere, so no
+# HALF_UP-vs-multiply-round-divide divergence is possible
+@contract("""
+            WITH c AS (
+                SELECT event_type, date_trunc('day', ts) AS bucket_start,
+                       CAST(round(value * 100) AS BIGINT) AS v
+                FROM events WHERE value IS NOT NULL
+            ),
+            b AS (
+                SELECT event_type, bucket_start,
+                       CAST(length(to_base(v, 2)) - 1
+                            + CASE WHEN (v & (v - 1)) = 0 THEN 0 ELSE 1 END
+                            AS INT) AS bucket_idx
+                FROM c WHERE v > 0
+            ),
+            g AS (
+                SELECT event_type, bucket_start, bucket_idx,
+                       CAST(count(*) AS BIGINT) AS n
+                FROM b GROUP BY 1, 2, 3
+            )
+            SELECT event_type, bucket_start,
+                   CAST(sum(n) AS BIGINT) AS n_obs,
+                   CAST(sum(n * 3 * (CAST(1 AS BIGINT) << bucket_idx))
+                        AS BIGINT) AS s1_x4,
+                   CAST(sum(n * 9 * (CAST(1 AS BIGINT) << (2 * bucket_idx)))
+                        AS BIGINT) AS s2_x16
+            FROM g GROUP BY 1, 2
+        """)
+def q_exphist_stats_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PromQL ``histogram_avg`` / ``histogram_stddev`` moment surface
+    of the native exponential sketch (operators/nativehist.py
+    exp_hist_stats_exact) per (event_type, day) — emitted as the
+    INTEGER-EXACT moments ``n_obs``, ``s1_x4 = 4·Σ n·mid`` and
+    ``s2_x16 = 16·Σ n·mid²`` (BIGINT; at schema 0 ``4·mid_i = 3·2^i``
+    and ``16·mid_i² = 9·4^i`` are exact integers), from which
+    mean = s1_x4/(4·n_obs) and var = s2_x16/(16·n_obs) − mean².
+
+    Why not rounded floats: ``F.round(mean/stddev, 6)`` is Spark
+    BigDecimal HALF_UP on the double's exact decimal expansion while
+    DuckDB rounds multiply-by-1e6/round/divide — the two disagree when
+    a moment lands within an ulp of a .5×10⁻⁶ boundary (the r04
+    driver-hash red cell; same hazard class as SURVEY.md §float-sums).
+    Integer moments have no rounding step at all.  ZERO shuffle past
+    the sketch — per-row sorted map folds, whole-stage codegen."""
+    from mq_to_db_spark.operators.nativehist import (
+        cascade_exp_histogram,
+        exp_hist_stats_exact,
+        exp_histogram,
+    )
+
+    h1 = exp_histogram(
+        _events_cents(spark, sf_dir), "1h", "v", keys=["event_type"]
+    )
+    d1 = cascade_exp_histogram(h1, "1d", keys=["event_type"])
+    out = exp_hist_stats_exact(d1, keys=["event_type"])
+    return out.select(
+        "event_type", "bucket_start", "n_obs", "s1_x4", "s2_x16"
+    )
+
+
+# exphist: EXACT integer replay of ceil(log2(v)) — binary-string
+# length (floor(log2)+1) minus 1 when v is a power of two
+@contract("""
+            WITH c AS (
+                SELECT event_type, date_trunc('day', ts) AS bucket_start,
+                       CAST(round(value * 100) AS BIGINT) AS v
+                FROM events WHERE value IS NOT NULL
+            ),
+            b AS (
+                SELECT event_type, bucket_start,
+                       CAST(length(to_base(v, 2)) - 1
+                            + CASE WHEN (v & (v - 1)) = 0 THEN 0 ELSE 1 END
+                            AS INT) AS bucket_idx
+                FROM c WHERE v > 0
+            )
+            SELECT event_type, bucket_start, bucket_idx,
+                   CAST(count(*) AS BIGINT) AS n
+            FROM b GROUP BY 1, 2, 3
+        """)
+def q_exphist_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Native exponential histogram, cascaded (operators/nativehist.py
+    exp_histogram → cascade_exp_histogram → exp_hist_explode): 1h
+    sketches merged into 1d by entry-wise map addition — proof the
+    sketch is mergeable across the retention cascade — then flattened to
+    (event_type, day, bucket_idx, n).  schema=0 buckets (2^(i−1), 2^i]
+    over integer cents: ceil(log2(v)) is cross-engine deterministic
+    there, and the oracle replays it in EXACT integer arithmetic
+    (binary-string length + power-of-two bit test), so the comparison
+    is airtight.  All-JVM: two hash aggs + the map merge, no window."""
+    from mq_to_db_spark.operators.nativehist import (
+        cascade_exp_histogram,
+        exp_hist_explode,
+        exp_histogram,
+    )
+
+    h1 = exp_histogram(
+        _events_cents(spark, sf_dir), "1h", "v", keys=["event_type"]
+    )
+    d1 = cascade_exp_histogram(h1, "1d", keys=["event_type"])
+    return exp_hist_explode(d1, keys=["event_type"]).select(
+        "event_type", "bucket_start", "bucket_idx", "n"
+    )
+
+
+# exphist quantile: the estimator arithmetic replicated in the
+# same IEEE operation order as exp_hist_quantile
+@contract("""
+            WITH c AS (
+                SELECT event_type, date_trunc('day', ts) AS bucket_start,
+                       CAST(round(value * 100) AS BIGINT) AS v
+                FROM events WHERE value IS NOT NULL
+            ),
+            b AS (
+                SELECT event_type, bucket_start,
+                       CAST(length(to_base(v, 2)) - 1
+                            + CASE WHEN (v & (v - 1)) = 0 THEN 0 ELSE 1 END
+                            AS INT) AS bucket_idx
+                FROM c WHERE v > 0
+            ),
+            g AS (
+                SELECT event_type, bucket_start, bucket_idx,
+                       CAST(count(*) AS BIGINT) AS n
+                FROM b GROUP BY 1, 2, 3
+            ),
+            r AS (
+                SELECT *,
+                       sum(n) OVER (PARTITION BY event_type, bucket_start
+                                    ORDER BY bucket_idx) AS cum,
+                       sum(n) OVER (PARTITION BY event_type, bucket_start)
+                           AS total
+                FROM g
+            ),
+            s AS (
+                SELECT event_type, bucket_start,
+                       arg_min(bucket_idx, bucket_idx) AS bidx,
+                       arg_min(n, bucket_idx) AS bn,
+                       arg_min(cum, bucket_idx) AS bcum,
+                       arg_min(0.9 * total, bucket_idx) AS rnk
+                FROM r WHERE cum >= 0.9 * total
+                GROUP BY 1, 2
+            )
+            SELECT event_type, bucket_start,
+                   round(pow(2.0, CAST(bidx AS DOUBLE) - 1.0)
+                         + (pow(2.0, CAST(bidx AS DOUBLE))
+                            - pow(2.0, CAST(bidx AS DOUBLE) - 1.0))
+                           * ((rnk - (bcum - bn)) / CAST(bn AS DOUBLE)),
+                         6) AS p90
+            FROM s
+        """)
+def q_exphist_quantile_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PromQL ``histogram_quantile`` on native exponential histograms
+    (operators/nativehist.py exp_hist_quantile): p90 per (event_type,
+    day) from the cascaded sketch — cumulative-count bucket pick +
+    linear interpolation inside (2^(i−1), 2^i].  The oracle replicates
+    the estimator arithmetic operation-for-operation (same IEEE order),
+    so values hash-match at 6 dp.  Explode + per-(series, bucket) window
+    over ≤64 sketch entries — tiny, uniformly-keyed partitions."""
+    from mq_to_db_spark.operators.nativehist import (
+        cascade_exp_histogram,
+        exp_hist_quantile,
+        exp_histogram,
+    )
+
+    h1 = exp_histogram(
+        _events_cents(spark, sf_dir), "1h", "v", keys=["event_type"]
+    )
+    d1 = cascade_exp_histogram(h1, "1d", keys=["event_type"])
+    out = exp_hist_quantile(d1, 0.9, keys=["event_type"])
+    return out.select(
+        "event_type", "bucket_start", F.round("qv", 6).alias("p90")
+    )
+
+
+# exphist fraction: whole buckets BIGINT + the one straddling
+# bucket's closed-form weight, same IEEE op order
+@contract("""
+            WITH c AS (
+                SELECT event_type, date_trunc('day', ts) AS bucket_start,
+                       CAST(round(value * 100) AS BIGINT) AS v
+                FROM events WHERE value IS NOT NULL
+            ),
+            b AS (
+                SELECT event_type, bucket_start,
+                       CAST(length(to_base(v, 2)) - 1
+                            + CASE WHEN (v & (v - 1)) = 0 THEN 0 ELSE 1 END
+                            AS INT) AS bucket_idx
+                FROM c WHERE v > 0
+            ),
+            g AS (
+                SELECT event_type, bucket_start, bucket_idx,
+                       CAST(count(*) AS BIGINT) AS n
+                FROM b GROUP BY 1, 2, 3
+            ),
+            a AS (
+                SELECT event_type, bucket_start,
+                       sum(CASE WHEN pow(2.0, CAST(bucket_idx AS DOUBLE)) <= 5000.0
+                                THEN n ELSE 0 END) AS whole,
+                       sum(CASE WHEN pow(2.0, CAST(bucket_idx AS DOUBLE) - 1.0) < 5000.0
+                                 AND 5000.0 < pow(2.0, CAST(bucket_idx AS DOUBLE))
+                                THEN n * ((5000.0 - pow(2.0, CAST(bucket_idx AS DOUBLE) - 1.0))
+                                          / (pow(2.0, CAST(bucket_idx AS DOUBLE))
+                                             - pow(2.0, CAST(bucket_idx AS DOUBLE) - 1.0)))
+                                ELSE 0.0 END) AS str,
+                       sum(n) AS tot
+                FROM g GROUP BY 1, 2
+            )
+            SELECT event_type, bucket_start,
+                   round((whole + str) / CAST(tot AS DOUBLE), 6) AS frac_le
+            FROM a
+        """)
+def q_exphist_fraction_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PromQL ``histogram_fraction(0, 5000, h)`` on the native
+    exponential sketch (operators/nativehist.py exp_hist_fraction):
+    share of observations ≤ 5000 cents per (event_type, day) — whole
+    buckets sum as BIGINT, the single straddling bucket ((4096, 8192]
+    here) contributes one closed-form double, so the result is
+    aggregation-order-independent and the oracle hash-matches at 6 dp.
+    One explode + ONE hash agg, no window."""
+    from mq_to_db_spark.operators.nativehist import (
+        cascade_exp_histogram,
+        exp_hist_fraction,
+        exp_histogram,
+    )
+
+    h1 = exp_histogram(
+        _events_cents(spark, sf_dir), "1h", "v", keys=["event_type"]
+    )
+    d1 = cascade_exp_histogram(h1, "1d", keys=["event_type"])
+    out = exp_hist_fraction(d1, 5000.0, keys=["event_type"])
+    return out.select(
+        "event_type", "bucket_start", F.round("fraction", 6).alias("frac_le")
+    )
+
+
+# distinct_over_time: identical bounded explode, exact distinct
+@contract("""
+            WITH s AS (
+                SELECT event_type, epoch_us(ts) AS tus, user_id
+                FROM events
+            ),
+            g AS (
+                SELECT event_type, user_id,
+                       unnest(generate_series(
+                           ((tus + 599999999) // 600000000) * 600000000,
+                           tus + 3599999999,
+                           600000000)) AS gus
+                FROM s
+            )
+            SELECT event_type, make_timestamp(gus) AS grid_ts,
+                   CAST(count(*) AS BIGINT) AS n_samples,
+                   CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
+            FROM g GROUP BY 1, 2
+        """)
+def q_distinct_over_time_1h10m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``count_distinct_over_time(user[1h])`` on the sliding 10-minute
+    grid (operators/resample.py over_time_grid distinct_col): distinct
+    active users per overlapping window via the same bounded explode —
+    fan-out = range/step — plus Spark's exact two-phase distinct
+    aggregate (partial dedup before the shuffle).  The unbounded-
+    cardinality scale path is the HLL sketch rollup; this is the exact
+    small-window tool a Grafana "active users (1h)" panel wants."""
+    from mq_to_db_spark.operators.resample import over_time_grid
+
+    ev = _events(spark, sf_dir).select(
+        "event_type", "ts", "event_id", "user_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    out = over_time_grid(
+        ev, ["event_type"], value_col="v", range_s=3600, step_s=600,
+        tiebreak=("event_id",), distinct_col="user_id",
+    )
+    return out.select("event_type", "grid_ts", "n_samples", "n_distinct")
+
+
+# lww upsert: same three-batch union, row_number version pick
+@contract("""
+            WITH s AS (
+                SELECT event_id, ts, 1 AS seq, value FROM events
+                UNION ALL
+                SELECT event_id, ts, 2, value * 2 FROM events
+                WHERE event_id % 3 = 0
+                UNION ALL
+                SELECT event_id, ts, 0, value * 10 FROM events
+                WHERE event_id % 5 = 0
+            ),
+            r AS (
+                SELECT *, row_number() OVER (
+                    PARTITION BY event_id, ts ORDER BY seq DESC) AS rn
+                FROM s
+            )
+            SELECT event_id, ts, CAST(seq AS INT) AS seq, value
+            FROM r WHERE rn = 1
+        """)
+def q_lww_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Last-write-wins out-of-order upsert (operators/replicas.py
+    lww_upsert): three deterministic ingest batches of the same points —
+    the original stream (seq 1), a correction wave (seq 2, every 3rd
+    event, value doubled) and a STALE replay arriving last but with the
+    lowest sequence (seq 0, every 5th event) — collapsed to one version
+    per logical point by a single max_by hash agg.  The oracle replays
+    the same union with a row_number pick; corrections win, stale
+    replays always lose."""
+    from mq_to_db_spark.operators.replicas import lww_upsert
+
+    ev = _events(spark, sf_dir).select("event_id", "ts", "value")
+    stream = (
+        ev.select(
+            "event_id", "ts", F.lit(1).cast("int").alias("seq"), "value"
         )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-def q_rollup_1h_value_stats(spark, sf_dir):
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # micro-unit BIGINT sum, NOT sum(double): a float sum is
-            # partition-order dependent, and at sf0.1 one bucket landed
-            # exactly on a 6-dp rounding boundary (…8125 vs …8135) —
-            # the exact-integer idiom every later contract query uses
-            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("_micro"),
-            F.min("value").alias("value_min"),
-            F.max("value").alias("value_max"),
+        .unionByName(
+            ev.filter(F.col("event_id") % 3 == 0).select(
+                "event_id", "ts", F.lit(2).cast("int").alias("seq"),
+                (F.col("value") * 2).alias("value"),
+            )
         )
-        .select(
-            "bucket_start",
-            "event_type",
-            "n_events",
-            F.round(F.col("_micro") / F.lit(1e6), 6).alias("value_sum"),
-            "value_min",
-            "value_max",
-            # avg rounded in EXACT integer arithmetic (half away from
-            # zero at micro resolution) then divided once — engines'
-            # round(double, 6) implementations disagree on exact-half
-            # averages (BigDecimal expansion vs multiply-round-divide),
-            # caught at sf0.01 the moment the formula produced x.xxx9995
-            F.expr(
-                "CAST((CASE WHEN _micro < 0 THEN -1 ELSE 1 END)"
-                " * ((2 * abs(_micro) + n_events) DIV (2 * n_events))"
-                " AS DOUBLE) / 1e6"
-            ).alias("value_avg"),
+        .unionByName(
+            ev.filter(F.col("event_id") % 5 == 0).select(
+                "event_id", "ts", F.lit(0).cast("int").alias("seq"),
+                (F.col("value") * 10).alias("value"),
+            )
         )
     )
-
-
-def q_rollup_1d_cascade(spark, sf_dir):
-    """1d tier computed by cascading 1h partials (the engine's exact
-    re-aggregable merge, rollup.cascade) — oracle computes 1d directly
-    from raw; equality proves cascade exactness."""
-    hourly = (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("s"),
-        )
-    )
-    return (
-        hourly.groupBy(F.date_trunc("day", "h").alias("bucket_start"), "event_type")
-        .agg(
-            F.sum("n").alias("n_events"),
-            F.round(F.sum("s") / F.lit(1e6), 6).alias("value_sum"),
-        )
+    return lww_upsert(stream, ["event_id"], ts_col="ts", seq_col="seq").select(
+        "event_id", "ts", "seq", "value"
     )
 
 
-def q_role_mix_1h(spark, sf_dir):
-    """Pivot counts per category — the role-mix analogue (C2)."""
-    aggs = [
-        F.count_if(F.col("event_type") == t).alias(f"n_{t}") for t in _EVENT_TYPES
-    ]
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"))
-        .agg(F.count(F.lit(1)).alias("n_events"), *aggs)
+# mixture sampling: rates re-derived with the same IEEE ops,
+# membership replayed integer-exactly on the md5 coin
+@contract(
+    """
+            WITH c AS (
+                SELECT source, CAST(count(*) AS BIGINT) AS nd
+                FROM documents GROUP BY 1
+            ),
+            z AS (
+                SELECT sum(pow(CAST(nd AS DOUBLE), 0.5)) AS zz FROM c
+            ),
+            r AS (
+                SELECT source,
+                       least(1.0, (250.0 / zz)
+                                  * pow(CAST(nd AS DOUBLE), -0.5)) AS rate
+                FROM c, z
+            )
+            SELECT d.doc_id, d.source
+            FROM documents d JOIN r ON d.source = r.source
+            WHERE ('0x' || substring(
+                       md5('42:' || CAST(d.doc_id AS VARCHAR)), 1, 15
+                   ))::BIGINT
+                  < CAST(floor(rate * 1152921504606846976.0) AS BIGINT)
+        """,
+    # sampling.py:sample_mixture — domain-count table × broadcast(1-row
+    # normalizer Σ n^α): domain cardinality is config-sized (thousands
+    # at most), output = |domains|; the corpus itself joins the rate
+    # table by a BroadcastHashJoin on the domain key (visible directly
+    # above the allowed cross in the plan)
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-based mixture sampling (operators/sampling.py
+    sample_mixture): α = 0.5 re-weighting across document sources —
+    rare domains upweighted toward uniform, keep-rates r_d = min(1,
+    C·n_d^−½) derived from ONE tiny domain-count agg, membership by the
+    content-addressed 60-bit coin.  The oracle re-derives the rates and
+    replays the exact membership — thresholds are floor(r·2^60) BIGINTs,
+    so the comparison is integer-exact."""
+    from mq_to_db_spark.operators.sampling import sample_mixture
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "source"
+    )
+    return sample_mixture(
+        docs, "doc_id", "source", alpha=0.5, target_rows=250.0, seed=42
+    ).select("doc_id", "source")
+
+
+# epoch shuffle: row_number over the md5 coin replays the
+# range-partitioned running count exactly
+@contract("""
+            WITH h AS (
+                SELECT doc_id,
+                       ('0x' || substring(
+                            md5('42e1:' || CAST(doc_id AS VARCHAR)), 1, 15
+                        ))::BIGINT AS u
+                FROM documents
+            ),
+            r AS (
+                SELECT doc_id,
+                       row_number() OVER (ORDER BY u, doc_id) - 1 AS p
+                FROM h
+            )
+            SELECT doc_id, CAST(p % 8 AS INT) AS shard,
+                   CAST(p // 8 AS BIGINT) AS pos
+            FROM r
+        """)
+def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic epoch shuffle + round-robin sharding over the
+    corpus (operators/sampling.py epoch_shuffle): every document's
+    global shuffle position for (seed=42, epoch=1), split into 8 shards
+    — shard sizes differ by ≤1 and each shard is a uniform sample.  The
+    global rank is the range-partitioned running count (rangewin.py),
+    NOT a single-partition window — plan-asserted in tests; the oracle
+    replays the md5-coin order with row_number."""
+    from mq_to_db_spark.operators.sampling import epoch_shuffle
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    return epoch_shuffle(docs, "doc_id", epoch=1, n_shards=8).select(
+        "doc_id", "shard", "pos"
     )
 
 
-def q_rate_1m(spark, sf_dir):
-    """Windowed rate (C3): events/sec per 1m bucket — the dashboard's
-    sum(rate(...[1m])) analogue."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("minute", "ts").alias("bucket_start"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .withColumn("events_per_sec", F.round(F.col("n_events") / 60.0, 6))
+# PromQL subquery max_over_time(rate(v[10m])[1h:10m]): the same
+# reset-aware lag contributions gridded at 10m, then max per 1h
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
+                FROM events
+            ),
+            lagged AS (
+                SELECT event_type, ts, v,
+                       lag(v) OVER (
+                           PARTITION BY event_type ORDER BY ts, event_id
+                       ) AS pv
+                FROM s
+            ),
+            inner_g AS (
+                SELECT event_type,
+                       TIMESTAMP '1970-01-01 00:00:00' + INTERVAL 1 SECOND
+                         * (CAST(floor(epoch(ts) / 600) AS BIGINT) * 600)
+                         AS inner_ts,
+                       sum(CASE WHEN pv IS NULL THEN 0
+                                WHEN v >= pv THEN v - pv
+                                ELSE v END) / 600.0 AS r
+                FROM lagged GROUP BY 1, 2
+            )
+            SELECT event_type,
+                   TIMESTAMP '1970-01-01 00:00:00' + INTERVAL 1 SECOND
+                     * (CAST(floor(epoch(inner_ts) / 3600) AS BIGINT) * 3600)
+                     AS bucket_start,
+                   max(r) AS max_rate,
+                   CAST(count(*) AS BIGINT) AS n_inner
+            FROM inner_g GROUP BY 1, 2
+        """)
+def q_subquery_maxrate_1h(spark, sf_dir):
+    """PromQL subquery ``max_over_time(rate(v[10m])[1h:10m])``
+    (operators/subquery.py): the reset-aware 10-minute rate evaluated on
+    the inner grid, then the worst such rate per hour — the Grafana
+    "peak 10m ingest rate per hour" panel as one batch operator.  Values
+    floor-scaled to integer micro-units so the nested lag/sum replay is
+    bit-exact; ONE exchange (lag window + both nested aggs all reuse the
+    event_type hash partitioning, plan-asserted in tests)."""
+    from mq_to_db_spark.operators.subquery import subquery_eval
+
+    ev = _events(spark, sf_dir).select(
+        "event_type",
+        "ts",
+        "event_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    return subquery_eval(
+        ev, ["event_type"], inner_step=600, outer_range=3600,
+        inner_fn="rate", outer_fn="max", value_col="v",
+        tiebreak=("event_id",),
     )
 
 
-def q_percentile_1h(spark, sf_dir):
-    """Exact interpolated quantiles per window (C5)."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"))
-        .agg(
-            F.round(F.percentile("value", F.lit(0.5)), 6).alias("p50"),
-            F.round(F.percentile("value", F.lit(0.9)), 6).alias("p90"),
-        )
+# irate: last two samples per 10m bucket, reset-aware, exact µs gap
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v,
+                       TIMESTAMP '1970-01-01 00:00:00' + INTERVAL 1 SECOND
+                         * (CAST(floor(epoch(ts) / 600) AS BIGINT) * 600)
+                         AS bucket_start
+                FROM events
+            ),
+            r AS (
+                SELECT *, row_number() OVER (
+                    PARTITION BY event_type, bucket_start
+                    ORDER BY ts DESC, event_id DESC
+                ) AS rn
+                FROM s
+            ),
+            p AS (
+                SELECT event_type, bucket_start,
+                       max(CASE WHEN rn = 1 THEN v END) AS lv,
+                       max(CASE WHEN rn = 1 THEN epoch_us(ts) END) AS lt,
+                       max(CASE WHEN rn = 2 THEN v END) AS pv,
+                       max(CASE WHEN rn = 2 THEN epoch_us(ts) END) AS pt
+                FROM r WHERE rn <= 2 GROUP BY 1, 2
+            )
+            SELECT event_type, bucket_start,
+                   CASE WHEN pv IS NOT NULL AND lt > pt THEN
+                        (CASE WHEN lv >= pv THEN lv - pv ELSE lv END)
+                          * 1000000.0 / (lt - pt)
+                   END AS irate
+            FROM p
+        """)
+def q_irate_10m(spark, sf_dir):
+    """PromQL ``irate()`` per (event_type, 10m bucket) (operators/
+    subquery.py): instantaneous per-second rate from the bucket's LAST
+    TWO samples, reset-aware, divisor the exact microsecond gap between
+    them (never the bucket width).  Single-sample buckets yield NULL.
+    Micro-unit values + fixed-order ``contribution * 1e6 / gap_us``
+    formula → bit-exact epoch_us replay."""
+    from mq_to_db_spark.operators.subquery import irate
+
+    ev = _events(spark, sf_dir).select(
+        "event_type",
+        "ts",
+        "event_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    return irate(
+        ev, ["event_type"], step=600, value_col="v", tiebreak=("event_id",)
     )
 
 
-def q_distinct_users_1h(spark, sf_dir):
-    """Windowed distinct cardinality (the active-series gauge family):
-    exact per-hour distinct users + per-type breakdown.  The engine's
-    scale path is the mergeable HLL sketch rollup (operators/rollup.py
-    hll_* — cross-tier re-aggregable); this exact form is its oracle-able
-    twin and the accuracy baseline the sketch is tested against."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"))
-        .agg(
-            F.count_distinct("user_id").alias("n_users"),
-            F.count_distinct("user_id", "event_type").alias("n_user_type"),
-        )
+# HA replica dedup: election (count desc, replica asc) + join-back
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, date_trunc('hour', ts) AS bucket_start,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v,
+                       CASE WHEN event_id % 2 = 0 THEN 'a' ELSE 'b' END
+                         AS replica
+                FROM events
+            ),
+            w AS (
+                SELECT event_type, bucket_start, replica FROM (
+                    SELECT event_type, bucket_start, replica,
+                           count(*) AS n
+                    FROM s GROUP BY 1, 2, 3
+                )
+                QUALIFY row_number() OVER (
+                    PARTITION BY event_type, bucket_start
+                    ORDER BY n DESC, replica ASC
+                ) = 1
+            )
+            SELECT s.event_type, s.bucket_start, s.replica,
+                   CAST(count(*) AS BIGINT) AS n_samples,
+                   CAST(sum(s.v) AS BIGINT) AS v_sum
+            FROM s JOIN w USING (event_type, bucket_start, replica)
+            GROUP BY 1, 2, 3
+        """)
+def q_replica_dedup_1h(spark, sf_dir):
+    """HA replica deduplication (operators/replicas.py — the Mimir
+    HA-tracker rule in batch): a synthetic 2-replica split of the event
+    stream (``event_id`` parity) is collapsed back to ONE replica per
+    (event_type, hour) — most samples wins, ties to the smaller replica
+    id — then the survivors aggregate.  The sample table never window-
+    functions: counts are map-side-combined partials, the winner set
+    joins back broadcast.  Oracle replays election + join + re-agg."""
+    from mq_to_db_spark.operators.replicas import dedup_replicas
+
+    ev = _events(spark, sf_dir).select(
+        "event_type",
+        "ts",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+        F.when(F.col("event_id") % 2 == 0, F.lit("a"))
+        .otherwise(F.lit("b"))
+        .alias("replica"),
+    )
+    kept = dedup_replicas(ev, ["event_type"], tier="1h")
+    return kept.groupBy(
+        "event_type",
+        F.date_trunc("hour", "ts").alias("bucket_start"),
+        "replica",
+    ).agg(
+        F.count(F.lit(1)).alias("n_samples"),
+        F.sum("v").alias("v_sum"),
     )
 
 
-def q_gauge_last_1h(spark, sf_dir):
-    """Gauge/last-value per user per hour (C6)."""
-    from mq_to_db_spark.operators.rollup import gauge_last
-
-    out = gauge_last(
-        _events(spark, sf_dir), "1h", "value", keys=["user_id"], ts_col="ts",
-        order_cols=["ts", "event_id"],
-    )
-    return out.withColumnRenamed("last_value", "last_value")
-
-
-def q_histogram_1d(spark, sf_dir):
-    """Fixed-bucket histogram (C4) with string bucket labels (avoids
-    inf-literal formatting differences across engines)."""
-    c = F.col("value")
-    label = (
-        F.when(c <= 1.0, "le_1")
-        .when(c <= 5.0, "le_5")
-        .when(c <= 20.0, "le_20")
-        .when(c <= 100.0, "le_100")
-        .otherwise("gt_100")
-    )
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("day", "ts").alias("bucket_start"), label.alias("le"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_hist_quantile_1d(spark, sf_dir):
-    """C5: Prometheus histogram_quantile semantics — p90 reconstructed
-    from fixed-bucket counts by linear interpolation (not from raw)."""
-    from mq_to_db_spark.operators.rollup import (
-        fixed_bucket_histogram,
-        histogram_quantile,
-    )
-
-    ev = _events(spark, sf_dir).withColumnRenamed("value", "v")
-    hist = fixed_bucket_histogram(
-        ev.withColumn("ts", F.col("ts")), "v", [1.0, 5.0, 20.0, 100.0], "1d"
-    )
-    out = histogram_quantile(hist, 0.9)
-    return out.select("bucket_start", F.round("q90", 6).alias("q90"))
-
-
+# histogram_fraction: full buckets + one interpolated straddler;
+# the (5,20] bucket's n is re-joined by its le (one row per le)
+@contract("""
+            WITH h AS (
+                SELECT date_trunc('day', ts) AS bucket_start,
+                       CASE WHEN value <= 1.0 THEN 1.0
+                            WHEN value <= 5.0 THEN 5.0
+                            WHEN value <= 20.0 THEN 20.0
+                            WHEN value <= 100.0 THEN 100.0
+                            ELSE 'infinity'::DOUBLE END AS le,
+                       count(*) AS n
+                FROM events GROUP BY 1, 2
+            ),
+            a AS (
+                SELECT bucket_start,
+                       sum(n) AS tot,
+                       sum(CASE WHEN le <= 10.0 THEN n ELSE 0 END) AS full_n,
+                       min(CASE WHEN le > 10.0 AND le != 'infinity'::DOUBLE
+                                THEN le END) AS ple,
+                       max(CASE WHEN le <= 10.0 THEN le END) AS lo
+                FROM h GROUP BY 1
+            )
+            SELECT a.bucket_start,
+                   round((a.full_n + coalesce(
+                       p.n * greatest(0.0, least(1.0,
+                           (10.0 - coalesce(a.lo, 0.0))
+                             / (a.ple - coalesce(a.lo, 0.0)))),
+                       0.0)) / a.tot, 6) AS frac_le_10
+            FROM a LEFT JOIN h p
+              ON p.bucket_start = a.bucket_start AND p.le = a.ple
+            WHERE a.tot > 0
+        """)
 def q_hist_fraction_1d(spark, sf_dir):
     """PromQL ``histogram_fraction`` — share of observations ≤ 10 per
     day, reconstructed from fixed-bucket counts (operators/rollup.py
@@ -242,627 +760,116 @@ def q_hist_fraction_1d(spark, sf_dir):
     )
 
 
-def q_gapfill_1h(spark, sf_dir):
-    """Gap-fill (C9): dense (event_type × hour) grid over the global
-    extent, zero-filled counts — via the engine's grid/gapfill operator."""
-    from mq_to_db_spark.operators.gapfill import gapfill
-
-    hourly = (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-    )
-    filled = gapfill(hourly, "1h", ["event_type"], policy="zero")
-    return filled.select("bucket_start", "event_type", F.col("n_turns").alias("n_events"))
-
-
-def q_asof_join(spark, sf_dir):
-    """Point-in-time as-of join (backward): each click gets the user's
-    latest purchase value at-or-before it — one shuffle, no pair
-    explosion (operators/asof.py); DuckDB's native ASOF JOIN is the
-    oracle."""
-    from mq_to_db_spark.operators.asof import asof_join
-
-    ev = _events(spark, sf_dir)
-    left = ev.filter(ev.event_type == "click").select("event_id", "user_id", "ts")
-    right = (
-        ev.filter(ev.event_type == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("pval"))
-    )
-    out = asof_join(left, right, on="ts", by=["user_id"])
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.round("pval_right", 6).alias("pval_right"),
-        "ts_right",
-    )
-
-
-def q_asof_fwd(spark, sf_dir):
-    """Forward as-of join (operators/asof.py, direction='forward'): each
-    click gets the user's EARLIEST purchase at-or-after it — the reversed
-    LOCF scan, same one-shuffle construction; DuckDB's native forward
-    ASOF (``l.ts <= r.ts``) is the oracle."""
-    from mq_to_db_spark.operators.asof import asof_join
-
-    ev = _events(spark, sf_dir)
-    left = ev.filter(ev.event_type == "click").select("event_id", "user_id", "ts")
-    right = (
-        ev.filter(ev.event_type == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("pval"))
-    )
-    out = asof_join(left, right, on="ts", by=["user_id"], direction="forward")
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.round("pval_right", 6).alias("pval_right"),
-        "ts_right",
-    )
-
-
-def q_asof_nearest(spark, sf_dir):
-    """Nearest as-of join (operators/asof.py, direction='nearest'): the
-    closer of the backward/forward matches in exact µs, ties → backward;
-    the oracle composes DuckDB's two native ASOF directions with the
-    same µs tie rule."""
-    from mq_to_db_spark.operators.asof import asof_join
-
-    ev = _events(spark, sf_dir)
-    left = ev.filter(ev.event_type == "click").select("event_id", "user_id", "ts")
-    right = (
-        ev.filter(ev.event_type == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("pval"))
-    )
-    out = asof_join(left, right, on="ts", by=["user_id"], direction="nearest")
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.round("pval_right", 6).alias("pval_right"),
-        "ts_right",
-    )
-
-
-def q_range_join(spark, sf_dir):
-    """Point-in-interval range join via bucketized equi-join (no
-    BroadcastNestedLoop): clicks landing inside the 2-hour window after
-    each signup of the same user."""
-    from mq_to_db_spark.operators.rangejoin import range_join
-
-    ev = _events(spark, sf_dir)
-    left = ev.filter(ev.event_type == "click").select("event_id", "user_id", "ts")
-    right = ev.filter(ev.event_type == "signup").select(
-        F.col("event_id").alias("signup_id"),
-        "user_id",
-        F.col("ts").alias("start"),
-        (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("end"),
-    )
-    out = range_join(left, right, by=["user_id"], bucket="1 hour")
-    return out.select("event_id", "user_id", "ts", "signup_id", "start", "end")
-
-
-def q_role_transitions(spark, sf_dir):
-    """Role-transition bigrams per day (conversation-flow analytics) on
-    events-as-transcripts: event_type handoffs within a user's stream."""
-    from mq_to_db_spark.operators.rollup import role_transitions
-
-    tr = _events(spark, sf_dir).select(
-        F.col("user_id").alias("conv_id"),
-        F.col("event_id").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        "ts",
-    )
-    return role_transitions(tr, tier="1d")
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (island detection, one window shuffle):
-    user activity sessions with a 30-minute inactivity gap."""
-    from mq_to_db_spark.operators.sessionize import sessionize
-
-    ev = _events(spark, sf_dir).select("user_id", "event_id", "ts")
-    out = sessionize(
-        ev, gap="30 minutes", key="user_id", order_cols=["ts", "event_id"]
-    )
-    return out.select(
-        "user_id",
-        "session_id",
-        "session_start",
-        "session_end",
-        "n_turns",
-        F.round("duration_sec", 6).alias("duration_sec"),
-    )
-
-
-def q_validate_split(spark, sf_dir):
-    """Reject-routing truth table (A6/A10/B2): plant three invalid rows,
-    route by first-failing-reason, count per reason."""
-    ev = _events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-    bad = spark.createDataFrame(
-        [
-            (1000001, None, "click", 1.0),
-            (1000002, "2024-01-01 00:00:00", "bogus_type", 1.0),
-            (1000003, "2024-01-01 00:00:00", "view", -5.0),
-        ],
-        "event_id long, ts string, event_type string, value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    allr = ev.unionByName(bad)
-    reason = (
-        F.when(F.col("ts").isNull(), "null_ts")
-        .when(~F.col("event_type").isin(*_EVENT_TYPES), "unknown_type")
-        .when(F.col("value") < 0, "negative_value")
-        .otherwise("(valid)")
-    )
-    return allr.groupBy(reason.alias("reason")).agg(F.count(F.lit(1)).alias("n"))
-
-
-def q_codec_roundtrip_agg(spark, sf_dir):
-    """Gorilla codec end-to-end (C10): events → chunk-encode (dod ts +
-    XOR values + string/dict payloads) → decode → re-aggregate.  The
-    oracle aggregates the raw table directly — equality proves the codec
-    is lossless through the full Spark path."""
-    from mq_to_db_spark.operators.compression import decode_chunks, encode_chunks
-
-    tr = _events_as_transcripts(spark, sf_dir)
-    chunks = encode_chunks(tr, value_col="value", chunk_interval="1 day")
-    back = decode_chunks(chunks)
-    return back.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.round(
-            F.sum(F.floor(F.col("value") * 1e6).cast("long")) / F.lit(1e6), 6
-        ).alias("value_sum"),
-        F.min("ts").alias("ts_min"),
-        F.max("ts").alias("ts_max"),
-    )
-
-
-# --------------------------------------------------------------------------
-# dedup / text / similarity over documents + embeddings
-# --------------------------------------------------------------------------
-
-_NORM_SQL = (
-    "trim(regexp_replace(regexp_replace(lower(text), '[^\\w\\s]', ' ', 'g'), "
-    "'\\s+', ' ', 'g'))"
-)
-
-
-def q_dedup_exact(spark, sf_dir):
-    from mq_to_db_spark.functions.text import fingerprint_md5
-
-    return (
-        _docs(spark, sf_dir)
-        .withColumn("fp", fingerprint_md5("text"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("rep_id"), F.count(F.lit(1)).alias("dup_count"))
-    )
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    from mq_to_db_spark.operators.dedup import ngram_jaccard_pairs
-
-    pairs = ngram_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", shingle_n=3, threshold=0.15,
-        max_doc_freq=100000,
-    )
-    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_token_counts(spark, sf_dir):
-    from mq_to_db_spark.functions.text import token_count_ws
-
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        token_count_ws("text").alias("n_ws"),
-        F.coalesce(F.regexp_count("text", F.lit(r"[A-Za-z]+")), F.lit(0)).cast("long").alias("n_words"),
-        F.coalesce(F.regexp_count("text", F.lit(r"[0-9]")), F.lit(0)).cast("long").alias("n_digits"),
-        F.coalesce(F.regexp_count("text", F.lit(r"[^\w\s]")), F.lit(0)).cast("long").alias("n_punct"),
-    )
-
-
-def q_lang_quality(spark, sf_dir):
-    from mq_to_db_spark.functions.text import lang_id, quality_features
-
-    d = _docs(spark, sf_dir)
-    f = quality_features("text")
-    return d.select(
-        "doc_id",
-        lang_id("text").alias("lang_pred"),
-        f["q_len"].cast("long").alias("q_len"),
-        F.round(f["q_punct_ratio"], 6).alias("q_punct_ratio"),
-        F.round(f["q_stopword_ratio"], 6).alias("q_stopword_ratio"),
-    )
-
-
-def q_curation_pipeline(spark, sf_dir):
-    """Composite training-data curation: quality-filter → exact dedup →
-    per-language corpus stats — the operators composing the way a real
-    cleaning pipeline chains them (filter before dedup so the groupBy
-    shuffles only survivors)."""
-    from mq_to_db_spark.functions.text import (
-        fingerprint_md5,
-        lang_id,
-        quality_features,
-    )
-
-    d = _docs(spark, sf_dir)
-    f = quality_features("text")
-    kept = d.filter(
-        (f["q_len"] >= 30) & (f["q_punct_ratio"] <= 0.2)
-    )
-    deduped = (
-        kept.withColumn("fp", fingerprint_md5("text"))
-        .groupBy("fp")
-        # min_by: the representative's own text (first() would be
-        # nondeterministic — duplicates share *normalized* text only)
-        .agg(F.min("doc_id").alias("doc_id"), F.min_by("text", "doc_id").alias("text"))
-    )
-    return (
-        deduped.withColumn("lang", lang_id("text"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.length("text")).alias("total_chars"),
-        )
-    )
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    from mq_to_db_spark.operators.similarity import cosine_topk
-
-    emb = _emb(spark, sf_dir)
-    qv = emb.filter("vec_id = 0").collect()[0].embedding
-    top = cosine_topk(emb, list(qv), k=10)
-    return top.select("vec_id", F.round("cosine", 5).alias("cosine_r"))
-
-
-def q_knn_join(spark, sf_dir):
-    from mq_to_db_spark.operators.similarity import knn_join_brute
-
-    emb = _emb(spark, sf_dir)
-    left = emb.filter("vec_id < 10").select(F.col("vec_id").alias("id_l"), "embedding")
-    right = emb.select(F.col("vec_id").alias("id_r"), "embedding")
-    knn = knn_join_brute(left, right, k=3)
-    return knn.select("lid", "rid", F.round("cosine", 5).alias("cosine_r"), "rank")
-
-
-# -- approximate operators with full-algorithm oracles -----------------------
-#
-# The LSH/IVF/minhash/simhash internals are built on engine-independent
-# deterministic constants (seeded-numpy hyperplane literals, md5-derived
-# hashes), so the DuckDB oracle replays the *entire* approximate
-# algorithm — signatures, probe sets, candidate filters, exact re-rank —
-# not just a rows-only sanity check.
-
-
-def q_minhash_pairs(spark, sf_dir):
-    """MinHash-LSH candidate pairs + exact-Jaccard verification at 0.3.
-    Banding (8 bands × 4 rows) has no false negatives at the fixture's
-    operating point (all true pairs sit at J ≥ 0.9, miss prob ≤ 2e-4
-    each and deterministic under the fixed seeds), so the verified
-    output equals the exact J ≥ 0.3 pair set the oracle computes."""
-    from mq_to_db_spark.operators.dedup import minhash_lsh_pairs
-
-    return minhash_lsh_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", verify_threshold=0.3
-    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_editdist_pairs(spark, sf_dir):
-    """Fuzzy-dedup by EXACT Levenshtein similarity (operators/dedup.py
-    editdist_pairs): minhash-LSH candidates (exact Jaccard ≥ 0.3) pay
-    the only O(len²) edit-distance dynamic programs; texts join back
-    id-keyed.  Both stages replay in SQL — posting-list Jaccard then
-    DuckDB's identical unit-cost levenshtein — so the contract is
-    exact by construction."""
-    from mq_to_db_spark.operators.dedup import editdist_pairs
-
-    return editdist_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", min_sim=0.8
-    )
-
-
-def q_simhash_pairs(spark, sf_dir):
-    """SimHash pairs at hamming ≤ 3 — pigeonhole banding on 4×15-bit
-    chunks is *exact* at that distance, and the md5-word-hash signature
-    is engine-reproducible, so the O(n²) DuckDB hamming join is an exact
-    oracle."""
-    from mq_to_db_spark.operators.dedup import simhash_pairs
-
-    return simhash_pairs(_docs(spark, sf_dir), "doc_id", "text", max_hamming=3)
-
-
-ANN_LSH_PARAMS = dict(n_planes=6, multiprobe=2, seed=13, k=10, query_id=1)
-ANN_IVF_PARAMS = dict(n_centroids=8, nprobe=3, k=10, query_id=2)
-NEARDUP_PARAMS = dict(n_planes=8, n_bands=8, threshold=0.3)
-EMB_DIM = 64
-
-
-def q_dedup_minhash_survivors(spark, sf_dir):
-    """Near-dup removal end-to-end: minhash-LSH pairs → exact connected
-    components (bounded label propagation) → keep each cluster's minimum
-    id.  The oracle recomputes the exact J ≥ 0.3 pair graph and its
-    transitive closure with a recursive CTE — chained duplicates
-    (A~B~C, A≁C) must leave exactly one survivor."""
-    from mq_to_db_spark.operators.dedup import dedup_minhash
-
-    kept = dedup_minhash(_docs(spark, sf_dir), "doc_id", "text", threshold=0.3)
-    return kept.select("doc_id")
-
-
-def q_embedding_neardup(spark, sf_dir):
-    """Banded hyperplane-LSH embedding near-dup pairs with exact cosine
-    verification — the oracle replays the full banded OR-construction
-    (same seeded literal planes) plus the cosine filter in SQL."""
-    from mq_to_db_spark.operators.dedup import embedding_neardup_pairs
-
-    p = NEARDUP_PARAMS
-    pairs = embedding_neardup_pairs(
-        _emb(spark, sf_dir), "vec_id", "embedding",
-        threshold=p["threshold"], n_planes=p["n_planes"], n_bands=p["n_bands"],
-    )
-    return pairs.select("id_a", "id_b", F.round("cosine", 5).alias("cosine_r"))
-
-
-def q_ann_ivf(spark, sf_dir):
-    from mq_to_db_spark.operators.similarity import ivf_topk
-
-    p = ANN_IVF_PARAMS
-    emb = _emb(spark, sf_dir)
-    qv = emb.filter(f"vec_id = {p['query_id']}").collect()[0].embedding
-    return ivf_topk(
-        emb, list(qv), k=p["k"], n_centroids=p["n_centroids"], nprobe=p["nprobe"]
-    ).select("vec_id", F.round("cosine", 5).alias("cosine_r"))
-
-
-def q_ann_lsh(spark, sf_dir):
-    from mq_to_db_spark.operators.similarity import ann_lsh_topk
-
-    p = ANN_LSH_PARAMS
-    emb = _emb(spark, sf_dir)
-    qv = emb.filter(f"vec_id = {p['query_id']}").collect()[0].embedding
-    return ann_lsh_topk(
-        emb, list(qv), k=p["k"], n_planes=p["n_planes"],
-        multiprobe=p["multiprobe"], seed=p["seed"],
-    ).select("vec_id", F.round("cosine", 5).alias("cosine_r"))
-
-
-KNN_LSH_PARAMS = dict(n_planes=8, n_bands=8, k=3, n_left=10)
-
-
-def q_knn_join_lsh(spark, sf_dir):
-    """Banded hyperplane-LSH k-NN join (the large-right scale path: no
-    broadcast, no cross join; candidates from any-band collisions, bare
-    ids through the dedup shuffle).  The oracle replays the banded
-    construction with the same seeded literal planes — candidate = any
-    band equal — then ranks candidates by exact cosine per left row,
-    exactly the operator's semantics."""
-    from mq_to_db_spark.operators.similarity import knn_join_lsh
-
-    p = KNN_LSH_PARAMS
-    emb = _emb(spark, sf_dir)
-    left = emb.filter(f"vec_id < {p['n_left']}").select(
-        F.col("vec_id").alias("id_l"), "embedding"
-    )
-    right = emb.select(F.col("vec_id").alias("id_r"), "embedding")
-    out = knn_join_lsh(
-        left, right, k=p["k"], n_planes=p["n_planes"], n_bands=p["n_bands"],
-        dim=EMB_DIM,
-    )
-    return out.select("lid", "rid", F.round("cosine", 5).alias("cosine_r"), "rank")
-
-
-WINNOW_PARAMS = dict(k=16, w=8, min_shared=5, max_doc_freq=50)
-
-
-def q_winnow_pairs(spark, sf_dir):
-    """MOSS-style winnowing fingerprint pairs (Schleimer et al.):
-    dual-modulus rolling k-gram hashes (BIGINT-replayable Horner chains)
-    → sliding-window minima (Arrow-vectorized) → inverted index join on
-    shared fingerprints.  The oracle recomputes the exact fingerprint
-    sets in SQL (same rolling-hash values, list-comprehension window
-    minima)."""
-    from mq_to_db_spark.operators.dedup import winnow_similar_pairs
-
-    p = WINNOW_PARAMS
-    return winnow_similar_pairs(
-        _docs(spark, sf_dir), "doc_id", "text",
-        k=p["k"], w=p["w"], min_shared=p["min_shared"],
-        max_doc_freq=p["max_doc_freq"],
-    )
-
-
-def q_transcript_pipeline(spark, sf_dir):
-    """Full engine pipeline on events-as-transcripts: tier cascade →
-    gap-filled 1h global rollup, hash-checked exactly against the
-    equivalent SQL cascade (CORRECTNESS_r02: exact match)."""
-    from mq_to_db_spark.operators.rollup import rollup_tiers
-
-    from mq_to_db_spark.operators.gapfill import gapfill
-
-    tr = _events_as_transcripts(spark, sf_dir)
-    tiers = rollup_tiers(tr.drop("value"), keys=[])
-    return gapfill(tiers["1h"], "1h", policy="zero")
-
-
-SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
-SPLIT_SEED = 7
-STRAT_RATES = {"en": 0.5, "de": 0.25}
-STRAT_DEFAULT = 0.05
-STRAT_SEED = 11
-PACK_BUDGET = 512
-PACK_SHARDS = 4
-PACK_SEED = 5
-
-#: DuckDB replay of operators.sampling.hash_u60 (60-bit md5 uniform)
-_U60_SQL = "('0x' || substring(md5('{seed}:' || CAST({col} AS VARCHAR)), 1, 15))::BIGINT"
-
-#: token count, byte-identical to functions.text.token_count_ws (cf. the
-#: token_counts oracle)
-_TOK_SQL = (
-    "CASE WHEN text IS NULL OR trim(text) = '' THEN 0 "
-    "ELSE len(string_split_regex(trim(text), '\\s+')) END"
-)
-
-
-def q_sample_split(spark, sf_dir):
-    """Deterministic train/val/test split of the documents corpus:
-    60-bit md5 coin vs cumulative literal thresholds — a pure
-    projection (no shuffle, no RNG state), so membership is identical
-    on any cluster/partitioning and the oracle replays it exactly."""
-    from mq_to_db_spark.operators.sampling import assign_split
-
-    return assign_split(
-        _docs(spark, sf_dir), "doc_id", dict(SPLIT_WEIGHTS), seed=SPLIT_SEED
-    ).select("doc_id", "split")
-
-
-def q_sample_stratified(spark, sf_dir):
-    """Per-language Bernoulli sampling (stratified rates as a literal
-    CASE — config, not a rate-table join); exact hash-replay oracle."""
-    from mq_to_db_spark.operators.sampling import sample_stratified
-
-    return sample_stratified(
-        _docs(spark, sf_dir), "doc_id", "lang", dict(STRAT_RATES),
-        default_rate=STRAT_DEFAULT, seed=STRAT_SEED,
-    ).select("doc_id", "lang")
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Next-fit sequence packing of documents into 512-token bins,
-    4 hash shards (operators/packing.py): the sequential pack runs per
-    shard over (id, tokens) pairs only; the oracle walks the same
-    shards with a recursive CTE carrying (fill, bin, pos)."""
-    from mq_to_db_spark.functions.text import token_count_ws
-    from mq_to_db_spark.operators.packing import pack_sequences
-
-    toks = _docs(spark, sf_dir).select(
-        "doc_id", token_count_ws("text").alias("n_tokens")
-    )
-    return pack_sequences(
-        toks, "doc_id", "n_tokens", budget=PACK_BUDGET,
-        n_shards=PACK_SHARDS, seed=PACK_SEED,
-    )
-
-
-def q_top_users_1h(spark, sf_dir):
-    """Exact per-hour heavy hitters: events roll into the (hour, user)
-    count tier first (mergeable partial aggs — the rank shuffles tier
-    rows, never raw events), then top-5 by count with deterministic
-    ties (count desc, user asc)."""
-    from mq_to_db_spark.operators.topk import top_k_per_window
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("bucket_start"),
-            F.col("user_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return top_k_per_window(tier, ["bucket_start"], "user_id", "n_events", k=5)
-
-
-EXPORT_SEED = 13          # split coin for the training-export capstone
-EXPORT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
-EXPORT_PACK_SEED = 17
-EXPORT_BUDGET = 256
-EXPORT_SHARDS = 2
-
-
-def q_training_export(spark, sf_dir):
-    """End-to-end training-export capstone: quality-filter → exact dedup
-    (md5 fingerprint, min-id representative) → deterministic train split
-    → next-fit packing into 256-token windows.  Every stage is
-    content-addressed, so the full five-stage DAG replays bit-exactly in
-    SQL (the oracle chains the curation CTEs, the split threshold, and
-    the recursive packing walk).  One narrow pipeline end to end except
-    the dedup groupBy and the pack's shard exchange."""
-    from mq_to_db_spark.functions.text import (
-        fingerprint_md5,
-        quality_features,
-        token_count_ws,
-    )
-    from mq_to_db_spark.operators.packing import pack_sequences
-    from mq_to_db_spark.operators.sampling import assign_split
-
-    d = _docs(spark, sf_dir)
-    f = quality_features("text")
-    kept = d.filter((f["q_len"] >= 30) & (f["q_punct_ratio"] <= 0.2))
-    deduped = (
-        kept.withColumn("fp", fingerprint_md5("text"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"), F.min_by("text", "doc_id").alias("text"))
-    )
-    train = assign_split(
-        deduped, "doc_id", dict(EXPORT_WEIGHTS), seed=EXPORT_SEED
-    ).where(F.col("split") == "train")
-    toks = train.select("doc_id", token_count_ws("text").alias("n_tokens"))
-    return pack_sequences(
-        toks, "doc_id", "n_tokens", budget=EXPORT_BUDGET,
-        n_shards=EXPORT_SHARDS, seed=EXPORT_PACK_SEED,
-    )
-
-
-def q_repetition_features(spark, sf_dir):
-    """Gopher/MassiveText repetition-filter signals per document:
-    duplicate-line / duplicate-word fractions plus bullet- and
-    ellipsis-line shares (functions/text.py with_repetition_features).
-    Pure narrow projection — the line/word arrays materialize once, all
-    five ratios are array expressions over them; no shuffle, no UDF."""
-    from mq_to_db_spark.functions.text import REPETITION_COLS, with_repetition_features
-
-    return with_repetition_features(_docs(spark, sf_dir), "text").select(
-        "doc_id", *REPETITION_COLS
-    )
-
-
-def q_chunk_spans(spark, sf_dir):
-    """Sliding context-window chunking (operators/packing.py
-    chunk_spans): overlapping (window=32, stride=24) token spans per
-    document — the long-doc half of the packing story.  sequence +
-    posexplode, whole-stage codegen, zero shuffle."""
-    from mq_to_db_spark.functions.text import token_count_ws
-    from mq_to_db_spark.operators.packing import chunk_spans
-
-    docs = _docs(spark, sf_dir).withColumn("n_tok", token_count_ws("text"))
-    return chunk_spans(docs, "doc_id", "n_tok", window=32, stride=24).select(
-        "doc_id",
-        "chunk_idx",
-        F.col("start").alias("chunk_start"),
-        F.col("end").alias("chunk_end"),
-        "chunk_len",
-    )
-
-
-def q_counter_increase(spark, sf_dir):
-    """Prometheus-semantics reset-aware counter increase/rate per 1h
-    bucket (operators/counters.py): a sample below its predecessor means
-    the counter restarted, so the sample's whole value contributes —
-    the engine-side analogue of the dashboard's increase()/rate() over
-    the reference's monotonic counters.  Values are floor-scaled to
-    integer micro-units first so the lag/sum replay is bit-exact across
-    engines.  Keyed path: ONE exchange (the lag window hash-partitions
-    on event_type; the bucket agg reuses that partitioning)."""
-    from mq_to_db_spark.operators.counters import counter_increase
-
-    ev = _events(spark, sf_dir).select(
-        "event_type",
-        "ts",
-        "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    return counter_increase(
-        ev, ["event_type"], ts_col="ts", value_col="v", tier="1h",
+# delta(): last minus FIRST sample per bucket (gauge semantics)
+@contract("""
+            WITH r AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start, value,
+                       row_number() OVER (
+                           PARTITION BY event_type, date_trunc('hour', ts)
+                           ORDER BY ts DESC, event_id DESC
+                       ) AS rn_last,
+                       row_number() OVER (
+                           PARTITION BY event_type, date_trunc('hour', ts)
+                           ORDER BY ts ASC, event_id ASC
+                       ) AS rn_first
+                FROM events
+            )
+            SELECT event_type, bucket_start,
+                   round(max(CASE WHEN rn_last = 1 THEN value END)
+                         - max(CASE WHEN rn_first = 1 THEN value END), 6)
+                     AS delta
+            FROM r WHERE rn_last = 1 OR rn_first = 1 GROUP BY 1, 2
+        """)
+def q_delta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PromQL delta() per (event_type, 1h): last sample minus FIRST
+    sample — the gauge counterpart of increase, no reset folding
+    (operators/derivatives.py gauge_delta).  ONE hash agg, no window:
+    both endpoints picked by max_by/min_by on the (ts, event_id) struct
+    order; single-sample buckets read 0."""
+    from mq_to_db_spark.operators.derivatives import gauge_delta
+
+    return gauge_delta(
+        _events(spark, sf_dir),
+        ["event_type"],
+        ts_col="ts",
+        value_col="value",
+        tier="1h",
         tiebreak=("event_id",),
+    ).select(
+        "event_type", "bucket_start", F.round("delta", 6).alias("delta")
     )
 
 
+# Prometheus extrapolatedRate: within-bucket reset-aware result,
+# then the fixed-order double extrapolation replayed verbatim
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       date_trunc('hour', ts) AS bucket_start,
+                       epoch_us(ts) AS tus,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
+                FROM events
+            ),
+            lagged AS (
+                SELECT *, lag(v) OVER (
+                           PARTITION BY event_type, bucket_start
+                           ORDER BY ts, event_id
+                       ) AS pv,
+                       row_number() OVER (
+                           PARTITION BY event_type, bucket_start
+                           ORDER BY ts, event_id
+                       ) AS rn
+                FROM s
+            ),
+            agg AS (
+                SELECT event_type, bucket_start,
+                       CAST(sum(CASE WHEN pv IS NULL THEN 0
+                                     WHEN v >= pv THEN v - pv
+                                     ELSE v END) AS BIGINT) AS res,
+                       CAST(count(*) AS BIGINT) AS n_samples,
+                       min(tus) AS first_us, max(tus) AS last_us,
+                       max(CASE WHEN rn = 1 THEN v END) AS first_v
+                FROM lagged GROUP BY 1, 2
+            ),
+            m AS (
+                SELECT *,
+                       epoch_us(bucket_start) AS rs_us,
+                       last_us - first_us AS sampled,
+                       CAST(last_us - first_us AS DOUBLE) AS sampled_d,
+                       CAST(last_us - first_us AS DOUBLE)
+                         / CAST(n_samples - 1 AS DOUBLE) AS avg_dur
+                FROM agg
+            ),
+            e AS (
+                SELECT *,
+                       CASE WHEN res > 0 AND first_v >= 0
+                            THEN least(
+                                CAST(first_us - rs_us AS DOUBLE),
+                                sampled_d * (CAST(first_v AS DOUBLE)
+                                             / CAST(res AS DOUBLE)))
+                            ELSE CAST(first_us - rs_us AS DOUBLE)
+                       END AS dts,
+                       CAST(rs_us + 3600000000 - last_us AS DOUBLE) AS dte,
+                       avg_dur * 1.1 AS thr
+                FROM m
+            ),
+            x AS (
+                SELECT *,
+                       CASE WHEN n_samples >= 2 AND sampled > 0 THEN
+                           CAST(res AS DOUBLE) * ((sampled_d
+                             + (CASE WHEN dts < thr THEN dts
+                                     ELSE avg_dur / 2.0 END)
+                             + (CASE WHEN dte < thr THEN dte
+                                     ELSE avg_dur / 2.0 END))
+                             / sampled_d)
+                       END AS inc
+                FROM e
+            )
+            SELECT event_type, bucket_start, n_samples,
+                   inc AS increase_ext,
+                   inc / 3600.0 AS rate_ext
+            FROM x
+        """)
 def q_rate_extrap_1h(spark, sf_dir):
     """Prometheus-served ``rate()``/``increase()`` WITH window-edge
     extrapolation (operators/counters.py rate_extrapolated — the literal
@@ -905,6 +912,39 @@ def q_rate_extrap_1h(spark, sf_dir):
     )
 
 
+# sliding *_over_time grid: the same bounded explode replayed —
+# each sample's affected instants via generate_series, one group
+@contract("""
+            WITH s AS (
+                SELECT event_type, epoch_us(ts) AS tus, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
+                FROM events
+            ),
+            g AS (
+                SELECT event_type, v, tus, event_id,
+                       unnest(generate_series(
+                           ((tus + 599999999) // 600000000) * 600000000,
+                           tus + 3599999999,
+                           600000000)) AS gus
+                FROM s
+            ),
+            r AS (
+                SELECT *, row_number() OVER (
+                           PARTITION BY event_type, gus
+                           ORDER BY tus DESC, event_id DESC
+                       ) AS rn
+                FROM g
+            )
+            SELECT event_type, make_timestamp(gus) AS grid_ts,
+                   CAST(count(*) AS BIGINT) AS n_samples,
+                   CAST(sum(v) AS BIGINT) AS sum_v,
+                   round(CAST(sum(v) AS DOUBLE)
+                         / CAST(count(*) AS DOUBLE), 6) AS avg_v,
+                   min(v) AS min_v,
+                   max(v) AS max_v,
+                   max(CASE WHEN rn = 1 THEN v END) AS last_v
+            FROM r GROUP BY 1, 2
+        """)
 def q_over_time_1h10m(spark, sf_dir):
     """PromQL ``*_over_time(v[1h])`` on a sliding 10-minute grid
     (operators/resample.py over_time_grid): every epoch-aligned instant
@@ -937,6 +977,27 @@ def q_over_time_1h10m(spark, sf_dir):
     )
 
 
+# quantile_over_time: identical explode, exact R-7 quantiles
+@contract("""
+            WITH s AS (
+                SELECT event_type, epoch_us(ts) AS tus,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
+                FROM events
+            ),
+            g AS (
+                SELECT event_type, v,
+                       unnest(generate_series(
+                           ((tus + 599999999) // 600000000) * 600000000,
+                           tus + 3599999999,
+                           600000000)) AS gus
+                FROM s
+            )
+            SELECT event_type, make_timestamp(gus) AS grid_ts,
+                   CAST(count(*) AS BIGINT) AS n_samples,
+                   round(quantile_cont(v, 0.5), 6) AS p50,
+                   round(quantile_cont(v, 0.9), 6) AS p90
+            FROM g GROUP BY 1, 2
+        """)
 def q_quantile_over_time_1h(spark, sf_dir):
     """PromQL ``quantile_over_time(φ, v[1h])`` at 10-minute resolution
     (operators/resample.py over_time_grid quantiles): exact interpolated
@@ -965,1078 +1026,372 @@ def q_quantile_over_time_1h(spark, sf_dir):
     )
 
 
-def q_subquery_maxrate_1h(spark, sf_dir):
-    """PromQL subquery ``max_over_time(rate(v[10m])[1h:10m])``
-    (operators/subquery.py): the reset-aware 10-minute rate evaluated on
-    the inner grid, then the worst such rate per hour — the Grafana
-    "peak 10m ingest rate per hour" panel as one batch operator.  Values
-    floor-scaled to integer micro-units so the nested lag/sum replay is
-    bit-exact; ONE exchange (lag window + both nested aggs all reuse the
-    event_type hash partitioning, plan-asserted in tests)."""
-    from mq_to_db_spark.operators.subquery import subquery_eval
-
-    ev = _events(spark, sf_dir).select(
-        "event_type",
-        "ts",
-        "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    return subquery_eval(
-        ev, ["event_type"], inner_step=600, outer_range=3600,
-        inner_fn="rate", outer_fn="max", value_col="v",
-        tiebreak=("event_id",),
-    )
-
-
-def q_irate_10m(spark, sf_dir):
-    """PromQL ``irate()`` per (event_type, 10m bucket) (operators/
-    subquery.py): instantaneous per-second rate from the bucket's LAST
-    TWO samples, reset-aware, divisor the exact microsecond gap between
-    them (never the bucket width).  Single-sample buckets yield NULL.
-    Micro-unit values + fixed-order ``contribution * 1e6 / gap_us``
-    formula → bit-exact epoch_us replay."""
-    from mq_to_db_spark.operators.subquery import irate
-
-    ev = _events(spark, sf_dir).select(
-        "event_type",
-        "ts",
-        "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    return irate(
-        ev, ["event_type"], step=600, value_col="v", tiebreak=("event_id",)
+# openmetrics roundtrip: the oracle computes the tier DIRECTLY —
+# the Spark side must recover identical rows from parsed text
+@contract("""
+            SELECT 'events_total' AS metric,
+                   event_type,
+                   date_trunc('hour', ts) AS bucket_start,
+                   CAST(count(*) AS BIGINT) AS n_events
+            FROM events GROUP BY 2, 3
+        """)
+def q_openmetrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OpenMetrics scrape-side parse (functions/serialize.py
+    parse_openmetrics — the inverse of openmetrics_1h's exposition):
+    every output column here comes FROM THE PARSED TEXT (metric name,
+    label map, value, whole-second timestamp), never from the original
+    tier columns, and the oracle computes the tier directly — equality
+    proves the expose→parse roundtrip is lossless against an
+    independent engine.  Pure JVM regexp/replace/transform expressions,
+    no Python crossing (plan-asserted in tests)."""
+    from mq_to_db_spark.functions.serialize import (
+        parse_openmetrics,
+        with_openmetrics,
     )
 
-
-def q_replica_dedup_1h(spark, sf_dir):
-    """HA replica deduplication (operators/replicas.py — the Mimir
-    HA-tracker rule in batch): a synthetic 2-replica split of the event
-    stream (``event_id`` parity) is collapsed back to ONE replica per
-    (event_type, hour) — most samples wins, ties to the smaller replica
-    id — then the survivors aggregate.  The sample table never window-
-    functions: counts are map-side-combined partials, the winner set
-    joins back broadcast.  Oracle replays election + join + re-agg."""
-    from mq_to_db_spark.operators.replicas import dedup_replicas
-
-    ev = _events(spark, sf_dir).select(
-        "event_type",
-        "ts",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-        F.when(F.col("event_id") % 2 == 0, F.lit("a"))
-        .otherwise(F.lit("b"))
-        .alias("replica"),
-    )
-    kept = dedup_replicas(ev, ["event_type"], tier="1h")
-    return kept.groupBy(
-        "event_type",
-        F.date_trunc("hour", "ts").alias("bucket_start"),
-        "replica",
-    ).agg(
-        F.count(F.lit(1)).alias("n_samples"),
-        F.sum("v").alias("v_sum"),
-    )
-
-
-def q_downsample_ohlc(spark, sf_dir):
-    """OHLC downsample per (event_type, 1h) — the Grafana panel-
-    resolution read path as a first-class operator (operators/
-    downsample.py): open/close via min_by/max_by on (ts, event_id)
-    inside the same single hash aggregation as high/low/count/sum.
-    One exchange, no window sort, fully re-aggregable outputs."""
-    from mq_to_db_spark.operators.downsample import downsample_ohlc
-
-    return downsample_ohlc(
-        _events(spark, sf_dir), ["event_type"], ts_col="ts",
-        value_col="value", tier="1h", tiebreak=("event_id",),
-    )
-
-
-def q_m4_1h(spark, sf_dir):
-    """M4 visualization downsample per (event_type, 1h) — the error-free
-    line-rendering sample set (Jugel et al., VLDB 2014): the DISTINCT
-    first / last / min-value / max-value POINTS of each pixel bucket
-    with their real timestamps (operators/downsample.py downsample_m4).
-    ONE hash aggregation folds all four min_by/max_by picks, then a
-    narrow array_distinct + explode — no second shuffle, no window."""
-    from mq_to_db_spark.operators.downsample import downsample_m4
-
-    return downsample_m4(
-        _events(spark, sf_dir), ["event_type"], ts_col="ts",
-        value_col="value", tier="1h", tiebreak=("event_id",),
-    )
-
-
-def q_lm_perplexity(spark, sf_dir):
-    """Corpus bigram-LM self-perplexity per document (operators/lm.py)
-    — the CCNet-style n-gram quality signal with the model trained on
-    the corpus itself: add-one smoothed p(w|h) from exact corpus
-    counts, per-doc log-prob summed in POSITION order (fixed-order
-    double chain), ppl = exp(-lp/n).  Bigram counts map-side combine;
-    the fold is one collect_list group of O(doc tokens)."""
-    from mq_to_db_spark.operators.lm import bigram_lm_scores
-
-    return bigram_lm_scores(_docs(spark, sf_dir))
-
-
-def q_kmv_distinct_1d(spark, sf_dir):
-    """KMV (k-minimum-values) distinct-user sketch per (event_type, 1d),
-    CASCADED from 1h sketches (operators/sketch.py kmv_sketch/kmv_merge)
-    — bottom-k(union) == bottom-k(union of bottom-ks), so the cascade is
-    bit-identical to building from raw, which the oracle does directly.
-    The mergeable-but-SQL-replayable sibling of the HLL rollup: hashes
-    ride the md5 coin, dedup is one map-side-combined hash agg, the
-    bottom-k trim a sort-based (spillable) window."""
-    from mq_to_db_spark.operators.sketch import (
-        kmv_estimate,
-        kmv_merge,
-        kmv_sketch,
-    )
-
-    hourly = kmv_sketch(
-        _events(spark, sf_dir), ["event_type"], "user_id", tier="1h", k=64
-    )
-    daily = kmv_merge(
-        hourly, ["event_type"], F.date_trunc("day", "bucket_start"), k=64
-    )
-    return kmv_estimate(daily, k=64).select(
-        "event_type", "bucket_start", "n_hashes", "kth_hash", "est_distinct"
-    )
-
-
-def q_hll_distinct_1d(spark, sf_dir):
-    """HyperLogLog distinct-user sketch per (event_type, 1d), CASCADED
-    from 1h sketches (operators/hll.py, new round 5): register-wise max
-    is associative + idempotent, so the 1h→1d merge is register-exact
-    vs a direct 1d build — the oracle replays the WHOLE sketch (md5
-    coin → register j / leading-zero rho via binary-string length →
-    group max → sorted-j harmonic fold of exact dyadics → linear-
-    counting branch) from raw, and every column hash-matches.  The
-    mergeable-cardinality sibling of kmv_distinct_1d (TimescaleDB's
-    hyperloglog()+rollup() pair); estimate emitted as a raw double per
-    the FLOAT_SURFACE_AUDIT rule (its only transcendental is the
-    correction's ln — branch selection itself is bit-deterministic
-    because the raw estimator chain is exact-ops only)."""
-    from mq_to_db_spark.operators.hll import (
-        hll_estimate,
-        hll_merge,
-        hll_sketch,
-    )
-
-    hourly = hll_sketch(
-        _events(spark, sf_dir), ["event_type"], "user_id", tier="1h"
-    )
-    daily = hll_merge(
-        hourly, ["event_type"], F.date_trunc("day", "bucket_start")
-    )
-    return hll_estimate(daily, keys=["event_type"]).select(
-        "event_type", "bucket_start", "n_regs_set", "n_zero_regs", "estimate"
-    )
-
-
-def q_survival_conv(spark, sf_dir):
-    """Kaplan-Meier survival over (user, event_type) activity-stream
-    lifetimes (operators/survival.py): right-censored at a 12h horizon
-    before the corpus max, exact BIGINT risk-set integers, survival via
-    the running Σ ln(1-d/n) executed range-partitioned (rangewin.py) —
-    never a single-partition window over the curve."""
-    from mq_to_db_spark.operators.survival import conv_lifetimes, kaplan_meier
-
-    streams = _events(spark, sf_dir).select(
-        F.concat_ws(
-            ":", F.col("user_id").cast("string"), F.col("event_type")
-        ).alias("conv_id"),
-        "ts",
-    )
-    return kaplan_meier(
-        conv_lifetimes(streams, censor_horizon="12 hours")
-    )
-
-
-def q_turn_echo(spark, sf_dir):
-    """Cross-turn repetition over the transcript adapter
-    (operators/echo.py): distinct-bigram Jaccard/containment between
-    each turn and its same-role predecessor — the looping-assistant
-    quality signal.  ONE window shuffle on (conv, role); set sizes are
-    exact BIGINTs."""
-    from mq_to_db_spark.operators.echo import turn_echo
-
-    return turn_echo(_events_as_transcripts(spark, sf_dir))
-
-
-def q_theil_sen_1d(spark, sf_dir):
-    """Theil-Sen robust daily trend of the hourly event-count series
-    per event_type (operators/derivatives.py theil_sen): the median of
-    all pairwise slopes — the breakdown-robust sibling of
-    deriv_predict_1d's least squares.  Slopes are single divisions of
-    exact BIGINT diffs; both medians PICKED lower-median order
-    statistics; the O(n²) pair expansion stays inside array
-    expressions over the calendar-bounded (≤24-sample) tier series."""
-    from mq_to_db_spark.operators.derivatives import theil_sen
-    from mq_to_db_spark.operators.rollup import bucket_col
-
-    hourly = (
-        _events(spark, sf_dir)
-        .groupBy("event_type", bucket_col("1h", "ts").alias("h"))
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    return theil_sen(
-        hourly, ["event_type"], ts_col="h", y_col="y", tier="1d",
-        x_unit_seconds=3600,
-    )
-
-
-def q_benford_digits(spark, sf_dir):
-    """Benford first-significant-digit audit of the integer-cents value
-    column per event_type (operators/benford.py): observed counts and
-    shares vs log10(1+1/d) — the data-integrity forensics screen.
-    Digit extraction is the first char of the BIGINT's decimal string
-    (never float log10 bucketing); ONE map-side-combined hash agg."""
-    from mq_to_db_spark.operators.benford import benford_digits
-
-    return benford_digits(_events_cents(spark, sf_dir), "v", ["event_type"])
-
-
-def q_benford_chi2(spark, sf_dir):
-    """Benford chi-square goodness-of-fit per event_type
-    (operators/benford.py benford_chi2): Σ (n_d − N·p_d)²/(N·p_d)
-    folded in digit order — a fixed-order nine-term chain, never an
-    unordered SUM."""
-    from mq_to_db_spark.operators.benford import benford_chi2
-
-    return benford_chi2(_events_cents(spark, sf_dir), "v", ["event_type"])
-
-
-def q_readability(spark, sf_dir):
-    """Flesch reading ease per document (functions/text.py): the three
-    RE2-counted integers (words / sentence runs / vowel-group
-    syllables with a one-per-word floor) and the classic 206.835 −
-    1.015·wps − 84.6·spw score — three fixed-order double ops over
-    exact BIGINTs, pure codegen."""
-    from mq_to_db_spark.functions.text import (
-        flesch_reading_ease,
-        readability_counts,
-    )
-
-    k = readability_counts("text")
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        k["n_words"].alias("n_words"),
-        k["n_sentences"].alias("n_sentences"),
-        k["n_syllables"].alias("n_syllables"),
-        F.round(flesch_reading_ease("text"), 6).alias("flesch"),
-    )
-
-
-def q_oov_rate(spark, sf_dir):
-    """Out-of-vocabulary rate per document vs the corpus top-20
-    vocabulary (operators/ranking.py oov_stats) — the CCNet-style
-    lexical-drift gate upstream of lm_perplexity.  Vocabulary = ONE
-    count agg + TakeOrderedAndProject collected at the config-sized
-    bound; the scoring pass is a ZERO-shuffle array_contains
-    projection."""
-    from mq_to_db_spark.operators.ranking import oov_stats
-
-    return oov_stats(_docs(spark, sf_dir), top_v=20)
-
-
-def q_skew_audit(spark, sf_dir):
-    """Key-skew audit (operators/skewaudit.py): Gini, top-1%/10% row
-    share, median/max key size over the (user → count) tier — the
-    measurement half of the north rule's explicit skew handling.
-    Global ranks are the RANGE-PARTITIONED running count
-    (rangewin.range_running_sum, the epoch_shuffle discipline), never
-    a single-partition window; Gini's float stage is a fixed literal
-    chain over exact BIGINTs.  Tie order within equal counts provably
-    cannot change any output (ranks permute within a constant-count
-    class), so the oracle's row_number replay is exact."""
-    from mq_to_db_spark.operators.skewaudit import skew_audit
-
-    return skew_audit(_events(spark, sf_dir), ["user_id"])
-
-
-def q_salt_plan(spark, sf_dir):
-    """Salt plan (operators/skewaudit.py salt_plan): per-key shuffle
-    fan-out ceil(rows/target) in pure integer arithmetic, capped — the
-    actuation half of skew handling, sized from the audit's counts
-    tier rather than guessed."""
-    from mq_to_db_spark.operators.skewaudit import salt_plan
-
-    return salt_plan(
-        _events(spark, sf_dir), ["user_id"], target_rows=50, max_salts=8
-    )
-
-
-def q_psi_1d(spark, sf_dir):
-    """Population Stability Index drift gate (operators/drift.py):
-    daily value-distribution PSI vs the all-periods baseline — literal
-    integer bucket edges, BIGINT counts, add-one smoothing (no epsilon
-    constants), the Σ(p−q)·ln(p/q) fold in bucket order.  ONE raw-rows
-    hash agg; the baseline re-aggregates the same counts tier, the
-    dense grid is a broadcast literal explode."""
-    from mq_to_db_spark.operators.drift import psi
-
-    return psi(
-        _events(spark, sf_dir),
-        F.date_trunc("day", "ts"),
-        F.floor(F.col("value") * 1e3).cast("long"),
-        [12500, 25000, 37500, 50000, 62500, 75000, 87500],
-    ).withColumnRenamed("period", "day")
-
-
-def q_ab_welch_1d(spark, sf_dir):
-    """Welch's unequal-variance t-test per day (operators/abtest.py):
-    click-vs-view value comparison from exact BIGINT milli-unit
-    moments in ONE conditional hash agg; the t statistic and the
-    Satterthwaite dof are a fixed double chain over those integers, so
-    every float replays bit-for-bit.  No p-value column by design —
-    the incomplete beta is not engine-portable; threshold |t|."""
-    from mq_to_db_spark.operators.abtest import welch_t
-
-    ev = _events(spark, sf_dir).select(
-        F.date_trunc("day", "ts").alias("day"),
-        "event_type",
-        F.floor(F.col("value") * 1e3).cast("long").alias("v"),
-    )
-    return welch_t(ev, ["day"], "event_type", "click", "view", "v")
-
-
-def q_zorder_keys(spark, sf_dir):
-    """Z-order / Morton layout keys (operators/layout.py): the
-    multi-dimensional clustering key behind Delta OPTIMIZE ZORDER —
-    md5-coin user lane × exact-BIGINT range-scaled time lane, bits
-    interleaved by a plan-time-unrolled shift/or chain (pure codegen).
-    The time quotient uses integral ``div`` — a double floor()
-    misranks the x = max boundary.  ``cluster_by_zorder`` range-
-    partitions on this key so every file is a (conv, time) rectangle;
-    the contract checks the key itself bit-for-bit."""
-    from mq_to_db_spark.operators.layout import zorder_keys
-
-    out = zorder_keys(_events(spark, sf_dir), ["user_id"], bits=16)
-    return out.select("event_id", "zkey")
-
-
-def q_decay_topk(spark, sf_dir):
-    """Exponentially time-decayed heavy hitters (operators/decay.py,
-    halflife 7 days): recency-weighted user volume ranking — every
-    decay factor an EXACT 1/(1<<k) power of two (whole-bucket ages,
-    never libm pow), per-user terms folded in bucket order so the
-    score replays bit-for-bit.  Raw rows collapse to the (user, day)
-    tier map-side; the rank window rides the |users|-row score table."""
-    from mq_to_db_spark.operators.decay import decayed_topk
-
-    ev = _events(spark, sf_dir).select(
-        F.col("user_id").cast("string").alias("user_id"),
-        "ts",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    return decayed_topk(
-        ev, ["user_id"], 20, val_col=F.col("v"), halflife_buckets=7
-    )
-
-
-def q_sax_1d(spark, sf_dir):
-    """SAX symbolic words (operators/sax.py, Lin et al. DMKD 2003):
-    each (event_type, day) hourly series z-quantized into a 24-symbol
-    {a,b,c,d} word — the motif/anomaly index key.  PAA frames ARE the
-    1h tier buckets (exact BIGINT sum/count, one double division);
-    mean/variance fold IN POSITION ORDER so every breakpoint compare —
-    hence every symbol — replays bit-identically in SQL.  Tier agg +
-    ONE window collect, ZERO Python."""
-    from mq_to_db_spark.operators.sax import sax_words
-
-    h = (
+    tier = (
         _events(spark, sf_dir)
         .groupBy(
             "event_type", F.date_trunc("hour", "ts").alias("bucket_start")
         )
-        .agg(
-            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias(
-                "sum_cents"
-            ),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    return sax_words(h, ["event_type"])
-
-
-def q_cep_browse_buy(spark, sf_dir):
-    """MATCH_RECOGNIZE-style CEP sequence patterns (operators/cep.py
-    match_pattern): browse-to-buy episodes ``vc*p`` — a view, any
-    clicks, then a purchase — matched greedy, leftmost,
-    non-overlapping (AFTER MATCH SKIP PAST LAST ROW) over each user's
-    symbolized event sequence.  ONE shuffle, ZERO Python: match
-    positions are reconstructed JVM-side from the ``split`` /
-    ``regexp_extract_all`` interleave folded by ``aggregate``, and the
-    RE2-safe pattern makes the DuckDB replay engine-identical."""
-    from mq_to_db_spark.operators.cep import match_pattern, symbolize
-
-    tr = _events_as_transcripts(spark, sf_dir).withColumn(
-        "sym",
-        symbolize(
-            {"view": "v", "click": "c", "purchase": "p",
-             "error": "e", "signup": "s"},
-            "role", default="x",
-        ),
-    )
-    return match_pattern(tr, "vc*p", ["conv_id"])
-
-
-def q_heaps_curve(spark, sf_dir):
-    """Heaps'-law vocabulary-growth curve (operators/ranking.py
-    heaps_curve) — zipf_fit's corpus-health companion: cumulative
-    distinct vocabulary vs cumulative tokens at every doc.  Per-token
-    work collapses to ONE (token → min doc) map-side-combined agg;
-    the running sums ride the |docs|-row table, range-partitionable.
-    All-BIGINT surface."""
-    from mq_to_db_spark.operators.ranking import heaps_curve
-
-    return heaps_curve(_docs(spark, sf_dir))
-
-
-def q_winsorize_1d(spark, sf_dir):
-    """Winsorization at exact nearest-rank p05/p95 per (event_type, 1d)
-    (operators/normalize.py): the robust-preprocessing clamp before
-    mean-based tiers.  NO per-group buffer — one sort-based (spillable)
-    window ranks the rows, the two boundary rows per group filter out,
-    bounds broadcast-join back; the clamp is a pure projection."""
-    from mq_to_db_spark.operators.normalize import winsorize
-
-    out = winsorize(
-        _events(spark, sf_dir), ["event_type"], value_col="value",
-        tier="1d", p_lo=0.05, p_hi=0.95, tiebreak=("event_id",),
-    )
-    return out.select(
-        "event_id", "event_type", "bucket_start", "value", "lo", "hi",
-        "value_wins",
-    )
-
-
-def q_dispersion_1d(spark, sf_dir):
-    """Index of dispersion (Fano factor) of the per-minute event count
-    per (event_type, 1d) (operators/burstiness.py dispersion_1d): the
-    burst-detection diagnostic — Poisson reads ~1, retry storms ≫ 1.
-    The minute grid is dense by construction (n = 1440 constant), so
-    silent minutes cost no grid join; exact BIGINT moments, two hash
-    aggs."""
-    from mq_to_db_spark.operators.burstiness import dispersion_1d
-
-    return dispersion_1d(_events(spark, sf_dir), ["event_type"])
-
-
-def q_entropy_mix_1h(spark, sf_dir):
-    """Shannon entropy + evenness of the hourly event-type mix
-    (operators/burstiness.py entropy_mix): the traffic-composition
-    drift signal.  count_if pivot in ONE hash agg; the k entropy terms
-    fold in the fixed type-sorted literal order (the benford_chi2
-    discipline), never an unordered SUM."""
-    from mq_to_db_spark.operators.burstiness import entropy_mix
-
-    return entropy_mix(
-        _events(spark, sf_dir), _EVENT_TYPES, category_col="event_type",
-        tier="1h",
-    )
-
-
-def q_bloom_decontaminate(spark, sf_dir):
-    """Bloom-filter decontamination (operators/contamination.py
-    bloom_build/bloom_member): the scale path for eval sets too big to
-    broadcast raw — k=4 md5-coin probes into a 256-bit filter packed
-    as 63-bit BIGINT words, membership = all probe bits set.  Exact on
-    negatives (proof of cleanliness); m is deliberately UNDERSIZED so
-    ~20% of clean docs false-positive at sf0.01, and the oracle replays
-    the full bit construction so every one of them matches exactly —
-    the production m comes from the standard -n·k/ln(1-fpr^(1/k))
-    sizing, the replay discipline is what this query pins."""
-    from mq_to_db_spark.operators.contamination import (
-        bloom_build,
-        bloom_member,
-    )
-    from mq_to_db_spark.functions.text import normalize_text
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", normalize_text("text").alias("k")
-    )
-    eval_df = docs.where(F.col("doc_id") % 7 == 0)
-    bloom = bloom_build(eval_df, "k", m_bits=256, k=4)
-    out = bloom_member(docs, "k", bloom, ["doc_id"], m_bits=256, k=4)
-    return out.select(
-        "doc_id", (F.col("doc_id") % 7 == 0).alias("is_eval"), "bloom_hit"
-    )
-
-
-def q_holt_winters_1h(spark, sf_dir):
-    """Additive Holt-Winters (triple exponential smoothing) over the
-    hourly event-count series per event_type (operators/ewma.py
-    holt_winters_seasonal): level + trend + a 24-slot hour-of-day
-    seasonal ring, the full InfluxDB ``holt_winters()`` form (PromQL's
-    keeps only level+trend — holt_linear_1h).  One grouped Arrow batch
-    per series over calendar-bounded tier rows; all states unrounded
-    through the recurrence, literal-order IEEE ops mirrored by the
-    recursive-CTE oracle."""
-    from mq_to_db_spark.operators.ewma import holt_winters_seasonal
-    from mq_to_db_spark.operators.rollup import bucket_col
-
-    hourly = (
-        _events(spark, sf_dir)
-        .groupBy("event_type", bucket_col("1h", "ts").alias("bucket_start"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    return holt_winters_seasonal(
-        hourly, ["event_type"], ts_col="bucket_start", value_col="n_events",
-        period=24, alpha=0.3, beta=0.1, gamma=0.2,
+    exposed = with_openmetrics(
+        tier, "events_total", ["event_type"], "n_events"
+    ).select("exposition")
+    parsed = parse_openmetrics(exposed)
+    return parsed.select(
+        F.col("om_metric").alias("metric"),
+        F.col("om_labels")["event_type"].alias("event_type"),
+        F.col("om_ts").alias("bucket_start"),
+        F.col("om_value").alias("n_events"),
     )
 
 
-def q_zipf_fit(spark, sf_dir):
-    """Corpus Zipf rank-frequency fit (operators/ranking.py zipf_fit):
-    least squares of ln(freq) on ln(rank) over the top-100 tokens,
-    folded in ONE fixed-order aggregate (rank-sorted array) so the SQL
-    replay's left-to-right double chain agrees bit-for-bit; top-N via
-    TakeOrderedAndProject, never a global sort."""
-    from mq_to_db_spark.operators.ranking import zipf_fit
+@contract("""
+            SELECT date_trunc('day', ts) AS day_start,
+                   CASE WHEN event_type IN ('click', 'view')
+                        THEN event_type || '-like' END AS kind,
+                   CAST(CAST(length(props) AS BIGINT) AS VARCHAR) AS plen_label,
+                   CAST(count(*) AS BIGINT) AS n
+            FROM events
+            GROUP BY 1, 2, 3
+        """)
+def q_label_count_values_1d(spark, sf_dir):
+    """PromQL label utilities (operators/labels.py): label_replace
+    rewrites matching series labels (anchored full-match, untouched on
+    miss), then count_values histograms the exact payload-length values
+    per (day, rewritten label) with the value itself becoming a label —
+    pure projections + one hash agg."""
+    from mq_to_db_spark.operators.labels import count_values, label_replace
 
-    return zipf_fit(_docs(spark, sf_dir), top_n=100)
-
-
-#: DDSketch relative accuracy for the contract sketch query
-SKETCH_ALPHA = 0.05
-
-
-def q_quantile_sketch_1h(spark, sf_dir):
-    """Mergeable DDSketch quantiles per (event_type, 1h) window
-    (operators/sketch.py): logarithmic relative-error buckets whose
-    merge is bucket-wise count addition — re-aggregable across the
-    1m/1h/1d cascade, unlike exact percentiles.  Two hash aggregations
-    (idx counts → map assembly), no UDF/window; q50/q95 extracted with
-    one higher-order `aggregate` pass per row.  The oracle replays the
-    full index mapping + cumulative walk in SQL."""
-    from mq_to_db_spark.operators.sketch import (
-        quantile_sketch_rollup,
-        sketch_quantile,
-    )
-
-    sk = quantile_sketch_rollup(
-        _events(spark, sf_dir), "1h", ["event_type"], alpha=SKETCH_ALPHA
-    )
-    out = sketch_quantile(
-        sketch_quantile(sk, 0.5, SKETCH_ALPHA), 0.95, SKETCH_ALPHA
-    )
-    return out.select("event_type", "bucket_start", "zero_count", "n", "q50", "q95")
-
-
-def q_rolling_stats_1h(spark, sf_dir):
-    """Rolling 24h mean/stddev + trailing-baseline z-score anomaly flag
-    over the hourly count tier (operators/rolling.py) — the dashboard's
-    moving-average overlay and 'unusual hour' check as one operator.
-    Consumes TIER rows only (bounded by calendar), one exchange."""
-    from mq_to_db_spark.operators.rolling import rolling_stats
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return rolling_stats(
-        tier, ["event_type"], order_col="bucket_start",
-        value_col="n_events", window=24,
-    )
-
-
-def q_ewma_1h(spark, sf_dir):
-    """EWMA smoothing (alpha=0.3) of the hourly count tier per
-    event_type (operators/ewma.py) — the one operator no window frame
-    can express (each output depends on ALL prior inputs).  Keyed path:
-    one grouped Arrow scan per series using pandas' C `ewm` kernel
-    (verified bit-identical to the plain recurrence); the oracle replays
-    the exact recurrence as a recursive CTE."""
-    from mq_to_db_spark.operators.ewma import ewma
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return ewma(
-        tier, ["event_type"], ts_col="bucket_start", value_col="n_events",
-        alpha=0.3, out_col="ewma",
-    )
-
-
-def q_contamination(spark, sf_dir):
-    """Train/eval decontamination hits (operators/contamination.py):
-    docs sharing ≥1 distinct word 5-gram with the eval slice
-    (doc_id % 10 == 0).  The eval n-gram set is a DISTINCT int64-hash
-    set, broadcast; the corpus probe is a broadcast LEFT SEMI join, so
-    corpus rows never shuffle.  The oracle replays the same n-grams as
-    strings (hash-join ≡ string-join up to xxhash64 collisions)."""
-    from mq_to_db_spark.operators.contamination import contamination_hits
-
-    docs = _docs(spark, sf_dir)
-    return contamination_hits(
-        docs.filter(F.col("doc_id") % 10 != 0),
-        docs.filter(F.col("doc_id") % 10 == 0),
-        id_col="doc_id",
-        text_col="text",
-        n=5,
-    )
-
-
-def q_time_weighted_1h(spark, sf_dir):
-    """Time-weighted average (TimescaleDB-hyperfunction analogue,
-    operators/timeweight.py): per (event_type, hour), LOCF-weighted mean
-    of the gauge `value` — each sample weighted by how long it stayed the
-    latest observation, clamped to the bucket end.  One window shuffle on
-    (event_type, bucket) + one agg reusing that partitioning.  The
-    integral accumulates DECIMAL×BIGINT-µs (exact), so the oracle
-    comparison is hash-exact, not just approximate."""
-    from mq_to_db_spark.operators.timeweight import time_weighted_avg
-
-    out = time_weighted_avg(
-        _events(spark, sf_dir),
-        ["event_type"],
-        ts_col="ts",
-        value_col="value",
-        bucket="1 hour",
-        tiebreak=["event_id"],
-    )
-    return out.select(
-        "event_type", "bucket_start", "n_samples", F.round("twa", 6).alias("twa")
-    )
-
-
-def q_state_durations_1d(spark, sf_dir):
-    """State-duration aggregation (state_agg analogue,
-    operators/timeweight.py): per (day, event_type), total time users
-    spent "in" each event type — a state ends at the user's next event;
-    the final open state is excluded.  Durations accumulate as exact
-    BIGINT µs (order-independent sums → hash-exact oracle)."""
-    from mq_to_db_spark.operators.timeweight import state_durations
-
-    out = state_durations(
-        _events(spark, sf_dir),
-        key="user_id",
-        ts_col="ts",
-        state_col="event_type",
-        tiebreak=["event_id"],
-        bucket="1 day",
-    )
-    return out.select(
-        "bucket_start",
+    df = _events(spark, sf_dir).select(
+        F.date_trunc("day", "ts").alias("day_start"),
         "event_type",
-        "n_entries",
-        F.round("duration_sec", 6).alias("duration_sec"),
+        F.length("props").alias("plen"),
+    )
+    df = label_replace(df, "kind", "$1-like", "event_type", "(click|view)")
+    return count_values(df, "plen_label", "plen", keys=["day_start", "kind"])
+
+
+def _resample_input(spark, sf_dir):
+    """Gauge sample stream: per (event_type, ts) max(value) — unique
+    series timestamps so the as-of tie-break is engine-independent."""
+    return (
+        _events(spark, sf_dir)
+        .groupBy("event_type", "ts")
+        .agg(F.max("value").alias("value"))
     )
 
 
-def q_concurrency_10m(spark, sf_dir):
-    """Concurrency curve (operators/concurrency.py): active user sessions
-    (30-min-gap sessionization) sampled every 10 minutes.  Spark side is
-    the sweep line — boundary ±1 events, one hash agg per distinct
-    instant, range-partitioned running sum (rangewin.range_running_sum),
-    as-of join onto the grid; every shuffle carries ≤16-byte rows.  The
-    oracle is the naive grid×interval join (O(n·m), fine at sf0.01) —
-    engine-independent semantics, scalable plan only on the Spark side."""
-    from mq_to_db_spark.operators.concurrency import concurrency_at_grid
-    from mq_to_db_spark.operators.sessionize import sessionize
-    from mq_to_db_spark.operators.timegrid import step_grid
-
-    ev = _events(spark, sf_dir).select("user_id", "event_id", "ts")
-    sess = sessionize(ev, gap="30 minutes", key="user_id", order_cols=["ts", "event_id"])
-    grid = step_grid(_events(spark, sf_dir), "10 minutes", align="day", out_col="grid_ts")
-    return concurrency_at_grid(
-        sess, grid, grid_col="grid_ts", start_col="session_start", end_col="session_end"
-    )
-
-
-def q_series_corr_1d(spark, sf_dir):
-    """Cross-series Pearson correlation (operators/correlate.py): per
-    day, corr between the zero-filled hourly click and error counts.
-    ONE conditional-aggregation scan builds both series (no self-join),
-    zero-fill against the dense hour grid, then the moment-form corr —
-    five exact BIGINT sums, final double formula identical on both
-    engines (built-in streaming `corr` is summation-order dependent)."""
-    from mq_to_db_spark.operators.correlate import bucketed_pair_series, series_corr
-
-    pair = bucketed_pair_series(
-        _events(spark, sf_dir),
-        "ts",
-        "1h",
-        F.count_if(F.col("event_type") == "click"),
-        F.count_if(F.col("event_type") == "error"),
-    )
-    out = series_corr(pair, "day")
-    return out.select(
-        "group_start", "n_buckets", F.round("corr_ab", 6).alias("corr_ab")
-    )
-
-
-def q_uptime_1h(spark, sf_dir):
-    """Heartbeat→uptime aggregation (heartbeat_agg analogue,
-    operators/intervals.py): each event keeps its event_type "live" for
-    10 minutes; covers merge into islands (gaps-and-islands window) and
-    islands are clipped to hour buckets — exact BIGINT-µs overlaps, so
-    the per-bucket uptime seconds hash-match the DuckDB replay.  Plan:
-    one window shuffle on the key, island agg reuses its partitioning,
-    sequence/explode clip (no shuffle), one final (key, bucket) agg."""
-    from mq_to_db_spark.operators.intervals import heartbeat_agg
-
-    return heartbeat_agg(
-        _events(spark, sf_dir),
-        ["event_type"],
-        ts_col="ts",
-        tolerance="10 minutes",
-        bucket="1 hour",
-        tiebreak=["event_id"],
-    )
-
-
-def q_twa_interp_1h(spark, sf_dir):
-    """Carried (interpolated) time-weighted average (TimescaleDB
-    interpolated_average analogue, operators/intervals.py): LOCF hold
-    intervals cross bucket edges, so sample-free hours report the carried
-    value with n_samples=0 instead of disappearing.  DECIMAL×BIGINT-µs
-    integral ⇒ hash-exact oracle; contrast q_time_weighted_1h (the
-    within-bucket variant with no carry)."""
-    from mq_to_db_spark.operators.intervals import interpolated_time_weighted_avg
-
-    return interpolated_time_weighted_avg(
-        _events(spark, sf_dir),
-        ["event_type"],
-        ts_col="ts",
-        value_col="value",
-        bucket="1 hour",
-        tiebreak=["event_id"],
-    )
-
-
-def q_lttb_1h(spark, sf_dir):
-    """Largest-Triangle-One-Bucket downsample (operators/downsample.py,
-    Steinarsson 2013 §4.2): per (event_type, hour) keep the point whose
-    triangle with its immediate neighbors has the largest area; series
-    endpoints always kept.  The area uses neighbor *deltas* (≤2^40
-    doubles), so the IEEE product — and therefore the argmax — is
-    bit-identical in DuckDB's replay.  One window shuffle + one agg."""
-    from mq_to_db_spark.operators.downsample import downsample_lttb
-
-    return downsample_lttb(
-        _events(spark, sf_dir),
-        ["event_type"],
-        ts_col="ts",
-        value_col="value",
-        tier="1h",
-        tiebreak=("event_id",),
-    )
-
-
-def q_cms_counts_1d(spark, sf_dir):
-    """Count-Min frequency sketch (operators/freq.py): daily CMS over
-    user_id (depth 4 × width 1024, md5-derived cells), then point
-    estimates for eight probe users via the pure-expression lookup.
-    The oracle replays the FULL construction — same cell hashes, same
-    min-over-depths — so estimates hash-match even where collisions
-    inflate them.  Mergeability (1h→1d cascade ≡ direct) is pinned in
-    tests/test_freq.py."""
-    from mq_to_db_spark.operators.freq import cms_lookup, cms_rollup
-
-    cms = cms_rollup(_events(spark, sf_dir), "1d", "user_id")
-    probes = cms.select(
-        "bucket_start",
-        "cms",
-        F.explode(F.array(*[F.lit(i) for i in range(1, 9)])).alias("user_id"),
-    )
-    return probes.select(
-        "bucket_start",
-        "user_id",
-        cms_lookup(F.col("cms"), F.col("user_id")).alias("est"),
-    )
-
-
-_CMS_CELL_SQL = (
-    "({d} * 1024 + ('0x' || substring(md5('cms{d}#' || CAST({col} AS VARCHAR)), 1, 15))"
-    "::BIGINT % 1024)"
-)
-
-
-def _cms_oracle() -> str:
-    cells = " , ".join(
-        f"{_CMS_CELL_SQL.format(d=d, col='user_id')} AS c{d}" for d in range(4)
-    )
-    probe_cells = " , ".join(
-        f"{_CMS_CELL_SQL.format(d=d, col='p.user_id')} AS c{d}" for d in range(4)
-    )
-    est = " , ".join(
-        f"(SELECT coalesce(max(cnt), 0) FROM per_cell x "
-        f"WHERE x.bucket_start = pc.bucket_start AND x.cell = pc.c{d})"
-        for d in range(4)
-    )
-    return f"""
-        WITH tagged AS (
-            SELECT date_trunc('day', ts) AS bucket_start, {cells}
-            FROM events WHERE user_id IS NOT NULL
-        ),
-        long AS (
-            SELECT bucket_start, unnest([c0, c1, c2, c3]) AS cell FROM tagged
-        ),
-        per_cell AS (
-            SELECT bucket_start, cell, count(*) AS cnt
-            FROM long GROUP BY 1, 2
-        ),
-        probe_cells AS (
-            SELECT d.bucket_start, p.user_id, {probe_cells}
-            FROM (SELECT DISTINCT date_trunc('day', ts) AS bucket_start
-                  FROM events WHERE user_id IS NOT NULL) d,
-                 (SELECT unnest([1, 2, 3, 4, 5, 6, 7, 8]) AS user_id) p
-        )
-        SELECT bucket_start, user_id,
-               least({est})::BIGINT AS est
-        FROM probe_cells pc
-    """
-
-
-def _pii_seeded_text_spark(docs):
-    """documents.text + deterministic synthetic PII (email for every doc,
-    ipv4 for even doc_ids, ssn for doc_id % 5 == 0) so the redaction
-    operator has real matches to scrub at every sf."""
-    did = F.col("doc_id").cast("string")
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"), did, F.lit("@example.com"),
-            F.when(
-                F.col("doc_id") % 2 == 0,
-                F.concat(F.lit(" ip 10.0."), (F.col("doc_id") % 256).cast("string"), F.lit(".7")),
-            ).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 5 == 0, F.lit(" ssn 123-45-6789")).otherwise(
-                F.lit("")
+@contract("""
+            WITH samp AS (
+                SELECT event_type, ts, max(value) AS value
+                FROM events GROUP BY 1, 2
             ),
-        ).alias("text"),
+            ext AS (
+                SELECT event_type,
+                       date_trunc('minute', min(ts)) AS lo,
+                       date_trunc('minute', max(ts)) AS hi
+                FROM samp GROUP BY 1
+            ),
+            grid AS (
+                SELECT event_type,
+                       unnest(generate_series(lo, hi, INTERVAL 10 MINUTE)) AS g
+                FROM ext
+            ),
+            m AS (
+                SELECT grid.event_type, grid.g, samp.value, samp.ts
+                FROM grid ASOF LEFT JOIN samp
+                  ON grid.event_type = samp.event_type AND grid.g >= samp.ts
+            )
+            SELECT event_type, g AS grid_ts,
+                   CASE WHEN ts >= g - INTERVAL 15 MINUTE
+                        THEN round(value, 6) END AS value,
+                   CASE WHEN ts >= g - INTERVAL 15 MINUTE
+                        THEN ts END AS sample_ts
+            FROM m
+        """)
+def q_resample_locf_10m(spark, sf_dir):
+    """Grid resampling, PromQL-instant-query semantics
+    (operators/resample.py resample_locf): the irregular gauge stream
+    evaluated every 10 minutes — most recent sample at or before each
+    instant, series silent longer than the 15-minute lookback read NULL
+    (Prometheus staleness).  Grid generated from per-series extents;
+    one as-of join, no grid x samples product."""
+    from mq_to_db_spark.operators.resample import resample_locf
+
+    out = resample_locf(
+        _resample_input(spark, sf_dir),
+        "10 minutes",
+        ["event_type"],
+        lookback="15 minutes",
+    )
+    return out.withColumn("value", F.round("value", 6))
+
+
+@contract("""
+            WITH samp AS (
+                SELECT event_type, ts, max(value) AS value
+                FROM events GROUP BY 1, 2
+            ),
+            ext AS (
+                SELECT event_type,
+                       date_trunc('minute', min(ts)) AS lo,
+                       date_trunc('minute', max(ts)) AS hi
+                FROM samp GROUP BY 1
+            ),
+            grid AS (
+                SELECT event_type,
+                       unnest(generate_series(lo, hi, INTERVAL 10 MINUTE)) AS g
+                FROM ext
+            ),
+            p AS (
+                SELECT grid.event_type, grid.g, samp.value AS v0, samp.ts AS t0
+                FROM grid ASOF LEFT JOIN samp
+                  ON grid.event_type = samp.event_type AND grid.g >= samp.ts
+            ),
+            b AS (
+                SELECT p.event_type, p.g, p.v0, p.t0, samp.value AS v1, samp.ts AS t1
+                FROM p ASOF LEFT JOIN samp
+                  ON p.event_type = samp.event_type AND p.g <= samp.ts
+            )
+            SELECT event_type, g AS grid_ts,
+                   round(CASE
+                       WHEN t1 = t0 THEN v0
+                       WHEN t1 IS NULL THEN v0
+                       ELSE v0 + (v1 - v0)
+                            * CAST(epoch_us(g) - epoch_us(t0) AS DOUBLE)
+                            / CAST(epoch_us(t1) - epoch_us(t0) AS DOUBLE)
+                   END, 6) AS value
+            FROM b
+        """)
+def q_resample_interp_10m(spark, sf_dir):
+    """Grid resampling, TimescaleDB-interpolate semantics
+    (resample_interpolate): linear value between the bracketing samples
+    at every 10-minute instant, exact BIGINT-us deltas with one double
+    division — bit-replayable by epoch_us arithmetic; LOCF tail past
+    the last sample, NULL before the first.  Two as-of joins."""
+    from mq_to_db_spark.operators.resample import resample_interpolate
+
+    out = resample_interpolate(
+        _resample_input(spark, sf_dir), "10 minutes", ["event_type"]
+    )
+    return out.withColumn("value", F.round("value", 6))
+
+
+@contract("""
+            WITH ctr AS (
+                SELECT event_type, ts, event_id,
+                       CAST(row_number() OVER (
+                           PARTITION BY event_type, date_trunc('day', ts)
+                           ORDER BY ts, event_id) AS BIGINT) AS value
+                FROM events
+            ),
+            lagged AS (
+                SELECT *, lag(value) OVER (
+                           PARTITION BY event_type ORDER BY ts, event_id
+                       ) AS prev
+                FROM ctr
+            ),
+            offs AS (
+                SELECT *, CASE WHEN prev IS NOT NULL AND value < prev
+                               THEN prev ELSE CAST(0 AS BIGINT) END AS o
+                FROM lagged
+            )
+            SELECT event_type, ts, event_id, value,
+                   CAST(value + sum(o) OVER (
+                       PARTITION BY event_type ORDER BY ts, event_id
+                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS adjusted
+            FROM offs
+        """)
+def q_counter_adjust(spark, sf_dir):
+    """Counter reset adjustment (operators/counters.py adjust_resets —
+    the Thanos/M3 pre-step long-range increase is defined against): a
+    per-(event_type, day) resetting counter is rebuilt into the true
+    monotonic cumulative series by folding every restart's lost progress
+    into a running offset.  Keyed path: lag + prefix sum over ONE window
+    partitioning (single exchange); integer counters → bit-exact."""
+    from mq_to_db_spark.operators.counters import adjust_resets
+
+    ev = _events(spark, sf_dir)
+    win = W.partitionBy("event_type", F.date_trunc("day", "ts")).orderBy(
+        "ts", "event_id"
+    )
+    ctr = ev.select(
+        "event_type",
+        "ts",
+        "event_id",
+        F.row_number().over(win).cast("long").alias("value"),
+    )
+    return adjust_resets(ctr, ["event_type"], tiebreak=("event_id",))
+
+
+@contract("""
+            SELECT CAST(user_id AS VARCHAR) AS conv_id, ts,
+                   round(value, 6) AS value_r
+            FROM events WHERE value >= 200.0
+        """)
+def q_archive_spikes(spark, sf_dir):
+    """Value-predicate-pruned archive read (operators/compression.py
+    decode_chunks_value_range): per-chunk [val_min, val_max] sketches —
+    computed in the encode pass — let a spike hunt decode only chunks
+    whose sketch can reach the threshold; the oracle scans raw rows.
+    Equality proves the metadata prune loses nothing."""
+    from mq_to_db_spark.operators.compression import (
+        decode_chunks_value_range,
+        encode_chunks,
+    )
+
+    tr = _events_as_transcripts(spark, sf_dir)
+    chunks = encode_chunks(tr, value_col="value")
+    return decode_chunks_value_range(chunks, lo=200.0).select(
+        "conv_id", "ts", F.round("value", 6).alias("value_r")
     )
 
 
-def q_pii_redact(spark, sf_dir):
-    """PII scrub stage (functions/text.py:with_pii_features): per-category
-    regexp counts on the raw text + sequential placeholder redaction —
-    pure chained regexp expressions, codegen'd, no shuffle.  The five
-    patterns are RE2-safe so DuckDB replays them verbatim; redacted text
-    and counts are hash-exact (parity spot-checked on adversarial
-    strings in tests/test_text_functions.py)."""
-    from mq_to_db_spark.functions.text import with_pii_features
+@contract("""
+            WITH pr AS (
+                SELECT date_trunc('hour', ts) AS bucket_start, event_type,
+                       CAST(count(*) AS DOUBLE) AS value
+                FROM events GROUP BY 1, 2
+            ),
+            tot AS (
+                SELECT date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS DOUBLE) AS t
+                FROM events GROUP BY 1
+            )
+            SELECT pr.bucket_start, pr.event_type,
+                   round(pr.value / tot.t, 6) AS share
+            FROM pr JOIN tot USING (bucket_start)
+        """)
+def q_vector_ratio_1h(spark, sf_dir):
+    """PromQL vector matching, arithmetic path (operators/vectormatch.py
+    vector_binop): per-(hour, event_type) counts divided by the
+    per-hour total via many-to-one ``group_left`` matching on the
+    bucket — the dashboard's ``rate(x{label}) / rate(x)`` share panel.
+    One equi-join between two tier-sized recording rules."""
+    from mq_to_db_spark.operators.vectormatch import vector_binop
 
-    seeded = _pii_seeded_text_spark(_docs(spark, sf_dir))
-    out = with_pii_features(seeded, "text")
-    return out.select(
-        "doc_id", "n_email", "n_ssn", "n_card", "n_ipv4", "n_phone",
-        "pii_any", "text_redacted",
+    ev = _events(spark, sf_dir)
+    per_type = ev.groupBy(
+        F.date_trunc("hour", "ts").alias("bucket_start"), "event_type"
+    ).agg(F.count(F.lit(1)).cast("double").alias("value"))
+    totals = ev.groupBy(F.date_trunc("hour", "ts").alias("bucket_start")).agg(
+        F.count(F.lit(1)).cast("double").alias("value")
     )
+    return vector_binop(
+        per_type, totals, "/", on=["bucket_start"], group_left=True,
+        out_col="share",
+    ).withColumn("share", F.round("share", 6))
 
 
-def _pii_oracle() -> str:
-    from mq_to_db_spark.functions.text import PII_PATTERNS
+@contract("""
+            WITH p AS (
+                SELECT date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS DOUBLE) AS value
+                FROM events WHERE event_type = 'purchase' GROUP BY 1
+            ),
+            e AS (
+                SELECT DISTINCT date_trunc('hour', ts) AS bucket_start
+                FROM events WHERE event_type = 'error'
+            )
+            SELECT p.bucket_start, p.value,
+                   CASE WHEN e.bucket_start IS NULL
+                        THEN 'no_errors' ELSE 'with_errors' END AS segment
+            FROM p LEFT JOIN e USING (bucket_start)
+        """)
+def q_vector_setops_1h(spark, sf_dir):
+    """PromQL vector matching, set-algebra path (vector_and /
+    vector_unless): hourly purchase series split into buckets that also
+    saw errors (``and``) vs error-free buckets (``unless``) — LEFT
+    SEMI / LEFT ANTI on the bucket label, values pass through
+    untouched; the two segments partition the left side exactly."""
+    from mq_to_db_spark.operators.vectormatch import vector_and, vector_unless
 
-    counts = ", ".join(
-        f"coalesce(len(regexp_extract_all(text, '{pat}')), 0)::BIGINT AS n_{name}"
-        for name, pat in PII_PATTERNS.items()
-    )
-    red = "text"
-    for name, pat in PII_PATTERNS.items():
-        red = f"regexp_replace({red}, '{pat}', '<{name.upper()}>', 'g')"
-    anyp = " OR ".join(f"n_{name} > 0" for name in PII_PATTERNS)
-    return f"""
-        WITH seeded AS (
-            SELECT doc_id,
-                   text || ' contact user' || doc_id || '@example.com'
-                        || CASE WHEN doc_id % 2 = 0
-                                THEN ' ip 10.0.' || (doc_id % 256) || '.7'
-                                ELSE '' END
-                        || CASE WHEN doc_id % 5 = 0
-                                THEN ' ssn 123-45-6789' ELSE '' END AS text
-            FROM documents
-        ),
-        counted AS (SELECT doc_id, text, {counts} FROM seeded)
-        SELECT doc_id, n_email, n_ssn, n_card, n_ipv4, n_phone,
-               ({anyp}) AS pii_any, {red} AS text_redacted
-        FROM counted
-    """
+    ev = _events(spark, sf_dir)
+    def series(t):
+        return ev.filter(F.col("event_type") == t).groupBy(
+            F.date_trunc("hour", "ts").alias("bucket_start")
+        ).agg(F.count(F.lit(1)).cast("double").alias("value"))
 
-
-def _training_export_oracle() -> str:
-    from mq_to_db_spark.operators.sampling import _threshold
-
-    u_split = _U60_SQL.format(seed=EXPORT_SEED, col="doc_id")
-    t_train = _threshold(EXPORT_WEIGHTS["train"])
-    return f"""
-        WITH RECURSIVE kept AS (
-            SELECT doc_id, text
-            FROM documents
-            WHERE coalesce(length(text), 0) >= 30
-              AND len(regexp_extract_all(text, '[^\\w\\s]'))
-                  / greatest(coalesce(length(text), 0), 1) <= 0.2
-        ),
-        deduped AS (
-            SELECT md5({_NORM_SQL}) AS fp,
-                   min(doc_id) AS doc_id,
-                   arg_min(text, doc_id) AS text
-            FROM kept GROUP BY 1
-        ),
-        train AS (
-            SELECT doc_id, text FROM deduped
-            WHERE {u_split} < {t_train}
-        ),
-        {_pack_cte_sql("train", EXPORT_PACK_SEED, EXPORT_SHARDS, EXPORT_BUDGET)}
-    """
-
-
-def _sample_split_oracle() -> str:
-    from mq_to_db_spark.operators.sampling import _threshold
-
-    u = _U60_SQL.format(seed=SPLIT_SEED, col="doc_id")
-    names = list(SPLIT_WEIGHTS)
-    cum = 0.0
-    branches = []
-    for name in names[:-1]:
-        cum += SPLIT_WEIGHTS[name]
-        # identical float accumulation as assign_split ⇒ identical ints
-        branches.append(f"WHEN u < {_threshold(cum)} THEN '{name}'")
-    return f"""
-        SELECT doc_id,
-               CASE {' '.join(branches)} ELSE '{names[-1]}' END AS split
-        FROM (SELECT doc_id, {u} AS u FROM documents)
-    """
-
-
-def _sample_stratified_oracle() -> str:
-    from mq_to_db_spark.operators.sampling import _threshold
-
-    u = _U60_SQL.format(seed=STRAT_SEED, col="doc_id")
-    branches = " ".join(
-        f"WHEN lang = '{v}' THEN {_threshold(r)}" for v, r in STRAT_RATES.items()
-    )
-    return f"""
-        SELECT doc_id, lang
-        FROM (SELECT doc_id, lang, {u} AS u FROM documents)
-        WHERE u < CASE {branches} ELSE {_threshold(STRAT_DEFAULT)} END
-    """
-
-
-def _pack_cte_sql(source: str, seed: int, n_shards: int, budget: int) -> str:
-    """Shared recursive-CTE replay of operators.packing.pack_sequences
-    over a relation ``source`` with columns (doc_id, text): hash-shard,
-    walk each shard in id order carrying (fill, bin, pos).  The caller
-    embeds this after a ``WITH RECURSIVE`` prefix defining ``source``
-    (or uses the base table directly)."""
-    u = _U60_SQL.format(seed=seed, col="doc_id")
-    return f"""base AS (
-            SELECT doc_id AS id,
-                   CAST(h % {n_shards} AS INTEGER) AS shard,
-                   tok AS doc_tokens,
-                   row_number() OVER (
-                       PARTITION BY h % {n_shards} ORDER BY doc_id
-                   ) AS rn
-            FROM (SELECT doc_id, {u} AS h, {_TOK_SQL} AS tok FROM {source})
-        ),
-        pack AS (
-            SELECT shard, rn, id, doc_tokens,
-                   doc_tokens AS fill,
-                   CAST(0 AS BIGINT) AS bin,
-                   0 AS pos
-            FROM base WHERE rn = 1
-            UNION ALL
-            SELECT b.shard, b.rn, b.id, b.doc_tokens,
-                   CASE WHEN p.fill + b.doc_tokens > {budget}
-                        THEN b.doc_tokens ELSE p.fill + b.doc_tokens END,
-                   CASE WHEN p.fill + b.doc_tokens > {budget}
-                        THEN p.bin + 1 ELSE p.bin END,
-                   CASE WHEN p.fill + b.doc_tokens > {budget}
-                        THEN 0 ELSE p.pos + 1 END
-            FROM pack p JOIN base b ON b.shard = p.shard AND b.rn = p.rn + 1
+    p, e = series("purchase"), series("error")
+    return (
+        vector_and(p, e).withColumn("segment", F.lit("with_errors"))
+        .unionByName(
+            vector_unless(p, e).withColumn("segment", F.lit("no_errors"))
         )
-        SELECT id, shard, CAST(bin AS BIGINT) AS bin,
-               CAST(pos AS INTEGER) AS pos_in_bin,
-               CAST(doc_tokens AS BIGINT) AS doc_tokens,
-               CAST(sum(doc_tokens) OVER (PARTITION BY shard, bin) AS BIGINT)
-                   AS bin_tokens
-        FROM pack"""
-
-
-def _quantile_sketch_oracle() -> str:
-    """DuckDB replay of the FULL DDSketch algorithm at alpha=0.05: the
-    same logarithmic index (ln(v) over the same ln(gamma) literal the
-    Spark side embeds), per-(type, hour, idx) counts, zero bucket,
-    cumulative walk to rank floor(q·(n-1)), midpoint estimate
-    2·gamma^idx/(gamma+1) — the approximation itself is verified, not a
-    recall proxy."""
-    import math
-
-    g = (1 + SKETCH_ALPHA) / (1 - SKETCH_ALPHA)
-    lng = math.log(g)
-    walk_case = """
-            CASE WHEN m.zero_count > floor({q} * (m.n - 1)) THEN 0.0
-                 ELSE round(2 * power({g}, q{tag}.idx) / ({g} + 1), 6)
-            END AS q{tag}"""
-    return f"""
-        WITH s AS (
-            SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                   CASE WHEN value > 0
-                        THEN CAST(ceil(ln(value) / {lng!r}) AS INTEGER)
-                   END AS idx
-            FROM events WHERE value IS NOT NULL
-        ),
-        counts AS (
-            SELECT event_type, bucket_start, idx, count(*) AS cnt
-            FROM s GROUP BY 1, 2, 3
-        ),
-        meta AS (
-            SELECT event_type, bucket_start,
-                   CAST(coalesce(sum(cnt) FILTER (WHERE idx IS NULL), 0)
-                        AS BIGINT) AS zero_count,
-                   CAST(sum(cnt) AS BIGINT) AS n
-            FROM counts GROUP BY 1, 2
-        ),
-        walk AS (
-            SELECT c.event_type, c.bucket_start, c.idx, m.n,
-                   m.zero_count + sum(c.cnt) OVER (
-                       PARTITION BY c.event_type, c.bucket_start
-                       ORDER BY c.idx) AS cum
-            FROM counts c JOIN meta m USING (event_type, bucket_start)
-            WHERE c.idx IS NOT NULL
-        ),
-        q50 AS (
-            SELECT event_type, bucket_start, min(idx) AS idx
-            FROM walk WHERE cum > floor(0.5 * (n - 1)) GROUP BY 1, 2
-        ),
-        q95 AS (
-            SELECT event_type, bucket_start, min(idx) AS idx
-            FROM walk WHERE cum > floor(0.95 * (n - 1)) GROUP BY 1, 2
-        )
-        SELECT m.event_type, m.bucket_start, m.zero_count, m.n,
-            {walk_case.format(q=0.5, g=g, tag=50)},
-            {walk_case.format(q=0.95, g=g, tag=95)}
-        FROM meta m
-        LEFT JOIN q50 USING (event_type, bucket_start)
-        LEFT JOIN q95 USING (event_type, bucket_start)
-    """
-
-
-def _pack_sequences_oracle() -> str:
-    return "WITH RECURSIVE " + _pack_cte_sql(
-        "documents", PACK_SEED, PACK_SHARDS, PACK_BUDGET
     )
 
-# --------------------------------------------------------------------------
-# cross-tier stitching / tier governance (operators/stitch.py) + late-data
-# compaction (operators/compression.py merge_late_chunks)
-# --------------------------------------------------------------------------
 
 #: fixed stitch window over the events table (2024-01-01..30): minute
 #: fringes, hour edges, 23 interior whole days
 STITCH_T0 = "2024-01-03 07:23:00"
 STITCH_T1 = "2024-01-27 18:41:00"
 
-HIST_FINE_EDGES = [5.0, 10.0, 25.0, 50.0, 100.0, 250.0]
-HIST_COARSE_EDGES = [10.0, 50.0, 250.0]
+
+def _tier_stitch_oracle() -> str:
+    """DuckDB replay: the same driver-side covering plan (cover_range is
+    pure timestamp arithmetic, so both engines see identical literal
+    segments), aggregate from raw, provenance = distinct active buckets
+    per segment tier."""
+    from mq_to_db_spark.operators.stitch import cover_range
+
+    unit = {"1m": "minute", "1h": "hour", "1d": "day"}
+    seg_sql = "\n                UNION ALL ".join(
+        f"SELECT event_type AS role, '{t}' AS tier, "
+        f"date_trunc('{unit[t]}', ts) AS b FROM events "
+        f"WHERE ts >= TIMESTAMP '{lo}' AND ts < TIMESTAMP '{hi}'"
+        for t, lo, hi in cover_range(STITCH_T0, STITCH_T1)
+    )
+    return f"""
+        WITH seg AS (
+            {seg_sql}
+        ),
+        prov AS (
+            SELECT role,
+                   CAST(count(DISTINCT CASE WHEN tier = '1m' THEN b END) AS BIGINT) AS n_1m,
+                   CAST(count(DISTINCT CASE WHEN tier = '1h' THEN b END) AS BIGINT) AS n_1h,
+                   CAST(count(DISTINCT CASE WHEN tier = '1d' THEN b END) AS BIGINT) AS n_1d
+            FROM seg GROUP BY 1
+        ),
+        agg AS (
+            SELECT event_type AS role,
+                   CAST(count(*) AS BIGINT) AS n_turns,
+                   CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS text_len_sum,
+                   CAST(min(coalesce(length(props), 0)) AS BIGINT) AS text_len_min,
+                   CAST(max(coalesce(length(props), 0)) AS BIGINT) AS text_len_max
+            FROM events
+            WHERE ts >= TIMESTAMP '{STITCH_T0}' AND ts < TIMESTAMP '{STITCH_T1}'
+            GROUP BY 1
+        )
+        SELECT a.role, a.n_turns, a.text_len_sum, a.text_len_min, a.text_len_max,
+               p.n_1m + p.n_1h + p.n_1d AS n_partials, p.n_1m, p.n_1h, p.n_1d
+        FROM agg a JOIN prov p USING (role)
+    """
 
 
+@contract(_tier_stitch_oracle)
 def q_tier_stitch(spark, sf_dir):
     """Cross-tier range query (operators/stitch.py stitch_range): an
     arbitrary [t0, t1) aggregate answered from the 1m/1h/1d tier tables
@@ -2067,94 +1422,6 @@ def q_tier_stitch(spark, sf_dir):
     )
 
 
-def q_tier_audit(spark, sf_dir):
-    """Tier-consistency audit (operators/stitch.py audit_tiers): stored
-    1d tier vs the exact cascade of the 1h tier, full-outer diff on
-    (bucket, series).  The stored tier is built with a deterministic
-    refresh hole (error-role turns on odd days with minute < 20 dropped)
-    plus one fabricated stale bucket, so all three violation classes
-    appear; the oracle reconstructs both sides from raw."""
-    from datetime import datetime
-
-    from mq_to_db_spark.operators.rollup import rollup_from_raw
-    from mq_to_db_spark.operators.stitch import audit_tiers
-
-    # persist tr: finer and stored are two aggregations of the same
-    # adapter (its row_number window is a full shuffle per evaluation)
-    tr = _events_as_transcripts(spark, sf_dir).persist()
-    finer = rollup_from_raw(tr, "1h", ["role"])
-    hole = (
-        (F.col("role") == "error")
-        & (F.dayofmonth("ts") % 2 == 1)
-        & (F.minute("ts") < 20)
-    )
-    stored = rollup_from_raw(tr.filter(~hole), "1d", ["role"]).select(
-        "bucket_start", "role", "n_turns", "text_len_sum"
-    )
-    ghost = spark.createDataFrame(
-        [(datetime(2030, 1, 1), "ghost", 5, 1000)],
-        "bucket_start timestamp, role string, n_turns bigint, text_len_sum bigint",
-    )
-    return audit_tiers(
-        finer,
-        stored.unionByName(ghost),
-        "1d",
-        keys=["role"],
-        check_cols=("n_turns", "text_len_sum"),
-    )
-
-
-def q_hist_rebin_1d(spark, sf_dir):
-    """Long-retention histogram rebinning (operators/stitch.py
-    rebin_histogram): the fine recording-rule histogram collapsed to a
-    nested subset of its edges — exact because every coarse bucket is a
-    union of fine ones.  The oracle bins raw values directly at the
-    coarse edges: equality proves the rebin re-agg is lossless."""
-    from mq_to_db_spark.operators.rollup import fixed_bucket_histogram
-    from mq_to_db_spark.operators.stitch import rebin_histogram
-
-    fine = fixed_bucket_histogram(
-        _events(spark, sf_dir), "value", HIST_FINE_EDGES, "1d", ["event_type"]
-    )
-    return rebin_histogram(
-        fine, HIST_FINE_EDGES, HIST_COARSE_EDGES, keys=["event_type"]
-    )
-
-
-def q_compact_late(spark, sf_dir):
-    """Late-data compaction (operators/compression.py merge_late_chunks):
-    every 5th turn arrives late, the archive is compacted by decoding +
-    re-encoding ONLY the touched (conv_id, chunk) blobs, then the whole
-    archive is decoded and re-aggregated.  The oracle aggregates the full
-    raw table — equality proves the compaction is lossless end-to-end
-    (counts, float values, text bytes, timestamps)."""
-    from mq_to_db_spark.operators.compression import (
-        decode_chunks,
-        encode_chunks,
-        merge_late_chunks,
-    )
-
-    # persist tr: base and late are two filter branches of the same
-    # adapter (whose row_number window is a full shuffle per evaluation)
-    tr = _events_as_transcripts(spark, sf_dir).persist()
-    base = tr.filter(F.col("turn_idx") % 5 != 0)
-    late = tr.filter(F.col("turn_idx") % 5 == 0)
-    # cache = the stored archive table (in production the semi/anti split
-    # reads a materialized chunk table; without it Spark re-runs the whole
-    # encode mapInPandas once per branch — measured 2x on this query)
-    chunks = encode_chunks(base, value_col="value").cache()
-    merged = merge_late_chunks(chunks, late, value_col="value")
-    return decode_chunks(merged).groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.round(
-            F.sum(F.floor(F.col("value") * 1e6).cast("long")) / F.lit(1e6), 6
-        ).alias("value_sum"),
-        F.sum(F.coalesce(F.length("text"), F.lit(0))).alias("text_len_sum"),
-        F.min("ts").alias("ts_min"),
-        F.max("ts").alias("ts_max"),
-    )
-
-
 # hybrid-read bounds: deliberately sub-minute (10.5 s / 55.25 s offsets)
 # so BOTH edge slivers must come from the compressed archive, and chosen
 # so both slivers contain events at sf0.01 (head minute has turns at
@@ -2163,6 +1430,58 @@ HYBRID_T0 = "2024-01-04 00:16:10.500000"
 HYBRID_T1 = "2024-01-23 23:46:55.250000"
 
 
+def _hybrid_read_oracle() -> str:
+    """DuckDB replay of the hybrid read: identical covering plan for the
+    minute-aligned interior (cover_range is pure timestamp arithmetic)
+    plus the two raw edge slivers, provenance = distinct active buckets
+    per segment tier (+ slivers with >=1 turn), aggregate from raw."""
+    from mq_to_db_spark.operators.stitch import _as_dt, _floor, cover_range
+    from mq_to_db_spark.plans.readpath import _ceil_minute
+
+    t0, t1 = _as_dt(HYBRID_T0), _as_dt(HYBRID_T1)
+    t0c, t1f = _ceil_minute(t0), _floor(t1, "1m")
+    unit = {"1m": "minute", "1h": "hour", "1d": "day"}
+    segs = [
+        (t, f"date_trunc('{unit[t]}', ts)", lo, hi)
+        for t, lo, hi in cover_range(t0c, t1f)
+    ]
+    segs.append(("raw", f"TIMESTAMP '{_floor(t0, '1m')}'", t0, t0c))
+    segs.append(("raw", f"TIMESTAMP '{_floor(t1, '1m')}'", t1f, t1))
+    seg_sql = "\n                UNION ALL ".join(
+        f"SELECT event_type AS role, '{t}' AS tier, {bexpr} AS b FROM events "
+        f"WHERE ts >= TIMESTAMP '{lo}' AND ts < TIMESTAMP '{hi}'"
+        for t, bexpr, lo, hi in segs
+    )
+    return f"""
+        WITH seg AS (
+            {seg_sql}
+        ),
+        prov AS (
+            SELECT role,
+                   CAST(count(DISTINCT CASE WHEN tier = '1m' THEN b END)
+                      + count(DISTINCT CASE WHEN tier = '1h' THEN b END)
+                      + count(DISTINCT CASE WHEN tier = '1d' THEN b END)
+                      + count(DISTINCT CASE WHEN tier = 'raw' THEN b END) AS BIGINT) AS n_partials,
+                   CAST(count(DISTINCT CASE WHEN tier = 'raw' THEN b END) AS BIGINT) AS n_raw
+            FROM seg GROUP BY 1
+        ),
+        agg AS (
+            SELECT event_type AS role,
+                   CAST(count(*) AS BIGINT) AS n_turns,
+                   CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS text_len_sum,
+                   CAST(min(coalesce(length(props), 0)) AS BIGINT) AS text_len_min,
+                   CAST(max(coalesce(length(props), 0)) AS BIGINT) AS text_len_max
+            FROM events
+            WHERE ts >= TIMESTAMP '{HYBRID_T0}' AND ts < TIMESTAMP '{HYBRID_T1}'
+            GROUP BY 1
+        )
+        SELECT a.role, a.n_turns, a.text_len_sum, a.text_len_min, a.text_len_max,
+               p.n_partials, p.n_raw
+        FROM agg a JOIN prov p USING (role)
+    """
+
+
+@contract(_hybrid_read_oracle)
 def q_hybrid_read(spark, sf_dir):
     """Hybrid tier+archive read (plans/readpath.py hybrid_read): an
     aggregate over MICROSECOND-precision bounds answered without ever
@@ -2212,6 +1531,30 @@ RANGE_EVAL_T1 = "2024-01-28 00:00:00"
 RANGE_EVAL_STEP = 6 * 3600  # 6h grid → coarsest dividing tier is 1h
 
 
+# DuckDB replay of the 6h query_range: raw rows gridded by epoch
+# arithmetic anchored at t0 (identical cell rule), n_src_buckets =
+# distinct active 1h tier buckets per (cell, role)
+@contract(f"""
+        WITH g AS (
+            SELECT event_type AS role,
+                   TIMESTAMP '{RANGE_EVAL_T0}'
+                     + INTERVAL 1 SECOND
+                       * (CAST(floor(epoch(ts - TIMESTAMP '{RANGE_EVAL_T0}') / {RANGE_EVAL_STEP})
+                               AS BIGINT) * {RANGE_EVAL_STEP}) AS grid_ts,
+                   date_trunc('hour', ts) AS src_bucket,
+                   coalesce(length(props), 0) AS tl
+            FROM events
+            WHERE ts >= TIMESTAMP '{RANGE_EVAL_T0}'
+              AND ts < TIMESTAMP '{RANGE_EVAL_T1}'
+        )
+        SELECT grid_ts, role,
+               CAST(count(*) AS BIGINT) AS n_turns,
+               CAST(sum(tl) AS BIGINT) AS text_len_sum,
+               CAST(min(tl) AS BIGINT) AS text_len_min,
+               CAST(max(tl) AS BIGINT) AS text_len_max,
+               CAST(count(DISTINCT src_bucket) AS BIGINT) AS n_src_buckets
+        FROM g GROUP BY 1, 2
+    """)
 def q_range_eval_6h(spark, sf_dir):
     """PromQL query_range served from tiers (plans/readpath.py
     range_eval): one merged point per role per 6-hour grid cell, read
@@ -2237,191 +1580,1822 @@ def q_range_eval_6h(spark, sf_dir):
     )
 
 
-def q_vector_ratio_1h(spark, sf_dir):
-    """PromQL vector matching, arithmetic path (operators/vectormatch.py
-    vector_binop): per-(hour, event_type) counts divided by the
-    per-hour total via many-to-one ``group_left`` matching on the
-    bucket — the dashboard's ``rate(x{label}) / rate(x)`` share panel.
-    One equi-join between two tier-sized recording rules."""
-    from mq_to_db_spark.operators.vectormatch import vector_binop
+@contract("""
+            WITH truth AS (
+                SELECT event_type AS role, date_trunc('day', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS t_n,
+                       CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS t_s
+                FROM events GROUP BY 1, 2
+            ),
+            stored AS (
+                SELECT event_type AS role, date_trunc('day', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS s_n,
+                       CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS s_s
+                FROM events
+                WHERE NOT (event_type = 'error'
+                           AND (day(ts) % 2) = 1 AND minute(ts) < 20)
+                GROUP BY 1, 2
+                UNION ALL
+                SELECT 'ghost', TIMESTAMP '2030-01-01',
+                       CAST(5 AS BIGINT), CAST(1000 AS BIGINT)
+            ),
+            j AS (
+                SELECT coalesce(t.role, s.role) AS role,
+                       coalesce(t.bucket_start, s.bucket_start) AS bucket_start,
+                       t_n, t_s, s_n, s_s,
+                       t.role IS NOT NULL AS in_t, s.role IS NOT NULL AS in_s
+                FROM truth t FULL OUTER JOIN stored s
+                  ON t.role = s.role AND t.bucket_start = s.bucket_start
+            )
+            SELECT bucket_start, role,
+                   CASE WHEN NOT in_s THEN 'missing_in_stored'
+                        WHEN NOT in_t THEN 'unexpected_in_stored'
+                        ELSE 'mismatch' END AS status,
+                   coalesce(s_n, 0) - coalesce(t_n, 0) AS d_n_turns,
+                   coalesce(s_s, 0) - coalesce(t_s, 0) AS d_text_len_sum
+            FROM j
+            WHERE NOT in_s OR NOT in_t
+               OR coalesce(s_n, 0) <> coalesce(t_n, 0)
+               OR coalesce(s_s, 0) <> coalesce(t_s, 0)
+        """)
+def q_tier_audit(spark, sf_dir):
+    """Tier-consistency audit (operators/stitch.py audit_tiers): stored
+    1d tier vs the exact cascade of the 1h tier, full-outer diff on
+    (bucket, series).  The stored tier is built with a deterministic
+    refresh hole (error-role turns on odd days with minute < 20 dropped)
+    plus one fabricated stale bucket, so all three violation classes
+    appear; the oracle reconstructs both sides from raw."""
+    from datetime import datetime
 
-    ev = _events(spark, sf_dir)
-    per_type = ev.groupBy(
-        F.date_trunc("hour", "ts").alias("bucket_start"), "event_type"
-    ).agg(F.count(F.lit(1)).cast("double").alias("value"))
-    totals = ev.groupBy(F.date_trunc("hour", "ts").alias("bucket_start")).agg(
-        F.count(F.lit(1)).cast("double").alias("value")
+    from mq_to_db_spark.operators.rollup import rollup_from_raw
+    from mq_to_db_spark.operators.stitch import audit_tiers
+
+    # persist tr: finer and stored are two aggregations of the same
+    # adapter (its row_number window is a full shuffle per evaluation)
+    tr = _events_as_transcripts(spark, sf_dir).persist()
+    finer = rollup_from_raw(tr, "1h", ["role"])
+    hole = (
+        (F.col("role") == "error")
+        & (F.dayofmonth("ts") % 2 == 1)
+        & (F.minute("ts") < 20)
     )
-    return vector_binop(
-        per_type, totals, "/", on=["bucket_start"], group_left=True,
-        out_col="share",
-    ).withColumn("share", F.round("share", 6))
+    stored = rollup_from_raw(tr.filter(~hole), "1d", ["role"]).select(
+        "bucket_start", "role", "n_turns", "text_len_sum"
+    )
+    ghost = spark.createDataFrame(
+        [(datetime(2030, 1, 1), "ghost", 5, 1000)],
+        "bucket_start timestamp, role string, n_turns bigint, text_len_sum bigint",
+    )
+    return audit_tiers(
+        finer,
+        stored.unionByName(ghost),
+        "1d",
+        keys=["role"],
+        check_cols=("n_turns", "text_len_sum"),
+    )
 
 
-def q_vector_setops_1h(spark, sf_dir):
-    """PromQL vector matching, set-algebra path (vector_and /
-    vector_unless): hourly purchase series split into buckets that also
-    saw errors (``and``) vs error-free buckets (``unless``) — LEFT
-    SEMI / LEFT ANTI on the bucket label, values pass through
-    untouched; the two segments partition the left side exactly."""
-    from mq_to_db_spark.operators.vectormatch import vector_and, vector_unless
+HIST_FINE_EDGES = [5.0, 10.0, 25.0, 50.0, 100.0, 250.0]
+HIST_COARSE_EDGES = [10.0, 50.0, 250.0]
+_HIST_COARSE_CASES = " ".join(f"WHEN value <= {e} THEN {e}" for e in HIST_COARSE_EDGES)
 
-    ev = _events(spark, sf_dir)
-    def series(t):
-        return ev.filter(F.col("event_type") == t).groupBy(
-            F.date_trunc("hour", "ts").alias("bucket_start")
-        ).agg(F.count(F.lit(1)).cast("double").alias("value"))
 
-    p, e = series("purchase"), series("error")
-    return (
-        vector_and(p, e).withColumn("segment", F.lit("with_errors"))
-        .unionByName(
-            vector_unless(p, e).withColumn("segment", F.lit("no_errors"))
+@contract(f"""
+        SELECT date_trunc('day', ts) AS bucket_start, event_type,
+               CASE {_HIST_COARSE_CASES} ELSE CAST('inf' AS DOUBLE) END AS le,
+               CAST(count(*) AS BIGINT) AS n
+        FROM events GROUP BY 1, 2, 3
+    """)
+def q_hist_rebin_1d(spark, sf_dir):
+    """Long-retention histogram rebinning (operators/stitch.py
+    rebin_histogram): the fine recording-rule histogram collapsed to a
+    nested subset of its edges — exact because every coarse bucket is a
+    union of fine ones.  The oracle bins raw values directly at the
+    coarse edges: equality proves the rebin re-agg is lossless."""
+    from mq_to_db_spark.operators.rollup import fixed_bucket_histogram
+    from mq_to_db_spark.operators.stitch import rebin_histogram
+
+    fine = fixed_bucket_histogram(
+        _events(spark, sf_dir), "value", HIST_FINE_EDGES, "1d", ["event_type"]
+    )
+    return rebin_histogram(
+        fine, HIST_FINE_EDGES, HIST_COARSE_EDGES, keys=["event_type"]
+    )
+
+
+@contract("""
+            SELECT CAST(user_id AS VARCHAR) AS conv_id,
+                   CAST(count(*) AS BIGINT) AS n_points,
+                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
+                       AS value_sum,
+                   CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS text_len_sum,
+                   min(ts) AS ts_min,
+                   max(ts) AS ts_max
+            FROM events GROUP BY 1
+        """)
+def q_compact_late(spark, sf_dir):
+    """Late-data compaction (operators/compression.py merge_late_chunks):
+    every 5th turn arrives late, the archive is compacted by decoding +
+    re-encoding ONLY the touched (conv_id, chunk) blobs, then the whole
+    archive is decoded and re-aggregated.  The oracle aggregates the full
+    raw table — equality proves the compaction is lossless end-to-end
+    (counts, float values, text bytes, timestamps)."""
+    from mq_to_db_spark.operators.compression import (
+        decode_chunks,
+        encode_chunks,
+        merge_late_chunks,
+    )
+
+    # persist tr: base and late are two filter branches of the same
+    # adapter (whose row_number window is a full shuffle per evaluation)
+    tr = _events_as_transcripts(spark, sf_dir).persist()
+    base = tr.filter(F.col("turn_idx") % 5 != 0)
+    late = tr.filter(F.col("turn_idx") % 5 == 0)
+    # cache = the stored archive table (in production the semi/anti split
+    # reads a materialized chunk table; without it Spark re-runs the whole
+    # encode mapInPandas once per branch — measured 2x on this query)
+    chunks = encode_chunks(base, value_col="value").cache()
+    merged = merge_late_chunks(chunks, late, value_col="value")
+    return decode_chunks(merged).groupBy("conv_id").agg(
+        F.count(F.lit(1)).alias("n_points"),
+        F.round(
+            F.sum(F.floor(F.col("value") * 1e6).cast("long")) / F.lit(1e6), 6
+        ).alias("value_sum"),
+        F.sum(F.coalesce(F.length("text"), F.lit(0))).alias("text_len_sum"),
+        F.min("ts").alias("ts_min"),
+        F.max("ts").alias("ts_max"),
+    )
+
+
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
+                FROM events
+            ),
+            p AS (
+                SELECT event_type, ts, event_id,
+                       sum(v - 60000000) OVER w AS p_hi,
+                       sum(40000000 - v) OVER w AS p_lo
+                FROM s
+                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
+                             ROWS UNBOUNDED PRECEDING)
+            ),
+            c AS (
+                SELECT event_type, ts,
+                       p_hi - least(0, min(p_hi) OVER w) AS c_hi,
+                       p_lo - least(0, min(p_lo) OVER w) AS c_lo
+                FROM p
+                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
+                             ROWS UNBOUNDED PRECEDING)
+            )
+            SELECT event_type, date_trunc('day', ts) AS day_start,
+                   CAST(count(*) FILTER (
+                       WHERE c_hi > 500000000 OR c_lo > 500000000
+                   ) AS BIGINT) AS n_alarms,
+                   CAST(max(c_hi) AS BIGINT) AS max_cusum_hi,
+                   CAST(max(c_lo) AS BIGINT) AS max_cusum_lo
+            FROM c GROUP BY 1, 2
+        """)
+def q_cusum_alarms_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sided tabular CUSUM drift detection per (event_type, day)
+    (operators/changepoint.py cusum): the clamp recurrence replayed via
+    the exact prefix-sum / running-min identity — all-BIGINT micro-unit
+    arithmetic (target 50, slack 10, decision threshold 500 in value
+    units), so the per-day alarm counts and statistic maxima hash-match
+    a pure window-function DuckDB replay bit-for-bit."""
+    from mq_to_db_spark.operators.changepoint import cusum
+
+    ev = _events(spark, sf_dir).select(
+        "event_type", "ts", "event_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    c = cusum(
+        ev, ["event_type"], ts_col="ts", value_col="v",
+        target=50_000_000, slack=10_000_000, h=500_000_000,
+        tiebreak=("event_id",),
+    )
+    return c.groupBy(
+        "event_type", F.date_trunc("day", "ts").alias("day_start")
+    ).agg(
+        F.count_if(F.col("alarm")).alias("n_alarms"),
+        F.max("cusum_hi").alias("max_cusum_hi"),
+        F.max("cusum_lo").alias("max_cusum_lo"),
+    )
+
+
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
+                FROM events
+            ),
+            f AS (
+                SELECT *,
+                       row_number() OVER (
+                           PARTITION BY event_type ORDER BY ts, event_id)
+                     - row_number() OVER (
+                           PARTITION BY event_type, (v > 50000000)
+                           ORDER BY ts, event_id) AS island
+                FROM s
+            )
+            SELECT event_type, min(ts) AS start_ts, max(ts) AS end_ts,
+                   CAST(count(*) AS BIGINT) AS n_samples,
+                   max(v) AS peak,
+                   epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us
+            FROM f WHERE v > 50000000
+            GROUP BY event_type, island
+            HAVING epoch_us(max(ts)) - epoch_us(min(ts)) >= 1800000000
+        """)
+def q_alert_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prometheus ``expr > x for: d`` in batch
+    (operators/changepoint.py threshold_episodes): gaps-and-islands
+    runs of consecutive samples with value > 50, kept only when the run
+    spanned ≥ 30 minutes — one exchange, integer compares, exact
+    epoch-µs durations."""
+    from mq_to_db_spark.operators.changepoint import threshold_episodes
+
+    ev = _events(spark, sf_dir).select(
+        "event_type", "ts", "event_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    return threshold_episodes(
+        ev, ["event_type"], ts_col="ts", value_col="v",
+        threshold=50_000_000, min_duration_us=1_800_000_000,
+        tiebreak=("event_id",),
+    )
+
+
+@contract("""
+            WITH b AS (
+                SELECT user_id, date_trunc('day', ts) AS bk FROM events
+            ),
+            ext AS (
+                SELECT user_id, min(bk) AS fb, max(bk) AS lb
+                FROM b GROUP BY 1
+            ),
+            active AS (
+                SELECT bk AS bucket_start,
+                       CAST(count(DISTINCT user_id) AS BIGINT) AS n_active
+                FROM b GROUP BY 1
+            ),
+            born AS (
+                SELECT fb AS bucket_start, CAST(count(*) AS BIGINT) AS nb
+                FROM ext GROUP BY 1
+            ),
+            died AS (
+                SELECT lb AS bucket_start, CAST(count(*) AS BIGINT) AS nd
+                FROM ext GROUP BY 1
+            )
+            SELECT a.bucket_start, a.n_active,
+                   COALESCE(nb, CAST(0 AS BIGINT)) AS n_born,
+                   COALESCE(nd, CAST(0 AS BIGINT)) AS n_died
+            FROM active a
+            LEFT JOIN born USING (bucket_start)
+            LEFT JOIN died USING (bucket_start)
+        """)
+def q_series_churn_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Series-cardinality churn per day (operators/lifecycle.py
+    series_churn): distinct users active / born (first-ever sample) /
+    died (last-ever sample) per bucket — the head-series-churn
+    governance view, exact BIGINT counts; the per-series extents shuffle
+    once on the series key, the bucket counts shuffle only #series
+    rows."""
+    from mq_to_db_spark.operators.lifecycle import series_churn
+
+    return series_churn(
+        _events(spark, sf_dir), ["user_id"], ts_col="ts", tier="1d"
+    )
+
+
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v,
+                       date_trunc('hour', ts) AS bk
+                FROM events
+            ),
+            r AS (
+                SELECT *,
+                       row_number() OVER (
+                           PARTITION BY event_type, bk
+                           ORDER BY v DESC, ts DESC, event_id DESC
+                       ) AS rn,
+                       CAST(count(*) OVER (
+                           PARTITION BY event_type, bk
+                       ) AS BIGINT) AS n_samples
+                FROM s
+            )
+            SELECT event_type, bk AS bucket_start, v AS exemplar_value,
+                   ts AS exemplar_ts, event_id AS exemplar_id, n_samples
+            FROM r WHERE rn = 1
+        """)
+def q_exemplars_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OpenMetrics exemplars per (event_type, hour)
+    (operators/lifecycle.py exemplars): the max-value sample with its
+    coordinates, deterministic under ties via the (value, ts, id)
+    struct-max total order — ONE groupBy, no window sort; the oracle
+    replays the same order with a row_number pick."""
+    from mq_to_db_spark.operators.lifecycle import exemplars
+
+    ev = _events(spark, sf_dir).select(
+        "event_type", "ts", "event_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    return exemplars(
+        ev, ["event_type"], ts_col="ts", value_col="v",
+        id_col="event_id", tier="1h",
+    )
+
+
+@contract("""
+            WITH hourly AS (
+                SELECT date_trunc('hour', ts) AS b,
+                       CAST(count(*) AS BIGINT) AS v
+                FROM events GROUP BY 1
+            ),
+            ext AS (SELECT min(b) AS lo, max(b) AS hi FROM hourly),
+            grid AS (
+                SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS g
+                FROM ext
+            ),
+            filled AS (
+                SELECT g, coalesce(v, CAST(0 AS BIGINT)) AS v
+                FROM grid LEFT JOIN hourly ON b = g
+            ),
+            pairs AS (
+                SELECT date_trunc('day', g) AS group_start,
+                       lag(v) OVER (
+                           PARTITION BY date_trunc('day', g) ORDER BY g
+                       ) AS a,
+                       v AS b
+                FROM filled
+            ),
+            mom AS (
+                SELECT group_start, CAST(count(*) AS BIGINT) AS n,
+                       sum(a) AS sa, sum(b) AS sb, sum(a * b) AS sab,
+                       sum(a * a) AS saa, sum(b * b) AS sbb
+                FROM pairs WHERE a IS NOT NULL GROUP BY 1
+            )
+            SELECT group_start, n AS n_pairs,
+                   round((n::DOUBLE * sab::DOUBLE - sa::DOUBLE * sb::DOUBLE)
+                         / nullif(sqrt(n::DOUBLE * saa::DOUBLE - sa::DOUBLE * sa::DOUBLE)
+                                  * sqrt(n::DOUBLE * sbb::DOUBLE - sb::DOUBLE * sb::DOUBLE),
+                                  0.0),
+                         6) AS autocorr
+            FROM mom
+        """)
+def q_autocorr_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lag-1 autocorrelation of the zero-filled hourly event-count
+    series, per day (operators/correlate.py autocorr): the
+    persistence/seasonality diagnostic — pairs lag within the day via a
+    day-partitioned window (never keyless), then the exact-moment
+    Pearson (six BIGINT sums, one fixed-order double formula)."""
+    from mq_to_db_spark.operators.correlate import autocorr
+    from mq_to_db_spark.operators.rollup import bucket_col
+    from mq_to_db_spark.operators.timegrid import step_grid
+
+    bucketed = (
+        _events(spark, sf_dir)
+        .groupBy(bucket_col("1h", "ts").alias("bucket_start"))
+        .agg(F.count(F.lit(1)).alias("v"))
+    )
+    series = step_grid(bucketed, "1 hour", ts_col="bucket_start").join(
+        bucketed, "bucket_start", "left"
+    ).select("bucket_start", F.coalesce("v", F.lit(0)).alias("v"))
+    out = autocorr(series, lag=1, group_unit="day", v_col="v")
+    return out.select(
+        "group_start", "n_pairs", F.round("autocorr", 6).alias("autocorr")
+    )
+
+
+@contract("""
+            WITH tok AS (
+                SELECT doc_id,
+                       unnest(string_split_regex(lower(text), '\\s+')) AS t
+                FROM documents
+            ),
+            counts AS (
+                SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c
+                FROM tok WHERE t <> '' GROUP BY 1, 2
+            )
+            SELECT doc_id,
+                   CAST(sum(c) AS BIGINT) AS n_tokens,
+                   CAST(count(*) AS BIGINT) AS n_types,
+                   CAST(count(*) FILTER (c = 1) AS BIGINT) AS n_hapax,
+                   round(CAST(count(*) AS DOUBLE)
+                         / CAST(sum(c) AS DOUBLE), 6) AS ttr,
+                   round(CAST(count(*) FILTER (c = 1) AS DOUBLE)
+                         / CAST(count(*) AS DOUBLE), 6) AS hapax_ratio,
+                   round(CAST(max(c) AS DOUBLE)
+                         / CAST(sum(c) AS DOUBLE), 6) AS top_token_ratio
+            FROM counts GROUP BY 1
+        """)
+def q_lexical_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary-richness curation signals per document
+    (functions/text.py lexical_stats): token/type/hapax counts plus
+    TTR / hapax ratio / top-token share — every number a BIGINT count
+    or one division of two exact BIGINTs, so the DuckDB replay is
+    hash-exact; both exchanges carry map-side-combined
+    distinct-count rows, never the raw token stream."""
+    from mq_to_db_spark.functions.text import lexical_stats
+
+    return lexical_stats(_docs(spark, sf_dir), text_col="text",
+                         id_col="doc_id")
+
+
+@contract("""
+            WITH c AS (
+                SELECT event_type, ts,
+                       CAST(count(*) OVER (
+                           PARTITION BY event_type ORDER BY epoch_us(ts)
+                           RANGE BETWEEN 7199999999 PRECEDING AND CURRENT ROW
+                       ) AS BIGINT) AS win_count
+                FROM events
+            )
+            SELECT event_type, date_trunc('day', ts) AS day_start,
+                   CAST(count(*) FILTER (WHERE win_count > 10) AS BIGINT)
+                       AS n_violations,
+                   max(win_count) AS max_win_count
+            FROM c GROUP BY 1, 2
+        """)
+def q_quota_violations_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window rate-limit audit per (event_type, day)
+    (operators/quota.py sliding_quota): trailing-2h sample count via a
+    true RANGE frame on epoch-µs (time-based, not row-based — the rate
+    limiter contract), violations where count > 10 — BIGINT end-to-end,
+    identical frame replayed by DuckDB."""
+    from mq_to_db_spark.operators.quota import sliding_quota
+
+    q = sliding_quota(
+        _events(spark, sf_dir), ["event_type"], ts_col="ts",
+        window_us=7_200_000_000, limit=10,
+    )
+    return q.groupBy(
+        "event_type", F.date_trunc("day", "ts").alias("day_start")
+    ).agg(
+        F.count_if(F.col("violation")).alias("n_violations"),
+        F.max("win_count").alias("max_win_count"),
+    )
+
+
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v,
+                       date_trunc('day', ts) AS bk
+                FROM events
+            ),
+            d AS (
+                SELECT event_type, bk, v,
+                       max(v) OVER (
+                           PARTITION BY event_type, bk
+                           ORDER BY ts, event_id
+                           ROWS UNBOUNDED PRECEDING
+                       ) - v AS dd
+                FROM s
+            )
+            SELECT event_type, bk AS bucket_start,
+                   max(dd) AS max_drawdown, max(v) AS peak,
+                   CAST(count(*) AS BIGINT) AS n_samples
+            FROM d GROUP BY 1, 2
+        """)
+def q_max_drawdown_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Max drawdown per (event_type, day) (operators/quota.py
+    max_drawdown): largest drop from the running prefix max to a later
+    sample — BIGINT micro-units, one exchange (the bucket agg reuses
+    the window's partitioning)."""
+    from mq_to_db_spark.operators.quota import max_drawdown
+
+    ev = _events(spark, sf_dir).select(
+        "event_type", "ts", "event_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    return max_drawdown(
+        ev, ["event_type"], ts_col="ts", value_col="v", tier="1d",
+        tiebreak=("event_id",),
+    )
+
+
+@contract(
+    """
+            WITH pb AS (
+                SELECT event_type, date_trunc('hour', ts) AS b,
+                       max(ts) AS last_ts,
+                       CAST(count(*) AS BIGINT) AS n_samples
+                FROM events GROUP BY 1, 2
+            ),
+            ext AS (SELECT min(b) AS lo, max(b) AS hi FROM pb),
+            grid AS (
+                SELECT k.event_type,
+                       unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS g
+                FROM (SELECT DISTINCT event_type FROM pb) k CROSS JOIN ext
+            ),
+            j AS (
+                SELECT grid.event_type, grid.g, pb.last_ts, pb.n_samples
+                FROM grid LEFT JOIN pb
+                  ON pb.event_type = grid.event_type AND pb.b = grid.g
+            )
+            SELECT event_type, g AS bucket_start,
+                   COALESCE(n_samples, CAST(0 AS BIGINT)) AS n_samples,
+                   (n_samples IS NULL) AS absent,
+                   epoch_us(g + INTERVAL 1 HOUR)
+                     - epoch_us(last_value(last_ts IGNORE NULLS) OVER (
+                           PARTITION BY event_type ORDER BY g
+                           ROWS UNBOUNDED PRECEDING
+                       )) AS staleness_us
+            FROM j
+        """,
+    # intervals.py:staleness → timegrid.step_grid(keys, global_extent): series ×
+    # broadcast(1-row global extent) — same grid materialization as
+    # gapfill_1h, output = |series| · |grid|
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_staleness_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prometheus staleness / absent_over_time per (event_type, hour)
+    over the DENSE grid (operators/intervals.py staleness): freshest-
+    sample age as of each bucket end, exact BIGINT µs, silent buckets
+    included — per-series LOCF window over tier rows, never keyless."""
+    from mq_to_db_spark.operators.intervals import staleness
+
+    return staleness(
+        _events(spark, sf_dir), ["event_type"], ts_col="ts", tier="1h"
+    )
+
+
+@contract(
+    """
+            WITH hourly AS (
+                SELECT event_type, date_trunc('hour', ts) AS b,
+                       CAST(count(*) AS BIGINT) AS v
+                FROM events GROUP BY 1, 2
+            ),
+            ext AS (SELECT min(b) AS lo, max(b) AS hi FROM hourly),
+            grid AS (
+                SELECT k.event_type,
+                       unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS g
+                FROM (SELECT DISTINCT event_type FROM hourly) k
+                CROSS JOIN ext
+            ),
+            filled AS (
+                SELECT grid.event_type, grid.g AS bucket_start,
+                       COALESCE(hourly.v, CAST(0 AS BIGINT)) AS v
+                FROM grid LEFT JOIN hourly
+                  ON hourly.event_type = grid.event_type AND hourly.b = grid.g
+            ),
+            lagged AS (
+                SELECT *, lag(v, 168) OVER (
+                    PARTITION BY event_type ORDER BY bucket_start
+                ) AS v_prev
+                FROM filled
+            )
+            SELECT event_type, bucket_start, v, v_prev,
+                   v - v_prev AS delta,
+                   round(CAST(v AS DOUBLE)
+                         / nullif(CAST(v_prev AS DOUBLE), 0.0), 6) AS ratio
+            FROM lagged
+        """,
+    # q_wow_delta_1h below → timegrid.step_grid(keys, global_extent): the
+    # offset comparison requires the ZERO-FILLED per-key grid (a row
+    # lag is only a time lag on a dense series), so it inherits the
+    # same series × broadcast(1-row extent) grid build
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_wow_delta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Week-over-week offset comparison per (event_type, hour)
+    (operators/derivatives.py offset_delta): lag-168 over the
+    ZERO-FILLED per-key hourly grid — exact integer deltas, one
+    double-division ratio; one key-partitioned exchange."""
+    from mq_to_db_spark.operators.derivatives import offset_delta
+    from mq_to_db_spark.operators.rollup import bucket_col
+    from mq_to_db_spark.operators.timegrid import step_grid
+
+    bucketed = (
+        _events(spark, sf_dir)
+        .groupBy(
+            "event_type", bucket_col("1h", "ts").alias("bucket_start")
         )
+        .agg(F.count(F.lit(1)).alias("v"))
+    )
+    series = step_grid(
+        bucketed, "1 hour", ["event_type"], "bucket_start", global_extent=True
+    ).join(
+        bucketed, ["event_type", "bucket_start"], "left"
+    ).select(
+        "event_type", "bucket_start", F.coalesce("v", F.lit(0)).alias("v")
+    )
+    return offset_delta(series, ["event_type"], offset_buckets=168)
+
+
+@contract("""
+            WITH tier AS (
+                SELECT date_trunc('day', ts) AS day_start,
+                       CAST(user_id AS VARCHAR) AS user_key,
+                       CAST(count(*) AS BIGINT) AS n_events
+                FROM events GROUP BY 1, 2
+            ),
+            ranked AS (
+                SELECT *, CAST(row_number() OVER (
+                    PARTITION BY day_start
+                    ORDER BY n_events DESC, user_key ASC
+                ) AS INT) AS rank
+                FROM tier
+            )
+            SELECT day_start, user_key, n_events, rank
+            FROM ranked WHERE rank <= 3
+            UNION ALL
+            SELECT day_start, '__others__' AS user_key,
+                   CAST(sum(n_events) AS BIGINT) AS n_events,
+                   CAST(4 AS INT) AS rank
+            FROM ranked WHERE rank > 3 GROUP BY day_start
+        """)
+def q_topk_others_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grafana "top N + Others" per day (operators/topk.py
+    top_k_with_others): top-3 users by event count keep identity, the
+    rest collapse to one exact-sum __others__ row so every day still
+    totals — tier-sized window shuffle + one re-agg, deterministic
+    ties (count desc, key asc)."""
+    from mq_to_db_spark.operators.topk import top_k_with_others
+
+    tier = (
+        _events(spark, sf_dir)
+        .groupBy(
+            F.date_trunc("day", "ts").alias("day_start"),
+            F.col("user_id").cast("string").alias("user_key"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return top_k_with_others(
+        tier, ["day_start"], "user_key", "n_events", k=3
     )
 
 
+@contract("""
+            WITH tier AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_events
+                FROM events GROUP BY 1, 2
+            )
+            SELECT event_type, bucket_start, n_events,
+                   'events_total{event_type="'
+                     || replace(replace(event_type, '\\', '\\\\'), '"', '\\"')
+                     || '"} ' || CAST(n_events AS VARCHAR) || ' '
+                     || CAST(epoch_us(bucket_start) // 1000000 AS VARCHAR)
+                       AS exposition
+            FROM tier
+        """)
+def q_openmetrics_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OpenMetrics text exposition of the hourly count tier
+    (functions/serialize.py with_openmetrics): byte-stable
+    ``events_total{event_type="…"} v ts_s`` lines — pure JVM string
+    expressions, spec-escaped labels, whole-second timestamps; the
+    bridge that replays a rolled-up tier into any Prometheus-compatible
+    consumer.  Oracle rebuilds the exact bytes with SQL concat."""
+    from mq_to_db_spark.functions.serialize import with_openmetrics
 
-def q_counter_adjust(spark, sf_dir):
-    """Counter reset adjustment (operators/counters.py adjust_resets —
-    the Thanos/M3 pre-step long-range increase is defined against): a
-    per-(event_type, day) resetting counter is rebuilt into the true
-    monotonic cumulative series by folding every restart's lost progress
-    into a running offset.  Keyed path: lag + prefix sum over ONE window
-    partitioning (single exchange); integer counters → bit-exact."""
-    from mq_to_db_spark.operators.counters import adjust_resets
-
-    ev = _events(spark, sf_dir)
-    win = W.partitionBy("event_type", F.date_trunc("day", "ts")).orderBy(
-        "ts", "event_id"
+    tier = (
+        _events(spark, sf_dir)
+        .groupBy(
+            "event_type", F.date_trunc("hour", "ts").alias("bucket_start")
+        )
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    ctr = ev.select(
+    return with_openmetrics(
+        tier, "events_total", ["event_type"], "n_events"
+    ).select("event_type", "bucket_start", "n_events", "exposition")
+
+
+@contract("""
+            WITH lagged AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start, value,
+                       lag(value) OVER (
+                           PARTITION BY event_type ORDER BY ts, event_id
+                       ) AS pv
+                FROM events
+            )
+            SELECT event_type, bucket_start,
+                   CAST(count(*) FILTER (
+                       WHERE pv IS NOT NULL AND value <> pv
+                   ) AS BIGINT) AS n_changes
+            FROM lagged GROUP BY 1, 2
+        """)
+def q_changes_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PromQL changes() per (event_type, 1h) bucket
+    (operators/derivatives.py discrete_changes): count of samples whose
+    value differs from their series-predecessor — pure equality compare,
+    no arithmetic, so doubles replay exactly.  Same one-exchange
+    lag-then-bucket-agg shape as counter_increase."""
+    from mq_to_db_spark.operators.derivatives import discrete_changes
+
+    return discrete_changes(
+        _events(spark, sf_dir),
+        ["event_type"],
+        ts_col="ts",
+        value_col="value",
+        tier="1h",
+        tiebreak=("event_id",),
+    )
+
+
+@contract("""
+            WITH r AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start, value,
+                       row_number() OVER (
+                           PARTITION BY event_type, date_trunc('hour', ts)
+                           ORDER BY ts DESC, event_id DESC
+                       ) AS rn
+                FROM events
+            )
+            SELECT event_type, bucket_start,
+                   round(max(CASE WHEN rn = 1 THEN value END)
+                         - max(CASE WHEN rn = 2 THEN value END), 6) AS idelta
+            FROM r WHERE rn <= 2 GROUP BY 1, 2
+        """)
+def q_idelta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PromQL idelta() per (event_type, 1h): last sample minus
+    second-to-last within the bucket (operators/derivatives.py) — window
+    + agg on the same (keys, bucket) hash, one exchange; the result is a
+    single double subtraction, bit-identical cross-engine."""
+    from mq_to_db_spark.operators.derivatives import idelta
+
+    return idelta(
+        _events(spark, sf_dir),
+        ["event_type"],
+        ts_col="ts",
+        value_col="value",
+        tier="1h",
+        tiebreak=("event_id",),
+    ).select(
+        "event_type", "bucket_start", F.round("idelta", 6).alias("idelta")
+    )
+
+
+@contract("""
+            WITH mins AS (
+                SELECT event_type, date_trunc('minute', ts) AS mt,
+                       CAST(count(*) AS BIGINT) AS y
+                FROM events GROUP BY 1, 2
+            ),
+            sums AS (
+                SELECT event_type, date_trunc('day', mt) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n,
+                       CAST(sum(date_diff('minute', date_trunc('day', mt), mt))
+                            AS BIGINT) AS sx,
+                       CAST(sum(y) AS BIGINT) AS sy,
+                       CAST(sum(date_diff('minute', date_trunc('day', mt), mt) * y)
+                            AS BIGINT) AS sxy,
+                       CAST(sum(date_diff('minute', date_trunc('day', mt), mt)
+                                * date_diff('minute', date_trunc('day', mt), mt))
+                            AS BIGINT) AS sxx
+                FROM mins GROUP BY 1, 2
+            )
+            SELECT event_type, bucket_start, n AS n_samples,
+                   CASE WHEN n * sxx - sx * sx <> 0 THEN
+                       round(CAST(n * sxy - sx * sy AS DOUBLE)
+                             / CAST(n * sxx - sx * sx AS DOUBLE), 6)
+                   END AS slope_per_min,
+                   CASE WHEN n * sxx - sx * sx <> 0 THEN
+                       round((CAST(sy AS DOUBLE)
+                              - (CAST(n * sxy - sx * sy AS DOUBLE)
+                                 / CAST(n * sxx - sx * sx AS DOUBLE))
+                                * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)
+                             + (CAST(n * sxy - sx * sy AS DOUBLE)
+                                / CAST(n * sxx - sx * sx AS DOUBLE)) * 1500.0, 6)
+                   END AS predicted_1h_later
+            FROM sums
+        """)
+def q_deriv_predict_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PromQL deriv() + predict_linear() per (event_type, day) over the
+    per-minute event-count series (operators/derivatives.py): the
+    least-squares fit runs on five exact BIGINT sums (x = whole minutes
+    since midnight, y = minute count) with map-side partial aggregation —
+    one shuffle of five longs per group — and only the final
+    slope/intercept/extrapolation formula touches doubles, in a fixed
+    expression order the DuckDB oracle replays bit-for-bit."""
+    from mq_to_db_spark.operators.derivatives import predict_linear
+
+    mins = (
+        _events(spark, sf_dir)
+        .groupBy("event_type", F.date_trunc("minute", F.col("ts")).alias("mt"))
+        .agg(F.count(F.lit(1)).alias("y"))
+    )
+    fit = predict_linear(
+        mins,
+        ["event_type"],
+        ts_col="mt",
+        y_col="y",
+        tier="1d",
+        x_unit_seconds=60,
+        horizon_units=60,
+    )
+    return fit.select(
+        "event_type",
+        "bucket_start",
+        "n_samples",
+        F.round("slope", 6).alias("slope_per_min"),
+        F.round("predicted", 6).alias("predicted_1h_later"),
+    )
+
+
+@contract("""
+            WITH RECURSIVE tier AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_events
+                FROM events GROUP BY 1, 2
+            ),
+            ordered AS (
+                SELECT event_type, bucket_start, n_events,
+                       row_number() OVER (
+                           PARTITION BY event_type ORDER BY bucket_start
+                       ) AS rn
+                FROM tier
+            ),
+            rec AS (
+                SELECT event_type, bucket_start, n_events, rn,
+                       CAST(n_events AS DOUBLE) AS s,
+                       CAST(n_events AS DOUBLE) AS t
+                FROM ordered WHERE rn = 1
+                UNION ALL
+                SELECT o.event_type, o.bucket_start, o.n_events, o.rn,
+                       0.3 * o.n_events + 0.7 * r.s,
+                       0.3 * (0.3 * o.n_events + 0.7 * r.s) + 0.7 * r.t
+                FROM rec r JOIN ordered o
+                  ON o.event_type = r.event_type AND o.rn = r.rn + 1
+            )
+            SELECT event_type, bucket_start, n_events,
+                   round(s, 6) AS s_single,
+                   round(t, 6) AS s_double,
+                   round(2 * s - t, 6) AS level,
+                   round((0.3 / 0.7) * (s - t), 6) AS trend,
+                   round((2 * s - t) + (0.3 / 0.7) * (s - t), 6) AS forecast_next
+            FROM rec
+        """)
+def q_double_ewma_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brown double exponential smoothing (PromQL holt_winters family)
+    of the hourly count tier per event_type (operators/ewma.py
+    double_ewma): two chained C `ewm` kernels in ONE grouped Arrow scan;
+    level/trend/one-step forecast derived from the two unrounded states
+    in a fixed expression order the recursive-CTE oracle replays
+    bit-for-bit."""
+    from mq_to_db_spark.operators.ewma import double_ewma
+
+    tier = (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return double_ewma(
+        tier, ["event_type"], ts_col="bucket_start", value_col="n_events", alpha=0.3
+    )
+
+
+# resets: same micro-unit lag as counter_increase, strict <
+@contract("""
+            WITH base AS (
+                SELECT event_type, date_trunc('day', ts) AS bucket_start,
+                       value AS v
+                FROM events
+            ),
+            wm AS (
+                SELECT *, count(*) OVER (
+                           PARTITION BY event_type, bucket_start) AS n,
+                       row_number() OVER (
+                           PARTITION BY event_type, bucket_start
+                           ORDER BY v) AS rn
+                FROM base
+            ),
+            med AS (
+                SELECT *, max(CASE WHEN rn = floor((n + 1) / 2) THEN v END)
+                           OVER (PARTITION BY event_type, bucket_start) AS med
+                FROM wm
+            ),
+            dev AS (
+                SELECT *, abs(v - med) AS d,
+                       row_number() OVER (
+                           PARTITION BY event_type, bucket_start
+                           ORDER BY abs(v - med)) AS drn
+                FROM med
+            ),
+            mad AS (
+                SELECT *, max(CASE WHEN drn = floor((n + 1) / 2) THEN d END)
+                           OVER (PARTITION BY event_type, bucket_start) AS mad
+                FROM dev
+            )
+            SELECT event_type, bucket_start,
+                   CAST(count(*) AS BIGINT) AS n_samples,
+                   min(med) AS med, min(mad) AS mad,
+                   CAST(count(*) FILTER (WHERE d > 3.0 * mad) AS BIGINT)
+                       AS n_outliers
+            FROM mad GROUP BY 1, 2
+        """)
+def q_mad_outliers_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Robust MAD outlier detection per (event_type, day)
+    (operators/rolling.py mad_outliers): median and MAD are PICKED order
+    statistics (percentile_disc(0.5) semantics, never interpolated), so
+    deviation and threshold are fixed-order IEEE ops on bit-identical
+    values — the DuckDB oracle replays the same rank-pick windows."""
+    from mq_to_db_spark.operators.rolling import mad_outliers
+
+    return mad_outliers(
+        _events(spark, sf_dir), ["event_type"], ts_col="ts",
+        value_col="value", tier="1d", k=3.0,
+    )
+
+
+@contract("""
+            WITH lagged AS (
+                SELECT event_type, date_trunc('day', ts) AS bucket_start,
+                       epoch_us(ts) - lag(epoch_us(ts)) OVER (
+                           PARTITION BY event_type ORDER BY ts, event_id
+                       ) AS gap_us
+                FROM events
+            )
+            SELECT event_type, bucket_start,
+                   CAST(count(*) AS BIGINT) AS n_samples,
+                   max(gap_us) AS max_gap_us,
+                   -- micro-unit exact half-up rounding (quotient/remainder
+                   -- split): round(sum/cnt, 6) on a double can land ON a
+                   -- .5e-6 boundary where the engines' round() disagree
+                   CASE WHEN count(gap_us) > 0 THEN
+                       CAST(CAST(sum(gap_us) AS BIGINT) // count(gap_us)
+                                * 1000000
+                            + (2 * (CAST(sum(gap_us) AS BIGINT)
+                                    % count(gap_us)) * 1000000
+                               + count(gap_us)) // (2 * count(gap_us))
+                            AS DOUBLE) / 1e6
+                   END AS avg_gap_us
+            FROM lagged GROUP BY 1, 2
+        """)
+def q_gap_stats_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inter-sample gap analysis per (event_type, day)
+    (operators/intervals.py gap_stats): µs distance to the series
+    predecessor, attributed to the later sample's bucket — exact BIGINT
+    max plus one double division for the mean.  The dead-sensor /
+    stalled-consumer primitive behind the reference's readiness probe."""
+    from mq_to_db_spark.operators.intervals import gap_stats
+
+    return gap_stats(
+        _events(spark, sf_dir), ["event_type"], ts_col="ts", tier="1d",
+        tiebreak=("event_id",),
+    )
+
+
+#: SLO contract parameters — 'error' events against a 95% availability
+#: target, paged only when the 1h AND 6h windows both burn ≥5× budget
+#: pace (Google SRE Workbook multiwindow shape).  budget is computed as
+#: the double expression (1.0 - target) in BOTH engines so the division
+#: operand is bit-identical.
+SLO_TARGET = 0.95
+SLO_THRESHOLD = 5.0
+SLO_WINDOWS = {"1h": 3600, "6h": 6 * 3600}
+
+
+# trailing time-RANGE sums of BIGINT tier counts; the budget is
+# interpolated as the Python-computed DOUBLE literal (DuckDB
+# would otherwise fold 1.0 - 0.95 in exact DECIMAL, landing one
+# ULP away from Spark's double subtraction — caught at the
+# burn==threshold boundary); alert compares UNROUNDED doubles
+@contract(f"""
+            WITH tier AS (
+                SELECT date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_total,
+                       CAST(count(*) FILTER (WHERE event_type = 'error')
+                            AS BIGINT) AS n_bad
+                FROM events GROUP BY 1),
+            w AS (
+                SELECT *,
+                       CAST(sum(n_bad) OVER w1 AS DOUBLE)
+                           / sum(n_total) OVER w1 AS r1,
+                       CAST(sum(n_bad) OVER w6 AS DOUBLE)
+                           / sum(n_total) OVER w6 AS r6
+                FROM tier
+                WINDOW w1 AS (ORDER BY epoch(bucket_start)
+                              RANGE BETWEEN {SLO_WINDOWS["1h"] - 1} PRECEDING
+                                        AND CURRENT ROW),
+                       w6 AS (ORDER BY epoch(bucket_start)
+                              RANGE BETWEEN {SLO_WINDOWS["6h"] - 1} PRECEDING
+                                        AND CURRENT ROW))
+            SELECT bucket_start, n_total, n_bad,
+                   round(r1, 6) AS ratio_1h,
+                   round(r1 / CAST({1.0 - SLO_TARGET!r} AS DOUBLE), 6) AS burn_1h,
+                   round(r6, 6) AS ratio_6h,
+                   round(r6 / CAST({1.0 - SLO_TARGET!r} AS DOUBLE), 6) AS burn_6h,
+                   coalesce(r1 / CAST({1.0 - SLO_TARGET!r} AS DOUBLE) >= {SLO_THRESHOLD}
+                            AND r6 / CAST({1.0 - SLO_TARGET!r} AS DOUBLE) >= {SLO_THRESHOLD},
+                            false) AS alert
+            FROM w
+        """)
+def q_slo_burn_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multiwindow SLO error-budget burn rate over the events stream
+    (operators/slo.py): one hash exchange collapses outcomes to exact
+    BIGINT 1h tier counts, trailing time-RANGE windows (gap-proof) give
+    the 1h/6h error ratios, burn = ratio / (1 - target).  The alert the
+    reference's ack/reject counters (internal/metrics/metrics.go) feed
+    in production, engine-side."""
+    from mq_to_db_spark.operators.slo import slo_burn
+
+    return slo_burn(
+        _events(spark, sf_dir),
+        [],
+        bad=F.col("event_type") == "error",
+        ts_col="ts",
+        tier="1h",
+        windows=SLO_WINDOWS,
+        slo_target=SLO_TARGET,
+        threshold=SLO_THRESHOLD,
+    )
+
+
+#: BM25 contract parameters — distinct literal terms spanning high- and
+#: low-df vocabulary so idf actually differentiates
+BM25_TERMS = ["spark", "join", "dup"]
+BM25_K = 15
+
+
+def _bm25_oracle() -> str:
+    """Full BM25 replay: same tokenizer regex, same literal terms, the
+    same fixed-order double chain ((t0 + t1) + t2), the same
+    (1.2 + 1.0) budget-style sub-expressions so every operand is
+    bit-identical."""
+    tf_cols = ",\n                   ".join(
+        f"len(list_filter(t, x -> x = '{term}')) AS tf_{i}"
+        for i, term in enumerate(BM25_TERMS)
+    )
+    df_cols = ",\n                   ".join(
+        f"count(*) FILTER (WHERE tf_{i} > 0) AS df_{i}"
+        for i in range(len(BM25_TERMS))
+    )
+    terms = [
+        f"(ln(1.0 + (s.n_docs - CAST(s.df_{i} AS DOUBLE) + 0.5)"
+        f" / (CAST(s.df_{i} AS DOUBLE) + 0.5))"
+        f" * CAST(b.tf_{i} AS DOUBLE) * (1.2 + 1.0)"
+        f" / (CAST(b.tf_{i} AS DOUBLE)"
+        f" + 1.2 * ((1.0 - 0.75) + 0.75 * b.dl / (CAST(s.sum_dl AS DOUBLE) / s.n_docs))))"
+        for i in range(len(BM25_TERMS))
+    ]
+    chain = terms[0]
+    for t in terms[1:]:
+        chain = f"({chain} + {t})"
+    tf_out = ", ".join(f"tf_{i}" for i in range(len(BM25_TERMS)))
+    return f"""
+        WITH toks AS (
+            SELECT doc_id,
+                   list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
+                               x -> x <> '') AS t
+            FROM documents),
+        base AS (
+            SELECT doc_id, len(t) AS dl,
+                   {tf_cols}
+            FROM toks),
+        stats AS (
+            SELECT count(*) AS n_docs, sum(dl) AS sum_dl,
+                   {df_cols}
+            FROM base),
+        scored AS (
+            SELECT b.doc_id, b.dl, {", ".join(f"b.tf_{i}" for i in range(len(BM25_TERMS)))},
+                   {chain} AS score_raw
+            FROM base b, stats s)
+        SELECT doc_id, CAST(dl AS INT) AS dl,
+               {", ".join(f"CAST(tf_{i} AS INT) AS tf_{i}" for i in range(len(BM25_TERMS)))},
+               round(score_raw, 6) AS score
+        FROM scored WHERE score_raw > 0
+        ORDER BY score_raw DESC, doc_id
+        LIMIT {BM25_K}
+    """
+
+
+@contract(
+    _bm25_oracle,
+    # ranking.py — corpus × broadcast(1-row N/Σdl/df stats): output
+    # cardinality equals the corpus side, O(N) by construction
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 top-k lexical retrieval over the documents corpus
+    (operators/ranking.py): per-term tf as array expressions (narrow),
+    corpus stats one broadcast single-row aggregate, top-k a
+    TakeOrderedAndProject — the corpus never shuffles.  Scores summed
+    in fixed query-term order so the double chain is bit-identical to
+    the DuckDB replay."""
+    from mq_to_db_spark.operators.ranking import bm25_topk
+
+    return bm25_topk(_docs(spark, sf_dir), BM25_TERMS, k=BM25_K)
+
+
+#: ordered-funnel contract parameters (earliest-chain semantics; the 7d
+#: horizon exercises the µs-exact bound in funnel_reach)
+FUNNEL_STEPS = ["signup", "view", "purchase"]
+FUNNEL_HORIZON_SEC = 7 * 86_400
+
+
+# earliest-ordered-chain replay with DuckDB list lambdas: the
+# same sorted per-step ts arrays, the same first-at-or-after
+# walk, the same µs-integer 7d horizon (comparisons against a
+# NULL chain time filter to empty -> NULL, exactly like the
+# Spark side's chain-break propagation)
+@contract(f"""
+            WITH per_user AS (
+                SELECT user_id,
+                       list_sort(list(ts) FILTER (WHERE event_type = 'signup')) AS a1,
+                       list_sort(list(ts) FILTER (WHERE event_type = 'view')) AS a2,
+                       list_sort(list(ts) FILTER (WHERE event_type = 'purchase')) AS a3
+                FROM events
+                WHERE event_type IN ('signup', 'view', 'purchase')
+                GROUP BY user_id),
+            c1 AS (SELECT user_id, a2, a3, a1[1] AS t1 FROM per_user
+                   WHERE a1[1] IS NOT NULL),
+            c2 AS (
+                SELECT user_id, a3, t1,
+                       CASE WHEN epoch_us(list_filter(a2, x -> x >= t1)[1])
+                                 - epoch_us(t1) <= {FUNNEL_HORIZON_SEC * 1_000_000}
+                            THEN list_filter(a2, x -> x >= t1)[1] END AS t2
+                FROM c1),
+            c3 AS (
+                SELECT user_id, t1, t2,
+                       CASE WHEN epoch_us(list_filter(a3, x -> x >= t2)[1])
+                                 - epoch_us(t1) <= {FUNNEL_HORIZON_SEC * 1_000_000}
+                            THEN list_filter(a3, x -> x >= t2)[1] END AS t3
+                FROM c2),
+            n AS (SELECT count(t1) AS n1, count(t2) AS n2, count(t3) AS n3 FROM c3)
+            SELECT s.step_idx, s.step, s.n_entities,
+                   round(s.n_entities / n.n1, 6) AS conv_rate
+            FROM n, (
+                SELECT 1 AS step_idx, 'signup' AS step, (SELECT n1 FROM n) AS n_entities
+                UNION ALL SELECT 2, 'view', (SELECT n2 FROM n)
+                UNION ALL SELECT 3, 'purchase', (SELECT n3 FROM n)) s
+        """)
+def q_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered funnel signup → view → purchase within 7 days
+    (operators/funnel.py): one entity-keyed shuffle gathers per-step
+    sorted ts arrays, the chain walk is JVM array expressions, the
+    funnel table is |steps| rows.  Product-metrics sibling of the
+    reference's per-consumer outcome counters
+    (internal/metrics/metrics.go)."""
+    from mq_to_db_spark.operators.funnel import funnel_counts
+
+    return funnel_counts(
+        _events(spark, sf_dir),
+        FUNNEL_STEPS,
+        horizon_sec=FUNNEL_HORIZON_SEC,
+    )
+
+
+# µs-integer week indices (epoch_us // week_µs) replayed
+# verbatim; cohort_size via the same offset-0 window
+@contract("""
+            WITH tier AS (
+                SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS p
+                FROM events),
+            c AS (SELECT user_id, p,
+                         min(p) OVER (PARTITION BY user_id) AS p0
+                  FROM tier),
+            cells AS (
+                SELECT p0, CAST(p - p0 AS INT) AS period_offset,
+                       count(DISTINCT user_id) AS n_active
+                FROM c GROUP BY 1, 2)
+            SELECT make_timestamp(p0 * 604800000000) AS cohort_start,
+                   period_offset,
+                   CAST(n_active AS BIGINT) AS n_active,
+                   CAST(max(CASE WHEN period_offset = 0 THEN n_active END)
+                            OVER (PARTITION BY p0) AS BIGINT) AS cohort_size,
+                   round(n_active / (max(CASE WHEN period_offset = 0 THEN n_active END)
+                            OVER (PARTITION BY p0)), 6) AS retention_rate
+            FROM cells
+        """)
+def q_cohort_retention_wk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly cohort retention matrix (operators/cohort.py): raw events
+    collapse once to the (entity, week) activity tier, cohorts derive
+    from a tier-sized window, the matrix is |cohorts|×|offsets| rows.
+    Period indices are epoch-µs integer divisions, so the oracle
+    replays them bit-for-bit."""
+    from mq_to_db_spark.operators.cohort import cohort_retention
+
+    return cohort_retention(_events(spark, sf_dir), period="week")
+
+
+# seasonal cell mean/std from exact BIGINT sum / sum-of-squares
+# (order-independent), identical final double formula — the
+# n>=2 gate sits OUTSIDE greatest() on both engines
+@contract("""
+            WITH tier AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_events
+                FROM events GROUP BY 1, 2
+            ),
+            c AS (
+                SELECT event_type, bucket_start, n_events,
+                       CAST(hour(bucket_start) AS INT) AS season_idx,
+                       count(*) OVER cell AS seas_n,
+                       sum(n_events) OVER cell AS s,
+                       sum(n_events * n_events) OVER cell AS ss
+                FROM tier
+                WINDOW cell AS (PARTITION BY event_type, hour(bucket_start))
+            ),
+            m AS (
+                SELECT *, CAST(s AS DOUBLE) / seas_n AS avg_raw,
+                       CASE WHEN seas_n >= 2 THEN sqrt(greatest(
+                           (CAST(ss AS DOUBLE)
+                            - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / seas_n)
+                           / (seas_n - 1.0), 0.0)) END AS std_raw
+                FROM c
+            )
+            SELECT event_type, bucket_start, n_events, season_idx,
+                   CAST(seas_n AS BIGINT) AS seas_n,
+                   round(avg_raw, 6) AS seas_avg,
+                   round(std_raw, 6) AS seas_std,
+                   round(n_events - avg_raw, 6) AS residual,
+                   CASE WHEN std_raw > 0
+                        THEN round((n_events - avg_raw) / std_raw, 6)
+                   END AS seas_z
+            FROM m
+        """)
+def q_seasonal_hod_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hour-of-day seasonal baseline + residual z-score per event_type
+    (operators/seasonal.py): the "is 03:00 low because it's 03:00?"
+    check.  One unordered-window exchange on (event_type, season_idx);
+    mean/std from exact BIGINT sums so the final double formula
+    hash-matches the DuckDB replay (streaming stddev over an unordered
+    partition would be summation-order dependent)."""
+    from mq_to_db_spark.operators.seasonal import with_seasonal
+
+    tier = (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return with_seasonal(
+        tier, ["event_type"], ts_col="bucket_start",
+        value_col="n_events", season="hod",
+    )
+
+
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
+                FROM events
+            ),
+            lagged AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start, v,
+                       lag(v) OVER (
+                           PARTITION BY event_type ORDER BY ts, event_id
+                       ) AS pv
+                FROM s
+            )
+            SELECT event_type, bucket_start,
+                   CAST(sum(CASE WHEN pv IS NOT NULL AND v < pv
+                                 THEN 1 ELSE 0 END) AS BIGINT) AS n_resets,
+                   CAST(count(*) AS BIGINT) AS n_samples
+            FROM lagged GROUP BY 1, 2
+        """)
+def q_resets_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prometheus resets() per (event_type, 1h) bucket
+    (operators/counters.py counter_resets): restart detector paired
+    with counter_increase — same micro-unit scaling, same one-exchange
+    lag shape, bucket agg reuses the lag window's partitioning."""
+    from mq_to_db_spark.operators.counters import counter_resets
+
+    ev = _events(spark, sf_dir).select(
         "event_type",
         "ts",
         "event_id",
-        F.row_number().over(win).cast("long").alias("value"),
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
     )
-    return adjust_resets(ctr, ["event_type"], tiebreak=("event_id",))
-
-
-def q_archive_spikes(spark, sf_dir):
-    """Value-predicate-pruned archive read (operators/compression.py
-    decode_chunks_value_range): per-chunk [val_min, val_max] sketches —
-    computed in the encode pass — let a spike hunt decode only chunks
-    whose sketch can reach the threshold; the oracle scans raw rows.
-    Equality proves the metadata prune loses nothing."""
-    from mq_to_db_spark.operators.compression import (
-        decode_chunks_value_range,
-        encode_chunks,
-    )
-
-    tr = _events_as_transcripts(spark, sf_dir)
-    chunks = encode_chunks(tr, value_col="value")
-    return decode_chunks_value_range(chunks, lo=200.0).select(
-        "conv_id", "ts", F.round("value", 6).alias("value_r")
+    return counter_resets(
+        ev, ["event_type"], ts_col="ts", value_col="v", tier="1h",
+        tiebreak=("event_id",),
     )
 
 
+#: documents normalization shared by the dedup/text queries (their oracles
+#: embed the same DuckDB expression textually)
+_NORM_SQL = (
+    "trim(regexp_replace(regexp_replace(lower(text), '[^\\w\\s]', ' ', 'g'), "
+    "'\\s+', ' ', 'g'))"
+)
 
-def _resample_input(spark, sf_dir):
-    """Gauge sample stream: per (event_type, ts) max(value) — unique
-    series timestamps so the as-of tie-break is engine-independent."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy("event_type", "ts")
-        .agg(F.max("value").alias("value"))
+
+# edit-distance fuzzy dedup: replay BOTH stages — posting-list
+# exact-Jaccard candidates, then DuckDB's identical unit-cost
+# levenshtein on the same normalized strings
+@contract(f"""
+            WITH norm AS (
+                SELECT doc_id, {_NORM_SQL} AS nt,
+                       string_split({_NORM_SQL}, ' ') AS words
+                FROM documents
+            ),
+            sh AS (
+                SELECT doc_id, nt,
+                       CASE WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
+                            ELSE list_distinct([array_to_string(words[i:i+2], ' ')
+                                  for i in range(1, len(words) - 1)])
+                       END AS shingles
+                FROM norm
+            ),
+            posting AS (
+                SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
+                FROM sh
+            ),
+            cand AS (
+                SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                       a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
+                FROM posting a JOIN posting b USING (shingle)
+                WHERE a.doc_id < b.doc_id
+                GROUP BY 1, 2, 3, 4
+                HAVING count(*) / (a.n_sh + b.n_sh - count(*)) >= 0.3
+            ),
+            v AS (
+                SELECT c.id_a, c.id_b,
+                       levenshtein(x.nt, y.nt) AS lv,
+                       greatest(length(x.nt), length(y.nt)) AS mx
+                FROM cand c
+                JOIN sh x ON x.doc_id = c.id_a
+                JOIN sh y ON y.doc_id = c.id_b
+            )
+            SELECT id_a, id_b, CAST(lv AS INT) AS lev,
+                   round(sim, 6) AS sim
+            FROM (
+                SELECT id_a, id_b, lv, mx,
+                       CASE WHEN mx = 0 THEN 1.0
+                            ELSE 1.0 - CAST(lv AS DOUBLE) / mx END AS sim
+                FROM v
+            ) WHERE sim >= 0.8
+        """)
+def q_editdist_pairs(spark, sf_dir):
+    """Fuzzy-dedup by EXACT Levenshtein similarity (operators/dedup.py
+    editdist_pairs): minhash-LSH candidates (exact Jaccard ≥ 0.3) pay
+    the only O(len²) edit-distance dynamic programs; texts join back
+    id-keyed.  Both stages replay in SQL — posting-list Jaccard then
+    DuckDB's identical unit-cost levenshtein — so the contract is
+    exact by construction."""
+    from mq_to_db_spark.operators.dedup import editdist_pairs
+
+    return editdist_pairs(
+        _docs(spark, sf_dir), "doc_id", "text", min_sim=0.8
     )
 
 
-def q_resample_locf_10m(spark, sf_dir):
-    """Grid resampling, PromQL-instant-query semantics
-    (operators/resample.py resample_locf): the irregular gauge stream
-    evaluated every 10 minutes — most recent sample at or before each
-    instant, series silent longer than the 15-minute lookback read NULL
-    (Prometheus staleness).  Grid generated from per-series extents;
-    one as-of join, no grid x samples product."""
-    from mq_to_db_spark.operators.resample import resample_locf
+# KMV: bottom-64 distinct md5-coin hashes straight from raw at
+# the 1d grain (== the engine's 1h→1d cascade by the
+# bottom-k(union) identity); estimate arithmetic op-for-op
+# HLL: full-sketch replay — md5 coin, register prefix/rho via
+# to_base string length (never floor(log2)), group max, sorted-j
+# harmonic fold of exact dyadics 1/(1<<rho), identical estimator
+# op order; ln branch is the tolerated ~1-ulp surface
+@contract("""
+            WITH h AS (
+                SELECT DISTINCT event_type,
+                       date_trunc('day', ts) AS bucket_start,
+                       ('0x' || substring(
+                           md5('42:' || CAST(user_id AS VARCHAR)),
+                           1, 15))::BIGINT AS h
+                FROM events WHERE user_id IS NOT NULL
+            ),
+            r AS (
+                SELECT event_type, bucket_start,
+                       CAST(h >> 51 AS INT) AS j,
+                       h % (CAST(1 AS BIGINT) << 51) AS w
+                FROM h
+            ),
+            rho AS (
+                SELECT event_type, bucket_start, j,
+                       CASE WHEN w = 0 THEN 52
+                            ELSE 52 - length(to_base(w, 2)) END AS rho
+                FROM r
+            ),
+            regs AS (
+                SELECT event_type, bucket_start, j,
+                       max(rho) AS mr
+                FROM rho GROUP BY 1, 2, 3
+            ),
+            agg AS (
+                SELECT event_type, bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_regs_set,
+                       CAST(512 - count(*) AS BIGINT) AS n_zero_regs,
+                       list_reduce(
+                           list(1.0 / CAST(CAST(1 AS BIGINT) << mr
+                                           AS DOUBLE) ORDER BY j),
+                           (x, y) -> x + y) AS s
+                FROM regs GROUP BY 1, 2
+            )
+            SELECT event_type, bucket_start, n_regs_set, n_zero_regs,
+                   CASE WHEN ((0.7213 / (1.0 + 1.079 / 512.0)) * 512.0)
+                             * 512.0
+                             / (CAST(n_zero_regs AS DOUBLE) + s) <= 1280.0
+                             AND n_zero_regs > 0
+                        THEN 512.0 * ln(512.0
+                                        / CAST(n_zero_regs AS DOUBLE))
+                        ELSE ((0.7213 / (1.0 + 1.079 / 512.0)) * 512.0)
+                             * 512.0
+                             / (CAST(n_zero_regs AS DOUBLE) + s)
+                   END AS estimate
+            FROM agg
+        """)
+def q_hll_distinct_1d(spark, sf_dir):
+    """HyperLogLog distinct-user sketch per (event_type, 1d), CASCADED
+    from 1h sketches (operators/hll.py, new round 5): register-wise max
+    is associative + idempotent, so the 1h→1d merge is register-exact
+    vs a direct 1d build — the oracle replays the WHOLE sketch (md5
+    coin → register j / leading-zero rho via binary-string length →
+    group max → sorted-j harmonic fold of exact dyadics → linear-
+    counting branch) from raw, and every column hash-matches.  The
+    mergeable-cardinality sibling of kmv_distinct_1d (TimescaleDB's
+    hyperloglog()+rollup() pair); estimate emitted as a raw double per
+    the FLOAT_SURFACE_AUDIT rule (its only transcendental is the
+    correction's ln — branch selection itself is bit-deterministic
+    because the raw estimator chain is exact-ops only)."""
+    from mq_to_db_spark.operators.hll import (
+        hll_estimate,
+        hll_merge,
+        hll_sketch,
+    )
 
-    out = resample_locf(
-        _resample_input(spark, sf_dir),
-        "10 minutes",
+    hourly = hll_sketch(
+        _events(spark, sf_dir), ["event_type"], "user_id", tier="1h"
+    )
+    daily = hll_merge(
+        hourly, ["event_type"], F.date_trunc("day", "bucket_start")
+    )
+    return hll_estimate(daily, keys=["event_type"]).select(
+        "event_type", "bucket_start", "n_regs_set", "n_zero_regs", "estimate"
+    )
+
+
+@contract("""
+            WITH t AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start, ts, value,
+                       lead(ts) OVER (PARTITION BY event_type, date_trunc('hour', ts)
+                                      ORDER BY ts, event_id) AS nxt
+                FROM events
+            )
+            SELECT event_type, bucket_start, count(*) AS n_samples,
+                   round(sum(value::DECIMAL(20,6)
+                             * datediff('microsecond', ts,
+                                        coalesce(nxt, bucket_start + INTERVAL 1 HOUR)))::DOUBLE
+                         / sum(datediff('microsecond', ts,
+                                        coalesce(nxt, bucket_start + INTERVAL 1 HOUR)))::DOUBLE,
+                         6) AS twa
+            FROM t GROUP BY 1, 2
+        """)
+def q_time_weighted_1h(spark, sf_dir):
+    """Time-weighted average (TimescaleDB-hyperfunction analogue,
+    operators/timeweight.py): per (event_type, hour), LOCF-weighted mean
+    of the gauge `value` — each sample weighted by how long it stayed the
+    latest observation, clamped to the bucket end.  One window shuffle on
+    (event_type, bucket) + one agg reusing that partitioning.  The
+    integral accumulates DECIMAL×BIGINT-µs (exact), so the oracle
+    comparison is hash-exact, not just approximate."""
+    from mq_to_db_spark.operators.timeweight import time_weighted_avg
+
+    out = time_weighted_avg(
+        _events(spark, sf_dir),
         ["event_type"],
-        lookback="15 minutes",
+        ts_col="ts",
+        value_col="value",
+        bucket="1 hour",
+        tiebreak=["event_id"],
     )
-    return out.withColumn("value", F.round("value", 6))
-
-
-def q_resample_interp_10m(spark, sf_dir):
-    """Grid resampling, TimescaleDB-interpolate semantics
-    (resample_interpolate): linear value between the bracketing samples
-    at every 10-minute instant, exact BIGINT-us deltas with one double
-    division — bit-replayable by epoch_us arithmetic; LOCF tail past
-    the last sample, NULL before the first.  Two as-of joins."""
-    from mq_to_db_spark.operators.resample import resample_interpolate
-
-    out = resample_interpolate(
-        _resample_input(spark, sf_dir), "10 minutes", ["event_type"]
+    return out.select(
+        "event_type", "bucket_start", "n_samples", F.round("twa", 6).alias("twa")
     )
-    return out.withColumn("value", F.round("value", 6))
 
 
+@contract("""
+            WITH t AS (
+                SELECT user_id, event_type, ts,
+                       lead(ts) OVER (PARTITION BY user_id
+                                      ORDER BY ts, event_id) AS nxt
+                FROM events
+            )
+            SELECT date_trunc('day', ts) AS bucket_start, event_type,
+                   count(*) AS n_entries,
+                   round(sum(datediff('microsecond', ts, nxt)) / 1000000.0, 6)
+                       AS duration_sec
+            FROM t WHERE nxt IS NOT NULL GROUP BY 1, 2
+        """)
+def q_state_durations_1d(spark, sf_dir):
+    """State-duration aggregation (state_agg analogue,
+    operators/timeweight.py): per (day, event_type), total time users
+    spent "in" each event type — a state ends at the user's next event;
+    the final open state is excluded.  Durations accumulate as exact
+    BIGINT µs (order-independent sums → hash-exact oracle)."""
+    from mq_to_db_spark.operators.timeweight import state_durations
 
-def q_label_count_values_1d(spark, sf_dir):
-    """PromQL label utilities (operators/labels.py): label_replace
-    rewrites matching series labels (anchored full-match, untouched on
-    miss), then count_values histograms the exact payload-length values
-    per (day, rewritten label) with the value itself becoming a label —
-    pure projections + one hash agg."""
-    from mq_to_db_spark.operators.labels import count_values, label_replace
-
-    df = _events(spark, sf_dir).select(
-        F.date_trunc("day", "ts").alias("day_start"),
+    out = state_durations(
+        _events(spark, sf_dir),
+        key="user_id",
+        ts_col="ts",
+        state_col="event_type",
+        tiebreak=["event_id"],
+        bucket="1 day",
+    )
+    return out.select(
+        "bucket_start",
         "event_type",
-        F.length("props").alias("plen"),
+        "n_entries",
+        F.round("duration_sec", 6).alias("duration_sec"),
     )
-    df = label_replace(df, "kind", "$1-like", "event_type", "(click|view)")
-    return count_values(df, "plen_label", "plen", keys=["day_start", "kind"])
 
 
-def _tier_stitch_oracle() -> str:
-    """DuckDB replay: the same driver-side covering plan (cover_range is
-    pure timestamp arithmetic, so both engines see identical literal
-    segments), aggregate from raw, provenance = distinct active buckets
-    per segment tier."""
-    from mq_to_db_spark.operators.stitch import cover_range
+# full-algorithm replay: gaps-and-islands merge (gap ≤ 10 min),
+# islands clipped to hour buckets in exact BIGINT µs
+@contract("""
+            WITH hb AS (
+                SELECT event_type, ts, event_id,
+                       CASE WHEN lag(ts) OVER w IS NULL
+                                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
+                                    > 600000000
+                            THEN 1 ELSE 0 END AS new_i
+                FROM events
+                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
+            ),
+            tagged AS (
+                SELECT event_type, ts,
+                       sum(new_i) OVER (PARTITION BY event_type
+                                        ORDER BY ts, event_id
+                                        ROWS UNBOUNDED PRECEDING) AS iid
+                FROM hb
+            ),
+            isl AS (
+                SELECT event_type, epoch_us(min(ts)) AS s_us,
+                       epoch_us(max(ts)) + 600000000 AS e_us
+                FROM tagged GROUP BY event_type, iid
+            ),
+            ex AS (
+                SELECT event_type, s_us, e_us,
+                       unnest(generate_series((s_us // 3600000000) * 3600000000,
+                                              ((e_us - 1) // 3600000000) * 3600000000,
+                                              3600000000)) AS b_us
+                FROM isl
+            )
+            SELECT event_type, make_timestamp(b_us) AS bucket_start,
+                   count(*) AS n_live_intervals,
+                   round(sum(least(e_us, b_us + 3600000000)
+                             - greatest(s_us, b_us)) / 1000000.0, 6) AS uptime_sec
+            FROM ex GROUP BY 1, 2
+        """)
+def q_uptime_1h(spark, sf_dir):
+    """Heartbeat→uptime aggregation (heartbeat_agg analogue,
+    operators/intervals.py): each event keeps its event_type "live" for
+    10 minutes; covers merge into islands (gaps-and-islands window) and
+    islands are clipped to hour buckets — exact BIGINT-µs overlaps, so
+    the per-bucket uptime seconds hash-match the DuckDB replay.  Plan:
+    one window shuffle on the key, island agg reuses its partitioning,
+    sequence/explode clip (no shuffle), one final (key, bucket) agg."""
+    from mq_to_db_spark.operators.intervals import heartbeat_agg
 
-    unit = {"1m": "minute", "1h": "hour", "1d": "day"}
-    seg_sql = "\n                UNION ALL ".join(
-        f"SELECT event_type AS role, '{t}' AS tier, "
-        f"date_trunc('{unit[t]}', ts) AS b FROM events "
-        f"WHERE ts >= TIMESTAMP '{lo}' AND ts < TIMESTAMP '{hi}'"
-        for t, lo, hi in cover_range(STITCH_T0, STITCH_T1)
+    return heartbeat_agg(
+        _events(spark, sf_dir),
+        ["event_type"],
+        ts_col="ts",
+        tolerance="10 minutes",
+        bucket="1 hour",
+        tiebreak=["event_id"],
     )
-    return f"""
-        WITH seg AS (
-            {seg_sql}
-        ),
-        prov AS (
-            SELECT role,
-                   CAST(count(DISTINCT CASE WHEN tier = '1m' THEN b END) AS BIGINT) AS n_1m,
-                   CAST(count(DISTINCT CASE WHEN tier = '1h' THEN b END) AS BIGINT) AS n_1h,
-                   CAST(count(DISTINCT CASE WHEN tier = '1d' THEN b END) AS BIGINT) AS n_1d
-            FROM seg GROUP BY 1
-        ),
-        agg AS (
-            SELECT event_type AS role,
-                   CAST(count(*) AS BIGINT) AS n_turns,
-                   CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS text_len_sum,
-                   CAST(min(coalesce(length(props), 0)) AS BIGINT) AS text_len_min,
-                   CAST(max(coalesce(length(props), 0)) AS BIGINT) AS text_len_max
-            FROM events
-            WHERE ts >= TIMESTAMP '{STITCH_T0}' AND ts < TIMESTAMP '{STITCH_T1}'
+
+
+# LOCF hold to the key's next sample (any bucket); last sample
+# clamped to the end of its own bucket; explode across buckets
+@contract("""
+            WITH t AS (
+                SELECT event_type, value, epoch_us(ts) AS s_us,
+                       epoch_us(lead(ts) OVER (PARTITION BY event_type
+                                               ORDER BY ts, event_id)) AS nxt_us
+                FROM events
+            ),
+            s AS (
+                SELECT event_type, value, s_us,
+                       coalesce(nxt_us,
+                                (s_us // 3600000000 + 1) * 3600000000) AS e_us
+                FROM t
+            ),
+            ex AS (
+                SELECT event_type, value, s_us, e_us,
+                       unnest(generate_series((s_us // 3600000000) * 3600000000,
+                                              ((e_us - 1) // 3600000000) * 3600000000,
+                                              3600000000)) AS b_us
+                FROM s WHERE e_us > s_us
+            )
+            SELECT event_type, make_timestamp(b_us) AS bucket_start,
+                   sum(CASE WHEN s_us >= b_us THEN 1 ELSE 0 END)::BIGINT
+                       AS n_samples,
+                   round(sum(value::DECIMAL(20,6)
+                             * (least(e_us, b_us + 3600000000)
+                                - greatest(s_us, b_us)))::DOUBLE
+                         / sum(least(e_us, b_us + 3600000000)
+                               - greatest(s_us, b_us))::DOUBLE,
+                         6) AS twa_interp
+            FROM ex GROUP BY 1, 2
+        """)
+def q_twa_interp_1h(spark, sf_dir):
+    """Carried (interpolated) time-weighted average (TimescaleDB
+    interpolated_average analogue, operators/intervals.py): LOCF hold
+    intervals cross bucket edges, so sample-free hours report the carried
+    value with n_samples=0 instead of disappearing.  DECIMAL×BIGINT-µs
+    integral ⇒ hash-exact oracle; contrast q_time_weighted_1h (the
+    within-bucket variant with no carry)."""
+    from mq_to_db_spark.operators.intervals import interpolated_time_weighted_avg
+
+    return interpolated_time_weighted_avg(
+        _events(spark, sf_dir),
+        ["event_type"],
+        ts_col="ts",
+        value_col="value",
+        bucket="1 hour",
+        tiebreak=["event_id"],
+    )
+
+
+# neighbor-delta triangle area (BIGINT µs × DOUBLE — same IEEE
+# products as the Spark expression); endpoints area=+inf;
+# ties → latest (ts, event_id)
+@contract("""
+            WITH t AS (
+                SELECT event_type, ts, value, event_id, epoch_us(ts) AS x,
+                       lag(epoch_us(ts)) OVER w AS xp, lag(value) OVER w AS yp,
+                       lead(epoch_us(ts)) OVER w AS xn, lead(value) OVER w AS yn
+                FROM events
+                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
+            ),
+            a AS (
+                SELECT event_type, ts, value, event_id, x,
+                       date_trunc('hour', ts) AS bucket_start,
+                       CASE WHEN xp IS NULL OR xn IS NULL THEN 'infinity'::DOUBLE
+                            ELSE abs((x - xp) * (yn - yp) - (xn - xp) * (value - yp))
+                       END AS area2
+                FROM t
+            ),
+            r AS (
+                SELECT *, row_number() OVER (PARTITION BY event_type, bucket_start
+                                             ORDER BY area2 DESC, x DESC,
+                                                      event_id DESC) AS rn,
+                       count(*) OVER (PARTITION BY event_type, bucket_start)
+                           AS n_samples
+                FROM a
+            )
+            SELECT event_type, bucket_start, ts, value, n_samples
+            FROM r WHERE rn = 1
+        """)
+def q_lttb_1h(spark, sf_dir):
+    """Largest-Triangle-One-Bucket downsample (operators/downsample.py,
+    Steinarsson 2013 §4.2): per (event_type, hour) keep the point whose
+    triangle with its immediate neighbors has the largest area; series
+    endpoints always kept.  The area uses neighbor *deltas* (≤2^40
+    doubles), so the IEEE product — and therefore the argmax — is
+    bit-identical in DuckDB's replay.  One window shuffle + one agg."""
+    from mq_to_db_spark.operators.downsample import downsample_lttb
+
+    return downsample_lttb(
+        _events(spark, sf_dir),
+        ["event_type"],
+        ts_col="ts",
+        value_col="value",
+        tier="1h",
+        tiebreak=("event_id",),
+    )
+
+
+@contract("""
+            WITH flagged AS (
+                SELECT user_id, event_id, ts,
+                       CASE WHEN lag(ts) OVER w IS NULL
+                                 OR ts - lag(ts) OVER w <= INTERVAL 30 MINUTE
+                            THEN 0 ELSE 1 END AS new_s
+                FROM events
+                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ),
+            tagged AS (
+                SELECT user_id, ts,
+                       sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                        ROWS UNBOUNDED PRECEDING) AS session_id
+                FROM flagged
+            ),
+            sess AS (
+                SELECT min(ts) AS s, max(ts) AS e
+                FROM tagged GROUP BY user_id, session_id
+            ),
+            ext AS (SELECT date_trunc('day', min(ts)) AS lo, max(ts) AS hi FROM events),
+            grid AS (
+                SELECT unnest(generate_series(lo, hi, INTERVAL 10 MINUTE)) AS grid_ts
+                FROM ext
+            )
+            SELECT g.grid_ts, count(sess.s) AS active
+            FROM grid g LEFT JOIN sess
+              ON sess.s <= g.grid_ts AND g.grid_ts <= sess.e
             GROUP BY 1
-        )
-        SELECT a.role, a.n_turns, a.text_len_sum, a.text_len_min, a.text_len_max,
-               p.n_1m + p.n_1h + p.n_1d AS n_partials, p.n_1m, p.n_1h, p.n_1d
-        FROM agg a JOIN prov p USING (role)
-    """
+        """)
+def q_concurrency_10m(spark, sf_dir):
+    """Concurrency curve (operators/concurrency.py): active user sessions
+    (30-min-gap sessionization) sampled every 10 minutes.  Spark side is
+    the sweep line — boundary ±1 events, one hash agg per distinct
+    instant, range-partitioned running sum (rangewin.range_running_sum),
+    as-of join onto the grid; every shuffle carries ≤16-byte rows.  The
+    oracle is the naive grid×interval join (O(n·m), fine at sf0.01) —
+    engine-independent semantics, scalable plan only on the Spark side."""
+    from mq_to_db_spark.operators.concurrency import concurrency_at_grid
+    from mq_to_db_spark.operators.sessionize import sessionize
+    from mq_to_db_spark.operators.timegrid import step_grid
+
+    ev = _events(spark, sf_dir).select("user_id", "event_id", "ts")
+    sess = sessionize(ev, gap="30 minutes", key="user_id", order_cols=["ts", "event_id"])
+    grid = step_grid(_events(spark, sf_dir), "10 minutes", align="day", out_col="grid_ts")
+    return concurrency_at_grid(
+        sess, grid, grid_col="grid_ts", start_col="session_start", end_col="session_end"
+    )
+
+
+@contract("""
+            WITH hourly AS (
+                SELECT date_trunc('hour', ts) AS b,
+                       count(*) FILTER (event_type = 'click') AS a,
+                       count(*) FILTER (event_type = 'error') AS bb
+                FROM events GROUP BY 1
+            ),
+            ext AS (SELECT min(b) AS lo, max(b) AS hi FROM hourly),
+            grid AS (
+                SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS g FROM ext
+            ),
+            filled AS (
+                SELECT g, coalesce(a, 0) AS a, coalesce(bb, 0) AS bb
+                FROM grid LEFT JOIN hourly ON b = g
+            ),
+            mom AS (
+                SELECT date_trunc('day', g) AS group_start, count(*) AS n,
+                       sum(a) AS sa, sum(bb) AS sb, sum(a * bb) AS sab,
+                       sum(a * a) AS saa, sum(bb * bb) AS sbb
+                FROM filled GROUP BY 1
+            )
+            SELECT group_start, n AS n_buckets,
+                   round((n::DOUBLE * sab::DOUBLE - sa::DOUBLE * sb::DOUBLE)
+                         / nullif(sqrt(n::DOUBLE * saa::DOUBLE - sa::DOUBLE * sa::DOUBLE)
+                                  * sqrt(n::DOUBLE * sbb::DOUBLE - sb::DOUBLE * sb::DOUBLE),
+                                  0.0),
+                         6) AS corr_ab
+            FROM mom
+        """)
+def q_series_corr_1d(spark, sf_dir):
+    """Cross-series Pearson correlation (operators/correlate.py): per
+    day, corr between the zero-filled hourly click and error counts.
+    ONE conditional-aggregation scan builds both series (no self-join),
+    zero-fill against the dense hour grid, then the moment-form corr —
+    five exact BIGINT sums, final double formula identical on both
+    engines (built-in streaming `corr` is summation-order dependent)."""
+    from mq_to_db_spark.operators.correlate import bucketed_pair_series, series_corr
+
+    pair = bucketed_pair_series(
+        _events(spark, sf_dir),
+        "ts",
+        "1h",
+        F.count_if(F.col("event_type") == "click"),
+        F.count_if(F.col("event_type") == "error"),
+    )
+    out = series_corr(pair, "day")
+    return out.select(
+        "group_start", "n_buckets", F.round("corr_ab", 6).alias("corr_ab")
+    )
+
+
+# full replay of the deterministic image construction + decode:
+# width = 4 + id%5, height = 3 + id%4, flat pixel byte q (over
+# h*w*3 positions) = (id*31 + 7q) % 256; 144 = the max n_px
+# (8*6*3), filtered per doc — range() in DuckDB 1.0 cannot take
+# lateral column parameters
+@contract("""
+            SELECT d.doc_id,
+                   CAST(4 + d.doc_id % 5 AS INT) AS width,
+                   CAST(3 + d.doc_id % 4 AS INT) AS height,
+                   CAST(count(*) AS BIGINT) AS n_px,
+                   CAST(sum((d.doc_id * 31 + 7 * q.q) % 256) AS BIGINT) AS sum_px,
+                   CAST(max((d.doc_id * 31 + 7 * q.q) % 256) AS INT) AS max_px
+            FROM documents d
+            CROSS JOIN range(0, 144) AS q(q)
+            WHERE q.q < (4 + d.doc_id % 5) * (3 + d.doc_id % 4) * 3
+            GROUP BY d.doc_id
+        """)
+def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal binary-column plane, contract-checked end-to-end
+    (VERDICT r03 #5): a deterministic PPM image per document id
+    (operators/multimodal.synth_ppm_from_ids — geometry and every pixel
+    byte are integer arithmetic on doc_id), REAL P6 encode → binary
+    column → REAL decode (decode_ppm) → exact integer pixel statistics
+    (image_byte_stats).  Two mapInPandas narrow passes, zero shuffles,
+    payload bytes never leave their partition.  The DuckDB oracle
+    replays the pixel formula over a range() grid, so header writing,
+    Arrow binary transfer, and the codec round-trip are all
+    hash-verified — not just plumbed.  Reference analogue: the typed
+    binary payload plane (internal/messages/sql.go:12-26; payloads are
+    opaque bytes with declared structure there too)."""
+    from mq_to_db_spark.operators.multimodal import (
+        image_byte_stats,
+        synth_ppm_from_ids,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    media = synth_ppm_from_ids(docs, "doc_id")
+    return image_byte_stats(media).select(
+        F.col("media_id").alias("doc_id"),
+        "width", "height", "n_px", "sum_px", "max_px",
+    )
 
 
 def _asap_oracle() -> str:
@@ -2527,186 +3501,6 @@ def _asap_oracle() -> str:
     """
 
 
-def _hybrid_read_oracle() -> str:
-    """DuckDB replay of the hybrid read: identical covering plan for the
-    minute-aligned interior (cover_range is pure timestamp arithmetic)
-    plus the two raw edge slivers, provenance = distinct active buckets
-    per segment tier (+ slivers with >=1 turn), aggregate from raw."""
-    from mq_to_db_spark.operators.stitch import _as_dt, _floor, cover_range
-    from mq_to_db_spark.plans.readpath import _ceil_minute
-
-    t0, t1 = _as_dt(HYBRID_T0), _as_dt(HYBRID_T1)
-    t0c, t1f = _ceil_minute(t0), _floor(t1, "1m")
-    unit = {"1m": "minute", "1h": "hour", "1d": "day"}
-    segs = [
-        (t, f"date_trunc('{unit[t]}', ts)", lo, hi)
-        for t, lo, hi in cover_range(t0c, t1f)
-    ]
-    segs.append(("raw", f"TIMESTAMP '{_floor(t0, '1m')}'", t0, t0c))
-    segs.append(("raw", f"TIMESTAMP '{_floor(t1, '1m')}'", t1f, t1))
-    seg_sql = "\n                UNION ALL ".join(
-        f"SELECT event_type AS role, '{t}' AS tier, {bexpr} AS b FROM events "
-        f"WHERE ts >= TIMESTAMP '{lo}' AND ts < TIMESTAMP '{hi}'"
-        for t, bexpr, lo, hi in segs
-    )
-    return f"""
-        WITH seg AS (
-            {seg_sql}
-        ),
-        prov AS (
-            SELECT role,
-                   CAST(count(DISTINCT CASE WHEN tier = '1m' THEN b END)
-                      + count(DISTINCT CASE WHEN tier = '1h' THEN b END)
-                      + count(DISTINCT CASE WHEN tier = '1d' THEN b END)
-                      + count(DISTINCT CASE WHEN tier = 'raw' THEN b END) AS BIGINT) AS n_partials,
-                   CAST(count(DISTINCT CASE WHEN tier = 'raw' THEN b END) AS BIGINT) AS n_raw
-            FROM seg GROUP BY 1
-        ),
-        agg AS (
-            SELECT event_type AS role,
-                   CAST(count(*) AS BIGINT) AS n_turns,
-                   CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS text_len_sum,
-                   CAST(min(coalesce(length(props), 0)) AS BIGINT) AS text_len_min,
-                   CAST(max(coalesce(length(props), 0)) AS BIGINT) AS text_len_max
-            FROM events
-            WHERE ts >= TIMESTAMP '{HYBRID_T0}' AND ts < TIMESTAMP '{HYBRID_T1}'
-            GROUP BY 1
-        )
-        SELECT a.role, a.n_turns, a.text_len_sum, a.text_len_min, a.text_len_max,
-               p.n_partials, p.n_raw
-        FROM agg a JOIN prov p USING (role)
-    """
-
-
-def _range_eval_oracle() -> str:
-    """DuckDB replay of the 6h query_range: raw rows gridded by epoch
-    arithmetic anchored at t0 (identical cell rule), n_src_buckets =
-    distinct active 1h tier buckets per (cell, role)."""
-    step = RANGE_EVAL_STEP
-    return f"""
-        WITH g AS (
-            SELECT event_type AS role,
-                   TIMESTAMP '{RANGE_EVAL_T0}'
-                     + INTERVAL 1 SECOND
-                       * (CAST(floor(epoch(ts - TIMESTAMP '{RANGE_EVAL_T0}') / {step})
-                               AS BIGINT) * {step}) AS grid_ts,
-                   date_trunc('hour', ts) AS src_bucket,
-                   coalesce(length(props), 0) AS tl
-            FROM events
-            WHERE ts >= TIMESTAMP '{RANGE_EVAL_T0}'
-              AND ts < TIMESTAMP '{RANGE_EVAL_T1}'
-        )
-        SELECT grid_ts, role,
-               CAST(count(*) AS BIGINT) AS n_turns,
-               CAST(sum(tl) AS BIGINT) AS text_len_sum,
-               CAST(min(tl) AS BIGINT) AS text_len_min,
-               CAST(max(tl) AS BIGINT) AS text_len_max,
-               CAST(count(DISTINCT src_bucket) AS BIGINT) AS n_src_buckets
-        FROM g GROUP BY 1, 2
-    """
-
-
-def _hist_rebin_oracle() -> str:
-    cases = " ".join(
-        f"WHEN value <= {e} THEN {e}" for e in HIST_COARSE_EDGES
-    )
-    return f"""
-        SELECT date_trunc('day', ts) AS bucket_start, event_type,
-               CASE {cases} ELSE CAST('inf' AS DOUBLE) END AS le,
-               CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2, 3
-    """
-
-
-
-# --------------------------------------------------------------------------
-
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001: the full rollup cascade +
-    gap-fill over the events table in transcript shape."""
-    return q_transcript_pipeline(spark, "/root/testdata/sf0.001")
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal binary-column plane, contract-checked end-to-end
-    (VERDICT r03 #5): a deterministic PPM image per document id
-    (operators/multimodal.synth_ppm_from_ids — geometry and every pixel
-    byte are integer arithmetic on doc_id), REAL P6 encode → binary
-    column → REAL decode (decode_ppm) → exact integer pixel statistics
-    (image_byte_stats).  Two mapInPandas narrow passes, zero shuffles,
-    payload bytes never leave their partition.  The DuckDB oracle
-    replays the pixel formula over a range() grid, so header writing,
-    Arrow binary transfer, and the codec round-trip are all
-    hash-verified — not just plumbed.  Reference analogue: the typed
-    binary payload plane (internal/messages/sql.go:12-26; payloads are
-    opaque bytes with declared structure there too)."""
-    from mq_to_db_spark.operators.multimodal import (
-        image_byte_stats,
-        synth_ppm_from_ids,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    media = synth_ppm_from_ids(docs, "doc_id")
-    return image_byte_stats(media).select(
-        F.col("media_id").alias("doc_id"),
-        "width", "height", "n_px", "sum_px", "max_px",
-    )
-
-
-#: ordered-funnel contract parameters (earliest-chain semantics; the 7d
-#: horizon exercises the µs-exact bound in funnel_reach)
-FUNNEL_STEPS = ["signup", "view", "purchase"]
-FUNNEL_HORIZON_SEC = 7 * 86_400
-
-
-def q_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel signup → view → purchase within 7 days
-    (operators/funnel.py): one entity-keyed shuffle gathers per-step
-    sorted ts arrays, the chain walk is JVM array expressions, the
-    funnel table is |steps| rows.  Product-metrics sibling of the
-    reference's per-consumer outcome counters
-    (internal/metrics/metrics.go)."""
-    from mq_to_db_spark.operators.funnel import funnel_counts
-
-    return funnel_counts(
-        _events(spark, sf_dir),
-        FUNNEL_STEPS,
-        horizon_sec=FUNNEL_HORIZON_SEC,
-    )
-
-
-def q_cohort_retention_wk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention matrix (operators/cohort.py): raw events
-    collapse once to the (entity, week) activity tier, cohorts derive
-    from a tier-sized window, the matrix is |cohorts|×|offsets| rows.
-    Period indices are epoch-µs integer divisions, so the oracle
-    replays them bit-for-bit."""
-    from mq_to_db_spark.operators.cohort import cohort_retention
-
-    return cohort_retention(_events(spark, sf_dir), period="week")
-
-
-def q_seasonal_hod_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day seasonal baseline + residual z-score per event_type
-    (operators/seasonal.py): the "is 03:00 low because it's 03:00?"
-    check.  One unordered-window exchange on (event_type, season_idx);
-    mean/std from exact BIGINT sums so the final double formula
-    hash-matches the DuckDB replay (streaming stddev over an unordered
-    partition would be summation-order dependent)."""
-    from mq_to_db_spark.operators.seasonal import with_seasonal
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return with_seasonal(
-        tier, ["event_type"], ts_col="bucket_start",
-        value_col="n_events", season="hod",
-    )
-
-
 def _dense_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-filled per-event_type hourly count grid over the events
     extent — the dense-series precondition shared by the row-lag
@@ -2731,6 +3525,14 @@ def _dense_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contract(
+    _asap_oracle,
+    # q_asap_1h below — dense-grid build (timegrid.step_grid,
+    # global_extent): |event_type| distinct rows × broadcast(1-row
+    # extent), exploded to the hour spine: output = |grid| · |types|,
+    # the same zero-fill grid materialization as gapfill_1h
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
 def q_asap_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASAP automatic smoothing-window selection (operators/asap.py —
     Rong & Bailis VLDB'17): per event_type hourly series (zero-filled
@@ -2748,460 +3550,6 @@ def q_asap_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_backtest_naive_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-origin forecast backtest (operators/backtest.py
-    backtest_naive): naive (persistence) and seasonal-naive (t-24h)
-    forecasters scored at every origin of the zero-filled hourly grid,
-    aggregated per (event_type, day) — exact BIGINT error sums, wMAPE
-    instead of sMAPE (both ratio terms exact, a per-term double sum
-    would be order-dependent), MASE = seasonal/naive error ratio over
-    the shared evaluation set.  The oracle replays both lags and every
-    division with the identical windows."""
-    from mq_to_db_spark.operators.backtest import backtest_naive
-
-    return backtest_naive(
-        _dense_hourly(spark, sf_dir),
-        ["event_type"],
-        value_col="v",
-        season=24,
-        period="day",
-    )
-
-
-def q_resets_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prometheus resets() per (event_type, 1h) bucket
-    (operators/counters.py counter_resets): restart detector paired
-    with counter_increase — same micro-unit scaling, same one-exchange
-    lag shape, bucket agg reuses the lag window's partitioning."""
-    from mq_to_db_spark.operators.counters import counter_resets
-
-    ev = _events(spark, sf_dir).select(
-        "event_type",
-        "ts",
-        "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    return counter_resets(
-        ev, ["event_type"], ts_col="ts", value_col="v", tier="1h",
-        tiebreak=("event_id",),
-    )
-
-
-#: SLO contract parameters — 'error' events against a 95% availability
-#: target, paged only when the 1h AND 6h windows both burn ≥5× budget
-#: pace (Google SRE Workbook multiwindow shape).  budget is computed as
-#: the double expression (1.0 - target) in BOTH engines so the division
-#: operand is bit-identical.
-SLO_TARGET = 0.95
-SLO_THRESHOLD = 5.0
-SLO_WINDOWS = {"1h": 3600, "6h": 6 * 3600}
-
-
-def q_slo_burn_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiwindow SLO error-budget burn rate over the events stream
-    (operators/slo.py): one hash exchange collapses outcomes to exact
-    BIGINT 1h tier counts, trailing time-RANGE windows (gap-proof) give
-    the 1h/6h error ratios, burn = ratio / (1 - target).  The alert the
-    reference's ack/reject counters (internal/metrics/metrics.go) feed
-    in production, engine-side."""
-    from mq_to_db_spark.operators.slo import slo_burn
-
-    return slo_burn(
-        _events(spark, sf_dir),
-        [],
-        bad=F.col("event_type") == "error",
-        ts_col="ts",
-        tier="1h",
-        windows=SLO_WINDOWS,
-        slo_target=SLO_TARGET,
-        threshold=SLO_THRESHOLD,
-    )
-
-
-#: BM25 contract parameters — distinct literal terms spanning high- and
-#: low-df vocabulary so idf actually differentiates
-BM25_TERMS = ["spark", "join", "dup"]
-BM25_K = 15
-
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-k lexical retrieval over the documents corpus
-    (operators/ranking.py): per-term tf as array expressions (narrow),
-    corpus stats one broadcast single-row aggregate, top-k a
-    TakeOrderedAndProject — the corpus never shuffles.  Scores summed
-    in fixed query-term order so the double chain is bit-identical to
-    the DuckDB replay."""
-    from mq_to_db_spark.operators.ranking import bm25_topk
-
-    return bm25_topk(_docs(spark, sf_dir), BM25_TERMS, k=BM25_K)
-
-
-def q_changes_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL changes() per (event_type, 1h) bucket
-    (operators/derivatives.py discrete_changes): count of samples whose
-    value differs from their series-predecessor — pure equality compare,
-    no arithmetic, so doubles replay exactly.  Same one-exchange
-    lag-then-bucket-agg shape as counter_increase."""
-    from mq_to_db_spark.operators.derivatives import discrete_changes
-
-    return discrete_changes(
-        _events(spark, sf_dir),
-        ["event_type"],
-        ts_col="ts",
-        value_col="value",
-        tier="1h",
-        tiebreak=("event_id",),
-    )
-
-
-def q_idelta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL idelta() per (event_type, 1h): last sample minus
-    second-to-last within the bucket (operators/derivatives.py) — window
-    + agg on the same (keys, bucket) hash, one exchange; the result is a
-    single double subtraction, bit-identical cross-engine."""
-    from mq_to_db_spark.operators.derivatives import idelta
-
-    return idelta(
-        _events(spark, sf_dir),
-        ["event_type"],
-        ts_col="ts",
-        value_col="value",
-        tier="1h",
-        tiebreak=("event_id",),
-    ).select(
-        "event_type", "bucket_start", F.round("idelta", 6).alias("idelta")
-    )
-
-
-def q_delta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL delta() per (event_type, 1h): last sample minus FIRST
-    sample — the gauge counterpart of increase, no reset folding
-    (operators/derivatives.py gauge_delta).  ONE hash agg, no window:
-    both endpoints picked by max_by/min_by on the (ts, event_id) struct
-    order; single-sample buckets read 0."""
-    from mq_to_db_spark.operators.derivatives import gauge_delta
-
-    return gauge_delta(
-        _events(spark, sf_dir),
-        ["event_type"],
-        ts_col="ts",
-        value_col="value",
-        tier="1h",
-        tiebreak=("event_id",),
-    ).select(
-        "event_type", "bucket_start", F.round("delta", 6).alias("delta")
-    )
-
-
-def q_deriv_predict_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL deriv() + predict_linear() per (event_type, day) over the
-    per-minute event-count series (operators/derivatives.py): the
-    least-squares fit runs on five exact BIGINT sums (x = whole minutes
-    since midnight, y = minute count) with map-side partial aggregation —
-    one shuffle of five longs per group — and only the final
-    slope/intercept/extrapolation formula touches doubles, in a fixed
-    expression order the DuckDB oracle replays bit-for-bit."""
-    from mq_to_db_spark.operators.derivatives import predict_linear
-
-    mins = (
-        _events(spark, sf_dir)
-        .groupBy("event_type", F.date_trunc("minute", F.col("ts")).alias("mt"))
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    fit = predict_linear(
-        mins,
-        ["event_type"],
-        ts_col="mt",
-        y_col="y",
-        tier="1d",
-        x_unit_seconds=60,
-        horizon_units=60,
-    )
-    return fit.select(
-        "event_type",
-        "bucket_start",
-        "n_samples",
-        F.round("slope", 6).alias("slope_per_min"),
-        F.round("predicted", 6).alias("predicted_1h_later"),
-    )
-
-
-def q_double_ewma_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brown double exponential smoothing (PromQL holt_winters family)
-    of the hourly count tier per event_type (operators/ewma.py
-    double_ewma): two chained C `ewm` kernels in ONE grouped Arrow scan;
-    level/trend/one-step forecast derived from the two unrounded states
-    in a fixed expression order the recursive-CTE oracle replays
-    bit-for-bit."""
-    from mq_to_db_spark.operators.ewma import double_ewma
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return double_ewma(
-        tier, ["event_type"], ts_col="bucket_start", value_col="n_events", alpha=0.3
-    )
-
-
-def q_mad_outliers_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust MAD outlier detection per (event_type, day)
-    (operators/rolling.py mad_outliers): median and MAD are PICKED order
-    statistics (percentile_disc(0.5) semantics, never interpolated), so
-    deviation and threshold are fixed-order IEEE ops on bit-identical
-    values — the DuckDB oracle replays the same rank-pick windows."""
-    from mq_to_db_spark.operators.rolling import mad_outliers
-
-    return mad_outliers(
-        _events(spark, sf_dir), ["event_type"], ts_col="ts",
-        value_col="value", tier="1d", k=3.0,
-    )
-
-
-def q_gap_stats_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-sample gap analysis per (event_type, day)
-    (operators/intervals.py gap_stats): µs distance to the series
-    predecessor, attributed to the later sample's bucket — exact BIGINT
-    max plus one double division for the mean.  The dead-sensor /
-    stalled-consumer primitive behind the reference's readiness probe."""
-    from mq_to_db_spark.operators.intervals import gap_stats
-
-    return gap_stats(
-        _events(spark, sf_dir), ["event_type"], ts_col="ts", tier="1d",
-        tiebreak=("event_id",),
-    )
-
-
-def q_cusum_alarms_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sided tabular CUSUM drift detection per (event_type, day)
-    (operators/changepoint.py cusum): the clamp recurrence replayed via
-    the exact prefix-sum / running-min identity — all-BIGINT micro-unit
-    arithmetic (target 50, slack 10, decision threshold 500 in value
-    units), so the per-day alarm counts and statistic maxima hash-match
-    a pure window-function DuckDB replay bit-for-bit."""
-    from mq_to_db_spark.operators.changepoint import cusum
-
-    ev = _events(spark, sf_dir).select(
-        "event_type", "ts", "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    c = cusum(
-        ev, ["event_type"], ts_col="ts", value_col="v",
-        target=50_000_000, slack=10_000_000, h=500_000_000,
-        tiebreak=("event_id",),
-    )
-    return c.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day_start")
-    ).agg(
-        F.count_if(F.col("alarm")).alias("n_alarms"),
-        F.max("cusum_hi").alias("max_cusum_hi"),
-        F.max("cusum_lo").alias("max_cusum_lo"),
-    )
-
-
-def q_alert_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prometheus ``expr > x for: d`` in batch
-    (operators/changepoint.py threshold_episodes): gaps-and-islands
-    runs of consecutive samples with value > 50, kept only when the run
-    spanned ≥ 30 minutes — one exchange, integer compares, exact
-    epoch-µs durations."""
-    from mq_to_db_spark.operators.changepoint import threshold_episodes
-
-    ev = _events(spark, sf_dir).select(
-        "event_type", "ts", "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    return threshold_episodes(
-        ev, ["event_type"], ts_col="ts", value_col="v",
-        threshold=50_000_000, min_duration_us=1_800_000_000,
-        tiebreak=("event_id",),
-    )
-
-
-def q_alert_silences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alertmanager silences in batch (operators/intervals.py
-    subtract_intervals): the alert episodes of ``alert_episodes`` minus
-    a deterministic maintenance calendar — per event_type, every other
-    day carries two OVERLAPPING silence windows [02:00, 07:00) and
-    [05:00, 09:30) (merged to [02:00, 09:30) by merge_intervals) — the
-    surviving rows are the spans that would actually have notified.
-    Config-sized subtrahend broadcast; the episode table never shuffles
-    for the join.  Exact BIGINT µs spans."""
-    from mq_to_db_spark.operators.changepoint import threshold_episodes
-    from mq_to_db_spark.operators.intervals import subtract_intervals
-
-    ev = _events(spark, sf_dir).select(
-        "event_type", "ts", "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    eps = threshold_episodes(
-        ev, ["event_type"], ts_col="ts", value_col="v",
-        threshold=50_000_000, min_duration_us=1_800_000_000,
-        tiebreak=("event_id",),
-    ).select("event_type", "start_ts", "end_ts")
-    days = spark.sql(
-        "SELECT explode(sequence(timestamp'2024-01-01', "
-        "timestamp'2024-01-27', interval 2 days)) AS d"
-    )
-    sil = (
-        ev.select("event_type").distinct()
-        .crossJoin(days)
-        .select(
-            "event_type",
-            F.explode(
-                F.array(
-                    F.struct(
-                        (F.col("d") + F.expr("interval 2 hours")).alias("s"),
-                        (F.col("d") + F.expr("interval 7 hours")).alias("e"),
-                    ),
-                    F.struct(
-                        (F.col("d") + F.expr("interval 5 hours")).alias("s"),
-                        (F.col("d") + F.expr("interval 9 hours 30 minutes")).alias("e"),
-                    ),
-                )
-            ).alias("w"),
-        )
-        .select("event_type", F.col("w.s").alias("start_ts"), F.col("w.e").alias("end_ts"))
-    )
-    return subtract_intervals(eps, sil, ["event_type"]).select(
-        "event_type", "start_ts", "end_ts", "sub_start", "sub_end", "sub_us"
-    )
-
-
-def q_openmetrics_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenMetrics text exposition of the hourly count tier
-    (functions/serialize.py with_openmetrics): byte-stable
-    ``events_total{event_type="…"} v ts_s`` lines — pure JVM string
-    expressions, spec-escaped labels, whole-second timestamps; the
-    bridge that replays a rolled-up tier into any Prometheus-compatible
-    consumer.  Oracle rebuilds the exact bytes with SQL concat."""
-    from mq_to_db_spark.functions.serialize import with_openmetrics
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(
-            "event_type", F.date_trunc("hour", "ts").alias("bucket_start")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return with_openmetrics(
-        tier, "events_total", ["event_type"], "n_events"
-    ).select("event_type", "bucket_start", "n_events", "exposition")
-
-
-def q_openmetrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenMetrics scrape-side parse (functions/serialize.py
-    parse_openmetrics — the inverse of openmetrics_1h's exposition):
-    every output column here comes FROM THE PARSED TEXT (metric name,
-    label map, value, whole-second timestamp), never from the original
-    tier columns, and the oracle computes the tier directly — equality
-    proves the expose→parse roundtrip is lossless against an
-    independent engine.  Pure JVM regexp/replace/transform expressions,
-    no Python crossing (plan-asserted in tests)."""
-    from mq_to_db_spark.functions.serialize import (
-        parse_openmetrics,
-        with_openmetrics,
-    )
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(
-            "event_type", F.date_trunc("hour", "ts").alias("bucket_start")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    exposed = with_openmetrics(
-        tier, "events_total", ["event_type"], "n_events"
-    ).select("exposition")
-    parsed = parse_openmetrics(exposed)
-    return parsed.select(
-        F.col("om_metric").alias("metric"),
-        F.col("om_labels")["event_type"].alias("event_type"),
-        F.col("om_ts").alias("bucket_start"),
-        F.col("om_value").alias("n_events"),
-    )
-
-
-def q_wow_delta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week offset comparison per (event_type, hour)
-    (operators/derivatives.py offset_delta): lag-168 over the
-    ZERO-FILLED per-key hourly grid — exact integer deltas, one
-    double-division ratio; one key-partitioned exchange."""
-    from mq_to_db_spark.operators.derivatives import offset_delta
-    from mq_to_db_spark.operators.rollup import bucket_col
-    from mq_to_db_spark.operators.timegrid import step_grid
-
-    bucketed = (
-        _events(spark, sf_dir)
-        .groupBy(
-            "event_type", bucket_col("1h", "ts").alias("bucket_start")
-        )
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    series = step_grid(
-        bucketed, "1 hour", ["event_type"], "bucket_start", global_extent=True
-    ).join(
-        bucketed, ["event_type", "bucket_start"], "left"
-    ).select(
-        "event_type", "bucket_start", F.coalesce("v", F.lit(0)).alias("v")
-    )
-    return offset_delta(series, ["event_type"], offset_buckets=168)
-
-
-def q_topk_others_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grafana "top N + Others" per day (operators/topk.py
-    top_k_with_others): top-3 users by event count keep identity, the
-    rest collapse to one exact-sum __others__ row so every day still
-    totals — tier-sized window shuffle + one re-agg, deterministic
-    ties (count desc, key asc)."""
-    from mq_to_db_spark.operators.topk import top_k_with_others
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.date_trunc("day", "ts").alias("day_start"),
-            F.col("user_id").cast("string").alias("user_key"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return top_k_with_others(
-        tier, ["day_start"], "user_key", "n_events", k=3
-    )
-
-
-def q_staleness_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prometheus staleness / absent_over_time per (event_type, hour)
-    over the DENSE grid (operators/intervals.py staleness): freshest-
-    sample age as of each bucket end, exact BIGINT µs, silent buckets
-    included — per-series LOCF window over tier rows, never keyless."""
-    from mq_to_db_spark.operators.intervals import staleness
-
-    return staleness(
-        _events(spark, sf_dir), ["event_type"], ts_col="ts", tier="1h"
-    )
-
-
-def q_quota_violations_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window rate-limit audit per (event_type, day)
-    (operators/quota.py sliding_quota): trailing-2h sample count via a
-    true RANGE frame on epoch-µs (time-based, not row-based — the rate
-    limiter contract), violations where count > 10 — BIGINT end-to-end,
-    identical frame replayed by DuckDB."""
-    from mq_to_db_spark.operators.quota import sliding_quota
-
-    q = sliding_quota(
-        _events(spark, sf_dir), ["event_type"], ts_col="ts",
-        window_us=7_200_000_000, limit=10,
-    )
-    return q.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day_start")
-    ).agg(
-        F.count_if(F.col("violation")).alias("n_violations"),
-        F.max("win_count").alias("max_win_count"),
-    )
-
-
 #: GCRA audit contract parameters: per event_type (the per-endpoint
 #: limiter), sustained 1 event / 10 min with burst depth 3 (tau =
 #: 20 min) — binding on ~4% of sf0.01 events, so the audit surface is
@@ -3210,6 +3558,39 @@ GCRA_PERIOD_US = 600_000_000
 GCRA_BURST = 3
 
 
+@contract(f"""
+            WITH b AS (
+                SELECT event_type, ts, event_id,
+                       row_number() OVER (
+                           PARTITION BY event_type ORDER BY ts, event_id
+                       ) AS rn,
+                       epoch_us(ts) AS tus
+                FROM events
+            ),
+            u AS (
+                SELECT *, tus - (rn - 1) * {GCRA_PERIOD_US} AS u FROM b
+            ),
+            p AS (
+                SELECT *, max(u) OVER (
+                           PARTITION BY event_type ORDER BY ts, event_id
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                       ) AS pm
+                FROM u
+            ),
+            d AS (
+                SELECT *, greatest(
+                           coalesce(pm - {(GCRA_BURST - 1) * GCRA_PERIOD_US}
+                                    - u, 0), 0)::BIGINT AS delay_us
+                FROM p
+            )
+            SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                   count(*)::BIGINT AS n_events,
+                   CAST(count(*) FILTER (WHERE delay_us > 0) AS BIGINT)
+                       AS n_throttled,
+                   max(delay_us) AS max_delay_us,
+                   sum(delay_us)::BIGINT AS sum_delay_us
+            FROM d GROUP BY 1, 2
+        """)
 def q_gcra_throttle_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GCRA / token-bucket rate-limiter audit (operators/quota.py
     gcra_throttle) — the sibling of quota_violations_1d's sliding
@@ -3240,6 +3621,44 @@ def q_gcra_throttle_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contract("""
+            WITH active AS (
+                SELECT DISTINCT user_id AS e, date_trunc('day', ts) AS d
+                FROM events
+            ),
+            dau AS (
+                SELECT d AS day_start, count(*)::BIGINT AS dau
+                FROM active GROUP BY 1
+            ),
+            contrib AS (
+                SELECT e, unnest(generate_series(
+                    d, d + INTERVAL 27 DAY, INTERVAL 1 DAY)) AS day_start
+                FROM active
+            ),
+            mau AS (
+                SELECT day_start, count(DISTINCT e)::BIGINT AS mau
+                FROM contrib GROUP BY 1
+            ),
+            ext AS (
+                SELECT date_trunc('day', min(ts)) AS lo,
+                       date_trunc('day', max(ts)) AS hi
+                FROM events
+            ),
+            grid AS (
+                SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY))
+                    AS day_start
+                FROM ext
+            )
+            SELECT g.day_start,
+                   coalesce(dau, 0)::BIGINT AS dau,
+                   coalesce(mau, 0)::BIGINT AS mau,
+                   CASE WHEN coalesce(mau, 0) > 0 THEN
+                       round(coalesce(dau, 0)::DOUBLE / mau::DOUBLE, 6)
+                   END AS stickiness
+            FROM grid g
+            LEFT JOIN dau USING (day_start)
+            LEFT JOIN mau USING (day_start)
+        """)
 def q_stickiness_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU/MAU stickiness (operators/cohort.py stickiness): per dense
     calendar day, today's distinct actives over the trailing-28-day
@@ -3254,320 +3673,1635 @@ def q_stickiness_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_max_drawdown_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Max drawdown per (event_type, day) (operators/quota.py
-    max_drawdown): largest drop from the running prefix max to a later
-    sample — BIGINT micro-units, one exchange (the bucket agg reuses
-    the window's partitioning)."""
-    from mq_to_db_spark.operators.quota import max_drawdown
-
-    ev = _events(spark, sf_dir).select(
-        "event_type", "ts", "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    return max_drawdown(
-        ev, ["event_type"], ts_col="ts", value_col="v", tier="1d",
-        tiebreak=("event_id",),
-    )
-
-
-def q_lexical_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-richness curation signals per document
-    (functions/text.py lexical_stats): token/type/hapax counts plus
-    TTR / hapax ratio / top-token share — every number a BIGINT count
-    or one division of two exact BIGINTs, so the DuckDB replay is
-    hash-exact; both exchanges carry map-side-combined
-    distinct-count rows, never the raw token stream."""
-    from mq_to_db_spark.functions.text import lexical_stats
-
-    return lexical_stats(_docs(spark, sf_dir), text_col="text",
-                         id_col="doc_id")
-
-
-def q_autocorr_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1 autocorrelation of the zero-filled hourly event-count
-    series, per day (operators/correlate.py autocorr): the
-    persistence/seasonality diagnostic — pairs lag within the day via a
-    day-partitioned window (never keyless), then the exact-moment
-    Pearson (six BIGINT sums, one fixed-order double formula)."""
-    from mq_to_db_spark.operators.correlate import autocorr
-    from mq_to_db_spark.operators.rollup import bucket_col
-    from mq_to_db_spark.operators.timegrid import step_grid
-
-    bucketed = (
-        _events(spark, sf_dir)
-        .groupBy(bucket_col("1h", "ts").alias("bucket_start"))
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    series = step_grid(bucketed, "1 hour", ts_col="bucket_start").join(
-        bucketed, "bucket_start", "left"
-    ).select("bucket_start", F.coalesce("v", F.lit(0)).alias("v"))
-    out = autocorr(series, lag=1, group_unit="day", v_col="v")
-    return out.select(
-        "group_start", "n_pairs", F.round("autocorr", 6).alias("autocorr")
-    )
-
-
-def q_series_churn_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Series-cardinality churn per day (operators/lifecycle.py
-    series_churn): distinct users active / born (first-ever sample) /
-    died (last-ever sample) per bucket — the head-series-churn
-    governance view, exact BIGINT counts; the per-series extents shuffle
-    once on the series key, the bucket counts shuffle only #series
-    rows."""
-    from mq_to_db_spark.operators.lifecycle import series_churn
-
-    return series_churn(
-        _events(spark, sf_dir), ["user_id"], ts_col="ts", tier="1d"
-    )
-
-
-def q_exemplars_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenMetrics exemplars per (event_type, hour)
-    (operators/lifecycle.py exemplars): the max-value sample with its
-    coordinates, deterministic under ties via the (value, ts, id)
-    struct-max total order — ONE groupBy, no window sort; the oracle
-    replays the same order with a row_number pick."""
-    from mq_to_db_spark.operators.lifecycle import exemplars
-
-    ev = _events(spark, sf_dir).select(
-        "event_type", "ts", "event_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    return exemplars(
-        ev, ["event_type"], ts_col="ts", value_col="v",
-        id_col="event_id", tier="1h",
-    )
-
-
-def _events_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with value as exact integer cents — the integer-scaled
-    input the exponential-histogram cross-engine exactness argument
-    needs (operators/nativehist.py module docstring)."""
-    return _events(spark, sf_dir).select(
-        "event_type", "ts", F.round(F.col("value") * 100, 0).cast("long").alias("v")
-    )
-
-
-def q_exphist_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native exponential histogram, cascaded (operators/nativehist.py
-    exp_histogram → cascade_exp_histogram → exp_hist_explode): 1h
-    sketches merged into 1d by entry-wise map addition — proof the
-    sketch is mergeable across the retention cascade — then flattened to
-    (event_type, day, bucket_idx, n).  schema=0 buckets (2^(i−1), 2^i]
-    over integer cents: ceil(log2(v)) is cross-engine deterministic
-    there, and the oracle replays it in EXACT integer arithmetic
-    (binary-string length + power-of-two bit test), so the comparison
-    is airtight.  All-JVM: two hash aggs + the map merge, no window."""
-    from mq_to_db_spark.operators.nativehist import (
-        cascade_exp_histogram,
-        exp_hist_explode,
-        exp_histogram,
-    )
-
-    h1 = exp_histogram(
-        _events_cents(spark, sf_dir), "1h", "v", keys=["event_type"]
-    )
-    d1 = cascade_exp_histogram(h1, "1d", keys=["event_type"])
-    return exp_hist_explode(d1, keys=["event_type"]).select(
-        "event_type", "bucket_start", "bucket_idx", "n"
-    )
-
-
-def q_exphist_quantile_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL ``histogram_quantile`` on native exponential histograms
-    (operators/nativehist.py exp_hist_quantile): p90 per (event_type,
-    day) from the cascaded sketch — cumulative-count bucket pick +
-    linear interpolation inside (2^(i−1), 2^i].  The oracle replicates
-    the estimator arithmetic operation-for-operation (same IEEE order),
-    so values hash-match at 6 dp.  Explode + per-(series, bucket) window
-    over ≤64 sketch entries — tiny, uniformly-keyed partitions."""
-    from mq_to_db_spark.operators.nativehist import (
-        cascade_exp_histogram,
-        exp_hist_quantile,
-        exp_histogram,
-    )
-
-    h1 = exp_histogram(
-        _events_cents(spark, sf_dir), "1h", "v", keys=["event_type"]
-    )
-    d1 = cascade_exp_histogram(h1, "1d", keys=["event_type"])
-    out = exp_hist_quantile(d1, 0.9, keys=["event_type"])
-    return out.select(
-        "event_type", "bucket_start", F.round("qv", 6).alias("p90")
-    )
-
-
-def q_exphist_fraction_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL ``histogram_fraction(0, 5000, h)`` on the native
-    exponential sketch (operators/nativehist.py exp_hist_fraction):
-    share of observations ≤ 5000 cents per (event_type, day) — whole
-    buckets sum as BIGINT, the single straddling bucket ((4096, 8192]
-    here) contributes one closed-form double, so the result is
-    aggregation-order-independent and the oracle hash-matches at 6 dp.
-    One explode + ONE hash agg, no window."""
-    from mq_to_db_spark.operators.nativehist import (
-        cascade_exp_histogram,
-        exp_hist_fraction,
-        exp_histogram,
-    )
-
-    h1 = exp_histogram(
-        _events_cents(spark, sf_dir), "1h", "v", keys=["event_type"]
-    )
-    d1 = cascade_exp_histogram(h1, "1d", keys=["event_type"])
-    out = exp_hist_fraction(d1, 5000.0, keys=["event_type"])
-    return out.select(
-        "event_type", "bucket_start", F.round("fraction", 6).alias("frac_le")
-    )
-
-
-def q_distinct_over_time_1h10m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``count_distinct_over_time(user[1h])`` on the sliding 10-minute
-    grid (operators/resample.py over_time_grid distinct_col): distinct
-    active users per overlapping window via the same bounded explode —
-    fan-out = range/step — plus Spark's exact two-phase distinct
-    aggregate (partial dedup before the shuffle).  The unbounded-
-    cardinality scale path is the HLL sketch rollup; this is the exact
-    small-window tool a Grafana "active users (1h)" panel wants."""
-    from mq_to_db_spark.operators.resample import over_time_grid
-
-    ev = _events(spark, sf_dir).select(
-        "event_type", "ts", "event_id", "user_id",
-        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
-    )
-    out = over_time_grid(
-        ev, ["event_type"], value_col="v", range_s=3600, step_s=600,
-        tiebreak=("event_id",), distinct_col="user_id",
-    )
-    return out.select("event_type", "grid_ts", "n_samples", "n_distinct")
-
-
-def q_lww_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-write-wins out-of-order upsert (operators/replicas.py
-    lww_upsert): three deterministic ingest batches of the same points —
-    the original stream (seq 1), a correction wave (seq 2, every 3rd
-    event, value doubled) and a STALE replay arriving last but with the
-    lowest sequence (seq 0, every 5th event) — collapsed to one version
-    per logical point by a single max_by hash agg.  The oracle replays
-    the same union with a row_number pick; corrections win, stale
-    replays always lose."""
-    from mq_to_db_spark.operators.replicas import lww_upsert
-
-    ev = _events(spark, sf_dir).select("event_id", "ts", "value")
-    stream = (
-        ev.select(
-            "event_id", "ts", F.lit(1).cast("int").alias("seq"), "value"
-        )
-        .unionByName(
-            ev.filter(F.col("event_id") % 3 == 0).select(
-                "event_id", "ts", F.lit(2).cast("int").alias("seq"),
-                (F.col("value") * 2).alias("value"),
+@contract(
+    """
+            WITH ext AS (
+                SELECT date_trunc('hour', min(ts)) AS lo,
+                       date_trunc('hour', max(ts)) AS hi
+                FROM events
+            ),
+            grid AS (
+                SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket_start
+                FROM ext
+            ),
+            types AS (SELECT DISTINCT event_type FROM events),
+            hourly AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                       count(*)::BIGINT AS n
+                FROM events GROUP BY 1, 2
+            ),
+            dense AS (
+                SELECT g.bucket_start, t.event_type, coalesce(h.n, 0)::BIGINT AS v
+                FROM grid g CROSS JOIN types t
+                LEFT JOIN hourly h USING (bucket_start, event_type)
+            ),
+            lagged AS (
+                SELECT event_type, bucket_start, v AS y,
+                       lag(v, 1) OVER w AS f_naive,
+                       lag(v, 24) OVER w AS f_seas
+                FROM dense
+                WINDOW w AS (PARTITION BY event_type ORDER BY bucket_start)
+            ),
+            e AS (
+                SELECT * FROM lagged
+                WHERE f_naive IS NOT NULL AND f_seas IS NOT NULL
+            ),
+            agg AS (
+                SELECT event_type,
+                       date_trunc('day', bucket_start) AS period_start,
+                       count(*)::BIGINT AS n_eval,
+                       sum(abs(y - f_naive))::BIGINT AS abs_err_naive,
+                       sum(abs(y - f_seas))::BIGINT AS abs_err_seasonal,
+                       sum(y - f_seas)::BIGINT AS err_seas,
+                       sum(abs(y))::BIGINT AS abs_y
+                FROM e GROUP BY 1, 2
             )
-        )
-        .unionByName(
-            ev.filter(F.col("event_id") % 5 == 0).select(
-                "event_id", "ts", F.lit(0).cast("int").alias("seq"),
-                (F.col("value") * 10).alias("value"),
+            SELECT event_type, period_start, n_eval,
+                   abs_err_naive, abs_err_seasonal,
+                   round(abs_err_naive::DOUBLE / n_eval::DOUBLE, 6) AS mae_naive,
+                   round(abs_err_seasonal::DOUBLE / n_eval::DOUBLE, 6) AS mae_seasonal,
+                   round(err_seas::DOUBLE / n_eval::DOUBLE, 6) AS bias_seasonal,
+                   round(CASE WHEN abs_y != 0 THEN
+                       abs_err_seasonal::DOUBLE / abs_y::DOUBLE END, 6)
+                       AS wmape_seasonal,
+                   round(CASE WHEN abs_err_naive != 0 THEN
+                       abs_err_seasonal::DOUBLE / abs_err_naive::DOUBLE END, 6)
+                       AS mase
+            FROM agg
+        """,
+    # same _dense_hourly grid build as asap_1h
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_backtest_naive_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling-origin forecast backtest (operators/backtest.py
+    backtest_naive): naive (persistence) and seasonal-naive (t-24h)
+    forecasters scored at every origin of the zero-filled hourly grid,
+    aggregated per (event_type, day) — exact BIGINT error sums, wMAPE
+    instead of sMAPE (both ratio terms exact, a per-term double sum
+    would be order-dependent), MASE = seasonal/naive error ratio over
+    the shared evaluation set.  The oracle replays both lags and every
+    division with the identical windows."""
+    from mq_to_db_spark.operators.backtest import backtest_naive
+
+    return backtest_naive(
+        _dense_hourly(spark, sf_dir),
+        ["event_type"],
+        value_col="v",
+        season=24,
+        period="day",
+    )
+
+
+# M4: the four per-bucket point picks replayed as rank-1 rows
+# under the SAME total orders ((ts, event_id) for first/last,
+# (value, ts, event_id) for min/max), DISTINCT = array_distinct
+@contract("""
+            WITH r AS (
+                SELECT event_type,
+                       date_trunc('hour', ts) AS bucket_start, ts, value,
+                       row_number() OVER (
+                           PARTITION BY event_type, date_trunc('hour', ts)
+                           ORDER BY ts, event_id) AS rf,
+                       row_number() OVER (
+                           PARTITION BY event_type, date_trunc('hour', ts)
+                           ORDER BY ts DESC, event_id DESC) AS rl,
+                       row_number() OVER (
+                           PARTITION BY event_type, date_trunc('hour', ts)
+                           ORDER BY value, ts, event_id) AS rmin,
+                       row_number() OVER (
+                           PARTITION BY event_type, date_trunc('hour', ts)
+                           ORDER BY value DESC, ts DESC, event_id DESC
+                       ) AS rmax
+                FROM events WHERE value IS NOT NULL
             )
-        )
-    )
-    return lww_upsert(stream, ["event_id"], ts_col="ts", seq_col="seq").select(
-        "event_id", "ts", "seq", "value"
-    )
+            SELECT DISTINCT event_type, bucket_start, ts, value
+            FROM r WHERE 1 IN (rf, rl, rmin, rmax)
+        """)
+def q_m4_1h(spark, sf_dir):
+    """M4 visualization downsample per (event_type, 1h) — the error-free
+    line-rendering sample set (Jugel et al., VLDB 2014): the DISTINCT
+    first / last / min-value / max-value POINTS of each pixel bucket
+    with their real timestamps (operators/downsample.py downsample_m4).
+    ONE hash aggregation folds all four min_by/max_by picks, then a
+    narrow array_distinct + explode — no second shuffle, no window."""
+    from mq_to_db_spark.operators.downsample import downsample_m4
 
-
-def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based mixture sampling (operators/sampling.py
-    sample_mixture): α = 0.5 re-weighting across document sources —
-    rare domains upweighted toward uniform, keep-rates r_d = min(1,
-    C·n_d^−½) derived from ONE tiny domain-count agg, membership by the
-    content-addressed 60-bit coin.  The oracle re-derives the rates and
-    replays the exact membership — thresholds are floor(r·2^60) BIGINTs,
-    so the comparison is integer-exact."""
-    from mq_to_db_spark.operators.sampling import sample_mixture
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
-    return sample_mixture(
-        docs, "doc_id", "source", alpha=0.5, target_rows=250.0, seed=42
-    ).select("doc_id", "source")
-
-
-def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic epoch shuffle + round-robin sharding over the
-    corpus (operators/sampling.py epoch_shuffle): every document's
-    global shuffle position for (seed=42, epoch=1), split into 8 shards
-    — shard sizes differ by ≤1 and each shard is a uniform sample.  The
-    global rank is the range-partitioned running count (rangewin.py),
-    NOT a single-partition window — plan-asserted in tests; the oracle
-    replays the md5-coin order with row_number."""
-    from mq_to_db_spark.operators.sampling import epoch_shuffle
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return epoch_shuffle(docs, "doc_id", epoch=1, n_shards=8).select(
-        "doc_id", "shard", "pos"
+    return downsample_m4(
+        _events(spark, sf_dir), ["event_type"], ts_col="ts",
+        value_col="value", tier="1h", tiebreak=("event_id",),
     )
 
 
-def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4/RefinedWeb line-level boilerplate removal
-    (operators/linededup.py strip_boilerplate): documents are reshaped
-    deterministically into multi-line pages (own text + a corpus-wide
-    newsletter line + a per-source footer), then every line recurring
-    in ≥3 distinct documents is stripped — matching on the NORMALIZED
-    line via the md5 coin, removal of the ORIGINAL line text, order
-    preserved.  The boilerplate set is a driver-bounded literal InSet,
-    so the strip is a pure projection: the corpus text never rides a
-    shuffle."""
-    from mq_to_db_spark.operators.linededup import strip_boilerplate
+# bigram-LM self-perplexity: identical tokenizer, identical
+# corpus counts, and the SAME position-ordered fold (list_sort
+# by pos -> list_transform to ln terms -> left-assoc list_reduce
+# == Spark's aggregate over sort_array; the first fold step adds
+# 0.0, which is exact) — logprob and ppl hash-match bit-for-bit
+@contract(
+    """
+            WITH toks AS (
+                SELECT doc_id,
+                       list_filter(
+                           string_split_regex(lower(text), '[^a-z0-9]+'),
+                           x -> x <> '') AS t
+                FROM documents
+            ),
+            nz AS (SELECT * FROM toks WHERE len(t) > 0),
+            pos AS (
+                SELECT doc_id, t,
+                       unnest(range(1, len(t) + 1)) AS pos
+                FROM nz
+            ),
+            p2 AS (
+                SELECT doc_id, pos,
+                       CASE WHEN pos = 1 THEN '<s>'
+                            ELSE t[pos - 1] END AS h,
+                       t[pos] AS w
+                FROM pos
+            ),
+            bc AS (
+                SELECT h, w, CAST(count(*) AS BIGINT) AS c
+                FROM p2 GROUP BY 1, 2
+            ),
+            hc AS (SELECT h, CAST(sum(c) AS BIGINT) AS ch FROM bc GROUP BY 1),
+            vv AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM bc),
+            joined AS (
+                SELECT p2.doc_id, p2.pos, bc.c, hc.ch, vv.v
+                FROM p2
+                JOIN bc USING (h, w)
+                JOIN hc USING (h)
+                CROSS JOIN vv
+            ),
+            folded AS (
+                SELECT doc_id,
+                       CAST(count(*) AS BIGINT) AS n_tokens,
+                       CAST(sum(c) AS BIGINT) AS bigram_c_sum,
+                       CAST(count(*) FILTER (c = 1) AS BIGINT)
+                           AS n_singletons,
+                       list_reduce(
+                           list_prepend(CAST(0.0 AS DOUBLE),
+                               list_transform(
+                                   list_sort(list(
+                                       struct_pack(pos := pos, c := c,
+                                                   ch := ch, v := v))),
+                                   x -> ln(CAST(x.c + 1 AS DOUBLE))
+                                        - ln(CAST(x.ch + x.v AS DOUBLE)))),
+                           (a, b) -> a + b) AS lp
+                FROM joined GROUP BY doc_id
+            )
+            SELECT doc_id, n_tokens, bigram_c_sum, n_singletons,
+                   round(lp, 6) AS logprob,
+                   round(exp(-(lp / CAST(n_tokens AS DOUBLE))), 6) AS ppl
+            FROM folded
+        """,
+    # lm.py:bigram_lm_scores — token stream × broadcast(1-row vocab
+    # size V): the add-one denominator; output cardinality equals the
+    # stream side, same shape as bm25_topk's corpus-stats broadcast
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_lm_perplexity(spark, sf_dir):
+    """Corpus bigram-LM self-perplexity per document (operators/lm.py)
+    — the CCNet-style n-gram quality signal with the model trained on
+    the corpus itself: add-one smoothed p(w|h) from exact corpus
+    counts, per-doc log-prob summed in POSITION order (fixed-order
+    double chain), ppl = exp(-lp/n).  Bigram counts map-side combine;
+    the fold is one collect_list group of O(doc tokens)."""
+    from mq_to_db_spark.operators.lm import bigram_lm_scores
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d2 = docs.select(
-        "doc_id",
+    return bigram_lm_scores(_docs(spark, sf_dir))
+
+
+@contract("""
+            WITH h AS (
+                SELECT DISTINCT event_type,
+                       date_trunc('day', ts) AS bucket_start,
+                       ('0x' || substring(
+                           md5('42:' || CAST(user_id AS VARCHAR)),
+                           1, 15))::BIGINT AS h
+                FROM events WHERE user_id IS NOT NULL
+            ),
+            r AS (
+                SELECT *, row_number() OVER (
+                           PARTITION BY event_type, bucket_start
+                           ORDER BY h) AS rn
+                FROM h
+            )
+            SELECT event_type, bucket_start,
+                   CAST(count(*) AS BIGINT) AS n_hashes,
+                   max(CASE WHEN rn = 64 THEN h END) AS kth_hash,
+                   CASE WHEN count(*) < 64
+                        THEN CAST(count(*) AS DOUBLE)
+                        ELSE round(63.0 * 1152921504606846976.0
+                             / CAST(max(CASE WHEN rn = 64 THEN h END)
+                                    AS DOUBLE), 6)
+                   END AS est_distinct
+            FROM r WHERE rn <= 64
+            GROUP BY event_type, bucket_start
+        """)
+def q_kmv_distinct_1d(spark, sf_dir):
+    """KMV (k-minimum-values) distinct-user sketch per (event_type, 1d),
+    CASCADED from 1h sketches (operators/sketch.py kmv_sketch/kmv_merge)
+    — bottom-k(union) == bottom-k(union of bottom-ks), so the cascade is
+    bit-identical to building from raw, which the oracle does directly.
+    The mergeable-but-SQL-replayable sibling of the HLL rollup: hashes
+    ride the md5 coin, dedup is one map-side-combined hash agg, the
+    bottom-k trim a sort-based (spillable) window."""
+    from mq_to_db_spark.operators.sketch import (
+        kmv_estimate,
+        kmv_merge,
+        kmv_sketch,
+    )
+
+    hourly = kmv_sketch(
+        _events(spark, sf_dir), ["event_type"], "user_id", tier="1h", k=64
+    )
+    daily = kmv_merge(
+        hourly, ["event_type"], F.date_trunc("day", "bucket_start"), k=64
+    )
+    return kmv_estimate(daily, k=64).select(
+        "event_type", "bucket_start", "n_hashes", "kth_hash", "est_distinct"
+    )
+
+
+# Kaplan-Meier: same lifetimes/censor rule, same risk-set
+# integers, same running Σ ln(1-d/n) in duration order
+@contract(
+    """
+            WITH lt AS (
+                SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS ck,
+                       epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us,
+                       CASE WHEN max(ts) <
+                                 (SELECT max(ts) FROM events)
+                                 - INTERVAL 12 HOUR
+                            THEN 1 ELSE 0 END AS observed
+                FROM events GROUP BY 1
+            ),
+            by_t AS (
+                SELECT duration_us,
+                       CAST(count(*) FILTER (observed = 1) AS BIGINT)
+                           AS n_deaths,
+                       CAST(count(*) FILTER (observed = 0) AS BIGINT)
+                           AS n_censored
+                FROM lt GROUP BY 1
+            ),
+            risk AS (
+                SELECT *,
+                       (SELECT count(*) FROM lt)
+                       - sum(n_deaths + n_censored) OVER (
+                             ORDER BY duration_us
+                             ROWS UNBOUNDED PRECEDING)
+                       + (n_deaths + n_censored) AS n_at_risk
+                FROM by_t
+            ),
+            curve AS (
+                SELECT *,
+                       sum(CASE WHEN n_deaths > 0 AND n_deaths < n_at_risk
+                                THEN ln(1.0 - CAST(n_deaths AS DOUBLE)
+                                            / CAST(n_at_risk AS DOUBLE))
+                                ELSE 0.0 END) OVER (
+                           ORDER BY duration_us
+                           ROWS UNBOUNDED PRECEDING) AS lnS
+                FROM risk
+            )
+            SELECT duration_us,
+                   CAST(n_at_risk AS BIGINT) AS n_at_risk,
+                   n_deaths, n_censored,
+                   CASE WHEN n_deaths >= n_at_risk THEN 0.0
+                        ELSE round(exp(lnS), 6) END AS survival
+            FROM curve WHERE n_deaths > 0
+        """,
+    # survival.py:conv_lifetimes — lifetimes × broadcast(1-row corpus
+    # max ts): the censoring horizon; output = |convs|
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_survival_conv(spark, sf_dir):
+    """Kaplan-Meier survival over (user, event_type) activity-stream
+    lifetimes (operators/survival.py): right-censored at a 12h horizon
+    before the corpus max, exact BIGINT risk-set integers, survival via
+    the running Σ ln(1-d/n) executed range-partitioned (rangewin.py) —
+    never a single-partition window over the curve."""
+    from mq_to_db_spark.operators.survival import conv_lifetimes, kaplan_meier
+
+    streams = _events(spark, sf_dir).select(
         F.concat_ws(
-            "\n",
-            F.col("text"),
-            F.lit("Please SUBSCRIBE to our newsletter!"),
-            F.concat(F.lit("footer of "), F.col("source")),
-        ).alias("text2"),
+            ":", F.col("user_id").cast("string"), F.col("event_type")
+        ).alias("conv_id"),
+        "ts",
     )
-    out = strip_boilerplate(d2, min_docs=3, id_col="doc_id", text_col="text2")
-    return out.select("doc_id", "text_clean")
+    return kaplan_meier(
+        conv_lifetimes(streams, censor_horizon="12 hours")
+    )
+
+
+# turn echo: same transcript adapter, same tokenizer, same
+# distinct-bigram sets, same same-role lag pairing
+@contract("""
+            WITH t AS (
+                SELECT CAST(user_id AS VARCHAR) AS conv_id,
+                       event_type AS role,
+                       row_number() OVER (
+                           PARTITION BY user_id
+                           ORDER BY ts, event_id) - 1 AS turn_idx,
+                       list_filter(
+                           string_split_regex(lower(props), '[^a-z0-9]+'),
+                           x -> x <> '') AS toks
+                FROM events
+            ),
+            g AS (
+                SELECT conv_id, role, turn_idx,
+                       list_sort(list_distinct(
+                           CASE WHEN len(toks) >= 2
+                                THEN list_transform(
+                                    range(1, len(toks)),
+                                    i -> toks[i] || ' ' || toks[i + 1])
+                                ELSE []::VARCHAR[] END)) AS gr
+                FROM t
+            ),
+            p AS (
+                SELECT *, lag(gr) OVER (
+                           PARTITION BY conv_id, role
+                           ORDER BY turn_idx) AS pg
+                FROM g
+            )
+            SELECT conv_id, CAST(turn_idx AS INT) AS turn_idx, role,
+                   CAST(len(gr) AS BIGINT) AS n_grams,
+                   CAST(len(pg) AS BIGINT) AS n_prev_grams,
+                   CAST(len(list_intersect(gr, pg)) AS BIGINT) AS n_common,
+                   CAST(len(list_distinct(list_concat(gr, pg))) AS BIGINT)
+                       AS n_union,
+                   CASE WHEN len(list_distinct(list_concat(gr, pg))) > 0
+                        THEN round(
+                            CAST(len(list_intersect(gr, pg)) AS DOUBLE)
+                            / CAST(len(list_distinct(list_concat(gr, pg)))
+                                   AS DOUBLE), 6)
+                        ELSE 0.0 END AS jaccard,
+                   CASE WHEN len(gr) > 0
+                        THEN round(
+                            CAST(len(list_intersect(gr, pg)) AS DOUBLE)
+                            / CAST(len(gr) AS DOUBLE), 6)
+                        ELSE 0.0 END AS containment
+            FROM p WHERE pg IS NOT NULL
+        """)
+def q_turn_echo(spark, sf_dir):
+    """Cross-turn repetition over the transcript adapter
+    (operators/echo.py): distinct-bigram Jaccard/containment between
+    each turn and its same-role predecessor — the looping-assistant
+    quality signal.  ONE window shuffle on (conv, role); set sizes are
+    exact BIGINTs."""
+    from mq_to_db_spark.operators.echo import turn_echo
+
+    return turn_echo(_events_as_transcripts(spark, sf_dir))
+
+
+# Zipf fit: same (freq DESC, token ASC) ranking, same
+# fixed-order fold — accumulator as a DOUBLE[6] vector so
+# list_reduce walks the identical left-to-right chain
+@contract(
+    """
+            WITH c AS (
+                SELECT tok, CAST(count(*) AS BIGINT) AS freq
+                FROM (
+                    SELECT unnest(list_filter(
+                        string_split_regex(lower(text), '[^a-z0-9]+'),
+                        x -> x <> '')) AS tok
+                    FROM documents
+                ) GROUP BY 1
+            ),
+            tot AS (
+                SELECT CAST(count(*) AS BIGINT) AS vocab_size,
+                       CAST(sum(freq) AS BIGINT) AS total_tokens
+                FROM c
+            ),
+            top AS (
+                SELECT tok, freq FROM c
+                ORDER BY freq DESC, tok LIMIT 100
+            ),
+            arr AS (
+                SELECT list(CAST(freq AS DOUBLE)
+                            ORDER BY freq DESC, tok) AS fs,
+                       CAST(count(*) AS BIGINT) AS n_fit,
+                       list(tok ORDER BY freq DESC, tok)[1] AS top_token,
+                       CAST(max(freq) AS BIGINT) AS top_freq
+                FROM top
+            ),
+            folded AS (
+                SELECT n_fit, top_token, top_freq,
+                       list_reduce(
+                           list_prepend(
+                               [0.0, 0.0, 0.0, 0.0, 0.0, 0.0],
+                               list_transform(fs, f -> [f])),
+                           (a, e) -> [
+                               a[1] + 1,
+                               a[2] + ln(a[1] + 1),
+                               a[3] + ln(e[1]),
+                               a[4] + ln(a[1] + 1) * ln(a[1] + 1),
+                               a[5] + ln(a[1] + 1) * ln(e[1]),
+                               a[6] + ln(e[1]) * ln(e[1])
+                           ]) AS s
+                FROM arr
+            )
+            SELECT vocab_size, total_tokens, n_fit, top_token, top_freq,
+                   round((s[1] * s[5] - s[2] * s[3])
+                         / (s[1] * s[4] - s[2] * s[2]), 6) AS zipf_slope,
+                   round((s[3] - (s[1] * s[5] - s[2] * s[3])
+                                 / (s[1] * s[4] - s[2] * s[2]) * s[2])
+                         / s[1], 6) AS intercept,
+                   round((s[1] * s[5] - s[2] * s[3])
+                         * (s[1] * s[5] - s[2] * s[3])
+                         / ((s[1] * s[4] - s[2] * s[2])
+                            * (s[1] * s[6] - s[3] * s[3])), 6) AS r2
+            FROM folded CROSS JOIN tot
+        """,
+    # ranking.py:zipf_fit — 1-row fold result × broadcast(1-row
+    # vocab/total stats): a 1×1 join
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_zipf_fit(spark, sf_dir):
+    """Corpus Zipf rank-frequency fit (operators/ranking.py zipf_fit):
+    least squares of ln(freq) on ln(rank) over the top-100 tokens,
+    folded in ONE fixed-order aggregate (rank-sorted array) so the SQL
+    replay's left-to-right double chain agrees bit-for-bit; top-N via
+    TakeOrderedAndProject, never a global sort."""
+    from mq_to_db_spark.operators.ranking import zipf_fit
+
+    return zipf_fit(_docs(spark, sf_dir), top_n=100)
+
+
+# Theil-Sen: same hourly count series, same sorted-struct pair
+# expansion, same lower-median picks
+@contract("""
+            WITH hourly AS (
+                SELECT event_type, date_trunc('hour', ts) AS h,
+                       CAST(count(*) AS BIGINT) AS y
+                FROM events GROUP BY 1, 2
+            ),
+            day AS (
+                SELECT event_type,
+                       date_trunc('day', h) AS bucket_start,
+                       list_sort(list(struct_pack(
+                           x := (epoch_us(h)
+                                 - epoch_us(date_trunc('day', h)))
+                                // 3600000000,
+                           y := y))) AS pts
+                FROM hourly GROUP BY 1, 2
+            ),
+            sl AS (
+                SELECT event_type, bucket_start, pts,
+                       list_sort(list_filter(flatten(list_transform(
+                           range(1, len(pts) + 1),
+                           i -> list_transform(
+                               range(i + 1, len(pts) + 1),
+                               j -> CASE WHEN pts[j].x > pts[i].x
+                                    THEN CAST(pts[j].y - pts[i].y AS DOUBLE)
+                                         / CAST(pts[j].x - pts[i].x AS DOUBLE)
+                                    END))),
+                           s -> s IS NOT NULL)) AS slopes
+                FROM day
+            ),
+            m AS (
+                SELECT event_type, bucket_start, pts,
+                       CAST(len(pts) AS BIGINT) AS n_samples,
+                       CAST(len(slopes) AS BIGINT) AS n_pairs,
+                       CASE WHEN len(slopes) > 0
+                            THEN slopes[(len(slopes) + 1) // 2] END AS slope
+                FROM sl
+            )
+            SELECT event_type, bucket_start, n_samples, n_pairs,
+                   round(slope, 6) AS slope,
+                   CASE WHEN slope IS NOT NULL THEN round(
+                       list_sort(list_transform(pts,
+                           p -> CAST(p.y AS DOUBLE)
+                                - slope * CAST(p.x AS DOUBLE)))
+                       [(len(pts) + 1) // 2], 6) END AS intercept
+            FROM m
+        """)
+def q_theil_sen_1d(spark, sf_dir):
+    """Theil-Sen robust daily trend of the hourly event-count series
+    per event_type (operators/derivatives.py theil_sen): the median of
+    all pairwise slopes — the breakdown-robust sibling of
+    deriv_predict_1d's least squares.  Slopes are single divisions of
+    exact BIGINT diffs; both medians PICKED lower-median order
+    statistics; the O(n²) pair expansion stays inside array
+    expressions over the calendar-bounded (≤24-sample) tier series."""
+    from mq_to_db_spark.operators.derivatives import theil_sen
+    from mq_to_db_spark.operators.rollup import bucket_col
+
+    hourly = (
+        _events(spark, sf_dir)
+        .groupBy("event_type", bucket_col("1h", "ts").alias("h"))
+        .agg(F.count(F.lit(1)).alias("y"))
+    )
+    return theil_sen(
+        hourly, ["event_type"], ts_col="h", y_col="y", tier="1d",
+        x_unit_seconds=3600,
+    )
+
+
+def _benford_digits_oracle() -> str:
+    # the P literals are the PYTHON-computed doubles (repr = shortest
+    # round-trip, parses to identical bits), so libm log10 never runs
+    # inside DuckDB.  The list is cast to DOUBLE[]: DuckDB reads bare
+    # 17-digit literals as DECIMAL(18,17), which would make
+    # benford_share a DECIMAL column
+    from mq_to_db_spark.operators.benford import BENFORD_P
+
+    p_sql = f"CAST([{', '.join(repr(p) for p in BENFORD_P)}] AS DOUBLE[])"
+    return f"""
+            WITH c AS (
+                SELECT event_type,
+                       CAST(round(value * 100) AS BIGINT) AS v
+                FROM events
+            ),
+            d AS (
+                SELECT event_type,
+                       CAST(substring(CAST(abs(v) AS VARCHAR), 1, 1) AS INT)
+                           AS digit,
+                       CAST(count(*) AS BIGINT) AS n_obs
+                FROM c WHERE v <> 0 GROUP BY 1, 2
+            ),
+            t AS (
+                SELECT *, sum(n_obs) OVER (PARTITION BY event_type) AS tot
+                FROM d
+            )
+            SELECT event_type, digit, n_obs,
+                   CAST(tot AS BIGINT) AS n_total,
+                   round(CAST(n_obs AS DOUBLE) / CAST(tot AS DOUBLE), 6)
+                       AS obs_share,
+                   round(({p_sql})[digit], 6) AS benford_share,
+                   round(abs(CAST(n_obs AS DOUBLE) / CAST(tot AS DOUBLE)
+                             - ({p_sql})[digit]), 6) AS abs_dev
+            FROM t
+        """
+
+
+# Benford digit table: same cents cast, same string first char,
+# same literal log10 expectations (embedded full-precision)
+@contract(_benford_digits_oracle)
+def q_benford_digits(spark, sf_dir):
+    """Benford first-significant-digit audit of the integer-cents value
+    column per event_type (operators/benford.py): observed counts and
+    shares vs log10(1+1/d) — the data-integrity forensics screen.
+    Digit extraction is the first char of the BIGINT's decimal string
+    (never float log10 bucketing); ONE map-side-combined hash agg."""
+    from mq_to_db_spark.operators.benford import benford_digits
+
+    return benford_digits(_events_cents(spark, sf_dir), "v", ["event_type"])
+
+
+def _benford_chi2_oracle() -> str:
+    # the chi2 chain is the same left-associative nine-term fold as
+    # operators/benford.py, over the same P literals
+    from mq_to_db_spark.operators.benford import BENFORD_P
+
+    count_cols = ",\n                       ".join(
+        f"CAST(count(*) FILTER (digit = {d}) AS BIGINT) AS d{d}"
+        for d in range(1, 10)
+    )
+    chi2_chain = "0.0" + "".join(
+        f"""
+                   + ((CAST(d{d} AS DOUBLE)
+                       - CAST(n_total AS DOUBLE) * {BENFORD_P[d - 1]!r})
+                      * (CAST(d{d} AS DOUBLE)
+                         - CAST(n_total AS DOUBLE) * {BENFORD_P[d - 1]!r}))
+                     / (CAST(n_total AS DOUBLE) * {BENFORD_P[d - 1]!r})"""
+        for d in range(1, 10)
+    )
+    return f"""
+            WITH c AS (
+                SELECT event_type,
+                       CAST(round(value * 100) AS BIGINT) AS v
+                FROM events
+            ),
+            d AS (
+                SELECT event_type,
+                       CAST(substring(CAST(abs(v) AS VARCHAR), 1, 1) AS INT)
+                           AS digit
+                FROM c WHERE v <> 0
+            ),
+            g AS (
+                SELECT event_type,
+                       CAST(count(*) AS BIGINT) AS n_total,
+                       {count_cols}
+                FROM d GROUP BY 1
+            )
+            SELECT event_type, n_total,
+                   round({chi2_chain}, 6) AS chi2
+            FROM g
+        """
+
+
+# Benford chi2: the same nine-term left-associative chain
+@contract(_benford_chi2_oracle)
+def q_benford_chi2(spark, sf_dir):
+    """Benford chi-square goodness-of-fit per event_type
+    (operators/benford.py benford_chi2): Σ (n_d − N·p_d)²/(N·p_d)
+    folded in digit order — a fixed-order nine-term chain, never an
+    unordered SUM."""
+    from mq_to_db_spark.operators.benford import benford_chi2
+
+    return benford_chi2(_events_cents(spark, sf_dir), "v", ["event_type"])
+
+
+# readability: same three regex counts, same fixed-order score
+@contract("""
+            WITH k AS (
+                SELECT doc_id,
+                       CAST(coalesce(len(regexp_extract_all(
+                           text, '[A-Za-z0-9'']+')), 0) AS BIGINT) AS w,
+                       CAST(coalesce(len(regexp_extract_all(
+                           text, '[.!?]+')), 0) AS BIGINT) AS s,
+                       CAST(coalesce(len(regexp_extract_all(
+                           text, '[aeiouyAEIOUY]+')), 0) AS BIGINT) AS vg
+                FROM documents
+            )
+            SELECT doc_id,
+                   w AS n_words,
+                   CASE WHEN w = 0 THEN 0 ELSE greatest(s, 1) END
+                       AS n_sentences,
+                   greatest(vg, w) AS n_syllables,
+                   CASE WHEN w > 0 THEN round(
+                       206.835
+                       - 1.015 * (CAST(w AS DOUBLE)
+                                  / CAST(greatest(s, 1) AS DOUBLE))
+                       - 84.6 * (CAST(greatest(vg, w) AS DOUBLE)
+                                 / CAST(w AS DOUBLE)), 6) END AS flesch
+            FROM k
+        """)
+def q_readability(spark, sf_dir):
+    """Flesch reading ease per document (functions/text.py): the three
+    RE2-counted integers (words / sentence runs / vowel-group
+    syllables with a one-per-word floor) and the classic 206.835 −
+    1.015·wps − 84.6·spw score — three fixed-order double ops over
+    exact BIGINTs, pure codegen."""
+    from mq_to_db_spark.functions.text import (
+        flesch_reading_ease,
+        readability_counts,
+    )
+
+    k = readability_counts("text")
+    return _docs(spark, sf_dir).select(
+        "doc_id",
+        k["n_words"].alias("n_words"),
+        k["n_sentences"].alias("n_sentences"),
+        k["n_syllables"].alias("n_syllables"),
+        F.round(flesch_reading_ease("text"), 6).alias("flesch"),
+    )
+
+
+# Holt-Winters recursive-member expressions: the level update is
+# inlined wherever the python scan reuses l_new (pure expressions —
+# every repetition evaluates to the identical double)
+_HW_X = "CAST(o.n_events AS DOUBLE)"
+_HW_LNEW = f"(0.3 * ({_HW_X} - r.seas[1]) + (1 - 0.3) * (r.lev + r.tr))"
+_HW_BNEW = f"(0.1 * ({_HW_LNEW} - r.lev) + (1 - 0.1) * r.tr)"
+_HW_SNEW = f"(0.2 * ({_HW_X} - {_HW_LNEW}) + (1 - 0.2) * r.seas[1])"
+
+
+# Holt-Winters: recursive CTE carrying (level, trend, DOUBLE[24]
+# seasonal ring) per series; identical literal op order; series
+# shorter than two seasons left-join to NULL like the engine
+@contract(f"""
+            WITH RECURSIVE tier AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_events
+                FROM events GROUP BY 1, 2
+            ),
+            ordered AS (
+                SELECT event_type, bucket_start, n_events,
+                       row_number() OVER (
+                           PARTITION BY event_type ORDER BY bucket_start
+                       ) AS rn,
+                       count(*) OVER (PARTITION BY event_type) AS cnt
+                FROM tier
+            ),
+            init AS (
+                SELECT event_type,
+                       CAST(sum(n_events) FILTER (rn <= 24) AS DOUBLE) AS s1,
+                       CAST(sum(n_events) FILTER (rn > 24 AND rn <= 48)
+                            AS DOUBLE) AS s2,
+                       list(CAST(n_events AS DOUBLE) ORDER BY rn)
+                           FILTER (rn <= 24) AS xs
+                FROM ordered WHERE cnt >= 48 GROUP BY event_type
+            ),
+            rec AS (
+                SELECT event_type,
+                       CAST(24 AS BIGINT) AS rn,
+                       s1 / 24 AS lev,
+                       (s2 / 24 - s1 / 24) / 24 AS tr,
+                       list_transform(xs, x -> x - s1 / 24) AS seas,
+                       CAST(NULL AS DOUBLE) AS seasonal_out,
+                       CAST(NULL AS DOUBLE) AS fitted
+                FROM init
+                UNION ALL
+                SELECT o.event_type, o.rn,
+                       {_HW_LNEW},
+                       {_HW_BNEW},
+                       list_append(r.seas[2:], {_HW_SNEW}),
+                       {_HW_SNEW},
+                       r.lev + r.tr + r.seas[1]
+                FROM rec r JOIN ordered o
+                  ON o.event_type = r.event_type AND o.rn = r.rn + 1
+            )
+            SELECT o.event_type, o.bucket_start, o.n_events,
+                   round(r.lev, 6) AS level,
+                   round(r.tr, 6) AS trend,
+                   round(r.seasonal_out, 6) AS seasonal,
+                   round(r.fitted, 6) AS fitted
+            FROM ordered o LEFT JOIN (
+                SELECT * FROM rec WHERE rn > 24
+            ) r ON o.event_type = r.event_type AND o.rn = r.rn
+        """)
+def q_holt_winters_1h(spark, sf_dir):
+    """Additive Holt-Winters (triple exponential smoothing) over the
+    hourly event-count series per event_type (operators/ewma.py
+    holt_winters_seasonal): level + trend + a 24-slot hour-of-day
+    seasonal ring, the full InfluxDB ``holt_winters()`` form (PromQL's
+    keeps only level+trend — holt_linear_1h).  One grouped Arrow batch
+    per series over calendar-bounded tier rows; all states unrounded
+    through the recurrence, literal-order IEEE ops mirrored by the
+    recursive-CTE oracle."""
+    from mq_to_db_spark.operators.ewma import holt_winters_seasonal
+    from mq_to_db_spark.operators.rollup import bucket_col
+
+    hourly = (
+        _events(spark, sf_dir)
+        .groupBy("event_type", bucket_col("1h", "ts").alias("bucket_start"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return holt_winters_seasonal(
+        hourly, ["event_type"], ts_col="bucket_start", value_col="n_events",
+        period=24, alpha=0.3, beta=0.1, gamma=0.2,
+    )
+
+
+# Bloom decontamination: full bit-level replay — same md5-coin
+# probe positions, same 63-bit word packing, same all-bits-set
+# membership, so even the designed false positives match
+@contract(f"""
+            WITH d AS (
+                SELECT doc_id, {_NORM_SQL} AS k FROM documents
+            ),
+            pos AS (
+                SELECT doc_id, i,
+                       ('0x' || substring(
+                           md5('bloom' || i || ':' || k), 1, 15))::BIGINT
+                       % 256 AS p
+                FROM d, unnest([1, 2, 3, 4]) AS t(i)
+            ),
+            words AS (
+                SELECT p // 63 AS word,
+                       bit_or(1::BIGINT << CAST(p % 63 AS INT)) AS bits
+                FROM pos WHERE doc_id % 7 = 0 GROUP BY 1
+            ),
+            hits AS (
+                SELECT pos.doc_id,
+                       bool_and(w.bits IS NOT NULL
+                                AND (w.bits
+                                     & (1::BIGINT << CAST(pos.p % 63 AS INT)))
+                                    = (1::BIGINT
+                                       << CAST(pos.p % 63 AS INT)))
+                           AS bloom_hit
+                FROM pos LEFT JOIN words w ON w.word = pos.p // 63
+                GROUP BY 1
+            )
+            SELECT d.doc_id, d.doc_id % 7 = 0 AS is_eval, h.bloom_hit
+            FROM d JOIN hits h USING (doc_id)
+        """)
+def q_bloom_decontaminate(spark, sf_dir):
+    """Bloom-filter decontamination (operators/contamination.py
+    bloom_build/bloom_member): the scale path for eval sets too big to
+    broadcast raw — k=4 md5-coin probes into a 256-bit filter packed
+    as 63-bit BIGINT words, membership = all probe bits set.  Exact on
+    negatives (proof of cleanliness); m is deliberately UNDERSIZED so
+    ~20% of clean docs false-positive at sf0.01, and the oracle replays
+    the full bit construction so every one of them matches exactly —
+    the production m comes from the standard -n·k/ln(1-fpr^(1/k))
+    sizing, the replay discipline is what this query pins."""
+    from mq_to_db_spark.operators.contamination import (
+        bloom_build,
+        bloom_member,
+    )
+    from mq_to_db_spark.functions.text import normalize_text
+
+    docs = _docs(spark, sf_dir).select(
+        "doc_id", normalize_text("text").alias("k")
+    )
+    eval_df = docs.where(F.col("doc_id") % 7 == 0)
+    bloom = bloom_build(eval_df, "k", m_bits=256, k=4)
+    out = bloom_member(docs, "k", bloom, ["doc_id"], m_bits=256, k=4)
+    return out.select(
+        "doc_id", (F.col("doc_id") % 7 == 0).alias("is_eval"), "bloom_hit"
+    )
+
+
+# winsorize: same rank window (value, event_id), same
+# ceil-rank picks, same clamp projection
+@contract("""
+            WITH t AS (
+                SELECT event_id, event_type,
+                       date_trunc('day', ts) AS bucket_start, value
+                FROM events
+            ),
+            r AS (
+                SELECT *,
+                       row_number() OVER (
+                           PARTITION BY event_type, bucket_start
+                           ORDER BY value, event_id) AS rn,
+                       count(*) OVER (
+                           PARTITION BY event_type, bucket_start) AS n
+                FROM t WHERE value IS NOT NULL
+            ),
+            b AS (
+                SELECT event_type, bucket_start,
+                       min(CASE WHEN rn = greatest(least(
+                           CAST(ceil(0.05 * n) AS BIGINT), n), 1)
+                           THEN value END) AS lo,
+                       max(CASE WHEN rn = greatest(least(
+                           CAST(ceil(0.95 * n) AS BIGINT), n), 1)
+                           THEN value END) AS hi
+                FROM r GROUP BY 1, 2
+            )
+            SELECT t.event_id, t.event_type, t.bucket_start, t.value,
+                   b.lo, b.hi,
+                   CASE WHEN t.value IS NULL THEN NULL
+                        ELSE least(greatest(t.value, b.lo), b.hi)
+                   END AS value_wins
+            FROM t LEFT JOIN b USING (event_type, bucket_start)
+        """)
+def q_winsorize_1d(spark, sf_dir):
+    """Winsorization at exact nearest-rank p05/p95 per (event_type, 1d)
+    (operators/normalize.py): the robust-preprocessing clamp before
+    mean-based tiers.  NO per-group buffer — one sort-based (spillable)
+    window ranks the rows, the two boundary rows per group filter out,
+    bounds broadcast-join back; the clamp is a pure projection."""
+    from mq_to_db_spark.operators.normalize import winsorize
+
+    out = winsorize(
+        _events(spark, sf_dir), ["event_type"], value_col="value",
+        tier="1d", p_lo=0.05, p_hi=0.95, tiebreak=("event_id",),
+    )
+    return out.select(
+        "event_id", "event_type", "bucket_start", "value", "lo", "hi",
+        "value_wins",
+    )
+
+
+# dispersion: dense-grid moments with the constant 1440
+# denominator, same unrounded mean/var feeding each round
+@contract("""
+            WITH pm AS (
+                SELECT event_type,
+                       date_trunc('day', ts) AS bucket_start,
+                       date_trunc('minute', ts) AS m,
+                       CAST(count(*) AS BIGINT) AS c
+                FROM events GROUP BY 1, 2, 3
+            ),
+            a AS (
+                SELECT event_type, bucket_start,
+                       CAST(sum(c) AS BIGINT) AS n_events,
+                       CAST(count(*) AS BIGINT) AS minutes_active,
+                       CAST(sum(c * c) AS BIGINT) AS sq
+                FROM pm GROUP BY 1, 2
+            )
+            SELECT event_type, bucket_start, n_events, minutes_active,
+                   round(CAST(n_events AS DOUBLE) / 1440.0, 6)
+                       AS mean_per_min,
+                   round(CAST(sq AS DOUBLE) / 1440.0
+                         - (CAST(n_events AS DOUBLE) / 1440.0)
+                           * (CAST(n_events AS DOUBLE) / 1440.0), 6)
+                       AS var_per_min,
+                   CASE WHEN n_events > 0 THEN round(
+                       (CAST(sq AS DOUBLE) / 1440.0
+                        - (CAST(n_events AS DOUBLE) / 1440.0)
+                          * (CAST(n_events AS DOUBLE) / 1440.0))
+                       / (CAST(n_events AS DOUBLE) / 1440.0), 6)
+                   END AS fano
+            FROM a
+        """)
+def q_dispersion_1d(spark, sf_dir):
+    """Index of dispersion (Fano factor) of the per-minute event count
+    per (event_type, 1d) (operators/burstiness.py dispersion_1d): the
+    burst-detection diagnostic — Poisson reads ~1, retry storms ≫ 1.
+    The minute grid is dense by construction (n = 1440 constant), so
+    silent minutes cost no grid join; exact BIGINT moments, two hash
+    aggs."""
+    from mq_to_db_spark.operators.burstiness import dispersion_1d
+
+    return dispersion_1d(_events(spark, sf_dir), ["event_type"])
+
+
+# entropy: count_if pivot + the fixed type-sorted term chain
+@contract(f"""
+            WITH a AS (
+                SELECT date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_events,
+                       {", ".join(
+                           f"CAST(count(*) FILTER (event_type = '{t}') "
+                           f"AS BIGINT) AS c_{t}"
+                           for t in sorted(_EVENT_TYPES)
+                       )}
+                FROM events
+                WHERE event_type IN (
+                    {", ".join(f"'{t}'" for t in sorted(_EVENT_TYPES))})
+                GROUP BY 1
+            )
+            SELECT bucket_start, n_events,
+                   ({" + ".join(
+                       f"CASE WHEN c_{t} > 0 THEN 1 ELSE 0 END"
+                       for t in sorted(_EVENT_TYPES)
+                   )})::BIGINT AS k_observed,
+                   round(0.0{"".join(
+                       f'''
+                       + CASE WHEN c_{t} > 0 THEN -(
+                           (CAST(c_{t} AS DOUBLE) / CAST(n_events AS DOUBLE))
+                           * ln(CAST(c_{t} AS DOUBLE)
+                                / CAST(n_events AS DOUBLE)))
+                         ELSE 0.0 END'''
+                       for t in sorted(_EVENT_TYPES)
+                   )}, 6) AS entropy,
+                   CASE WHEN ({" + ".join(
+                       f"CASE WHEN c_{t} > 0 THEN 1 ELSE 0 END"
+                       for t in sorted(_EVENT_TYPES)
+                   )}) > 1 THEN round((0.0{"".join(
+                       f'''
+                       + CASE WHEN c_{t} > 0 THEN -(
+                           (CAST(c_{t} AS DOUBLE) / CAST(n_events AS DOUBLE))
+                           * ln(CAST(c_{t} AS DOUBLE)
+                                / CAST(n_events AS DOUBLE)))
+                         ELSE 0.0 END'''
+                       for t in sorted(_EVENT_TYPES)
+                   )}) / ln(CAST(({" + ".join(
+                       f"CASE WHEN c_{t} > 0 THEN 1 ELSE 0 END"
+                       for t in sorted(_EVENT_TYPES)
+                   )}) AS DOUBLE)), 6)
+                   ELSE 0.0 END AS evenness
+            FROM a
+        """)
+def q_entropy_mix_1h(spark, sf_dir):
+    """Shannon entropy + evenness of the hourly event-type mix
+    (operators/burstiness.py entropy_mix): the traffic-composition
+    drift signal.  count_if pivot in ONE hash agg; the k entropy terms
+    fold in the fixed type-sorted literal order (the benford_chi2
+    discipline), never an unordered SUM."""
+    from mq_to_db_spark.operators.burstiness import entropy_mix
+
+    return entropy_mix(
+        _events(spark, sf_dir), _EVENT_TYPES, category_col="event_type",
+        tier="1h",
+    )
+
+
+# OOV: same tokenizer, same (freq DESC, tok) top-20, same
+# binary membership and one division
+@contract("""
+            WITH c AS (
+                SELECT tok, count(*) AS freq FROM (
+                    SELECT unnest(list_filter(
+                        string_split_regex(lower(text), '[^a-z0-9]+'),
+                        x -> x <> '')) AS tok
+                    FROM documents
+                ) GROUP BY 1
+            ),
+            v AS (
+                SELECT list(tok ORDER BY freq DESC, tok) AS vl
+                FROM (SELECT tok, freq FROM c ORDER BY freq DESC, tok
+                      LIMIT 20)
+            ),
+            t AS (
+                SELECT doc_id, list_filter(
+                    string_split_regex(lower(text), '[^a-z0-9]+'),
+                    x -> x <> '') AS toks
+                FROM documents
+            )
+            SELECT doc_id,
+                   CAST(len(toks) AS BIGINT) AS n_tokens,
+                   CAST(len(list_filter(toks,
+                        x -> NOT list_contains(vl, x))) AS BIGINT) AS n_oov,
+                   CASE WHEN len(toks) > 0 THEN round(
+                       CAST(len(list_filter(toks,
+                            x -> NOT list_contains(vl, x))) AS DOUBLE)
+                       / CAST(len(toks) AS DOUBLE), 6) END AS oov_rate
+            FROM t CROSS JOIN v
+        """)
+def q_oov_rate(spark, sf_dir):
+    """Out-of-vocabulary rate per document vs the corpus top-20
+    vocabulary (operators/ranking.py oov_stats) — the CCNet-style
+    lexical-drift gate upstream of lm_perplexity.  Vocabulary = ONE
+    count agg + TakeOrderedAndProject collected at the config-sized
+    bound; the scoring pass is a ZERO-shuffle array_contains
+    projection."""
+    from mq_to_db_spark.operators.ranking import oov_stats
+
+    return oov_stats(_docs(spark, sf_dir), top_v=20)
+
+
+# Heaps: same tokenizer, first-seen = min(doc_id) per token,
+# running sums in doc order — all BIGINT
+@contract("""
+            WITH t AS (
+                SELECT doc_id, list_filter(
+                    string_split_regex(lower(text), '[^a-z0-9]+'),
+                    x -> x <> '') AS toks
+                FROM documents
+            ),
+            fs AS (
+                SELECT tok, min(doc_id) AS doc_id
+                FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
+                GROUP BY 1
+            ),
+            nt AS (
+                SELECT doc_id, CAST(count(*) AS BIGINT) AS new_types
+                FROM fs GROUP BY 1
+            ),
+            d AS (
+                SELECT t.doc_id,
+                       CAST(len(toks) AS BIGINT) AS n_tokens,
+                       CAST(coalesce(nt.new_types, 0) AS BIGINT)
+                           AS new_types
+                FROM t LEFT JOIN nt USING (doc_id)
+            )
+            SELECT doc_id, n_tokens,
+                   CAST(sum(n_tokens) OVER (
+                       ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
+                       AS BIGINT) AS cum_tokens,
+                   new_types,
+                   CAST(sum(new_types) OVER (
+                       ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
+                       AS BIGINT) AS cum_types
+            FROM d
+        """)
+def q_heaps_curve(spark, sf_dir):
+    """Heaps'-law vocabulary-growth curve (operators/ranking.py
+    heaps_curve) — zipf_fit's corpus-health companion: cumulative
+    distinct vocabulary vs cumulative tokens at every doc.  Per-token
+    work collapses to ONE (token → min doc) map-side-combined agg;
+    the running sums ride the |docs|-row table, range-partitionable.
+    All-BIGINT surface."""
+    from mq_to_db_spark.operators.ranking import heaps_curve
+
+    return heaps_curve(_docs(spark, sf_dir))
+
+
+# CEP: the full split/extract_all position reconstruction
+# replayed — same RE2-safe pattern, same greedy leftmost
+# non-overlapping engine semantics, one running-sum window
+@contract("""
+            WITH tr AS (
+                SELECT CAST(user_id AS VARCHAR) AS conv_id,
+                       CAST(row_number() OVER (
+                           PARTITION BY user_id
+                           ORDER BY ts, event_id) - 1 AS INT)
+                           AS turn_idx,
+                       event_type AS role, ts
+                FROM events
+            ),
+            s AS (
+                SELECT conv_id, turn_idx, ts,
+                       CASE role WHEN 'view' THEN 'v'
+                            WHEN 'click' THEN 'c'
+                            WHEN 'purchase' THEN 'p'
+                            WHEN 'error' THEN 'e'
+                            WHEN 'signup' THEN 's'
+                            ELSE 'x' END AS sym
+                FROM tr
+            ),
+            g AS (
+                SELECT conv_id,
+                       string_agg(sym, '' ORDER BY turn_idx) AS symstr,
+                       list(turn_idx ORDER BY turn_idx) AS idxs,
+                       list(ts ORDER BY turn_idx) AS tss
+                FROM s GROUP BY conv_id
+            ),
+            m AS (
+                SELECT conv_id, idxs, tss,
+                       regexp_extract_all(symstr, 'vc*p') AS ms,
+                       string_split_regex(symstr, 'vc*p') AS gs
+                FROM g
+            ),
+            u AS (
+                SELECT conv_id, idxs, tss, gs,
+                       generate_subscripts(ms, 1) AS i,
+                       unnest(ms) AS mt
+                FROM m
+            ),
+            p AS (
+                SELECT conv_id, idxs, tss,
+                       CAST(i AS INT) AS match_seq, mt,
+                       CAST(sum(len(gs[i]) + len(mt)) OVER (
+                           PARTITION BY conv_id ORDER BY i)
+                           - len(mt) + 1 AS INT) AS start1
+                FROM u
+            )
+            SELECT conv_id, match_seq,
+                   mt AS match_syms,
+                   CAST(len(mt) AS BIGINT) AS n_events,
+                   idxs[start1] AS start_turn_idx,
+                   idxs[CAST(start1 + len(mt) - 1 AS INT)]
+                       AS end_turn_idx,
+                   tss[start1] AS start_ts,
+                   tss[CAST(start1 + len(mt) - 1 AS INT)] AS end_ts
+            FROM p
+        """)
+def q_cep_browse_buy(spark, sf_dir):
+    """MATCH_RECOGNIZE-style CEP sequence patterns (operators/cep.py
+    match_pattern): browse-to-buy episodes ``vc*p`` — a view, any
+    clicks, then a purchase — matched greedy, leftmost,
+    non-overlapping (AFTER MATCH SKIP PAST LAST ROW) over each user's
+    symbolized event sequence.  ONE shuffle, ZERO Python: match
+    positions are reconstructed JVM-side from the ``split`` /
+    ``regexp_extract_all`` interleave folded by ``aggregate``, and the
+    RE2-safe pattern makes the DuckDB replay engine-identical."""
+    from mq_to_db_spark.operators.cep import match_pattern, symbolize
+
+    tr = _events_as_transcripts(spark, sf_dir).withColumn(
+        "sym",
+        symbolize(
+            {"view": "v", "click": "c", "purchase": "p",
+             "error": "e", "signup": "s"},
+            "role", default="x",
+        ),
+    )
+    return match_pattern(tr, "vc*p", ["conv_id"])
+
+
+# SAX: position-order list_reduce folds — the first-element
+# seed equals Spark's 0.0+v1 seed exactly in IEEE arithmetic,
+# so mean/std and every breakpoint compare replay bit-for-bit
+@contract("""
+            WITH h AS (
+                SELECT event_type,
+                       date_trunc('hour', ts) AS hb,
+                       CAST(sum(CAST(floor(value * 1e6) AS BIGINT))
+                            AS BIGINT) AS sc,
+                       CAST(count(*) AS BIGINT) AS n
+                FROM events GROUP BY 1, 2
+            ),
+            d AS (
+                SELECT event_type,
+                       date_trunc('day', hb) AS window_start,
+                       list(CAST(sc AS DOUBLE) / n ORDER BY hb) AS vals
+                FROM h GROUP BY 1, 2
+            ),
+            s AS (
+                SELECT event_type, window_start, vals,
+                       list_reduce(vals, (a, b) -> a + b) / len(vals)
+                           AS m
+                FROM d
+            ),
+            s2 AS (
+                SELECT event_type, window_start, vals, m,
+                       sqrt(list_reduce(
+                           list_transform(vals, x -> (x - m) * (x - m)),
+                           (a, b) -> a + b) / len(vals)) AS sd
+                FROM s
+            )
+            SELECT event_type, window_start,
+                   array_to_string(list_transform(vals,
+                       x -> CASE WHEN x < m - 0.6745 * sd THEN 'a'
+                                 WHEN x < m THEN 'b'
+                                 WHEN x < m + 0.6745 * sd THEN 'c'
+                                 ELSE 'd' END), '') AS sax_word,
+                   CAST(len(vals) AS BIGINT) AS n_buckets
+            FROM s2
+        """)
+def q_sax_1d(spark, sf_dir):
+    """SAX symbolic words (operators/sax.py, Lin et al. DMKD 2003):
+    each (event_type, day) hourly series z-quantized into a 24-symbol
+    {a,b,c,d} word — the motif/anomaly index key.  PAA frames ARE the
+    1h tier buckets (exact BIGINT sum/count, one double division);
+    mean/variance fold IN POSITION ORDER so every breakpoint compare —
+    hence every symbol — replays bit-identically in SQL.  Tier agg +
+    ONE window collect, ZERO Python."""
+    from mq_to_db_spark.operators.sax import sax_words
+
+    h = (
+        _events(spark, sf_dir)
+        .groupBy(
+            "event_type", F.date_trunc("hour", "ts").alias("bucket_start")
+        )
+        .agg(
+            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias(
+                "sum_cents"
+            ),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
+    return sax_words(h, ["event_type"])
+
+
+# decayed heavy hitters: exact 1/(1<<k) factors, bucket-order
+# list_reduce fold, (score DESC, user) deterministic rank
+@contract(
+    """
+            WITH d AS (
+                SELECT CAST(user_id AS VARCHAR) AS user_id,
+                       date_trunc('day', ts) AS day,
+                       CAST(sum(CAST(floor(value * 1e6) AS BIGINT))
+                            AS BIGINT) AS sc
+                FROM events GROUP BY 1, 2
+            ),
+            mx AS (SELECT max(day) AS mday FROM d),
+            g AS (
+                SELECT user_id,
+                       list(CAST(sc AS DOUBLE) / CAST(
+                           (CAST(1 AS BIGINT) << (
+                               datediff('day', day,
+                                        (SELECT mday FROM mx)) // 7))
+                           AS DOUBLE) ORDER BY day) AS terms
+                FROM d GROUP BY 1
+            ),
+            s AS (
+                SELECT user_id,
+                       list_reduce(terms, (a, b) -> a + b) AS score
+                FROM g
+            )
+            SELECT user_id, score, rank FROM (
+                SELECT user_id, score,
+                       CAST(row_number() OVER (
+                           ORDER BY score DESC, user_id) AS INT) AS rank
+                FROM s
+            ) WHERE rank <= 20
+        """,
+    # decay.py:decayed_scores — tier × broadcast(1-row max-bucket
+    # asof): the decay anchor; output = |tier|
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_decay_topk(spark, sf_dir):
+    """Exponentially time-decayed heavy hitters (operators/decay.py,
+    halflife 7 days): recency-weighted user volume ranking — every
+    decay factor an EXACT 1/(1<<k) power of two (whole-bucket ages,
+    never libm pow), per-user terms folded in bucket order so the
+    score replays bit-for-bit.  Raw rows collapse to the (user, day)
+    tier map-side; the rank window rides the |users|-row score table."""
+    from mq_to_db_spark.operators.decay import decayed_topk
+
+    ev = _events(spark, sf_dir).select(
+        F.col("user_id").cast("string").alias("user_id"),
+        "ts",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    return decayed_topk(
+        ev, ["user_id"], 20, val_col=F.col("v"), halflife_buckets=7
+    )
+
+
+# z-order: full Morton replay — md5 low bits, exact integer
+# range scaling with // , and the same interleave as a list
+# comprehension over bit positions
+@contract(
+    """
+            WITH ext AS (
+                SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi
+                FROM events
+            ),
+            lanes AS (
+                SELECT event_id,
+                       ('0x' || substring(
+                           md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+                           & 65535 AS h,
+                       ((epoch_us(ts) - (SELECT lo FROM ext)) * 65535)
+                           // ((SELECT hi FROM ext)
+                               - (SELECT lo FROM ext)) AS t
+                FROM events
+            )
+            SELECT event_id,
+                   CAST(list_sum(
+                       [((h >> b) & 1) * (CAST(1 AS BIGINT) << (2 * b))
+                        + ((t >> b) & 1) * (CAST(1 AS BIGINT) << (2 * b + 1))
+                        for b in range(16)]) AS BIGINT) AS zkey
+            FROM lanes
+        """,
+    # layout.py:zorder_keys — rows × broadcast(1-row ts min/max
+    # extent): the range-scaling anchor; output = |rows|
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_zorder_keys(spark, sf_dir):
+    """Z-order / Morton layout keys (operators/layout.py): the
+    multi-dimensional clustering key behind Delta OPTIMIZE ZORDER —
+    md5-coin user lane × exact-BIGINT range-scaled time lane, bits
+    interleaved by a plan-time-unrolled shift/or chain (pure codegen).
+    The time quotient uses integral ``div`` — a double floor()
+    misranks the x = max boundary.  ``cluster_by_zorder`` range-
+    partitions on this key so every file is a (conv, time) rectangle;
+    the contract checks the key itself bit-for-bit."""
+    from mq_to_db_spark.operators.layout import zorder_keys
+
+    out = zorder_keys(_events(spark, sf_dir), ["user_id"], bits=16)
+    return out.select("event_id", "zkey")
+
+
+# Welch t: identical fixed double chain over the same exact
+# BIGINT milli-unit moments (var via s2 - s*m, then t and the
+# Satterthwaite dof in literal op order)
+@contract("""
+            WITH m AS (
+                SELECT date_trunc('day', ts) AS day,
+                       CAST(count(*) FILTER (event_type = 'click')
+                            AS BIGINT) AS n_a,
+                       CAST(count(*) FILTER (event_type = 'view')
+                            AS BIGINT) AS n_b,
+                       CAST(coalesce(sum(CAST(floor(value * 1e3) AS BIGINT))
+                            FILTER (event_type = 'click'), 0) AS BIGINT) AS s_a,
+                       CAST(coalesce(sum(CAST(floor(value * 1e3) AS BIGINT))
+                            FILTER (event_type = 'view'), 0) AS BIGINT) AS s_b,
+                       CAST(coalesce(sum(CAST(floor(value * 1e3) AS BIGINT)
+                            * CAST(floor(value * 1e3) AS BIGINT))
+                            FILTER (event_type = 'click'), 0) AS BIGINT) AS s2_a,
+                       CAST(coalesce(sum(CAST(floor(value * 1e3) AS BIGINT)
+                            * CAST(floor(value * 1e3) AS BIGINT))
+                            FILTER (event_type = 'view'), 0) AS BIGINT) AS s2_b
+                FROM events
+                WHERE event_type IN ('click', 'view')
+                GROUP BY 1
+            ),
+            c AS (
+                SELECT day, n_a, n_b,
+                       CAST(s_a AS DOUBLE) / n_a AS mean_a,
+                       CAST(s_b AS DOUBLE) / n_b AS mean_b,
+                       (CAST(s2_a AS DOUBLE)
+                        - CAST(s_a AS DOUBLE) * (CAST(s_a AS DOUBLE) / n_a))
+                           / (n_a - 1) AS va,
+                       (CAST(s2_b AS DOUBLE)
+                        - CAST(s_b AS DOUBLE) * (CAST(s_b AS DOUBLE) / n_b))
+                           / (n_b - 1) AS vb
+                FROM m
+            )
+            SELECT day, n_a, n_b, mean_a, mean_b,
+                   CASE WHEN n_a >= 2 AND n_b >= 2
+                             AND va / n_a + vb / n_b > 0
+                        THEN (mean_a - mean_b)
+                             / sqrt(va / n_a + vb / n_b) END AS t_stat,
+                   CASE WHEN n_a >= 2 AND n_b >= 2
+                             AND va / n_a + vb / n_b > 0
+                        THEN ((va / n_a + vb / n_b)
+                              * (va / n_a + vb / n_b))
+                             / ((va / n_a) * (va / n_a) / (n_a - 1)
+                                + (vb / n_b) * (vb / n_b) / (n_b - 1))
+                        END AS dof
+            FROM c
+        """)
+def q_ab_welch_1d(spark, sf_dir):
+    """Welch's unequal-variance t-test per day (operators/abtest.py):
+    click-vs-view value comparison from exact BIGINT milli-unit
+    moments in ONE conditional hash agg; the t statistic and the
+    Satterthwaite dof are a fixed double chain over those integers, so
+    every float replays bit-for-bit.  No p-value column by design —
+    the incomplete beta is not engine-portable; threshold |t|."""
+    from mq_to_db_spark.operators.abtest import welch_t
+
+    ev = _events(spark, sf_dir).select(
+        F.date_trunc("day", "ts").alias("day"),
+        "event_type",
+        F.floor(F.col("value") * 1e3).cast("long").alias("v"),
+    )
+    return welch_t(ev, ["day"], "event_type", "click", "view", "v")
+
+
+# PSI: identical CASE-sum buckets, add-one-smoothed shares,
+# bucket-order list_reduce fold (ln parity per lm_perplexity)
+@contract(
+    """
+            WITH v AS (
+                SELECT date_trunc('day', ts) AS day,
+                       CAST(floor(value * 1e3) AS BIGINT) AS v
+                FROM events
+            ),
+            bk AS (
+                SELECT day,
+                       (CASE WHEN v >= 12500 THEN 1 ELSE 0 END
+                        + CASE WHEN v >= 25000 THEN 1 ELSE 0 END
+                        + CASE WHEN v >= 37500 THEN 1 ELSE 0 END
+                        + CASE WHEN v >= 50000 THEN 1 ELSE 0 END
+                        + CASE WHEN v >= 62500 THEN 1 ELSE 0 END
+                        + CASE WHEN v >= 75000 THEN 1 ELSE 0 END
+                        + CASE WHEN v >= 87500 THEN 1 ELSE 0 END) AS b
+                FROM v
+            ),
+            counts AS (
+                SELECT day, b, CAST(count(*) AS BIGINT) AS c
+                FROM bk GROUP BY 1, 2
+            ),
+            base AS (
+                SELECT b, CAST(sum(c) AS BIGINT) AS cq
+                FROM counts GROUP BY 1
+            ),
+            tot AS (SELECT CAST(sum(c) AS BIGINT) AS nq FROM counts),
+            grid AS (
+                SELECT d.day, g.b
+                FROM (SELECT DISTINCT day FROM counts) d
+                CROSS JOIN (SELECT unnest(range(8)) AS b) g
+            ),
+            filled AS (
+                SELECT g.day, g.b,
+                       coalesce(c.c, 0) AS c,
+                       coalesce(ba.cq, 0) AS cq,
+                       (SELECT nq FROM tot) AS nq
+                FROM grid g
+                LEFT JOIN counts c ON c.day = g.day AND c.b = g.b
+                LEFT JOIN base ba ON ba.b = g.b
+            ),
+            per AS (
+                SELECT day, CAST(sum(c) AS BIGINT) AS n,
+                       list(struct_pack(b := b, c := c, cq := cq,
+                                        nq := nq) ORDER BY b) AS a
+                FROM filled GROUP BY 1
+            )
+            SELECT day, n,
+                   list_reduce(list_transform(a,
+                       e -> ((e.c + 1) / (n + 8)
+                             - (e.cq + 1) / (e.nq + 8))
+                            * ln(((e.c + 1) / (n + 8))
+                                 / ((e.cq + 1) / (e.nq + 8)))),
+                       (x, y) -> x + y) AS psi
+            FROM per
+        """,
+    # drift.py:psi — period spine × broadcast(nb-row literal bucket
+    # grid) and counts × broadcast(1-row total): both config-sized,
+    # output = |periods| · nb
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_psi_1d(spark, sf_dir):
+    """Population Stability Index drift gate (operators/drift.py):
+    daily value-distribution PSI vs the all-periods baseline — literal
+    integer bucket edges, BIGINT counts, add-one smoothing (no epsilon
+    constants), the Σ(p−q)·ln(p/q) fold in bucket order.  ONE raw-rows
+    hash agg; the baseline re-aggregates the same counts tier, the
+    dense grid is a broadcast literal explode."""
+    from mq_to_db_spark.operators.drift import psi
+
+    return psi(
+        _events(spark, sf_dir),
+        F.date_trunc("day", "ts"),
+        F.floor(F.col("value") * 1e3).cast("long"),
+        [12500, 25000, 37500, 50000, 62500, 75000, 87500],
+    ).withColumnRenamed("period", "day")
+
+
+# skew audit: row_number rank replay (tie order provably
+# output-invariant), exact BIGINT sums, the same literal Gini
+# chain
+@contract(
+    """
+            WITH c AS (
+                SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows
+                FROM events GROUP BY 1
+            ),
+            r AS (
+                SELECT user_id, n_rows,
+                       CAST(row_number() OVER (ORDER BY n_rows, user_id)
+                            AS BIGINT) AS rk
+                FROM c
+            ),
+            a AS (
+                SELECT CAST(max(rk) AS BIGINT) AS n_keys,
+                       CAST(sum(n_rows) AS BIGINT) AS total_rows,
+                       CAST(sum(rk * n_rows) AS BIGINT) AS s1,
+                       CAST(max(n_rows) AS BIGINT) AS max_key_rows
+                FROM r
+            ),
+            s AS (
+                SELECT
+                    (SELECT n_rows FROM r
+                     WHERE rk = (SELECT (n_keys + 1) // 2 FROM a))
+                        AS p50_key_rows,
+                    (SELECT CAST(sum(n_rows) AS BIGINT) FROM r
+                     WHERE rk > (SELECT n_keys
+                                 - greatest(1, n_keys // 100) FROM a))
+                        AS top1,
+                    (SELECT CAST(sum(n_rows) AS BIGINT) FROM r
+                     WHERE rk > (SELECT n_keys
+                                 - greatest(1, n_keys // 10) FROM a))
+                        AS top10
+            )
+            SELECT n_keys, total_rows, max_key_rows, p50_key_rows,
+                   CAST(top1 AS DOUBLE) / CAST(total_rows AS DOUBLE)
+                       AS top1_share,
+                   CAST(top10 AS DOUBLE) / CAST(total_rows AS DOUBLE)
+                       AS top10_share,
+                   (2.0 * CAST(s1 AS DOUBLE))
+                       / (CAST(n_keys AS DOUBLE)
+                          * CAST(total_rows AS DOUBLE))
+                   - (CAST(n_keys + 1 AS DOUBLE)
+                      / CAST(n_keys AS DOUBLE)) AS gini
+            FROM a, s
+        """,
+    # skewaudit.py:skew_audit — ranked tier × broadcast(1-row
+    # n/total/s1 aggregate): output = |keys|
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_skew_audit(spark, sf_dir):
+    """Key-skew audit (operators/skewaudit.py): Gini, top-1%/10% row
+    share, median/max key size over the (user → count) tier — the
+    measurement half of the north rule's explicit skew handling.
+    Global ranks are the RANGE-PARTITIONED running count
+    (rangewin.range_running_sum, the epoch_shuffle discipline), never
+    a single-partition window; Gini's float stage is a fixed literal
+    chain over exact BIGINTs.  Tie order within equal counts provably
+    cannot change any output (ranks permute within a constant-count
+    class), so the oracle's row_number replay is exact."""
+    from mq_to_db_spark.operators.skewaudit import skew_audit
+
+    return skew_audit(_events(spark, sf_dir), ["user_id"])
+
+
+# salt plan: pure integer ceil-div, capped
+@contract("""
+            SELECT user_id, n_rows,
+                   CAST(least((n_rows + 49) // 50, 8) AS INT) AS n_salts
+            FROM (
+                SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows
+                FROM events GROUP BY 1
+            )
+        """)
+def q_salt_plan(spark, sf_dir):
+    """Salt plan (operators/skewaudit.py salt_plan): per-key shuffle
+    fan-out ceil(rows/target) in pure integer arithmetic, capped — the
+    actuation half of skew handling, sized from the audit's counts
+    tier rather than guessed."""
+    from mq_to_db_spark.operators.skewaudit import salt_plan
+
+    return salt_plan(
+        _events(spark, sf_dir), ["user_id"], target_rows=50, max_salts=8
+    )
 
 
 SPAN_WINDOW = 8
 
+
+# span dedup: same doubled-doc synth, same gram join + md5 coin
+# (integer-identical hashes), dup starts by first-position scan,
+# coverage by interval test — exact strings and counts
+@contract(f"""
+            WITH d AS (
+                SELECT doc_id,
+                       CASE WHEN doc_id % 3 = 0 THEN text || ' ' || text
+                            ELSE text END AS text
+                FROM documents
+            ),
+            toks AS (
+                SELECT doc_id,
+                       list_filter(string_split_regex(trim(text), '\\s+'),
+                                   x -> x <> '') AS t
+                FROM d
+            ),
+            g AS (
+                SELECT doc_id, t, len(t) AS n,
+                    CASE WHEN len(t) >= {SPAN_WINDOW} THEN
+                        list_transform(range(1, len(t) - {SPAN_WINDOW} + 2),
+                            i -> ('0x' || substring(md5('13:' ||
+                                    array_to_string(
+                                        t[i : i + {SPAN_WINDOW} - 1], ' ')),
+                                    1, 15))::BIGINT)
+                    ELSE [] END AS gh
+                FROM toks
+            ),
+            m AS (
+                SELECT doc_id, t, n,
+                    list_filter(range(1, len(gh) + 1),
+                                i -> list_position(gh, gh[i]) < i) AS dups
+                FROM g
+            ),
+            k AS (
+                SELECT doc_id, n,
+                    list_transform(
+                        list_filter(range(1, n + 1),
+                            p -> len(list_filter(dups,
+                                    i -> i <= p
+                                         AND p <= i + {SPAN_WINDOW} - 1)) = 0),
+                        p -> t[p]) AS kept
+                FROM m
+            )
+            SELECT doc_id, array_to_string(kept, ' ') AS text_dedup,
+                   n::BIGINT AS n_tokens,
+                   (n - len(kept))::BIGINT AS n_removed
+            FROM k
+        """)
+def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Intra-document repeated-span removal (operators/spandedup.py —
+    the within-document half of Lee et al. 2022): every third document
+    is deterministically doubled so real 8-token spans recur, then any
+    window recurring inside one document is removed span-wise (first
+    occurrence survives, order preserved).  Gram hashes are the JVM
+    zip_with shift chain + md5 coin (DuckDB replays every integer);
+    the keep mask is ONE Arrow batch per partition; no shuffle
+    anywhere — a pure narrow projection over documents."""
+    from mq_to_db_spark.operators.spandedup import dedup_spans
+
+    docs = _docs(spark, sf_dir).select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat_ws(" ", F.col("text"), F.col("text")),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    return dedup_spans(docs, window=SPAN_WINDOW).select(
+        "doc_id", "text_dedup", "n_tokens", "n_removed"
+    )
+
+
 SEMDEDUP_PARAMS = dict(k=6, n_iter=2, threshold=0.999)
-
-
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup semantic near-dup removal (operators/semcluster.py —
-    Abbas et al. 2023): spherical k-means (md5-rank init + 2 Lloyd
-    iterations, per-component means rounded to 6 dp so distributed-sum
-    ulps can't leak into assignments) clusters the embedding space,
-    then pairs are compared only WITHIN a cluster and every row with a
-    cosine>=0.999 lower-id neighbor is dropped.  Every fifth vector is
-    deterministically re-planted at id+10000 scaled by 1.5 (cosine
-    exactly 1 with its original, same cluster by scale invariance) so
-    the dedup provably fires.  The oracle replays the full algorithm —
-    init, both unrolled Lloyd iterations, assignment tie-breaks, and
-    the survivor rule — in SQL."""
-    from mq_to_db_spark.operators.semcluster import semdedup
-
-    p = SEMDEDUP_PARAMS
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    aug = emb.where(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 10000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.5)).alias("embedding"),
-    )
-    corpus = emb.unionByName(aug)
-    return semdedup(
-        corpus, k=p["k"], n_iter=p["n_iter"], threshold=p["threshold"]
-    )
 
 
 def _semdedup_oracle() -> str:
@@ -3635,31 +5369,157 @@ def _semdedup_oracle() -> str:
     """
 
 
-def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-document repeated-span removal (operators/spandedup.py —
-    the within-document half of Lee et al. 2022): every third document
-    is deterministically doubled so real 8-token spans recur, then any
-    window recurring inside one document is removed span-wise (first
-    occurrence survives, order preserved).  Gram hashes are the JVM
-    zip_with shift chain + md5 coin (DuckDB replays every integer);
-    the keep mask is ONE Arrow batch per partition; no shuffle
-    anywhere — a pure narrow projection over documents."""
-    from mq_to_db_spark.operators.spandedup import dedup_spans
+# SemDeDup: full algorithm replay (init + unrolled Lloyd + drop)
+@contract(_semdedup_oracle)
+def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup semantic near-dup removal (operators/semcluster.py —
+    Abbas et al. 2023): spherical k-means (md5-rank init + 2 Lloyd
+    iterations, per-component means rounded to 6 dp so distributed-sum
+    ulps can't leak into assignments) clusters the embedding space,
+    then pairs are compared only WITHIN a cluster and every row with a
+    cosine>=0.999 lower-id neighbor is dropped.  Every fifth vector is
+    deterministically re-planted at id+10000 scaled by 1.5 (cosine
+    exactly 1 with its original, same cluster by scale invariance) so
+    the dedup provably fires.  The oracle replays the full algorithm —
+    init, both unrolled Lloyd iterations, assignment tie-breaks, and
+    the survivor rule — in SQL."""
+    from mq_to_db_spark.operators.semcluster import semdedup
 
-    docs = _docs(spark, sf_dir).select(
+    p = SEMDEDUP_PARAMS
+    emb = _emb(spark, sf_dir).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    aug = emb.where(F.col("vec_id") % 5 == 0).select(
+        (F.col("vec_id") + 10000).alias("vec_id"),
+        F.transform("embedding", lambda x: x * F.lit(1.5)).alias("embedding"),
+    )
+    corpus = emb.unionByName(aug)
+    return semdedup(
+        corpus, k=p["k"], n_iter=p["n_iter"], threshold=p["threshold"]
+    )
+
+
+# boilerplate strip: identical normalize + md5-coin membership,
+# rebuild by ordered string_agg — exact strings end to end
+@contract("""
+            WITH d AS (
+                SELECT doc_id,
+                       text || chr(10) || 'Please SUBSCRIBE to our newsletter!'
+                            || chr(10) || 'footer of ' || source AS t
+                FROM documents
+            ),
+            l AS (
+                SELECT doc_id,
+                       unnest(string_split(t, chr(10))) AS line,
+                       generate_subscripts(string_split(t, chr(10)), 1) AS pos
+                FROM d
+            ),
+            h AS (
+                SELECT doc_id, line, pos,
+                       ('0x' || substring(md5('11:' || trim(regexp_replace(
+                            regexp_replace(lower(line), '[^\\w\\s]', ' ', 'g'),
+                            '\\s+', ' ', 'g'))), 1, 15))::BIGINT AS lh,
+                       trim(line) = '' AS blank
+                FROM l
+            ),
+            bp AS (
+                SELECT lh FROM h WHERE NOT blank
+                GROUP BY lh HAVING count(DISTINCT doc_id) >= 3
+            )
+            SELECT doc_id,
+                   coalesce(string_agg(line, chr(10) ORDER BY pos)
+                            FILTER (WHERE blank
+                                    OR lh NOT IN (SELECT lh FROM bp)),
+                            '') AS text_clean
+            FROM h GROUP BY doc_id
+        """)
+def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4/RefinedWeb line-level boilerplate removal
+    (operators/linededup.py strip_boilerplate): documents are reshaped
+    deterministically into multi-line pages (own text + a corpus-wide
+    newsletter line + a per-source footer), then every line recurring
+    in ≥3 distinct documents is stripped — matching on the NORMALIZED
+    line via the md5 coin, removal of the ORIGINAL line text, order
+    preserved.  The boilerplate set is a driver-bounded literal InSet,
+    so the strip is a pure projection: the corpus text never rides a
+    shuffle."""
+    from mq_to_db_spark.operators.linededup import strip_boilerplate
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d2 = docs.select(
         "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat_ws(" ", F.col("text"), F.col("text")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
+        F.concat_ws(
+            "\n",
+            F.col("text"),
+            F.lit("Please SUBSCRIBE to our newsletter!"),
+            F.concat(F.lit("footer of "), F.col("source")),
+        ).alias("text2"),
     )
-    return dedup_spans(docs, window=SPAN_WINDOW).select(
-        "doc_id", "text_dedup", "n_tokens", "n_removed"
-    )
+    out = strip_boilerplate(d2, min_docs=3, id_col="doc_id", text_col="text2")
+    return out.select("doc_id", "text_clean")
 
 
+# expectations: each foldable check one FILTER tally; the
+# monotonic check a lag replay; BIGINT counts, integer pass
+@contract("""
+            WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_rows FROM events),
+            mono AS (
+                SELECT CAST(count(*) FILTER (
+                           WHERE pv IS NOT NULL AND value < pv
+                       ) AS BIGINT) AS v
+                FROM (
+                    SELECT value, lag(value) OVER (
+                        PARTITION BY user_id ORDER BY event_id) AS pv
+                    FROM events
+                )
+            )
+            SELECT 'not_null(value)' AS expectation, 'not_null' AS kind,
+                   CAST(count(*) FILTER (WHERE value IS NULL) AS BIGINT)
+                       AS n_violations,
+                   (SELECT n_rows FROM n) AS n_rows,
+                   count(*) FILTER (WHERE value IS NULL) = 0 AS "pass"
+            FROM events
+            UNION ALL
+            SELECT 'unique(event_id)', 'unique',
+                   CAST(count(*) - count(DISTINCT event_id) AS BIGINT),
+                   (SELECT n_rows FROM n),
+                   count(*) - count(DISTINCT event_id) = 0
+            FROM events
+            UNION ALL
+            SELECT 'accepted_values(event_type in [''click'', ''view'', ''purchase'', ''signup''])',
+                   'accepted_values',
+                   CAST(count(*) FILTER (
+                       WHERE event_type NOT IN
+                             ('click', 'view', 'purchase', 'signup')
+                          OR event_type IS NULL) AS BIGINT),
+                   (SELECT n_rows FROM n),
+                   count(*) FILTER (
+                       WHERE event_type NOT IN
+                             ('click', 'view', 'purchase', 'signup')
+                          OR event_type IS NULL) = 0
+            FROM events
+            UNION ALL
+            SELECT 'in_range(value in [0.0, 100.0])', 'in_range',
+                   CAST(count(*) FILTER (
+                       WHERE value IS NULL OR value < 0.0 OR value > 100.0
+                   ) AS BIGINT),
+                   (SELECT n_rows FROM n),
+                   count(*) FILTER (
+                       WHERE value IS NULL OR value < 0.0 OR value > 100.0
+                   ) = 0
+            FROM events
+            UNION ALL
+            SELECT 'no_future_events', 'custom',
+                   CAST(count(*) FILTER (
+                       WHERE ts > TIMESTAMP '2024-02-01') AS BIGINT),
+                   (SELECT n_rows FROM n),
+                   count(*) FILTER (WHERE ts > TIMESTAMP '2024-02-01') = 0
+            FROM events
+            UNION ALL
+            SELECT 'monotonic(value per user_id)', 'monotonic',
+                   (SELECT v FROM mono), (SELECT n_rows FROM n),
+                   (SELECT v FROM mono) = 0
+        """)
 def q_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-level data-quality expectation audit
     (operators/expectations.py — the dbt-test surface over the engine's
@@ -3693,6 +5553,23 @@ def q_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# series limit: identical (first_ts, user_id) admission order
+@contract("""
+            WITH e AS (
+                SELECT event_type, user_id, min(ts) AS first_ts,
+                       CAST(count(*) AS BIGINT) AS n_samples
+                FROM events GROUP BY 1, 2
+            ),
+            r AS (
+                SELECT *, row_number() OVER (
+                    PARTITION BY event_type ORDER BY first_ts, user_id
+                ) AS rank
+                FROM e
+            )
+            SELECT event_type, user_id, first_ts, n_samples,
+                   CAST(rank AS INT) AS rank
+            FROM r WHERE rank > 20
+        """)
 def q_series_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Series-cardinality admission limit (operators/lifecycle.py
     series_limit — Mimir ``max_series_per_user`` in batch): per
@@ -3709,6 +5586,39 @@ def q_series_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audit
 
 
+# DSIR overlap: same tokenizer, bigrams, md5-coin buckets,
+# BIGINT inner product — integer-exact end to end
+@contract("""
+            WITH tok AS (
+                SELECT doc_id, source,
+                       list_filter(string_split_regex(lower(text), '\\s+'),
+                                   x -> x <> '') AS t
+                FROM documents
+            ),
+            ng AS (
+                SELECT doc_id, source,
+                       unnest(list_transform(range(1, len(t)),
+                              i -> array_to_string(t[i:i+1], ' '))) AS g
+                FROM tok WHERE len(t) >= 2
+            ),
+            b AS (
+                SELECT doc_id, source,
+                       ('0x' || substring(md5('7:' || g), 1, 15))::BIGINT
+                           % 8192 AS bucket
+                FROM ng
+            ),
+            rc AS (
+                SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS c
+                FROM b WHERE source NOT IN ('src0', 'src1') GROUP BY 1, 2
+            ),
+            tp AS (
+                SELECT bucket, CAST(count(*) AS BIGINT) AS ct
+                FROM b WHERE source IN ('src0', 'src1') GROUP BY 1
+            )
+            SELECT rc.doc_id, CAST(sum(rc.c * tp.ct) AS BIGINT) AS overlap
+            FROM rc JOIN tp USING (bucket)
+            GROUP BY 1 ORDER BY overlap DESC, doc_id LIMIT 50
+        """)
 def q_dsir_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style target-similarity ranking (operators/importance.py
     target_overlap_topk; Xie et al. 2023): top-50 raw documents by the
@@ -3726,6 +5636,35 @@ def q_dsir_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return target_overlap_topk(raw, target, k=50)
 
 
+# recording rules: the same four-rule DAG as one CTE chain
+@contract("""
+            WITH hourly_by_type AS (
+                SELECT date_trunc('hour', ts) AS bucket_start, event_type,
+                       CAST(count(*) AS BIGINT) AS n
+                FROM events GROUP BY 1, 2
+            ),
+            hourly_share AS (
+                SELECT bucket_start,
+                       round(CAST(sum(CASE WHEN event_type = 'error'
+                                           THEN n ELSE 0 END) AS DOUBLE)
+                             / CAST(sum(n) AS DOUBLE), 6) AS error_share
+                FROM hourly_by_type GROUP BY 1
+            ),
+            daily_worst AS (
+                SELECT date_trunc('day', bucket_start) AS day,
+                       CAST(count(*) AS BIGINT) AS n_hours,
+                       max(error_share) AS max_share,
+                       min(error_share) AS min_share
+                FROM hourly_share GROUP BY 1
+            ),
+            daily_volume AS (
+                SELECT date_trunc('day', bucket_start) AS day,
+                       CAST(sum(n) AS BIGINT) AS n_events
+                FROM hourly_by_type GROUP BY 1
+            )
+            SELECT w.day, w.n_hours, w.max_share, w.min_share, v.n_events
+            FROM daily_worst w JOIN daily_volume v USING (day)
+        """)
 def q_recording_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recording-rule DAG (plans/rules.py evaluate_rules — the
     Prometheus rule-group feature, prometheus/rules/group.go, made
@@ -3789,38 +5728,23 @@ def q_recording_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_exphist_stats_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL ``histogram_avg`` / ``histogram_stddev`` moment surface
-    of the native exponential sketch (operators/nativehist.py
-    exp_hist_stats_exact) per (event_type, day) — emitted as the
-    INTEGER-EXACT moments ``n_obs``, ``s1_x4 = 4·Σ n·mid`` and
-    ``s2_x16 = 16·Σ n·mid²`` (BIGINT; at schema 0 ``4·mid_i = 3·2^i``
-    and ``16·mid_i² = 9·4^i`` are exact integers), from which
-    mean = s1_x4/(4·n_obs) and var = s2_x16/(16·n_obs) − mean².
-
-    Why not rounded floats: ``F.round(mean/stddev, 6)`` is Spark
-    BigDecimal HALF_UP on the double's exact decimal expansion while
-    DuckDB rounds multiply-by-1e6/round/divide — the two disagree when
-    a moment lands within an ulp of a .5×10⁻⁶ boundary (the r04
-    driver-hash red cell; same hazard class as SURVEY.md §float-sums).
-    Integer moments have no rounding step at all.  ZERO shuffle past
-    the sketch — per-row sorted map folds, whole-stage codegen."""
-    from mq_to_db_spark.operators.nativehist import (
-        cascade_exp_histogram,
-        exp_hist_stats_exact,
-        exp_histogram,
-    )
-
-    h1 = exp_histogram(
-        _events_cents(spark, sf_dir), "1h", "v", keys=["event_type"]
-    )
-    d1 = cascade_exp_histogram(h1, "1d", keys=["event_type"])
-    out = exp_hist_stats_exact(d1, keys=["event_type"])
-    return out.select(
-        "event_type", "bucket_start", "n_obs", "s1_x4", "s2_x16"
-    )
-
-
+# apdex: three FILTER tallies, one double expression, round 6
+@contract("""
+            SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                   CAST(count(*) AS BIGINT) AS n_total,
+                   CAST(count(*) FILTER (WHERE value <= 20.0) AS BIGINT)
+                       AS n_satisfied,
+                   CAST(count(*) FILTER (
+                       WHERE value > 20.0 AND value <= 80.0) AS BIGINT)
+                       AS n_tolerating,
+                   round((CAST(count(*) FILTER (WHERE value <= 20.0)
+                               AS DOUBLE)
+                          + CAST(count(*) FILTER (
+                                WHERE value > 20.0 AND value <= 80.0)
+                            AS DOUBLE) / 2.0)
+                         / CAST(count(*) AS DOUBLE), 6) AS apdex
+            FROM events GROUP BY 1, 2
+        """)
 def q_apdex_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apdex user-satisfaction score per (event_type, hour)
     (operators/slo.py apdex_tier): satisfied ≤ 20, tolerating ≤ 80,
@@ -3838,6 +5762,22 @@ def q_apdex_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# calendar day in a fractional-offset zone: the same ICU
+# round-trip (UTC -> local wall clock -> truncate -> UTC)
+@contract("""
+            SELECT event_type,
+                   timezone('UTC', timezone('Asia/Kathmandu',
+                       date_trunc('day',
+                           timezone('Asia/Kathmandu', timezone('UTC', ts)))))
+                       AS bucket_start,
+                   date_trunc('day',
+                       timezone('Asia/Kathmandu', timezone('UTC', ts)))
+                       AS local_start,
+                   CAST(count(*) AS BIGINT) AS n_rows,
+                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
+                       AS value_sum
+            FROM events GROUP BY 1, 2, 3
+        """)
 def q_calendar_day_tz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timezone-aware local-day rollup (operators/calendar.py
     rollup_calendar): turns per LOCAL Asia/Kathmandu day (UTC+5:45 —
@@ -3866,1791 +5806,9 @@ def q_calendar_day_tz(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_holt_linear_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-parameter Holt linear smoothing — PromQL
-    ``holt_winters(v, 0.4, 0.2)`` / Prometheus 3.x
-    ``double_exponential_smoothing`` parity (operators/ewma.py
-    holt_linear; prometheus/promql/functions.go calcTrendValue) over
-    the hourly count tier per event_type.  States stay unrounded
-    through the recurrence in the same literal op order as the
-    recursive-CTE oracle; O(tier-bucket) loop inside one grouped Arrow
-    batch, never the raw stream."""
-    from mq_to_db_spark.operators.ewma import holt_linear
-
-    tier = (
-        _events(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return holt_linear(
-        tier,
-        ["event_type"],
-        ts_col="bucket_start",
-        value_col="n_events",
-        sf=0.4,
-        tf=0.2,
-    )
-
-
-def q_xcorr_lags_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lead-lag cross-correlation (operators/correlate.py xcorr_lags):
-    does hourly click volume lead hourly error volume by k ∈ [-2, 2]
-    buckets?  ONE window exchange computes every lag column off the
-    same sort, stack unpivots without a shuffle, then the exact-moment
-    Pearson (BIGINT sums, one double formula) — the oracle replays the
-    pairing as a dense-grid self-join."""
-    from mq_to_db_spark.operators.correlate import bucketed_pair_series, xcorr_lags
-
-    pair = bucketed_pair_series(
-        _events(spark, sf_dir),
-        "ts",
-        "1h",
-        F.count_if(F.col("event_type") == "click"),
-        F.count_if(F.col("event_type") == "error"),
-    )
-    out = xcorr_lags(pair, [-2, -1, 0, 1, 2])
-    return out.select("lag", "n_pairs", F.round("xcorr", 6).alias("xcorr"))
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registration order is EVIDENCE order, not build order: the
-    driver's correctness gate records at most the first ~50 entries
-    (r03/r04 each recorded exactly 50 in dict order), so per VERDICT
-    r04 #1-2 the round-5 order is (a) ``exphist_stats_1d`` — r04's one
-    red hash cell, re-registered first so its integer-exact fix lands
-    in the hard signal — then (b) the 54 queries that have never
-    appeared in ANY driver CORRECTNESS file (the r01-r04 union covers
-    100 of 154), then (c) the already-driver-proven rows where
-    truncation costs nothing.  The committed full-contract snapshot at
-    BENCH/correctness_r05_local.json covers every registered query."""
-    return {
-        # -- r04 VERDICT #1: the one red hash cell, now integer-exact --
-        "exphist_stats_1d": q_exphist_stats_1d,
-        # -- r04 VERDICT #2: the 54 registered queries that have never
-        #    appeared in ANY driver CORRECTNESS file (r01-r04 union holds
-        #    100 of 154) -- the ~50-row cap records these first --
-        "exphist_1d": q_exphist_1d,
-        "exphist_quantile_1d": q_exphist_quantile_1d,
-        "exphist_fraction_1d": q_exphist_fraction_1d,
-        "distinct_over_time_1h10m": q_distinct_over_time_1h10m,
-        "lww_upsert": q_lww_upsert,
-        "mixture_sample": q_mixture_sample,
-        "epoch_shuffle": q_epoch_shuffle,
-        "subquery_maxrate_1h": q_subquery_maxrate_1h,
-        "irate_10m": q_irate_10m,
-        "replica_dedup_1h": q_replica_dedup_1h,
-        "hist_fraction_1d": q_hist_fraction_1d,
-        "delta_1h": q_delta_1h,
-        "rate_extrap_1h": q_rate_extrap_1h,
-        "over_time_1h10m": q_over_time_1h10m,
-        "quantile_over_time_1h": q_quantile_over_time_1h,
-        "openmetrics_roundtrip": q_openmetrics_roundtrip,
-        "label_count_values_1d": q_label_count_values_1d,
-        "resample_locf_10m": q_resample_locf_10m,
-        "resample_interp_10m": q_resample_interp_10m,
-        "counter_adjust": q_counter_adjust,
-        "archive_spikes": q_archive_spikes,
-        "vector_ratio_1h": q_vector_ratio_1h,
-        "vector_setops_1h": q_vector_setops_1h,
-        "tier_stitch": q_tier_stitch,
-        "hybrid_read": q_hybrid_read,
-        "range_eval_6h": q_range_eval_6h,
-        "tier_audit": q_tier_audit,
-        "hist_rebin_1d": q_hist_rebin_1d,
-        "compact_late": q_compact_late,
-        "cusum_alarms_1d": q_cusum_alarms_1d,
-        "alert_episodes": q_alert_episodes,
-        "series_churn_1d": q_series_churn_1d,
-        "exemplars_1h": q_exemplars_1h,
-        "autocorr_1d": q_autocorr_1d,
-        "lexical_stats": q_lexical_stats,
-        "quota_violations_1d": q_quota_violations_1d,
-        "max_drawdown_1d": q_max_drawdown_1d,
-        "staleness_1h": q_staleness_1h,
-        "wow_delta_1h": q_wow_delta_1h,
-        "topk_others_1d": q_topk_others_1d,
-        "openmetrics_1h": q_openmetrics_1h,
-        "changes_1h": q_changes_1h,
-        "idelta_1h": q_idelta_1h,
-        "deriv_predict_1d": q_deriv_predict_1d,
-        "double_ewma_1h": q_double_ewma_1h,
-        "mad_outliers_1d": q_mad_outliers_1d,
-        "gap_stats_1d": q_gap_stats_1d,
-        "slo_burn_1h": q_slo_burn_1h,
-        "bm25_topk": q_bm25_topk,
-        "funnel_3step": q_funnel_3step,
-        "cohort_retention_wk": q_cohort_retention_wk,
-        "seasonal_hod_1h": q_seasonal_hod_1h,
-        "resets_1h": q_resets_1h,
-        "editdist_pairs": q_editdist_pairs,
-        # -- new this round (r05): behind the never-driver-checked block
-        #    (VERDICT r04 #2 priority); covered by the committed
-        #    full-contract snapshot --
-        "hll_distinct_1d": q_hll_distinct_1d,
-        # -- already driver-proven (green rows in r01-r04): truncation
-        #    here costs nothing --
-        "time_weighted_1h": q_time_weighted_1h,
-        "state_durations_1d": q_state_durations_1d,
-        "uptime_1h": q_uptime_1h,
-        "twa_interp_1h": q_twa_interp_1h,
-        "lttb_1h": q_lttb_1h,
-        "concurrency_10m": q_concurrency_10m,
-        "series_corr_1d": q_series_corr_1d,
-        "multimodal_features": q_multimodal_features,
-        "asap_1h": q_asap_1h,
-        "gcra_throttle_1h": q_gcra_throttle_1h,
-        "stickiness_1d": q_stickiness_1d,
-        "backtest_naive_1d": q_backtest_naive_1d,
-        "m4_1h": q_m4_1h,
-        "lm_perplexity": q_lm_perplexity,
-        "kmv_distinct_1d": q_kmv_distinct_1d,
-        "survival_conv": q_survival_conv,
-        "turn_echo": q_turn_echo,
-        "zipf_fit": q_zipf_fit,
-        "theil_sen_1d": q_theil_sen_1d,
-        "benford_digits": q_benford_digits,
-        "benford_chi2": q_benford_chi2,
-        "readability": q_readability,
-        "holt_winters_1h": q_holt_winters_1h,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "winsorize_1d": q_winsorize_1d,
-        "dispersion_1d": q_dispersion_1d,
-        "entropy_mix_1h": q_entropy_mix_1h,
-        "oov_rate": q_oov_rate,
-        "heaps_curve": q_heaps_curve,
-        "cep_browse_buy": q_cep_browse_buy,
-        "sax_1d": q_sax_1d,
-        "decay_topk": q_decay_topk,
-        "zorder_keys": q_zorder_keys,
-        "ab_welch_1d": q_ab_welch_1d,
-        "psi_1d": q_psi_1d,
-        "skew_audit": q_skew_audit,
-        "salt_plan": q_salt_plan,
-        "dedup_spans": q_dedup_spans,
-        "semdedup": q_semdedup,
-        "strip_boilerplate": q_strip_boilerplate,
-        "expectations": q_expectations,
-        "series_limit": q_series_limit,
-        "dsir_overlap": q_dsir_overlap,
-        "recording_rules": q_recording_rules,
-        "apdex_1h": q_apdex_1h,
-        "calendar_day_tz": q_calendar_day_tz,
-        "holt_linear_1h": q_holt_linear_1h,
-        "xcorr_lags_1h": q_xcorr_lags_1h,
-        "alert_silences": q_alert_silences,
-        "knn_join_lsh": q_knn_join_lsh,
-        "sample_split": q_sample_split,
-        "sample_stratified": q_sample_stratified,
-        "pack_sequences": q_pack_sequences,
-        "top_users_1h": q_top_users_1h,
-        "training_export": q_training_export,
-        "repetition_features": q_repetition_features,
-        "chunk_spans": q_chunk_spans,
-        "counter_increase": q_counter_increase,
-        "downsample_ohlc": q_downsample_ohlc,
-        "contamination": q_contamination,
-        "quantile_sketch_1h": q_quantile_sketch_1h,
-        "cms_counts_1d": q_cms_counts_1d,
-        "rolling_stats_1h": q_rolling_stats_1h,
-        "ewma_1h": q_ewma_1h,
-        "pii_redact": q_pii_redact,
-        "asof_fwd": q_asof_fwd,
-        "asof_nearest": q_asof_nearest,
-        "distinct_users_1h": q_distinct_users_1h,
-        "dedup_minhash_survivors": q_dedup_minhash_survivors,
-        "embedding_neardup": q_embedding_neardup,
-        "winnow_pairs": q_winnow_pairs,
-        "rollup_1m_counts": q_rollup_1m_counts,
-        "rollup_1h_value_stats": q_rollup_1h_value_stats,
-        "rollup_1d_cascade": q_rollup_1d_cascade,
-        "role_mix_1h": q_role_mix_1h,
-        "rate_1m": q_rate_1m,
-        "percentile_1h": q_percentile_1h,
-        "gauge_last_1h": q_gauge_last_1h,
-        "histogram_1d": q_histogram_1d,
-        "hist_quantile_1d": q_hist_quantile_1d,
-        "gapfill_1h": q_gapfill_1h,
-        "asof_join": q_asof_join,
-        "range_join": q_range_join,
-        "sessionize": q_sessionize,
-        "role_transitions": q_role_transitions,
-        "validate_split": q_validate_split,
-        "codec_roundtrip_agg": q_codec_roundtrip_agg,
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
-        "token_counts": q_token_counts,
-        "lang_quality": q_lang_quality,
-        "curation_pipeline": q_curation_pipeline,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "knn_join": q_knn_join,
-        "minhash_pairs": q_minhash_pairs,
-        "simhash_pairs": q_simhash_pairs,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "transcript_pipeline": q_transcript_pipeline,
-    }
-
-
-def _ann_lsh_oracle() -> str:
-    """DuckDB replay of the full hyperplane-LSH algorithm: the seeded
-    plane weights are embedded as literals (identical doubles on both
-    engines), signatures use the same left-associated dot sums, the
-    probe set is the same XOR-mask family, and candidates are re-ranked
-    by exact cosine — so the oracle verifies the approximation itself,
-    not a weaker recall proxy."""
-    from mq_to_db_spark.operators.similarity import hyperplane_planes, lsh_probe_masks
-
-    p = ANN_LSH_PARAMS
-    n = p["n_planes"]
-    planes = hyperplane_planes(n, EMB_DIM, p["seed"])
-    sig_terms = []
-    for pi in range(n):
-        dot = " + ".join(f"v[{i + 1}]*{float(w)!r}" for i, w in enumerate(planes[pi]))
-        sig_terms.append(f"(CASE WHEN ({dot}) >= 0 THEN {1 << (n - 1 - pi)} ELSE 0 END)")
-    sig_expr = "\n                 + ".join(sig_terms)
-    masks = ", ".join(str(m) for m in lsh_probe_masks(n, p["multiprobe"]))
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        sigs AS (SELECT vec_id, v, ({sig_expr}) AS sig FROM e),
-        q AS (SELECT v AS qv, sig AS qsig FROM sigs WHERE vec_id = {p["query_id"]}),
-        cand AS (
-            SELECT s.vec_id, list_cosine_similarity(s.v, q.qv) AS cos
-            FROM sigs s, q
-            WHERE xor(s.sig::BIGINT, q.qsig::BIGINT) IN ({masks}))
-        SELECT vec_id, round(cos, 5) AS cosine_r
-        FROM cand ORDER BY cos DESC, vec_id LIMIT {p["k"]}
-    """
-
-
-def _ann_ivf_oracle() -> str:
-    """DuckDB replay of the full IVF algorithm: md5-rank centroid
-    selection, max-cosine assignment with the same lid tie-break, the
-    same nprobe list ranking, exact re-rank within probed lists."""
-    p = ANN_IVF_PARAMS
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        cent AS (
-            SELECT cv, rn - 1 AS lid FROM (
-                SELECT v AS cv, row_number() OVER (
-                    ORDER BY ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
-                             vec_id) AS rn
-                FROM e)
-            WHERE rn <= {p["n_centroids"]}),
-        assign AS (
-            SELECT vec_id, v, lid FROM (
-                SELECT e.vec_id, e.v, c.lid,
-                       row_number() OVER (PARTITION BY e.vec_id
-                           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.lid DESC) AS rn
-                FROM e CROSS JOIN cent c)
-            WHERE rn = 1),
-        q AS (SELECT v AS qv FROM e WHERE vec_id = {p["query_id"]}),
-        probes AS (
-            SELECT lid FROM (
-                SELECT c.lid, row_number() OVER (
-                    ORDER BY list_cosine_similarity(c.cv, (SELECT qv FROM q)) DESC,
-                             c.lid) AS rn
-                FROM cent c)
-            WHERE rn <= {p["nprobe"]}),
-        cand AS (
-            SELECT a.vec_id, list_cosine_similarity(a.v, (SELECT qv FROM q)) AS cos
-            FROM assign a JOIN probes pr USING (lid))
-        SELECT vec_id, round(cos, 5) AS cosine_r
-        FROM cand ORDER BY cos DESC, vec_id LIMIT {p["k"]}
-    """
-
-
-def _embedding_neardup_oracle() -> str:
-    """DuckDB replay of the banded hyperplane OR-construction: one sig
-    expression per band (same seeded literal planes as the Spark side),
-    candidate = any-band collision, then the exact cosine filter."""
-    from mq_to_db_spark.operators.similarity import hyperplane_planes
-
-    p = NEARDUP_PARAMS
-    n = p["n_planes"]
-    band_cols, ors = [], []
-    for b in range(p["n_bands"]):
-        planes = hyperplane_planes(n, EMB_DIM, seed=1000 + b)
-        terms = []
-        for pi in range(n):
-            dot = " + ".join(
-                f"v[{i + 1}]*{float(w)!r}" for i, w in enumerate(planes[pi])
-            )
-            terms.append(
-                f"(CASE WHEN ({dot}) >= 0 THEN {1 << (n - 1 - pi)} ELSE 0 END)"
-            )
-        band_cols.append("(" + "\n                 + ".join(terms) + f") AS s{b}")
-        ors.append(f"a.s{b} = b.s{b}")
-    sig_select = ",\n               ".join(band_cols)
-    any_band = " OR ".join(ors)
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        sigs AS (SELECT vec_id, v,
-               {sig_select}
-            FROM e),
-        cand AS (
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   list_cosine_similarity(a.v, b.v) AS cos
-            FROM sigs a JOIN sigs b
-              ON a.vec_id < b.vec_id AND ({any_band}))
-        SELECT id_a, id_b, round(cos, 5) AS cosine_r
-        FROM cand WHERE cos >= {p["threshold"]}
-    """
-
-
-def _knn_join_lsh_oracle() -> str:
-    """DuckDB replay of the banded-LSH k-NN join: per-band signature
-    expressions from the same seeded literal planes (identical doubles,
-    same left-associated sums), candidate = any-band collision between a
-    left row and a right row, then exact-cosine row_number ranking per
-    left row — the full approximate algorithm, not a recall proxy."""
-    from mq_to_db_spark.operators.similarity import hyperplane_planes
-
-    p = KNN_LSH_PARAMS
-    n = p["n_planes"]
-    band_cols, ors = [], []
-    for b in range(p["n_bands"]):
-        planes = hyperplane_planes(n, EMB_DIM, seed=1000 + b)
-        terms = []
-        for pi in range(n):
-            dot = " + ".join(
-                f"v[{i + 1}]*{float(w)!r}" for i, w in enumerate(planes[pi])
-            )
-            terms.append(
-                f"(CASE WHEN ({dot}) >= 0 THEN {1 << (n - 1 - pi)} ELSE 0 END)"
-            )
-        band_cols.append("(" + "\n                 + ".join(terms) + f") AS s{b}")
-        ors.append(f"l.s{b} = r.s{b}")
-    sig_select = ",\n               ".join(band_cols)
-    any_band = " OR ".join(ors)
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        sigs AS (SELECT vec_id, v,
-               {sig_select}
-            FROM e),
-        cand AS (
-            SELECT l.vec_id AS lid, r.vec_id AS rid,
-                   list_cosine_similarity(l.v, r.v) AS cos
-            FROM sigs l JOIN sigs r
-              ON l.vec_id < {p["n_left"]} AND ({any_band})),
-        ranked AS (
-            SELECT lid, rid, cos,
-                   row_number() OVER (PARTITION BY lid
-                                      ORDER BY cos DESC, rid) AS rank
-            FROM cand)
-        SELECT lid, rid, round(cos, 5) AS cosine_r, rank
-        FROM ranked WHERE rank <= {p["k"]}
-    """
-
-
-def _bm25_oracle() -> str:
-    """Full BM25 replay: same tokenizer regex, same literal terms, the
-    same fixed-order double chain ((t0 + t1) + t2), the same
-    (1.2 + 1.0) budget-style sub-expressions so every operand is
-    bit-identical."""
-    tf_cols = ",\n                   ".join(
-        f"len(list_filter(t, x -> x = '{term}')) AS tf_{i}"
-        for i, term in enumerate(BM25_TERMS)
-    )
-    df_cols = ",\n                   ".join(
-        f"count(*) FILTER (WHERE tf_{i} > 0) AS df_{i}"
-        for i in range(len(BM25_TERMS))
-    )
-    terms = [
-        f"(ln(1.0 + (s.n_docs - CAST(s.df_{i} AS DOUBLE) + 0.5)"
-        f" / (CAST(s.df_{i} AS DOUBLE) + 0.5))"
-        f" * CAST(b.tf_{i} AS DOUBLE) * (1.2 + 1.0)"
-        f" / (CAST(b.tf_{i} AS DOUBLE)"
-        f" + 1.2 * ((1.0 - 0.75) + 0.75 * b.dl / (CAST(s.sum_dl AS DOUBLE) / s.n_docs))))"
-        for i in range(len(BM25_TERMS))
-    ]
-    chain = terms[0]
-    for t in terms[1:]:
-        chain = f"({chain} + {t})"
-    tf_out = ", ".join(f"tf_{i}" for i in range(len(BM25_TERMS)))
-    return f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                               x -> x <> '') AS t
-            FROM documents),
-        base AS (
-            SELECT doc_id, len(t) AS dl,
-                   {tf_cols}
-            FROM toks),
-        stats AS (
-            SELECT count(*) AS n_docs, sum(dl) AS sum_dl,
-                   {df_cols}
-            FROM base),
-        scored AS (
-            SELECT b.doc_id, b.dl, {", ".join(f"b.tf_{i}" for i in range(len(BM25_TERMS)))},
-                   {chain} AS score_raw
-            FROM base b, stats s)
-        SELECT doc_id, CAST(dl AS INT) AS dl,
-               {", ".join(f"CAST(tf_{i} AS INT) AS tf_{i}" for i in range(len(BM25_TERMS)))},
-               round(score_raw, 6) AS score
-        FROM scored WHERE score_raw > 0
-        ORDER BY score_raw DESC, doc_id
-        LIMIT {BM25_K}
-    """
-
-
-def oracle_sql() -> dict[str, str]:
-    type_pivots = ",\n               ".join(
-        f"count(*) FILTER (WHERE event_type = '{t}') AS n_{t}" for t in _EVENT_TYPES
-    )
-    # Benford fragments: the P literals are the PYTHON-computed doubles
-    # (repr = shortest round-trip, parses to identical bits), so libm
-    # log10 never runs inside DuckDB; the chi2 chain is the same
-    # left-associative nine-term fold as operators/benford.py.  The list
-    # is cast to DOUBLE[]: DuckDB reads bare 17-digit literals as
-    # DECIMAL(18,17), which would make benford_share a DECIMAL column
-    from mq_to_db_spark.operators.benford import BENFORD_P
-
-    _BENFORD_P_SQL = f"CAST([{', '.join(repr(p) for p in BENFORD_P)}] AS DOUBLE[])"
-    _BENFORD_COUNT_COLS = ",\n                       ".join(
-        f"CAST(count(*) FILTER (digit = {d}) AS BIGINT) AS d{d}"
-        for d in range(1, 10)
-    )
-    # Holt-Winters recursive-member expressions: the level update is
-    # inlined wherever the python scan reuses l_new (pure expressions —
-    # every repetition evaluates to the identical double)
-    _HW_X = "CAST(o.n_events AS DOUBLE)"
-    _HW_LNEW = f"(0.3 * ({_HW_X} - r.seas[1]) + (1 - 0.3) * (r.lev + r.tr))"
-    _HW_BNEW = f"(0.1 * ({_HW_LNEW} - r.lev) + (1 - 0.1) * r.tr)"
-    _HW_SNEW = f"(0.2 * ({_HW_X} - {_HW_LNEW}) + (1 - 0.2) * r.seas[1])"
-    _BENFORD_CHI2_CHAIN = "0.0" + "".join(
-        f"""
-                   + ((CAST(d{d} AS DOUBLE)
-                       - CAST(n_total AS DOUBLE) * {BENFORD_P[d - 1]!r})
-                      * (CAST(d{d} AS DOUBLE)
-                         - CAST(n_total AS DOUBLE) * {BENFORD_P[d - 1]!r}))
-                     / (CAST(n_total AS DOUBLE) * {BENFORD_P[d - 1]!r})"""
-        for d in range(1, 10)
-    )
-    return {
-        # M4: the four per-bucket point picks replayed as rank-1 rows
-        # under the SAME total orders ((ts, event_id) for first/last,
-        # (value, ts, event_id) for min/max), DISTINCT = array_distinct
-        # Heaps: same tokenizer, first-seen = min(doc_id) per token,
-        # running sums in doc order — all BIGINT
-        # skew audit: row_number rank replay (tie order provably
-        # output-invariant), exact BIGINT sums, the same literal Gini
-        # chain
-        "skew_audit": """
-            WITH c AS (
-                SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows
-                FROM events GROUP BY 1
-            ),
-            r AS (
-                SELECT user_id, n_rows,
-                       CAST(row_number() OVER (ORDER BY n_rows, user_id)
-                            AS BIGINT) AS rk
-                FROM c
-            ),
-            a AS (
-                SELECT CAST(max(rk) AS BIGINT) AS n_keys,
-                       CAST(sum(n_rows) AS BIGINT) AS total_rows,
-                       CAST(sum(rk * n_rows) AS BIGINT) AS s1,
-                       CAST(max(n_rows) AS BIGINT) AS max_key_rows
-                FROM r
-            ),
-            s AS (
-                SELECT
-                    (SELECT n_rows FROM r
-                     WHERE rk = (SELECT (n_keys + 1) // 2 FROM a))
-                        AS p50_key_rows,
-                    (SELECT CAST(sum(n_rows) AS BIGINT) FROM r
-                     WHERE rk > (SELECT n_keys
-                                 - greatest(1, n_keys // 100) FROM a))
-                        AS top1,
-                    (SELECT CAST(sum(n_rows) AS BIGINT) FROM r
-                     WHERE rk > (SELECT n_keys
-                                 - greatest(1, n_keys // 10) FROM a))
-                        AS top10
-            )
-            SELECT n_keys, total_rows, max_key_rows, p50_key_rows,
-                   CAST(top1 AS DOUBLE) / CAST(total_rows AS DOUBLE)
-                       AS top1_share,
-                   CAST(top10 AS DOUBLE) / CAST(total_rows AS DOUBLE)
-                       AS top10_share,
-                   (2.0 * CAST(s1 AS DOUBLE))
-                       / (CAST(n_keys AS DOUBLE)
-                          * CAST(total_rows AS DOUBLE))
-                   - (CAST(n_keys + 1 AS DOUBLE)
-                      / CAST(n_keys AS DOUBLE)) AS gini
-            FROM a, s
-        """,
-        # salt plan: pure integer ceil-div, capped
-        "salt_plan": """
-            SELECT user_id, n_rows,
-                   CAST(least((n_rows + 49) // 50, 8) AS INT) AS n_salts
-            FROM (
-                SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows
-                FROM events GROUP BY 1
-            )
-        """,
-        # PSI: identical CASE-sum buckets, add-one-smoothed shares,
-        # bucket-order list_reduce fold (ln parity per lm_perplexity)
-        "psi_1d": """
-            WITH v AS (
-                SELECT date_trunc('day', ts) AS day,
-                       CAST(floor(value * 1e3) AS BIGINT) AS v
-                FROM events
-            ),
-            bk AS (
-                SELECT day,
-                       (CASE WHEN v >= 12500 THEN 1 ELSE 0 END
-                        + CASE WHEN v >= 25000 THEN 1 ELSE 0 END
-                        + CASE WHEN v >= 37500 THEN 1 ELSE 0 END
-                        + CASE WHEN v >= 50000 THEN 1 ELSE 0 END
-                        + CASE WHEN v >= 62500 THEN 1 ELSE 0 END
-                        + CASE WHEN v >= 75000 THEN 1 ELSE 0 END
-                        + CASE WHEN v >= 87500 THEN 1 ELSE 0 END) AS b
-                FROM v
-            ),
-            counts AS (
-                SELECT day, b, CAST(count(*) AS BIGINT) AS c
-                FROM bk GROUP BY 1, 2
-            ),
-            base AS (
-                SELECT b, CAST(sum(c) AS BIGINT) AS cq
-                FROM counts GROUP BY 1
-            ),
-            tot AS (SELECT CAST(sum(c) AS BIGINT) AS nq FROM counts),
-            grid AS (
-                SELECT d.day, g.b
-                FROM (SELECT DISTINCT day FROM counts) d
-                CROSS JOIN (SELECT unnest(range(8)) AS b) g
-            ),
-            filled AS (
-                SELECT g.day, g.b,
-                       coalesce(c.c, 0) AS c,
-                       coalesce(ba.cq, 0) AS cq,
-                       (SELECT nq FROM tot) AS nq
-                FROM grid g
-                LEFT JOIN counts c ON c.day = g.day AND c.b = g.b
-                LEFT JOIN base ba ON ba.b = g.b
-            ),
-            per AS (
-                SELECT day, CAST(sum(c) AS BIGINT) AS n,
-                       list(struct_pack(b := b, c := c, cq := cq,
-                                        nq := nq) ORDER BY b) AS a
-                FROM filled GROUP BY 1
-            )
-            SELECT day, n,
-                   list_reduce(list_transform(a,
-                       e -> ((e.c + 1) / (n + 8)
-                             - (e.cq + 1) / (e.nq + 8))
-                            * ln(((e.c + 1) / (n + 8))
-                                 / ((e.cq + 1) / (e.nq + 8)))),
-                       (x, y) -> x + y) AS psi
-            FROM per
-        """,
-        # Welch t: identical fixed double chain over the same exact
-        # BIGINT milli-unit moments (var via s2 - s*m, then t and the
-        # Satterthwaite dof in literal op order)
-        "ab_welch_1d": """
-            WITH m AS (
-                SELECT date_trunc('day', ts) AS day,
-                       CAST(count(*) FILTER (event_type = 'click')
-                            AS BIGINT) AS n_a,
-                       CAST(count(*) FILTER (event_type = 'view')
-                            AS BIGINT) AS n_b,
-                       CAST(coalesce(sum(CAST(floor(value * 1e3) AS BIGINT))
-                            FILTER (event_type = 'click'), 0) AS BIGINT) AS s_a,
-                       CAST(coalesce(sum(CAST(floor(value * 1e3) AS BIGINT))
-                            FILTER (event_type = 'view'), 0) AS BIGINT) AS s_b,
-                       CAST(coalesce(sum(CAST(floor(value * 1e3) AS BIGINT)
-                            * CAST(floor(value * 1e3) AS BIGINT))
-                            FILTER (event_type = 'click'), 0) AS BIGINT) AS s2_a,
-                       CAST(coalesce(sum(CAST(floor(value * 1e3) AS BIGINT)
-                            * CAST(floor(value * 1e3) AS BIGINT))
-                            FILTER (event_type = 'view'), 0) AS BIGINT) AS s2_b
-                FROM events
-                WHERE event_type IN ('click', 'view')
-                GROUP BY 1
-            ),
-            c AS (
-                SELECT day, n_a, n_b,
-                       CAST(s_a AS DOUBLE) / n_a AS mean_a,
-                       CAST(s_b AS DOUBLE) / n_b AS mean_b,
-                       (CAST(s2_a AS DOUBLE)
-                        - CAST(s_a AS DOUBLE) * (CAST(s_a AS DOUBLE) / n_a))
-                           / (n_a - 1) AS va,
-                       (CAST(s2_b AS DOUBLE)
-                        - CAST(s_b AS DOUBLE) * (CAST(s_b AS DOUBLE) / n_b))
-                           / (n_b - 1) AS vb
-                FROM m
-            )
-            SELECT day, n_a, n_b, mean_a, mean_b,
-                   CASE WHEN n_a >= 2 AND n_b >= 2
-                             AND va / n_a + vb / n_b > 0
-                        THEN (mean_a - mean_b)
-                             / sqrt(va / n_a + vb / n_b) END AS t_stat,
-                   CASE WHEN n_a >= 2 AND n_b >= 2
-                             AND va / n_a + vb / n_b > 0
-                        THEN ((va / n_a + vb / n_b)
-                              * (va / n_a + vb / n_b))
-                             / ((va / n_a) * (va / n_a) / (n_a - 1)
-                                + (vb / n_b) * (vb / n_b) / (n_b - 1))
-                        END AS dof
-            FROM c
-        """,
-        # z-order: full Morton replay — md5 low bits, exact integer
-        # range scaling with // , and the same interleave as a list
-        # comprehension over bit positions
-        "zorder_keys": """
-            WITH ext AS (
-                SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi
-                FROM events
-            ),
-            lanes AS (
-                SELECT event_id,
-                       ('0x' || substring(
-                           md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
-                           & 65535 AS h,
-                       ((epoch_us(ts) - (SELECT lo FROM ext)) * 65535)
-                           // ((SELECT hi FROM ext)
-                               - (SELECT lo FROM ext)) AS t
-                FROM events
-            )
-            SELECT event_id,
-                   CAST(list_sum(
-                       [((h >> b) & 1) * (CAST(1 AS BIGINT) << (2 * b))
-                        + ((t >> b) & 1) * (CAST(1 AS BIGINT) << (2 * b + 1))
-                        for b in range(16)]) AS BIGINT) AS zkey
-            FROM lanes
-        """,
-        # decayed heavy hitters: exact 1/(1<<k) factors, bucket-order
-        # list_reduce fold, (score DESC, user) deterministic rank
-        "decay_topk": """
-            WITH d AS (
-                SELECT CAST(user_id AS VARCHAR) AS user_id,
-                       date_trunc('day', ts) AS day,
-                       CAST(sum(CAST(floor(value * 1e6) AS BIGINT))
-                            AS BIGINT) AS sc
-                FROM events GROUP BY 1, 2
-            ),
-            mx AS (SELECT max(day) AS mday FROM d),
-            g AS (
-                SELECT user_id,
-                       list(CAST(sc AS DOUBLE) / CAST(
-                           (CAST(1 AS BIGINT) << (
-                               datediff('day', day,
-                                        (SELECT mday FROM mx)) // 7))
-                           AS DOUBLE) ORDER BY day) AS terms
-                FROM d GROUP BY 1
-            ),
-            s AS (
-                SELECT user_id,
-                       list_reduce(terms, (a, b) -> a + b) AS score
-                FROM g
-            )
-            SELECT user_id, score, rank FROM (
-                SELECT user_id, score,
-                       CAST(row_number() OVER (
-                           ORDER BY score DESC, user_id) AS INT) AS rank
-                FROM s
-            ) WHERE rank <= 20
-        """,
-        # SAX: position-order list_reduce folds — the first-element
-        # seed equals Spark's 0.0+v1 seed exactly in IEEE arithmetic,
-        # so mean/std and every breakpoint compare replay bit-for-bit
-        "sax_1d": """
-            WITH h AS (
-                SELECT event_type,
-                       date_trunc('hour', ts) AS hb,
-                       CAST(sum(CAST(floor(value * 1e6) AS BIGINT))
-                            AS BIGINT) AS sc,
-                       CAST(count(*) AS BIGINT) AS n
-                FROM events GROUP BY 1, 2
-            ),
-            d AS (
-                SELECT event_type,
-                       date_trunc('day', hb) AS window_start,
-                       list(CAST(sc AS DOUBLE) / n ORDER BY hb) AS vals
-                FROM h GROUP BY 1, 2
-            ),
-            s AS (
-                SELECT event_type, window_start, vals,
-                       list_reduce(vals, (a, b) -> a + b) / len(vals)
-                           AS m
-                FROM d
-            ),
-            s2 AS (
-                SELECT event_type, window_start, vals, m,
-                       sqrt(list_reduce(
-                           list_transform(vals, x -> (x - m) * (x - m)),
-                           (a, b) -> a + b) / len(vals)) AS sd
-                FROM s
-            )
-            SELECT event_type, window_start,
-                   array_to_string(list_transform(vals,
-                       x -> CASE WHEN x < m - 0.6745 * sd THEN 'a'
-                                 WHEN x < m THEN 'b'
-                                 WHEN x < m + 0.6745 * sd THEN 'c'
-                                 ELSE 'd' END), '') AS sax_word,
-                   CAST(len(vals) AS BIGINT) AS n_buckets
-            FROM s2
-        """,
-        # CEP: the full split/extract_all position reconstruction
-        # replayed — same RE2-safe pattern, same greedy leftmost
-        # non-overlapping engine semantics, one running-sum window
-        "cep_browse_buy": """
-            WITH tr AS (
-                SELECT CAST(user_id AS VARCHAR) AS conv_id,
-                       CAST(row_number() OVER (
-                           PARTITION BY user_id
-                           ORDER BY ts, event_id) - 1 AS INT)
-                           AS turn_idx,
-                       event_type AS role, ts
-                FROM events
-            ),
-            s AS (
-                SELECT conv_id, turn_idx, ts,
-                       CASE role WHEN 'view' THEN 'v'
-                            WHEN 'click' THEN 'c'
-                            WHEN 'purchase' THEN 'p'
-                            WHEN 'error' THEN 'e'
-                            WHEN 'signup' THEN 's'
-                            ELSE 'x' END AS sym
-                FROM tr
-            ),
-            g AS (
-                SELECT conv_id,
-                       string_agg(sym, '' ORDER BY turn_idx) AS symstr,
-                       list(turn_idx ORDER BY turn_idx) AS idxs,
-                       list(ts ORDER BY turn_idx) AS tss
-                FROM s GROUP BY conv_id
-            ),
-            m AS (
-                SELECT conv_id, idxs, tss,
-                       regexp_extract_all(symstr, 'vc*p') AS ms,
-                       string_split_regex(symstr, 'vc*p') AS gs
-                FROM g
-            ),
-            u AS (
-                SELECT conv_id, idxs, tss, gs,
-                       generate_subscripts(ms, 1) AS i,
-                       unnest(ms) AS mt
-                FROM m
-            ),
-            p AS (
-                SELECT conv_id, idxs, tss,
-                       CAST(i AS INT) AS match_seq, mt,
-                       CAST(sum(len(gs[i]) + len(mt)) OVER (
-                           PARTITION BY conv_id ORDER BY i)
-                           - len(mt) + 1 AS INT) AS start1
-                FROM u
-            )
-            SELECT conv_id, match_seq,
-                   mt AS match_syms,
-                   CAST(len(mt) AS BIGINT) AS n_events,
-                   idxs[start1] AS start_turn_idx,
-                   idxs[CAST(start1 + len(mt) - 1 AS INT)]
-                       AS end_turn_idx,
-                   tss[start1] AS start_ts,
-                   tss[CAST(start1 + len(mt) - 1 AS INT)] AS end_ts
-            FROM p
-        """,
-        "heaps_curve": """
-            WITH t AS (
-                SELECT doc_id, list_filter(
-                    string_split_regex(lower(text), '[^a-z0-9]+'),
-                    x -> x <> '') AS toks
-                FROM documents
-            ),
-            fs AS (
-                SELECT tok, min(doc_id) AS doc_id
-                FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-                GROUP BY 1
-            ),
-            nt AS (
-                SELECT doc_id, CAST(count(*) AS BIGINT) AS new_types
-                FROM fs GROUP BY 1
-            ),
-            d AS (
-                SELECT t.doc_id,
-                       CAST(len(toks) AS BIGINT) AS n_tokens,
-                       CAST(coalesce(nt.new_types, 0) AS BIGINT)
-                           AS new_types
-                FROM t LEFT JOIN nt USING (doc_id)
-            )
-            SELECT doc_id, n_tokens,
-                   CAST(sum(n_tokens) OVER (
-                       ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-                       AS BIGINT) AS cum_tokens,
-                   new_types,
-                   CAST(sum(new_types) OVER (
-                       ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-                       AS BIGINT) AS cum_types
-            FROM d
-        """,
-        # OOV: same tokenizer, same (freq DESC, tok) top-20, same
-        # binary membership and one division
-        "oov_rate": """
-            WITH c AS (
-                SELECT tok, count(*) AS freq FROM (
-                    SELECT unnest(list_filter(
-                        string_split_regex(lower(text), '[^a-z0-9]+'),
-                        x -> x <> '')) AS tok
-                    FROM documents
-                ) GROUP BY 1
-            ),
-            v AS (
-                SELECT list(tok ORDER BY freq DESC, tok) AS vl
-                FROM (SELECT tok, freq FROM c ORDER BY freq DESC, tok
-                      LIMIT 20)
-            ),
-            t AS (
-                SELECT doc_id, list_filter(
-                    string_split_regex(lower(text), '[^a-z0-9]+'),
-                    x -> x <> '') AS toks
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(len(toks) AS BIGINT) AS n_tokens,
-                   CAST(len(list_filter(toks,
-                        x -> NOT list_contains(vl, x))) AS BIGINT) AS n_oov,
-                   CASE WHEN len(toks) > 0 THEN round(
-                       CAST(len(list_filter(toks,
-                            x -> NOT list_contains(vl, x))) AS DOUBLE)
-                       / CAST(len(toks) AS DOUBLE), 6) END AS oov_rate
-            FROM t CROSS JOIN v
-        """,
-        # winsorize: same rank window (value, event_id), same
-        # ceil-rank picks, same clamp projection
-        "winsorize_1d": """
-            WITH t AS (
-                SELECT event_id, event_type,
-                       date_trunc('day', ts) AS bucket_start, value
-                FROM events
-            ),
-            r AS (
-                SELECT *,
-                       row_number() OVER (
-                           PARTITION BY event_type, bucket_start
-                           ORDER BY value, event_id) AS rn,
-                       count(*) OVER (
-                           PARTITION BY event_type, bucket_start) AS n
-                FROM t WHERE value IS NOT NULL
-            ),
-            b AS (
-                SELECT event_type, bucket_start,
-                       min(CASE WHEN rn = greatest(least(
-                           CAST(ceil(0.05 * n) AS BIGINT), n), 1)
-                           THEN value END) AS lo,
-                       max(CASE WHEN rn = greatest(least(
-                           CAST(ceil(0.95 * n) AS BIGINT), n), 1)
-                           THEN value END) AS hi
-                FROM r GROUP BY 1, 2
-            )
-            SELECT t.event_id, t.event_type, t.bucket_start, t.value,
-                   b.lo, b.hi,
-                   CASE WHEN t.value IS NULL THEN NULL
-                        ELSE least(greatest(t.value, b.lo), b.hi)
-                   END AS value_wins
-            FROM t LEFT JOIN b USING (event_type, bucket_start)
-        """,
-        # dispersion: dense-grid moments with the constant 1440
-        # denominator, same unrounded mean/var feeding each round
-        "dispersion_1d": """
-            WITH pm AS (
-                SELECT event_type,
-                       date_trunc('day', ts) AS bucket_start,
-                       date_trunc('minute', ts) AS m,
-                       CAST(count(*) AS BIGINT) AS c
-                FROM events GROUP BY 1, 2, 3
-            ),
-            a AS (
-                SELECT event_type, bucket_start,
-                       CAST(sum(c) AS BIGINT) AS n_events,
-                       CAST(count(*) AS BIGINT) AS minutes_active,
-                       CAST(sum(c * c) AS BIGINT) AS sq
-                FROM pm GROUP BY 1, 2
-            )
-            SELECT event_type, bucket_start, n_events, minutes_active,
-                   round(CAST(n_events AS DOUBLE) / 1440.0, 6)
-                       AS mean_per_min,
-                   round(CAST(sq AS DOUBLE) / 1440.0
-                         - (CAST(n_events AS DOUBLE) / 1440.0)
-                           * (CAST(n_events AS DOUBLE) / 1440.0), 6)
-                       AS var_per_min,
-                   CASE WHEN n_events > 0 THEN round(
-                       (CAST(sq AS DOUBLE) / 1440.0
-                        - (CAST(n_events AS DOUBLE) / 1440.0)
-                          * (CAST(n_events AS DOUBLE) / 1440.0))
-                       / (CAST(n_events AS DOUBLE) / 1440.0), 6)
-                   END AS fano
-            FROM a
-        """,
-        # entropy: count_if pivot + the fixed type-sorted term chain
-        "entropy_mix_1h": f"""
-            WITH a AS (
-                SELECT date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_events,
-                       {", ".join(
-                           f"CAST(count(*) FILTER (event_type = '{t}') "
-                           f"AS BIGINT) AS c_{t}"
-                           for t in sorted(_EVENT_TYPES)
-                       )}
-                FROM events
-                WHERE event_type IN (
-                    {", ".join(f"'{t}'" for t in sorted(_EVENT_TYPES))})
-                GROUP BY 1
-            )
-            SELECT bucket_start, n_events,
-                   ({" + ".join(
-                       f"CASE WHEN c_{t} > 0 THEN 1 ELSE 0 END"
-                       for t in sorted(_EVENT_TYPES)
-                   )})::BIGINT AS k_observed,
-                   round(0.0{"".join(
-                       f'''
-                       + CASE WHEN c_{t} > 0 THEN -(
-                           (CAST(c_{t} AS DOUBLE) / CAST(n_events AS DOUBLE))
-                           * ln(CAST(c_{t} AS DOUBLE)
-                                / CAST(n_events AS DOUBLE)))
-                         ELSE 0.0 END'''
-                       for t in sorted(_EVENT_TYPES)
-                   )}, 6) AS entropy,
-                   CASE WHEN ({" + ".join(
-                       f"CASE WHEN c_{t} > 0 THEN 1 ELSE 0 END"
-                       for t in sorted(_EVENT_TYPES)
-                   )}) > 1 THEN round((0.0{"".join(
-                       f'''
-                       + CASE WHEN c_{t} > 0 THEN -(
-                           (CAST(c_{t} AS DOUBLE) / CAST(n_events AS DOUBLE))
-                           * ln(CAST(c_{t} AS DOUBLE)
-                                / CAST(n_events AS DOUBLE)))
-                         ELSE 0.0 END'''
-                       for t in sorted(_EVENT_TYPES)
-                   )}) / ln(CAST(({" + ".join(
-                       f"CASE WHEN c_{t} > 0 THEN 1 ELSE 0 END"
-                       for t in sorted(_EVENT_TYPES)
-                   )}) AS DOUBLE)), 6)
-                   ELSE 0.0 END AS evenness
-            FROM a
-        """,
-        # Bloom decontamination: full bit-level replay — same md5-coin
-        # probe positions, same 63-bit word packing, same all-bits-set
-        # membership, so even the designed false positives match
-        "bloom_decontaminate": f"""
-            WITH d AS (
-                SELECT doc_id, {_NORM_SQL} AS k FROM documents
-            ),
-            pos AS (
-                SELECT doc_id, i,
-                       ('0x' || substring(
-                           md5('bloom' || i || ':' || k), 1, 15))::BIGINT
-                       % 256 AS p
-                FROM d, unnest([1, 2, 3, 4]) AS t(i)
-            ),
-            words AS (
-                SELECT p // 63 AS word,
-                       bit_or(1::BIGINT << CAST(p % 63 AS INT)) AS bits
-                FROM pos WHERE doc_id % 7 = 0 GROUP BY 1
-            ),
-            hits AS (
-                SELECT pos.doc_id,
-                       bool_and(w.bits IS NOT NULL
-                                AND (w.bits
-                                     & (1::BIGINT << CAST(pos.p % 63 AS INT)))
-                                    = (1::BIGINT
-                                       << CAST(pos.p % 63 AS INT)))
-                           AS bloom_hit
-                FROM pos LEFT JOIN words w ON w.word = pos.p // 63
-                GROUP BY 1
-            )
-            SELECT d.doc_id, d.doc_id % 7 = 0 AS is_eval, h.bloom_hit
-            FROM d JOIN hits h USING (doc_id)
-        """,
-        # Holt-Winters: recursive CTE carrying (level, trend, DOUBLE[24]
-        # seasonal ring) per series; identical literal op order; series
-        # shorter than two seasons left-join to NULL like the engine
-        "holt_winters_1h": f"""
-            WITH RECURSIVE tier AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_events
-                FROM events GROUP BY 1, 2
-            ),
-            ordered AS (
-                SELECT event_type, bucket_start, n_events,
-                       row_number() OVER (
-                           PARTITION BY event_type ORDER BY bucket_start
-                       ) AS rn,
-                       count(*) OVER (PARTITION BY event_type) AS cnt
-                FROM tier
-            ),
-            init AS (
-                SELECT event_type,
-                       CAST(sum(n_events) FILTER (rn <= 24) AS DOUBLE) AS s1,
-                       CAST(sum(n_events) FILTER (rn > 24 AND rn <= 48)
-                            AS DOUBLE) AS s2,
-                       list(CAST(n_events AS DOUBLE) ORDER BY rn)
-                           FILTER (rn <= 24) AS xs
-                FROM ordered WHERE cnt >= 48 GROUP BY event_type
-            ),
-            rec AS (
-                SELECT event_type,
-                       CAST(24 AS BIGINT) AS rn,
-                       s1 / 24 AS lev,
-                       (s2 / 24 - s1 / 24) / 24 AS tr,
-                       list_transform(xs, x -> x - s1 / 24) AS seas,
-                       CAST(NULL AS DOUBLE) AS seasonal_out,
-                       CAST(NULL AS DOUBLE) AS fitted
-                FROM init
-                UNION ALL
-                SELECT o.event_type, o.rn,
-                       {_HW_LNEW},
-                       {_HW_BNEW},
-                       list_append(r.seas[2:], {_HW_SNEW}),
-                       {_HW_SNEW},
-                       r.lev + r.tr + r.seas[1]
-                FROM rec r JOIN ordered o
-                  ON o.event_type = r.event_type AND o.rn = r.rn + 1
-            )
-            SELECT o.event_type, o.bucket_start, o.n_events,
-                   round(r.lev, 6) AS level,
-                   round(r.tr, 6) AS trend,
-                   round(r.seasonal_out, 6) AS seasonal,
-                   round(r.fitted, 6) AS fitted
-            FROM ordered o LEFT JOIN (
-                SELECT * FROM rec WHERE rn > 24
-            ) r ON o.event_type = r.event_type AND o.rn = r.rn
-        """,
-        # Theil-Sen: same hourly count series, same sorted-struct pair
-        # expansion, same lower-median picks
-        "theil_sen_1d": """
-            WITH hourly AS (
-                SELECT event_type, date_trunc('hour', ts) AS h,
-                       CAST(count(*) AS BIGINT) AS y
-                FROM events GROUP BY 1, 2
-            ),
-            day AS (
-                SELECT event_type,
-                       date_trunc('day', h) AS bucket_start,
-                       list_sort(list(struct_pack(
-                           x := (epoch_us(h)
-                                 - epoch_us(date_trunc('day', h)))
-                                // 3600000000,
-                           y := y))) AS pts
-                FROM hourly GROUP BY 1, 2
-            ),
-            sl AS (
-                SELECT event_type, bucket_start, pts,
-                       list_sort(list_filter(flatten(list_transform(
-                           range(1, len(pts) + 1),
-                           i -> list_transform(
-                               range(i + 1, len(pts) + 1),
-                               j -> CASE WHEN pts[j].x > pts[i].x
-                                    THEN CAST(pts[j].y - pts[i].y AS DOUBLE)
-                                         / CAST(pts[j].x - pts[i].x AS DOUBLE)
-                                    END))),
-                           s -> s IS NOT NULL)) AS slopes
-                FROM day
-            ),
-            m AS (
-                SELECT event_type, bucket_start, pts,
-                       CAST(len(pts) AS BIGINT) AS n_samples,
-                       CAST(len(slopes) AS BIGINT) AS n_pairs,
-                       CASE WHEN len(slopes) > 0
-                            THEN slopes[(len(slopes) + 1) // 2] END AS slope
-                FROM sl
-            )
-            SELECT event_type, bucket_start, n_samples, n_pairs,
-                   round(slope, 6) AS slope,
-                   CASE WHEN slope IS NOT NULL THEN round(
-                       list_sort(list_transform(pts,
-                           p -> CAST(p.y AS DOUBLE)
-                                - slope * CAST(p.x AS DOUBLE)))
-                       [(len(pts) + 1) // 2], 6) END AS intercept
-            FROM m
-        """,
-        # Benford digit table: same cents cast, same string first char,
-        # same literal log10 expectations (embedded full-precision)
-        "benford_digits": f"""
-            WITH c AS (
-                SELECT event_type,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events
-            ),
-            d AS (
-                SELECT event_type,
-                       CAST(substring(CAST(abs(v) AS VARCHAR), 1, 1) AS INT)
-                           AS digit,
-                       CAST(count(*) AS BIGINT) AS n_obs
-                FROM c WHERE v <> 0 GROUP BY 1, 2
-            ),
-            t AS (
-                SELECT *, sum(n_obs) OVER (PARTITION BY event_type) AS tot
-                FROM d
-            )
-            SELECT event_type, digit, n_obs,
-                   CAST(tot AS BIGINT) AS n_total,
-                   round(CAST(n_obs AS DOUBLE) / CAST(tot AS DOUBLE), 6)
-                       AS obs_share,
-                   round(({_BENFORD_P_SQL})[digit], 6) AS benford_share,
-                   round(abs(CAST(n_obs AS DOUBLE) / CAST(tot AS DOUBLE)
-                             - ({_BENFORD_P_SQL})[digit]), 6) AS abs_dev
-            FROM t
-        """,
-        # Benford chi2: the same nine-term left-associative chain
-        "benford_chi2": f"""
-            WITH c AS (
-                SELECT event_type,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events
-            ),
-            d AS (
-                SELECT event_type,
-                       CAST(substring(CAST(abs(v) AS VARCHAR), 1, 1) AS INT)
-                           AS digit
-                FROM c WHERE v <> 0
-            ),
-            g AS (
-                SELECT event_type,
-                       CAST(count(*) AS BIGINT) AS n_total,
-                       {_BENFORD_COUNT_COLS}
-                FROM d GROUP BY 1
-            )
-            SELECT event_type, n_total,
-                   round({_BENFORD_CHI2_CHAIN}, 6) AS chi2
-            FROM g
-        """,
-        # readability: same three regex counts, same fixed-order score
-        "readability": """
-            WITH k AS (
-                SELECT doc_id,
-                       CAST(coalesce(len(regexp_extract_all(
-                           text, '[A-Za-z0-9'']+')), 0) AS BIGINT) AS w,
-                       CAST(coalesce(len(regexp_extract_all(
-                           text, '[.!?]+')), 0) AS BIGINT) AS s,
-                       CAST(coalesce(len(regexp_extract_all(
-                           text, '[aeiouyAEIOUY]+')), 0) AS BIGINT) AS vg
-                FROM documents
-            )
-            SELECT doc_id,
-                   w AS n_words,
-                   CASE WHEN w = 0 THEN 0 ELSE greatest(s, 1) END
-                       AS n_sentences,
-                   greatest(vg, w) AS n_syllables,
-                   CASE WHEN w > 0 THEN round(
-                       206.835
-                       - 1.015 * (CAST(w AS DOUBLE)
-                                  / CAST(greatest(s, 1) AS DOUBLE))
-                       - 84.6 * (CAST(greatest(vg, w) AS DOUBLE)
-                                 / CAST(w AS DOUBLE)), 6) END AS flesch
-            FROM k
-        """,
-        # KMV: bottom-64 distinct md5-coin hashes straight from raw at
-        # the 1d grain (== the engine's 1h→1d cascade by the
-        # bottom-k(union) identity); estimate arithmetic op-for-op
-        # HLL: full-sketch replay — md5 coin, register prefix/rho via
-        # to_base string length (never floor(log2)), group max, sorted-j
-        # harmonic fold of exact dyadics 1/(1<<rho), identical estimator
-        # op order; ln branch is the tolerated ~1-ulp surface
-        "hll_distinct_1d": """
-            WITH h AS (
-                SELECT DISTINCT event_type,
-                       date_trunc('day', ts) AS bucket_start,
-                       ('0x' || substring(
-                           md5('42:' || CAST(user_id AS VARCHAR)),
-                           1, 15))::BIGINT AS h
-                FROM events WHERE user_id IS NOT NULL
-            ),
-            r AS (
-                SELECT event_type, bucket_start,
-                       CAST(h >> 51 AS INT) AS j,
-                       h % (CAST(1 AS BIGINT) << 51) AS w
-                FROM h
-            ),
-            rho AS (
-                SELECT event_type, bucket_start, j,
-                       CASE WHEN w = 0 THEN 52
-                            ELSE 52 - length(to_base(w, 2)) END AS rho
-                FROM r
-            ),
-            regs AS (
-                SELECT event_type, bucket_start, j,
-                       max(rho) AS mr
-                FROM rho GROUP BY 1, 2, 3
-            ),
-            agg AS (
-                SELECT event_type, bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_regs_set,
-                       CAST(512 - count(*) AS BIGINT) AS n_zero_regs,
-                       list_reduce(
-                           list(1.0 / CAST(CAST(1 AS BIGINT) << mr
-                                           AS DOUBLE) ORDER BY j),
-                           (x, y) -> x + y) AS s
-                FROM regs GROUP BY 1, 2
-            )
-            SELECT event_type, bucket_start, n_regs_set, n_zero_regs,
-                   CASE WHEN ((0.7213 / (1.0 + 1.079 / 512.0)) * 512.0)
-                             * 512.0
-                             / (CAST(n_zero_regs AS DOUBLE) + s) <= 1280.0
-                             AND n_zero_regs > 0
-                        THEN 512.0 * ln(512.0
-                                        / CAST(n_zero_regs AS DOUBLE))
-                        ELSE ((0.7213 / (1.0 + 1.079 / 512.0)) * 512.0)
-                             * 512.0
-                             / (CAST(n_zero_regs AS DOUBLE) + s)
-                   END AS estimate
-            FROM agg
-        """,
-        "kmv_distinct_1d": """
-            WITH h AS (
-                SELECT DISTINCT event_type,
-                       date_trunc('day', ts) AS bucket_start,
-                       ('0x' || substring(
-                           md5('42:' || CAST(user_id AS VARCHAR)),
-                           1, 15))::BIGINT AS h
-                FROM events WHERE user_id IS NOT NULL
-            ),
-            r AS (
-                SELECT *, row_number() OVER (
-                           PARTITION BY event_type, bucket_start
-                           ORDER BY h) AS rn
-                FROM h
-            )
-            SELECT event_type, bucket_start,
-                   CAST(count(*) AS BIGINT) AS n_hashes,
-                   max(CASE WHEN rn = 64 THEN h END) AS kth_hash,
-                   CASE WHEN count(*) < 64
-                        THEN CAST(count(*) AS DOUBLE)
-                        ELSE round(63.0 * 1152921504606846976.0
-                             / CAST(max(CASE WHEN rn = 64 THEN h END)
-                                    AS DOUBLE), 6)
-                   END AS est_distinct
-            FROM r WHERE rn <= 64
-            GROUP BY event_type, bucket_start
-        """,
-        # Kaplan-Meier: same lifetimes/censor rule, same risk-set
-        # integers, same running Σ ln(1-d/n) in duration order
-        "survival_conv": """
-            WITH lt AS (
-                SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS ck,
-                       epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us,
-                       CASE WHEN max(ts) <
-                                 (SELECT max(ts) FROM events)
-                                 - INTERVAL 12 HOUR
-                            THEN 1 ELSE 0 END AS observed
-                FROM events GROUP BY 1
-            ),
-            by_t AS (
-                SELECT duration_us,
-                       CAST(count(*) FILTER (observed = 1) AS BIGINT)
-                           AS n_deaths,
-                       CAST(count(*) FILTER (observed = 0) AS BIGINT)
-                           AS n_censored
-                FROM lt GROUP BY 1
-            ),
-            risk AS (
-                SELECT *,
-                       (SELECT count(*) FROM lt)
-                       - sum(n_deaths + n_censored) OVER (
-                             ORDER BY duration_us
-                             ROWS UNBOUNDED PRECEDING)
-                       + (n_deaths + n_censored) AS n_at_risk
-                FROM by_t
-            ),
-            curve AS (
-                SELECT *,
-                       sum(CASE WHEN n_deaths > 0 AND n_deaths < n_at_risk
-                                THEN ln(1.0 - CAST(n_deaths AS DOUBLE)
-                                            / CAST(n_at_risk AS DOUBLE))
-                                ELSE 0.0 END) OVER (
-                           ORDER BY duration_us
-                           ROWS UNBOUNDED PRECEDING) AS lnS
-                FROM risk
-            )
-            SELECT duration_us,
-                   CAST(n_at_risk AS BIGINT) AS n_at_risk,
-                   n_deaths, n_censored,
-                   CASE WHEN n_deaths >= n_at_risk THEN 0.0
-                        ELSE round(exp(lnS), 6) END AS survival
-            FROM curve WHERE n_deaths > 0
-        """,
-        # turn echo: same transcript adapter, same tokenizer, same
-        # distinct-bigram sets, same same-role lag pairing
-        "turn_echo": """
-            WITH t AS (
-                SELECT CAST(user_id AS VARCHAR) AS conv_id,
-                       event_type AS role,
-                       row_number() OVER (
-                           PARTITION BY user_id
-                           ORDER BY ts, event_id) - 1 AS turn_idx,
-                       list_filter(
-                           string_split_regex(lower(props), '[^a-z0-9]+'),
-                           x -> x <> '') AS toks
-                FROM events
-            ),
-            g AS (
-                SELECT conv_id, role, turn_idx,
-                       list_sort(list_distinct(
-                           CASE WHEN len(toks) >= 2
-                                THEN list_transform(
-                                    range(1, len(toks)),
-                                    i -> toks[i] || ' ' || toks[i + 1])
-                                ELSE []::VARCHAR[] END)) AS gr
-                FROM t
-            ),
-            p AS (
-                SELECT *, lag(gr) OVER (
-                           PARTITION BY conv_id, role
-                           ORDER BY turn_idx) AS pg
-                FROM g
-            )
-            SELECT conv_id, CAST(turn_idx AS INT) AS turn_idx, role,
-                   CAST(len(gr) AS BIGINT) AS n_grams,
-                   CAST(len(pg) AS BIGINT) AS n_prev_grams,
-                   CAST(len(list_intersect(gr, pg)) AS BIGINT) AS n_common,
-                   CAST(len(list_distinct(list_concat(gr, pg))) AS BIGINT)
-                       AS n_union,
-                   CASE WHEN len(list_distinct(list_concat(gr, pg))) > 0
-                        THEN round(
-                            CAST(len(list_intersect(gr, pg)) AS DOUBLE)
-                            / CAST(len(list_distinct(list_concat(gr, pg)))
-                                   AS DOUBLE), 6)
-                        ELSE 0.0 END AS jaccard,
-                   CASE WHEN len(gr) > 0
-                        THEN round(
-                            CAST(len(list_intersect(gr, pg)) AS DOUBLE)
-                            / CAST(len(gr) AS DOUBLE), 6)
-                        ELSE 0.0 END AS containment
-            FROM p WHERE pg IS NOT NULL
-        """,
-        # Zipf fit: same (freq DESC, token ASC) ranking, same
-        # fixed-order fold — accumulator as a DOUBLE[6] vector so
-        # list_reduce walks the identical left-to-right chain
-        "zipf_fit": """
-            WITH c AS (
-                SELECT tok, CAST(count(*) AS BIGINT) AS freq
-                FROM (
-                    SELECT unnest(list_filter(
-                        string_split_regex(lower(text), '[^a-z0-9]+'),
-                        x -> x <> '')) AS tok
-                    FROM documents
-                ) GROUP BY 1
-            ),
-            tot AS (
-                SELECT CAST(count(*) AS BIGINT) AS vocab_size,
-                       CAST(sum(freq) AS BIGINT) AS total_tokens
-                FROM c
-            ),
-            top AS (
-                SELECT tok, freq FROM c
-                ORDER BY freq DESC, tok LIMIT 100
-            ),
-            arr AS (
-                SELECT list(CAST(freq AS DOUBLE)
-                            ORDER BY freq DESC, tok) AS fs,
-                       CAST(count(*) AS BIGINT) AS n_fit,
-                       list(tok ORDER BY freq DESC, tok)[1] AS top_token,
-                       CAST(max(freq) AS BIGINT) AS top_freq
-                FROM top
-            ),
-            folded AS (
-                SELECT n_fit, top_token, top_freq,
-                       list_reduce(
-                           list_prepend(
-                               [0.0, 0.0, 0.0, 0.0, 0.0, 0.0],
-                               list_transform(fs, f -> [f])),
-                           (a, e) -> [
-                               a[1] + 1,
-                               a[2] + ln(a[1] + 1),
-                               a[3] + ln(e[1]),
-                               a[4] + ln(a[1] + 1) * ln(a[1] + 1),
-                               a[5] + ln(a[1] + 1) * ln(e[1]),
-                               a[6] + ln(e[1]) * ln(e[1])
-                           ]) AS s
-                FROM arr
-            )
-            SELECT vocab_size, total_tokens, n_fit, top_token, top_freq,
-                   round((s[1] * s[5] - s[2] * s[3])
-                         / (s[1] * s[4] - s[2] * s[2]), 6) AS zipf_slope,
-                   round((s[3] - (s[1] * s[5] - s[2] * s[3])
-                                 / (s[1] * s[4] - s[2] * s[2]) * s[2])
-                         / s[1], 6) AS intercept,
-                   round((s[1] * s[5] - s[2] * s[3])
-                         * (s[1] * s[5] - s[2] * s[3])
-                         / ((s[1] * s[4] - s[2] * s[2])
-                            * (s[1] * s[6] - s[3] * s[3])), 6) AS r2
-            FROM folded CROSS JOIN tot
-        """,
-        "m4_1h": """
-            WITH r AS (
-                SELECT event_type,
-                       date_trunc('hour', ts) AS bucket_start, ts, value,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY ts, event_id) AS rf,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY ts DESC, event_id DESC) AS rl,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY value, ts, event_id) AS rmin,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY value DESC, ts DESC, event_id DESC
-                       ) AS rmax
-                FROM events WHERE value IS NOT NULL
-            )
-            SELECT DISTINCT event_type, bucket_start, ts, value
-            FROM r WHERE 1 IN (rf, rl, rmin, rmax)
-        """,
-        # bigram-LM self-perplexity: identical tokenizer, identical
-        # corpus counts, and the SAME position-ordered fold (list_sort
-        # by pos -> list_transform to ln terms -> left-assoc list_reduce
-        # == Spark's aggregate over sort_array; the first fold step adds
-        # 0.0, which is exact) — logprob and ppl hash-match bit-for-bit
-        "lm_perplexity": """
-            WITH toks AS (
-                SELECT doc_id,
-                       list_filter(
-                           string_split_regex(lower(text), '[^a-z0-9]+'),
-                           x -> x <> '') AS t
-                FROM documents
-            ),
-            nz AS (SELECT * FROM toks WHERE len(t) > 0),
-            pos AS (
-                SELECT doc_id, t,
-                       unnest(range(1, len(t) + 1)) AS pos
-                FROM nz
-            ),
-            p2 AS (
-                SELECT doc_id, pos,
-                       CASE WHEN pos = 1 THEN '<s>'
-                            ELSE t[pos - 1] END AS h,
-                       t[pos] AS w
-                FROM pos
-            ),
-            bc AS (
-                SELECT h, w, CAST(count(*) AS BIGINT) AS c
-                FROM p2 GROUP BY 1, 2
-            ),
-            hc AS (SELECT h, CAST(sum(c) AS BIGINT) AS ch FROM bc GROUP BY 1),
-            vv AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM bc),
-            joined AS (
-                SELECT p2.doc_id, p2.pos, bc.c, hc.ch, vv.v
-                FROM p2
-                JOIN bc USING (h, w)
-                JOIN hc USING (h)
-                CROSS JOIN vv
-            ),
-            folded AS (
-                SELECT doc_id,
-                       CAST(count(*) AS BIGINT) AS n_tokens,
-                       CAST(sum(c) AS BIGINT) AS bigram_c_sum,
-                       CAST(count(*) FILTER (c = 1) AS BIGINT)
-                           AS n_singletons,
-                       list_reduce(
-                           list_prepend(CAST(0.0 AS DOUBLE),
-                               list_transform(
-                                   list_sort(list(
-                                       struct_pack(pos := pos, c := c,
-                                                   ch := ch, v := v))),
-                                   x -> ln(CAST(x.c + 1 AS DOUBLE))
-                                        - ln(CAST(x.ch + x.v AS DOUBLE)))),
-                           (a, b) -> a + b) AS lp
-                FROM joined GROUP BY doc_id
-            )
-            SELECT doc_id, n_tokens, bigram_c_sum, n_singletons,
-                   round(lp, 6) AS logprob,
-                   round(exp(-(lp / CAST(n_tokens AS DOUBLE))), 6) AS ppl
-            FROM folded
-        """,
-        # SemDeDup: full algorithm replay (init + unrolled Lloyd + drop)
-        "semdedup": _semdedup_oracle(),
-        # span dedup: same doubled-doc synth, same gram join + md5 coin
-        # (integer-identical hashes), dup starts by first-position scan,
-        # coverage by interval test — exact strings and counts
-        "dedup_spans": f"""
-            WITH d AS (
-                SELECT doc_id,
-                       CASE WHEN doc_id % 3 = 0 THEN text || ' ' || text
-                            ELSE text END AS text
-                FROM documents
-            ),
-            toks AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\\s+'),
-                                   x -> x <> '') AS t
-                FROM d
-            ),
-            g AS (
-                SELECT doc_id, t, len(t) AS n,
-                    CASE WHEN len(t) >= {SPAN_WINDOW} THEN
-                        list_transform(range(1, len(t) - {SPAN_WINDOW} + 2),
-                            i -> ('0x' || substring(md5('13:' ||
-                                    array_to_string(
-                                        t[i : i + {SPAN_WINDOW} - 1], ' ')),
-                                    1, 15))::BIGINT)
-                    ELSE [] END AS gh
-                FROM toks
-            ),
-            m AS (
-                SELECT doc_id, t, n,
-                    list_filter(range(1, len(gh) + 1),
-                                i -> list_position(gh, gh[i]) < i) AS dups
-                FROM g
-            ),
-            k AS (
-                SELECT doc_id, n,
-                    list_transform(
-                        list_filter(range(1, n + 1),
-                            p -> len(list_filter(dups,
-                                    i -> i <= p
-                                         AND p <= i + {SPAN_WINDOW} - 1)) = 0),
-                        p -> t[p]) AS kept
-                FROM m
-            )
-            SELECT doc_id, array_to_string(kept, ' ') AS text_dedup,
-                   n::BIGINT AS n_tokens,
-                   (n - len(kept))::BIGINT AS n_removed
-            FROM k
-        """,
-        # boilerplate strip: identical normalize + md5-coin membership,
-        # rebuild by ordered string_agg — exact strings end to end
-        "strip_boilerplate": """
-            WITH d AS (
-                SELECT doc_id,
-                       text || chr(10) || 'Please SUBSCRIBE to our newsletter!'
-                            || chr(10) || 'footer of ' || source AS t
-                FROM documents
-            ),
-            l AS (
-                SELECT doc_id,
-                       unnest(string_split(t, chr(10))) AS line,
-                       generate_subscripts(string_split(t, chr(10)), 1) AS pos
-                FROM d
-            ),
-            h AS (
-                SELECT doc_id, line, pos,
-                       ('0x' || substring(md5('11:' || trim(regexp_replace(
-                            regexp_replace(lower(line), '[^\\w\\s]', ' ', 'g'),
-                            '\\s+', ' ', 'g'))), 1, 15))::BIGINT AS lh,
-                       trim(line) = '' AS blank
-                FROM l
-            ),
-            bp AS (
-                SELECT lh FROM h WHERE NOT blank
-                GROUP BY lh HAVING count(DISTINCT doc_id) >= 3
-            )
-            SELECT doc_id,
-                   coalesce(string_agg(line, chr(10) ORDER BY pos)
-                            FILTER (WHERE blank
-                                    OR lh NOT IN (SELECT lh FROM bp)),
-                            '') AS text_clean
-            FROM h GROUP BY doc_id
-        """,
-        # expectations: each foldable check one FILTER tally; the
-        # monotonic check a lag replay; BIGINT counts, integer pass
-        "expectations": """
-            WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_rows FROM events),
-            mono AS (
-                SELECT CAST(count(*) FILTER (
-                           WHERE pv IS NOT NULL AND value < pv
-                       ) AS BIGINT) AS v
-                FROM (
-                    SELECT value, lag(value) OVER (
-                        PARTITION BY user_id ORDER BY event_id) AS pv
-                    FROM events
-                )
-            )
-            SELECT 'not_null(value)' AS expectation, 'not_null' AS kind,
-                   CAST(count(*) FILTER (WHERE value IS NULL) AS BIGINT)
-                       AS n_violations,
-                   (SELECT n_rows FROM n) AS n_rows,
-                   count(*) FILTER (WHERE value IS NULL) = 0 AS "pass"
-            FROM events
-            UNION ALL
-            SELECT 'unique(event_id)', 'unique',
-                   CAST(count(*) - count(DISTINCT event_id) AS BIGINT),
-                   (SELECT n_rows FROM n),
-                   count(*) - count(DISTINCT event_id) = 0
-            FROM events
-            UNION ALL
-            SELECT 'accepted_values(event_type in [''click'', ''view'', ''purchase'', ''signup''])',
-                   'accepted_values',
-                   CAST(count(*) FILTER (
-                       WHERE event_type NOT IN
-                             ('click', 'view', 'purchase', 'signup')
-                          OR event_type IS NULL) AS BIGINT),
-                   (SELECT n_rows FROM n),
-                   count(*) FILTER (
-                       WHERE event_type NOT IN
-                             ('click', 'view', 'purchase', 'signup')
-                          OR event_type IS NULL) = 0
-            FROM events
-            UNION ALL
-            SELECT 'in_range(value in [0.0, 100.0])', 'in_range',
-                   CAST(count(*) FILTER (
-                       WHERE value IS NULL OR value < 0.0 OR value > 100.0
-                   ) AS BIGINT),
-                   (SELECT n_rows FROM n),
-                   count(*) FILTER (
-                       WHERE value IS NULL OR value < 0.0 OR value > 100.0
-                   ) = 0
-            FROM events
-            UNION ALL
-            SELECT 'no_future_events', 'custom',
-                   CAST(count(*) FILTER (
-                       WHERE ts > TIMESTAMP '2024-02-01') AS BIGINT),
-                   (SELECT n_rows FROM n),
-                   count(*) FILTER (WHERE ts > TIMESTAMP '2024-02-01') = 0
-            FROM events
-            UNION ALL
-            SELECT 'monotonic(value per user_id)', 'monotonic',
-                   (SELECT v FROM mono), (SELECT n_rows FROM n),
-                   (SELECT v FROM mono) = 0
-        """,
-        # series limit: identical (first_ts, user_id) admission order
-        "series_limit": """
-            WITH e AS (
-                SELECT event_type, user_id, min(ts) AS first_ts,
-                       CAST(count(*) AS BIGINT) AS n_samples
-                FROM events GROUP BY 1, 2
-            ),
-            r AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY event_type ORDER BY first_ts, user_id
-                ) AS rank
-                FROM e
-            )
-            SELECT event_type, user_id, first_ts, n_samples,
-                   CAST(rank AS INT) AS rank
-            FROM r WHERE rank > 20
-        """,
-        # DSIR overlap: same tokenizer, bigrams, md5-coin buckets,
-        # BIGINT inner product — integer-exact end to end
-        "dsir_overlap": """
-            WITH tok AS (
-                SELECT doc_id, source,
-                       list_filter(string_split_regex(lower(text), '\\s+'),
-                                   x -> x <> '') AS t
-                FROM documents
-            ),
-            ng AS (
-                SELECT doc_id, source,
-                       unnest(list_transform(range(1, len(t)),
-                              i -> array_to_string(t[i:i+1], ' '))) AS g
-                FROM tok WHERE len(t) >= 2
-            ),
-            b AS (
-                SELECT doc_id, source,
-                       ('0x' || substring(md5('7:' || g), 1, 15))::BIGINT
-                           % 8192 AS bucket
-                FROM ng
-            ),
-            rc AS (
-                SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS c
-                FROM b WHERE source NOT IN ('src0', 'src1') GROUP BY 1, 2
-            ),
-            tp AS (
-                SELECT bucket, CAST(count(*) AS BIGINT) AS ct
-                FROM b WHERE source IN ('src0', 'src1') GROUP BY 1
-            )
-            SELECT rc.doc_id, CAST(sum(rc.c * tp.ct) AS BIGINT) AS overlap
-            FROM rc JOIN tp USING (bucket)
-            GROUP BY 1 ORDER BY overlap DESC, doc_id LIMIT 50
-        """,
-        # recording rules: the same four-rule DAG as one CTE chain
-        "recording_rules": """
-            WITH hourly_by_type AS (
-                SELECT date_trunc('hour', ts) AS bucket_start, event_type,
-                       CAST(count(*) AS BIGINT) AS n
-                FROM events GROUP BY 1, 2
-            ),
-            hourly_share AS (
-                SELECT bucket_start,
-                       round(CAST(sum(CASE WHEN event_type = 'error'
-                                           THEN n ELSE 0 END) AS DOUBLE)
-                             / CAST(sum(n) AS DOUBLE), 6) AS error_share
-                FROM hourly_by_type GROUP BY 1
-            ),
-            daily_worst AS (
-                SELECT date_trunc('day', bucket_start) AS day,
-                       CAST(count(*) AS BIGINT) AS n_hours,
-                       max(error_share) AS max_share,
-                       min(error_share) AS min_share
-                FROM hourly_share GROUP BY 1
-            ),
-            daily_volume AS (
-                SELECT date_trunc('day', bucket_start) AS day,
-                       CAST(sum(n) AS BIGINT) AS n_events
-                FROM hourly_by_type GROUP BY 1
-            )
-            SELECT w.day, w.n_hours, w.max_share, w.min_share, v.n_events
-            FROM daily_worst w JOIN daily_volume v USING (day)
-        """,
-        # exphist stats: same bucket-count CTE as the fraction oracle,
-        # then INTEGER moment sums (4·mid_i = 3·2^i, 16·mid_i² = 9·4^i
-        # exact at schema 0) — no float rounding anywhere, so no
-        # HALF_UP-vs-multiply-round-divide divergence is possible
-        "exphist_stats_1d": """
-            WITH c AS (
-                SELECT event_type, date_trunc('day', ts) AS bucket_start,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events WHERE value IS NOT NULL
-            ),
-            b AS (
-                SELECT event_type, bucket_start,
-                       CAST(length(to_base(v, 2)) - 1
-                            + CASE WHEN (v & (v - 1)) = 0 THEN 0 ELSE 1 END
-                            AS INT) AS bucket_idx
-                FROM c WHERE v > 0
-            ),
-            g AS (
-                SELECT event_type, bucket_start, bucket_idx,
-                       CAST(count(*) AS BIGINT) AS n
-                FROM b GROUP BY 1, 2, 3
-            )
-            SELECT event_type, bucket_start,
-                   CAST(sum(n) AS BIGINT) AS n_obs,
-                   CAST(sum(n * 3 * (CAST(1 AS BIGINT) << bucket_idx))
-                        AS BIGINT) AS s1_x4,
-                   CAST(sum(n * 9 * (CAST(1 AS BIGINT) << (2 * bucket_idx)))
-                        AS BIGINT) AS s2_x16
-            FROM g GROUP BY 1, 2
-        """,
-        # apdex: three FILTER tallies, one double expression, round 6
-        "apdex_1h": """
-            SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                   CAST(count(*) AS BIGINT) AS n_total,
-                   CAST(count(*) FILTER (WHERE value <= 20.0) AS BIGINT)
-                       AS n_satisfied,
-                   CAST(count(*) FILTER (
-                       WHERE value > 20.0 AND value <= 80.0) AS BIGINT)
-                       AS n_tolerating,
-                   round((CAST(count(*) FILTER (WHERE value <= 20.0)
-                               AS DOUBLE)
-                          + CAST(count(*) FILTER (
-                                WHERE value > 20.0 AND value <= 80.0)
-                            AS DOUBLE) / 2.0)
-                         / CAST(count(*) AS DOUBLE), 6) AS apdex
-            FROM events GROUP BY 1, 2
-        """,
-        # calendar day in a fractional-offset zone: the same ICU
-        # round-trip (UTC -> local wall clock -> truncate -> UTC)
-        "calendar_day_tz": """
-            SELECT event_type,
-                   timezone('UTC', timezone('Asia/Kathmandu',
-                       date_trunc('day',
-                           timezone('Asia/Kathmandu', timezone('UTC', ts)))))
-                       AS bucket_start,
-                   date_trunc('day',
-                       timezone('Asia/Kathmandu', timezone('UTC', ts)))
-                       AS local_start,
-                   CAST(count(*) AS BIGINT) AS n_rows,
-                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
-                       AS value_sum
-            FROM events GROUP BY 1, 2, 3
-        """,
-        # Holt linear: the exact Prometheus recurrence as a recursive
-        # CTE — same literal op order, states unrounded until the end
-        "holt_linear_1h": """
+# Holt linear: the exact Prometheus recurrence as a recursive
+# CTE — same literal op order, states unrounded until the end
+@contract("""
             WITH RECURSIVE tier AS (
                 SELECT event_type, date_trunc('hour', ts) AS bucket_start,
                        CAST(count(*) AS BIGINT) AS n_events
@@ -5700,10 +5858,36 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN is_first THEN NULL
                         ELSE round(b, 6) END AS trend
             FROM rec
-        """,
-        # xcorr: dense-grid self-join replays lag(a, k) pairing, then
-        # the shared exact-moment Pearson
-        "xcorr_lags_1h": """
+        """)
+def q_holt_linear_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-parameter Holt linear smoothing — PromQL
+    ``holt_winters(v, 0.4, 0.2)`` / Prometheus 3.x
+    ``double_exponential_smoothing`` parity (operators/ewma.py
+    holt_linear; prometheus/promql/functions.go calcTrendValue) over
+    the hourly count tier per event_type.  States stay unrounded
+    through the recurrence in the same literal op order as the
+    recursive-CTE oracle; O(tier-bucket) loop inside one grouped Arrow
+    batch, never the raw stream."""
+    from mq_to_db_spark.operators.ewma import holt_linear
+
+    tier = (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return holt_linear(
+        tier,
+        ["event_type"],
+        ts_col="bucket_start",
+        value_col="n_events",
+        sf=0.4,
+        tf=0.2,
+    )
+
+
+# xcorr: dense-grid self-join replays lag(a, k) pairing, then
+# the shared exact-moment Pearson
+@contract("""
             WITH tier AS (
                 SELECT date_trunc('hour', ts) AS bucket_start,
                        CAST(count(*) FILTER (WHERE event_type = 'click')
@@ -5745,10 +5929,31 @@ def oracle_sql() -> dict[str, str]:
                                          - CAST(sb AS DOUBLE) * sb), 0.0),
                          6) AS xcorr
             FROM m
-        """,
-        # alert silences: merged-calendar interval subtraction replayed
-        # with window-lag gaps over the SAME clipped, disjoint windows
-        "alert_silences": """
+        """)
+def q_xcorr_lags_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lead-lag cross-correlation (operators/correlate.py xcorr_lags):
+    does hourly click volume lead hourly error volume by k ∈ [-2, 2]
+    buckets?  ONE window exchange computes every lag column off the
+    same sort, stack unpivots without a shuffle, then the exact-moment
+    Pearson (BIGINT sums, one double formula) — the oracle replays the
+    pairing as a dense-grid self-join."""
+    from mq_to_db_spark.operators.correlate import bucketed_pair_series, xcorr_lags
+
+    pair = bucketed_pair_series(
+        _events(spark, sf_dir),
+        "ts",
+        "1h",
+        F.count_if(F.col("event_type") == "click"),
+        F.count_if(F.col("event_type") == "error"),
+    )
+    out = xcorr_lags(pair, [-2, -1, 0, 1, 2])
+    return out.select("lag", "n_pairs", F.round("xcorr", 6).alias("xcorr"))
+
+
+# alert silences: merged-calendar interval subtraction replayed
+# with window-lag gaps over the SAME clipped, disjoint windows
+@contract(
+    """
             WITH s AS (
                 SELECT event_type, ts, event_id,
                        CAST(floor(value * 1000000.0) AS BIGINT) AS v
@@ -5811,991 +6016,802 @@ def oracle_sql() -> dict[str, str]:
                    ge - gs AS sub_us
             FROM gaps WHERE ge > gs
         """,
-        # exphist: EXACT integer replay of ceil(log2(v)) — binary-string
-        # length (floor(log2)+1) minus 1 when v is a power of two
-        "exphist_1d": """
-            WITH c AS (
-                SELECT event_type, date_trunc('day', ts) AS bucket_start,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events WHERE value IS NOT NULL
-            ),
-            b AS (
-                SELECT event_type, bucket_start,
-                       CAST(length(to_base(v, 2)) - 1
-                            + CASE WHEN (v & (v - 1)) = 0 THEN 0 ELSE 1 END
-                            AS INT) AS bucket_idx
-                FROM c WHERE v > 0
+    # q_alert_silences below — the maintenance CALENDAR build:
+    # distinct event_types × broadcast(14-row day spine), both sides
+    # config-sized literals (output = 140 silence rows).  The actual
+    # episode−silence subtraction is a BroadcastHashJoin on the key
+    # (plan shows it directly above the allowed cross).
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_alert_silences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Alertmanager silences in batch (operators/intervals.py
+    subtract_intervals): the alert episodes of ``alert_episodes`` minus
+    a deterministic maintenance calendar — per event_type, every other
+    day carries two OVERLAPPING silence windows [02:00, 07:00) and
+    [05:00, 09:30) (merged to [02:00, 09:30) by merge_intervals) — the
+    surviving rows are the spans that would actually have notified.
+    Config-sized subtrahend broadcast; the episode table never shuffles
+    for the join.  Exact BIGINT µs spans."""
+    from mq_to_db_spark.operators.changepoint import threshold_episodes
+    from mq_to_db_spark.operators.intervals import subtract_intervals
+
+    ev = _events(spark, sf_dir).select(
+        "event_type", "ts", "event_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    eps = threshold_episodes(
+        ev, ["event_type"], ts_col="ts", value_col="v",
+        threshold=50_000_000, min_duration_us=1_800_000_000,
+        tiebreak=("event_id",),
+    ).select("event_type", "start_ts", "end_ts")
+    days = spark.sql(
+        "SELECT explode(sequence(timestamp'2024-01-01', "
+        "timestamp'2024-01-27', interval 2 days)) AS d"
+    )
+    sil = (
+        ev.select("event_type").distinct()
+        .crossJoin(days)
+        .select(
+            "event_type",
+            F.explode(
+                F.array(
+                    F.struct(
+                        (F.col("d") + F.expr("interval 2 hours")).alias("s"),
+                        (F.col("d") + F.expr("interval 7 hours")).alias("e"),
+                    ),
+                    F.struct(
+                        (F.col("d") + F.expr("interval 5 hours")).alias("s"),
+                        (F.col("d") + F.expr("interval 9 hours 30 minutes")).alias("e"),
+                    ),
+                )
+            ).alias("w"),
+        )
+        .select("event_type", F.col("w.s").alias("start_ts"), F.col("w.e").alias("end_ts"))
+    )
+    return subtract_intervals(eps, sil, ["event_type"]).select(
+        "event_type", "start_ts", "end_ts", "sub_start", "sub_end", "sub_us"
+    )
+
+
+ANN_LSH_PARAMS = dict(n_planes=6, multiprobe=2, seed=13, k=10, query_id=1)
+ANN_IVF_PARAMS = dict(n_centroids=8, nprobe=3, k=10, query_id=2)
+NEARDUP_PARAMS = dict(n_planes=8, n_bands=8, threshold=0.3)
+EMB_DIM = 64
+
+
+KNN_LSH_PARAMS = dict(n_planes=8, n_bands=8, k=3, n_left=10)
+
+
+def _lsh_band_sigs(n: int, n_bands: int, left: str, right: str) -> tuple[str, str]:
+    """DuckDB select list of the banded hyperplane signatures ``s0..``
+    (band b's planes seeded ``1000 + b``, as the Spark side seeds them;
+    the same literal doubles and left-associated dot sums) and the
+    any-band collision predicate between aliases ``left`` and ``right``."""
+    from mq_to_db_spark.operators.similarity import hyperplane_planes
+
+    band_cols, ors = [], []
+    for b in range(n_bands):
+        planes = hyperplane_planes(n, EMB_DIM, seed=1000 + b)
+        terms = []
+        for pi in range(n):
+            dot = " + ".join(
+                f"v[{i + 1}]*{float(w)!r}" for i, w in enumerate(planes[pi])
             )
-            SELECT event_type, bucket_start, bucket_idx,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM b GROUP BY 1, 2, 3
-        """,
-        # exphist quantile: the estimator arithmetic replicated in the
-        # same IEEE operation order as exp_hist_quantile
-        "exphist_quantile_1d": """
-            WITH c AS (
-                SELECT event_type, date_trunc('day', ts) AS bucket_start,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events WHERE value IS NOT NULL
-            ),
-            b AS (
-                SELECT event_type, bucket_start,
-                       CAST(length(to_base(v, 2)) - 1
-                            + CASE WHEN (v & (v - 1)) = 0 THEN 0 ELSE 1 END
-                            AS INT) AS bucket_idx
-                FROM c WHERE v > 0
-            ),
-            g AS (
-                SELECT event_type, bucket_start, bucket_idx,
-                       CAST(count(*) AS BIGINT) AS n
-                FROM b GROUP BY 1, 2, 3
-            ),
-            r AS (
-                SELECT *,
-                       sum(n) OVER (PARTITION BY event_type, bucket_start
-                                    ORDER BY bucket_idx) AS cum,
-                       sum(n) OVER (PARTITION BY event_type, bucket_start)
-                           AS total
-                FROM g
-            ),
-            s AS (
-                SELECT event_type, bucket_start,
-                       arg_min(bucket_idx, bucket_idx) AS bidx,
-                       arg_min(n, bucket_idx) AS bn,
-                       arg_min(cum, bucket_idx) AS bcum,
-                       arg_min(0.9 * total, bucket_idx) AS rnk
-                FROM r WHERE cum >= 0.9 * total
-                GROUP BY 1, 2
+            terms.append(
+                f"(CASE WHEN ({dot}) >= 0 THEN {1 << (n - 1 - pi)} ELSE 0 END)"
             )
-            SELECT event_type, bucket_start,
-                   round(pow(2.0, CAST(bidx AS DOUBLE) - 1.0)
-                         + (pow(2.0, CAST(bidx AS DOUBLE))
-                            - pow(2.0, CAST(bidx AS DOUBLE) - 1.0))
-                           * ((rnk - (bcum - bn)) / CAST(bn AS DOUBLE)),
-                         6) AS p90
-            FROM s
-        """,
-        # exphist fraction: whole buckets BIGINT + the one straddling
-        # bucket's closed-form weight, same IEEE op order
-        "exphist_fraction_1d": """
-            WITH c AS (
-                SELECT event_type, date_trunc('day', ts) AS bucket_start,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events WHERE value IS NOT NULL
-            ),
-            b AS (
-                SELECT event_type, bucket_start,
-                       CAST(length(to_base(v, 2)) - 1
-                            + CASE WHEN (v & (v - 1)) = 0 THEN 0 ELSE 1 END
-                            AS INT) AS bucket_idx
-                FROM c WHERE v > 0
-            ),
-            g AS (
-                SELECT event_type, bucket_start, bucket_idx,
-                       CAST(count(*) AS BIGINT) AS n
-                FROM b GROUP BY 1, 2, 3
-            ),
-            a AS (
-                SELECT event_type, bucket_start,
-                       sum(CASE WHEN pow(2.0, CAST(bucket_idx AS DOUBLE)) <= 5000.0
-                                THEN n ELSE 0 END) AS whole,
-                       sum(CASE WHEN pow(2.0, CAST(bucket_idx AS DOUBLE) - 1.0) < 5000.0
-                                 AND 5000.0 < pow(2.0, CAST(bucket_idx AS DOUBLE))
-                                THEN n * ((5000.0 - pow(2.0, CAST(bucket_idx AS DOUBLE) - 1.0))
-                                          / (pow(2.0, CAST(bucket_idx AS DOUBLE))
-                                             - pow(2.0, CAST(bucket_idx AS DOUBLE) - 1.0)))
-                                ELSE 0.0 END) AS str,
-                       sum(n) AS tot
-                FROM g GROUP BY 1, 2
-            )
-            SELECT event_type, bucket_start,
-                   round((whole + str) / CAST(tot AS DOUBLE), 6) AS frac_le
-            FROM a
-        """,
-        # distinct_over_time: identical bounded explode, exact distinct
-        "distinct_over_time_1h10m": """
-            WITH s AS (
-                SELECT event_type, epoch_us(ts) AS tus, user_id
-                FROM events
-            ),
-            g AS (
-                SELECT event_type, user_id,
-                       unnest(generate_series(
-                           ((tus + 599999999) // 600000000) * 600000000,
-                           tus + 3599999999,
-                           600000000)) AS gus
-                FROM s
-            )
-            SELECT event_type, make_timestamp(gus) AS grid_ts,
-                   CAST(count(*) AS BIGINT) AS n_samples,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
-            FROM g GROUP BY 1, 2
-        """,
-        # lww upsert: same three-batch union, row_number version pick
-        "lww_upsert": """
-            WITH s AS (
-                SELECT event_id, ts, 1 AS seq, value FROM events
-                UNION ALL
-                SELECT event_id, ts, 2, value * 2 FROM events
-                WHERE event_id % 3 = 0
-                UNION ALL
-                SELECT event_id, ts, 0, value * 10 FROM events
-                WHERE event_id % 5 = 0
-            ),
-            r AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY event_id, ts ORDER BY seq DESC) AS rn
-                FROM s
-            )
-            SELECT event_id, ts, CAST(seq AS INT) AS seq, value
-            FROM r WHERE rn = 1
-        """,
-        # mixture sampling: rates re-derived with the same IEEE ops,
-        # membership replayed integer-exactly on the md5 coin
-        "mixture_sample": """
-            WITH c AS (
-                SELECT source, CAST(count(*) AS BIGINT) AS nd
-                FROM documents GROUP BY 1
-            ),
-            z AS (
-                SELECT sum(pow(CAST(nd AS DOUBLE), 0.5)) AS zz FROM c
-            ),
-            r AS (
-                SELECT source,
-                       least(1.0, (250.0 / zz)
-                                  * pow(CAST(nd AS DOUBLE), -0.5)) AS rate
-                FROM c, z
-            )
-            SELECT d.doc_id, d.source
-            FROM documents d JOIN r ON d.source = r.source
-            WHERE ('0x' || substring(
-                       md5('42:' || CAST(d.doc_id AS VARCHAR)), 1, 15
-                   ))::BIGINT
-                  < CAST(floor(rate * 1152921504606846976.0) AS BIGINT)
-        """,
-        # epoch shuffle: row_number over the md5 coin replays the
-        # range-partitioned running count exactly
-        "epoch_shuffle": """
-            WITH h AS (
-                SELECT doc_id,
-                       ('0x' || substring(
-                            md5('42e1:' || CAST(doc_id AS VARCHAR)), 1, 15
-                        ))::BIGINT AS u
-                FROM documents
-            ),
-            r AS (
-                SELECT doc_id,
-                       row_number() OVER (ORDER BY u, doc_id) - 1 AS p
-                FROM h
-            )
-            SELECT doc_id, CAST(p % 8 AS INT) AS shard,
-                   CAST(p // 8 AS BIGINT) AS pos
-            FROM r
-        """,
-        "label_count_values_1d": """
-            SELECT date_trunc('day', ts) AS day_start,
-                   CASE WHEN event_type IN ('click', 'view')
-                        THEN event_type || '-like' END AS kind,
-                   CAST(CAST(length(props) AS BIGINT) AS VARCHAR) AS plen_label,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM events
-            GROUP BY 1, 2, 3
-        """,
-        "resample_locf_10m": """
-            WITH samp AS (
-                SELECT event_type, ts, max(value) AS value
-                FROM events GROUP BY 1, 2
-            ),
-            ext AS (
-                SELECT event_type,
-                       date_trunc('minute', min(ts)) AS lo,
-                       date_trunc('minute', max(ts)) AS hi
-                FROM samp GROUP BY 1
-            ),
-            grid AS (
-                SELECT event_type,
-                       unnest(generate_series(lo, hi, INTERVAL 10 MINUTE)) AS g
-                FROM ext
-            ),
-            m AS (
-                SELECT grid.event_type, grid.g, samp.value, samp.ts
-                FROM grid ASOF LEFT JOIN samp
-                  ON grid.event_type = samp.event_type AND grid.g >= samp.ts
-            )
-            SELECT event_type, g AS grid_ts,
-                   CASE WHEN ts >= g - INTERVAL 15 MINUTE
-                        THEN round(value, 6) END AS value,
-                   CASE WHEN ts >= g - INTERVAL 15 MINUTE
-                        THEN ts END AS sample_ts
-            FROM m
-        """,
-        "resample_interp_10m": """
-            WITH samp AS (
-                SELECT event_type, ts, max(value) AS value
-                FROM events GROUP BY 1, 2
-            ),
-            ext AS (
-                SELECT event_type,
-                       date_trunc('minute', min(ts)) AS lo,
-                       date_trunc('minute', max(ts)) AS hi
-                FROM samp GROUP BY 1
-            ),
-            grid AS (
-                SELECT event_type,
-                       unnest(generate_series(lo, hi, INTERVAL 10 MINUTE)) AS g
-                FROM ext
-            ),
-            p AS (
-                SELECT grid.event_type, grid.g, samp.value AS v0, samp.ts AS t0
-                FROM grid ASOF LEFT JOIN samp
-                  ON grid.event_type = samp.event_type AND grid.g >= samp.ts
-            ),
-            b AS (
-                SELECT p.event_type, p.g, p.v0, p.t0, samp.value AS v1, samp.ts AS t1
-                FROM p ASOF LEFT JOIN samp
-                  ON p.event_type = samp.event_type AND p.g <= samp.ts
-            )
-            SELECT event_type, g AS grid_ts,
-                   round(CASE
-                       WHEN t1 = t0 THEN v0
-                       WHEN t1 IS NULL THEN v0
-                       ELSE v0 + (v1 - v0)
-                            * CAST(epoch_us(g) - epoch_us(t0) AS DOUBLE)
-                            / CAST(epoch_us(t1) - epoch_us(t0) AS DOUBLE)
-                   END, 6) AS value
-            FROM b
-        """,
-        "counter_adjust": """
-            WITH ctr AS (
-                SELECT event_type, ts, event_id,
-                       CAST(row_number() OVER (
-                           PARTITION BY event_type, date_trunc('day', ts)
-                           ORDER BY ts, event_id) AS BIGINT) AS value
-                FROM events
-            ),
-            lagged AS (
-                SELECT *, lag(value) OVER (
-                           PARTITION BY event_type ORDER BY ts, event_id
-                       ) AS prev
-                FROM ctr
-            ),
-            offs AS (
-                SELECT *, CASE WHEN prev IS NOT NULL AND value < prev
-                               THEN prev ELSE CAST(0 AS BIGINT) END AS o
-                FROM lagged
-            )
-            SELECT event_type, ts, event_id, value,
-                   CAST(value + sum(o) OVER (
-                       PARTITION BY event_type ORDER BY ts, event_id
-                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS adjusted
-            FROM offs
-        """,
-        "archive_spikes": """
-            SELECT CAST(user_id AS VARCHAR) AS conv_id, ts,
-                   round(value, 6) AS value_r
-            FROM events WHERE value >= 200.0
-        """,
-        "vector_ratio_1h": """
-            WITH pr AS (
-                SELECT date_trunc('hour', ts) AS bucket_start, event_type,
-                       CAST(count(*) AS DOUBLE) AS value
-                FROM events GROUP BY 1, 2
-            ),
-            tot AS (
-                SELECT date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS DOUBLE) AS t
-                FROM events GROUP BY 1
-            )
-            SELECT pr.bucket_start, pr.event_type,
-                   round(pr.value / tot.t, 6) AS share
-            FROM pr JOIN tot USING (bucket_start)
-        """,
-        "vector_setops_1h": """
-            WITH p AS (
-                SELECT date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS DOUBLE) AS value
-                FROM events WHERE event_type = 'purchase' GROUP BY 1
-            ),
-            e AS (
-                SELECT DISTINCT date_trunc('hour', ts) AS bucket_start
-                FROM events WHERE event_type = 'error'
-            )
-            SELECT p.bucket_start, p.value,
-                   CASE WHEN e.bucket_start IS NULL
-                        THEN 'no_errors' ELSE 'with_errors' END AS segment
-            FROM p LEFT JOIN e USING (bucket_start)
-        """,
-        "tier_stitch": _tier_stitch_oracle(),
-        "hybrid_read": _hybrid_read_oracle(),
-        "asap_1h": _asap_oracle(),
-        "backtest_naive_1d": """
-            WITH ext AS (
-                SELECT date_trunc('hour', min(ts)) AS lo,
-                       date_trunc('hour', max(ts)) AS hi
-                FROM events
-            ),
-            grid AS (
-                SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket_start
-                FROM ext
-            ),
-            types AS (SELECT DISTINCT event_type FROM events),
-            hourly AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                       count(*)::BIGINT AS n
-                FROM events GROUP BY 1, 2
-            ),
-            dense AS (
-                SELECT g.bucket_start, t.event_type, coalesce(h.n, 0)::BIGINT AS v
-                FROM grid g CROSS JOIN types t
-                LEFT JOIN hourly h USING (bucket_start, event_type)
-            ),
-            lagged AS (
-                SELECT event_type, bucket_start, v AS y,
-                       lag(v, 1) OVER w AS f_naive,
-                       lag(v, 24) OVER w AS f_seas
-                FROM dense
-                WINDOW w AS (PARTITION BY event_type ORDER BY bucket_start)
-            ),
-            e AS (
-                SELECT * FROM lagged
-                WHERE f_naive IS NOT NULL AND f_seas IS NOT NULL
-            ),
-            agg AS (
-                SELECT event_type,
-                       date_trunc('day', bucket_start) AS period_start,
-                       count(*)::BIGINT AS n_eval,
-                       sum(abs(y - f_naive))::BIGINT AS abs_err_naive,
-                       sum(abs(y - f_seas))::BIGINT AS abs_err_seasonal,
-                       sum(y - f_seas)::BIGINT AS err_seas,
-                       sum(abs(y))::BIGINT AS abs_y
-                FROM e GROUP BY 1, 2
-            )
-            SELECT event_type, period_start, n_eval,
-                   abs_err_naive, abs_err_seasonal,
-                   round(abs_err_naive::DOUBLE / n_eval::DOUBLE, 6) AS mae_naive,
-                   round(abs_err_seasonal::DOUBLE / n_eval::DOUBLE, 6) AS mae_seasonal,
-                   round(err_seas::DOUBLE / n_eval::DOUBLE, 6) AS bias_seasonal,
-                   round(CASE WHEN abs_y != 0 THEN
-                       abs_err_seasonal::DOUBLE / abs_y::DOUBLE END, 6)
-                       AS wmape_seasonal,
-                   round(CASE WHEN abs_err_naive != 0 THEN
-                       abs_err_seasonal::DOUBLE / abs_err_naive::DOUBLE END, 6)
-                       AS mase
-            FROM agg
-        """,
-        "range_eval_6h": _range_eval_oracle(),
-        "tier_audit": """
-            WITH truth AS (
-                SELECT event_type AS role, date_trunc('day', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS t_n,
-                       CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS t_s
-                FROM events GROUP BY 1, 2
-            ),
-            stored AS (
-                SELECT event_type AS role, date_trunc('day', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS s_n,
-                       CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS s_s
-                FROM events
-                WHERE NOT (event_type = 'error'
-                           AND (day(ts) % 2) = 1 AND minute(ts) < 20)
-                GROUP BY 1, 2
-                UNION ALL
-                SELECT 'ghost', TIMESTAMP '2030-01-01',
-                       CAST(5 AS BIGINT), CAST(1000 AS BIGINT)
-            ),
-            j AS (
-                SELECT coalesce(t.role, s.role) AS role,
-                       coalesce(t.bucket_start, s.bucket_start) AS bucket_start,
-                       t_n, t_s, s_n, s_s,
-                       t.role IS NOT NULL AS in_t, s.role IS NOT NULL AS in_s
-                FROM truth t FULL OUTER JOIN stored s
-                  ON t.role = s.role AND t.bucket_start = s.bucket_start
-            )
-            SELECT bucket_start, role,
-                   CASE WHEN NOT in_s THEN 'missing_in_stored'
-                        WHEN NOT in_t THEN 'unexpected_in_stored'
-                        ELSE 'mismatch' END AS status,
-                   coalesce(s_n, 0) - coalesce(t_n, 0) AS d_n_turns,
-                   coalesce(s_s, 0) - coalesce(t_s, 0) AS d_text_len_sum
-            FROM j
-            WHERE NOT in_s OR NOT in_t
-               OR coalesce(s_n, 0) <> coalesce(t_n, 0)
-               OR coalesce(s_s, 0) <> coalesce(t_s, 0)
-        """,
-        "hist_rebin_1d": _hist_rebin_oracle(),
-        "compact_late": """
-            SELECT CAST(user_id AS VARCHAR) AS conv_id,
-                   CAST(count(*) AS BIGINT) AS n_points,
-                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
-                       AS value_sum,
-                   CAST(sum(coalesce(length(props), 0)) AS BIGINT) AS text_len_sum,
-                   min(ts) AS ts_min,
-                   max(ts) AS ts_max
-            FROM events GROUP BY 1
-        """,
-        # trailing time-RANGE sums of BIGINT tier counts; the budget is
-        # interpolated as the Python-computed DOUBLE literal (DuckDB
-        # would otherwise fold 1.0 - 0.95 in exact DECIMAL, landing one
-        # ULP away from Spark's double subtraction — caught at the
-        # burn==threshold boundary); alert compares UNROUNDED doubles
-        "slo_burn_1h": f"""
+        band_cols.append("(" + "\n                 + ".join(terms) + f") AS s{b}")
+        ors.append(f"{left}.s{b} = {right}.s{b}")
+    return ",\n               ".join(band_cols), " OR ".join(ors)
+
+
+def _knn_join_lsh_oracle() -> str:
+    """DuckDB replay of the banded-LSH k-NN join: per-band signature
+    expressions from the same seeded literal planes (identical doubles,
+    same left-associated sums), candidate = any-band collision between a
+    left row and a right row, then exact-cosine row_number ranking per
+    left row — the full approximate algorithm, not a recall proxy."""
+    p = KNN_LSH_PARAMS
+    sig_select, any_band = _lsh_band_sigs(p["n_planes"], p["n_bands"], "l", "r")
+    return f"""
+        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        sigs AS (SELECT vec_id, v,
+               {sig_select}
+            FROM e),
+        cand AS (
+            SELECT l.vec_id AS lid, r.vec_id AS rid,
+                   list_cosine_similarity(l.v, r.v) AS cos
+            FROM sigs l JOIN sigs r
+              ON l.vec_id < {p["n_left"]} AND ({any_band})),
+        ranked AS (
+            SELECT lid, rid, cos,
+                   row_number() OVER (PARTITION BY lid
+                                      ORDER BY cos DESC, rid) AS rank
+            FROM cand)
+        SELECT lid, rid, round(cos, 5) AS cosine_r, rank
+        FROM ranked WHERE rank <= {p["k"]}
+    """
+
+
+@contract(_knn_join_lsh_oracle)
+def q_knn_join_lsh(spark, sf_dir):
+    """Banded hyperplane-LSH k-NN join (the large-right scale path: no
+    broadcast, no cross join; candidates from any-band collisions, bare
+    ids through the dedup shuffle).  The oracle replays the banded
+    construction with the same seeded literal planes — candidate = any
+    band equal — then ranks candidates by exact cosine per left row,
+    exactly the operator's semantics."""
+    from mq_to_db_spark.operators.similarity import knn_join_lsh
+
+    p = KNN_LSH_PARAMS
+    emb = _emb(spark, sf_dir)
+    left = emb.filter(f"vec_id < {p['n_left']}").select(
+        F.col("vec_id").alias("id_l"), "embedding"
+    )
+    right = emb.select(F.col("vec_id").alias("id_r"), "embedding")
+    out = knn_join_lsh(
+        left, right, k=p["k"], n_planes=p["n_planes"], n_bands=p["n_bands"],
+        dim=EMB_DIM,
+    )
+    return out.select("lid", "rid", F.round("cosine", 5).alias("cosine_r"), "rank")
+
+
+SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
+SPLIT_SEED = 7
+STRAT_RATES = {"en": 0.5, "de": 0.25}
+STRAT_DEFAULT = 0.05
+STRAT_SEED = 11
+PACK_BUDGET = 512
+PACK_SHARDS = 4
+PACK_SEED = 5
+
+
+#: DuckDB replay of operators.sampling.hash_u60 (60-bit md5 uniform)
+_U60_SQL = "('0x' || substring(md5('{seed}:' || CAST({col} AS VARCHAR)), 1, 15))::BIGINT"
+
+
+def _sample_split_oracle() -> str:
+    from mq_to_db_spark.operators.sampling import _threshold
+
+    u = _U60_SQL.format(seed=SPLIT_SEED, col="doc_id")
+    names = list(SPLIT_WEIGHTS)
+    cum = 0.0
+    branches = []
+    for name in names[:-1]:
+        cum += SPLIT_WEIGHTS[name]
+        # identical float accumulation as assign_split ⇒ identical ints
+        branches.append(f"WHEN u < {_threshold(cum)} THEN '{name}'")
+    return f"""
+        SELECT doc_id,
+               CASE {' '.join(branches)} ELSE '{names[-1]}' END AS split
+        FROM (SELECT doc_id, {u} AS u FROM documents)
+    """
+
+
+@contract(_sample_split_oracle)
+def q_sample_split(spark, sf_dir):
+    """Deterministic train/val/test split of the documents corpus:
+    60-bit md5 coin vs cumulative literal thresholds — a pure
+    projection (no shuffle, no RNG state), so membership is identical
+    on any cluster/partitioning and the oracle replays it exactly."""
+    from mq_to_db_spark.operators.sampling import assign_split
+
+    return assign_split(
+        _docs(spark, sf_dir), "doc_id", dict(SPLIT_WEIGHTS), seed=SPLIT_SEED
+    ).select("doc_id", "split")
+
+
+def _sample_stratified_oracle() -> str:
+    from mq_to_db_spark.operators.sampling import _threshold
+
+    u = _U60_SQL.format(seed=STRAT_SEED, col="doc_id")
+    branches = " ".join(
+        f"WHEN lang = '{v}' THEN {_threshold(r)}" for v, r in STRAT_RATES.items()
+    )
+    return f"""
+        SELECT doc_id, lang
+        FROM (SELECT doc_id, lang, {u} AS u FROM documents)
+        WHERE u < CASE {branches} ELSE {_threshold(STRAT_DEFAULT)} END
+    """
+
+
+@contract(_sample_stratified_oracle)
+def q_sample_stratified(spark, sf_dir):
+    """Per-language Bernoulli sampling (stratified rates as a literal
+    CASE — config, not a rate-table join); exact hash-replay oracle."""
+    from mq_to_db_spark.operators.sampling import sample_stratified
+
+    return sample_stratified(
+        _docs(spark, sf_dir), "doc_id", "lang", dict(STRAT_RATES),
+        default_rate=STRAT_DEFAULT, seed=STRAT_SEED,
+    ).select("doc_id", "lang")
+
+
+#: token count, byte-identical to functions.text.token_count_ws (cf. the
+#: token_counts oracle)
+_TOK_SQL = (
+    "CASE WHEN text IS NULL OR trim(text) = '' THEN 0 "
+    "ELSE len(string_split_regex(trim(text), '\\s+')) END"
+)
+
+
+def _pack_cte_sql(source: str, seed: int, n_shards: int, budget: int) -> str:
+    """Shared recursive-CTE replay of operators.packing.pack_sequences
+    over a relation ``source`` with columns (doc_id, text): hash-shard,
+    walk each shard in id order carrying (fill, bin, pos).  The caller
+    embeds this after a ``WITH RECURSIVE`` prefix defining ``source``
+    (or uses the base table directly)."""
+    u = _U60_SQL.format(seed=seed, col="doc_id")
+    return f"""base AS (
+            SELECT doc_id AS id,
+                   CAST(h % {n_shards} AS INTEGER) AS shard,
+                   tok AS doc_tokens,
+                   row_number() OVER (
+                       PARTITION BY h % {n_shards} ORDER BY doc_id
+                   ) AS rn
+            FROM (SELECT doc_id, {u} AS h, {_TOK_SQL} AS tok FROM {source})
+        ),
+        pack AS (
+            SELECT shard, rn, id, doc_tokens,
+                   doc_tokens AS fill,
+                   CAST(0 AS BIGINT) AS bin,
+                   0 AS pos
+            FROM base WHERE rn = 1
+            UNION ALL
+            SELECT b.shard, b.rn, b.id, b.doc_tokens,
+                   CASE WHEN p.fill + b.doc_tokens > {budget}
+                        THEN b.doc_tokens ELSE p.fill + b.doc_tokens END,
+                   CASE WHEN p.fill + b.doc_tokens > {budget}
+                        THEN p.bin + 1 ELSE p.bin END,
+                   CASE WHEN p.fill + b.doc_tokens > {budget}
+                        THEN 0 ELSE p.pos + 1 END
+            FROM pack p JOIN base b ON b.shard = p.shard AND b.rn = p.rn + 1
+        )
+        SELECT id, shard, CAST(bin AS BIGINT) AS bin,
+               CAST(pos AS INTEGER) AS pos_in_bin,
+               CAST(doc_tokens AS BIGINT) AS doc_tokens,
+               CAST(sum(doc_tokens) OVER (PARTITION BY shard, bin) AS BIGINT)
+                   AS bin_tokens
+        FROM pack"""
+
+
+@contract(
+    lambda: "WITH RECURSIVE " + _pack_cte_sql("documents", PACK_SEED, PACK_SHARDS, PACK_BUDGET)
+)
+def q_pack_sequences(spark, sf_dir):
+    """Next-fit sequence packing of documents into 512-token bins,
+    4 hash shards (operators/packing.py): the sequential pack runs per
+    shard over (id, tokens) pairs only; the oracle walks the same
+    shards with a recursive CTE carrying (fill, bin, pos)."""
+    from mq_to_db_spark.functions.text import token_count_ws
+    from mq_to_db_spark.operators.packing import pack_sequences
+
+    toks = _docs(spark, sf_dir).select(
+        "doc_id", token_count_ws("text").alias("n_tokens")
+    )
+    return pack_sequences(
+        toks, "doc_id", "n_tokens", budget=PACK_BUDGET,
+        n_shards=PACK_SHARDS, seed=PACK_SEED,
+    )
+
+
+@contract("""
             WITH tier AS (
-                SELECT date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_total,
-                       CAST(count(*) FILTER (WHERE event_type = 'error')
-                            AS BIGINT) AS n_bad
-                FROM events GROUP BY 1),
-            w AS (
-                SELECT *,
-                       CAST(sum(n_bad) OVER w1 AS DOUBLE)
-                           / sum(n_total) OVER w1 AS r1,
-                       CAST(sum(n_bad) OVER w6 AS DOUBLE)
-                           / sum(n_total) OVER w6 AS r6
-                FROM tier
-                WINDOW w1 AS (ORDER BY epoch(bucket_start)
-                              RANGE BETWEEN {SLO_WINDOWS["1h"] - 1} PRECEDING
-                                        AND CURRENT ROW),
-                       w6 AS (ORDER BY epoch(bucket_start)
-                              RANGE BETWEEN {SLO_WINDOWS["6h"] - 1} PRECEDING
-                                        AND CURRENT ROW))
-            SELECT bucket_start, n_total, n_bad,
-                   round(r1, 6) AS ratio_1h,
-                   round(r1 / CAST({1.0 - SLO_TARGET!r} AS DOUBLE), 6) AS burn_1h,
-                   round(r6, 6) AS ratio_6h,
-                   round(r6 / CAST({1.0 - SLO_TARGET!r} AS DOUBLE), 6) AS burn_6h,
-                   coalesce(r1 / CAST({1.0 - SLO_TARGET!r} AS DOUBLE) >= {SLO_THRESHOLD}
-                            AND r6 / CAST({1.0 - SLO_TARGET!r} AS DOUBLE) >= {SLO_THRESHOLD},
-                            false) AS alert
-            FROM w
-        """,
-        "bm25_topk": _bm25_oracle(),
-        # full replay of the deterministic image construction + decode:
-        # width = 4 + id%5, height = 3 + id%4, flat pixel byte q (over
-        # h*w*3 positions) = (id*31 + 7q) % 256; 144 = the max n_px
-        # (8*6*3), filtered per doc — range() in DuckDB 1.0 cannot take
-        # lateral column parameters
-        # earliest-ordered-chain replay with DuckDB list lambdas: the
-        # same sorted per-step ts arrays, the same first-at-or-after
-        # walk, the same µs-integer 7d horizon (comparisons against a
-        # NULL chain time filter to empty -> NULL, exactly like the
-        # Spark side's chain-break propagation)
-        "funnel_3step": f"""
-            WITH per_user AS (
-                SELECT user_id,
-                       list_sort(list(ts) FILTER (WHERE event_type = 'signup')) AS a1,
-                       list_sort(list(ts) FILTER (WHERE event_type = 'view')) AS a2,
-                       list_sort(list(ts) FILTER (WHERE event_type = 'purchase')) AS a3
-                FROM events
-                WHERE event_type IN ('signup', 'view', 'purchase')
-                GROUP BY user_id),
-            c1 AS (SELECT user_id, a2, a3, a1[1] AS t1 FROM per_user
-                   WHERE a1[1] IS NOT NULL),
-            c2 AS (
-                SELECT user_id, a3, t1,
-                       CASE WHEN epoch_us(list_filter(a2, x -> x >= t1)[1])
-                                 - epoch_us(t1) <= {FUNNEL_HORIZON_SEC * 1_000_000}
-                            THEN list_filter(a2, x -> x >= t1)[1] END AS t2
-                FROM c1),
-            c3 AS (
-                SELECT user_id, t1, t2,
-                       CASE WHEN epoch_us(list_filter(a3, x -> x >= t2)[1])
-                                 - epoch_us(t1) <= {FUNNEL_HORIZON_SEC * 1_000_000}
-                            THEN list_filter(a3, x -> x >= t2)[1] END AS t3
-                FROM c2),
-            n AS (SELECT count(t1) AS n1, count(t2) AS n2, count(t3) AS n3 FROM c3)
-            SELECT s.step_idx, s.step, s.n_entities,
-                   round(s.n_entities / n.n1, 6) AS conv_rate
-            FROM n, (
-                SELECT 1 AS step_idx, 'signup' AS step, (SELECT n1 FROM n) AS n_entities
-                UNION ALL SELECT 2, 'view', (SELECT n2 FROM n)
-                UNION ALL SELECT 3, 'purchase', (SELECT n3 FROM n)) s
-        """,
-        # µs-integer week indices (epoch_us // week_µs) replayed
-        # verbatim; cohort_size via the same offset-0 window
-        "cohort_retention_wk": """
-            WITH tier AS (
-                SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS p
-                FROM events),
-            c AS (SELECT user_id, p,
-                         min(p) OVER (PARTITION BY user_id) AS p0
-                  FROM tier),
-            cells AS (
-                SELECT p0, CAST(p - p0 AS INT) AS period_offset,
-                       count(DISTINCT user_id) AS n_active
-                FROM c GROUP BY 1, 2)
-            SELECT make_timestamp(p0 * 604800000000) AS cohort_start,
-                   period_offset,
-                   CAST(n_active AS BIGINT) AS n_active,
-                   CAST(max(CASE WHEN period_offset = 0 THEN n_active END)
-                            OVER (PARTITION BY p0) AS BIGINT) AS cohort_size,
-                   round(n_active / (max(CASE WHEN period_offset = 0 THEN n_active END)
-                            OVER (PARTITION BY p0)), 6) AS retention_rate
-            FROM cells
-        """,
-        # seasonal cell mean/std from exact BIGINT sum / sum-of-squares
-        # (order-independent), identical final double formula — the
-        # n>=2 gate sits OUTSIDE greatest() on both engines
-        "seasonal_hod_1h": """
-            WITH tier AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_events
-                FROM events GROUP BY 1, 2
-            ),
-            c AS (
-                SELECT event_type, bucket_start, n_events,
-                       CAST(hour(bucket_start) AS INT) AS season_idx,
-                       count(*) OVER cell AS seas_n,
-                       sum(n_events) OVER cell AS s,
-                       sum(n_events * n_events) OVER cell AS ss
-                FROM tier
-                WINDOW cell AS (PARTITION BY event_type, hour(bucket_start))
-            ),
-            m AS (
-                SELECT *, CAST(s AS DOUBLE) / seas_n AS avg_raw,
-                       CASE WHEN seas_n >= 2 THEN sqrt(greatest(
-                           (CAST(ss AS DOUBLE)
-                            - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / seas_n)
-                           / (seas_n - 1.0), 0.0)) END AS std_raw
-                FROM c
-            )
-            SELECT event_type, bucket_start, n_events, season_idx,
-                   CAST(seas_n AS BIGINT) AS seas_n,
-                   round(avg_raw, 6) AS seas_avg,
-                   round(std_raw, 6) AS seas_std,
-                   round(n_events - avg_raw, 6) AS residual,
-                   CASE WHEN std_raw > 0
-                        THEN round((n_events - avg_raw) / std_raw, 6)
-                   END AS seas_z
-            FROM m
-        """,
-        # resets: same micro-unit lag as counter_increase, strict <
-        "mad_outliers_1d": """
-            WITH base AS (
-                SELECT event_type, date_trunc('day', ts) AS bucket_start,
-                       value AS v
-                FROM events
-            ),
-            wm AS (
-                SELECT *, count(*) OVER (
-                           PARTITION BY event_type, bucket_start) AS n,
-                       row_number() OVER (
-                           PARTITION BY event_type, bucket_start
-                           ORDER BY v) AS rn
-                FROM base
-            ),
-            med AS (
-                SELECT *, max(CASE WHEN rn = floor((n + 1) / 2) THEN v END)
-                           OVER (PARTITION BY event_type, bucket_start) AS med
-                FROM wm
-            ),
-            dev AS (
-                SELECT *, abs(v - med) AS d,
-                       row_number() OVER (
-                           PARTITION BY event_type, bucket_start
-                           ORDER BY abs(v - med)) AS drn
-                FROM med
-            ),
-            mad AS (
-                SELECT *, max(CASE WHEN drn = floor((n + 1) / 2) THEN d END)
-                           OVER (PARTITION BY event_type, bucket_start) AS mad
-                FROM dev
-            )
-            SELECT event_type, bucket_start,
-                   CAST(count(*) AS BIGINT) AS n_samples,
-                   min(med) AS med, min(mad) AS mad,
-                   CAST(count(*) FILTER (WHERE d > 3.0 * mad) AS BIGINT)
-                       AS n_outliers
-            FROM mad GROUP BY 1, 2
-        """,
-        "openmetrics_1h": """
-            WITH tier AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_events
-                FROM events GROUP BY 1, 2
-            )
-            SELECT event_type, bucket_start, n_events,
-                   'events_total{event_type="'
-                     || replace(replace(event_type, '\\', '\\\\'), '"', '\\"')
-                     || '"} ' || CAST(n_events AS VARCHAR) || ' '
-                     || CAST(epoch_us(bucket_start) // 1000000 AS VARCHAR)
-                       AS exposition
-            FROM tier
-        """,
-        "wow_delta_1h": """
-            WITH hourly AS (
-                SELECT event_type, date_trunc('hour', ts) AS b,
-                       CAST(count(*) AS BIGINT) AS v
-                FROM events GROUP BY 1, 2
-            ),
-            ext AS (SELECT min(b) AS lo, max(b) AS hi FROM hourly),
-            grid AS (
-                SELECT k.event_type,
-                       unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS g
-                FROM (SELECT DISTINCT event_type FROM hourly) k
-                CROSS JOIN ext
-            ),
-            filled AS (
-                SELECT grid.event_type, grid.g AS bucket_start,
-                       COALESCE(hourly.v, CAST(0 AS BIGINT)) AS v
-                FROM grid LEFT JOIN hourly
-                  ON hourly.event_type = grid.event_type AND hourly.b = grid.g
-            ),
-            lagged AS (
-                SELECT *, lag(v, 168) OVER (
-                    PARTITION BY event_type ORDER BY bucket_start
-                ) AS v_prev
-                FROM filled
-            )
-            SELECT event_type, bucket_start, v, v_prev,
-                   v - v_prev AS delta,
-                   round(CAST(v AS DOUBLE)
-                         / nullif(CAST(v_prev AS DOUBLE), 0.0), 6) AS ratio
-            FROM lagged
-        """,
-        "topk_others_1d": """
-            WITH tier AS (
-                SELECT date_trunc('day', ts) AS day_start,
-                       CAST(user_id AS VARCHAR) AS user_key,
-                       CAST(count(*) AS BIGINT) AS n_events
+                SELECT date_trunc('hour', ts) AS bucket_start, user_id,
+                       count(*) AS n_events
                 FROM events GROUP BY 1, 2
             ),
             ranked AS (
-                SELECT *, CAST(row_number() OVER (
-                    PARTITION BY day_start
-                    ORDER BY n_events DESC, user_key ASC
-                ) AS INT) AS rank
+                SELECT bucket_start, user_id, n_events,
+                       CAST(row_number() OVER (
+                           PARTITION BY bucket_start
+                           ORDER BY n_events DESC, user_id ASC
+                       ) AS INTEGER) AS rank
                 FROM tier
             )
-            SELECT day_start, user_key, n_events, rank
-            FROM ranked WHERE rank <= 3
-            UNION ALL
-            SELECT day_start, '__others__' AS user_key,
-                   CAST(sum(n_events) AS BIGINT) AS n_events,
-                   CAST(4 AS INT) AS rank
-            FROM ranked WHERE rank > 3 GROUP BY day_start
-        """,
-        "staleness_1h": """
-            WITH pb AS (
-                SELECT event_type, date_trunc('hour', ts) AS b,
-                       max(ts) AS last_ts,
-                       CAST(count(*) AS BIGINT) AS n_samples
-                FROM events GROUP BY 1, 2
-            ),
-            ext AS (SELECT min(b) AS lo, max(b) AS hi FROM pb),
-            grid AS (
-                SELECT k.event_type,
-                       unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS g
-                FROM (SELECT DISTINCT event_type FROM pb) k CROSS JOIN ext
-            ),
-            j AS (
-                SELECT grid.event_type, grid.g, pb.last_ts, pb.n_samples
-                FROM grid LEFT JOIN pb
-                  ON pb.event_type = grid.event_type AND pb.b = grid.g
-            )
-            SELECT event_type, g AS bucket_start,
-                   COALESCE(n_samples, CAST(0 AS BIGINT)) AS n_samples,
-                   (n_samples IS NULL) AS absent,
-                   epoch_us(g + INTERVAL 1 HOUR)
-                     - epoch_us(last_value(last_ts IGNORE NULLS) OVER (
-                           PARTITION BY event_type ORDER BY g
-                           ROWS UNBOUNDED PRECEDING
-                       )) AS staleness_us
-            FROM j
-        """,
-        "quota_violations_1d": """
-            WITH c AS (
-                SELECT event_type, ts,
-                       CAST(count(*) OVER (
-                           PARTITION BY event_type ORDER BY epoch_us(ts)
-                           RANGE BETWEEN 7199999999 PRECEDING AND CURRENT ROW
-                       ) AS BIGINT) AS win_count
-                FROM events
-            )
-            SELECT event_type, date_trunc('day', ts) AS day_start,
-                   CAST(count(*) FILTER (WHERE win_count > 10) AS BIGINT)
-                       AS n_violations,
-                   max(win_count) AS max_win_count
-            FROM c GROUP BY 1, 2
-        """,
-        "gcra_throttle_1h": f"""
-            WITH b AS (
-                SELECT event_type, ts, event_id,
-                       row_number() OVER (
-                           PARTITION BY event_type ORDER BY ts, event_id
-                       ) AS rn,
-                       epoch_us(ts) AS tus
-                FROM events
-            ),
-            u AS (
-                SELECT *, tus - (rn - 1) * {GCRA_PERIOD_US} AS u FROM b
-            ),
-            p AS (
-                SELECT *, max(u) OVER (
-                           PARTITION BY event_type ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                       ) AS pm
-                FROM u
-            ),
-            d AS (
-                SELECT *, greatest(
-                           coalesce(pm - {(GCRA_BURST - 1) * GCRA_PERIOD_US}
-                                    - u, 0), 0)::BIGINT AS delay_us
-                FROM p
-            )
-            SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                   count(*)::BIGINT AS n_events,
-                   CAST(count(*) FILTER (WHERE delay_us > 0) AS BIGINT)
-                       AS n_throttled,
-                   max(delay_us) AS max_delay_us,
-                   sum(delay_us)::BIGINT AS sum_delay_us
-            FROM d GROUP BY 1, 2
-        """,
-        "stickiness_1d": """
-            WITH active AS (
-                SELECT DISTINCT user_id AS e, date_trunc('day', ts) AS d
-                FROM events
-            ),
-            dau AS (
-                SELECT d AS day_start, count(*)::BIGINT AS dau
-                FROM active GROUP BY 1
-            ),
-            contrib AS (
-                SELECT e, unnest(generate_series(
-                    d, d + INTERVAL 27 DAY, INTERVAL 1 DAY)) AS day_start
-                FROM active
-            ),
-            mau AS (
-                SELECT day_start, count(DISTINCT e)::BIGINT AS mau
-                FROM contrib GROUP BY 1
-            ),
-            ext AS (
-                SELECT date_trunc('day', min(ts)) AS lo,
-                       date_trunc('day', max(ts)) AS hi
-                FROM events
-            ),
-            grid AS (
-                SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY))
-                    AS day_start
-                FROM ext
-            )
-            SELECT g.day_start,
-                   coalesce(dau, 0)::BIGINT AS dau,
-                   coalesce(mau, 0)::BIGINT AS mau,
-                   CASE WHEN coalesce(mau, 0) > 0 THEN
-                       round(coalesce(dau, 0)::DOUBLE / mau::DOUBLE, 6)
-                   END AS stickiness
-            FROM grid g
-            LEFT JOIN dau USING (day_start)
-            LEFT JOIN mau USING (day_start)
-        """,
-        "max_drawdown_1d": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v,
-                       date_trunc('day', ts) AS bk
-                FROM events
-            ),
-            d AS (
-                SELECT event_type, bk, v,
-                       max(v) OVER (
-                           PARTITION BY event_type, bk
-                           ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING
-                       ) - v AS dd
-                FROM s
-            )
-            SELECT event_type, bk AS bucket_start,
-                   max(dd) AS max_drawdown, max(v) AS peak,
-                   CAST(count(*) AS BIGINT) AS n_samples
-            FROM d GROUP BY 1, 2
-        """,
-        "lexical_stats": """
-            WITH tok AS (
+            SELECT * FROM ranked WHERE rank <= 5
+        """)
+def q_top_users_1h(spark, sf_dir):
+    """Exact per-hour heavy hitters: events roll into the (hour, user)
+    count tier first (mergeable partial aggs — the rank shuffles tier
+    rows, never raw events), then top-5 by count with deterministic
+    ties (count desc, user asc)."""
+    from mq_to_db_spark.operators.topk import top_k_per_window
+
+    tier = (
+        _events(spark, sf_dir)
+        .groupBy(
+            F.date_trunc("hour", F.col("ts")).alias("bucket_start"),
+            F.col("user_id"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return top_k_per_window(tier, ["bucket_start"], "user_id", "n_events", k=5)
+
+
+EXPORT_SEED = 13          # split coin for the training-export capstone
+EXPORT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
+EXPORT_PACK_SEED = 17
+EXPORT_BUDGET = 256
+EXPORT_SHARDS = 2
+
+
+def _training_export_oracle() -> str:
+    from mq_to_db_spark.operators.sampling import _threshold
+
+    u_split = _U60_SQL.format(seed=EXPORT_SEED, col="doc_id")
+    t_train = _threshold(EXPORT_WEIGHTS["train"])
+    return f"""
+        WITH RECURSIVE kept AS (
+            SELECT doc_id, text
+            FROM documents
+            WHERE coalesce(length(text), 0) >= 30
+              AND len(regexp_extract_all(text, '[^\\w\\s]'))
+                  / greatest(coalesce(length(text), 0), 1) <= 0.2
+        ),
+        deduped AS (
+            SELECT md5({_NORM_SQL}) AS fp,
+                   min(doc_id) AS doc_id,
+                   arg_min(text, doc_id) AS text
+            FROM kept GROUP BY 1
+        ),
+        train AS (
+            SELECT doc_id, text FROM deduped
+            WHERE {u_split} < {t_train}
+        ),
+        {_pack_cte_sql("train", EXPORT_PACK_SEED, EXPORT_SHARDS, EXPORT_BUDGET)}
+    """
+
+
+@contract(_training_export_oracle)
+def q_training_export(spark, sf_dir):
+    """End-to-end training-export capstone: quality-filter → exact dedup
+    (md5 fingerprint, min-id representative) → deterministic train split
+    → next-fit packing into 256-token windows.  Every stage is
+    content-addressed, so the full five-stage DAG replays bit-exactly in
+    SQL (the oracle chains the curation CTEs, the split threshold, and
+    the recursive packing walk).  One narrow pipeline end to end except
+    the dedup groupBy and the pack's shard exchange."""
+    from mq_to_db_spark.functions.text import (
+        fingerprint_md5,
+        quality_features,
+        token_count_ws,
+    )
+    from mq_to_db_spark.operators.packing import pack_sequences
+    from mq_to_db_spark.operators.sampling import assign_split
+
+    d = _docs(spark, sf_dir)
+    f = quality_features("text")
+    kept = d.filter((f["q_len"] >= 30) & (f["q_punct_ratio"] <= 0.2))
+    deduped = (
+        kept.withColumn("fp", fingerprint_md5("text"))
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("doc_id"), F.min_by("text", "doc_id").alias("text"))
+    )
+    train = assign_split(
+        deduped, "doc_id", dict(EXPORT_WEIGHTS), seed=EXPORT_SEED
+    ).where(F.col("split") == "train")
+    toks = train.select("doc_id", token_count_ws("text").alias("n_tokens"))
+    return pack_sequences(
+        toks, "doc_id", "n_tokens", budget=EXPORT_BUDGET,
+        n_shards=EXPORT_SHARDS, seed=EXPORT_PACK_SEED,
+    )
+
+
+# repetition: line array = split on \n, trim, drop empties; word
+# array = split on \s+, drop empties (leading separators produce
+# '' tokens; DuckDB/Java trim both strip spaces only)
+@contract(r"""
+            WITH base AS (
                 SELECT doc_id,
-                       unnest(string_split_regex(lower(text), '\\s+')) AS t
+                       list_filter(list_transform(
+                           string_split(coalesce(text, ''), chr(10)),
+                           x -> trim(x)), x -> x <> '') AS l,
+                       list_filter(
+                           string_split_regex(coalesce(text, ''), '\s+'),
+                           x -> x <> '') AS w
                 FROM documents
-            ),
-            counts AS (
-                SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c
-                FROM tok WHERE t <> '' GROUP BY 1, 2
             )
             SELECT doc_id,
-                   CAST(sum(c) AS BIGINT) AS n_tokens,
-                   CAST(count(*) AS BIGINT) AS n_types,
-                   CAST(count(*) FILTER (c = 1) AS BIGINT) AS n_hapax,
-                   round(CAST(count(*) AS DOUBLE)
-                         / CAST(sum(c) AS DOUBLE), 6) AS ttr,
-                   round(CAST(count(*) FILTER (c = 1) AS DOUBLE)
-                         / CAST(count(*) AS DOUBLE), 6) AS hapax_ratio,
-                   round(CAST(max(c) AS DOUBLE)
-                         / CAST(sum(c) AS DOUBLE), 6) AS top_token_ratio
-            FROM counts GROUP BY 1
-        """,
-        "autocorr_1d": """
-            WITH hourly AS (
-                SELECT date_trunc('hour', ts) AS b,
-                       CAST(count(*) AS BIGINT) AS v
-                FROM events GROUP BY 1
+                   CAST(len(l) AS INTEGER) AS r_lines,
+                   round((len(l) - len(list_distinct(l)))
+                         / greatest(len(l), 1), 6) AS r_dup_line_ratio,
+                   round((len(w) - len(list_distinct(w)))
+                         / greatest(len(w), 1), 6) AS r_dup_word_ratio,
+                   round(len(list_filter(l, x -> regexp_matches(x, '^[-*•]')))
+                         / greatest(len(l), 1), 6) AS r_bullet_line_ratio,
+                   round(len(list_filter(l, x -> regexp_matches(x, '(\.\.\.|…)$')))
+                         / greatest(len(l), 1), 6) AS r_ellipsis_line_ratio
+            FROM base
+        """)
+def q_repetition_features(spark, sf_dir):
+    """Gopher/MassiveText repetition-filter signals per document:
+    duplicate-line / duplicate-word fractions plus bullet- and
+    ellipsis-line shares (functions/text.py with_repetition_features).
+    Pure narrow projection — the line/word arrays materialize once, all
+    five ratios are array expressions over them; no shuffle, no UDF."""
+    from mq_to_db_spark.functions.text import REPETITION_COLS, with_repetition_features
+
+    return with_repetition_features(_docs(spark, sf_dir), "text").select(
+        "doc_id", *REPETITION_COLS
+    )
+
+
+@contract(f"""
+            WITH t AS (
+                SELECT doc_id, CAST({_TOK_SQL} AS BIGINT) AS tok FROM documents
             ),
-            ext AS (SELECT min(b) AS lo, max(b) AS hi FROM hourly),
-            grid AS (
-                SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS g
-                FROM ext
+            s AS (
+                SELECT doc_id, tok, unnest(range(0, tok, 24)) AS cs
+                FROM t WHERE tok > 0
+            )
+            SELECT doc_id,
+                   CAST(cs // 24 AS INTEGER) AS chunk_idx,
+                   cs AS chunk_start,
+                   least(cs + 32, tok) AS chunk_end,
+                   least(cs + 32, tok) - cs AS chunk_len
+            FROM s
+        """)
+def q_chunk_spans(spark, sf_dir):
+    """Sliding context-window chunking (operators/packing.py
+    chunk_spans): overlapping (window=32, stride=24) token spans per
+    document — the long-doc half of the packing story.  sequence +
+    posexplode, whole-stage codegen, zero shuffle."""
+    from mq_to_db_spark.functions.text import token_count_ws
+    from mq_to_db_spark.operators.packing import chunk_spans
+
+    docs = _docs(spark, sf_dir).withColumn("n_tok", token_count_ws("text"))
+    return chunk_spans(docs, "doc_id", "n_tok", window=32, stride=24).select(
+        "doc_id",
+        "chunk_idx",
+        F.col("start").alias("chunk_start"),
+        F.col("end").alias("chunk_end"),
+        "chunk_len",
+    )
+
+
+# counters: identical lag replay over integer micro-units — the
+# reset rule (v < prev → contribute v) is Prometheus increase()
+@contract("""
+            WITH s AS (
+                SELECT event_type, ts, event_id,
+                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
+                FROM events
             ),
-            filled AS (
-                SELECT g, coalesce(v, CAST(0 AS BIGINT)) AS v
-                FROM grid LEFT JOIN hourly ON b = g
-            ),
-            pairs AS (
-                SELECT date_trunc('day', g) AS group_start,
+            lagged AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start, v,
                        lag(v) OVER (
-                           PARTITION BY date_trunc('day', g) ORDER BY g
-                       ) AS a,
-                       v AS b
-                FROM filled
-            ),
-            mom AS (
-                SELECT group_start, CAST(count(*) AS BIGINT) AS n,
-                       sum(a) AS sa, sum(b) AS sb, sum(a * b) AS sab,
-                       sum(a * a) AS saa, sum(b * b) AS sbb
-                FROM pairs WHERE a IS NOT NULL GROUP BY 1
-            )
-            SELECT group_start, n AS n_pairs,
-                   round((n::DOUBLE * sab::DOUBLE - sa::DOUBLE * sb::DOUBLE)
-                         / nullif(sqrt(n::DOUBLE * saa::DOUBLE - sa::DOUBLE * sa::DOUBLE)
-                                  * sqrt(n::DOUBLE * sbb::DOUBLE - sb::DOUBLE * sb::DOUBLE),
-                                  0.0),
-                         6) AS autocorr
-            FROM mom
-        """,
-        "series_churn_1d": """
-            WITH b AS (
-                SELECT user_id, date_trunc('day', ts) AS bk FROM events
-            ),
-            ext AS (
-                SELECT user_id, min(bk) AS fb, max(bk) AS lb
-                FROM b GROUP BY 1
-            ),
-            active AS (
-                SELECT bk AS bucket_start,
-                       CAST(count(DISTINCT user_id) AS BIGINT) AS n_active
-                FROM b GROUP BY 1
-            ),
-            born AS (
-                SELECT fb AS bucket_start, CAST(count(*) AS BIGINT) AS nb
-                FROM ext GROUP BY 1
-            ),
-            died AS (
-                SELECT lb AS bucket_start, CAST(count(*) AS BIGINT) AS nd
-                FROM ext GROUP BY 1
-            )
-            SELECT a.bucket_start, a.n_active,
-                   COALESCE(nb, CAST(0 AS BIGINT)) AS n_born,
-                   COALESCE(nd, CAST(0 AS BIGINT)) AS n_died
-            FROM active a
-            LEFT JOIN born USING (bucket_start)
-            LEFT JOIN died USING (bucket_start)
-        """,
-        "exemplars_1h": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v,
-                       date_trunc('hour', ts) AS bk
-                FROM events
-            ),
-            r AS (
-                SELECT *,
-                       row_number() OVER (
-                           PARTITION BY event_type, bk
-                           ORDER BY v DESC, ts DESC, event_id DESC
-                       ) AS rn,
-                       CAST(count(*) OVER (
-                           PARTITION BY event_type, bk
-                       ) AS BIGINT) AS n_samples
-                FROM s
-            )
-            SELECT event_type, bk AS bucket_start, v AS exemplar_value,
-                   ts AS exemplar_ts, event_id AS exemplar_id, n_samples
-            FROM r WHERE rn = 1
-        """,
-        "cusum_alarms_1d": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
-                FROM events
-            ),
-            p AS (
-                SELECT event_type, ts, event_id,
-                       sum(v - 60000000) OVER w AS p_hi,
-                       sum(40000000 - v) OVER w AS p_lo
-                FROM s
-                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING)
-            ),
-            c AS (
-                SELECT event_type, ts,
-                       p_hi - least(0, min(p_hi) OVER w) AS c_hi,
-                       p_lo - least(0, min(p_lo) OVER w) AS c_lo
-                FROM p
-                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING)
-            )
-            SELECT event_type, date_trunc('day', ts) AS day_start,
-                   CAST(count(*) FILTER (
-                       WHERE c_hi > 500000000 OR c_lo > 500000000
-                   ) AS BIGINT) AS n_alarms,
-                   CAST(max(c_hi) AS BIGINT) AS max_cusum_hi,
-                   CAST(max(c_lo) AS BIGINT) AS max_cusum_lo
-            FROM c GROUP BY 1, 2
-        """,
-        "alert_episodes": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
-                FROM events
-            ),
-            f AS (
-                SELECT *,
-                       row_number() OVER (
-                           PARTITION BY event_type ORDER BY ts, event_id)
-                     - row_number() OVER (
-                           PARTITION BY event_type, (v > 50000000)
-                           ORDER BY ts, event_id) AS island
-                FROM s
-            )
-            SELECT event_type, min(ts) AS start_ts, max(ts) AS end_ts,
-                   CAST(count(*) AS BIGINT) AS n_samples,
-                   max(v) AS peak,
-                   epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us
-            FROM f WHERE v > 50000000
-            GROUP BY event_type, island
-            HAVING epoch_us(max(ts)) - epoch_us(min(ts)) >= 1800000000
-        """,
-        "gap_stats_1d": """
-            WITH lagged AS (
-                SELECT event_type, date_trunc('day', ts) AS bucket_start,
-                       epoch_us(ts) - lag(epoch_us(ts)) OVER (
                            PARTITION BY event_type ORDER BY ts, event_id
-                       ) AS gap_us
+                       ) AS pv
+                FROM s
+            ),
+            agg AS (
+                SELECT event_type, bucket_start,
+                       CAST(sum(CASE WHEN pv IS NULL THEN 0
+                                     WHEN v >= pv THEN v - pv
+                                     ELSE v END) AS BIGINT) AS increase,
+                       CAST(count(*) AS BIGINT) AS n_samples
+                FROM lagged GROUP BY 1, 2
+            )
+            SELECT event_type, bucket_start, increase, n_samples,
+                   round(increase / 3600, 6) AS rate_per_sec
+            FROM agg
+        """)
+def q_counter_increase(spark, sf_dir):
+    """Prometheus-semantics reset-aware counter increase/rate per 1h
+    bucket (operators/counters.py): a sample below its predecessor means
+    the counter restarted, so the sample's whole value contributes —
+    the engine-side analogue of the dashboard's increase()/rate() over
+    the reference's monotonic counters.  Values are floor-scaled to
+    integer micro-units first so the lag/sum replay is bit-exact across
+    engines.  Keyed path: ONE exchange (the lag window hash-partitions
+    on event_type; the bucket agg reuses that partitioning)."""
+    from mq_to_db_spark.operators.counters import counter_increase
+
+    ev = _events(spark, sf_dir).select(
+        "event_type",
+        "ts",
+        "event_id",
+        F.floor(F.col("value") * 1e6).cast("long").alias("v"),
+    )
+    return counter_increase(
+        ev, ["event_type"], ts_col="ts", value_col="v", tier="1h",
+        tiebreak=("event_id",),
+    )
+
+
+# OHLC: open/close via first/last value in (ts, event_id) order
+# (DuckDB arg_min can't take a struct key → window + group-by)
+@contract("""
+            WITH b AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                       ts, event_id, value
                 FROM events
+            ),
+            w AS (
+                SELECT event_type, bucket_start, value,
+                       first_value(value) OVER (
+                           PARTITION BY event_type, bucket_start
+                           ORDER BY ts, event_id) AS o,
+                       last_value(value) OVER (
+                           PARTITION BY event_type, bucket_start
+                           ORDER BY ts, event_id
+                           ROWS BETWEEN UNBOUNDED PRECEDING
+                                    AND UNBOUNDED FOLLOWING) AS c
+                FROM b
             )
             SELECT event_type, bucket_start,
-                   CAST(count(*) AS BIGINT) AS n_samples,
-                   max(gap_us) AS max_gap_us,
-                   -- micro-unit exact half-up rounding (quotient/remainder
-                   -- split): round(sum/cnt, 6) on a double can land ON a
-                   -- .5e-6 boundary where the engines' round() disagree
-                   CASE WHEN count(gap_us) > 0 THEN
-                       CAST(CAST(sum(gap_us) AS BIGINT) // count(gap_us)
-                                * 1000000
-                            + (2 * (CAST(sum(gap_us) AS BIGINT)
-                                    % count(gap_us)) * 1000000
-                               + count(gap_us)) // (2 * count(gap_us))
-                            AS DOUBLE) / 1e6
-                   END AS avg_gap_us
-            FROM lagged GROUP BY 1, 2
-        """,
-        "double_ewma_1h": """
+                   min(o) AS open, max(value) AS high, min(value) AS low,
+                   min(c) AS close, CAST(count(*) AS BIGINT) AS n_samples,
+                   round(sum(value), 6) AS value_sum
+            FROM w GROUP BY 1, 2
+        """)
+def q_downsample_ohlc(spark, sf_dir):
+    """OHLC downsample per (event_type, 1h) — the Grafana panel-
+    resolution read path as a first-class operator (operators/
+    downsample.py): open/close via min_by/max_by on (ts, event_id)
+    inside the same single hash aggregation as high/low/count/sum.
+    One exchange, no window sort, fully re-aggregable outputs."""
+    from mq_to_db_spark.operators.downsample import downsample_ohlc
+
+    return downsample_ohlc(
+        _events(spark, sf_dir), ["event_type"], ts_col="ts",
+        value_col="value", tier="1h", tiebreak=("event_id",),
+    )
+
+
+# contamination: string n-grams replay the int64-hash semi join
+# exactly (same normalization + sub-n whole-text clamp as the
+# minhash oracles; word counts differ ⇒ strings differ, so the
+# clamp never collides with a regular 5-gram)
+@contract(f"""
+            WITH norm AS (
+                SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
+                FROM documents WHERE text IS NOT NULL
+            ),
+            sh AS (
+                SELECT doc_id,
+                       CASE WHEN len(words) < 5 THEN [array_to_string(words, ' ')]
+                            ELSE list_distinct([array_to_string(words[i:i+4], ' ')
+                                  for i in range(1, len(words) - 3)])
+                       END AS ngs
+                FROM norm
+            ),
+            ev AS (
+                SELECT DISTINCT ng FROM (
+                    SELECT unnest(ngs) AS ng FROM sh WHERE doc_id % 10 = 0
+                )
+            ),
+            co AS (
+                SELECT doc_id, unnest(ngs) AS ng FROM sh WHERE doc_id % 10 <> 0
+            )
+            SELECT co.doc_id AS id, CAST(count(*) AS BIGINT) AS n_hits
+            FROM co SEMI JOIN ev ON co.ng = ev.ng
+            GROUP BY 1
+        """)
+def q_contamination(spark, sf_dir):
+    """Train/eval decontamination hits (operators/contamination.py):
+    docs sharing ≥1 distinct word 5-gram with the eval slice
+    (doc_id % 10 == 0).  The eval n-gram set is a DISTINCT int64-hash
+    set, broadcast; the corpus probe is a broadcast LEFT SEMI join, so
+    corpus rows never shuffle.  The oracle replays the same n-grams as
+    strings (hash-join ≡ string-join up to xxhash64 collisions)."""
+    from mq_to_db_spark.operators.contamination import contamination_hits
+
+    docs = _docs(spark, sf_dir)
+    return contamination_hits(
+        docs.filter(F.col("doc_id") % 10 != 0),
+        docs.filter(F.col("doc_id") % 10 == 0),
+        id_col="doc_id",
+        text_col="text",
+        n=5,
+    )
+
+
+#: DDSketch relative accuracy for the contract sketch query
+SKETCH_ALPHA = 0.05
+
+
+def _quantile_sketch_oracle() -> str:
+    """DuckDB replay of the FULL DDSketch algorithm at alpha=0.05: the
+    same logarithmic index (ln(v) over the same ln(gamma) literal the
+    Spark side embeds), per-(type, hour, idx) counts, zero bucket,
+    cumulative walk to rank floor(q·(n-1)), midpoint estimate
+    2·gamma^idx/(gamma+1) — the approximation itself is verified, not a
+    recall proxy."""
+    import math
+
+    g = (1 + SKETCH_ALPHA) / (1 - SKETCH_ALPHA)
+    lng = math.log(g)
+    walk_case = """
+            CASE WHEN m.zero_count > floor({q} * (m.n - 1)) THEN 0.0
+                 ELSE round(2 * power({g}, q{tag}.idx) / ({g} + 1), 6)
+            END AS q{tag}"""
+    return f"""
+        WITH s AS (
+            SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                   CASE WHEN value > 0
+                        THEN CAST(ceil(ln(value) / {lng!r}) AS INTEGER)
+                   END AS idx
+            FROM events WHERE value IS NOT NULL
+        ),
+        counts AS (
+            SELECT event_type, bucket_start, idx, count(*) AS cnt
+            FROM s GROUP BY 1, 2, 3
+        ),
+        meta AS (
+            SELECT event_type, bucket_start,
+                   CAST(coalesce(sum(cnt) FILTER (WHERE idx IS NULL), 0)
+                        AS BIGINT) AS zero_count,
+                   CAST(sum(cnt) AS BIGINT) AS n
+            FROM counts GROUP BY 1, 2
+        ),
+        walk AS (
+            SELECT c.event_type, c.bucket_start, c.idx, m.n,
+                   m.zero_count + sum(c.cnt) OVER (
+                       PARTITION BY c.event_type, c.bucket_start
+                       ORDER BY c.idx) AS cum
+            FROM counts c JOIN meta m USING (event_type, bucket_start)
+            WHERE c.idx IS NOT NULL
+        ),
+        q50 AS (
+            SELECT event_type, bucket_start, min(idx) AS idx
+            FROM walk WHERE cum > floor(0.5 * (n - 1)) GROUP BY 1, 2
+        ),
+        q95 AS (
+            SELECT event_type, bucket_start, min(idx) AS idx
+            FROM walk WHERE cum > floor(0.95 * (n - 1)) GROUP BY 1, 2
+        )
+        SELECT m.event_type, m.bucket_start, m.zero_count, m.n,
+            {walk_case.format(q=0.5, g=g, tag=50)},
+            {walk_case.format(q=0.95, g=g, tag=95)}
+        FROM meta m
+        LEFT JOIN q50 USING (event_type, bucket_start)
+        LEFT JOIN q95 USING (event_type, bucket_start)
+    """
+
+
+@contract(_quantile_sketch_oracle)
+def q_quantile_sketch_1h(spark, sf_dir):
+    """Mergeable DDSketch quantiles per (event_type, 1h) window
+    (operators/sketch.py): logarithmic relative-error buckets whose
+    merge is bucket-wise count addition — re-aggregable across the
+    1m/1h/1d cascade, unlike exact percentiles.  Two hash aggregations
+    (idx counts → map assembly), no UDF/window; q50/q95 extracted with
+    one higher-order `aggregate` pass per row.  The oracle replays the
+    full index mapping + cumulative walk in SQL."""
+    from mq_to_db_spark.operators.sketch import (
+        quantile_sketch_rollup,
+        sketch_quantile,
+    )
+
+    sk = quantile_sketch_rollup(
+        _events(spark, sf_dir), "1h", ["event_type"], alpha=SKETCH_ALPHA
+    )
+    out = sketch_quantile(
+        sketch_quantile(sk, 0.5, SKETCH_ALPHA), 0.95, SKETCH_ALPHA
+    )
+    return out.select("event_type", "bucket_start", "zero_count", "n", "q50", "q95")
+
+
+_CMS_CELL_SQL = (
+    "({d} * 1024 + ('0x' || substring(md5('cms{d}#' || CAST({col} AS VARCHAR)), 1, 15))"
+    "::BIGINT % 1024)"
+)
+
+
+def _cms_oracle() -> str:
+    cells = " , ".join(
+        f"{_CMS_CELL_SQL.format(d=d, col='user_id')} AS c{d}" for d in range(4)
+    )
+    probe_cells = " , ".join(
+        f"{_CMS_CELL_SQL.format(d=d, col='p.user_id')} AS c{d}" for d in range(4)
+    )
+    est = " , ".join(
+        f"(SELECT coalesce(max(cnt), 0) FROM per_cell x "
+        f"WHERE x.bucket_start = pc.bucket_start AND x.cell = pc.c{d})"
+        for d in range(4)
+    )
+    return f"""
+        WITH tagged AS (
+            SELECT date_trunc('day', ts) AS bucket_start, {cells}
+            FROM events WHERE user_id IS NOT NULL
+        ),
+        long AS (
+            SELECT bucket_start, unnest([c0, c1, c2, c3]) AS cell FROM tagged
+        ),
+        per_cell AS (
+            SELECT bucket_start, cell, count(*) AS cnt
+            FROM long GROUP BY 1, 2
+        ),
+        probe_cells AS (
+            SELECT d.bucket_start, p.user_id, {probe_cells}
+            FROM (SELECT DISTINCT date_trunc('day', ts) AS bucket_start
+                  FROM events WHERE user_id IS NOT NULL) d,
+                 (SELECT unnest([1, 2, 3, 4, 5, 6, 7, 8]) AS user_id) p
+        )
+        SELECT bucket_start, user_id,
+               least({est})::BIGINT AS est
+        FROM probe_cells pc
+    """
+
+
+@contract(_cms_oracle)
+def q_cms_counts_1d(spark, sf_dir):
+    """Count-Min frequency sketch (operators/freq.py): daily CMS over
+    user_id (depth 4 × width 1024, md5-derived cells), then point
+    estimates for eight probe users via the pure-expression lookup.
+    The oracle replays the FULL construction — same cell hashes, same
+    min-over-depths — so estimates hash-match even where collisions
+    inflate them.  Mergeability (1h→1d cascade ≡ direct) is pinned in
+    tests/test_freq.py."""
+    from mq_to_db_spark.operators.freq import cms_lookup, cms_rollup
+
+    cms = cms_rollup(_events(spark, sf_dir), "1d", "user_id")
+    probes = cms.select(
+        "bucket_start",
+        "cms",
+        F.explode(F.array(*[F.lit(i) for i in range(1, 9)])).alias("user_id"),
+    )
+    return probes.select(
+        "bucket_start",
+        "user_id",
+        cms_lookup(F.col("cms"), F.col("user_id")).alias("est"),
+    )
+
+
+# rolling stats: identical frames (23 PRECEDING..CURRENT and
+# 24 PRECEDING..1 PRECEDING), z-score from the ROUNDED value so
+# the anomaly threshold compares the same number on both engines
+@contract("""
+            WITH tier AS (
+                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_events
+                FROM events GROUP BY 1, 2
+            ),
+            w AS (
+                SELECT event_type, bucket_start, n_events,
+                       round(avg(n_events) OVER win_inc, 6) AS roll_avg,
+                       round(stddev_samp(n_events) OVER win_inc, 6) AS roll_std,
+                       avg(n_events) OVER win_prev AS pavg,
+                       stddev_samp(n_events) OVER win_prev AS pstd
+                FROM tier
+                WINDOW win_inc AS (PARTITION BY event_type ORDER BY bucket_start
+                                   ROWS BETWEEN 23 PRECEDING AND CURRENT ROW),
+                       win_prev AS (PARTITION BY event_type ORDER BY bucket_start
+                                    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
+            )
+            SELECT event_type, bucket_start, n_events, roll_avg, roll_std,
+                   CASE WHEN pstd > 0
+                        THEN round((n_events - pavg) / pstd, 6) END AS zscore,
+                   coalesce(
+                       CASE WHEN pstd > 0
+                            THEN abs(round((n_events - pavg) / pstd, 6)) > 3.0
+                       END, false) AS is_anomaly
+            FROM w
+        """)
+def q_rolling_stats_1h(spark, sf_dir):
+    """Rolling 24h mean/stddev + trailing-baseline z-score anomaly flag
+    over the hourly count tier (operators/rolling.py) — the dashboard's
+    moving-average overlay and 'unusual hour' check as one operator.
+    Consumes TIER rows only (bounded by calendar), one exchange."""
+    from mq_to_db_spark.operators.rolling import rolling_stats
+
+    tier = (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return rolling_stats(
+        tier, ["event_type"], order_col="bucket_start",
+        value_col="n_events", window=24,
+    )
+
+
+# ewma: the exact recurrence s_1 = x_1; s_t = 0.3·x_t + 0.7·s_{t-1}
+# walked as a recursive CTE in series order — same association as
+# the engine's scan (a·x + (1-a)·s), rounded at 6
+@contract("""
             WITH RECURSIVE tier AS (
                 SELECT event_type, date_trunc('hour', ts) AS bucket_start,
                        CAST(count(*) AS BIGINT) AS n_events
@@ -6810,291 +6826,106 @@ def oracle_sql() -> dict[str, str]:
             ),
             rec AS (
                 SELECT event_type, bucket_start, n_events, rn,
-                       CAST(n_events AS DOUBLE) AS s,
-                       CAST(n_events AS DOUBLE) AS t
+                       CAST(n_events AS DOUBLE) AS s
                 FROM ordered WHERE rn = 1
                 UNION ALL
                 SELECT o.event_type, o.bucket_start, o.n_events, o.rn,
-                       0.3 * o.n_events + 0.7 * r.s,
-                       0.3 * (0.3 * o.n_events + 0.7 * r.s) + 0.7 * r.t
+                       0.3 * o.n_events + 0.7 * r.s
                 FROM rec r JOIN ordered o
                   ON o.event_type = r.event_type AND o.rn = r.rn + 1
             )
-            SELECT event_type, bucket_start, n_events,
-                   round(s, 6) AS s_single,
-                   round(t, 6) AS s_double,
-                   round(2 * s - t, 6) AS level,
-                   round((0.3 / 0.7) * (s - t), 6) AS trend,
-                   round((2 * s - t) + (0.3 / 0.7) * (s - t), 6) AS forecast_next
+            SELECT event_type, bucket_start, n_events, round(s, 6) AS ewma
             FROM rec
-        """,
-        "changes_1h": """
-            WITH lagged AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start, value,
-                       lag(value) OVER (
-                           PARTITION BY event_type ORDER BY ts, event_id
-                       ) AS pv
-                FROM events
-            )
-            SELECT event_type, bucket_start,
-                   CAST(count(*) FILTER (
-                       WHERE pv IS NOT NULL AND value <> pv
-                   ) AS BIGINT) AS n_changes
-            FROM lagged GROUP BY 1, 2
-        """,
-        "idelta_1h": """
-            WITH r AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start, value,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY ts DESC, event_id DESC
-                       ) AS rn
-                FROM events
-            )
-            SELECT event_type, bucket_start,
-                   round(max(CASE WHEN rn = 1 THEN value END)
-                         - max(CASE WHEN rn = 2 THEN value END), 6) AS idelta
-            FROM r WHERE rn <= 2 GROUP BY 1, 2
-        """,
-        # delta(): last minus FIRST sample per bucket (gauge semantics)
-        "delta_1h": """
-            WITH r AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start, value,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY ts DESC, event_id DESC
-                       ) AS rn_last,
-                       row_number() OVER (
-                           PARTITION BY event_type, date_trunc('hour', ts)
-                           ORDER BY ts ASC, event_id ASC
-                       ) AS rn_first
-                FROM events
-            )
-            SELECT event_type, bucket_start,
-                   round(max(CASE WHEN rn_last = 1 THEN value END)
-                         - max(CASE WHEN rn_first = 1 THEN value END), 6)
-                     AS delta
-            FROM r WHERE rn_last = 1 OR rn_first = 1 GROUP BY 1, 2
-        """,
-        "deriv_predict_1d": """
-            WITH mins AS (
-                SELECT event_type, date_trunc('minute', ts) AS mt,
-                       CAST(count(*) AS BIGINT) AS y
-                FROM events GROUP BY 1, 2
+        """)
+def q_ewma_1h(spark, sf_dir):
+    """EWMA smoothing (alpha=0.3) of the hourly count tier per
+    event_type (operators/ewma.py) — the one operator no window frame
+    can express (each output depends on ALL prior inputs).  Keyed path:
+    one grouped Arrow scan per series using pandas' C `ewm` kernel
+    (verified bit-identical to the plain recurrence); the oracle replays
+    the exact recurrence as a recursive CTE."""
+    from mq_to_db_spark.operators.ewma import ewma
+
+    tier = (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return ewma(
+        tier, ["event_type"], ts_col="bucket_start", value_col="n_events",
+        alpha=0.3, out_col="ewma",
+    )
+
+
+def _pii_seeded_text_spark(docs):
+    """documents.text + deterministic synthetic PII (email for every doc,
+    ipv4 for even doc_ids, ssn for doc_id % 5 == 0) so the redaction
+    operator has real matches to scrub at every sf."""
+    did = F.col("doc_id").cast("string")
+    return docs.select(
+        "doc_id",
+        F.concat(
+            F.col("text"),
+            F.lit(" contact user"), did, F.lit("@example.com"),
+            F.when(
+                F.col("doc_id") % 2 == 0,
+                F.concat(F.lit(" ip 10.0."), (F.col("doc_id") % 256).cast("string"), F.lit(".7")),
+            ).otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 5 == 0, F.lit(" ssn 123-45-6789")).otherwise(
+                F.lit("")
             ),
-            sums AS (
-                SELECT event_type, date_trunc('day', mt) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(date_diff('minute', date_trunc('day', mt), mt))
-                            AS BIGINT) AS sx,
-                       CAST(sum(y) AS BIGINT) AS sy,
-                       CAST(sum(date_diff('minute', date_trunc('day', mt), mt) * y)
-                            AS BIGINT) AS sxy,
-                       CAST(sum(date_diff('minute', date_trunc('day', mt), mt)
-                                * date_diff('minute', date_trunc('day', mt), mt))
-                            AS BIGINT) AS sxx
-                FROM mins GROUP BY 1, 2
-            )
-            SELECT event_type, bucket_start, n AS n_samples,
-                   CASE WHEN n * sxx - sx * sx <> 0 THEN
-                       round(CAST(n * sxy - sx * sy AS DOUBLE)
-                             / CAST(n * sxx - sx * sx AS DOUBLE), 6)
-                   END AS slope_per_min,
-                   CASE WHEN n * sxx - sx * sx <> 0 THEN
-                       round((CAST(sy AS DOUBLE)
-                              - (CAST(n * sxy - sx * sy AS DOUBLE)
-                                 / CAST(n * sxx - sx * sx AS DOUBLE))
-                                * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)
-                             + (CAST(n * sxy - sx * sy AS DOUBLE)
-                                / CAST(n * sxx - sx * sx AS DOUBLE)) * 1500.0, 6)
-                   END AS predicted_1h_later
-            FROM sums
-        """,
-        "resets_1h": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
-                FROM events
-            ),
-            lagged AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start, v,
-                       lag(v) OVER (
-                           PARTITION BY event_type ORDER BY ts, event_id
-                       ) AS pv
-                FROM s
-            )
-            SELECT event_type, bucket_start,
-                   CAST(sum(CASE WHEN pv IS NOT NULL AND v < pv
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS n_resets,
-                   CAST(count(*) AS BIGINT) AS n_samples
-            FROM lagged GROUP BY 1, 2
-        """,
-        "multimodal_features": """
-            SELECT d.doc_id,
-                   CAST(4 + d.doc_id % 5 AS INT) AS width,
-                   CAST(3 + d.doc_id % 4 AS INT) AS height,
-                   CAST(count(*) AS BIGINT) AS n_px,
-                   CAST(sum((d.doc_id * 31 + 7 * q.q) % 256) AS BIGINT) AS sum_px,
-                   CAST(max((d.doc_id * 31 + 7 * q.q) % 256) AS INT) AS max_px
-            FROM documents d
-            CROSS JOIN range(0, 144) AS q(q)
-            WHERE q.q < (4 + d.doc_id % 5) * (3 + d.doc_id % 4) * 3
-            GROUP BY d.doc_id
-        """,
-        "rollup_1m_counts": """
-            SELECT date_trunc('minute', ts) AS bucket_start, event_type,
-                   count(*) AS n_events
-            FROM events GROUP BY 1, 2
-        """,
-        "rollup_1h_value_stats": """
-            SELECT date_trunc('hour', ts) AS bucket_start, event_type,
-                   count(*) AS n_events,
-                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
-                       AS value_sum,
-                   min(value) AS value_min,
-                   max(value) AS value_max,
-                   ((CASE WHEN sum(floor(value * 1e6)::BIGINT) < 0
-                          THEN -1 ELSE 1 END)
-                    * ((2 * abs(sum(floor(value * 1e6)::BIGINT)) + count(*))
-                       // (2 * count(*))))::DOUBLE / 1e6 AS value_avg
-            FROM events GROUP BY 1, 2
-        """,
-        "rollup_1d_cascade": """
-            SELECT date_trunc('day', ts) AS bucket_start, event_type,
-                   count(*) AS n_events,
-                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
-                       AS value_sum
-            FROM events GROUP BY 1, 2
-        """,
-        "role_mix_1h": f"""
-            SELECT date_trunc('hour', ts) AS bucket_start,
-                   count(*) AS n_events,
-               {type_pivots}
-            FROM events GROUP BY 1
-        """,
-        "rate_1m": """
-            SELECT date_trunc('minute', ts) AS bucket_start,
-                   count(*) AS n_events,
-                   round(count(*) / 60.0, 6) AS events_per_sec
-            FROM events GROUP BY 1
-        """,
-        "percentile_1h": """
-            SELECT date_trunc('hour', ts) AS bucket_start,
-                   round(quantile_cont(value, 0.5), 6) AS p50,
-                   round(quantile_cont(value, 0.9), 6) AS p90
-            FROM events GROUP BY 1
-        """,
-        "distinct_users_1h": """
-            SELECT date_trunc('hour', ts) AS bucket_start,
-                   count(DISTINCT user_id) AS n_users,
-                   count(DISTINCT (user_id, event_type)) AS n_user_type
-            FROM events GROUP BY 1
-        """,
-        "gauge_last_1h": """
-            SELECT bucket_start, user_id, value AS last_value FROM (
-                SELECT date_trunc('hour', ts) AS bucket_start, user_id, value,
-                       row_number() OVER (
-                           PARTITION BY date_trunc('hour', ts), user_id
-                           ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events)
-            WHERE rn = 1
-        """,
-        "histogram_1d": """
-            SELECT date_trunc('day', ts) AS bucket_start,
-                   CASE WHEN value <= 1 THEN 'le_1'
-                        WHEN value <= 5 THEN 'le_5'
-                        WHEN value <= 20 THEN 'le_20'
-                        WHEN value <= 100 THEN 'le_100'
-                        ELSE 'gt_100' END AS le,
-                   count(*) AS n
-            FROM events GROUP BY 1, 2
-        """,
-        "hist_quantile_1d": """
-            WITH h AS (
-                SELECT date_trunc('day', ts) AS bucket_start,
-                       CASE WHEN value <= 1 THEN 1.0
-                            WHEN value <= 5 THEN 5.0
-                            WHEN value <= 20 THEN 20.0
-                            WHEN value <= 100 THEN 100.0
-                            ELSE 'infinity'::DOUBLE END AS le,
-                       count(*) AS n
-                FROM events GROUP BY 1, 2
-            ),
-            e AS (
-                SELECT bucket_start, le, n,
-                       sum(n) OVER (PARTITION BY bucket_start ORDER BY le) AS cum,
-                       coalesce(lag(le) OVER (PARTITION BY bucket_start ORDER BY le), 0.0) AS lo,
-                       sum(n) OVER (PARTITION BY bucket_start) AS tot,
-                       max(CASE WHEN le <> 'infinity'::DOUBLE THEN le END)
-                           OVER (PARTITION BY bucket_start) AS max_finite
-                FROM h
-            )
-            SELECT bucket_start,
-                   round(arg_min(
-                       CASE WHEN le = 'infinity'::DOUBLE THEN max_finite
-                            ELSE lo + (le - lo) * (0.9 * tot - (cum - n)) / n END,
-                       le), 6) AS q90
-            FROM e
-            WHERE cum >= 0.9 * tot AND tot > 0
-            GROUP BY 1
-        """,
-        "gapfill_1h": """
-            WITH hourly AS (
-                SELECT date_trunc('hour', ts) AS b, event_type, count(*) AS n
-                FROM events GROUP BY 1, 2
-            ),
-            extent AS (SELECT min(b) AS lo, max(b) AS hi FROM hourly),
-            grid AS (
-                SELECT t.bucket_start, et.event_type
-                FROM (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket_start
-                      FROM extent) t
-                CROSS JOIN (SELECT DISTINCT event_type FROM events) et
-            )
-            SELECT g.bucket_start, g.event_type,
-                   coalesce(h.n, 0) AS n_events
-            FROM grid g LEFT JOIN hourly h
-              ON g.bucket_start = h.b AND g.event_type = h.event_type
-        """,
-        "role_transitions": """
-            WITH tagged AS (
-                SELECT date_trunc('day', ts) AS bucket_start,
-                       lag(event_type) OVER (PARTITION BY user_id
-                                             ORDER BY ts, event_id) AS prev_role,
-                       event_type AS next_role
-                FROM events
-            )
-            SELECT bucket_start, prev_role, next_role,
-                   count(*) AS n_transitions
-            FROM tagged WHERE prev_role IS NOT NULL
-            GROUP BY 1, 2, 3
-        """,
-        "range_join": """
-            WITH l AS (
-                SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
-            ),
-            r AS (
-                SELECT event_id AS signup_id, user_id, ts AS "start",
-                       ts + INTERVAL 2 HOUR AS "end"
-                FROM events WHERE event_type = 'signup'
-            )
-            SELECT l.event_id, l.user_id, l.ts, r.signup_id, r."start", r."end"
-            FROM l JOIN r
-              ON l.user_id = r.user_id AND l.ts >= r."start" AND l.ts < r."end"
-        """,
-        "asof_join": """
-            WITH l AS (
-                SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
-            ),
-            r AS (
-                SELECT user_id, ts, max(value) AS pval
-                FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-            )
-            SELECT l.event_id, l.user_id, l.ts,
-                   round(r.pval, 6) AS pval_right, r.ts AS ts_right
-            FROM l ASOF LEFT JOIN r
-              ON l.user_id = r.user_id AND l.ts >= r.ts
-        """,
-        "asof_fwd": """
+        ).alias("text"),
+    )
+
+
+def _pii_oracle() -> str:
+    from mq_to_db_spark.functions.text import PII_PATTERNS
+
+    counts = ", ".join(
+        f"coalesce(len(regexp_extract_all(text, '{pat}')), 0)::BIGINT AS n_{name}"
+        for name, pat in PII_PATTERNS.items()
+    )
+    red = "text"
+    for name, pat in PII_PATTERNS.items():
+        red = f"regexp_replace({red}, '{pat}', '<{name.upper()}>', 'g')"
+    anyp = " OR ".join(f"n_{name} > 0" for name in PII_PATTERNS)
+    return f"""
+        WITH seeded AS (
+            SELECT doc_id,
+                   text || ' contact user' || doc_id || '@example.com'
+                        || CASE WHEN doc_id % 2 = 0
+                                THEN ' ip 10.0.' || (doc_id % 256) || '.7'
+                                ELSE '' END
+                        || CASE WHEN doc_id % 5 = 0
+                                THEN ' ssn 123-45-6789' ELSE '' END AS text
+            FROM documents
+        ),
+        counted AS (SELECT doc_id, text, {counts} FROM seeded)
+        SELECT doc_id, n_email, n_ssn, n_card, n_ipv4, n_phone,
+               ({anyp}) AS pii_any, {red} AS text_redacted
+        FROM counted
+    """
+
+
+@contract(_pii_oracle)
+def q_pii_redact(spark, sf_dir):
+    """PII scrub stage (functions/text.py:with_pii_features): per-category
+    regexp counts on the raw text + sequential placeholder redaction —
+    pure chained regexp expressions, codegen'd, no shuffle.  The five
+    patterns are RE2-safe so DuckDB replays them verbatim; redacted text
+    and counts are hash-exact (parity spot-checked on adversarial
+    strings in tests/test_text_functions.py)."""
+    from mq_to_db_spark.functions.text import with_pii_features
+
+    seeded = _pii_seeded_text_spark(_docs(spark, sf_dir))
+    out = with_pii_features(seeded, "text")
+    return out.select(
+        "doc_id", "n_email", "n_ssn", "n_card", "n_ipv4", "n_phone",
+        "pii_any", "text_redacted",
+    )
+
+
+@contract("""
             WITH l AS (
                 SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
             ),
@@ -7106,10 +6937,34 @@ def oracle_sql() -> dict[str, str]:
                    round(r.pval, 6) AS pval_right, r.ts AS ts_right
             FROM l ASOF LEFT JOIN r
               ON l.user_id = r.user_id AND l.ts <= r.ts
-        """,
-        # nearest = the closer of the backward and forward matches in
-        # exact µs (ties → backward) — composed from two native ASOFs
-        "asof_nearest": """
+        """)
+def q_asof_fwd(spark, sf_dir):
+    """Forward as-of join (operators/asof.py, direction='forward'): each
+    click gets the user's EARLIEST purchase at-or-after it — the reversed
+    LOCF scan, same one-shuffle construction; DuckDB's native forward
+    ASOF (``l.ts <= r.ts``) is the oracle."""
+    from mq_to_db_spark.operators.asof import asof_join
+
+    ev = _events(spark, sf_dir)
+    left = ev.filter(ev.event_type == "click").select("event_id", "user_id", "ts")
+    right = (
+        ev.filter(ev.event_type == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("pval"))
+    )
+    out = asof_join(left, right, on="ts", by=["user_id"], direction="forward")
+    return out.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.round("pval_right", 6).alias("pval_right"),
+        "ts_right",
+    )
+
+
+# nearest = the closer of the backward and forward matches in
+# exact µs (ties → backward) — composed from two native ASOFs
+@contract("""
             WITH l AS (
                 SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
             ),
@@ -7140,357 +6995,57 @@ def oracle_sql() -> dict[str, str]:
                              <= epoch_us(ft) - epoch_us(b.ts) THEN bt
                         ELSE ft END AS ts_right
             FROM b JOIN f USING (event_id)
-        """,
-        "sessionize": """
-            WITH flagged AS (
-                SELECT user_id, event_id, ts,
-                       CASE WHEN lag(ts) OVER w IS NULL
-                                 OR ts - lag(ts) OVER w <= INTERVAL 30 MINUTE
-                            THEN 0 ELSE 1 END AS new_s
-                FROM events
-                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ),
-            tagged AS (
-                SELECT user_id, ts,
-                       sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                        ROWS UNBOUNDED PRECEDING) AS session_id
-                FROM flagged
-            )
-            SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-                   min(ts) AS session_start, max(ts) AS session_end,
-                   count(*) AS n_turns,
-                   round(CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS DOUBLE) / 1e6, 6)
-                       AS duration_sec
-            FROM tagged GROUP BY 1, 2
-        """,
-        "validate_split": """
-            WITH planted AS (
-                SELECT event_id, ts, event_type, value FROM events
-                UNION ALL
-                SELECT * FROM (VALUES
-                    (1000001, NULL::TIMESTAMP, 'click', 1.0),
-                    (1000002, TIMESTAMP '2024-01-01 00:00:00', 'bogus_type', 1.0),
-                    (1000003, TIMESTAMP '2024-01-01 00:00:00', 'view', -5.0))
-            )
-            SELECT CASE WHEN ts IS NULL THEN 'null_ts'
-                        WHEN event_type NOT IN ('click','error','purchase','signup','view')
-                             THEN 'unknown_type'
-                        WHEN value < 0 THEN 'negative_value'
-                        ELSE '(valid)' END AS reason,
-                   count(*) AS n
-            FROM planted GROUP BY 1
-        """,
-        "codec_roundtrip_agg": """
-            SELECT CAST(user_id AS VARCHAR) AS conv_id,
-                   count(*) AS n_points,
-                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
-                       AS value_sum,
-                   min(ts) AS ts_min,
-                   max(ts) AS ts_max
+        """)
+def q_asof_nearest(spark, sf_dir):
+    """Nearest as-of join (operators/asof.py, direction='nearest'): the
+    closer of the backward/forward matches in exact µs, ties → backward;
+    the oracle composes DuckDB's two native ASOF directions with the
+    same µs tie rule."""
+    from mq_to_db_spark.operators.asof import asof_join
+
+    ev = _events(spark, sf_dir)
+    left = ev.filter(ev.event_type == "click").select("event_id", "user_id", "ts")
+    right = (
+        ev.filter(ev.event_type == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("pval"))
+    )
+    out = asof_join(left, right, on="ts", by=["user_id"], direction="nearest")
+    return out.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.round("pval_right", 6).alias("pval_right"),
+        "ts_right",
+    )
+
+
+@contract("""
+            SELECT date_trunc('hour', ts) AS bucket_start,
+                   count(DISTINCT user_id) AS n_users,
+                   count(DISTINCT (user_id, event_type)) AS n_user_type
             FROM events GROUP BY 1
-        """,
-        "dedup_exact": f"""
-            SELECT md5({_NORM_SQL}) AS fp,
-                   min(doc_id) AS rep_id,
-                   count(*) AS dup_count
-            FROM documents GROUP BY 1
-        """,
-        "ngram_jaccard": f"""
-            WITH norm AS (
-                SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id,
-                       CASE WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-                            ELSE list_distinct([array_to_string(words[i:i+2], ' ')
-                                  for i in range(1, len(words) - 1)])
-                       END AS shingles
-                FROM norm
-            ),
-            posting AS (
-                SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
-                FROM sh
-            ),
-            shared AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                       a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
-                FROM posting a JOIN posting b USING (shingle)
-                WHERE a.doc_id < b.doc_id
-                GROUP BY 1, 2, 3, 4
-            )
-            SELECT id_a, id_b,
-                   round(inter / (na + nb - inter), 6) AS jaccard
-            FROM shared
-            WHERE inter / (na + nb - inter) >= 0.15
-        """,
-        "token_counts": """
-            SELECT doc_id,
-                   CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-                        ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_ws,
-                   len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
-                   len(regexp_extract_all(text, '[0-9]')) AS n_digits,
-                   len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
-            FROM documents
-        """,
-        "lang_quality": r"""
-            WITH f AS (
-                SELECT doc_id, text,
-                       coalesce(length(text), 0) AS q_len,
-                       CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-                            ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-                       len(regexp_extract_all(text, '[^\w\s]')) AS n_punct,
-                       len(regexp_extract_all(lower(text),
-                           '\b(the|and|of|to|is|in|that|it|for|was)\b')) AS h_en,
-                       len(regexp_extract_all(lower(text),
-                           '\b(der|die|und|das|ist|nicht|ein|mit|für|auf)\b')) AS h_de,
-                       len(regexp_extract_all(lower(text),
-                           '\b(le|la|les|et|est|pas|pour|que|une|dans)\b')) AS h_fr,
-                       len(regexp_extract_all(lower(text),
-                           '\b(el|la|los|que|de|es|en|un|una|por)\b')) AS h_es
-                FROM documents
-            )
-            SELECT doc_id,
-                   CASE WHEN text IS NULL OR n_tokens = 0 THEN 'unknown'
-                        WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'unknown'
-                        WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-                        WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
-                        WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-                        ELSE 'es' END AS lang_pred,
-                   q_len,
-                   round(n_punct / greatest(q_len, 1), 6) AS q_punct_ratio,
-                   round(h_en / greatest(n_tokens, 1), 6) AS q_stopword_ratio
-            FROM f
-        """,
-        "pii_redact": _pii_oracle(),
-        "curation_pipeline": f"""
-            WITH kept AS (
-                SELECT doc_id, text,
-                       coalesce(length(text), 0) AS q_len,
-                       len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
-                FROM documents
-                WHERE coalesce(length(text), 0) >= 30
-                  AND len(regexp_extract_all(text, '[^\\w\\s]'))
-                      / greatest(coalesce(length(text), 0), 1) <= 0.2
-            ),
-            deduped AS (
-                SELECT md5({_NORM_SQL}) AS fp,
-                       min(doc_id) AS doc_id,
-                       arg_min(text, doc_id) AS text
-                FROM kept GROUP BY 1
-            ),
-            langed AS (
-                SELECT text,
-                       CASE WHEN text IS NULL OR (CASE WHEN trim(text) = '' THEN 0
-                                 ELSE len(string_split_regex(trim(text), '\\s+')) END) = 0
-                                 THEN 'unknown'
-                            WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'unknown'
-                            WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-                            WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
-                            WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-                            ELSE 'es' END AS lang
-                FROM (
-                    SELECT text,
-                           len(regexp_extract_all(lower(text),
-                               '\\b(the|and|of|to|is|in|that|it|for|was)\\b')) AS h_en,
-                           len(regexp_extract_all(lower(text),
-                               '\\b(der|die|und|das|ist|nicht|ein|mit|für|auf)\\b')) AS h_de,
-                           len(regexp_extract_all(lower(text),
-                               '\\b(le|la|les|et|est|pas|pour|que|une|dans)\\b')) AS h_fr,
-                           len(regexp_extract_all(lower(text),
-                               '\\b(el|la|los|que|de|es|en|un|una|por)\\b')) AS h_es
-                    FROM deduped)
-            )
-            SELECT lang, count(*) AS n_docs,
-                   CAST(sum(length(text)) AS BIGINT) AS total_chars
-            FROM langed GROUP BY 1
-        """,
-        "ann_cosine_topk": """
-            SELECT vec_id,
-                   round(list_cosine_similarity(embedding::DOUBLE[],
-                       (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)), 5)
-                       AS cosine_r
-            FROM embeddings
-            ORDER BY list_cosine_similarity(embedding::DOUBLE[],
-                       (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0))
-                     DESC, vec_id
-            LIMIT 10
-        """,
-        "knn_join": """
-            WITH scored AS (
-                SELECT l.vec_id AS lid, r.vec_id AS rid,
-                       list_cosine_similarity(l.embedding::DOUBLE[],
-                                              r.embedding::DOUBLE[]) AS cos
-                FROM embeddings l CROSS JOIN embeddings r
-                WHERE l.vec_id < 10
-            ),
-            ranked AS (
-                SELECT lid, rid, cos,
-                       row_number() OVER (PARTITION BY lid
-                                          ORDER BY cos DESC, rid) AS rank
-                FROM scored
-            )
-            SELECT lid, rid, round(cos, 5) AS cosine_r, rank
-            FROM ranked WHERE rank <= 3
-        """,
-        "transcript_pipeline": r"""
-            WITH t AS (
-                SELECT ts,
-                       CAST(coalesce(length(props), 0) AS BIGINT) AS text_len,
-                       CASE WHEN props IS NULL OR trim(props) = '' THEN 0
-                            ELSE len(regexp_extract_all(trim(props), '\s+')) + 1
-                       END AS token_count,
-                       event_type AS role
-                FROM events
-            ),
-            hourly AS (
-                SELECT date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_turns,
-                       CAST(sum(text_len) AS BIGINT) AS text_len_sum,
-                       CAST(min(text_len) AS BIGINT) AS text_len_min,
-                       CAST(max(text_len) AS BIGINT) AS text_len_max,
-                       CAST(sum(text_len * text_len) AS BIGINT) AS text_len_sumsq,
-                       CAST(sum(token_count) AS BIGINT) AS token_sum,
-                       CAST(count(*) FILTER (WHERE role = 'user') AS BIGINT) AS n_user,
-                       CAST(count(*) FILTER (WHERE role = 'assistant') AS BIGINT) AS n_assistant,
-                       CAST(count(*) FILTER (WHERE role = 'system') AS BIGINT) AS n_system,
-                       CAST(count(*) FILTER (WHERE role = 'tool') AS BIGINT) AS n_tool
-                FROM t GROUP BY 1
-            ),
-            extent AS (SELECT min(bucket_start) AS lo, max(bucket_start) AS hi FROM hourly),
-            grid AS (
-                SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket_start
-                FROM extent
-            )
-            SELECT g.bucket_start,
-                   coalesce(h.n_turns, 0) AS n_turns,
-                   coalesce(h.text_len_sum, 0) AS text_len_sum,
-                   h.text_len_min,
-                   h.text_len_max,
-                   h.text_len_sumsq,
-                   coalesce(h.token_sum, 0) AS token_sum,
-                   coalesce(h.n_user, 0) AS n_user,
-                   coalesce(h.n_assistant, 0) AS n_assistant,
-                   coalesce(h.n_system, 0) AS n_system,
-                   coalesce(h.n_tool, 0) AS n_tool
-            FROM grid g LEFT JOIN hourly h USING (bucket_start)
-        """,
-        # minhash: LSH banding has no false negatives at the fixture's
-        # operating point (true pairs all at J ≥ 0.9; see q_minhash_pairs),
-        # so verified candidates == the exact J ≥ 0.3 pair set.
-        "minhash_pairs": f"""
-            WITH norm AS (
-                SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id,
-                       CASE WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-                            ELSE list_distinct([array_to_string(words[i:i+2], ' ')
-                                  for i in range(1, len(words) - 1)])
-                       END AS shingles
-                FROM norm
-            ),
-            posting AS (
-                SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
-                FROM sh
-            ),
-            shared AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                       a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
-                FROM posting a JOIN posting b USING (shingle)
-                WHERE a.doc_id < b.doc_id
-                GROUP BY 1, 2, 3, 4
-            )
-            SELECT id_a, id_b,
-                   round(inter / (na + nb - inter), 6) AS jaccard
-            FROM shared
-            WHERE inter / (na + nb - inter) >= 0.3
-        """,
-        # edit-distance fuzzy dedup: replay BOTH stages — posting-list
-        # exact-Jaccard candidates, then DuckDB's identical unit-cost
-        # levenshtein on the same normalized strings
-        "editdist_pairs": f"""
-            WITH norm AS (
-                SELECT doc_id, {_NORM_SQL} AS nt,
-                       string_split({_NORM_SQL}, ' ') AS words
-                FROM documents
-            ),
-            sh AS (
-                SELECT doc_id, nt,
-                       CASE WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-                            ELSE list_distinct([array_to_string(words[i:i+2], ' ')
-                                  for i in range(1, len(words) - 1)])
-                       END AS shingles
-                FROM norm
-            ),
-            posting AS (
-                SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
-                FROM sh
-            ),
-            cand AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                       a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
-                FROM posting a JOIN posting b USING (shingle)
-                WHERE a.doc_id < b.doc_id
-                GROUP BY 1, 2, 3, 4
-                HAVING count(*) / (a.n_sh + b.n_sh - count(*)) >= 0.3
-            ),
-            v AS (
-                SELECT c.id_a, c.id_b,
-                       levenshtein(x.nt, y.nt) AS lv,
-                       greatest(length(x.nt), length(y.nt)) AS mx
-                FROM cand c
-                JOIN sh x ON x.doc_id = c.id_a
-                JOIN sh y ON y.doc_id = c.id_b
-            )
-            SELECT id_a, id_b, CAST(lv AS INT) AS lev,
-                   round(sim, 6) AS sim
-            FROM (
-                SELECT id_a, id_b, lv, mx,
-                       CASE WHEN mx = 0 THEN 1.0
-                            ELSE 1.0 - CAST(lv AS DOUBLE) / mx END AS sim
-                FROM v
-            ) WHERE sim >= 0.8
-        """,
-        # simhash: md5-derived word hashes → DuckDB recomputes the exact
-        # 60-bit signatures; the O(n²) hamming join is exact at test scale
-        # (the Spark side's pigeonhole banding is exact for hamming ≤ 3).
-        "simhash_pairs": f"""
-            WITH norm AS (
-                SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
-                FROM documents WHERE length({_NORM_SQL}) > 0
-            ),
-            w AS (SELECT doc_id, unnest(words) AS w FROM norm),
-            hw AS (
-                SELECT doc_id,
-                       ('0x' || substring(md5(w), 1, 15))::BIGINT AS h
-                FROM w
-            ),
-            bits AS (
-                SELECT doc_id, b.bitpos,
-                       sum(CASE WHEN (h >> b.bitpos) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-                FROM hw CROSS JOIN (SELECT unnest(range(60)) AS bitpos) b
-                GROUP BY 1, 2
-            ),
-            sigs AS (
-                SELECT doc_id,
-                       CAST(sum(CASE WHEN vote >= 0
-                                     THEN (1::BIGINT << bitpos) ELSE 0 END)
-                            AS BIGINT) AS sig
-                FROM bits GROUP BY 1
-            )
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
-            FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.sig, b.sig)) <= 3
-        """,
-        "ann_lsh": _ann_lsh_oracle(),
-        "ann_ivf": _ann_ivf_oracle(),
-        # survivors of near-dup removal: exact-Jaccard pair graph →
-        # transitive closure (recursive CTE) → min-id per component —
-        # chained duplicates leave exactly one survivor.
-        "dedup_minhash_survivors": f"""
+        """)
+def q_distinct_users_1h(spark, sf_dir):
+    """Windowed distinct cardinality (the active-series gauge family):
+    exact per-hour distinct users + per-type breakdown.  The engine's
+    scale path is the mergeable HLL sketch rollup (operators/rollup.py
+    hll_* — cross-tier re-aggregable); this exact form is its oracle-able
+    twin and the accuracy baseline the sketch is tested against."""
+    return (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"))
+        .agg(
+            F.count_distinct("user_id").alias("n_users"),
+            F.count_distinct("user_id", "event_type").alias("n_user_type"),
+        )
+    )
+
+
+# survivors of near-dup removal: exact-Jaccard pair graph →
+# transitive closure (recursive CTE) → min-id per component —
+# chained duplicates leave exactly one survivor.
+@contract(f"""
             WITH RECURSIVE norm AS (
                 SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
                 FROM documents
@@ -7531,13 +7086,62 @@ def oracle_sql() -> dict[str, str]:
             losers AS (SELECT id FROM comp WHERE id <> component)
             SELECT doc_id FROM documents
             WHERE doc_id NOT IN (SELECT id FROM losers)
-        """,
-        "embedding_neardup": _embedding_neardup_oracle(),
-        "knn_join_lsh": _knn_join_lsh_oracle(),
-        # winnowing: exact fingerprint replication — dual-modulus Horner
-        # rolling hashes over codepoints (plain BIGINT arithmetic, no
-        # md5), per-window list_min, distinct, inverted-index counts.
-        "winnow_pairs": f"""
+        """)
+def q_dedup_minhash_survivors(spark, sf_dir):
+    """Near-dup removal end-to-end: minhash-LSH pairs → exact connected
+    components (bounded label propagation) → keep each cluster's minimum
+    id.  The oracle recomputes the exact J ≥ 0.3 pair graph and its
+    transitive closure with a recursive CTE — chained duplicates
+    (A~B~C, A≁C) must leave exactly one survivor."""
+    from mq_to_db_spark.operators.dedup import dedup_minhash
+
+    kept = dedup_minhash(_docs(spark, sf_dir), "doc_id", "text", threshold=0.3)
+    return kept.select("doc_id")
+
+
+def _embedding_neardup_oracle() -> str:
+    """DuckDB replay of the banded hyperplane OR-construction: one sig
+    expression per band (same seeded literal planes as the Spark side),
+    candidate = any-band collision, then the exact cosine filter."""
+    p = NEARDUP_PARAMS
+    sig_select, any_band = _lsh_band_sigs(p["n_planes"], p["n_bands"], "a", "b")
+    return f"""
+        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        sigs AS (SELECT vec_id, v,
+               {sig_select}
+            FROM e),
+        cand AS (
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                   list_cosine_similarity(a.v, b.v) AS cos
+            FROM sigs a JOIN sigs b
+              ON a.vec_id < b.vec_id AND ({any_band}))
+        SELECT id_a, id_b, round(cos, 5) AS cosine_r
+        FROM cand WHERE cos >= {p["threshold"]}
+    """
+
+
+@contract(_embedding_neardup_oracle)
+def q_embedding_neardup(spark, sf_dir):
+    """Banded hyperplane-LSH embedding near-dup pairs with exact cosine
+    verification — the oracle replays the full banded OR-construction
+    (same seeded literal planes) plus the cosine filter in SQL."""
+    from mq_to_db_spark.operators.dedup import embedding_neardup_pairs
+
+    p = NEARDUP_PARAMS
+    pairs = embedding_neardup_pairs(
+        _emb(spark, sf_dir), "vec_id", "embedding",
+        threshold=p["threshold"], n_planes=p["n_planes"], n_bands=p["n_bands"],
+    )
+    return pairs.select("id_a", "id_b", F.round("cosine", 5).alias("cosine_r"))
+
+
+WINNOW_PARAMS = dict(k=16, w=8, min_shared=5, max_doc_freq=50)
+
+
+# winnowing: exact fingerprint replication — dual-modulus Horner
+# rolling hashes over codepoints (plain BIGINT arithmetic, no
+# md5), per-window list_min, distinct, inverted-index counts.
+@contract(f"""
             WITH nm AS (
                 SELECT doc_id, {_NORM_SQL} AS t FROM documents
                 WHERE length({_NORM_SQL}) > 0
@@ -7561,597 +7165,374 @@ def oracle_sql() -> dict[str, str]:
             FROM p2 a JOIN p2 b USING (f)
             WHERE a.doc_id < b.doc_id
             GROUP BY 1, 2 HAVING count(*) >= 5
-        """,
-        "training_export": _training_export_oracle(),
-        "sample_split": _sample_split_oracle(),
-        "sample_stratified": _sample_stratified_oracle(),
-        "pack_sequences": _pack_sequences_oracle(),
-        "top_users_1h": """
-            WITH tier AS (
-                SELECT date_trunc('hour', ts) AS bucket_start, user_id,
-                       count(*) AS n_events
-                FROM events GROUP BY 1, 2
-            ),
-            ranked AS (
-                SELECT bucket_start, user_id, n_events,
-                       CAST(row_number() OVER (
-                           PARTITION BY bucket_start
-                           ORDER BY n_events DESC, user_id ASC
-                       ) AS INTEGER) AS rank
-                FROM tier
-            )
-            SELECT * FROM ranked WHERE rank <= 5
-        """,
-        # repetition: line array = split on \n, trim, drop empties; word
-        # array = split on \s+, drop empties (leading separators produce
-        # '' tokens; DuckDB/Java trim both strip spaces only)
-        "repetition_features": r"""
-            WITH base AS (
-                SELECT doc_id,
-                       list_filter(list_transform(
-                           string_split(coalesce(text, ''), chr(10)),
-                           x -> trim(x)), x -> x <> '') AS l,
-                       list_filter(
-                           string_split_regex(coalesce(text, ''), '\s+'),
-                           x -> x <> '') AS w
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(len(l) AS INTEGER) AS r_lines,
-                   round((len(l) - len(list_distinct(l)))
-                         / greatest(len(l), 1), 6) AS r_dup_line_ratio,
-                   round((len(w) - len(list_distinct(w)))
-                         / greatest(len(w), 1), 6) AS r_dup_word_ratio,
-                   round(len(list_filter(l, x -> regexp_matches(x, '^[-*•]')))
-                         / greatest(len(l), 1), 6) AS r_bullet_line_ratio,
-                   round(len(list_filter(l, x -> regexp_matches(x, '(\.\.\.|…)$')))
-                         / greatest(len(l), 1), 6) AS r_ellipsis_line_ratio
-            FROM base
-        """,
-        "chunk_spans": f"""
-            WITH t AS (
-                SELECT doc_id, CAST({_TOK_SQL} AS BIGINT) AS tok FROM documents
-            ),
-            s AS (
-                SELECT doc_id, tok, unnest(range(0, tok, 24)) AS cs
-                FROM t WHERE tok > 0
-            )
-            SELECT doc_id,
-                   CAST(cs // 24 AS INTEGER) AS chunk_idx,
-                   cs AS chunk_start,
-                   least(cs + 32, tok) AS chunk_end,
-                   least(cs + 32, tok) - cs AS chunk_len
-            FROM s
-        """,
-        # counters: identical lag replay over integer micro-units — the
-        # reset rule (v < prev → contribute v) is Prometheus increase()
-        "counter_increase": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
-                FROM events
-            ),
-            lagged AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start, v,
-                       lag(v) OVER (
-                           PARTITION BY event_type ORDER BY ts, event_id
-                       ) AS pv
-                FROM s
-            ),
-            agg AS (
-                SELECT event_type, bucket_start,
-                       CAST(sum(CASE WHEN pv IS NULL THEN 0
-                                     WHEN v >= pv THEN v - pv
-                                     ELSE v END) AS BIGINT) AS increase,
-                       CAST(count(*) AS BIGINT) AS n_samples
-                FROM lagged GROUP BY 1, 2
-            )
-            SELECT event_type, bucket_start, increase, n_samples,
-                   round(increase / 3600, 6) AS rate_per_sec
-            FROM agg
-        """,
-        # Prometheus extrapolatedRate: within-bucket reset-aware result,
-        # then the fixed-order double extrapolation replayed verbatim
-        "rate_extrap_1h": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       date_trunc('hour', ts) AS bucket_start,
-                       epoch_us(ts) AS tus,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
-                FROM events
-            ),
-            lagged AS (
-                SELECT *, lag(v) OVER (
-                           PARTITION BY event_type, bucket_start
-                           ORDER BY ts, event_id
-                       ) AS pv,
+        """)
+def q_winnow_pairs(spark, sf_dir):
+    """MOSS-style winnowing fingerprint pairs (Schleimer et al.):
+    dual-modulus rolling k-gram hashes (BIGINT-replayable Horner chains)
+    → sliding-window minima (Arrow-vectorized) → inverted index join on
+    shared fingerprints.  The oracle recomputes the exact fingerprint
+    sets in SQL (same rolling-hash values, list-comprehension window
+    minima)."""
+    from mq_to_db_spark.operators.dedup import winnow_similar_pairs
+
+    p = WINNOW_PARAMS
+    return winnow_similar_pairs(
+        _docs(spark, sf_dir), "doc_id", "text",
+        k=p["k"], w=p["w"], min_shared=p["min_shared"],
+        max_doc_freq=p["max_doc_freq"],
+    )
+
+
+@contract("""
+            SELECT date_trunc('minute', ts) AS bucket_start, event_type,
+                   count(*) AS n_events
+            FROM events GROUP BY 1, 2
+        """)
+def q_rollup_1m_counts(spark, sf_dir):
+    return (
+        _events(spark, sf_dir)
+        .groupBy(
+            F.date_trunc("minute", "ts").alias("bucket_start"),
+            "event_type",
+        )
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+
+
+@contract("""
+            SELECT date_trunc('hour', ts) AS bucket_start, event_type,
+                   count(*) AS n_events,
+                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
+                       AS value_sum,
+                   min(value) AS value_min,
+                   max(value) AS value_max,
+                   ((CASE WHEN sum(floor(value * 1e6)::BIGINT) < 0
+                          THEN -1 ELSE 1 END)
+                    * ((2 * abs(sum(floor(value * 1e6)::BIGINT)) + count(*))
+                       // (2 * count(*))))::DOUBLE / 1e6 AS value_avg
+            FROM events GROUP BY 1, 2
+        """, headline=True)
+def q_rollup_1h_value_stats(spark, sf_dir):
+    return (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            # micro-unit BIGINT sum, NOT sum(double): a float sum is
+            # partition-order dependent, and at sf0.1 one bucket landed
+            # exactly on a 6-dp rounding boundary (…8125 vs …8135) —
+            # the exact-integer idiom every later contract query uses
+            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("_micro"),
+            F.min("value").alias("value_min"),
+            F.max("value").alias("value_max"),
+        )
+        .select(
+            "bucket_start",
+            "event_type",
+            "n_events",
+            F.round(F.col("_micro") / F.lit(1e6), 6).alias("value_sum"),
+            "value_min",
+            "value_max",
+            # avg rounded in EXACT integer arithmetic (half away from
+            # zero at micro resolution) then divided once — engines'
+            # round(double, 6) implementations disagree on exact-half
+            # averages (BigDecimal expansion vs multiply-round-divide),
+            # caught at sf0.01 the moment the formula produced x.xxx9995
+            F.expr(
+                "CAST((CASE WHEN _micro < 0 THEN -1 ELSE 1 END)"
+                " * ((2 * abs(_micro) + n_events) DIV (2 * n_events))"
+                " AS DOUBLE) / 1e6"
+            ).alias("value_avg"),
+        )
+    )
+
+
+@contract("""
+            SELECT date_trunc('day', ts) AS bucket_start, event_type,
+                   count(*) AS n_events,
+                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
+                       AS value_sum
+            FROM events GROUP BY 1, 2
+        """, headline=True)
+def q_rollup_1d_cascade(spark, sf_dir):
+    """1d tier computed by cascading 1h partials (the engine's exact
+    re-aggregable merge, rollup.cascade) — oracle computes 1d directly
+    from raw; equality proves cascade exactness."""
+    hourly = (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("s"),
+        )
+    )
+    return (
+        hourly.groupBy(F.date_trunc("day", "h").alias("bucket_start"), "event_type")
+        .agg(
+            F.sum("n").alias("n_events"),
+            F.round(F.sum("s") / F.lit(1e6), 6).alias("value_sum"),
+        )
+    )
+
+
+#: one ``count(*) FILTER`` pivot column per event type
+_TYPE_PIVOTS_SQL = ",\n               ".join(
+    f"count(*) FILTER (WHERE event_type = '{t}') AS n_{t}" for t in _EVENT_TYPES
+)
+
+
+@contract(f"""
+            SELECT date_trunc('hour', ts) AS bucket_start,
+                   count(*) AS n_events,
+               {_TYPE_PIVOTS_SQL}
+            FROM events GROUP BY 1
+        """)
+def q_role_mix_1h(spark, sf_dir):
+    """Pivot counts per category — the role-mix analogue (C2)."""
+    aggs = [
+        F.count_if(F.col("event_type") == t).alias(f"n_{t}") for t in _EVENT_TYPES
+    ]
+    return (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"))
+        .agg(F.count(F.lit(1)).alias("n_events"), *aggs)
+    )
+
+
+@contract("""
+            SELECT date_trunc('minute', ts) AS bucket_start,
+                   count(*) AS n_events,
+                   round(count(*) / 60.0, 6) AS events_per_sec
+            FROM events GROUP BY 1
+        """)
+def q_rate_1m(spark, sf_dir):
+    """Windowed rate (C3): events/sec per 1m bucket — the dashboard's
+    sum(rate(...[1m])) analogue."""
+    return (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("minute", "ts").alias("bucket_start"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .withColumn("events_per_sec", F.round(F.col("n_events") / 60.0, 6))
+    )
+
+
+@contract("""
+            SELECT date_trunc('hour', ts) AS bucket_start,
+                   round(quantile_cont(value, 0.5), 6) AS p50,
+                   round(quantile_cont(value, 0.9), 6) AS p90
+            FROM events GROUP BY 1
+        """, headline=True)
+def q_percentile_1h(spark, sf_dir):
+    """Exact interpolated quantiles per window (C5)."""
+    return (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"))
+        .agg(
+            F.round(F.percentile("value", F.lit(0.5)), 6).alias("p50"),
+            F.round(F.percentile("value", F.lit(0.9)), 6).alias("p90"),
+        )
+    )
+
+
+@contract("""
+            SELECT bucket_start, user_id, value AS last_value FROM (
+                SELECT date_trunc('hour', ts) AS bucket_start, user_id, value,
                        row_number() OVER (
-                           PARTITION BY event_type, bucket_start
-                           ORDER BY ts, event_id
-                       ) AS rn
-                FROM s
-            ),
-            agg AS (
-                SELECT event_type, bucket_start,
-                       CAST(sum(CASE WHEN pv IS NULL THEN 0
-                                     WHEN v >= pv THEN v - pv
-                                     ELSE v END) AS BIGINT) AS res,
-                       CAST(count(*) AS BIGINT) AS n_samples,
-                       min(tus) AS first_us, max(tus) AS last_us,
-                       max(CASE WHEN rn = 1 THEN v END) AS first_v
-                FROM lagged GROUP BY 1, 2
-            ),
-            m AS (
-                SELECT *,
-                       epoch_us(bucket_start) AS rs_us,
-                       last_us - first_us AS sampled,
-                       CAST(last_us - first_us AS DOUBLE) AS sampled_d,
-                       CAST(last_us - first_us AS DOUBLE)
-                         / CAST(n_samples - 1 AS DOUBLE) AS avg_dur
-                FROM agg
-            ),
-            e AS (
-                SELECT *,
-                       CASE WHEN res > 0 AND first_v >= 0
-                            THEN least(
-                                CAST(first_us - rs_us AS DOUBLE),
-                                sampled_d * (CAST(first_v AS DOUBLE)
-                                             / CAST(res AS DOUBLE)))
-                            ELSE CAST(first_us - rs_us AS DOUBLE)
-                       END AS dts,
-                       CAST(rs_us + 3600000000 - last_us AS DOUBLE) AS dte,
-                       avg_dur * 1.1 AS thr
-                FROM m
-            ),
-            x AS (
-                SELECT *,
-                       CASE WHEN n_samples >= 2 AND sampled > 0 THEN
-                           CAST(res AS DOUBLE) * ((sampled_d
-                             + (CASE WHEN dts < thr THEN dts
-                                     ELSE avg_dur / 2.0 END)
-                             + (CASE WHEN dte < thr THEN dte
-                                     ELSE avg_dur / 2.0 END))
-                             / sampled_d)
-                       END AS inc
-                FROM e
-            )
-            SELECT event_type, bucket_start, n_samples,
-                   inc AS increase_ext,
-                   inc / 3600.0 AS rate_ext
-            FROM x
-        """,
-        # sliding *_over_time grid: the same bounded explode replayed —
-        # each sample's affected instants via generate_series, one group
-        "over_time_1h10m": """
-            WITH s AS (
-                SELECT event_type, epoch_us(ts) AS tus, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
-                FROM events
-            ),
-            g AS (
-                SELECT event_type, v, tus, event_id,
-                       unnest(generate_series(
-                           ((tus + 599999999) // 600000000) * 600000000,
-                           tus + 3599999999,
-                           600000000)) AS gus
-                FROM s
-            ),
-            r AS (
-                SELECT *, row_number() OVER (
-                           PARTITION BY event_type, gus
-                           ORDER BY tus DESC, event_id DESC
-                       ) AS rn
-                FROM g
-            )
-            SELECT event_type, make_timestamp(gus) AS grid_ts,
-                   CAST(count(*) AS BIGINT) AS n_samples,
-                   CAST(sum(v) AS BIGINT) AS sum_v,
-                   round(CAST(sum(v) AS DOUBLE)
-                         / CAST(count(*) AS DOUBLE), 6) AS avg_v,
-                   min(v) AS min_v,
-                   max(v) AS max_v,
-                   max(CASE WHEN rn = 1 THEN v END) AS last_v
-            FROM r GROUP BY 1, 2
-        """,
-        # openmetrics roundtrip: the oracle computes the tier DIRECTLY —
-        # the Spark side must recover identical rows from parsed text
-        "openmetrics_roundtrip": """
-            SELECT 'events_total' AS metric,
-                   event_type,
-                   date_trunc('hour', ts) AS bucket_start,
-                   CAST(count(*) AS BIGINT) AS n_events
-            FROM events GROUP BY 2, 3
-        """,
-        # quantile_over_time: identical explode, exact R-7 quantiles
-        "quantile_over_time_1h": """
-            WITH s AS (
-                SELECT event_type, epoch_us(ts) AS tus,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
-                FROM events
-            ),
-            g AS (
-                SELECT event_type, v,
-                       unnest(generate_series(
-                           ((tus + 599999999) // 600000000) * 600000000,
-                           tus + 3599999999,
-                           600000000)) AS gus
-                FROM s
-            )
-            SELECT event_type, make_timestamp(gus) AS grid_ts,
-                   CAST(count(*) AS BIGINT) AS n_samples,
-                   round(quantile_cont(v, 0.5), 6) AS p50,
-                   round(quantile_cont(v, 0.9), 6) AS p90
-            FROM g GROUP BY 1, 2
-        """,
-        # PromQL subquery max_over_time(rate(v[10m])[1h:10m]): the same
-        # reset-aware lag contributions gridded at 10m, then max per 1h
-        "subquery_maxrate_1h": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v
-                FROM events
-            ),
-            lagged AS (
-                SELECT event_type, ts, v,
-                       lag(v) OVER (
-                           PARTITION BY event_type ORDER BY ts, event_id
-                       ) AS pv
-                FROM s
-            ),
-            inner_g AS (
-                SELECT event_type,
-                       TIMESTAMP '1970-01-01 00:00:00' + INTERVAL 1 SECOND
-                         * (CAST(floor(epoch(ts) / 600) AS BIGINT) * 600)
-                         AS inner_ts,
-                       sum(CASE WHEN pv IS NULL THEN 0
-                                WHEN v >= pv THEN v - pv
-                                ELSE v END) / 600.0 AS r
-                FROM lagged GROUP BY 1, 2
-            )
-            SELECT event_type,
-                   TIMESTAMP '1970-01-01 00:00:00' + INTERVAL 1 SECOND
-                     * (CAST(floor(epoch(inner_ts) / 3600) AS BIGINT) * 3600)
-                     AS bucket_start,
-                   max(r) AS max_rate,
-                   CAST(count(*) AS BIGINT) AS n_inner
-            FROM inner_g GROUP BY 1, 2
-        """,
-        # irate: last two samples per 10m bucket, reset-aware, exact µs gap
-        "irate_10m": """
-            WITH s AS (
-                SELECT event_type, ts, event_id,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v,
-                       TIMESTAMP '1970-01-01 00:00:00' + INTERVAL 1 SECOND
-                         * (CAST(floor(epoch(ts) / 600) AS BIGINT) * 600)
-                         AS bucket_start
-                FROM events
-            ),
-            r AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY event_type, bucket_start
-                    ORDER BY ts DESC, event_id DESC
-                ) AS rn
-                FROM s
-            ),
-            p AS (
-                SELECT event_type, bucket_start,
-                       max(CASE WHEN rn = 1 THEN v END) AS lv,
-                       max(CASE WHEN rn = 1 THEN epoch_us(ts) END) AS lt,
-                       max(CASE WHEN rn = 2 THEN v END) AS pv,
-                       max(CASE WHEN rn = 2 THEN epoch_us(ts) END) AS pt
-                FROM r WHERE rn <= 2 GROUP BY 1, 2
-            )
-            SELECT event_type, bucket_start,
-                   CASE WHEN pv IS NOT NULL AND lt > pt THEN
-                        (CASE WHEN lv >= pv THEN lv - pv ELSE lv END)
-                          * 1000000.0 / (lt - pt)
-                   END AS irate
-            FROM p
-        """,
-        # histogram_fraction: full buckets + one interpolated straddler;
-        # the (5,20] bucket's n is re-joined by its le (one row per le)
-        "hist_fraction_1d": """
+                           PARTITION BY date_trunc('hour', ts), user_id
+                           ORDER BY ts DESC, event_id DESC) AS rn
+                FROM events)
+            WHERE rn = 1
+        """, headline=True)
+def q_gauge_last_1h(spark, sf_dir):
+    """Gauge/last-value per user per hour (C6)."""
+    from mq_to_db_spark.operators.rollup import gauge_last
+
+    out = gauge_last(
+        _events(spark, sf_dir), "1h", "value", keys=["user_id"], ts_col="ts",
+        order_cols=["ts", "event_id"],
+    )
+    return out.withColumnRenamed("last_value", "last_value")
+
+
+@contract("""
+            SELECT date_trunc('day', ts) AS bucket_start,
+                   CASE WHEN value <= 1 THEN 'le_1'
+                        WHEN value <= 5 THEN 'le_5'
+                        WHEN value <= 20 THEN 'le_20'
+                        WHEN value <= 100 THEN 'le_100'
+                        ELSE 'gt_100' END AS le,
+                   count(*) AS n
+            FROM events GROUP BY 1, 2
+        """)
+def q_histogram_1d(spark, sf_dir):
+    """Fixed-bucket histogram (C4) with string bucket labels (avoids
+    inf-literal formatting differences across engines)."""
+    c = F.col("value")
+    label = (
+        F.when(c <= 1.0, "le_1")
+        .when(c <= 5.0, "le_5")
+        .when(c <= 20.0, "le_20")
+        .when(c <= 100.0, "le_100")
+        .otherwise("gt_100")
+    )
+    return (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("day", "ts").alias("bucket_start"), label.alias("le"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+@contract("""
             WITH h AS (
                 SELECT date_trunc('day', ts) AS bucket_start,
-                       CASE WHEN value <= 1.0 THEN 1.0
-                            WHEN value <= 5.0 THEN 5.0
-                            WHEN value <= 20.0 THEN 20.0
-                            WHEN value <= 100.0 THEN 100.0
+                       CASE WHEN value <= 1 THEN 1.0
+                            WHEN value <= 5 THEN 5.0
+                            WHEN value <= 20 THEN 20.0
+                            WHEN value <= 100 THEN 100.0
                             ELSE 'infinity'::DOUBLE END AS le,
                        count(*) AS n
                 FROM events GROUP BY 1, 2
             ),
-            a AS (
-                SELECT bucket_start,
-                       sum(n) AS tot,
-                       sum(CASE WHEN le <= 10.0 THEN n ELSE 0 END) AS full_n,
-                       min(CASE WHEN le > 10.0 AND le != 'infinity'::DOUBLE
-                                THEN le END) AS ple,
-                       max(CASE WHEN le <= 10.0 THEN le END) AS lo
-                FROM h GROUP BY 1
+            e AS (
+                SELECT bucket_start, le, n,
+                       sum(n) OVER (PARTITION BY bucket_start ORDER BY le) AS cum,
+                       coalesce(lag(le) OVER (PARTITION BY bucket_start ORDER BY le), 0.0) AS lo,
+                       sum(n) OVER (PARTITION BY bucket_start) AS tot,
+                       max(CASE WHEN le <> 'infinity'::DOUBLE THEN le END)
+                           OVER (PARTITION BY bucket_start) AS max_finite
+                FROM h
             )
-            SELECT a.bucket_start,
-                   round((a.full_n + coalesce(
-                       p.n * greatest(0.0, least(1.0,
-                           (10.0 - coalesce(a.lo, 0.0))
-                             / (a.ple - coalesce(a.lo, 0.0)))),
-                       0.0)) / a.tot, 6) AS frac_le_10
-            FROM a LEFT JOIN h p
-              ON p.bucket_start = a.bucket_start AND p.le = a.ple
-            WHERE a.tot > 0
-        """,
-        # HA replica dedup: election (count desc, replica asc) + join-back
-        "replica_dedup_1h": """
-            WITH s AS (
-                SELECT event_type, ts, date_trunc('hour', ts) AS bucket_start,
-                       CAST(floor(value * 1000000.0) AS BIGINT) AS v,
-                       CASE WHEN event_id % 2 = 0 THEN 'a' ELSE 'b' END
-                         AS replica
-                FROM events
-            ),
-            w AS (
-                SELECT event_type, bucket_start, replica FROM (
-                    SELECT event_type, bucket_start, replica,
-                           count(*) AS n
-                    FROM s GROUP BY 1, 2, 3
-                )
-                QUALIFY row_number() OVER (
-                    PARTITION BY event_type, bucket_start
-                    ORDER BY n DESC, replica ASC
-                ) = 1
-            )
-            SELECT s.event_type, s.bucket_start, s.replica,
-                   CAST(count(*) AS BIGINT) AS n_samples,
-                   CAST(sum(s.v) AS BIGINT) AS v_sum
-            FROM s JOIN w USING (event_type, bucket_start, replica)
-            GROUP BY 1, 2, 3
-        """,
-        # OHLC: open/close via first/last value in (ts, event_id) order
-        # (DuckDB arg_min can't take a struct key → window + group-by)
-        "downsample_ohlc": """
-            WITH b AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                       ts, event_id, value
-                FROM events
-            ),
-            w AS (
-                SELECT event_type, bucket_start, value,
-                       first_value(value) OVER (
-                           PARTITION BY event_type, bucket_start
-                           ORDER BY ts, event_id) AS o,
-                       last_value(value) OVER (
-                           PARTITION BY event_type, bucket_start
-                           ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND UNBOUNDED FOLLOWING) AS c
-                FROM b
-            )
-            SELECT event_type, bucket_start,
-                   min(o) AS open, max(value) AS high, min(value) AS low,
-                   min(c) AS close, CAST(count(*) AS BIGINT) AS n_samples,
-                   round(sum(value), 6) AS value_sum
-            FROM w GROUP BY 1, 2
-        """,
-        # contamination: string n-grams replay the int64-hash semi join
-        # exactly (same normalization + sub-n whole-text clamp as the
-        # minhash oracles; word counts differ ⇒ strings differ, so the
-        # clamp never collides with a regular 5-gram)
-        "contamination": f"""
-            WITH norm AS (
-                SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
-                FROM documents WHERE text IS NOT NULL
-            ),
-            sh AS (
-                SELECT doc_id,
-                       CASE WHEN len(words) < 5 THEN [array_to_string(words, ' ')]
-                            ELSE list_distinct([array_to_string(words[i:i+4], ' ')
-                                  for i in range(1, len(words) - 3)])
-                       END AS ngs
-                FROM norm
-            ),
-            ev AS (
-                SELECT DISTINCT ng FROM (
-                    SELECT unnest(ngs) AS ng FROM sh WHERE doc_id % 10 = 0
-                )
-            ),
-            co AS (
-                SELECT doc_id, unnest(ngs) AS ng FROM sh WHERE doc_id % 10 <> 0
-            )
-            SELECT co.doc_id AS id, CAST(count(*) AS BIGINT) AS n_hits
-            FROM co SEMI JOIN ev ON co.ng = ev.ng
+            SELECT bucket_start,
+                   round(arg_min(
+                       CASE WHEN le = 'infinity'::DOUBLE THEN max_finite
+                            ELSE lo + (le - lo) * (0.9 * tot - (cum - n)) / n END,
+                       le), 6) AS q90
+            FROM e
+            WHERE cum >= 0.9 * tot AND tot > 0
             GROUP BY 1
-        """,
-        "quantile_sketch_1h": _quantile_sketch_oracle(),
-        "cms_counts_1d": _cms_oracle(),
-        # rolling stats: identical frames (23 PRECEDING..CURRENT and
-        # 24 PRECEDING..1 PRECEDING), z-score from the ROUNDED value so
-        # the anomaly threshold compares the same number on both engines
-        "rolling_stats_1h": """
-            WITH tier AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_events
+        """)
+def q_hist_quantile_1d(spark, sf_dir):
+    """C5: Prometheus histogram_quantile semantics — p90 reconstructed
+    from fixed-bucket counts by linear interpolation (not from raw)."""
+    from mq_to_db_spark.operators.rollup import (
+        fixed_bucket_histogram,
+        histogram_quantile,
+    )
+
+    ev = _events(spark, sf_dir).withColumnRenamed("value", "v")
+    hist = fixed_bucket_histogram(
+        ev.withColumn("ts", F.col("ts")), "v", [1.0, 5.0, 20.0, 100.0], "1d"
+    )
+    out = histogram_quantile(hist, 0.9)
+    return out.select("bucket_start", F.round("q90", 6).alias("q90"))
+
+
+@contract(
+    """
+            WITH hourly AS (
+                SELECT date_trunc('hour', ts) AS b, event_type, count(*) AS n
                 FROM events GROUP BY 1, 2
             ),
-            w AS (
-                SELECT event_type, bucket_start, n_events,
-                       round(avg(n_events) OVER win_inc, 6) AS roll_avg,
-                       round(stddev_samp(n_events) OVER win_inc, 6) AS roll_std,
-                       avg(n_events) OVER win_prev AS pavg,
-                       stddev_samp(n_events) OVER win_prev AS pstd
-                FROM tier
-                WINDOW win_inc AS (PARTITION BY event_type ORDER BY bucket_start
-                                   ROWS BETWEEN 23 PRECEDING AND CURRENT ROW),
-                       win_prev AS (PARTITION BY event_type ORDER BY bucket_start
-                                    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
+            extent AS (SELECT min(b) AS lo, max(b) AS hi FROM hourly),
+            grid AS (
+                SELECT t.bucket_start, et.event_type
+                FROM (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket_start
+                      FROM extent) t
+                CROSS JOIN (SELECT DISTINCT event_type FROM events) et
             )
-            SELECT event_type, bucket_start, n_events, roll_avg, roll_std,
-                   CASE WHEN pstd > 0
-                        THEN round((n_events - pavg) / pstd, 6) END AS zscore,
-                   coalesce(
-                       CASE WHEN pstd > 0
-                            THEN abs(round((n_events - pavg) / pstd, 6)) > 3.0
-                       END, false) AS is_anomaly
-            FROM w
+            SELECT g.bucket_start, g.event_type,
+                   coalesce(h.n, 0) AS n_events
+            FROM grid g LEFT JOIN hourly h
+              ON g.bucket_start = h.b AND g.event_type = h.event_type
         """,
-        # ewma: the exact recurrence s_1 = x_1; s_t = 0.3·x_t + 0.7·s_{t-1}
-        # walked as a recursive CTE in series order — same association as
-        # the engine's scan (a·x + (1-a)·s), rounded at 6
-        "ewma_1h": """
-            WITH RECURSIVE tier AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                       CAST(count(*) AS BIGINT) AS n_events
-                FROM events GROUP BY 1, 2
-            ),
-            ordered AS (
-                SELECT event_type, bucket_start, n_events,
-                       row_number() OVER (
-                           PARTITION BY event_type ORDER BY bucket_start
-                       ) AS rn
-                FROM tier
-            ),
-            rec AS (
-                SELECT event_type, bucket_start, n_events, rn,
-                       CAST(n_events AS DOUBLE) AS s
-                FROM ordered WHERE rn = 1
-                UNION ALL
-                SELECT o.event_type, o.bucket_start, o.n_events, o.rn,
-                       0.3 * o.n_events + 0.7 * r.s
-                FROM rec r JOIN ordered o
-                  ON o.event_type = r.event_type AND o.rn = r.rn + 1
-            )
-            SELECT event_type, bucket_start, n_events, round(s, 6) AS ewma
-            FROM rec
-        """,
-        "time_weighted_1h": """
-            WITH t AS (
-                SELECT event_type, date_trunc('hour', ts) AS bucket_start, ts, value,
-                       lead(ts) OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                                      ORDER BY ts, event_id) AS nxt
-                FROM events
-            )
-            SELECT event_type, bucket_start, count(*) AS n_samples,
-                   round(sum(value::DECIMAL(20,6)
-                             * datediff('microsecond', ts,
-                                        coalesce(nxt, bucket_start + INTERVAL 1 HOUR)))::DOUBLE
-                         / sum(datediff('microsecond', ts,
-                                        coalesce(nxt, bucket_start + INTERVAL 1 HOUR)))::DOUBLE,
-                         6) AS twa
-            FROM t GROUP BY 1, 2
-        """,
-        "state_durations_1d": """
-            WITH t AS (
-                SELECT user_id, event_type, ts,
-                       lead(ts) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS nxt
-                FROM events
-            )
-            SELECT date_trunc('day', ts) AS bucket_start, event_type,
-                   count(*) AS n_entries,
-                   round(sum(datediff('microsecond', ts, nxt)) / 1000000.0, 6)
-                       AS duration_sec
-            FROM t WHERE nxt IS NOT NULL GROUP BY 1, 2
-        """,
-        # full-algorithm replay: gaps-and-islands merge (gap ≤ 10 min),
-        # islands clipped to hour buckets in exact BIGINT µs
-        "uptime_1h": """
-            WITH hb AS (
-                SELECT event_type, ts, event_id,
-                       CASE WHEN lag(ts) OVER w IS NULL
-                                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                                    > 600000000
-                            THEN 1 ELSE 0 END AS new_i
-                FROM events
-                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-            ),
-            tagged AS (
-                SELECT event_type, ts,
-                       sum(new_i) OVER (PARTITION BY event_type
-                                        ORDER BY ts, event_id
-                                        ROWS UNBOUNDED PRECEDING) AS iid
-                FROM hb
-            ),
-            isl AS (
-                SELECT event_type, epoch_us(min(ts)) AS s_us,
-                       epoch_us(max(ts)) + 600000000 AS e_us
-                FROM tagged GROUP BY event_type, iid
-            ),
-            ex AS (
-                SELECT event_type, s_us, e_us,
-                       unnest(generate_series((s_us // 3600000000) * 3600000000,
-                                              ((e_us - 1) // 3600000000) * 3600000000,
-                                              3600000000)) AS b_us
-                FROM isl
-            )
-            SELECT event_type, make_timestamp(b_us) AS bucket_start,
-                   count(*) AS n_live_intervals,
-                   round(sum(least(e_us, b_us + 3600000000)
-                             - greatest(s_us, b_us)) / 1000000.0, 6) AS uptime_sec
-            FROM ex GROUP BY 1, 2
-        """,
-        # LOCF hold to the key's next sample (any bucket); last sample
-        # clamped to the end of its own bucket; explode across buckets
-        "twa_interp_1h": """
-            WITH t AS (
-                SELECT event_type, value, epoch_us(ts) AS s_us,
-                       epoch_us(lead(ts) OVER (PARTITION BY event_type
-                                               ORDER BY ts, event_id)) AS nxt_us
-                FROM events
-            ),
-            s AS (
-                SELECT event_type, value, s_us,
-                       coalesce(nxt_us,
-                                (s_us // 3600000000 + 1) * 3600000000) AS e_us
-                FROM t
-            ),
-            ex AS (
-                SELECT event_type, value, s_us, e_us,
-                       unnest(generate_series((s_us // 3600000000) * 3600000000,
-                                              ((e_us - 1) // 3600000000) * 3600000000,
-                                              3600000000)) AS b_us
-                FROM s WHERE e_us > s_us
-            )
-            SELECT event_type, make_timestamp(b_us) AS bucket_start,
-                   sum(CASE WHEN s_us >= b_us THEN 1 ELSE 0 END)::BIGINT
-                       AS n_samples,
-                   round(sum(value::DECIMAL(20,6)
-                             * (least(e_us, b_us + 3600000000)
-                                - greatest(s_us, b_us)))::DOUBLE
-                         / sum(least(e_us, b_us + 3600000000)
-                               - greatest(s_us, b_us))::DOUBLE,
-                         6) AS twa_interp
-            FROM ex GROUP BY 1, 2
-        """,
-        # neighbor-delta triangle area (BIGINT µs × DOUBLE — same IEEE
-        # products as the Spark expression); endpoints area=+inf;
-        # ties → latest (ts, event_id)
-        "lttb_1h": """
-            WITH t AS (
-                SELECT event_type, ts, value, event_id, epoch_us(ts) AS x,
-                       lag(epoch_us(ts)) OVER w AS xp, lag(value) OVER w AS yp,
-                       lead(epoch_us(ts)) OVER w AS xn, lead(value) OVER w AS yn
-                FROM events
-                WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-            ),
-            a AS (
-                SELECT event_type, ts, value, event_id, x,
-                       date_trunc('hour', ts) AS bucket_start,
-                       CASE WHEN xp IS NULL OR xn IS NULL THEN 'infinity'::DOUBLE
-                            ELSE abs((x - xp) * (yn - yp) - (xn - xp) * (value - yp))
-                       END AS area2
-                FROM t
+    headline=True,
+    # gapfill.py:50 — series × broadcast(1-row min/max extent): the
+    # dense-grid materialization itself, output = |series| · |grid|
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_gapfill_1h(spark, sf_dir):
+    """Gap-fill (C9): dense (event_type × hour) grid over the global
+    extent, zero-filled counts — via the engine's grid/gapfill operator."""
+    from mq_to_db_spark.operators.gapfill import gapfill
+
+    hourly = (
+        _events(spark, sf_dir)
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket_start"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_turns"))
+    )
+    filled = gapfill(hourly, "1h", ["event_type"], policy="zero")
+    return filled.select("bucket_start", "event_type", F.col("n_turns").alias("n_events"))
+
+
+@contract("""
+            WITH l AS (
+                SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
             ),
             r AS (
-                SELECT *, row_number() OVER (PARTITION BY event_type, bucket_start
-                                             ORDER BY area2 DESC, x DESC,
-                                                      event_id DESC) AS rn,
-                       count(*) OVER (PARTITION BY event_type, bucket_start)
-                           AS n_samples
-                FROM a
+                SELECT user_id, ts, max(value) AS pval
+                FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
             )
-            SELECT event_type, bucket_start, ts, value, n_samples
-            FROM r WHERE rn = 1
-        """,
-        "concurrency_10m": """
+            SELECT l.event_id, l.user_id, l.ts,
+                   round(r.pval, 6) AS pval_right, r.ts AS ts_right
+            FROM l ASOF LEFT JOIN r
+              ON l.user_id = r.user_id AND l.ts >= r.ts
+        """)
+def q_asof_join(spark, sf_dir):
+    """Point-in-time as-of join (backward): each click gets the user's
+    latest purchase value at-or-before it — one shuffle, no pair
+    explosion (operators/asof.py); DuckDB's native ASOF JOIN is the
+    oracle."""
+    from mq_to_db_spark.operators.asof import asof_join
+
+    ev = _events(spark, sf_dir)
+    left = ev.filter(ev.event_type == "click").select("event_id", "user_id", "ts")
+    right = (
+        ev.filter(ev.event_type == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("pval"))
+    )
+    out = asof_join(left, right, on="ts", by=["user_id"])
+    return out.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.round("pval_right", 6).alias("pval_right"),
+        "ts_right",
+    )
+
+
+@contract("""
+            WITH l AS (
+                SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
+            ),
+            r AS (
+                SELECT event_id AS signup_id, user_id, ts AS "start",
+                       ts + INTERVAL 2 HOUR AS "end"
+                FROM events WHERE event_type = 'signup'
+            )
+            SELECT l.event_id, l.user_id, l.ts, r.signup_id, r."start", r."end"
+            FROM l JOIN r
+              ON l.user_id = r.user_id AND l.ts >= r."start" AND l.ts < r."end"
+        """)
+def q_range_join(spark, sf_dir):
+    """Point-in-interval range join via bucketized equi-join (no
+    BroadcastNestedLoop): clicks landing inside the 2-hour window after
+    each signup of the same user."""
+    from mq_to_db_spark.operators.rangejoin import range_join
+
+    ev = _events(spark, sf_dir)
+    left = ev.filter(ev.event_type == "click").select("event_id", "user_id", "ts")
+    right = ev.filter(ev.event_type == "signup").select(
+        F.col("event_id").alias("signup_id"),
+        "user_id",
+        F.col("ts").alias("start"),
+        (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("end"),
+    )
+    out = range_join(left, right, by=["user_id"], bucket="1 hour")
+    return out.select("event_id", "user_id", "ts", "signup_id", "start", "end")
+
+
+@contract("""
             WITH flagged AS (
                 SELECT user_id, event_id, ts,
                        CASE WHEN lag(ts) OVER w IS NULL
@@ -8165,48 +7546,601 @@ def oracle_sql() -> dict[str, str]:
                        sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                         ROWS UNBOUNDED PRECEDING) AS session_id
                 FROM flagged
-            ),
-            sess AS (
-                SELECT min(ts) AS s, max(ts) AS e
-                FROM tagged GROUP BY user_id, session_id
-            ),
-            ext AS (SELECT date_trunc('day', min(ts)) AS lo, max(ts) AS hi FROM events),
-            grid AS (
-                SELECT unnest(generate_series(lo, hi, INTERVAL 10 MINUTE)) AS grid_ts
-                FROM ext
             )
-            SELECT g.grid_ts, count(sess.s) AS active
-            FROM grid g LEFT JOIN sess
-              ON sess.s <= g.grid_ts AND g.grid_ts <= sess.e
-            GROUP BY 1
-        """,
-        "series_corr_1d": """
-            WITH hourly AS (
-                SELECT date_trunc('hour', ts) AS b,
-                       count(*) FILTER (event_type = 'click') AS a,
-                       count(*) FILTER (event_type = 'error') AS bb
-                FROM events GROUP BY 1
-            ),
-            ext AS (SELECT min(b) AS lo, max(b) AS hi FROM hourly),
-            grid AS (
-                SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS g FROM ext
-            ),
-            filled AS (
-                SELECT g, coalesce(a, 0) AS a, coalesce(bb, 0) AS bb
-                FROM grid LEFT JOIN hourly ON b = g
-            ),
-            mom AS (
-                SELECT date_trunc('day', g) AS group_start, count(*) AS n,
-                       sum(a) AS sa, sum(bb) AS sb, sum(a * bb) AS sab,
-                       sum(a * a) AS saa, sum(bb * bb) AS sbb
-                FROM filled GROUP BY 1
+            SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
+                   min(ts) AS session_start, max(ts) AS session_end,
+                   count(*) AS n_turns,
+                   round(CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS DOUBLE) / 1e6, 6)
+                       AS duration_sec
+            FROM tagged GROUP BY 1, 2
+        """)
+def q_sessionize(spark, sf_dir):
+    """Gap-based sessionization (island detection, one window shuffle):
+    user activity sessions with a 30-minute inactivity gap."""
+    from mq_to_db_spark.operators.sessionize import sessionize
+
+    ev = _events(spark, sf_dir).select("user_id", "event_id", "ts")
+    out = sessionize(
+        ev, gap="30 minutes", key="user_id", order_cols=["ts", "event_id"]
+    )
+    return out.select(
+        "user_id",
+        "session_id",
+        "session_start",
+        "session_end",
+        "n_turns",
+        F.round("duration_sec", 6).alias("duration_sec"),
+    )
+
+
+@contract("""
+            WITH tagged AS (
+                SELECT date_trunc('day', ts) AS bucket_start,
+                       lag(event_type) OVER (PARTITION BY user_id
+                                             ORDER BY ts, event_id) AS prev_role,
+                       event_type AS next_role
+                FROM events
             )
-            SELECT group_start, n AS n_buckets,
-                   round((n::DOUBLE * sab::DOUBLE - sa::DOUBLE * sb::DOUBLE)
-                         / nullif(sqrt(n::DOUBLE * saa::DOUBLE - sa::DOUBLE * sa::DOUBLE)
-                                  * sqrt(n::DOUBLE * sbb::DOUBLE - sb::DOUBLE * sb::DOUBLE),
-                                  0.0),
-                         6) AS corr_ab
-            FROM mom
+            SELECT bucket_start, prev_role, next_role,
+                   count(*) AS n_transitions
+            FROM tagged WHERE prev_role IS NOT NULL
+            GROUP BY 1, 2, 3
+        """)
+def q_role_transitions(spark, sf_dir):
+    """Role-transition bigrams per day (conversation-flow analytics) on
+    events-as-transcripts: event_type handoffs within a user's stream."""
+    from mq_to_db_spark.operators.rollup import role_transitions
+
+    tr = _events(spark, sf_dir).select(
+        F.col("user_id").alias("conv_id"),
+        F.col("event_id").alias("turn_idx"),
+        F.col("event_type").alias("role"),
+        "ts",
+    )
+    return role_transitions(tr, tier="1d")
+
+
+@contract("""
+            WITH planted AS (
+                SELECT event_id, ts, event_type, value FROM events
+                UNION ALL
+                SELECT * FROM (VALUES
+                    (1000001, NULL::TIMESTAMP, 'click', 1.0),
+                    (1000002, TIMESTAMP '2024-01-01 00:00:00', 'bogus_type', 1.0),
+                    (1000003, TIMESTAMP '2024-01-01 00:00:00', 'view', -5.0))
+            )
+            SELECT CASE WHEN ts IS NULL THEN 'null_ts'
+                        WHEN event_type NOT IN ('click','error','purchase','signup','view')
+                             THEN 'unknown_type'
+                        WHEN value < 0 THEN 'negative_value'
+                        ELSE '(valid)' END AS reason,
+                   count(*) AS n
+            FROM planted GROUP BY 1
+        """)
+def q_validate_split(spark, sf_dir):
+    """Reject-routing truth table (A6/A10/B2): plant three invalid rows,
+    route by first-failing-reason, count per reason."""
+    ev = _events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
+    bad = spark.createDataFrame(
+        [
+            (1000001, None, "click", 1.0),
+            (1000002, "2024-01-01 00:00:00", "bogus_type", 1.0),
+            (1000003, "2024-01-01 00:00:00", "view", -5.0),
+        ],
+        "event_id long, ts string, event_type string, value double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    allr = ev.unionByName(bad)
+    reason = (
+        F.when(F.col("ts").isNull(), "null_ts")
+        .when(~F.col("event_type").isin(*_EVENT_TYPES), "unknown_type")
+        .when(F.col("value") < 0, "negative_value")
+        .otherwise("(valid)")
+    )
+    return allr.groupBy(reason.alias("reason")).agg(F.count(F.lit(1)).alias("n"))
+
+
+@contract("""
+            SELECT CAST(user_id AS VARCHAR) AS conv_id,
+                   count(*) AS n_points,
+                   round(sum(floor(value * 1e6)::BIGINT)::DOUBLE / 1e6, 6)
+                       AS value_sum,
+                   min(ts) AS ts_min,
+                   max(ts) AS ts_max
+            FROM events GROUP BY 1
+        """, headline=True)
+def q_codec_roundtrip_agg(spark, sf_dir):
+    """Gorilla codec end-to-end (C10): events → chunk-encode (dod ts +
+    XOR values + string/dict payloads) → decode → re-aggregate.  The
+    oracle aggregates the raw table directly — equality proves the codec
+    is lossless through the full Spark path."""
+    from mq_to_db_spark.operators.compression import decode_chunks, encode_chunks
+
+    tr = _events_as_transcripts(spark, sf_dir)
+    chunks = encode_chunks(tr, value_col="value", chunk_interval="1 day")
+    back = decode_chunks(chunks)
+    return back.groupBy("conv_id").agg(
+        F.count(F.lit(1)).alias("n_points"),
+        F.round(
+            F.sum(F.floor(F.col("value") * 1e6).cast("long")) / F.lit(1e6), 6
+        ).alias("value_sum"),
+        F.min("ts").alias("ts_min"),
+        F.max("ts").alias("ts_max"),
+    )
+
+
+@contract(f"""
+            SELECT md5({_NORM_SQL}) AS fp,
+                   min(doc_id) AS rep_id,
+                   count(*) AS dup_count
+            FROM documents GROUP BY 1
+        """, headline=True)
+def q_dedup_exact(spark, sf_dir):
+    from mq_to_db_spark.functions.text import fingerprint_md5
+
+    return (
+        _docs(spark, sf_dir)
+        .withColumn("fp", fingerprint_md5("text"))
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("rep_id"), F.count(F.lit(1)).alias("dup_count"))
+    )
+
+
+@contract(f"""
+            WITH norm AS (
+                SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
+                FROM documents
+            ),
+            sh AS (
+                SELECT doc_id,
+                       CASE WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
+                            ELSE list_distinct([array_to_string(words[i:i+2], ' ')
+                                  for i in range(1, len(words) - 1)])
+                       END AS shingles
+                FROM norm
+            ),
+            posting AS (
+                SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
+                FROM sh
+            ),
+            shared AS (
+                SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                       a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
+                FROM posting a JOIN posting b USING (shingle)
+                WHERE a.doc_id < b.doc_id
+                GROUP BY 1, 2, 3, 4
+            )
+            SELECT id_a, id_b,
+                   round(inter / (na + nb - inter), 6) AS jaccard
+            FROM shared
+            WHERE inter / (na + nb - inter) >= 0.15
+        """)
+def q_ngram_jaccard(spark, sf_dir):
+    from mq_to_db_spark.operators.dedup import ngram_jaccard_pairs
+
+    pairs = ngram_jaccard_pairs(
+        _docs(spark, sf_dir), "doc_id", "text", shingle_n=3, threshold=0.15,
+        max_doc_freq=100000,
+    )
+    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+@contract("""
+            SELECT doc_id,
+                   CASE WHEN text IS NULL OR trim(text) = '' THEN 0
+                        ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_ws,
+                   len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
+                   len(regexp_extract_all(text, '[0-9]')) AS n_digits,
+                   len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
+            FROM documents
+        """)
+def q_token_counts(spark, sf_dir):
+    from mq_to_db_spark.functions.text import token_count_ws
+
+    d = _docs(spark, sf_dir)
+    return d.select(
+        "doc_id",
+        token_count_ws("text").alias("n_ws"),
+        F.coalesce(F.regexp_count("text", F.lit(r"[A-Za-z]+")), F.lit(0)).cast("long").alias("n_words"),
+        F.coalesce(F.regexp_count("text", F.lit(r"[0-9]")), F.lit(0)).cast("long").alias("n_digits"),
+        F.coalesce(F.regexp_count("text", F.lit(r"[^\w\s]")), F.lit(0)).cast("long").alias("n_punct"),
+    )
+
+
+@contract(r"""
+            WITH f AS (
+                SELECT doc_id, text,
+                       coalesce(length(text), 0) AS q_len,
+                       CASE WHEN text IS NULL OR trim(text) = '' THEN 0
+                            ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
+                       len(regexp_extract_all(text, '[^\w\s]')) AS n_punct,
+                       len(regexp_extract_all(lower(text),
+                           '\b(the|and|of|to|is|in|that|it|for|was)\b')) AS h_en,
+                       len(regexp_extract_all(lower(text),
+                           '\b(der|die|und|das|ist|nicht|ein|mit|für|auf)\b')) AS h_de,
+                       len(regexp_extract_all(lower(text),
+                           '\b(le|la|les|et|est|pas|pour|que|une|dans)\b')) AS h_fr,
+                       len(regexp_extract_all(lower(text),
+                           '\b(el|la|los|que|de|es|en|un|una|por)\b')) AS h_es
+                FROM documents
+            )
+            SELECT doc_id,
+                   CASE WHEN text IS NULL OR n_tokens = 0 THEN 'unknown'
+                        WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'unknown'
+                        WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
+                        WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
+                        WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
+                        ELSE 'es' END AS lang_pred,
+                   q_len,
+                   round(n_punct / greatest(q_len, 1), 6) AS q_punct_ratio,
+                   round(h_en / greatest(n_tokens, 1), 6) AS q_stopword_ratio
+            FROM f
+        """)
+def q_lang_quality(spark, sf_dir):
+    from mq_to_db_spark.functions.text import lang_id, quality_features
+
+    d = _docs(spark, sf_dir)
+    f = quality_features("text")
+    return d.select(
+        "doc_id",
+        lang_id("text").alias("lang_pred"),
+        f["q_len"].cast("long").alias("q_len"),
+        F.round(f["q_punct_ratio"], 6).alias("q_punct_ratio"),
+        F.round(f["q_stopword_ratio"], 6).alias("q_stopword_ratio"),
+    )
+
+
+@contract(f"""
+            WITH kept AS (
+                SELECT doc_id, text,
+                       coalesce(length(text), 0) AS q_len,
+                       len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
+                FROM documents
+                WHERE coalesce(length(text), 0) >= 30
+                  AND len(regexp_extract_all(text, '[^\\w\\s]'))
+                      / greatest(coalesce(length(text), 0), 1) <= 0.2
+            ),
+            deduped AS (
+                SELECT md5({_NORM_SQL}) AS fp,
+                       min(doc_id) AS doc_id,
+                       arg_min(text, doc_id) AS text
+                FROM kept GROUP BY 1
+            ),
+            langed AS (
+                SELECT text,
+                       CASE WHEN text IS NULL OR (CASE WHEN trim(text) = '' THEN 0
+                                 ELSE len(string_split_regex(trim(text), '\\s+')) END) = 0
+                                 THEN 'unknown'
+                            WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'unknown'
+                            WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
+                            WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
+                            WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
+                            ELSE 'es' END AS lang
+                FROM (
+                    SELECT text,
+                           len(regexp_extract_all(lower(text),
+                               '\\b(the|and|of|to|is|in|that|it|for|was)\\b')) AS h_en,
+                           len(regexp_extract_all(lower(text),
+                               '\\b(der|die|und|das|ist|nicht|ein|mit|für|auf)\\b')) AS h_de,
+                           len(regexp_extract_all(lower(text),
+                               '\\b(le|la|les|et|est|pas|pour|que|une|dans)\\b')) AS h_fr,
+                           len(regexp_extract_all(lower(text),
+                               '\\b(el|la|los|que|de|es|en|un|una|por)\\b')) AS h_es
+                    FROM deduped)
+            )
+            SELECT lang, count(*) AS n_docs,
+                   CAST(sum(length(text)) AS BIGINT) AS total_chars
+            FROM langed GROUP BY 1
+        """)
+def q_curation_pipeline(spark, sf_dir):
+    """Composite training-data curation: quality-filter → exact dedup →
+    per-language corpus stats — the operators composing the way a real
+    cleaning pipeline chains them (filter before dedup so the groupBy
+    shuffles only survivors)."""
+    from mq_to_db_spark.functions.text import (
+        fingerprint_md5,
+        lang_id,
+        quality_features,
+    )
+
+    d = _docs(spark, sf_dir)
+    f = quality_features("text")
+    kept = d.filter(
+        (f["q_len"] >= 30) & (f["q_punct_ratio"] <= 0.2)
+    )
+    deduped = (
+        kept.withColumn("fp", fingerprint_md5("text"))
+        .groupBy("fp")
+        # min_by: the representative's own text (first() would be
+        # nondeterministic — duplicates share *normalized* text only)
+        .agg(F.min("doc_id").alias("doc_id"), F.min_by("text", "doc_id").alias("text"))
+    )
+    return (
+        deduped.withColumn("lang", lang_id("text"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.length("text")).alias("total_chars"),
+        )
+    )
+
+
+@contract("""
+            SELECT vec_id,
+                   round(list_cosine_similarity(embedding::DOUBLE[],
+                       (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)), 5)
+                       AS cosine_r
+            FROM embeddings
+            ORDER BY list_cosine_similarity(embedding::DOUBLE[],
+                       (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0))
+                     DESC, vec_id
+            LIMIT 10
+        """, headline=True)
+def q_ann_cosine_topk(spark, sf_dir):
+    from mq_to_db_spark.operators.similarity import cosine_topk
+
+    emb = _emb(spark, sf_dir)
+    qv = emb.filter("vec_id = 0").collect()[0].embedding
+    top = cosine_topk(emb, list(qv), k=10)
+    return top.select("vec_id", F.round("cosine", 5).alias("cosine_r"))
+
+
+@contract(
+    """
+            WITH scored AS (
+                SELECT l.vec_id AS lid, r.vec_id AS rid,
+                       list_cosine_similarity(l.embedding::DOUBLE[],
+                                              r.embedding::DOUBLE[]) AS cos
+                FROM embeddings l CROSS JOIN embeddings r
+                WHERE l.vec_id < 10
+            ),
+            ranked AS (
+                SELECT lid, rid, cos,
+                       row_number() OVER (PARTITION BY lid
+                                          ORDER BY cos DESC, rid) AS rank
+                FROM scored
+            )
+            SELECT lid, rid, round(cos, 5) AS cosine_r, rank
+            FROM ranked WHERE rank <= 3
         """,
-    }
+    # similarity.py:229 — knn_join_brute is the documented small-right
+    # broadcast baseline (the scale path is knn_join_lsh, banded equi)
+    plan_allows=("BroadcastNestedLoopJoin",),
+)
+def q_knn_join(spark, sf_dir):
+    from mq_to_db_spark.operators.similarity import knn_join_brute
+
+    emb = _emb(spark, sf_dir)
+    left = emb.filter("vec_id < 10").select(F.col("vec_id").alias("id_l"), "embedding")
+    right = emb.select(F.col("vec_id").alias("id_r"), "embedding")
+    knn = knn_join_brute(left, right, k=3)
+    return knn.select("lid", "rid", F.round("cosine", 5).alias("cosine_r"), "rank")
+
+
+# minhash: LSH banding has no false negatives at the fixture's
+# operating point (true pairs all at J ≥ 0.9; see q_minhash_pairs),
+# so verified candidates == the exact J ≥ 0.3 pair set.
+@contract(f"""
+            WITH norm AS (
+                SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
+                FROM documents
+            ),
+            sh AS (
+                SELECT doc_id,
+                       CASE WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
+                            ELSE list_distinct([array_to_string(words[i:i+2], ' ')
+                                  for i in range(1, len(words) - 1)])
+                       END AS shingles
+                FROM norm
+            ),
+            posting AS (
+                SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
+                FROM sh
+            ),
+            shared AS (
+                SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                       a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
+                FROM posting a JOIN posting b USING (shingle)
+                WHERE a.doc_id < b.doc_id
+                GROUP BY 1, 2, 3, 4
+            )
+            SELECT id_a, id_b,
+                   round(inter / (na + nb - inter), 6) AS jaccard
+            FROM shared
+            WHERE inter / (na + nb - inter) >= 0.3
+        """, headline=True)
+def q_minhash_pairs(spark, sf_dir):
+    """MinHash-LSH candidate pairs + exact-Jaccard verification at 0.3.
+    Banding (8 bands × 4 rows) has no false negatives at the fixture's
+    operating point (all true pairs sit at J ≥ 0.9, miss prob ≤ 2e-4
+    each and deterministic under the fixed seeds), so the verified
+    output equals the exact J ≥ 0.3 pair set the oracle computes."""
+    from mq_to_db_spark.operators.dedup import minhash_lsh_pairs
+
+    return minhash_lsh_pairs(
+        _docs(spark, sf_dir), "doc_id", "text", verify_threshold=0.3
+    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+# simhash: md5-derived word hashes → DuckDB recomputes the exact
+# 60-bit signatures; the O(n²) hamming join is exact at test scale
+# (the Spark side's pigeonhole banding is exact for hamming ≤ 3).
+@contract(f"""
+            WITH norm AS (
+                SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
+                FROM documents WHERE length({_NORM_SQL}) > 0
+            ),
+            w AS (SELECT doc_id, unnest(words) AS w FROM norm),
+            hw AS (
+                SELECT doc_id,
+                       ('0x' || substring(md5(w), 1, 15))::BIGINT AS h
+                FROM w
+            ),
+            bits AS (
+                SELECT doc_id, b.bitpos,
+                       sum(CASE WHEN (h >> b.bitpos) & 1 = 1 THEN 1 ELSE -1 END) AS vote
+                FROM hw CROSS JOIN (SELECT unnest(range(60)) AS bitpos) b
+                GROUP BY 1, 2
+            ),
+            sigs AS (
+                SELECT doc_id,
+                       CAST(sum(CASE WHEN vote >= 0
+                                     THEN (1::BIGINT << bitpos) ELSE 0 END)
+                            AS BIGINT) AS sig
+                FROM bits GROUP BY 1
+            )
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
+            FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
+            WHERE bit_count(xor(a.sig, b.sig)) <= 3
+        """)
+def q_simhash_pairs(spark, sf_dir):
+    """SimHash pairs at hamming ≤ 3 — pigeonhole banding on 4×15-bit
+    chunks is *exact* at that distance, and the md5-word-hash signature
+    is engine-reproducible, so the O(n²) DuckDB hamming join is an exact
+    oracle."""
+    from mq_to_db_spark.operators.dedup import simhash_pairs
+
+    return simhash_pairs(_docs(spark, sf_dir), "doc_id", "text", max_hamming=3)
+
+
+def _ann_lsh_oracle() -> str:
+    """DuckDB replay of the full hyperplane-LSH algorithm: the seeded
+    plane weights are embedded as literals (identical doubles on both
+    engines), signatures use the same left-associated dot sums, the
+    probe set is the same XOR-mask family, and candidates are re-ranked
+    by exact cosine — so the oracle verifies the approximation itself,
+    not a weaker recall proxy."""
+    from mq_to_db_spark.operators.similarity import hyperplane_planes, lsh_probe_masks
+
+    p = ANN_LSH_PARAMS
+    n = p["n_planes"]
+    planes = hyperplane_planes(n, EMB_DIM, p["seed"])
+    sig_terms = []
+    for pi in range(n):
+        dot = " + ".join(f"v[{i + 1}]*{float(w)!r}" for i, w in enumerate(planes[pi]))
+        sig_terms.append(f"(CASE WHEN ({dot}) >= 0 THEN {1 << (n - 1 - pi)} ELSE 0 END)")
+    sig_expr = "\n                 + ".join(sig_terms)
+    masks = ", ".join(str(m) for m in lsh_probe_masks(n, p["multiprobe"]))
+    return f"""
+        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        sigs AS (SELECT vec_id, v, ({sig_expr}) AS sig FROM e),
+        q AS (SELECT v AS qv, sig AS qsig FROM sigs WHERE vec_id = {p["query_id"]}),
+        cand AS (
+            SELECT s.vec_id, list_cosine_similarity(s.v, q.qv) AS cos
+            FROM sigs s, q
+            WHERE xor(s.sig::BIGINT, q.qsig::BIGINT) IN ({masks}))
+        SELECT vec_id, round(cos, 5) AS cosine_r
+        FROM cand ORDER BY cos DESC, vec_id LIMIT {p["k"]}
+    """
+
+
+@contract(_ann_lsh_oracle)
+def q_ann_lsh(spark, sf_dir):
+    from mq_to_db_spark.operators.similarity import ann_lsh_topk
+
+    p = ANN_LSH_PARAMS
+    emb = _emb(spark, sf_dir)
+    qv = emb.filter(f"vec_id = {p['query_id']}").collect()[0].embedding
+    return ann_lsh_topk(
+        emb, list(qv), k=p["k"], n_planes=p["n_planes"],
+        multiprobe=p["multiprobe"], seed=p["seed"],
+    ).select("vec_id", F.round("cosine", 5).alias("cosine_r"))
+
+
+# DuckDB replay of the full IVF algorithm: md5-rank centroid
+# selection, max-cosine assignment with the same lid tie-break, the
+# same nprobe list ranking, exact re-rank within probed lists
+@contract(f"""
+        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        cent AS (
+            SELECT cv, rn - 1 AS lid FROM (
+                SELECT v AS cv, row_number() OVER (
+                    ORDER BY ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
+                             vec_id) AS rn
+                FROM e)
+            WHERE rn <= {ANN_IVF_PARAMS["n_centroids"]}),
+        assign AS (
+            SELECT vec_id, v, lid FROM (
+                SELECT e.vec_id, e.v, c.lid,
+                       row_number() OVER (PARTITION BY e.vec_id
+                           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.lid DESC) AS rn
+                FROM e CROSS JOIN cent c)
+            WHERE rn = 1),
+        q AS (SELECT v AS qv FROM e WHERE vec_id = {ANN_IVF_PARAMS["query_id"]}),
+        probes AS (
+            SELECT lid FROM (
+                SELECT c.lid, row_number() OVER (
+                    ORDER BY list_cosine_similarity(c.cv, (SELECT qv FROM q)) DESC,
+                             c.lid) AS rn
+                FROM cent c)
+            WHERE rn <= {ANN_IVF_PARAMS["nprobe"]}),
+        cand AS (
+            SELECT a.vec_id, list_cosine_similarity(a.v, (SELECT qv FROM q)) AS cos
+            FROM assign a JOIN probes pr USING (lid))
+        SELECT vec_id, round(cos, 5) AS cosine_r
+        FROM cand ORDER BY cos DESC, vec_id LIMIT {ANN_IVF_PARAMS["k"]}
+    """)
+def q_ann_ivf(spark, sf_dir):
+    from mq_to_db_spark.operators.similarity import ivf_topk
+
+    p = ANN_IVF_PARAMS
+    emb = _emb(spark, sf_dir)
+    qv = emb.filter(f"vec_id = {p['query_id']}").collect()[0].embedding
+    return ivf_topk(
+        emb, list(qv), k=p["k"], n_centroids=p["n_centroids"], nprobe=p["nprobe"]
+    ).select("vec_id", F.round("cosine", 5).alias("cosine_r"))
+
+
+@contract(r"""
+            WITH t AS (
+                SELECT ts,
+                       CAST(coalesce(length(props), 0) AS BIGINT) AS text_len,
+                       CASE WHEN props IS NULL OR trim(props) = '' THEN 0
+                            ELSE len(regexp_extract_all(trim(props), '\s+')) + 1
+                       END AS token_count,
+                       event_type AS role
+                FROM events
+            ),
+            hourly AS (
+                SELECT date_trunc('hour', ts) AS bucket_start,
+                       CAST(count(*) AS BIGINT) AS n_turns,
+                       CAST(sum(text_len) AS BIGINT) AS text_len_sum,
+                       CAST(min(text_len) AS BIGINT) AS text_len_min,
+                       CAST(max(text_len) AS BIGINT) AS text_len_max,
+                       CAST(sum(text_len * text_len) AS BIGINT) AS text_len_sumsq,
+                       CAST(sum(token_count) AS BIGINT) AS token_sum,
+                       CAST(count(*) FILTER (WHERE role = 'user') AS BIGINT) AS n_user,
+                       CAST(count(*) FILTER (WHERE role = 'assistant') AS BIGINT) AS n_assistant,
+                       CAST(count(*) FILTER (WHERE role = 'system') AS BIGINT) AS n_system,
+                       CAST(count(*) FILTER (WHERE role = 'tool') AS BIGINT) AS n_tool
+                FROM t GROUP BY 1
+            ),
+            extent AS (SELECT min(bucket_start) AS lo, max(bucket_start) AS hi FROM hourly),
+            grid AS (
+                SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket_start
+                FROM extent
+            )
+            SELECT g.bucket_start,
+                   coalesce(h.n_turns, 0) AS n_turns,
+                   coalesce(h.text_len_sum, 0) AS text_len_sum,
+                   h.text_len_min,
+                   h.text_len_max,
+                   h.text_len_sumsq,
+                   coalesce(h.token_sum, 0) AS token_sum,
+                   coalesce(h.n_user, 0) AS n_user,
+                   coalesce(h.n_assistant, 0) AS n_assistant,
+                   coalesce(h.n_system, 0) AS n_system,
+                   coalesce(h.n_tool, 0) AS n_tool
+            FROM grid g LEFT JOIN hourly h USING (bucket_start)
+        """)
+def q_transcript_pipeline(spark, sf_dir):
+    """Full engine pipeline on events-as-transcripts: tier cascade →
+    gap-filled 1h global rollup, hash-checked exactly against the
+    equivalent SQL cascade (CORRECTNESS_r02: exact match)."""
+    from mq_to_db_spark.operators.rollup import rollup_tiers
+
+    from mq_to_db_spark.operators.gapfill import gapfill
+
+    tr = _events_as_transcripts(spark, sf_dir)
+    tiers = rollup_tiers(tr.drop("value"), keys=[])
+    return gapfill(tiers["1h"], "1h", policy="zero")

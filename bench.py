@@ -60,20 +60,17 @@ SMALL_INPUT_CONF = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2m",
 }
 
-#: the round-2 headline set — FROZEN (comparability across rounds).
-#: 3 macro pipeline sections + 9 driver-table queries.  Every other
-#: registered query is timed the same way under ``extended_queries``.
-HEADLINE_QUERIES = (
-    "rollup_1h_value_stats",
-    "rollup_1d_cascade",
-    "gapfill_1h",
-    "percentile_1h",
-    "gauge_last_1h",
-    "codec_roundtrip_agg",
-    "dedup_exact",
-    "minhash_pairs",
-    "ann_cosine_topk",
-)
+
+def headline_queries() -> list[str]:
+    """The round-2 headline set, FROZEN (comparability across rounds): the
+    contract queries registered with ``headline=True``, in registration
+    order.  With the 3 macro pipeline sections that makes the 12 headline
+    timings; every other registered query is timed the same way under
+    ``extended_queries``."""
+    import __spark_entry__ as entry
+
+    return [name for name, q in entry.CONTRACT.items() if q.headline]
+
 
 def _sf_of(sf_dir: str) -> float:
     name = os.path.basename(os.path.normpath(sf_dir))
@@ -233,8 +230,9 @@ def run(sf_dir: str = SF_DIR, cpus: int = CPUS, include_scaling_meta: bool = Tru
             spark.catalog.clearCache()  # timed run must recompute, not read caches
             timed(key, lambda n=name: _materialize(qs[n](spark, sf_dir)), into)
 
-    run_query_set(HEADLINE_QUERIES, timings)
-    run_query_set([n for n in qs if n not in HEADLINE_QUERIES], extended)
+    headline = headline_queries()
+    run_query_set(headline, timings)
+    run_query_set([n for n in qs if n not in headline], extended)
 
     rollup_sec = timings["rollup_cascade_3dim"]
     total = round(sum(timings.values()), 3)

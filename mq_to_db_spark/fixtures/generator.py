@@ -168,8 +168,13 @@ def inject_dirty_rows(pdf: pd.DataFrame, seed: int = 7) -> pd.DataFrame:
             "text": pd.array(["x", "y", "z", "w", "v", "dup"], dtype="string"),
             "tool": pd.array([None] * 6, dtype="string"),
             # the duplicate-key row is a *later* redelivery (ts + 1s) so
-            # first-delivery-wins dedup is deterministic
-            "ts": [base_ts, base_ts, base_ts, None, base_ts, base_ts + pd.Timedelta(seconds=1)],
+            # first-delivery-wins dedup is deterministic; the input's ts
+            # dtype is kept (a ns column would be written as
+            # TIMESTAMP(NANOS) parquet, which Spark refuses to read)
+            "ts": pd.Series(
+                [base_ts, base_ts, base_ts, None, base_ts, base_ts + pd.Timedelta(seconds=1)],
+                dtype=pdf["ts"].dtype,
+            ),
         }
     )
     out = pd.concat([pdf, bad], ignore_index=True)

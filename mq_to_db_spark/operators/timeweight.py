@@ -26,10 +26,18 @@ they carry full DuckDB oracles in the driver contract.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from mq_to_db_spark.operators.timegrid import epoch_us
+from mq_to_db_spark.operators.timegrid import duration_us, epoch_us, from_epoch_us, step_start
+
+
+def _bucket_start(df: DataFrame, ts_col: str, step_us: int) -> Column:
+    """The tumbling ``step_us`` bucket start of ``ts_col``, of the same
+    timestamp type as ``ts_col`` (a TIMESTAMP stays one, NTZ stays NTZ)."""
+    ltz = isinstance(df.schema[ts_col].dataType, T.TimestampType)
+    return from_epoch_us(step_start(epoch_us(F.col(ts_col)), step_us), ltz=ltz)
 
 
 def time_weighted_avg(
@@ -64,12 +72,16 @@ def time_weighted_avg(
     the last bit is not needed.
     """
     tiebreak = tiebreak or []
-    b = F.window(ts_col, bucket)["start"].alias("bucket_start")
-    tagged = df.select(*keys, F.col(ts_col), F.col(value_col), *tiebreak, b)
+    step = duration_us(bucket)
+    b = _bucket_start(df, ts_col, step).alias("bucket_start")
+    # a sample with no ts holds no time: dropped, not a NULL bucket
+    tagged = df.filter(F.col(ts_col).isNotNull()).select(
+        *keys, F.col(ts_col), F.col(value_col), *tiebreak, b
+    )
     w = W.partitionBy(*keys, "bucket_start").orderBy(ts_col, *tiebreak)
-    bucket_end = F.col("bucket_start") + F.expr(f"INTERVAL {bucket}")
-    hold_until = F.coalesce(F.lead(ts_col).over(w), bucket_end)
-    weight_us = epoch_us(hold_until) - epoch_us(F.col(ts_col))
+    bucket_end_us = epoch_us(F.col("bucket_start")) + F.lit(step)
+    hold_until_us = F.coalesce(epoch_us(F.lead(ts_col).over(w)), bucket_end_us)
+    weight_us = hold_until_us - epoch_us(F.col(ts_col))
     weighted = tagged.withColumn("_w_us", weight_us)
     v = F.col(value_col)
     if exact:
@@ -114,7 +126,7 @@ def state_durations(
     spans = df.withColumn("_dur_us", dur_us).filter(F.col("_dur_us").isNotNull())
     group = [state_col]
     if bucket is not None:
-        spans = spans.withColumn("bucket_start", F.window(ts_col, bucket)["start"])
+        spans = spans.withColumn("bucket_start", _bucket_start(df, ts_col, duration_us(bucket)))
         group = ["bucket_start", state_col]
     return spans.groupBy(*group).agg(
         F.count(F.lit(1)).alias("n_entries"),

@@ -376,13 +376,16 @@ class RollupPipeline:
             pending = tagged.filter(has_unit)
         else:
             # partly acked overwrite redelivery: a broadcast semi-join
-            # prunes the marked units before any shuffle
+            # prunes the marked units before any shuffle (the select keeps
+            # a first delivery's column order: USING moves the keys first)
             todo_df = local_frame(
                 spark,
                 [(b, dt.date.fromisoformat(d)) for b, d in sorted(todo)],
                 "conv_bucket int, date date",
             )
-            pending = tagged.join(F.broadcast(todo_df), ["conv_bucket", "date"], "left_semi")
+            pending = tagged.join(
+                F.broadcast(todo_df), ["conv_bucket", "date"], "left_semi"
+            ).select(*tagged.columns)
 
         # Rows whose unit cols are null (null conv_id / null ts) are not in
         # `pending`; they belong to no unit but must still reach the dead

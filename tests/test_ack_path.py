@@ -11,6 +11,7 @@ import re
 import time
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -129,6 +130,34 @@ def test_partial_redelivery_writes_only_unmarked_units(spark, tmp_path, small_pd
         for pv in map(partition_values, snap.added_files)
     }
     assert units == unmarked
+
+
+def test_partial_redelivery_dead_letter_keeps_first_delivery_columns(
+    spark, tmp_path, small_pdf
+):
+    """A partly acked overwrite redelivery prunes its units with a
+    semi-join; its dead-letter files (and the manifest schema a read
+    uses) keep the column order of a first delivery's."""
+    pipe = RollupPipeline(str(tmp_path / "wh"), CFG)
+    dirty = spark.createDataFrame(inject_dirty_rows(small_pdf), schema=TRANSCRIPT_SCHEMA)
+    half = unit_cols(dirty, CFG.conv_buckets).filter("conv_bucket < 4").drop("conv_bucket", "date")
+    pipe.run(spark, half, batch_id="b1")
+    v1 = pipe.dead_letter.current_version()
+    report = pipe.run(spark, dirty, batch_id="b2")
+    v2 = pipe.dead_letter.current_version()
+    assert 0 < report.n_units_skipped < report.n_units_total and v2 == v1 + 1
+
+    def columns(version):
+        snap = pipe.dead_letter.snapshot(version)
+        files = {
+            tuple(pq.read_schema(os.path.join(pipe.dead_letter.data_dir, f)).names)
+            for f in snap.added_files
+        }
+        assert len(files) == 1
+        return files.pop(), [f["name"] for f in snap.schema["fields"]]
+
+    assert columns(v2) == columns(v1)
+    assert pipe.read_dead_letter(spark).columns == list(columns(v1)[0])
 
 
 @pytest.fixture()

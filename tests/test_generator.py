@@ -3,7 +3,11 @@
 import numpy as np
 import pandas as pd
 
-from mq_to_db_spark.fixtures.generator import generate_transcripts_pdf, inject_dirty_rows
+from mq_to_db_spark.fixtures.generator import (
+    generate_transcripts_pdf,
+    inject_dirty_rows,
+    write_transcripts_parquet,
+)
 
 
 def test_deterministic():
@@ -46,3 +50,13 @@ def test_dirty_rows_injected(transcripts_pdf):
     assert d["conv_id"].isna().any()
     assert (d["turn_idx"] < 0).any()
     assert d["ts"].isna().any()
+
+
+def test_dirty_parquet_reads_back_in_spark(spark, tmp_path):
+    """``dirty=True`` keeps the input's microsecond ``ts``: the file is not
+    TIMESTAMP(NANOS) parquet, which Spark refuses to read."""
+    path = str(tmp_path / "dirty.parquet")
+    pdf = write_transcripts_parquet(path, n_turns=1000, seed=3, dirty=True)
+    df = spark.read.parquet(path)
+    assert df.count() == len(pdf) == 1006
+    assert df.filter("ts IS NULL").count() == 1

@@ -132,6 +132,23 @@ def test_state_durations_excludes_open_state(spark):
     assert out["b"].duration_sec == pytest.approx(1800.0)
 
 
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_time_weight_buckets_keep_ts_type_and_drop_null_ts(spark, ts_type):
+    """Bucket starts are the tumbling step of the input's own timestamp
+    type; a NULL-ts sample holds no time and opens no bucket."""
+    rows = [("k", _ts(70), 1.0, 1), ("k", _ts(100), 3.0, 2), ("k", None, 5.0, 3)]
+    df = spark.createDataFrame(rows, "key string, ts timestamp, value double, i int")
+    df = df.withColumn("ts", F.col("ts").cast(ts_type))
+    twa = time_weighted_avg(df, ["key"], "ts", "value", "1 hour", tiebreak=["i"])
+    dur = state_durations(df, "key", "ts", "key", tiebreak=["i"], bucket="1 day")
+    for out in (twa, dur):
+        assert out.schema["bucket_start"].dataType.typeName() == df.schema["ts"].dataType.typeName()
+    (r,) = twa.collect()
+    assert (r.bucket_start, r.n_samples) == (_ts(60), 2)
+    assert r.twa == pytest.approx((1.0 * 30 + 3.0 * 20) / 50.0)
+    assert [(r.bucket_start, r.duration_sec) for r in dur.collect()] == [(T0, 1800.0)]
+
+
 def test_state_durations_bucketed_by_start(spark):
     # state entered at 23:50 day 0, next event 00:10 day 1 → all 20 min on day 0
     rows = [(1, _ts(23 * 60 + 50), "x", 1), (1, _ts(24 * 60 + 10), "y", 2)]
