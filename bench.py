@@ -22,7 +22,7 @@ every level of the scaling comparison) reads identical bytes.  Results are
 materialized with the ``noop`` sink — executor-side full materialization,
 no driver collect.  The 32M-turn run (``scale_32m``) and the live N→4N
 scaling pairs (``scaling``) are measured in their own JVMs per run — a
-Spark master is fixed per session.
+Spark master is fixed per session — before the headline session opens.
 
 Host honesty: this sandbox tariffs first-touch page-commit ~50-100×
 (BENCH/PROFILE.md §6) — every JVM here launches with ``-Xms=-Xmx
@@ -124,6 +124,11 @@ def run(sf_dir: str = SF_DIR, cpus: int = CPUS, include_scaling_meta: bool = Tru
 
     sf = _sf_of(sf_dir)
     tr_path = ensure_transcripts(sf)
+
+    # Each scale worker starts its own pretouched heap, so run them while
+    # this process holds no JVM: ``spark.stop()`` leaves the driver JVM
+    # resident, and two 8 GiB heaps do not fit a 15 GiB host.
+    scale = _scale_meta(cpus) if include_scaling_meta else {}
 
     spark = get_spark(
         app_name=f"bench-local{cpus}",
@@ -253,8 +258,7 @@ def run(sf_dir: str = SF_DIR, cpus: int = CPUS, include_scaling_meta: bool = Tru
     if section_probes:
         result["section_probes"] = section_probes
     spark.stop()
-    if include_scaling_meta:
-        result.update(_scale_meta(cpus))
+    result.update(scale)
     # environment self-documentation: a page-commit-throttled host inflates
     # allocation-heavy phases 3-30x with no steal/idle signal — stamp
     # every bench JSON with before/after probes so readers can tell plan

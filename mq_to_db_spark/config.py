@@ -11,8 +11,9 @@ from dataclasses import dataclass
 
 
 #: Retention tiers, ordered fine → coarse.  Each tier is (name, spark
-#: interval literal, seconds, ``date_trunc`` unit).  The cascade
-#: materializes 1m from raw, 1h from 1m, 1d from 1h (SURVEY.md §2 C8).
+#: interval literal, seconds, ``date_trunc`` unit).  The pipeline builds
+#: every tier from raw in one grouping-sets aggregation; ``rollup_tiers``
+#: cascades 1m from raw, 1h from 1m, 1d from 1h (SURVEY.md §2 C8).
 TIERS: tuple[tuple[str, str, int, str], ...] = (
     ("1m", "1 minute", 60, "minute"),
     ("1h", "1 hour", 3600, "hour"),

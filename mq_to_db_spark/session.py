@@ -20,7 +20,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
-    pretouch: bool | None = None,
+    pretouch: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the rollup workload.
 
@@ -29,9 +29,10 @@ def get_spark(
     AQE + skew join on, Arrow on (every pandas UDF crossing is
     Arrow-batched; no per-row Python anywhere in the engine).
 
-    ``pretouch=True`` (or env ``SPARK_GRAFT_PRETOUCH=1``) launches the
-    JVM with ``-Xms=<driver mem> -XX:+AlwaysPreTouch``: the whole heap is
-    committed and first-touched at startup and G1 never uncommits it.
+    ``pretouch=True`` launches the JVM with ``-Xms=<driver mem>
+    -XX:+AlwaysPreTouch`` (driver mem: ``$SPARK_GRAFT_DRIVER_MEM``, default
+    8g): the whole heap is committed and first-touched at startup and G1
+    never uncommits it.
     On hosts that throttle page-commit (memory-overcommitted VMs — this
     sandbox tariffs first-touch ~50-100× while re-use runs at full
     speed, BENCH/PROFILE.md §6) an untouched heap turns every
@@ -49,8 +50,6 @@ def get_spark(
         cpus_str = master[master.index("[") + 1 : -1] if "[" in master else "*"
         shuffle_partitions = os.cpu_count() if cpus_str == "*" else int(cpus_str)
 
-    if pretouch is None:
-        pretouch = os.environ.get("SPARK_GRAFT_PRETOUCH", "") == "1"
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
     # Ship the package to executor Python workers — the local-mode analogue

@@ -18,7 +18,10 @@ Semantics match the batch islands for in-order delivery; out-of-order
 turns within a batch are sorted before folding, late turns across batches
 (earlier than the open session's last ts) count into the open session —
 the documented stream-vs-batch divergence (same family as the watermark
-drop in streaming/stream.py).
+drop of streaming/stream.py ``streaming_sliding_rollup``).
+
+Durations (``gap``, ``for_duration``) are the engine's fixed-width
+``"<n> <unit>"`` strings, parsed by ``timegrid.duration_us``.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import col as F_col
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from mq_to_db_spark.operators.timegrid import duration_us
 
 SESSION_SCHEMA = (
     "conv_id string, session_start timestamp, session_end timestamp, "
@@ -106,15 +111,10 @@ def streaming_sessionize(
 ) -> DataFrame:
     """Unbounded-stream sessionization: one output row per CLOSED session
     (append-mode friendly), state bounded by active conversations."""
-    # pandas parses the same interval vocabulary Spark does ("30 minutes",
-    # "1 day", "90 seconds", ...) — keeps this operator's gap strings
-    # interchangeable with the batch sessionizer's
     try:
-        gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
+        gap_us = duration_us(gap)
     except ValueError as exc:
         raise ValueError(f"unparseable gap interval {gap!r}") from exc
-    if gap_us <= 0:
-        raise ValueError(f"gap must be positive, got {gap!r}")
 
     def fold(key_, pdfs, state):
         yield from _fold_sessions(key_, pdfs, state, gap_us, idle_timeout)
@@ -238,11 +238,9 @@ def streaming_alerts(
     per-series ts is assumed non-decreasing across batches (the
     transcript/metrics delivery order)."""
     try:
-        for_us = int(pd.Timedelta(for_duration).total_seconds() * 1_000_000)
+        for_us = duration_us(for_duration)
     except ValueError as exc:
         raise ValueError(f"unparseable for_duration {for_duration!r}") from exc
-    if for_us < 0:
-        raise ValueError(f"for_duration must be >= 0, got {for_duration!r}")
 
     def fold(key_, pdfs, state):
         yield from _fold_alerts(key_, pdfs, state, int(threshold), for_us)

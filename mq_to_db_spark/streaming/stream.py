@@ -1,23 +1,26 @@
-"""Structured Streaming variant of the rollup pipeline.
+"""Structured Streaming ingest: every stream runs the rollup pipeline.
 
-The engine's primary mode is batch-incremental over snapshot ranges
-(SURVEY.md §7 — late rows land in the next batch and MERGE idempotently),
-but the reference is genuinely a *streaming* consumer
-(/root/reference/internal/consumer/rmq/rmq.go:170-217: unbounded AMQP
-delivery channel), so the stream-native expression of the same rollup is
-provided too:
+The reference is a streaming consumer (internal/consumer/rmq/rmq.go:170-217,
+an unbounded AMQP delivery channel) that acks a delivery only after the
+store succeeds and dead-letters what it rejects
+(internal/repository/messages.go:131-148).  Here that loop has one form:
+each micro-batch of delivered turns runs the complete
+:class:`~mq_to_db_spark.plans.pipeline.RollupPipeline` batch in
+``mode="append"`` — validate, dead letter, every tier, lineage and
+``job_metrics`` (the ack) — from a ``foreachBatch`` sink.  Two sources
+feed it:
 
   * file-source ``readStream`` over a transcript directory = the queue
-    subscription (new files = new deliveries; ``maxFilesPerTrigger`` = the
-    prefetch window, rmq.go:120-124);
-  * watermarked tumbling-window aggregation = the 1m tier with bounded
-    state (late turns beyond the watermark are dropped — the streaming
-    trade-off the batch path avoids);
-  * ``foreachBatch`` sink writing through the same TableIO = ack-after-
-    durable-store (checkpointLocation gives exactly-once sink commits the
-    way the broker ack + idempotent store does for the reference);
-  * ``trigger(availableNow=True)`` = drain-the-queue-and-stop, which is
-    also how the tests run deterministically.
+    as a spool directory (new files = new deliveries;
+    ``maxFilesPerTrigger`` = the prefetch window, rmq.go:120-124);
+    ``trigger(availableNow=True)`` drains it and stops, which is also
+    how the tests run deterministically;
+  * the ``rate-micro-batch`` source = a live subscription with no files.
+
+Late turns are never dropped: a turn for a bucket an earlier micro-batch
+committed lands as another appended partial that ``read_rollup`` merges.
+The streaming checkpoint records which deliveries arrived, the
+per-batch ack which work was committed: effectively-once end to end.
 """
 
 from __future__ import annotations
@@ -25,9 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mq_to_db_spark.config import TIER_INTERVAL
 from mq_to_db_spark.fixtures.generator import TRANSCRIPT_SCHEMA
-from mq_to_db_spark.operators.rollup import _partial_aggs, with_text_stats
+from mq_to_db_spark.operators.rollup import with_text_stats
 
 
 def read_transcript_stream(
@@ -43,91 +45,28 @@ def read_transcript_stream(
     return reader.parquet(path)
 
 
-def streaming_rollup(
+def _start_pipeline(
     stream: DataFrame,
-    tier: str = "1m",
-    keys: list[str] | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked tumbling-window rollup with the same aggregate set as
-    the batch tier tables (re-aggregable stats)."""
-    keys = list(keys or [])
-    prepped = with_text_stats(stream).withWatermark("ts", watermark)
-    win = F.window("ts", TIER_INTERVAL[tier])
-    return (
-        prepped.groupBy(win.alias("w"), *keys)
-        .agg(*_partial_aggs())
-        .withColumn("bucket_start", F.col("w.start"))
-        .drop("w")
-    )
-
-
-def run_stream_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
     checkpoint_path: str,
-    tier: str = "1m",
-    keys: list[str] | None = None,
-    available_now: bool = True,
-    watermark: str = "10 minutes",
+    pipeline,
+    prefix: str,
+    available_now: bool,
+    finalize_every_n_batches: int | None = None,
+    max_batches: int | None = None,
+    to_driver: bool = False,
 ):
-    """Drain the input directory into a parquet rollup table with
-    exactly-once sink semantics (checkpointed).  Returns the query object
-    (caller awaits termination).
-
-    Append-mode caveat (inherent to watermarked streaming): windows whose
-    end exceeds the final watermark stay in state unemitted; the batch-
-    incremental path (plans.pipeline) has no such tail because late rows
-    MERGE into their bucket on the next batch."""
-    rollup = streaming_rollup(
-        read_transcript_stream(spark, input_path), tier, keys, watermark=watermark
-    )
-    writer = (
-        rollup.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def run_stream_foreach_batch(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    batch_fn,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Micro-batch hook: each batch of raw turns is handed to ``batch_fn
-    (df, batch_id)`` — the seam where the full batch pipeline (validate →
-    tier cascade → TableIO commit) runs per micro-batch, reusing all the
-    batch operators verbatim."""
-    stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _pipeline_batch(
-    pipeline, prefix, finalize_every_n_batches=None, max_batches=None, to_driver=False
-):
-    """The ``foreachBatch`` body both pipeline streams share: micro-batch
-    ``k`` runs ``pipeline.run(mode="append")`` as batch
-    ``f"{prefix}-{k:06d}"`` — Spark's ``batch_id`` is stable across
-    retries, so a recovery replay carries the same id and is a no-op once
-    acked — then, every ``finalize_every_n_batches``-th micro-batch,
-    :meth:`finalize`.  Micro-batches with id ≥ ``max_batches`` are
-    delivered but not processed.  ``to_driver`` first brings the batch's
-    rows to the driver as Arrow (one job): a source whose scan reports no
-    size (the rate source) then reads as a ``LocalRelation`` of known
-    size, so its commits stage through Arrow like a file source's."""
+    """Start ``stream`` into ``pipeline``, the writer both pipeline
+    streams share: micro-batch ``k`` runs ``pipeline.run(mode="append")``
+    as batch ``f"{prefix}-{k:06d}"`` — Spark's ``batch_id`` is stable
+    across retries, so a recovery replay carries the same id and is a
+    no-op once acked — then, every ``finalize_every_n_batches``-th
+    micro-batch, :meth:`finalize`.  Micro-batches with id ≥
+    ``max_batches`` are delivered but not processed.  ``to_driver`` first
+    brings the batch's rows to the driver as Arrow (one job): a source
+    whose scan reports no size (the rate source) then reads as a
+    ``LocalRelation`` of known size, so its commits stage through Arrow
+    like a file source's.  ``available_now`` drains what is there and
+    stops; otherwise micro-batches run back to back until stopped."""
 
     def _batch(df, batch_id):
         k = int(batch_id)
@@ -139,7 +78,13 @@ def _pipeline_batch(
         if finalize_every_n_batches and (k + 1) % finalize_every_n_batches == 0:
             pipeline.finalize(df.sparkSession)
 
-    return _batch
+    trigger = {"availableNow": True} if available_now else {"processingTime": "0 seconds"}
+    return (
+        stream.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(**trigger)
+        .start()
+    )
 
 
 def run_streaming_pipeline(
@@ -151,20 +96,19 @@ def run_streaming_pipeline(
     max_files_per_trigger: int | None = None,
     finalize_every_n_batches: int | None = None,
 ):
-    """The reference's full ingest loop in streaming form: each
-    micro-batch of delivered turns runs the COMPLETE RollupPipeline batch
-    — validate → dead-letter → tier cascade → lineage/metrics (the ack)
-    — in ``mode="append"`` (per-batch partials, one ack per batch), so
+    """The reference's full ingest loop over a spool directory: each
+    micro-batch of delivered turns runs the complete RollupPipeline
+    batch — validate → dead letter → every tier from one grouping-sets
+    aggregation → lineage/metrics (the ack) — in ``mode="append"``
+    (per-batch partials, one ack per batch), so
 
       * a micro-batch replayed on recovery is a no-op (its ``job_metrics``
         commit already holds its batch id; Spark's foreachBatch batch_id
         is stable across retries),
-      * a unit whose turns span micro-batches accumulates appended
+      * a unit whose turns span micro-batches, or a late turn for a
+        bucket an earlier micro-batch committed, accumulates appended
         partials that the read-side merge (``read_rollup``) finalizes
-        exactly — no late-data loss to the batch mode's global unit skip.
-
-    Effectively-once end to end: streaming-source checkpoint (which files
-    were delivered) × per-batch acks (which work was committed).
+        exactly — no late-data loss.
 
     ``finalize_every_n_batches=N`` bounds append-mode read amplification
     while the stream flows: after every Nth micro-batch the pipeline's
@@ -178,10 +122,9 @@ def run_streaming_pipeline(
     rewrite cost (tier-sized, never raw) against scan-only reads between
     appends.
     """
-    return run_stream_foreach_batch(
-        spark, input_path, checkpoint_path,
-        _pipeline_batch(pipeline, "stream", finalize_every_n_batches),
-        available_now, max_files_per_trigger,
+    return _start_pipeline(
+        read_transcript_stream(spark, input_path, max_files_per_trigger),
+        checkpoint_path, pipeline, "stream", available_now, finalize_every_n_batches,
     )
 
 
@@ -297,16 +240,10 @@ def run_rate_pipeline(
     mid-commit), nothing past the bound can reach the warehouse and the
     committed prefix stays exactly reconstructable.  A micro-batch is
     ``rows_per_batch`` rows, so it enters the pipeline from the driver."""
-    stream = read_rate_turns(spark, rows_per_batch, num_partitions)
-    return (
-        stream.writeStream.foreachBatch(
-            _pipeline_batch(
-                pipeline, "rate", finalize_every_n_batches, max_batches, to_driver=True
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _start_pipeline(
+        read_rate_turns(spark, rows_per_batch, num_partitions),
+        checkpoint_path, pipeline, "rate", False, finalize_every_n_batches,
+        max_batches, to_driver=True,
     )
 
 
@@ -341,7 +278,7 @@ def streaming_sliding_rollup(
 ) -> DataFrame:
     """Sliding-window streaming rollup — the Structured Streaming twin of
     the batch ``over_time_grid`` (operators/resample.py): every ``slide``
-    instant re-aggregates the trailing ``range_dur`` of turns, so a live
+    instant t re-aggregates the turns in ``(t − range_dur, t]``, so a live
     dashboard reads ``avg_over_time``-style overlapping windows straight
     off the sink.  ``F.window(ts, range, slide)`` keeps one state row per
     open window per key (range/slide concurrent windows — the same
@@ -349,18 +286,17 @@ def streaming_sliding_rollup(
     a window emits once its END passes the watermark, late turns beyond
     it are dropped.
 
-    Boundary note (documented divergence): Spark sliding windows are
-    ``[start, end)`` — a turn exactly ON a window edge joins the LATER
-    window — while PromQL's range selector is ``(t − range, t]``; off-
-    boundary data aggregates identically (parity-tested vs the batch
-    operator), boundary-µs samples differ by design.
-
-    ``grid_ts`` is the window END = the evaluation instant t, matching
-    the batch operator's output key.
+    Spark windows are ``[start, end)``; windowing (and watermarking)
+    ``ts − 1 µs`` makes them PromQL's left-open ``(start, end]`` on
+    ``ts``, the batch operator's edge, so a turn exactly on an edge falls
+    in the window that ends at it.  ``grid_ts`` is the window END = the
+    evaluation instant t, the batch operator's output key.
     """
     keys = list(keys or [])
-    prepped = with_text_stats(stream).withWatermark("ts", watermark)
-    win = F.window("ts", range_dur, slide)
+    prepped = with_text_stats(stream).withColumn(
+        "_t", F.col("ts") - F.expr("INTERVAL 1 MICROSECOND")
+    ).withWatermark("_t", watermark)
+    win = F.window("_t", range_dur, slide)
     return (
         prepped.groupBy(win.alias("w"), *keys)
         .agg(

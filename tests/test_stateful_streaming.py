@@ -108,8 +108,10 @@ def test_fold_timeout_branch_flushes_open_session():
 
 
 def test_gap_parsing_accepts_spark_interval_vocab(spark):
-    """Gap strings interchangeable with the batch sessionizer: '1 day'
-    parses; garbage raises a clear ValueError."""
+    """Gaps are the engine's fixed-width '<n> <unit>' durations
+    (timegrid.duration_us): '1 day' parses; garbage, a unit glued to its
+    count ('90s'), a compound span or a zero gap raises a clear
+    ValueError."""
     import pytest
 
     from mq_to_db_spark.streaming.stateful import streaming_sessionize
@@ -118,5 +120,21 @@ def test_gap_parsing_accepts_spark_interval_vocab(spark):
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     ).parquet("/root/testdata/sf0.001")  # never started; plan-build only
     streaming_sessionize(stream, gap="1 day")  # no KeyError
-    with pytest.raises(ValueError, match="unparseable gap"):
-        streaming_sessionize(stream, gap="not-a-gap")
+    for bad in ("not-a-gap", "90s", "1 hour 30 minutes", "0 minutes"):
+        with pytest.raises(ValueError, match="unparseable gap"):
+            streaming_sessionize(stream, gap=bad)
+
+
+def test_alert_for_duration_parsing(spark, tmp_path):
+    """streaming_alerts' hold is a duration of the same vocabulary:
+    '5 minutes' parses, '90s' and a zero hold raise."""
+    import pytest
+
+    from mq_to_db_spark.streaming.stateful import streaming_alerts
+
+    # never started; plan-build only
+    stream = spark.readStream.schema("series string, ts timestamp, v long").parquet(str(tmp_path))
+    streaming_alerts(stream, threshold=10, for_duration="5 minutes")
+    for bad in ("90s", "0 seconds"):
+        with pytest.raises(ValueError, match="unparseable for_duration"):
+            streaming_alerts(stream, threshold=10, for_duration=bad)

@@ -1,143 +1,10 @@
-"""Structured Streaming rollup: drained stream == batch rollup on closed
-windows; checkpointed incremental restart; foreachBatch integration with
-the batch pipeline.
-
-Append-mode semantics under watermarking: a window emits only once its
-end passes the watermark, so the trailing window(s) of a drained stream
-stay in state — tests compare against the batch rollup restricted to
-closed windows (end <= max ts)."""
+"""Structured Streaming ingest: every micro-batch runs the full
+RollupPipeline (effectively-once across micro-batches, replays and late
+turns), the sliding-window twin of ``over_time_grid``, and the
+watermarked stream-stream ack join."""
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
-
-from mq_to_db_spark.operators.rollup import rollup_from_raw
-from mq_to_db_spark.streaming.stream import (
-    run_stream_foreach_batch,
-    run_stream_to_parquet,
-)
-from tests.conftest import assert_pdf_equal
-
-
-def _closed(want: pd.DataFrame, max_ts, tier_seconds: int) -> pd.DataFrame:
-    end = want.bucket_start + pd.Timedelta(seconds=tier_seconds)
-    return want[end <= max_ts].reset_index(drop=True)
-
-
-def test_streaming_rollup_matches_batch_closed_windows(
-    spark, transcripts, transcripts_pdf, tmp_path
-):
-    inp = tmp_path / "in"
-    inp.mkdir()
-    transcripts_pdf.to_parquet(inp / "part-0.parquet", index=False)
-    q = run_stream_to_parquet(
-        spark, str(inp), str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        tier="1m", watermark="0 seconds",
-    )
-    assert q.awaitTermination(360), "availableNow drain did not finish in time"
-    got = spark.read.parquet(str(tmp_path / "out")).toPandas()
-    want = _closed(
-        rollup_from_raw(transcripts, "1m").toPandas(),
-        transcripts_pdf.ts.max(), 60,
-    )
-    assert_pdf_equal(got, want, ["bucket_start"])
-
-
-def test_streaming_resume_is_incremental(spark, transcripts, transcripts_pdf, tmp_path):
-    inp = tmp_path / "in"
-    inp.mkdir()
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    # time-ordered deliveries (streams deliver roughly in event order;
-    # the batch path, not this one, owns heavily-late data)
-    cut = transcripts_pdf.ts.median()
-    transcripts_pdf[transcripts_pdf.ts < cut].to_parquet(inp / "part-0.parquet", index=False)
-    q = run_stream_to_parquet(spark, str(inp), out, ckpt, tier="1d", watermark="0 seconds")
-    assert q.awaitTermination(360), "availableNow drain did not finish in time"
-    n_files_1 = spark.read.parquet(out).count()
-    transcripts_pdf[transcripts_pdf.ts >= cut].to_parquet(inp / "part-1.parquet", index=False)
-    q2 = run_stream_to_parquet(spark, str(inp), out, ckpt, tier="1d", watermark="0 seconds")
-    assert q2.awaitTermination(360), "availableNow drain did not finish in time"
-    rows = spark.read.parquet(out).toPandas()
-    # every closed 1d window's total matches the batch rollup (partials
-    # for a window may appear across drains; sum them)
-    got = rows.groupby("bucket_start").n_turns.sum()
-    want_df = _closed(
-        rollup_from_raw(transcripts, "1d").toPandas(), transcripts_pdf.ts.max(), 86400
-    )
-    want = want_df.set_index("bucket_start").n_turns
-    # drain-2 rows falling into windows closed during drain 1 are dropped
-    # as late (watermark 0) — with a time-ordered split only the boundary
-    # window can be affected; all others match exactly
-    boundary = pd.Timestamp(cut).floor("D")
-    for b, n in want.items():
-        if b == boundary:
-            assert got.get(b, 0) <= n
-        else:
-            assert got.get(b, 0) == n
-    assert len(rows) >= n_files_1
-
-
-def test_foreach_batch_runs_batch_pipeline(spark, transcripts_pdf, tmp_path):
-    from mq_to_db_spark.config import EngineConfig
-    from mq_to_db_spark.plans.pipeline import RollupPipeline
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    transcripts_pdf.to_parquet(inp / "part-0.parquet", index=False)
-    pipe = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=8))
-    reports = []
-
-    def handle(df, batch_id):
-        reports.append(pipe.run(df.sparkSession, df, batch_id=f"stream-{batch_id}"))
-
-    q = run_stream_foreach_batch(spark, str(inp), str(tmp_path / "ckpt"), handle)
-    assert q.awaitTermination(360), "availableNow drain did not finish in time"
-    assert len(reports) == 1
-    assert reports[0].n_ok == len(transcripts_pdf)
-    got = pipe.read_rollup(spark, "global", "1h").agg(F.sum("n_turns")).collect()[0][0]
-    assert got == len(transcripts_pdf)
-
-
-def test_streaming_watermark_drops_late_rows(spark, tmp_path):
-    """A row arriving beyond the watermark after its window was emitted is
-    DROPPED by the streaming path (the documented trade-off; the
-    batch-incremental pipeline instead MERGEs it into its bucket on the
-    next batch — see stream.py docstring)."""
-    import pandas as pd
-
-    def turns(rows):
-        return pd.DataFrame(
-            {
-                "conv_id": pd.array([r[0] for r in rows], dtype="string"),
-                "turn_idx": pd.array([r[1] for r in rows], dtype="int32"),
-                "role": "user",
-                "text": "hello world",
-                "tool": pd.array([None] * len(rows), dtype="string"),
-                "ts": pd.to_datetime([r[2] for r in rows]).astype("datetime64[us]"),
-            }
-        )
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    # on-time batch: two turns in the 00:02 window + one at 01:00 that
-    # advances the watermark past 00:02 (wm = 01:00 - 10 min = 00:50)
-    turns(
-        [("c1", 0, "2025-01-01 00:02:10"), ("c1", 1, "2025-01-01 00:02:40"),
-         ("c2", 0, "2025-01-01 01:00:00")]
-    ).to_parquet(inp / "f1.parquet", index=False)
-    q = run_stream_to_parquet(spark, str(inp), out, ckpt, tier="1m", watermark="10 minutes")
-    assert q.awaitTermination(360), "availableNow drain did not finish in time"
-    first = spark.read.parquet(out).toPandas().set_index("bucket_start")
-    assert first.loc[pd.Timestamp("2025-01-01 00:02:00")].n_turns == 2
-
-    # late delivery into the already-emitted 00:02 window
-    turns([("c3", 0, "2025-01-01 00:02:50")]).to_parquet(inp / "f2.parquet", index=False)
-    q2 = run_stream_to_parquet(spark, str(inp), out, ckpt, tier="1m", watermark="10 minutes")
-    assert q2.awaitTermination(360), "availableNow drain did not finish in time"
-    after = spark.read.parquet(out).toPandas()
-    b = after[after.bucket_start == pd.Timestamp("2025-01-01 00:02:00")]
-    assert len(b) == 1 and int(b.n_turns.iloc[0]) == 2  # late row dropped, no dup window
 
 
 def test_streaming_pipeline_append_mode_effectively_once(spark, tmp_path):
@@ -250,24 +117,72 @@ def test_streaming_pipeline_periodic_finalize(spark, tmp_path):
     )
 
 
+def test_streaming_pipeline_counts_a_late_turn_across_drains(spark, tmp_path):
+    """A turn delivered in a later drain, for a minute an earlier drain
+    already committed, is acked once and counted in that minute: the
+    stream's rollup equals batch mode over every delivered turn."""
+    from mq_to_db_spark.config import EngineConfig
+    from mq_to_db_spark.fixtures.generator import (
+        TRANSCRIPT_SCHEMA,
+        generate_transcripts_pdf,
+    )
+    from mq_to_db_spark.plans.pipeline import RollupPipeline
+    from mq_to_db_spark.streaming.stream import run_streaming_pipeline
+
+    pdf = generate_transcripts_pdf(1200, seed=45)
+    in_dir, ckpt = tmp_path / "in", str(tmp_path / "ckpt")
+    in_dir.mkdir()
+    pdf.to_parquet(in_dir / "part-0.parquet", index=False)
+    pipe = RollupPipeline(str(tmp_path / "wh"), EngineConfig(conv_buckets=4))
+
+    def drain():
+        q = run_streaming_pipeline(spark, str(in_dir), ckpt, pipe)
+        assert q.awaitTermination(360), "availableNow drain did not finish in time"
+
+    def minute_counts():
+        got = pipe.read_rollup(spark, "global", "1m").toPandas()
+        return got.set_index("bucket_start").n_turns
+
+    drain()
+    assert pipe.metrics.batch_ids() == {"stream-000000"}
+    before = minute_counts()
+
+    late = pdf.iloc[[len(pdf) // 2]].copy()
+    late["conv_id"] = "late-conv"
+    late.to_parquet(in_dir / "part-1.parquet", index=False)
+    minute = late.ts.dt.floor("min").iloc[0]
+    assert before[minute] > 0  # the first drain committed this minute
+    drain()
+
+    assert pipe.metrics.batch_ids() == {"stream-000000", "stream-000001"}
+    after = minute_counts()
+    assert after[minute] == before[minute] + 1
+
+    oracle = RollupPipeline(str(tmp_path / "wh2"), EngineConfig(conv_buckets=4))
+    full = pd.concat([pdf, late], ignore_index=True)
+    oracle.run(spark, spark.createDataFrame(full, schema=TRANSCRIPT_SCHEMA), batch_id="oracle")
+    want = oracle.read_rollup(spark, "global", "1m").orderBy("bucket_start").toPandas()
+    got = pipe.read_rollup(spark, "global", "1m").orderBy("bucket_start").toPandas()
+    assert int(got.n_turns.sum()) == len(full)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
 def test_streaming_sliding_rollup_matches_batch_over_time(
     spark, transcripts, transcripts_pdf, tmp_path
 ):
-    """Sliding-window streaming twin vs the batch over_time_grid: on
-    off-boundary data (the generator's timestamps are second-grained,
-    never on a 10-minute edge at µs precision... unless they are — so
-    boundary rows are filtered from BOTH sides) every emitted closed
-    window must carry identical count/sum/min/max."""
+    """Sliding-window streaming twin vs the batch over_time_grid: every
+    emitted closed window carries identical count/sum/min/max, turns
+    exactly on a 10-minute edge included (both put an edge turn in the
+    window that ends at it, PromQL's (t − range, t])."""
     from mq_to_db_spark.operators.resample import over_time_grid
     from mq_to_db_spark.streaming.stream import streaming_sliding_rollup
 
-    # keep only off-boundary turns so PromQL (t-range, t] and Spark
-    # [start, end) window semantics coincide
-    def off_boundary(pdf):
-        us = pdf.ts.astype("int64") // 1000
-        return pdf[(us % 600_000_000 != 0)]
-
-    pdf = off_boundary(transcripts_pdf)
+    # two more turns exactly on 10-minute edges, well before the end
+    edge = transcripts_pdf.iloc[[10, len(transcripts_pdf) // 2]].copy()
+    edge["conv_id"] = ["edge-0", "edge-1"]
+    edge["ts"] = edge.ts.dt.floor("10min")
+    pdf = pd.concat([transcripts_pdf, edge], ignore_index=True)
+    assert (pdf.ts == pdf.ts.dt.floor("10min")).sum() >= 2
     inp = tmp_path / "in"
     inp.mkdir()
     pdf.to_parquet(inp / "part-0.parquet", index=False)
@@ -309,9 +224,10 @@ def test_streaming_sliding_rollup_matches_batch_over_time(
     # emitted — every emitted window must match the batch evaluation
     for t, vals in got.items():
         assert want_all[t] == vals, (t, vals, want_all[t])
-    # and the emitted set is exactly the closed-window prefix
+    # and the emitted set is exactly the closed-window prefix (a window
+    # ending at the last turn could still take a turn at that instant)
     max_ts = pdf.ts.max()
-    closed = {t for t in want_all if t <= max_ts}
+    closed = {t for t in want_all if t < max_ts}
     assert set(got) == closed
 
 
